@@ -924,7 +924,7 @@ object SparkEntry {
     val root = scratch("graft_scd_")
     val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
     // the model build and the two backlog writes below are independent
-    // jobs — overlap them (guide §2.6); Await sites before first use
+    // jobs — overlap them; Await sites before first use
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -947,28 +947,10 @@ object SparkEntry {
           lpad(pmod(col("doc_id"), lit(100)).cast(StringType), 2, "0")))
         .otherwise(lit(""))))
       .select("doc_id", "text")
-    val src = java.nio.file.Paths.get(s"$root/src")
-    java.nio.file.Files.createDirectories(src)
-    def firstPart(d: String): java.nio.file.Path = {
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(d))
-      try ls.filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).findFirst.get
-      finally ls.close()
-    }
-    val writes = Seq(
-      (pmod(col("doc_id"), lit(2)) === 0, "b1", "a_even.parquet",
-        1000000000000L),
-      (pmod(col("doc_id"), lit(2)) === 1, "b2", "b_odd.parquet",
-        1000000600000L)).map { case (cond, b, name, mtime) => Future {
-      salted.where(cond).coalesce(1).write.parquet(s"$root/$b")
-      val f = src.resolve(name)
-      java.nio.file.Files.copy(firstPart(s"$root/$b"), f)
-      java.nio.file.Files.setLastModifiedTime(f,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-    } }
-    writes.foreach(Await.result(_, Duration.Inf))
+    // even ids arrive as batch 1, odd as batch 2; the slice writes run
+    // while modelF builds
+    val (src, schema) = parityBacklog(s, root, salted)
     val model = Await.result(modelF, Duration.Inf)
-    val schema = s.read.parquet(s"$root/b1").schema
     // the per-batch curation: scrub, score the SCRUBBED text, keep
     // quality_pred — per-row and deterministic (the prepare contract)
     def curate(batch: DataFrame): DataFrame = {
@@ -980,7 +962,7 @@ object SparkEntry {
     }
     withShufflePartitions(s, 2) {
       graft.streaming.StreamingDedupIndex.runAvailableNow(
-        s, src.toString, schema, s"$root/state", s"$root/ckpt",
+        s, src, schema, s"$root/state", s"$root/ckpt",
         prepare = curate)
     }
     val (accepted, _, _) =

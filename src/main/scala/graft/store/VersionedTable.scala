@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -19,13 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object VersionedTable {
 
-  private def pointer(root: String): Path = Paths.get(root, "_latest")
   private def versionDir(root: String, v: Long): Path = Paths.get(root, s"v=$v")
 
-  def latestVersion(root: String): Option[Long] = {
-    val p = pointer(root)
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
-  }
+  def latestVersion(root: String): Option[Long] = Marker.read(root, "_latest")
 
   def versions(root: String): Seq[Long] = {
     val r = Paths.get(root)
@@ -49,7 +45,7 @@ object VersionedTable {
     Files.createDirectories(Paths.get(root))
     val next = latestVersion(root).getOrElse(-1L) + 1L
     df.write.parquet(versionDir(root, next).toString)
-    commit(root, next)
+    Marker.commit(root, "_latest", next)
     next
   }
 
@@ -185,7 +181,7 @@ object VersionedTable {
   /** Roll the pointer back to an existing older version. */
   def rollback(root: String, to: Long): Unit = {
     require(Files.exists(versionDir(root, to)), s"version $to does not exist")
-    commit(root, to)
+    Marker.commit(root, "_latest", to)
   }
 
   /** Drop versions older than `keepLast` behind the pointer (vacuum). The
@@ -202,13 +198,5 @@ object VersionedTable {
           .sorted(Comparator.reverseOrder[Path]())
           .forEach(f => Files.delete(f))
       }
-  }
-
-  private def commit(root: String, v: Long): Unit = {
-    val tmp = Paths.get(root, "_latest.tmp")
-    Files.writeString(tmp, v.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, pointer(root),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
 
@@ -13,135 +13,47 @@ import graft.operators.Dedup
   * accepted so far WITHOUT rescanning the corpus it already accepted:
   * the state holds the accepted docs plus their LSH band keys.
   *
-  * State layout under `stateRoot`: APPEND-ONLY deltas — batch N writes
-  * exactly its own accepted docs and their band keys to
-  * `delta/d<N>/{accepted,keys}` and then commits the `_current` marker
-  * (atomic rename, LAST). Per-batch state I/O is O(batch), never
-  * O(corpus): the live state is the union of deltas 1..marker, which a
-  * long-running deployment compacts offline exactly like any other
-  * append-only log. Crash-exactness is the marker discipline the ANN
-  * index uses: a batch that dies after writing `delta/d<N+1>` but
-  * before the marker leaves `_current` at N, so the checkpoint replay
-  * recomputes from the OLD state and overwrites the orphan — the state
-  * can never be half a batch ahead of the marker.
-  *
-  * Replays are also SEMANTICALLY idempotent BY ID: each batch first
-  * anti-joins away ids already in the accepted state (ids are required
-  * globally unique, so an id already present is by definition a
-  * replay), so a replayed batch — including docs with NULL text, which
-  * produce no band keys and so could never self-reject through the
-  * near-dup verify — appends nothing even if the marker advanced
-  * before the crash. The id read prunes the accepted parquet to its id
-  * column; accepted TEXT is never read after a doc's admission batch
-  * (the verify runs on the persisted `hashes` witness sets — see
+  * State: the [[VersionedStateRunner]] layout — batch N appends its own
+  * accepted docs and their band keys to `delta/d<N>/{accepted,keys}`,
+  * `_current` commits last — so per-batch state I/O is O(batch), never
+  * O(corpus). The replay guard reads only the accepted ids; accepted
+  * TEXT is never read after a doc's admission batch (the verify runs on
+  * the persisted `hashes` witness sets — see
   * [[graft.operators.Dedup.dedupIndexKeys]]).
   */
 object StreamingDedupIndex {
 
-  private def stateSchemas(idCol: String, textCol: String) = (
-    StructType(Seq(StructField(idCol, LongType), StructField(textCol,
-      StringType), StructField("batch", LongType))),
-    StructType(Seq(StructField(idCol, LongType),
-      StructField("band", org.apache.spark.sql.types.IntegerType),
-      StructField("key", StringType),
-      StructField("hashes", ArrayType(LongType)))))
+  private def state(idCol: String, textCol: String) =
+    VersionedStateRunner(
+      "accepted" -> StructType(Seq(StructField(idCol, LongType),
+        StructField(textCol, StringType), StructField("batch", LongType))),
+      "keys" -> StructType(Seq(StructField(idCol, LongType),
+        StructField("band", IntegerType), StructField("key", StringType),
+        StructField("hashes", ArrayType(LongType)))),
+      idCol)
 
-  private[streaming] def marker(stateRoot: String, name: String): Option[Long] = {
-    val p = java.nio.file.Paths.get(stateRoot, name)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong)
-    else None
-  }
-
-  private[streaming] def commitMarker(stateRoot: String, name: String, v: Long): Unit = {
-    val dir = java.nio.file.Paths.get(stateRoot)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, s"${name}_", ".tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, dir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Read the live accepted/keys state — the compacted snapshot (if one
-    * is committed) plus the deltas after it, up to the `_current`
-    * marker. Orphans past either marker are invisible. Empty frames
-    * when no batch has committed.
+  /** The live accepted/keys state and its committed version (see
+    * [[VersionedStateRunner.read]]); empty frames before the first batch.
     */
   def readState(spark: SparkSession, stateRoot: String,
       idCol: String = "doc_id", textCol: String = "text")
-      : (DataFrame, DataFrame, Long) = {
-    val (accSchema, keySchema) = stateSchemas(idCol, textCol)
-    marker(stateRoot, "_current") match {
-      case Some(v) if v >= 1 =>
-        val c = marker(stateRoot, "_compacted").getOrElse(0L).min(v)
-        // ONE multi-path scan with the declared schema, not a reduce of
-        // per-delta reads (r17 optimization): the union form re-planned
-        // batch N's state as N-1 unioned scan subtrees, so a
-        // long-running stream's per-batch planning cost grew linearly
-        // with its age (quadratic over the stream's life) and each read
-        // paid a footer-inference listing. Every delta is written by
-        // this file's own runner with exactly stateSchemas' layout, so
-        // one schema-pinned relation is row-identical to the union.
-        def union(sub: String, schema: StructType): DataFrame = {
-          val snap =
-            if (c >= 1) Seq(s"$stateRoot/snapshot/s$c/$sub") else Seq.empty
-          val deltas = ((c + 1) to v).map(i => s"$stateRoot/delta/d$i/$sub")
-          spark.read.schema(schema).parquet(snap ++ deltas: _*)
-        }
-        (union("accepted", accSchema), union("keys", keySchema), v)
-      case _ => (
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], accSchema),
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], keySchema), 0L)
-    }
-  }
+      : (DataFrame, DataFrame, Long) =
+    state(idCol, textCol).read(spark, stateRoot)
 
-  /** Fold the committed log into one snapshot — the offline compaction a
-    * long-running stream schedules so `readState` stops unioning an
-    * ever-growing delta list. Writes `snapshot/s<v>` from the current
-    * state, then commits `_compacted = v` LAST (atomic rename): a crash
-    * mid-compaction leaves an orphan snapshot that readers never see.
-    * Safe to run concurrently with reads; run it between batches (the
-    * AvailableNow runner is not executing) like any lakehouse OPTIMIZE.
+  /** Fold the committed log into one snapshot so `readState` stops
+    * unioning an ever-growing delta list; [[vacuum]] then deletes what
+    * the snapshot covers (see [[VersionedStateRunner.compact]]).
     */
   def compact(spark: SparkSession, stateRoot: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // already compacted at the head version: re-running would overwrite
-    // the very snapshot the state is being read from — no-op instead
-    if (marker(stateRoot, "_compacted").contains(
-        marker(stateRoot, "_current").getOrElse(0L))) return
-    val (acc, keys, v) = readState(spark, stateRoot, idCol, textCol)
-    if (v >= 1) {
-      acc.write.mode("overwrite").parquet(s"$stateRoot/snapshot/s$v/accepted")
-      keys.write.mode("overwrite").parquet(s"$stateRoot/snapshot/s$v/keys")
-      commitMarker(stateRoot, "_compacted", v)
-    }
-  }
+      idCol: String = "doc_id", textCol: String = "text"): Unit =
+    state(idCol, textCol).compact(spark, stateRoot)
 
-  /** Delete delta directories the committed snapshot already covers
-    * (and superseded older snapshots). Destructive — callers schedule it
-    * AFTER [[compact]]'s marker landed; deleting only ≤ `_compacted`
-    * can never touch state a reader still needs.
-    */
-  def vacuum(stateRoot: String): Unit = {
-    val c = marker(stateRoot, "_compacted").getOrElse(0L)
-    (1L to c).foreach { i =>
-      graft.store.UpsertWriter.deleteRecursively(
-        java.nio.file.Paths.get(s"$stateRoot/delta/d$i"))
-    }
-    val snapRoot = java.nio.file.Paths.get(s"$stateRoot/snapshot")
-    if (java.nio.file.Files.isDirectory(snapRoot)) {
-      val ls = java.nio.file.Files.list(snapRoot)
-      try ls.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("s") && n.drop(1).forall(_.isDigit) &&
-            n.drop(1).toLong < c)
-          graft.store.UpsertWriter.deleteRecursively(p)
-      } finally ls.close()
-    }
-  }
+  def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
+
+  private def addBatch(threshold: Double, idCol: String, textCol: String)
+      (keys: DataFrame, fresh: DataFrame): (DataFrame, DataFrame) =
+    Dedup.dedupIndexAddBatchParts(keys, fresh, threshold, idCol = idCol,
+      textCol = textCol)
 
   /** One micro-batch's acceptance frame, LAZY — factored out of
     * [[runAvailableNow]] so its executed plan can be audited (the
@@ -156,14 +68,9 @@ object StreamingDedupIndex {
   def batchAccepted(spark: SparkSession, stateRoot: String, batch: DataFrame,
       threshold: Double = 0.3, idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame, Long) = {
-    val (accepted0, keys0, v) = readState(spark, stateRoot, idCol, textCol)
-    // replay guard: an id already accepted is by definition a replay
-    // (ids are globally unique) — covers null-text docs, which have no
-    // band keys and could never self-reject through the verify
-    val fresh = batch.select(col(idCol), col(textCol))
-      .join(accepted0.select(col(idCol)), Seq(idCol), "left_anti")
-    val (acc, batchKeys) = Dedup.dedupIndexAddBatchParts(keys0, fresh,
-      threshold, idCol = idCol, textCol = textCol)
+    val ((acc, batchKeys), v) = state(idCol, textCol).judge(spark,
+      stateRoot, batch.select(col(idCol), col(textCol)))(
+      addBatch(threshold, idCol, textCol))
     (acc, batchKeys, v)
   }
 
@@ -191,26 +98,17 @@ object StreamingDedupIndex {
       idCol: String = "doc_id",
       textCol: String = "text",
       prepare: DataFrame => DataFrame = identity,
-  ): Unit = {
-    StreamingUpsert.runBatches(spark, sourceDir, schema, checkpointDir,
-        maxFilesPerTrigger) { batch =>
-      val s = batch.sparkSession
-      val (accL, batchKeys, v) = batchAccepted(s, stateRoot, prepare(batch),
-        threshold, idCol, textCol)
-      val next = v + 1
+  ): Unit =
+    state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
+        stateRoot, checkpointDir, maxFilesPerTrigger,
+        b => prepare(b).select(col(idCol), col(textCol))) { (keys, fresh) =>
+      val (acc, batchKeys) = addBatch(threshold, idCol, textCol)(keys, fresh)
       // the accepted write computes the judgment ONCE; the keys delta is
       // the batch's already-materialized key frame sliced to the ids just
       // written (read back from the delta — the parquet IS the
       // materialization), so accepted text is never re-keyed and no extra
       // localCheckpoint pass runs
-      accL.withColumn("batch", lit(next))
-        .write.mode("overwrite")
-        .parquet(s"$stateRoot/delta/d$next/accepted")
-      val accIds = s.read.parquet(s"$stateRoot/delta/d$next/accepted")
-        .select(col(idCol))
-      batchKeys.join(accIds, Seq(idCol), "left_semi")
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/keys")
-      commitMarker(stateRoot, "_current", next) // marker LAST: see crash note
+      (acc, accepted => batchKeys.join(fresh.sparkSession.read
+        .parquet(accepted).select(col(idCol)), Seq(idCol), "left_semi"))
     }
-  }
 }

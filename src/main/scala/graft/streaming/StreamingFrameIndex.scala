@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Multimodal
@@ -15,72 +14,47 @@ import graft.operators.Multimodal
   * occurrence ownership within the batch, and the batch's new digests
   * fold into the persistent index — WITHOUT ever rescanning the store.
   *
-  * State layout under `stateRoot`, the family's marker-committed
-  * append-only discipline: batch N writes exactly its own output —
-  * `delta/d<N>/stats` (one row per batch asset: n_frames / stored /
-  * dup / reclaimable bytes, stamped with its ingest batch) and
-  * `delta/d<N>/digests` (the batch's FRESH distinct frame digests, the
-  * index delta) — and then commits the `_current` marker LAST (atomic
-  * rename). A crash after the delta write but before the marker leaves
-  * `_current` behind, so the checkpoint replay recomputes from the OLD
-  * state and overwrites the orphan; the state can never be half a batch
-  * ahead of the marker. Per-batch state I/O is O(batch frames + probe),
-  * never O(store).
-  *
-  * Replays are SEMANTICALLY idempotent BY ID: each batch first
-  * anti-joins away asset ids already in the stats state (ids are
-  * required globally unique, so a present id is by definition a
-  * replay), which keeps a replayed batch from re-probing its own frames
-  * out of its own digest delta — a replayed batch appends nothing even
-  * when the marker advanced before the crash. The id guard prunes the
-  * stats parquet to its id column; and because
-  * [[Multimodal.frameIndexAddBatch]] distinct()s its index projection,
-  * even an index state carrying overlapping deltas could only mark
-  * frames seen, never multiply their rows.
+  * State: the [[VersionedStateRunner]] layout, keyed by `asset_id` —
+  * batch N appends `delta/d<N>/stats` (one row per batch asset:
+  * n_frames / stored / dup / reclaimable bytes, stamped with its ingest
+  * batch) and `delta/d<N>/digests` (the batch's FRESH distinct frame
+  * digests, the index delta), `_current` last. Per-batch state I/O is
+  * O(batch frames + probe), never O(store). The id replay guard keeps a
+  * replayed batch from re-probing its own frames out of its own digest
+  * delta; and because [[Multimodal.frameIndexAddBatch]] distinct()s its
+  * index projection, even an index state carrying overlapping deltas
+  * could only mark frames seen, never multiply their rows.
   */
 object StreamingFrameIndex {
 
-  private val statsSchema = StructType(Seq(
-    StructField("asset_id", LongType),
-    StructField("n_frames", LongType),
-    StructField("stored_frames", LongType),
-    StructField("dup_frames", LongType),
-    StructField("dup_bytes", LongType),
-    StructField("batch", LongType)))
+  private val state = VersionedStateRunner(
+    "stats" -> StructType(Seq(
+      StructField("asset_id", LongType),
+      StructField("n_frames", LongType),
+      StructField("stored_frames", LongType),
+      StructField("dup_frames", LongType),
+      StructField("dup_bytes", LongType),
+      StructField("batch", LongType))),
+    "digests" -> StructType(Seq(StructField("digest", StringType))),
+    "asset_id", fold = _.distinct())
 
-  private val digestSchema =
-    StructType(Seq(StructField("digest", StringType)))
-
-  /** Read the live (stats, digest-index) state — the committed snapshot
-    * (if one exists) plus deltas after it, up to `_current`. Orphans
-    * past either marker are invisible; empty frames before the first
-    * commit.
+  /** Read the live (stats, digest-index) state — digests in their
+    * semantic form, distinct — and its committed version (see
+    * [[VersionedStateRunner.read]]).
     */
   def readState(spark: SparkSession, stateRoot: String)
       : (DataFrame, DataFrame, Long) =
-    StreamingDedupIndex.marker(stateRoot, "_current") match {
-      case Some(v) if v >= 1 =>
-        (StateCompaction.readSub(spark, stateRoot, "stats", v, statsSchema),
-          StateCompaction.readSub(spark, stateRoot, "digests", v,
-            digestSchema), v)
-      case _ => (
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], statsSchema),
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], digestSchema), 0L)
-    }
+    state.read(spark, stateRoot)
 
-  /** Fold the committed log into one snapshot ([[StateCompaction]]'s
-    * marker discipline) so [[readState]] stops unioning an ever-growing
-    * delta list; [[vacuum]] deletes what the snapshot covers. The
-    * digest sub folds to its SEMANTIC form — distinct digests — so the
+  /** Fold the committed log into one snapshot so [[readState]] stops
+    * unioning an ever-growing delta list; [[vacuum]] deletes what the
+    * snapshot covers. The digest sub folds to distinct digests, so the
     * snapshot stays index-sized even if deltas ever overlapped.
     */
   def compact(spark: SparkSession, stateRoot: String): Unit =
-    StateCompaction.compact(spark, stateRoot, Seq("stats", "digests"),
-      fold = Map("digests" -> ((d: DataFrame) => d.distinct())))
+    state.compact(spark, stateRoot)
 
-  def vacuum(stateRoot: String): Unit = StateCompaction.vacuum(stateRoot)
+  def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
   /** Replay a parquet backlog of documents-shaped rows (doc_id, text,
     * source) with AvailableNow, one file per micro-batch by default;
@@ -101,26 +75,12 @@ object StreamingFrameIndex {
       checkpointDir: String,
       frameBytes: Int,
       maxFilesPerTrigger: Int = 1,
-  ): Unit = {
-    StreamingUpsert.runBatches(spark, sourceDir, schema, checkpointDir,
-        maxFilesPerTrigger) { batch =>
-      val s = batch.sparkSession
-      val (statsAll, digests, v) = readState(s, stateRoot)
-      // replay guard: an asset id already ingested is by definition a
-      // replay (ids are globally unique across the stream)
-      val fresh = Multimodal.fromDocuments(batch)
-        .join(statsAll.select(col("asset_id")), Seq("asset_id"),
-          "left_anti")
-      val (stats, freshDigests) =
-        Multimodal.frameIndexAddBatch(digests, fresh, frameBytes)
-      val next = v + 1
-      // stats feeds BOTH delta writes' job run; marker LAST — see the
-      // crash note above
-      stats.withColumn("batch", lit(next))
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/stats")
-      freshDigests
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/digests")
-      StreamingDedupIndex.commitMarker(stateRoot, "_current", next)
+  ): Unit =
+    state.runAvailableNow(spark, sourceDir, schema, stateRoot,
+        checkpointDir, maxFilesPerTrigger, Multimodal.fromDocuments) {
+      (digests, fresh) =>
+        val (stats, freshDigests) =
+          Multimodal.frameIndexAddBatch(digests, fresh, frameBytes)
+        (stats, _ => freshDigests)
     }
-  }
 }

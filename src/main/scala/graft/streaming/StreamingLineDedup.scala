@@ -13,70 +13,45 @@ import graft.operators.Dedup
   * corpus has already seen (CCNet/RefinedWeb keep-first semantics,
   * batch by batch), WITHOUT ever rescanning the accepted corpus.
   *
-  * State layout under `stateRoot`, the family's marker-committed
-  * append-only discipline: batch N writes exactly its own output —
+  * State: the [[VersionedStateRunner]] layout — batch N appends
   * `delta/d<N>/cleaned` (the batch's docs with seen lines removed, each
   * stamped with its acceptance batch) and `delta/d<N>/lines` (the
-  * batch's FRESH distinct lines, the index delta) — and then commits
-  * the `_current` marker LAST (atomic rename). A crash after the delta
-  * write but before the marker leaves `_current` behind, so the
-  * checkpoint replay recomputes from the OLD state and overwrites the
-  * orphan; the state can never be half a batch ahead of the marker.
-  * Per-batch state I/O is O(batch lines + probe), never O(corpus).
-  *
-  * Replays are SEMANTICALLY idempotent BY ID: each batch first
-  * anti-joins away doc ids already in the cleaned state (ids are
-  * required globally unique, so a present id is by definition a
-  * replay), which keeps a replayed batch from re-probing its own lines
-  * out of its own output — a replayed batch appends nothing even when
-  * the marker advanced before the crash. The id guard prunes the
-  * cleaned parquet to its id column; cleaned TEXT is never read back.
+  * batch's FRESH distinct lines, the index delta), `_current` last. Per-
+  * batch state I/O is O(batch lines + probe), never O(corpus). The id
+  * replay guard also keeps a replayed batch from re-probing its own
+  * lines out of its own output; cleaned TEXT is never read back.
   */
 object StreamingLineDedup {
 
-  private def stateSchemas(idCol: String, textCol: String,
-      hashLines: Boolean) = (
-    StructType(Seq(StructField(idCol, LongType),
+  private def state(idCol: String = "doc_id", textCol: String = "text",
+      hashLines: Boolean = false) = VersionedStateRunner(
+    "cleaned" -> StructType(Seq(StructField(idCol, LongType),
       StructField(textCol, StringType), StructField("batch", LongType))),
-    StructType(Seq(StructField("line",
-      if (hashLines) LongType else StringType))))
+    "lines" -> StructType(Seq(StructField("line",
+      if (hashLines) LongType else StringType))),
+    idCol)
 
-  /** Read the live cleaned/line-index state — the committed snapshot
-    * (if one exists) plus deltas after it, up to `_current`. Orphans
-    * past either marker are invisible; empty frames before the first
-    * commit. `hashLines` picks the index representation (see
-    * [[Dedup.lineIndexAddBatch]]) and pins the scan schema; a
-    * PERSISTED index whose parquet representation contradicts the
-    * declared one fails loudly at scan time (the long/string physical
-    * types are not convertible).
+  /** Read the live cleaned/line-index state and its committed version
+    * (see [[VersionedStateRunner.read]]). `hashLines` picks the index
+    * representation (see [[Dedup.lineIndexAddBatch]]) and pins the scan
+    * schema; a PERSISTED index whose parquet representation contradicts
+    * the declared one fails loudly at scan time (the long/string
+    * physical types are not convertible).
     */
   def readState(spark: SparkSession, stateRoot: String,
       idCol: String = "doc_id", textCol: String = "text",
       hashLines: Boolean = false)
-      : (DataFrame, DataFrame, Long) = {
-    val (cleanSchema, lineSchema) = stateSchemas(idCol, textCol, hashLines)
-    StreamingDedupIndex.marker(stateRoot, "_current") match {
-      case Some(v) if v >= 1 =>
-        (StateCompaction.readSub(spark, stateRoot, "cleaned", v, cleanSchema),
-          StateCompaction.readSub(spark, stateRoot, "lines", v, lineSchema),
-          v)
-      case _ => (
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], cleanSchema),
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], lineSchema), 0L)
-    }
-  }
+      : (DataFrame, DataFrame, Long) =
+    state(idCol, textCol, hashLines).read(spark, stateRoot)
 
-  /** Fold the committed log into one snapshot ([[StateCompaction]]'s
-    * marker discipline) so [[readState]] stops unioning an ever-growing
-    * delta list; [[vacuum]] deletes what the snapshot covers. Run
-    * between batches, like any lakehouse OPTIMIZE.
+  /** Fold the committed log into one snapshot so [[readState]] stops
+    * unioning an ever-growing delta list; [[vacuum]] deletes what the
+    * snapshot covers. Run between batches, like any lakehouse OPTIMIZE.
     */
   def compact(spark: SparkSession, stateRoot: String): Unit =
-    StateCompaction.compact(spark, stateRoot, Seq("cleaned", "lines"))
+    state().compact(spark, stateRoot)
 
-  def vacuum(stateRoot: String): Unit = StateCompaction.vacuum(stateRoot)
+  def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
   /** Replay a parquet backlog with AvailableNow, one file per
     * micro-batch by default. After the run, [[readState]] yields the
@@ -98,25 +73,14 @@ object StreamingLineDedup {
       textCol: String = "text",
       sep: String = "\n",
       hashLines: Boolean = false,
-  ): Unit = {
-    StreamingUpsert.runBatches(spark, sourceDir, schema, checkpointDir,
-        maxFilesPerTrigger) { batch =>
-      val s = batch.sparkSession
-      val (cleanedAll, lines, v) =
-        readState(s, stateRoot, idCol, textCol, hashLines)
-      // replay guard: an id already cleaned is by definition a replay
-      val fresh = batch.select(col(idCol), col(textCol))
-        .join(cleanedAll.select(col(idCol)), Seq(idCol), "left_anti")
+  ): Unit =
+    state(idCol, textCol, hashLines).runAvailableNow(spark, sourceDir,
+        schema, stateRoot, checkpointDir, maxFilesPerTrigger,
+        _.select(col(idCol), col(textCol))) { (lines, fresh) =>
+      // both writes read the ONE materialization lineIndexAddBatchParts
+      // made of the probed batch
       val (cleaned, freshLines) = Dedup.lineIndexAddBatchParts(
         lines, fresh, idCol, textCol, sep, hashLines)
-      val next = v + 1
-      // both writes read the ONE materialization lineIndexAddBatchParts
-      // made of the probed batch; marker LAST — see crash note above
-      cleaned.withColumn("batch", lit(next))
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/cleaned")
-      freshLines
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/lines")
-      StreamingDedupIndex.commitMarker(stateRoot, "_current", next)
+      (cleaned, _ => freshLines)
     }
-  }
 }

@@ -14,57 +14,46 @@ import graft.operators.Dedup
   * semantics — already-emitted copies stand; the batch operator over
   * the accumulated corpus is the retroactive form).
   *
-  * Same marker-committed append-only state as [[StreamingLineDedup]]:
-  * batch N writes `delta/d<N>/cleaned` (batch-stamped stripped docs)
-  * and `delta/d<N>/counts` (the batch's per-line distinct-doc counts —
+  * State: the [[VersionedStateRunner]] layout — batch N appends
+  * `delta/d<N>/cleaned` (batch-stamped stripped docs) and
+  * `delta/d<N>/counts` (the batch's per-line distinct-doc counts —
   * deltas SUM to the live index, since globally-unique doc ids make
-  * per-batch distinct sets disjoint), then commits `_current` LAST
-  * (atomic rename): orphans past the marker are invisible, and a
-  * replayed batch anti-joins away on already-cleaned ids — without the
-  * guard it would double-count its own lines into the index.
+  * per-batch distinct sets disjoint), `_current` last. Without the id
+  * replay guard a replayed batch would double-count its own lines.
   */
 object StreamingLineStrip {
 
-  private def stateSchemas(idCol: String, textCol: String) = (
-    StructType(Seq(StructField(idCol, LongType),
-      StructField(textCol, StringType), StructField("batch", LongType))),
-    StructType(Seq(StructField("line", StringType),
-      StructField("n_docs", LongType))))
+  /** The count log's fold: per-line sums. Summing is associative, so a
+    * folded snapshot plus later deltas re-folds correctly.
+    */
+  private val sumCounts: DataFrame => DataFrame =
+    _.groupBy("line").agg(sum(col("n_docs")).as("n_docs"))
 
-  /** Read the live cleaned/count state — the committed snapshot (if
-    * one exists) plus deltas after it, counts summed per line (the
-    * append-only log's fold; the count snapshot is ALREADY folded, and
-    * summing is associative, so snapshot + deltas re-fold correctly).
-    * Empty frames before the first commit.
+  private def state(idCol: String = "doc_id", textCol: String = "text") =
+    VersionedStateRunner(
+      "cleaned" -> StructType(Seq(StructField(idCol, LongType),
+        StructField(textCol, StringType), StructField("batch", LongType))),
+      "counts" -> StructType(Seq(StructField("line", StringType),
+        StructField("n_docs", LongType))),
+      idCol, fold = sumCounts)
+
+  /** Read the live cleaned/count state — counts summed per line — and
+    * its committed version (see [[VersionedStateRunner.read]]).
     */
   def readState(spark: SparkSession, stateRoot: String,
       idCol: String = "doc_id", textCol: String = "text")
-      : (DataFrame, DataFrame, Long) = {
-    val (cleanSchema, countSchema) = stateSchemas(idCol, textCol)
-    StreamingDedupIndex.marker(stateRoot, "_current") match {
-      case Some(v) if v >= 1 =>
-        (StateCompaction.readSub(spark, stateRoot, "cleaned", v, cleanSchema),
-          StateCompaction.readSub(spark, stateRoot, "counts", v, countSchema)
-            .groupBy("line").agg(sum(col("n_docs")).as("n_docs")), v)
-      case _ => (
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], cleanSchema),
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], countSchema), 0L)
-    }
-  }
+      : (DataFrame, DataFrame, Long) =
+    state(idCol, textCol).read(spark, stateRoot)
 
   /** Fold the committed log into one snapshot — the count sub-state
-    * compacts to its SEMANTIC fold (per-line sums), so the snapshot is
-    * index-sized rather than log-sized; [[vacuum]] deletes what the
-    * snapshot covers. Run between batches, like any lakehouse OPTIMIZE.
+    * compacts to its per-line sums, so the snapshot is index-sized
+    * rather than log-sized; [[vacuum]] deletes what the snapshot covers.
+    * Run between batches, like any lakehouse OPTIMIZE.
     */
   def compact(spark: SparkSession, stateRoot: String): Unit =
-    StateCompaction.compact(spark, stateRoot, Seq("cleaned", "counts"),
-      fold = Map("counts" -> ((d: DataFrame) =>
-        d.groupBy("line").agg(sum(col("n_docs")).as("n_docs")))))
+    state().compact(spark, stateRoot)
 
-  def vacuum(stateRoot: String): Unit = StateCompaction.vacuum(stateRoot)
+  def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
   /** Replay a parquet backlog with AvailableNow, one file per
     * micro-batch by default. After the run, [[readState]] yields the
@@ -81,21 +70,12 @@ object StreamingLineStrip {
       idCol: String = "doc_id",
       textCol: String = "text",
       sep: String = "\n",
-  ): Unit = {
-    StreamingUpsert.runBatches(spark, sourceDir, schema, checkpointDir,
-        maxFilesPerTrigger) { batch =>
-      val s = batch.sparkSession
-      val (cleanedAll, counts, v) = readState(s, stateRoot, idCol, textCol)
-      val fresh = batch.select(col(idCol), col(textCol))
-        .join(cleanedAll.select(col(idCol)), Seq(idCol), "left_anti")
+  ): Unit =
+    state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
+        stateRoot, checkpointDir, maxFilesPerTrigger,
+        _.select(col(idCol), col(textCol))) { (counts, fresh) =>
       val (cleaned, delta) = Dedup.lineCountAddBatch(
         counts, fresh, minDocs, idCol, textCol, sep)
-      val next = v + 1
-      cleaned.withColumn("batch", lit(next))
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/cleaned")
-      delta
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/counts")
-      StreamingDedupIndex.commitMarker(stateRoot, "_current", next)
+      (cleaned, _ => delta)
     }
-  }
 }

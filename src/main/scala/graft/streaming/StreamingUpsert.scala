@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-import graft.store.UpsertWriter
+import graft.store.{Marker, UpsertWriter}
 
 /** Structured-Streaming ingestion with exactly-once PK merge — the
   * idiomatic Spark upgrade of the reference's cron-batch incremental loads
@@ -154,8 +154,8 @@ object StreamingUpsert {
         // documented precondition); a deployment migrating from a
         // marker-less runner that may have crashed mid-fold should
         // rebuild the index (or stamp + repair manually) before starting
-        val indexed = readIndexedVersion(indexPath).getOrElse {
-          writeIndexedVersion(indexPath, before); before
+        val indexed = Marker.read(indexPath, "_indexed_version").getOrElse {
+          Marker.commit(indexPath, "_indexed_version", before); before
         }
         if (indexed < before) {
           // prior fold incomplete: its touched cells may be damaged —
@@ -190,12 +190,12 @@ object StreamingUpsert {
             // being trusted — and the in-place rebuild goes through the
             // same staged cell overwrite as the fold, which never
             // touches the root-level marker file
-            writeIndexedVersion(indexPath, -1L)
+            Marker.commit(indexPath, "_indexed_version", -1L)
             graft.operators.Similarity.rebuildClusteredPQ(s, indexPath,
               graft.store.VersionedTable.read(s, tableRoot),
               centroids, codebooks, pk.head, vecCol, residual)
           }
-          writeIndexedVersion(indexPath, before)
+          Marker.commit(indexPath, "_indexed_version", before)
         }
         graft.store.VersionedTable.upsert(s, tableRoot, batch, pk)
         val after = graft.store.VersionedTable.latestVersion(tableRoot).get
@@ -205,30 +205,9 @@ object StreamingUpsert {
             graft.store.VersionedTable.changeFeed(s, tableRoot, before,
               after, pk),
             pk.head, vecCol, residual)
-          writeIndexedVersion(indexPath, after)
+          Marker.commit(indexPath, "_indexed_version", after)
         }
     }
-  }
-
-  /** The table version a clustered-PQ index reflects — `_indexed_version`
-    * inside the index directory, committed by atomic rename so readers
-    * see the old value or the new one, never a torn write.
-    */
-  private[graft] def readIndexedVersion(indexPath: String): Option[Long] = {
-    val p = java.nio.file.Paths.get(indexPath, "_indexed_version")
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong)
-    else None
-  }
-
-  private[graft] def writeIndexedVersion(indexPath: String, v: Long): Unit = {
-    val dir = java.nio.file.Paths.get(indexPath)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, "_indexed_version_", ".tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, dir.resolve("_indexed_version"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Windowed streaming aggregation with a watermark — the standard

@@ -201,4 +201,22 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.versions(r).contains(1L)) // pointer target survives
     assert(VersionedTable.read(spark, r).count() == 1)
   }
+
+  test("concurrent pointer commits never share a temp file") {
+    // a fixed temp name let one commit truncate or rename away the
+    // other's temp file mid-commit, failing it with NoSuchFileException
+    val r = root()
+    Seq(0L, 1L).foreach(v =>
+      Files.createDirectories(java.nio.file.Paths.get(r, s"v=$v")))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq(0L, 1L).map { v =>
+      new Thread(() =>
+        try (1 to 2000).foreach(_ => VersionedTable.rollback(r, v))
+        catch { case t: Throwable => errors.add(t) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, s"a commit failed: ${errors.peek()}")
+    assert(Set(0L, 1L).contains(VersionedTable.latestVersion(r).get))
+  }
 }

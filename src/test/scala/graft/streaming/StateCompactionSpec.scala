@@ -6,40 +6,46 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.store.Marker
 
-/** The generic compaction machinery's crash matrix (r15 verdict #8) —
-  * the StreamingUpsert-style path pinning, applied to the shared
-  * [[StateCompaction]] object: compaction crashing before its marker,
-  * vacuum after compaction (including the stray-directory regression),
-  * and replay/append into an already-compacted state. The line-family
-  * specs cover their operators' use of this object; these cases pin the
-  * object's own marker discipline with a SEMANTIC fold in play (the
-  * per-key sum the frequent-line count log uses), where a wrong union
-  * would silently double-count rather than fail.
+/** The versioned-state compaction crash matrix (r15 verdict #8) —
+  * the StreamingUpsert-style path pinning, applied to
+  * [[VersionedStateRunner]]'s own read/compact/vacuum: compaction
+  * crashing before its marker, vacuum after compaction (including the
+  * stray-directory regression), and replay/append into an
+  * already-compacted state. The family specs cover their use of the
+  * runner; these cases pin its marker discipline with a SEMANTIC fold in
+  * play (the per-key sum the frequent-line count log uses), where a
+  * wrong union would silently double-count rather than fail.
   */
 class StateCompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fold = Map("counts" -> ((df: org.apache.spark.sql.DataFrame) =>
-    df.groupBy("k").agg(sum(col("n")).as("n"))))
-
-  /** Write delta d<v>/counts and commit `_current` = v. */
-  private def writeDelta(root: String, v: Long,
-      rows: Seq[(String, Long)]): Unit = {
-    rows.toDF("k", "n").write.mode("overwrite")
-      .parquet(s"$root/delta/d$v/counts")
-    StreamingDedupIndex.commitMarker(root, "_current", v)
-  }
-
   private val countSchema = StructType(Seq(
     StructField("k", StringType), StructField("n", LongType)))
 
-  private def readCounts(root: String): Map[String, Long] = {
-    val v = StreamingDedupIndex.marker(root, "_current").getOrElse(0L)
-    StateCompaction.readSub(spark, root, "counts", v, countSchema)
-      .groupBy("k").agg(sum(col("n")).as("n"))
-      .as[(String, Long)].collect().toMap
+  private val state = VersionedStateRunner(
+    "out" -> StructType(Seq(StructField("k", StringType))),
+    "counts" -> countSchema, "k",
+    fold = _.groupBy("k").agg(sum(col("n")).as("n")))
+
+  /** The output part of delta d<v>: one row per key of `rows`. */
+  private def writeOut(root: String, v: Long,
+      rows: Seq[(String, Long)]): Unit =
+    rows.map(_._1).toDF("k").write.mode("overwrite")
+      .parquet(s"$root/delta/d$v/out")
+
+  /** Write delta d<v> (both parts) and commit `_current` = v. */
+  private def writeDelta(root: String, v: Long,
+      rows: Seq[(String, Long)]): Unit = {
+    writeOut(root, v, rows)
+    rows.toDF("k", "n").write.mode("overwrite")
+      .parquet(s"$root/delta/d$v/counts")
+    Marker.commit(root, "_current", v)
   }
+
+  private def readCounts(root: String): Map[String, Long] =
+    state.read(spark, root)._2.as[(String, Long)].collect().toMap
 
   test("a compact crash BEFORE the _compacted marker leaves readers on " +
       "the delta log; re-running compact completes it") {
@@ -49,23 +55,23 @@ class StateCompactionSpec extends SparkSpec {
     val before = readCounts(root)
     assert(before == Map("a" -> 4L, "b" -> 2L))
     // simulate the crash: the folded snapshot lands on disk but the
-    // process dies before commitMarker — write an orphan snapshot by
+    // process dies before the marker commit — write an orphan snapshot by
     // hand (same bytes compact would produce, WRONG on purpose so a
     // reader that trusted it would be caught)
     Seq(("a", 999L)).toDF("k", "n").write
       .parquet(s"$root/snapshot/s2/counts")
-    assert(StreamingDedupIndex.marker(root, "_compacted").isEmpty)
+    assert(Marker.read(root, "_compacted").isEmpty)
     // readers never see the orphan: state still reads from the log
     assert(readCounts(root) == before)
     // re-running compact overwrites the orphan and commits the marker;
     // the fold makes the snapshot one row per key (index-sized)
-    StateCompaction.compact(spark, root, Seq("counts"), fold)
-    assert(StreamingDedupIndex.marker(root, "_compacted").contains(2L))
+    state.compact(spark, root)
+    assert(Marker.read(root, "_compacted").contains(2L))
     assert(readCounts(root) == before)
     assert(spark.read.parquet(s"$root/snapshot/s2/counts").count() == 2)
     // compact at the same head version is a no-op (it would otherwise
     // overwrite the snapshot being read)
-    StateCompaction.compact(spark, root, Seq("counts"), fold)
+    state.compact(spark, root)
     assert(readCounts(root) == before)
   }
 
@@ -73,15 +79,15 @@ class StateCompactionSpec extends SparkSpec {
       "and survives a stray non-versioned directory") {
     val root = Files.createTempDirectory("graft_scmp2_").toString
     writeDelta(root, 1, Seq(("a", 1L)))
-    StateCompaction.compact(spark, root, Seq("counts"), fold)
+    state.compact(spark, root)
     writeDelta(root, 2, Seq(("b", 5L)))
-    StateCompaction.compact(spark, root, Seq("counts"), fold)
+    state.compact(spark, root)
     // two committed snapshots (s1 superseded by s2) + two covered
     // deltas; plant the ADVICE regression — a directory named exactly
     // "s" under snapshot/ aborted the whole vacuum on toLong before
     Files.createDirectories(Paths.get(s"$root/snapshot/s"))
     Files.createDirectories(Paths.get(s"$root/snapshot/sother"))
-    StateCompaction.vacuum(root)
+    VersionedStateRunner.vacuum(root)
     assert(!Files.isDirectory(Paths.get(s"$root/delta/d1")))
     assert(!Files.isDirectory(Paths.get(s"$root/delta/d2")))
     assert(!Files.isDirectory(Paths.get(s"$root/snapshot/s1")))
@@ -97,14 +103,15 @@ class StateCompactionSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_scmp3_").toString
     writeDelta(root, 1, Seq(("a", 1L), ("b", 2L)))
     writeDelta(root, 2, Seq(("a", 3L)))
-    StateCompaction.compact(spark, root, Seq("counts"), fold)
-    StateCompaction.vacuum(root)
+    state.compact(spark, root)
+    VersionedStateRunner.vacuum(root)
     // a new batch lands on the compacted state: snapshot + d3
     writeDelta(root, 3, Seq(("b", 7L), ("c", 1L)))
     assert(readCounts(root) == Map("a" -> 4L, "b" -> 9L, "c" -> 1L))
     // a crash AFTER the d4 delta write but BEFORE the _current rename:
     // the orphan is invisible — the checkpoint replay recomputes batch
     // 4 from the marker's state and overwrites it, never double-counts
+    writeOut(root, 4, Seq(("c", 100L)))
     Seq(("c", 100L)).toDF("k", "n").write
       .parquet(s"$root/delta/d4/counts")
     assert(readCounts(root) == Map("a" -> 4L, "b" -> 9L, "c" -> 1L))
@@ -112,11 +119,11 @@ class StateCompactionSpec extends SparkSpec {
     // commits — exactly once semantics by marker, not by write count
     Seq(("c", 2L)).toDF("k", "n").write.mode("overwrite")
       .parquet(s"$root/delta/d4/counts")
-    StreamingDedupIndex.commitMarker(root, "_current", 4L)
+    Marker.commit(root, "_current", 4L)
     assert(readCounts(root) == Map("a" -> 4L, "b" -> 9L, "c" -> 3L))
     // compacting the grown log folds snapshot + d3 + d4 into s4
-    StateCompaction.compact(spark, root, Seq("counts"), fold)
-    StateCompaction.vacuum(root)
+    state.compact(spark, root)
+    VersionedStateRunner.vacuum(root)
     assert(!Files.isDirectory(Paths.get(s"$root/delta/d3")))
     assert(readCounts(root) == Map("a" -> 4L, "b" -> 9L, "c" -> 3L))
   }
@@ -131,19 +138,21 @@ class StateCompactionSpec extends SparkSpec {
     // so the read is value-identical whichever physical order a writer
     // used, and the stray column never reaches readers (under footer
     // inference, WHICH file got sampled decided the visible schema)
+    writeOut(root, 2, Seq(("b", 5L)))
     Seq((5L, "b", true)).toDF("n", "k", "stray").write.mode("overwrite")
       .parquet(s"$root/delta/d2/counts")
-    StreamingDedupIndex.commitMarker(root, "_current", 2L)
+    Marker.commit(root, "_current", 2L)
     assert(readCounts(root) == Map("a" -> 1L, "b" -> 5L))
-    assert(StateCompaction.readSub(spark, root, "counts", 2L, countSchema)
+    assert(state.copy(fold = identity).read(spark, root)._2
       .columns.toSeq == Seq("k", "n"))
     // delta 3 writes n with a DIVERGENT physical type — the pin makes
     // this fail loudly at scan (string is not convertible to long),
     // instead of the whole state silently adopting whichever layout
     // the inferred footer happened to come from
+    writeOut(root, 3, Seq(("c", 0L)))
     Seq(("c", "oops")).toDF("k", "n").write.mode("overwrite")
       .parquet(s"$root/delta/d3/counts")
-    StreamingDedupIndex.commitMarker(root, "_current", 3L)
+    Marker.commit(root, "_current", 3L)
     intercept[Exception] { readCounts(root) }
   }
 }

@@ -1,42 +1,24 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.functions.col
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class StreamingDedupIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private val dup = "the quick brown fox jumps over the lazy dog tonight"
 
-  private def writeBacklog(root: String): String = {
-    val src = s"$root/src"
-    Files.createDirectories(Paths.get(src))
-    def put(name: String, mtime: Long,
-        rows: Seq[(Long, String)]): Unit = {
-      val d = s"$root/stage_$name"
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(d)
-      val ls = Files.list(Paths.get(d))
-      val part = try ls.filter(p =>
-          p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).findFirst.get
-        finally ls.close()
-      val f = Paths.get(src, name)
-      Files.copy(part, f)
-      Files.setLastModifiedTime(f, FileTime.fromMillis(mtime))
-    }
-    // batch 1: 10 and 20 duplicate (smaller id survives), 30 clean
-    put("a_b1.parquet", 1000000000000L,
-      Seq((10L, dup), (20L, dup), (30L, "some clean unrelated words here")))
-    // batch 2: 5 duplicates ACCEPTED doc 10 (index wins though 5 < 10),
-    // 40 clean
-    put("b_b2.parquet", 1000000600000L,
+  private def writeBacklog(root: String): String =
+    SparkEntry.slicedBacklog(spark, root, Seq(
+      // batch 1: 10 and 20 duplicate (smaller id survives), 30 clean
+      Seq((10L, dup), (20L, dup), (30L, "some clean unrelated words here")),
+      // batch 2: 5 duplicates ACCEPTED doc 10 (index wins though 5 < 10),
+      // 40 clean
       Seq((5L, dup), (40L, "entirely novel content for batch two")))
-    src
-  }
+      .map(_.toDF("doc_id", "text")))._1
 
   private def accepted(stateRoot: String): Map[Long, Long] = {
     val (acc, _, _) = StreamingDedupIndex.readState(spark, stateRoot)
@@ -90,20 +72,13 @@ class StreamingDedupIndexSpec extends SparkSpec {
 
   test("replay guard: null-text docs (no band keys) don't double-append") {
     val root = Files.createTempDirectory("graft_sdi5_").toString
-    val src = s"$root/src"
-    Files.createDirectories(Paths.get(src))
     // a null-text doc has no shingles and no band keys, so it can never
     // reject against its indexed self through the near-dup verify — the
     // id anti-join is the only thing keeping a checkpoint-lost replay
     // from double-appending it under a second batch number
-    val d = s"$root/stage"
-    Seq((50L, null.asInstanceOf[String]), (60L, "perfectly normal words"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(d)
-    val ls = Files.list(Paths.get(d))
-    val part = try ls.filter(p => p.getFileName.toString.startsWith("part-") &&
-        p.toString.endsWith(".parquet")).findFirst.get
-      finally ls.close()
-    Files.copy(part, Paths.get(src, "a_b1.parquet"))
+    val src = SparkEntry.slicedBacklog(spark, root, Seq(
+      Seq((50L, null.asInstanceOf[String]), (60L, "perfectly normal words"))
+        .toDF("doc_id", "text")))._1
     val schema = spark.read.parquet(src).schema
     StreamingDedupIndex.runAvailableNow(spark, src, schema,
       s"$root/state", s"$root/ckpt")
@@ -135,9 +110,15 @@ class StreamingDedupIndexSpec extends SparkSpec {
     // not overwrite the snapshot it would be reading from)
     StreamingDedupIndex.compact(spark, s"$root/state")
     assert(accepted(s"$root/state") == before)
-    // ...and vacuum may then delete the covered deltas
+    // ...and vacuum may then delete the covered deltas, leaving stray
+    // directories under snapshot/ alone (a directory named exactly "s"
+    // must not abort the vacuum on a toLong parse)
+    Files.createDirectories(Paths.get(s"$root/state/snapshot/s"))
+    Files.createDirectories(Paths.get(s"$root/state/snapshot/sother"))
     StreamingDedupIndex.vacuum(s"$root/state")
     assert(!Files.exists(Paths.get(s"$root/state/delta/d1")))
+    assert(Files.isDirectory(Paths.get(s"$root/state/snapshot/s")))
+    assert(Files.isDirectory(Paths.get(s"$root/state/snapshot/sother")))
     assert(accepted(s"$root/state") == before)
     // the stream continues on top of the compacted state: a replay with
     // a fresh checkpoint still rejects wholesale

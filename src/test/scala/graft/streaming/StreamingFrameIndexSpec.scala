@@ -1,43 +1,23 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class StreamingFrameIndexSpec extends SparkSpec {
   import spark.implicits._
 
   // documents-shaped backlog; fromDocuments turns text into the binary
   // payload, frameBytes = 4 cuts it into 4-byte frames
-  private def writeBacklog(root: String): String = {
-    val src = s"$root/src"
-    Files.createDirectories(Paths.get(src))
-    def put(name: String, mtime: Long,
-        rows: Seq[(Long, String, String)]): Unit = {
-      val d = s"$root/stage_$name"
-      rows.toDF("doc_id", "text", "source").coalesce(1).write.parquet(d)
-      val ls = Files.list(Paths.get(d))
-      val part = try ls.filter(p =>
-          p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).findFirst.get
-        finally ls.close()
-      val f = Paths.get(src, name)
-      Files.copy(part, f)
-      Files.setLastModifiedTime(f, FileTime.fromMillis(mtime))
-    }
-    // batch 1: assets 10/20 share frame BBBB — within-batch keep-first
-    // gives it to 10 (smaller packed (id, idx) occurrence)
-    put("a_b1.parquet", 1000000000000L, Seq(
-      (10L, "AAAABBBB", "web"),
-      (20L, "BBBBCCCC", "web")))
-    // batch 2: asset 5 repeats AAAA — batch 1 OWNS its digest even
-    // though 5 < 10; asset 40 is nothing but seen frames
-    put("b_b2.parquet", 1000000600000L, Seq(
-      (5L, "AAAADDDD", "web"),
-      (40L, "AAAA", "web")))
-    src
-  }
+  private def writeBacklog(root: String): String =
+    SparkEntry.slicedBacklog(spark, root, Seq(
+      // batch 1: assets 10/20 share frame BBBB — within-batch keep-first
+      // gives it to 10 (smaller packed (id, idx) occurrence)
+      Seq((10L, "AAAABBBB", "web"), (20L, "BBBBCCCC", "web")),
+      // batch 2: asset 5 repeats AAAA — batch 1 OWNS its digest even
+      // though 5 < 10; asset 40 is nothing but seen frames
+      Seq((5L, "AAAADDDD", "web"), (40L, "AAAA", "web")))
+      .map(_.toDF("doc_id", "text", "source")))._1
 
   private def stats(stateRoot: String)
       : Map[Long, (Long, Long, Long, Long, Long)] = {

@@ -1,40 +1,21 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class StreamingLineDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def writeBacklog(root: String): String = {
-    val src = s"$root/src"
-    Files.createDirectories(Paths.get(src))
-    def put(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
-      val d = s"$root/stage_$name"
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(d)
-      val ls = Files.list(Paths.get(d))
-      val part = try ls.filter(p =>
-          p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).findFirst.get
-        finally ls.close()
-      val f = Paths.get(src, name)
-      Files.copy(part, f)
-      Files.setLastModifiedTime(f, FileTime.fromMillis(mtime))
-    }
-    // batch 1: docs 10 and 20 share "beta two" — within-batch keep-first
-    // gives it to 10 (smaller (id, pos) occurrence)
-    put("a_b1.parquet", 1000000000000L, Seq(
-      (10L, "alpha one\nbeta two"),
-      (20L, "beta two\ngamma three")))
-    // batch 2: doc 5 repeats "alpha one" — batch 1 OWNS it even though
-    // 5 < 10; doc 40 is nothing but owned lines and must survive EMPTY
-    put("b_b2.parquet", 1000000600000L, Seq(
-      (5L, "alpha one\ndelta four"),
-      (40L, "alpha one")))
-    src
-  }
+  private def writeBacklog(root: String): String =
+    SparkEntry.slicedBacklog(spark, root, Seq(
+      // batch 1: docs 10 and 20 share "beta two" — within-batch
+      // keep-first gives it to 10 (smaller (id, pos) occurrence)
+      Seq((10L, "alpha one\nbeta two"), (20L, "beta two\ngamma three")),
+      // batch 2: doc 5 repeats "alpha one" — batch 1 OWNS it even though
+      // 5 < 10; doc 40 is nothing but owned lines and must survive EMPTY
+      Seq((5L, "alpha one\ndelta four"), (40L, "alpha one")))
+      .map(_.toDF("doc_id", "text")))._1
 
   private def cleaned(stateRoot: String): Map[Long, (String, Long)] = {
     val (c, _, _) = StreamingLineDedup.readState(spark, stateRoot)

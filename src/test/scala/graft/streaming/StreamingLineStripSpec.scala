@@ -1,44 +1,28 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class StreamingLineStripSpec extends SparkSpec {
   import spark.implicits._
 
   private val chrome = "nav home about contact"
 
-  private def writeBacklog(root: String): String = {
-    val src = s"$root/src"
-    Files.createDirectories(Paths.get(src))
-    def put(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
-      val d = s"$root/stage_$name"
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(d)
-      val ls = Files.list(Paths.get(d))
-      val part = try ls.filter(p =>
-          p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).findFirst.get
-        finally ls.close()
-      val f = Paths.get(src, name)
-      Files.copy(part, f)
-      Files.setLastModifiedTime(f, FileTime.fromMillis(mtime))
-    }
-    // batch 1: `chrome` on TWO docs — under minDocs=3 it survives batch
-    // 1; "promo text" on three docs crosses WITHIN the batch
-    put("a_b1.parquet", 1000000000000L, Seq(
-      (10L, s"$chrome\nalpha body"),
-      (20L, s"$chrome\nbeta body"),
-      (30L, s"promo text\ngamma body"),
-      (40L, s"promo text\ndelta body"),
-      (50L, s"promo text\nepsilon body")))
-    // batch 2: doc 5 brings `chrome`'s cumulative count to 3 — stripped
-    // HERE, while batch-1 copies stand (no retraction)
-    put("b_b2.parquet", 1000000600000L, Seq(
-      (5L, s"$chrome\nzeta body")))
-    src
-  }
+  private def writeBacklog(root: String): String =
+    SparkEntry.slicedBacklog(spark, root, Seq(
+      // batch 1: `chrome` on TWO docs — under minDocs=3 it survives
+      // batch 1; "promo text" on three docs crosses WITHIN the batch
+      Seq(
+        (10L, s"$chrome\nalpha body"),
+        (20L, s"$chrome\nbeta body"),
+        (30L, s"promo text\ngamma body"),
+        (40L, s"promo text\ndelta body"),
+        (50L, s"promo text\nepsilon body")),
+      // batch 2: doc 5 brings `chrome`'s cumulative count to 3 — stripped
+      // HERE, while batch-1 copies stand (no retraction)
+      Seq((5L, s"$chrome\nzeta body")))
+      .map(_.toDF("doc_id", "text")))._1
 
   private def cleaned(stateRoot: String): Map[Long, (String, Long)] = {
     val (c, _, _) = StreamingLineStrip.readState(spark, stateRoot)
@@ -108,15 +92,8 @@ class StreamingLineStripSpec extends SparkSpec {
     assert(snapRows == cb.size)
     // a compacted stream keeps absorbing batches: chrome is frequent
     // now, so a late doc carrying it arrives pre-stripped
-    val late = s"$root/late"
-    Files.createDirectories(Paths.get(late))
-    Seq((7L, s"$chrome\nlate body")).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$root/stage_late")
-    val ls = Files.list(Paths.get(s"$root/stage_late"))
-    val part = try ls.filter(p => p.getFileName.toString.startsWith("part-")
-        && p.toString.endsWith(".parquet")).findFirst.get
-      finally ls.close()
-    Files.copy(part, Paths.get(late, "c_b3.parquet"))
+    val late = SparkEntry.slicedBacklog(spark, s"$root/late", Seq(
+      Seq((7L, s"$chrome\nlate body")).toDF("doc_id", "text")))._1
     StreamingLineStrip.runAvailableNow(spark, late, schema,
       s"$root/state", s"$root/ckpt_late", minDocs = 3)
     assert(cleaned(s"$root/state")(7L) == (("late body", 3L)))

@@ -19,6 +19,10 @@ class StreamingUpsertSpec extends SparkSpec {
     Files.move(part.toPath, java.nio.file.Paths.get(dest))
   }
 
+  /** The table version the ANN index under `root/idx` reflects. */
+  private def indexedVersion(root: String): Option[Long] =
+    graft.store.Marker.read(s"$root/idx", "_indexed_version")
+
   test("AvailableNow stream merges a parquet backlog by PK exactly once") {
     val root = Files.createTempDirectory("graft_su_").toString
     val src = s"$root/src"
@@ -136,7 +140,7 @@ class StreamingUpsertSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     StreamingUpsert.runVersionedWithAnnIndex(spark, src, schema,
       s"$root/tbl", s"$root/ckpt", Seq("vec_id"), s"$root/idx", cents, cb)
-    val marker = StreamingUpsert.readIndexedVersion(s"$root/idx").get
+    val marker = indexedVersion(root).get
     // simulate a fold that died mid-mutation: the table commits an update
     // the index never folds (marker stays behind) and one of the cells
     // that fold WOULD have touched loses its directory
@@ -146,7 +150,7 @@ class StreamingUpsertSpec extends SparkSpec {
         x => (x + org.apache.spark.sql.functions.lit(0.3d)).cast("float"))
         .as("embedding"))
     graft.store.VersionedTable.upsert(spark, s"$root/tbl", upd, Seq("vec_id"))
-    assert(StreamingUpsert.readIndexedVersion(s"$root/idx").get == marker)
+    assert(indexedVersion(root).get == marker)
     val damagedCell = spark.read.parquet(s"$root/idx")
       .join(upd.select("vec_id"), Seq("vec_id"))
       .select($"cell".cast("long")).distinct().as[Long].head()
@@ -167,7 +171,7 @@ class StreamingUpsertSpec extends SparkSpec {
       .as[(Long, Long, Seq[Long])].collect().toSet
     assert(rows(s"$root/idx") == rows(rebuilt))
     assert(rows(s"$root/idx").size == 25)
-    assert(StreamingUpsert.readIndexedVersion(s"$root/idx").get > marker)
+    assert(indexedVersion(root).get > marker)
   }
 
   test("repair covers intermediate cells across a multi-version marker gap") {
@@ -186,7 +190,7 @@ class StreamingUpsertSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     StreamingUpsert.runVersionedWithAnnIndex(spark, src, schema,
       s"$root/tbl", s"$root/ckpt", Seq("vec_id"), s"$root/idx", cents, cb)
-    val marker = StreamingUpsert.readIndexedVersion(s"$root/idx").get
+    val marker = indexedVersion(root).get
     def cellOf(id: Long): Long = spark.read.parquet(s"$root/idx")
       .where($"vec_id" === id).select($"cell".cast("long")).as[Long].head()
     // an id from a DIFFERENT cell than id 0's — its vector is the bait
@@ -209,7 +213,7 @@ class StreamingUpsertSpec extends SparkSpec {
     // intermediate cell holding the stale row
     graft.store.VersionedTable.upsert(spark, s"$root/tbl",
       Seq((0L, vecOf(0L))).toDF("vec_id", "embedding"), Seq("vec_id"))
-    assert(StreamingUpsert.readIndexedVersion(s"$root/idx").get == marker)
+    assert(indexedVersion(root).get == marker)
     writeFile(Seq((51L, Array.tabulate(8)(d => 0.04f * (d + 1))))
       .toDF("vec_id", "embedding"), s"$src/f2.parquet")
     StreamingUpsert.runVersionedWithAnnIndex(spark, src, schema,
@@ -241,7 +245,7 @@ class StreamingUpsertSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     StreamingUpsert.runVersionedWithAnnIndex(spark, src, schema,
       s"$root/tbl", s"$root/ckpt", Seq("vec_id"), s"$root/idx", cents, cb)
-    val marker = StreamingUpsert.readIndexedVersion(s"$root/idx").get
+    val marker = indexedVersion(root).get
     // an unfolded upsert, then vacuum everything but the head: the
     // marker's version is gone, so the gap's per-step feeds are
     // underivable and only a full rebuild is exact
