@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Size-guarded broadcast decisions (the `countAtMost` probe pattern from
-  * [[graft.store.UpsertWriter]], shared by the dedup/similarity operators).
+/** Size-guarded broadcast decisions, shared by the store and the
+  * dedup/similarity operators.
   *
   * A `broadcast()` hint on a table that does NOT fit executor memory is a
   * scale-killer: the driver collects the whole table and every executor
@@ -33,10 +33,24 @@ object Sizing {
   val DefaultBroadcastBytes: Long = 256L << 20
 
   /** Cheap "has at most n rows" probe without a full count:
-    * limit(n+1).count() stops scanning once n+1 rows are found.
+    * limit(n+1).count() stops scanning once n+1 rows are found. It runs
+    * `df`'s lineage once more than the caller's own action does; a
+    * caller that needs the rows anyway uses [[materialize]] instead.
     */
   def countAtMost(df: DataFrame, n: Long): Boolean =
     df.limit((math.min(n, Int.MaxValue - 1L) + 1).toInt).count() <= n
+
+  /** Materialize `df` ONCE (an eager local checkpoint) and take its row
+    * count from that same job, through an [[Observation]] on the
+    * checkpointed plan. Every later action on the returned frame reads the
+    * checkpointed rows: `df`'s lineage is neither re-planned nor re-run,
+    * however many sides of a join or guards consume it.
+    */
+  def materialize(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val done = df.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+    (done, rows.get("n").asInstanceOf[Long])
+  }
 
   /** Schema-driven estimate of one row's in-memory bytes: variable-width
     * columns (strings, binary, arrays, maps, structs of them) measured per

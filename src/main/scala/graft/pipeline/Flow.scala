@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
+import graft.operators.Sizing
 import graft.store.UpsertWriter
 import graft.transform.{PriceTransforms, SymbolTransforms}
 import graft.validate.Validator
@@ -97,8 +98,11 @@ object Flow {
     chunked(universe, chunkSize).foreach { chunk =>
       val (wide, errs) = source.fetchPrices(spark, chunk, s, e)
       failed ++= errs
-      val long = PriceTransforms.transformPrices(wide, assetCategory)
-      if (!long.head(1).isEmpty) {
+      // materialized once: the validator and the merge read its rows, and
+      // neither re-plans the wide stack
+      val (long, rows) = Sizing.materialize(
+        PriceTransforms.transformPrices(wide, assetCategory))
+      if (rows > 0) {
         val gated = Validator.validateOrThrow(long, Schemas.transformedPrices)
         UpsertWriter.upsert(spark, pricesPath, gated, Seq("date_stamp", "symbol"))
       }
@@ -127,17 +131,13 @@ object Flow {
     */
   def promote(spark: SparkSession, lakePath: String, dwPath: String,
       pk: Option[Seq[String]], dateRange: Option[(LocalDate, LocalDate)] = None)
-      : Unit = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(lakePath))) return
-    val scan0 = spark.read.parquet(lakePath)
-    val scan = dateRange.fold(scan0) { case (s, e) =>
-      scan0.where(col("date_stamp").between(Date.valueOf(s), Date.valueOf(e)))
+      : Unit =
+    lakeScan(spark, lakePath, dateRange).foreach { scan =>
+      pk match {
+        case Some(keys) => UpsertWriter.upsert(spark, dwPath, scan, keys)
+        case None => UpsertWriter.replace(scan, dwPath)
+      }
     }
-    pk match {
-      case Some(keys) => UpsertWriter.upsert(spark, dwPath, scan, keys)
-      case None => UpsertWriter.replace(scan, dwPath)
-    }
-  }
 
   /** S9 variant of [[promote]]: the warehouse is a JDBC database (the
     * reference selects Postgres/Snowflake via config, load.py:126-137).
@@ -147,27 +147,38 @@ object Flow {
   def promoteJdbc(spark: SparkSession, lakePath: String, url: String,
       table: String, pk: Option[Seq[String]],
       props: java.util.Properties,
-      dateRange: Option[(LocalDate, LocalDate)] = None): Unit = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(lakePath))) return
-    val scan0 = spark.read.parquet(lakePath)
-    val scan = dateRange.fold(scan0) { case (s, e) =>
-      scan0.where(col("date_stamp").between(Date.valueOf(s), Date.valueOf(e)))
+      dateRange: Option[(LocalDate, LocalDate)] = None): Unit =
+    lakeScan(spark, lakePath, dateRange).foreach { scan =>
+      pk match {
+        case Some(keys) =>
+          graft.store.JdbcWarehouse.upsert(spark, scan, url, table, keys, props)
+        case None => graft.store.JdbcWarehouse.replace(scan, url, table, props)
+      }
     }
-    pk match {
-      case Some(keys) =>
-        graft.store.JdbcWarehouse.upsert(spark, scan, url, table, keys, props)
-      case None => graft.store.JdbcWarehouse.replace(scan, url, table, props)
+
+  /** The lake side of both promotions: the table's scan, date-filtered
+    * when a range is given (the filter pushes down to parquet); None when
+    * the lake table was never written.
+    */
+  private def lakeScan(spark: SparkSession, lakePath: String,
+      dateRange: Option[(LocalDate, LocalDate)]): Option[DataFrame] =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(lakePath))) None
+    else {
+      val scan = spark.read.parquet(lakePath)
+      Some(dateRange.fold(scan) { case (s, e) =>
+        scan.where(col("date_stamp").between(Date.valueOf(s), Date.valueOf(e)))
+      })
     }
-  }
 
   /** O5: the dbt stage — run the 6 models in topo order, then the declared
     * data-test suite (orchestration.py:261-274).
     */
   def runModels(spark: SparkSession, warehouseRoot: String): Unit = {
     def table(n: String): DataFrame = spark.read.parquet(s"$warehouseRoot/$n")
-    val stgFxP = Models.stgFxPrices(table("price_history_fx"))
+    val fxPrices = table("price_history_fx") // feeds two models, read once
+    val stgFxP = Models.stgFxPrices(fxPrices)
     val stgStP = Models.stgStockPrices(table("price_history_sp_stocks"))
-    val stgFxS = Models.stgFxSymbols(table("price_history_fx"))
+    val stgFxS = Models.stgFxSymbols(fxPrices)
     val stgStS = Models.stgStockSymbols(table("symbols_sp_stocks"))
     UpsertWriter.replace(Models.dimSymbols(stgFxS, stgStS),
       s"$warehouseRoot/dim_symbols")

@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions._
   *    over the big table plus the rewrite. `broadcastThresholdRows` guards
   *    against genuinely large updates, falling back to a shuffle join which
   *    AQE will plan.
+  *  - The deduplicated update set is materialized ONCE, and its row count
+  *    — the broadcast decision — comes from that same job
+  *    ([[graft.operators.Sizing.materialize]]). The anti-join side and the
+  *    union side both read the materialized rows, so the delta's lineage
+  *    (a wide unpivot, a streaming micro-batch) runs once per merge.
   *  - At 100 TB a full rewrite per merge is wrong; partition the target by a
   *    date column (`partitionBy`) and only the partitions containing updated
   *    keys are rewritten (dynamic partition overwrite), i.e. a daily merge
@@ -65,16 +70,16 @@ object UpsertWriter {
       return
     }
     val existing = spark.read.parquet(path)
+    val (delta, rows) = graft.operators.Sizing.materialize(dedupedUpdates)
     val updatesSide =
-      if (countAtMost(dedupedUpdates, broadcastThresholdRows)) broadcast(dedupedUpdates)
-      else dedupedUpdates
+      if (rows <= broadcastThresholdRows) broadcast(delta) else delta
     val survivors = existing.join(updatesSide, pk, "left_anti")
     // schema evolution: with allowNewColumns a delta may carry columns the
     // table lacks (and vice versa) — surviving rows get typed nulls for the
     // new columns, the table schema widens on this write. Default is
     // strict (schema drift fails loudly), matching the validated-schema
     // discipline of the W4 gate.
-    val merged = survivors.unionByName(dedupedUpdates,
+    val merged = survivors.unionByName(delta,
       allowMissingColumns = allowNewColumns)
     writeAtomic(merged, target, partitionBy)
   }
@@ -195,12 +200,6 @@ object UpsertWriter {
     }
     sb.toString
   }
-
-  /** Cheap "is it small enough to broadcast" probe without a full count:
-    * limit(n+1).count() stops scanning once n+1 rows are found.
-    */
-  private def countAtMost(df: DataFrame, n: Long): Boolean =
-    df.limit((n + 1).toInt).count() <= n
 
   /** Write to `<path>__tmp`, then swap directories. The swap is two renames
     * (not one atomic op) — acceptable under the single-writer assumption,

@@ -79,23 +79,27 @@ object PriceTransforms {
     * forward-filled later in staging.
     *
     * Scale: stack() is a narrow per-row expansion (no shuffle); the
-    * all-null-column scan is ONE aggregate pass (the single unavoidable
-    * action — the projection is data-dependent, SURVEY.md §2.3 P16).
+    * emptiness guard and the all-null-column scan share ONE aggregate pass
+    * (the single unavoidable action — the projection is data-dependent,
+    * SURVEY.md §2.3 P16).
     */
   def transformPrices(df: DataFrame, assetCategory: String): DataFrame = {
-    if (df.head(1).isEmpty) return df // empty-input guard (transform.py:73-74)
+    // P16: drop columns that are entirely null (failed tickers). count()
+    // ignores nulls, so one agg row gives the row count and every column's
+    // non-null count. It reads the raw frame: validation only widens
+    // numerics to the patterns' double/bigint, which never nulls a value.
+    val dataCols = df.columns.filter(_ != "Date")
+    val counts = df.agg(F.count(lit(1)),
+      dataCols.map(c => F.count(col(c)).as(c)).toSeq: _*).head()
+    // empty-input guard (transform.py:73-74), ahead of any validation
+    if (counts.getLong(0) == 0L) return df
 
     val validated = Validator
       .validateWide(df, Schemas.rawPricePatterns, Schemas.rawPriceIndex)
       .fold(vs => throw Validator.SchemaValidationException(vs), identity)
 
-    // P16: drop columns that are entirely null (failed tickers). count()
-    // ignores nulls, so one agg row gives every column's non-null count.
-    val dataCols = validated.columns.filter(_ != "Date")
-    val aggs = dataCols.map(c => F.count(col(c)).as(c)).toSeq
-    val counts = validated.agg(aggs.head, aggs.tail: _*).head()
     val dead = dataCols.zipWithIndex
-      .filter { case (_, i) => counts.getLong(i) == 0L }.map(_._1).toSet
+      .filter { case (_, i) => counts.getLong(i + 1) == 0L }.map(_._1).toSet
     val live = validated.drop(dead.toSeq: _*)
 
     // R1: wide→long. Tickers = union of suffixes across field columns;

@@ -1,6 +1,6 @@
 package graft.warehouse
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality checks — the dbt test surface
@@ -97,8 +97,11 @@ object DataTests {
 
   /** The reference's full declared suite over the two core models
     * (properties.yml:96-160), both directions of the dim↔fct relationship
-    * included. Both tables' frames cross-join, so the WHOLE suite — ten
-    * checks over two tables — is one Spark action.
+    * included. Every check keys on `symbol` or is a row predicate, so each
+    * table is grouped ONCE on `symbol` (its row count plus one partial
+    * count per row-predicate check) and the two grouped frames full-outer
+    * join once on `symbol`; one global aggregate over the joined groups
+    * yields all ten counts. The whole suite is one Spark action.
     */
   def coreModelSuite(dimSymbols: DataFrame, fctPrices: DataFrame): Seq[CheckResult] = {
     val dimChecks = Seq[Check](
@@ -111,10 +114,47 @@ object DataTests {
     val fctChecks = Seq[Check](
       NotNull("date_stamp"), NotNull("symbol"),
       Relationships("symbol", dimSymbols, "symbol"))
-    val row = checksFrame(dimSymbols, dimChecks, "d")
-      .crossJoin(checksFrame(fctPrices, fctChecks, "f"))
+    val (dim, dimCounts) = keyed(dimSymbols, dimChecks, "symbol", "d", "f")
+    val (fct, fctCounts) = keyed(fctPrices, fctChecks, "symbol", "f", "d")
+    // `===` never matches a null key: a null symbol is an orphan on its
+    // own side, exactly as in the reference's left-anti joins
+    val counts = dimCounts ++ fctCounts
+    val row = dim.join(fct, col("dkey") === col("fkey"), "full_outer")
+      .agg(counts.head, counts.tail: _*)
       .head()
-    extract(row, "dim_symbols", dimChecks, "d") ++
-      extract(row, "fct_prices", fctChecks, "f")
+    (dimChecks.map(("dim_symbols", _)) ++ fctChecks.map(("fct_prices", _)))
+      .zipWithIndex.map { case ((table, c), i) =>
+        CheckResult(table, c.name, c.column, row.getLong(i))
+      }
+  }
+
+  /** One table's side of [[coreModelSuite]]: the table grouped on `key`
+    * into `<p>key`, its group row count `<p>n` and a partial count per
+    * row-predicate check; plus each check's total over the full-outer-
+    * joined groups, where `<other>n` is null exactly when the other table
+    * lacks the key. `unique` and `relationships` must be on `key`; a
+    * relationship's parent is the other table's grouped side.
+    */
+  private def keyed(df: DataFrame, checks: Seq[Check], key: String,
+      p: String, other: String): (DataFrame, Seq[Column]) = {
+    val n = col(s"${p}n")
+    def total(c: Column): Column = coalesce(sum(c), lit(0L))
+    val partials = checks.zipWithIndex.collect {
+      case (NotNull(c), i) if c != key =>
+        count(when(col(c).isNull, 1)).as(s"$p$i")
+      case (AcceptedValues(c, vs), i) =>
+        count(when(!col(c).isin(vs: _*) || col(c).isNull, 1)).as(s"$p$i")
+    }
+    val totals = checks.zipWithIndex.map {
+      case (NotNull(`key`), _) => total(when(col(s"${p}key").isNull, n))
+      case (NotNull(_) | AcceptedValues(_, _), i) => total(col(s"$p$i"))
+      case (Unique(`key`), _) => count(when(n > 1, 1))
+      case (Relationships(`key`, _, _), _) =>
+        total(when(col(s"${other}n").isNull, n))
+      case (c, _) => throw new IllegalArgumentException(
+        s"${c.name}(${c.column}) is not keyed on $key")
+    }
+    (df.groupBy(col(key).as(s"${p}key"))
+      .agg(count(lit(1)).as(s"${p}n"), partials: _*), totals)
   }
 }

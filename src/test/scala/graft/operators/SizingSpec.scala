@@ -33,6 +33,18 @@ class SizingSpec extends SparkSpec {
     assert(!Sizing.fitsBroadcast(nested, rowLimit = 10, byteLimit = 10))
   }
 
+  test("materialize returns the rows and their count, empty input included") {
+    val df = spark.range(0, 10).select(($"id" % 3).as("k")).distinct()
+    val (rows, n) = Sizing.materialize(df)
+    assert(n == 3L)
+    assert(rows.orderBy("k").as[Long].collect().toSeq == Seq(0L, 1L, 2L))
+    // an empty plan still reports its count instead of leaving it unset
+    val (none, zero) = Sizing.materialize(df.where(lit(false)))
+    assert(zero == 0L && none.isEmpty)
+    val (noRows, z) = Sizing.materialize(Seq.empty[(Long, String)].toDF("id", "v"))
+    assert(z == 0L && noRows.columns.toSeq == Seq("id", "v"))
+  }
+
   test("fanOut raises an under-partitioned narrow frame to the session " +
       "parallelism and leaves everything else untouched") {
     val target = spark.sparkContext.defaultParallelism

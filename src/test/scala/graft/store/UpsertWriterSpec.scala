@@ -2,6 +2,8 @@ package graft.store
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{col, concat, lit, udf}
+
 import graft.SparkSpec
 
 /** Merge/replace semantics per the reference's load tests
@@ -175,6 +177,26 @@ class UpsertWriterSpec extends SparkSpec {
       UpsertWriter.deletePartitioned(spark, p,
         Seq((Option.empty[String], 3L)).toDF("day", "id"), Seq("day", "id"), "day")
     }
+  }
+
+  test("merge runs the delta's lineage once") {
+    val p = tmp()
+    UpsertWriter.upsert(spark, p, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
+    val table = spark.read.parquet(p)
+    val before = spark.createDataFrame(table.collectAsList(), table.schema)
+    // every evaluation of the delta's lineage adds its row count
+    val evaluated = spark.sparkContext.longAccumulator("delta_rows")
+    val tick = udf { (id: Long) => evaluated.add(1L); id }.asNondeterministic()
+    val delta = spark.range(2, 6)
+      .select(tick(col("id")).as("id"), concat(lit("v"), col("id")).as("v"))
+    UpsertWriter.upsert(spark, p, delta, Seq("id"))
+    assert(evaluated.value == 4L,
+      s"the delta's 4 rows were evaluated ${evaluated.value} times")
+    val got = spark.read.parquet(p).orderBy("id").as[(Long, String)].collect().toSeq
+    val want = UpsertWriter.mergePlan(before, delta, Seq("id"))
+      .orderBy("id").as[(Long, String)].collect().toSeq
+    assert(got == want)
+    assert(got == Seq((1L, "a"), (2L, "v2"), (3L, "v3"), (4L, "v4"), (5L, "v5")))
   }
 
   test("mergePlan (relational form) matches the writer semantics") {

@@ -70,6 +70,14 @@ class TransformsSpec extends SparkSpec {
     assert(PriceTransforms.transformPrices(empty, "fx").count() == 0)
   }
 
+  test("transformPrices: empty input a validator would reject returns unchanged") {
+    // the guard precedes validation (transform.py:73-74): an empty fetch
+    // with a wrong-typed matched column is not a schema failure
+    val empty = Seq.empty[(Timestamp, Boolean)].toDF("Date", "Open_AAPL")
+    val out = PriceTransforms.transformPrices(empty, "sp_stocks")
+    assert(out eq empty)
+  }
+
   test("transformPrices rejects a wrong-typed matched column (lazy validation)") {
     val bad = Seq((Timestamp.valueOf("2024-01-01 00:00:00"), true))
       .toDF("Date", "Open_AAPL") // boolean is not coercible to double
