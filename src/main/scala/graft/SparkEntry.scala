@@ -1,904 +1,32 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-import graft.functions.TextFunctions
-import graft.functions.VectorFunctions
-import graft.operators.{Dedup, Multimodal, Retrieval, Similarity, Temporal}
-import graft.store.UpsertWriter
-import graft.validate.Validator
+import graft.queries._
+import graft.queries.ReferenceParityQueries.priceHistory
 import graft.warehouse.Models
 
-/** Driver contract — one `queries` entry (+ DuckDB `oracleSql` twin) per
-  * operator from SURVEY.md §2 plus the driver-mandated large-scale
-  * extensions (dedup / similarity / text analysis / multimodal / streaming).
-  *
-  * Determinism rules shared by every query and its oracle:
-  *  - identical output column NAMES on both sides (driver sorts columns by
-  *    name before hashing);
-  *  - a total ORDER BY on both sides;
-  *  - double outputs are either exact IEEE-deterministic arithmetic on
-  *    identical inputs (divisions, min/max) or decimal-exact aggregation
-  *    (`sum(cast(x as decimal))`) cast back to double — never a
-  *    float-accumulation whose order could differ between engines;
-  *  - timestamps never leave a query raw (testdata `events.ts` has
-  *    shipped as both INT64 nanos and TIMESTAMP_NTZ micros across
-  *    generations; the loader normalizes, see `t`) — only dates /
-  *    epoch-µs / ids are emitted.
+/** Public contract: `entry`, plus `queries` (name → Spark body) and
+  * `oracleSql` (name → DuckDB twin), both views of ONE registry. Each
+  * query and its oracle are a single [[graft.queries.QuerySpec]] in the
+  * object of its family under `graft.queries` (reference parity,
+  * relational/lakehouse, dedup, ANN/retrieval, tokenizer/packing,
+  * corpus curation, multimodal); helpers several families use live once
+  * in [[graft.queries.Shared]]. A new query is one `QuerySpec` in its
+  * family's `specs`.
   */
 object SparkEntry {
 
-  /** Table loader. `events.ts` has shipped under two physical parquet
-    * types across testdata generations, so branch on the READ schema
-    * rather than hard-coding either era:
-    *  - INT64 TIMESTAMP(NANOS): Spark's reader rejects it by default —
-    *    `legacy.parquet.nanosAsLong` surfaces it as a raw-nanos LongType,
-    *    which we truncate to a µs timestamp (matching DuckDB's ns→µs
-    *    truncation when it compares dates/epochs);
-    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads it as
-    *    TIMESTAMP_NTZ — cast to the session-TZ timestamp type (sessions
-    *    here run UTC, so the wall-clock is preserved as the same instant
-    *    and `to_date`/`unix_micros` keep the UTC semantics the oracles
-    *    assume; DuckDB reads the same column as its naive TIMESTAMP).
-    */
-  /** Scale-adaptive input widening (optimization guide §2.5 "input
-    * skew: one huge unsplittable file ... otherwise repartition
-    * immediately after the read"): the harness fixtures are single
-    * one-row-group parquet files, so every scan plans AT MOST ONE task
-    * and the CPU-heavy text/hash kernels downstream run serially while
-    * the other cores idle. When the frame's planned parallelism is
-    * below the session's, repartition it up; when the input is already
-    * split (every real deployment — a 100 TB table is tens of
-    * thousands of row groups), this is a NO-OP and no shuffle is added.
-    * Only worth it in front of kernel-heavy pipelines: the round-robin
-    * exchange moves the payload once, which a plain columnar scan
-    * would not survive profitably.
-    */
-  private[graft] def widen(df: DataFrame): DataFrame = {
-    val want = math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4)
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
-  }
+  private lazy val registry = new QueryRegistry(
+    ReferenceParityQueries.specs ++ RelationalQueries.specs ++
+      DedupQueries.specs ++ AnnQueries.specs ++ TokenizerQueries.specs ++
+      CurationQueries.specs ++ MultimodalQueries.specs)
 
-  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = rawTable(s, dir, name)
-    if (name == "events")
-      df.schema("ts").dataType match {
-        case LongType =>
-          df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType =>
-          df.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => df // already a session-TZ timestamp
-      }
-    else df
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.queries
 
-  private[graft] def rawTable(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
-
-  /** Scratch directory for queries that materialize intermediate tables or
-    * streaming checkpoints. Defaults to the system temp dir; the bench
-    * harness points the `graft.scratch` system property at tmpfs so
-    * per-micro-batch WAL/commit fsync constants measure memory writes
-    * instead of disk — query semantics identical either way.
-    */
-  private def scratch(prefix: String): String = {
-    val base = sys.props.get("graft.scratch")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
-    java.nio.file.Files.createDirectories(base)
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
-  }
-
-  /** The q137-family compound salt — each doc's first 16 chars, spaces
-    * removed, appended as ONE synthetic compound word so the greedy
-    * matcher must decompose unseen compounds into word-pieces. MUST stay
-    * byte-identical to the oracle side's shared `docs2` CTE
-    * (`bpeSeqCtes`): every BPE-vocab query and its SQL twin flow through
-    * this single definition — editing one without the other desyncs the
-    * whole family's gates.
-    */
-  private def saltCompound(c: Column): Column =
-    concat(c, lit(" "), regexp_replace(substring(c, 1, 16), " ", ""))
-
-  private def saltedDocs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").withColumn("text", saltCompound(col("text")))
-
-  /** The q177/q178 lined corpus — MUST stay byte-identical to the
-    * twins' `lnb` CTE: the newline-free synthetic docs re-enter as
-    * 10-word chunk lines joined by '\n', and every doc_id % 7 == 0
-    * doc carries one extra verbatim boilerplate line at the end (the
-    * cross-page chrome the line-dedup stages exist to remove).
-    * Zero-token docs are excluded on both sides (a chunking of
-    * nothing has no lines to dedup).
-    */
-  private val boilerplateLine = "nav home about contact subscribe"
-  private def linedDocs(s: SparkSession, dir: String): DataFrame = {
-    val toks = graft.functions.TextFunctions.tokens(col("text"))
-    val nLines = floor((size(toks) + lit(9)) / lit(10)).cast("int")
-    val chunks = transform(sequence(lit(0), nLines - 1),
-      i => array_join(slice(toks, i * 10 + 1, lit(10)), " "))
-    val lined = when(col("doc_id") % 7 === 0,
-      concat(chunks, array(lit(boilerplateLine)))).otherwise(chunks)
-    t(s, dir, "documents").select(col("doc_id"), col("text"))
-      .where(col("text").isNotNull && size(toks) > 0)
-      .select(col("doc_id"), array_join(lined, "\n").as("text"))
-  }
-
-  /** The shared q137-family piece vocabulary (minCount 5, size cap 200 —
-    * the same constants as the twins' `wv0`/`alpha` CTEs), collected as
-    * kernel model metadata.
-    */
-  private def q137Pieces(docs: DataFrame): Seq[(String, Int)] =
-    graft.operators.Corpus.collectPieces(
-      graft.operators.Corpus.buildPieceVocab(docs, "text",
-        minCount = 5, maxSize = 200))
-
-  /** The q79b/q182 quality KEEP gate (C4-shape heuristics: ≥ 20
-    * tokens, mean token length in [3, 10], punctuation ratio ≤ 0.2) —
-    * ONE definition so a threshold tweak cannot desync the two Spark
-    * call sites (their SQL twins deliberately restate it).
-    */
-  private def qualityKeep(txt: Column): Column =
-    TextFunctions.nTokens(txt) >= 20 &&
-      TextFunctions.meanTokenLen(txt) >= 3.0 &&
-      TextFunctions.meanTokenLen(txt) <= 10.0 &&
-      TextFunctions.punctRatio(txt) <= 0.2
-
-  /** The q125/q182 Gopher repetition KEEP gate (dup lines ≤ 30%,
-    * dup-line chars ≤ 20%, top-bigram chars ≤ 20% — cross-multiplied
-    * integers over [[TextFunctions.repetitionStats]]), shared for the
-    * same single-definition reason.
-    */
-  private def repetitionKeep(txt: Column): Column = {
-    val zeros = array(Seq.fill(6)(lit(0L)): _*)
-    val st = coalesce(TextFunctions.repetitionStats(txt), zeros)
-    val nChars = coalesce(length(txt).cast(LongType), lit(0L))
-    st(1) * 10 <= st(0) * 3 && st(3) * 5 <= st(2) && st(5) * 5 <= nChars
-  }
-
-  /** The shared q180-family unigram piece table (maxPieceLen 4,
-    * minCount 8, size cap 120 — the same constants as the twins'
-    * `usub`/`umulti` CTEs), costed on the driver.
-    */
-  private def unigramPieces(docs: DataFrame): Seq[(String, Int, Long)] =
-    graft.operators.Corpus.collectUnigramPieces(
-      graft.operators.Corpus.buildUnigramVocab(docs, "text",
-        maxPieceLen = 4, minCount = 8, maxSize = 120))
-
-  /** Streaming state cost scales with shuffle partitions (one state-store
-    * instance + delta files per partition per batch); the harness's
-    * streams carry tiny state, so run them at few partitions and restore
-    * the session setting after. Retention/maintenance knobs are dialed
-    * down likewise — these AvailableNow backlog runs live for 1-2 batches,
-    * so deep checkpoint history and background maintenance buy nothing.
-    * The default HDFS-backed state store beats RocksDB here: RocksDB's
-    * per-query native-db init dwarfs a few KB of state (it earns its keep
-    * at state sizes that pressure the executor heap). The returned
-    * DataFrames are plain parquet reads of the materialized sink,
-    * unaffected by the restore.
-    */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.minBatchesToRetain",
-      "spark.sql.streaming.stateStore.maintenanceInterval")
-    val prev = keys.map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** Id-range backlog for the ordered-ingest streaming queries
-    * (q153/q155) and the ScaleSmoke stream op: `df` split into
-    * `nFiles` ascending `doc_id` ranges, one parquet file each, names
-    * AND mtimes pinned so FileStreamSource replays them in id order one
-    * per micro-batch — arrival order IS id order, the contract under
-    * which the streamed result equals the batch (shard, id)-order
-    * arithmetic. Returns (source dir, file schema).
-    */
-  private[graft] def idRangeBacklog(s: SparkSession, root: String,
-      df: DataFrame, nFiles: Int = 2): (String, StructType) = {
-    require(nFiles >= 1, "idRangeBacklog needs at least one file")
-    val maxRow = df.agg(max(col("doc_id"))).first()
-    require(!maxRow.isNullAt(0),
-      "idRangeBacklog needs a non-empty frame (max(doc_id) is null)")
-    val maxId = maxRow.getLong(0)
-    // boundary(i) == floor(maxId * i / nFiles) computed without the
-    // maxId * i intermediate, which overflows Long for very large ids
-    def boundary(i: Int): Long =
-      maxId / nFiles * i + maxId % nFiles * i / nFiles
-    slicedBacklog(s, root, (0 until nFiles).map { i =>
-      val lo = boundary(i)
-      val hi = boundary(i + 1)
-      if (i == 0) df.where(col("doc_id") <= hi)
-      else if (i == nFiles - 1) df.where(col("doc_id") > lo)
-      else df.where(col("doc_id") > lo && col("doc_id") <= hi)
-    })
-  }
-
-  /** Two-file backlog split by doc-id PARITY: batch 1 = even ids,
-    * batch 2 = odd. Arrival order deliberately differs from id order,
-    * so a streaming oracle over this backlog gates CROSS-BATCH
-    * ownership (batch 1 owns what it saw even against smaller batch-2
-    * ids), not just a per-batch collapse — q179's arrival-order rule.
-    */
-  private[graft] def parityBacklog(s: SparkSession, root: String,
-      df: DataFrame): (String, StructType) =
-    slicedBacklog(s, root, Seq(
-      df.where(pmod(col("doc_id"), lit(2)) === 0),
-      df.where(pmod(col("doc_id"), lit(2)) === 1)))
-
-  /** Shared backlog writer: each slice becomes one single-part parquet
-    * file under `root/src` with an mtime pinning its arrival rank, so
-    * an AvailableNow file source at maxFilesPerTrigger=1 replays the
-    * slices as micro-batches in exactly this order.
-    */
-  private[graft] def slicedBacklog(s: SparkSession, root: String,
-      slices: Seq[DataFrame]): (String, StructType) = {
-    val src = java.nio.file.Paths.get(s"$root/src")
-    java.nio.file.Files.createDirectories(src)
-    def firstPart(d: String): java.nio.file.Path = {
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(d))
-      try ls.filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).findFirst.get
-      finally ls.close()
-    }
-    // the slice writes are independent single-partition jobs over
-    // disjoint output paths — run them concurrently (guide §2.6: the
-    // next job's task back-fills the core the previous one's tail would
-    // idle); each file's content and pinned mtime are per-slice, so the
-    // backlog is byte-identical to the serial form
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    slices.zipWithIndex.map { case (slice, i) => Future {
-      slice.coalesce(1).write.parquet(s"$root/b$i")
-      val f = src.resolve(f"b$i%02d.parquet")
-      java.nio.file.Files.copy(firstPart(s"$root/b$i"), f)
-      java.nio.file.Files.setLastModifiedTime(f,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1000000000000L + i * 600000L))
-    } }.foreach(Await.result(_, Duration.Inf))
-    (src.toString, s.read.parquet(s"$root/b0").schema)
-  }
-
-  /** q159's multi-byte salt — every UTF-8 width on purpose: 2-byte
-    * (é U+00E9), 3-byte (CJK, → U+2192, λ U+03BB), and 4-byte
-    * supplementary-plane (😀 U+1F600, a surrogate pair in the JVM),
-    * plus doubled/leading whitespace so the whitespace-preserving
-    * pretokenizer is exercised, not just ASCII words. ONE constant so
-    * the Spark query and the DuckDB twin can never drift.
-    */
-  private val byteBpeSalt =
-    "  néé 日本語→λ 😀 "
-
-  /** q168's EXTRA salt, appended after [[byteBpeSalt]]: every GPT-2
-    * pretokenizer branch on purpose — contractions ('t/'ll + an
-    * unmatched 'N for the punct fallback), a letter→digit→punct class
-    * chain (3.14words—and), a lone tab before a word, a run ENDING in
-    * non-space whitespace before a word (` \t\tzz` — the oracle's RE2
-    * adjustment term counts exactly these), and a double space ahead of the appended doc-id digits (the
-    * shed-all-but-last-space lookahead). ONE constant, like
-    * [[byteBpeSalt]], so the query and twin can never drift; the
-    * apostrophes are SQL-escaped at twin-build time.
-    */
-  private val gpt2Salt =
-    " don't we'll O'Neil 3.14words—and\tmore \t\tzz  "
-
-  /** [[gpt2Salt]] with apostrophes doubled for embedding in a DuckDB
-    * single-quoted literal (the tabs embed as-is). */
-  private val gpt2SaltSql = gpt2Salt.replace("'", "''")
-
-  /** The ONE mixed-modality id construction behind the q169/q170/q172
-    * family and ScaleSmoke's multimodal op: every doc_id%3==0 doc
-    * plays an IMAGE with dims 64·(1+id%5) × 64·(1+id%4) (patch 16 →
-    * a 16·(1+id%5)·(1+id%4)-long placeholder span, id 0 —
-    * reserved-unreachable in the byte vocab), every other doc is TEXT
-    * under the identity byte tokenizer (ids == bytes+1, so the twins
-    * derive the stream from hex() with no tokenizer). One definition
-    * because four Scala copies and four SQL twins desync silently —
-    * the tokenDecontamFixture rule.
-    */
-  private[graft] def multimodalIds: Column =
-    when(col("doc_id") % 3 === 0,
-      graft.operators.Multimodal.imagePlaceholderIds(
-        lit(64) * (lit(1) + col("doc_id") % 5),
-        lit(64) * (lit(1) + col("doc_id") % 4),
-        patchSize = 16))
-      .otherwise(graft.functions.TextFunctions.byteBpeEncode(col("text"),
-        Seq.empty, graft.operators.Corpus.identityByteVocab))
-
-  /** [[multimodalIds]] over a (doc_id, lang, text) frame, with the
-    * modality column and the family's row universe (image docs kept
-    * regardless of text; text docs need non-null text). */
-  private[graft] def multimodalDocs(docs: DataFrame): DataFrame =
-    docs.where(col("doc_id") % 3 === 0 || col("text").isNotNull)
-      .select(col("doc_id"), col("lang"),
-        when(col("doc_id") % 3 === 0, lit("image")).otherwise(lit("text"))
-          .as("modality"),
-        multimodalIds.as("__ids"))
-
-  /** The q154/q156 train/eval construction — ONE place because the
-    * shared `tokenDecontamSql` twin is valid for BOTH queries only
-    * while this shape stays byte-identical between them. One encode
-    * pass over the corpus (checkpointed: train, eval, and the sibling
-    * quote join all read the materialization — lazy, the kernel would
-    * run up to three times and push below computed-column filters).
-    * Eval = each id%50=0 doc's ids ++ its successor's (the planted
-    * verbatim-quote leak); a token-less eval doc carries no quote
-    * either, mirroring the twin's inner join on the token table.
-    */
-  private def tokenDecontamFixture(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (withIds, evalSlice) = tokenDecontamParts(s, dir)
-    (withIds.where(col("doc_id") % 50 =!= 0), evalSlice(0))
-  }
-
-  /** The ONE sibling-quote construction behind the whole
-    * token-decontamination fixture family (q154/q156/q157/q164's
-    * single-suite form AND q165's two-suite form share it — the shared
-    * oracle twins are valid only while this shape stays byte-identical
-    * across consumers, so it lives in exactly one place): tokenized
-    * corpus plus an eval-slice builder where slice m = each
-    * doc_id%50==m doc's ids ++ its successor's (the planted
-    * verbatim-quote leak).
-    */
-  private def tokenDecontamParts(s: SparkSession, dir: String)
-      : (DataFrame, Int => DataFrame) = {
-    val docs = saltedDocs(s, dir)
-    val pieces = q137Pieces(docs)
-    val withIds = docs.select(col("doc_id"),
-      graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-        .as("ids")).localCheckpoint()
-    val sib = withIds.select((col("doc_id") - 1).as("doc_id"),
-      col("ids").as("sib_ids"))
-    def evalSlice(m: Int) = withIds.where(col("doc_id") % 50 === m &&
-        size(col("ids")) > 0)
-      .join(sib, Seq("doc_id"), "left")
-      .select(col("doc_id"), concat(col("ids"),
-        coalesce(col("sib_ids"), array().cast("array<int>"))).as("ids"))
-    (withIds, evalSlice)
-  }
-
-  /** q165's growing-eval-suite fixture: TWO eval slices (%50==0 = the
-    * benchmark suite already decontaminated against, %50==25 = the
-    * newly added benchmark), the train side excluding both.
-    */
-  private def tokenDecontamDeltaFixture(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (withIds, evalSlice) = tokenDecontamParts(s, dir)
-    (withIds.where(col("doc_id") % 50 =!= 0 && col("doc_id") % 50 =!= 25),
-      evalSlice(0), evalSlice(25))
-  }
-
-  /** q165's memoized inputs: the timed region must measure the
-    * MAINTENANCE path (delta windows + hit-table merge), not the
-    * old-suite recompute that builds its input (the judge-flagged r5/r6
-    * fixture class) — so train/evals AND the old hit table (computed at
-    * hashWindows = true, the SAME representation the delta runs at: a
-    * mixed-representation merge would open the under-flag channel the
-    * operator doc forbids) land in parquet once per JVM.
-    */
-  private def q165Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q165", dir) { () =>
-      val root = fixtureScratch("graft_q165_")
-      val (train, evOld, evNew) = tokenDecontamDeltaFixture(s, dir)
-      train.write.parquet(s"$root/train")
-      evOld.write.parquet(s"$root/ev_old")
-      evNew.write.parquet(s"$root/ev_new")
-      graft.operators.Dedup.decontaminateTokenNgrams(train, evOld, n = 13,
-          hashWindows = true)
-        .write.parquet(s"$root/old_hits")
-      root
-    }
-
-  /** Memoized per-(query, sf-dir) fixture construction: a bench's timed
-    * reps must measure the operator, not the parquet writes that build its
-    * input (the judge-flagged r5/r6 outlier class), so each q##Fixture
-    * builds ONCE per JVM — fixture content is a pure deterministic
-    * function of the source table, making the reuse safe. One cache, one
-    * scaffold; each fixture is just its build body.
-    */
-  private val fixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Sibling sentinel written AFTER a fixture build completes: a fixture
-    * at path P is trusted only when `P._GRAFT_OK` also exists, so a
-    * partially deleted tree (external cleaner removing children but not
-    * the root) or a build that died mid-write FAILS revalidation and
-    * rebuilds instead of feeding PATH_NOT_FOUND/corrupt reads to every
-    * downstream query. Sibling (not inside P) so store-format dirs like
-    * VersionedTable roots never see a foreign file.
-    */
-  private def fixtureSentinel(path: String): java.nio.file.Path =
-    java.nio.file.Paths.get(path + "._GRAFT_OK")
-
-  /** The shared `fixtures/` scratch child ([[wipeStaleFixtures]] spares
-    * it; [[fixtureScratch]] allocates under it). */
-  private def fixturesBase: java.nio.file.Path =
-    sys.props.get("graft.scratch")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
-      .resolve("fixtures")
-
-  /** Refresh the mtime of the `graft_*` tree (the direct `fixtures/`
-    * child) containing `path`: directory mtimes only change when direct
-    * children come and go, so a fixture CONSUMED for over an hour would
-    * otherwise look stale to a concurrent run's [[wipeStaleFixtures]]
-    * and be deleted mid-use. Best-effort — a failed touch only narrows
-    * the wipe guard back to build-time freshness.
-    */
-  private def touchFixtureTree(path: String): Unit = try {
-    val base = fixturesBase.toAbsolutePath.normalize
-    var p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    while (p.getParent != null && p.getParent != base) p = p.getParent
-    if (p.getParent == base)
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-  } catch { case _: java.io.IOException => () }
-
-  private def memoFixture(key: String, dir: String)(build: () => String): String =
-    fixtureCache.compute(s"$key|$dir", (_, prev) =>
-      // revalidate: a memoized path may have been wiped from scratch by
-      // an external cleaner — a stale memo then fails every downstream
-      // query with PATH_NOT_FOUND, so rebuild into a fresh dir instead.
-      // The check is on the completion sentinel, not the directory: a
-      // half-deleted or half-built tree must rebuild too.
-      if (prev != null &&
-          java.nio.file.Files.exists(fixtureSentinel(prev)) &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(prev))) {
-        touchFixtureTree(prev) // keep a hot fixture out of the stale window
-        prev
-      }
-      else {
-        val built = build()
-        java.nio.file.Files.createFile(fixtureSentinel(built))
-        built
-      })
-
-  /** Startup hygiene for Bench/Verify: delete stale `graft_*` fixture
-    * trees under the effective scratch root's `fixtures/` child. The
-    * per-query wipe preserves that child (cross-query fixtures), and
-    * [[memoFixture]]'s cache is per-JVM, so on a custom `graft.scratch`
-    * or the tmpdir fallback each run would otherwise leak one tree per
-    * fixture forever. Only `graft_`-prefixed children are touched — the
-    * tmpdir fallback may share `fixtures/` with unrelated software.
-    */
-  private[graft] def wipeStaleFixtures(): Unit = {
-    val base = fixturesBase
-    // age guard: only trees untouched for an hour are stale — a
-    // CONCURRENT harness run's live fixtures (and one it is half-way
-    // through building) have fresh mtimes and must survive another
-    // process's startup wipe on a shared tmpdir. [[touchFixtureTree]]
-    // refreshes the tree mtime on every memoFixture cache HIT, so
-    // long-running consumers stay inside the window too.
-    val cutoff = System.currentTimeMillis() - 60L * 60L * 1000L
-    if (java.nio.file.Files.isDirectory(base)) {
-      val ls = java.nio.file.Files.list(base)
-      try ls.forEach { p =>
-        val old =
-          try java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
-          catch { case _: java.io.IOException => false }
-        if (p.getFileName.toString.startsWith("graft_") && old)
-          graft.store.UpsertWriter.deleteRecursively(p)
-      } finally ls.close()
-    }
-  }
-
-  /** Scratch allocator for [[memoFixture]] trees: under the `fixtures/`
-    * child of the scratch root, which `Bench`'s per-query wipe PRESERVES.
-    * Fixtures are cross-query by design (q115's centroids feed
-    * q116/q117/q118; the versioned-lake fixtures feed their incremental
-    * views), so an ephemeral-scratch wipe between queries must not
-    * delete them — round 10's first wipe-enabled suite run killed six
-    * queries exactly that way.
-    */
-  private def fixtureScratch(prefix: String): String = {
-    val base = fixturesBase
-    java.nio.file.Files.createDirectories(base)
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
-  }
-
-  /** q95's input: a 3-version lake table (v0 = even orderkeys; v1 merges a
-    * custkey-migrating batch; v2 merges a price-doubling batch).
-    */
-  private def q95Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q95", dir) { () =>
-      val root = fixtureScratch("graft_q95_") + "/tbl"
-      val orders = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      graft.store.VersionedTable.write(
-        orders.where(col("o_orderkey") % 2 === 0), root)
-      graft.store.VersionedTable.upsert(s, root,
-        orders.where(col("o_orderkey") % 3 === 0)
-          .withColumn("o_custkey", col("o_custkey") + 7),
-        Seq("o_orderkey"))
-      graft.store.VersionedTable.upsert(s, root,
-        orders.where(col("o_orderkey") % 5 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 2),
-        Seq("o_orderkey"))
-      root
-    }
-
-  /** q91's input: a 2-version lake table (v0 = even orderkeys; v1 PK-merges
-    * a status-rewriting batch for every 3rd key) — the judge's r6 verdict
-    * flagged q91's timed region as dominated by the two parquet commits
-    * that build the input, not by the `snapshotDiff` being measured.
-    */
-  private def q91Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q91", dir) { () =>
-      val root = fixtureScratch("graft_q91_") + "/tbl"
-      val orders = t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      graft.store.VersionedTable.write(
-        orders.where(col("o_orderkey") % 2 === 0), root)
-      graft.store.VersionedTable.upsert(s, root,
-        orders.where(col("o_orderkey") % 3 === 0)
-          .withColumn("o_orderstatus", lit("X")),
-        Seq("o_orderkey"))
-      root
-    }
-
-  /** q99's input: a DELETE-bearing version chain (v0 = even orderkeys;
-    * v1 upserts a price-doubling batch for every 3rd key — inserting the
-    * odd multiples of 3; v2 deletes every 7th key).
-    */
-  private def q99Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q99", dir) { () =>
-      val root = fixtureScratch("graft_q99_") + "/tbl"
-      val orders = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      graft.store.VersionedTable.write(
-        orders.where(col("o_orderkey") % 2 === 0), root)
-      graft.store.VersionedTable.upsert(s, root,
-        orders.where(col("o_orderkey") % 3 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 2),
-        Seq("o_orderkey"))
-      graft.store.VersionedTable.delete(s, root,
-        orders.where(col("o_orderkey") % 7 === 0).select("o_orderkey"),
-        Seq("o_orderkey"))
-      root
-    }
-
-  /** q112's input: a 3-version documents table (v0 = full corpus; v1
-    * upserts every 5th doc with one appended token; v2 deletes every 7th
-    * doc) — the mutation rules are pure doc_id arithmetic so the DuckDB
-    * twin can rebuild the final corpus without seeing the lake.
-    */
-  private def q112Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q112", dir) { () =>
-      val root = fixtureScratch("graft_q112_") + "/tbl"
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      graft.store.VersionedTable.write(docs, root)
-      graft.store.VersionedTable.upsert(s, root,
-        docs.where(col("doc_id") % 5 === 0)
-          .withColumn("text", concat(col("text"), lit(" graftextra"))),
-        Seq("doc_id"))
-      graft.store.VersionedTable.delete(s, root,
-        docs.where(col("doc_id") % 7 === 0).select("doc_id"),
-        Seq("doc_id"))
-      root
-    }
-
-  /** q114's input: the PQ index — m=16 sub-quantizers × 64 codewords over
-    * the unit-normalized corpus, plus the encoded per-vector codes. Index
-    * CONSTRUCTION (16 subspaces × 3 Lloyd passes), memoized like the
-    * versioned-table fixtures so the timed region is the ADC search +
-    * exact rerank, not the offline build.
-    */
-  private def q114Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q114", dir) { () =>
-      val base = fixtureScratch("graft_q114_")
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.pqCodebooks(emb, m = 16, k = 64, iterations = 3)
-      cb.write.parquet(s"$base/cb")
-      Similarity.pqEncode(emb, cb).write.parquet(s"$base/enc")
-      base
-    }
-
-  /** q115's input: the IVFADC index — q114's PQ codebooks composed with a
-    * 16-cell IVF layout (kmeans centroids + the cell-partitioned PQ-code
-    * table from `writeClusteredPQ`). Memoized like q114, so the timed
-    * region is the cell-pruned ADC search + rerank, not the offline
-    * index build.
-    */
-  private def q115Fixture(s: SparkSession, dir: String): String = {
-    // resolve the nested fixture OUTSIDE the memo builder: the cache's
-    // compute must never re-enter itself ("Recursive update")
-    val pqBase = q114Fixture(s, dir)
-    memoFixture("q115", dir) { () =>
-      val base = fixtureScratch("graft_q115_")
-      val emb = t(s, dir, "embeddings")
-      val cb = s.read.parquet(s"$pqBase/cb")
-      val cents = Similarity.kmeans(emb, k = 16, iterations = 3)
-      cents.write.parquet(s"$base/cents")
-      Similarity.writeClusteredPQ(emb, cents, cb, s"$base/idx")
-      base
-    }
-  }
-
-  /** q116's input: the RESIDUAL IVFADC index — q115's 16 IVF cells with
-    * per-subspace codebooks retrained on cell residuals (x̂ − c_cell) and
-    * the cell-partitioned residual-code table. Same memoization contract
-    * as q114/q115: the offline build is untimed.
-    */
-  private def q116Fixture(s: SparkSession, dir: String): String = {
-    val p115 = q115Fixture(s, dir) // outside the builder — no re-entry
-    memoFixture("q116", dir) { () =>
-      val base = fixtureScratch("graft_q116_")
-      val emb = t(s, dir, "embeddings")
-      val cents = s.read.parquet(s"$p115/cents")
-      val rcb = Similarity.pqCodebooksResidual(emb, cents, m = 16, k = 64,
-        iterations = 3)
-      rcb.write.parquet(s"$base/rcb")
-      Similarity.writeClusteredPQ(emb, cents, rcb, s"$base/idx",
-        residual = true)
-      base
-    }
-  }
-
-  /** q117's input: a MAINTAINED IVFADC index — a fresh copy of q115's
-    * index mutated by one deterministic signed feed (update vec_id%5==0
-    * to x·0.5+0.125 per element; delete vec_id%7==0 unless updated;
-    * insert 10000+vec_id for vec_id%11==0 with 1−x), plus the post-feed
-    * corpus and its REBUILT twin index. All mutation rules are pure
-    * vec_id arithmetic so the DuckDB twin reconstructs the final corpus
-    * without seeing the index; construction is untimed per the fixture
-    * contract.
-    */
-  private def q117Fixture(s: SparkSession, dir: String): String = {
-    val p115 = q115Fixture(s, dir) // outside the builder — no re-entry
-    val p114 = q114Fixture(s, dir)
-    memoFixture("q117", dir) { () =>
-      val base = fixtureScratch("graft_q117_")
-      val emb = t(s, dir, "embeddings")
-      val cents = s.read.parquet(s"$p115/cents")
-      val cb = s.read.parquet(s"$p114/cb")
-      Similarity.writeClusteredPQ(emb, cents, cb, s"$base/idx")
-      val updNew = emb.where(col("vec_id") % 5 === 0)
-        .select(col("vec_id"), transform(col("embedding"),
-          x => (x * lit(0.5d) + lit(0.125d)).cast("float")).as("embedding"))
-      val insNew = emb.where(col("vec_id") % 11 === 0)
-        .select((col("vec_id") + 10000L).as("vec_id"),
-          transform(col("embedding"),
-            x => (lit(1.0d) - x).cast("float")).as("embedding"))
-      val minus = emb.where(col("vec_id") % 5 === 0 ||
-          (col("vec_id") % 7 === 0))
-        .select(col("vec_id"), col("embedding"), lit(-1L).as("__sign"))
-      val plus = updNew.unionByName(insNew)
-        .select(col("vec_id"), col("embedding"), lit(1L).as("__sign"))
-      Similarity.maintainClusteredPQ(s, s"$base/idx", cents, cb,
-        minus.unionByName(plus))
-      val finalCorpus = emb
-        .where(col("vec_id") % 5 =!= 0 && col("vec_id") % 7 =!= 0)
-        .select("vec_id", "embedding")
-        .unionByName(updNew).unionByName(insNew)
-      finalCorpus.write.parquet(s"$base/final")
-      Similarity.writeClusteredPQ(finalCorpus, cents, cb, s"$base/rebuilt")
-      base
-    }
-  }
-
-  /** q118's input: the STREAMING-maintained IVFADC index — v0 = vec_id%3==0
-    * committed with its index, then a 2-file backlog (file A: %3==1
-    * inserts + %9==0 updates to x·0.5+0.125; file B: %3==2 inserts)
-    * streamed through `runVersionedWithAnnIndex`, each micro-batch
-    * committing a version AND folding its change feed into the index.
-    * The rebuilt twin over the final snapshot is built alongside; the
-    * final corpus is pure vec_id arithmetic (all 500 ids, %9==0
-    * transformed) so the DuckDB twin reconstructs it directly.
-    */
-  private def q118Fixture(s: SparkSession, dir: String): String = {
-    val p115 = q115Fixture(s, dir) // outside the builder — no re-entry
-    val p114 = q114Fixture(s, dir)
-    memoFixture("q118", dir) { () =>
-      val base = scratch("graft_q118_")
-      val emb = t(s, dir, "embeddings")
-      val cents = s.read.parquet(s"$p115/cents")
-      val cb = s.read.parquet(s"$p114/cb")
-      val v0 = emb.where(col("vec_id") % 3 === 0).select("vec_id", "embedding")
-      graft.store.VersionedTable.write(v0, s"$base/tbl")
-      Similarity.writeClusteredPQ(v0, cents, cb, s"$base/idx")
-      val src = s"$base/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-      val fileA = emb.where(col("vec_id") % 3 === 1)
-        .select("vec_id", "embedding")
-        .unionByName(emb.where(col("vec_id") % 9 === 0)
-          .select(col("vec_id"), transform(col("embedding"),
-            x => (x * lit(0.5d) + lit(0.125d)).cast("float"))
-            .as("embedding")))
-      val fileB = emb.where(col("vec_id") % 3 === 2)
-        .select("vec_id", "embedding")
-      Seq("a" -> fileA, "b" -> fileB).foreach { case (tag, df) =>
-        val staging = s"$base/stage_$tag"
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        val part = new java.io.File(staging).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(src, s"feed_$tag.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingUpsert.runVersionedWithAnnIndex(
-          s, src, fileB.schema, s"$base/tbl", s"$base/ckpt", Seq("vec_id"),
-          s"$base/idx", cents, cb, maxFilesPerTrigger = 1)
-      }
-      Similarity.writeClusteredPQ(
-        graft.store.VersionedTable.read(s, s"$base/tbl"), cents, cb,
-        s"$base/rebuilt")
-      base
-    }
-  }
-
-  /** The documents table as a vector corpus: feature-hashed 64-dim
-    * embeddings (integer histograms cast to float — exact for these
-    * magnitudes). Shared by q120's fixture and query so the two can
-    * never drift.
-    */
-  private def textEmb(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id").as("vec_id"),
-      transform(TextFunctions.hashEmbed(col("text"), 64),
-        x => x.cast("float")).as("embedding"))
-
-  /** q120's input: the IVFADC index built over the feature-hashed
-    * document embeddings — 8 k-means cells + 8-subspace codebooks +
-    * cell-partitioned codes, all derived from `documents.text` alone.
-    * Untimed like every index-build fixture.
-    */
-  private def q120Fixture(s: SparkSession, dir: String): String =
-    memoFixture("q120", dir) { () =>
-      val base = scratch("graft_q120_")
-      val emb = textEmb(s, dir)
-      val cents = Similarity.kmeans(emb, k = 8, iterations = 3)
-      cents.write.parquet(s"$base/cents")
-      val cb = Similarity.pqCodebooks(emb, m = 8, k = 16, iterations = 3)
-      cb.write.parquet(s"$base/cb")
-      Similarity.writeClusteredPQ(emb, cents, cb, s"$base/idx")
-      base
-    }
-
-  // ---------------------------------------------------------------- helpers
-
-  /** Synthetic OHLCV price history derived deterministically from `events`
-    * — gives the securities staging models (ffill, rounding) a harness
-    * input with genuine nulls. Mirrored 1:1 by [[phSql]].
-    */
-  private def priceHistory(s: SparkSession, dir: String, fx: Boolean): DataFrame = {
-    val ev = t(s, dir, "events")
-    val sym =
-      if (fx)
-        when(col("event_type") === "click", "USDJPY")
-          .when(col("event_type") === "view", "EURUSD")
-          .when(col("event_type") === "purchase", "GBPUSD")
-          .when(col("event_type") === "signup", "USDCHF")
-          .otherwise("USDCAD")
-      else col("event_type")
-    ev.groupBy(to_date(col("ts")).as("date_stamp"), sym.as("symbol"))
-      .agg(count(lit(1)).as("cnt"), min("value").as("mn"), max("value").as("mx"))
-      .select(
-        col("date_stamp"), col("symbol"),
-        when(col("cnt") % 3 === 0, lit(null)).otherwise(col("mn") / 8).as("open"),
-        (col("mx") / 8).as("high"),
-        (col("mn") / 8).as("low"),
-        when(col("cnt") % 4 === 0, lit(null)).otherwise(col("mx") / 8).as("close"),
-        when(col("cnt") % 5 === 0, lit(null)).otherwise(col("cnt")).as("volume"))
-  }
-
-  private def phSql(fx: Boolean): String = {
-    val sym =
-      if (fx)
-        "CASE event_type WHEN 'click' THEN 'USDJPY' WHEN 'view' THEN 'EURUSD' " +
-          "WHEN 'purchase' THEN 'GBPUSD' WHEN 'signup' THEN 'USDCHF' " +
-          "ELSE 'USDCAD' END"
-      else "event_type"
-    s"""base_ev AS (
-       |  SELECT CAST(ts AS DATE) AS date_stamp, $sym AS symbol,
-       |         count(*) AS cnt, min(value) AS mn, max(value) AS mx
-       |  FROM events GROUP BY 1, 2),
-       |ph AS (
-       |  SELECT date_stamp, symbol,
-       |    CASE WHEN cnt % 3 = 0 THEN NULL ELSE mn / 8 END AS open,
-       |    mx / 8 AS high,
-       |    mn / 8 AS low,
-       |    CASE WHEN cnt % 4 = 0 THEN NULL ELSE mx / 8 END AS close,
-       |    CASE WHEN cnt % 5 = 0 THEN NULL ELSE cnt END AS volume
-       |  FROM ph_src)""".stripMargin.replace("ph_src", "base_ev")
-  }
-
-  /** DuckDB fragments mirroring TextFunctions: tokens / shingles / the
-    * portable 32-bit md5 hash.
-    */
-  private val toksSql =
-    "list_filter(string_split_regex(text, '\\s+'), t -> strlen(t) > 0)"
-  private def shinglesSql(tk: String, n: Int = 3): String =
-    s"list_transform(range(1, greatest(len($tk) - ${n - 1}, 1) + 1), " +
-      s"i -> array_to_string(list_slice($tk, i, i + ${n - 1}), ' '))"
-  private def pHashSql(x: String): String =
-    s"('0x' || substr(md5($x), 1, 8))::BIGINT"
-
-  private val ffillFrame =
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-  private def ffillSelectSql: String =
-    s"""SELECT date_stamp, symbol,
-       |  CASE WHEN open IS NULL THEN last_value(close) OVER w ELSE open END AS open,
-       |  CASE WHEN high IS NULL THEN last_value(close) OVER w ELSE high END AS high,
-       |  CASE WHEN low IS NULL THEN last_value(close) OVER w ELSE low END AS low,
-       |  CASE WHEN close IS NULL THEN last_value(close) OVER w ELSE close END AS close,
-       |  CASE WHEN volume IS NULL THEN 0 ELSE volume END AS volume""".stripMargin
-
-  /** Deterministic [[graft.pipeline.RawSource]] over the events-derived
-    * price history — the fixture standing in for the reference's network
-    * sources (py_pipeline/extract.py:45-64,125-137) so the FULL flow is
-    * oracle-checkable: the wide frames it serves round-trip through the
-    * price transform back to exactly [[priceHistory]], which [[phSql]]
-    * mirrors. FX tickers are served in their raw Yahoo "=X" forms so the
-    * transform's strip/remap path is exercised.
-    */
-  private final class PhFixtureSource(dir: String)
-      extends graft.pipeline.RawSource {
-    private val fxRaw = Map(
-      "EURUSD" -> "EURUSD=X", "GBPUSD" -> "GBPUSD=X",
-      "USDJPY" -> "JPY=X", "USDCHF" -> "CHF=X", "USDCAD" -> "CAD=X")
-
-    override def fetchSymbols(s: SparkSession, cat: String): DataFrame = {
-      import s.implicits._
-      if (cat == "sp_stocks") {
-        val types = t(s, dir, "events").select("event_type").distinct()
-          .orderBy("event_type").collect().map(_.getString(0)).toSeq
-        types.map(et => (et, et + " Inc", Option.empty[String],
-            Option.empty[String], Option.empty[Boolean], Option(true),
-            Option.empty[Boolean]))
-          .toDF("Symbol", "Security", "GICS Sector", "GICS Sub-Industry",
-            "in_sp400", "in_sp500", "in_sp600")
-      } else fxRaw.values.toSeq.sorted.toDF("Symbol")
-    }
-
-    override def fetchPrices(s: SparkSession, symbols: Seq[String],
-        start: java.time.LocalDate, end: java.time.LocalDate)
-        : (DataFrame, Seq[String]) = {
-      val fx = symbols.exists(_.endsWith("=X"))
-      val raw = if (fx) fxRaw else symbols.map(x => x -> x).toMap
-      val syms = raw.keys.toSeq.sorted
-      val ph = priceHistory(s, dir, fx)
-        .where(col("date_stamp").between(
-          java.sql.Date.valueOf(start), java.sql.Date.valueOf(end)))
-      // one row per (date, symbol) → yfinance-shaped wide Field_RawTicker
-      val wide = ph.groupBy("date_stamp").pivot("symbol", syms)
-        .agg(first("open").as("Open"), first("high").as("High"),
-          first("low").as("Low"), first("close").as("Close"),
-          first("volume").as("Volume"))
-      // pivot columns are "<sym>_<Field>"; strip the EXACT known-symbol
-      // prefix (longest match first, so a symbol containing '_' — e.g. a
-      // future "page_view" event type — still renames correctly) instead
-      // of splitting at the first underscore
-      val bySymLen = syms.sortBy(-_.length)
-      val fields = Seq("Open", "High", "Low", "Close", "Volume")
-      val renamed = wide.columns.foldLeft(wide) { (df, c) =>
-        bySymLen.find(sym => c.startsWith(sym + "_")) match {
-          case Some(sym) =>
-            df.withColumnRenamed(c, s"${c.substring(sym.length + 1)}_${raw(sym)}")
-          case None => df
-        }
-      }
-      val expected = for { sym <- syms; f <- fields } yield s"${f}_${raw(sym)}"
-      val missing = expected.filterNot(renamed.columns.contains)
-      require(missing.isEmpty,
-        s"PhFixtureSource: pivot rename missed columns $missing")
-      (renamed
-        .withColumn("Date", col("date_stamp").cast(TimestampType))
-        .drop("date_stamp"), Seq.empty)
-    }
-  }
-
-  // ---------------------------------------------------------------- entry
+  lazy val oracleSql: Map[String, String] = registry.oracleSql
 
   /** Flagship: the securities warehouse pipeline end-to-end on synthetic
     * price history — staging casts/rounds + forward-fill window + core
@@ -911,8797 +39,25 @@ object SparkEntry {
     Models.fctPrices(fx, st).orderBy("symbol", "date_stamp")
   }
 
-  /** q140/q141 shared front half: stream two curated micro-batches
-    * through the dedup index — q135's deterministic PII salt on the
-    * corpus, scrub + broadcast-model scoring composed as the stateless
-    * per-row `prepare` hook IN FRONT of the stateful hash-set index —
-    * and return (accepted state, model). Fresh scratch per call; the
-    * accepted frame carries (doc_id, batch, text) with text already
-    * curated (scrubbed, quality-gated).
-    */
-  private def streamCurateDedupAccepted(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val root = scratch("graft_scd_")
-    val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-    // the model build and the two backlog writes below are independent
-    // jobs — overlap them; Await sites before first use
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val modelF = Future {
-      graft.operators.Classify.centroidModel(
-        docs.where(pmod(col("doc_id"), lit(5)) =!= 0),
-        col("lang") === "en").localCheckpoint()
-    }
-    // q135's deterministic PII salt
-    val salted = docs.withColumn("text", concat(col("text"),
-      when(pmod(col("doc_id"), lit(3)) === 0,
-        concat(lit(" contact user"), col("doc_id").cast(StringType),
-          lit("@mail.example.com"))).otherwise(lit("")),
-      when(pmod(col("doc_id"), lit(4)) === 0,
-        concat(lit(" at 10."),
-          pmod(col("doc_id"), lit(200)).cast(StringType),
-          lit(".0.1"))).otherwise(lit("")),
-      when(pmod(col("doc_id"), lit(5)) === 0,
-        concat(lit(" call +1 555-01"),
-          lpad(pmod(col("doc_id"), lit(100)).cast(StringType), 2, "0")))
-        .otherwise(lit(""))))
-      .select("doc_id", "text")
-    // even ids arrive as batch 1, odd as batch 2; the slice writes run
-    // while modelF builds
-    val (src, schema) = parityBacklog(s, root, salted)
-    val model = Await.result(modelF, Duration.Inf)
-    // the per-batch curation: scrub, score the SCRUBBED text, keep
-    // quality_pred — per-row and deterministic (the prepare contract)
-    def curate(batch: DataFrame): DataFrame = {
-      val scrubbed = graft.operators.Scrub.redactPii(batch, "text")
-        .drop("text").withColumnRenamed("redacted", "text")
-      graft.operators.Classify.scoreByModel(scrubbed, model, "text")
-        .where(col("quality_pred"))
-        .select("doc_id", "text")
-    }
-    withShufflePartitions(s, 2) {
-      graft.streaming.StreamingDedupIndex.runAvailableNow(
-        s, src, schema, s"$root/state", s"$root/ckpt",
-        prepare = curate)
-    }
-    val (accepted, _, _) =
-      graft.streaming.StreamingDedupIndex.readState(s, s"$root/state")
-    (accepted, model)
-  }
+  // ---- helpers the tests, tools and ScaleSmoke reach through the facade
 
-  // ---------------------------------------------------------------- queries
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
+    Shared.t(s, dir, name)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def slicedBacklog(s: SparkSession, root: String,
+      slices: Seq[DataFrame]): (String, StructType) =
+    Shared.slicedBacklog(s, root, slices)
 
-    // ---- reference-parity operators (SURVEY.md §2) ----
+  private[graft] def parityBacklog(s: SparkSession, root: String,
+      df: DataFrame): (String, StructType) =
+    Shared.parityBacklog(s, root, df)
 
-    // S5/S6/P14: column-pruned, date-filtered scan
-    "q01_pruned_scan" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .where(to_date(col("l_shipdate"))
-          .between(lit("1996-03-01").cast(DateType), lit("1996-06-30").cast(DateType)))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          to_date(col("l_shipdate")).as("ship_date"))
-        .orderBy("l_orderkey", "l_linenumber")),
+  private[graft] def idRangeBacklog(s: SparkSession, root: String,
+      df: DataFrame, nFiles: Int = 2): (String, StructType) =
+    Shared.idRangeBacklog(s, root, df, nFiles)
 
-    // P1/P2/P3: projection + rename
-    "q02_project_rename" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .withColumnsRenamed(Map(
-          "c_custkey" -> "custkey", "c_name" -> "name",
-          "c_mktsegment" -> "segment"))
-        .select("custkey", "name", "segment")
-        .orderBy("custkey")),
+  private[graft] def multimodalDocs(docs: DataFrame): DataFrame =
+    MultimodalQueries.multimodalDocs(docs)
 
-    // P4: literal translate; string normalization
-    "q03_string_clean" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          translate(col("p_name"), " ", "-").as("name_slug"),
-          regexp_replace(col("p_brand"), "#", "").as("brand_clean"),
-          lower(col("p_type")).as("type_lower"))
-        .orderBy("p_partkey")),
-
-    // P5: whole-value remap (when/otherwise chain, NOT substring replace)
-    "q04_value_remap" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .select(col("o_orderkey"),
-          when(col("o_orderstatus") === "O", "OPEN")
-            .when(col("o_orderstatus") === "F", "FINISHED")
-            .when(col("o_orderstatus") === "P", "PARTIAL")
-            .otherwise(col("o_orderstatus")).as("status"))
-        .groupBy("status").agg(count(lit(1)).as("n"))
-        .orderBy("status")),
-
-    // P6/P7/P8/P10: null fill + casts
-    "q05_null_fill_cast" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(col("event_id"),
-          to_date(col("ts")).as("event_date"),
-          col("user_id").cast(IntegerType).as("user_id_int"),
-          coalesce(
-            when(col("event_type") === "error", lit(null)).otherwise(col("value")),
-            lit(0.0)).as("value_filled"))
-        .orderBy("event_id")),
-
-    // P11/P12: conditional decimal rounding
-    "q06_round_conditional" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          when(col("l_returnflag") === "A",
-            round((col("l_extendedprice") / 8).cast(DecimalType(38, 9)), 1))
-            .otherwise(
-              round((col("l_extendedprice") / 8).cast(DecimalType(38, 9)), 3))
-            .cast(DoubleType).as("price_rounded"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    // R1: wide→long unpivot via stack()
-    "q07_unpivot" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          expr("stack(4, 'quantity', l_quantity, 'extendedprice', " +
-            "l_extendedprice, 'discount', l_discount, 'tax', l_tax) " +
-            "as (measure, val)"))
-        .orderBy("l_orderkey", "l_linenumber", "measure")),
-
-    // R2/J1: unionByName with missing columns
-    "q08_union_by_name" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val a = c.where(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"), col("c_mktsegment").as("segment"),
-          lit(true).as("is_building"))
-      val b = c.where(col("c_mktsegment") =!= "BUILDING")
-        .select(col("c_custkey"), col("c_mktsegment").as("segment"))
-      a.unionByName(b, allowMissingColumns = true).orderBy("c_custkey")
-    }),
-
-    // long→wide pivot (inverse of the R1 unpivot), explicit value list
-    "q60_pivot" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .pivot("l_linestatus", Seq("F", "O"))
-        .agg(sum(col("l_quantity").cast(DecimalType(18, 2)))
-          .cast(DoubleType))
-        .withColumnsRenamed(Map("F" -> "qty_f", "O" -> "qty_o"))
-        .orderBy("l_returnflag")),
-
-    // calendar spine: per-day event counts INCLUDING zero-event days.
-    // Aggregate the fact FIRST, then left-join the tiny daily aggregate to
-    // the sequence-generated spine — the raw events never pass through the
-    // join, so the join inputs are O(days) regardless of fact size
-    "q61_date_spine" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .select(to_date(col("ts")).as("d"))
-        .groupBy("d").agg(count(lit(1)).as("cnt"))
-      val bounds = daily.agg(min("d").as("lo"), max("d").as("hi"))
-      val spine = bounds.select(
-        explode(sequence(col("lo"), col("hi"))).as("d"))
-      spine.join(daily, Seq("d"), "left")
-        .select(col("d"), coalesce(col("cnt"), lit(0L)).as("n_events"))
-        .orderBy("d")
-    }),
-
-    // A1/A2: distinct
-    "q09_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select("l_returnflag", "l_linestatus").distinct()
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // A3: per-column null/non-null counts (one aggregate pass)
-    "q10_null_counts" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("text")).as("n_text"),
-          count(col("lang")).as("n_lang"),
-          count(col("source")).as("n_source"))),
-
-    // A4/Q2: uniqueness violation check
-    "q11_unique_check" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))
-        .where(col("n_orders") > 1)
-        .orderBy("o_custkey")),
-
-    // W1/J2/A5: PK merge (upsert) — anti-join + union form
-    "q12_upsert_merge" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val target = o.where(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus").as("status"),
-          col("o_totalprice").as("totalprice"))
-      val updates = o.where(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), lit("U").as("status"),
-          (col("o_totalprice") / 2).as("totalprice"))
-      UpsertWriter.mergePlan(target, updates, Seq("o_orderkey"))
-        .orderBy("o_orderkey")
-    }),
-
-    // F1: the exact ffill_candles window semantics (no ignore-nulls!)
-    "q13_ffill_candles" -> ((s, dir) =>
-      Models.ffillCandles(priceHistory(s, dir, fx = false), "symbol")
-        .orderBy("symbol", "date_stamp")),
-
-    // incremental ffill: seed-row windowing for dates >= cutoff; oracle
-    // computes the FULL window then filters — results must be identical
-    "q58_ffill_incremental" -> ((s, dir) =>
-      Models.ffillCandlesIncremental(priceHistory(s, dir, fx = false),
-          "symbol", java.sql.Date.valueOf("2024-01-15"))
-        .orderBy("symbol", "date_stamp")),
-
-    // full stg_stock_prices model: decimal cast + round(2) + ffill
-    "q14_stg_stock_prices" -> ((s, dir) =>
-      Models.stgStockPrices(priceHistory(s, dir, fx = false))
-        .orderBy("symbol", "date_stamp")),
-
-    // full stg_fx_prices model: conditional precision (USDJPY 3dp / else 5dp)
-    "q15_stg_fx_prices" -> ((s, dir) =>
-      Models.stgFxPrices(priceHistory(s, dir, fx = true))
-        .orderBy("symbol", "date_stamp")),
-
-    // J1/P9: dim_symbols UNION ALL with typed null/literal attributes
-    "q16_dim_symbols_union" -> ((s, dir) => {
-      val fxSyms = Models.stgFxSymbols(
-        t(s, dir, "events").select(col("event_type").as("symbol")))
-      val stock = Models.stgStockSymbols(
-        t(s, dir, "nation").select(
-          col("n_name").as("symbol"),
-          lower(col("n_name")).as("name"),
-          concat(lit("R"), col("n_regionkey").cast(StringType)).as("sector"),
-          lit("Missing").as("industry"),
-          (col("n_regionkey") === 0).as("in_sp400"),
-          (col("n_regionkey") === 1).as("in_sp500"),
-          (col("n_regionkey") === 2).as("in_sp600"),
-          lit("2024-01-01").cast(DateType).as("date_stamp")))
-      Models.dimSymbols(fxSyms, stock).orderBy("symbol")
-    }),
-
-    // J3/Q4: referential-integrity anti-join (orphan keys)
-    "q17_referential_orphans" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").select(col("o_custkey").as("c_custkey")).distinct(),
-          Seq("c_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")),
-
-    // hash aggregate with decimal-exact sums (TPC-H Q1 shape)
-    "q18_groupby_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("sum_qty"),
-          sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("sum_base"),
-          (sum(col("l_discount").cast(DecimalType(18, 2))).cast(DoubleType)
-            / count(lit(1))).as("avg_disc"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // multi-way join: broadcast dims, shuffle-free fact aggregation shape
-    "q19_join_agg" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = broadcast(t(s, dir, "customer"))
-      val n = broadcast(t(s, dir, "nation"))
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(n, c("c_nationkey") === n("n_nationkey"))
-        .groupBy("n_name")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("revenue"))
-        .orderBy("n_name")
-    }),
-
-    // sort + limit (top-k) with deterministic tie-break
-    "q20_topk" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(col("revenue").desc, col("o_custkey").asc)
-        .limit(10)),
-
-    // window functions: row_number / lag / frame-bounded running agg
-    "q21_window_funcs" -> ((s, dir) => {
-      val seqW = Window.partitionBy("user_id").orderBy("event_id")
-      val frame = seqW.rowsBetween(-2, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"),
-          row_number().over(Window.partitionBy("user_id")
-            .orderBy(col("value").desc, col("event_id").asc)).as("value_rank"),
-          lag(col("value"), 1).over(seqW).as("prev_value"),
-          (sum(col("value").cast(DecimalType(18, 2))).over(frame)
-            .cast(DoubleType) / count(lit(1)).over(frame)).as("mov_avg3"))
-        .orderBy("event_id")
-    }),
-
-    // gap sessionization (lag + running conditional sum)
-    "q22_sessionize" -> ((s, dir) =>
-      Temporal.sessionize(t(s, dir, "events"), Seq("user_id"), "ts", 1800L)
-        .groupBy("user_id")
-        .agg((max("session_id") + 1).as("n_sessions"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id")),
-
-    // native session_window aggregation (gap-merged sessions per key)
-    "q59_session_window" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_timestamp(col("session_window.start")).as("sess_start"),
-          col("user_id"), col("n_events"))
-        .orderBy("user_id", "sess_start")),
-
-    // as-of join via union + last(ignoreNulls) window (one shuffle, no range join)
-    "q23_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-      Temporal.asOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-          Seq("click_id"))
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("click_id"))
-        .orderBy("purchase_id")
-    }),
-
-    // Q1–Q4: declarative data-quality suite (dbt-test parity)
-    "q24_dq_suite" -> ((s, dir) => {
-      val nation = t(s, dir, "nation")
-      val region = t(s, dir, "region")
-      val events = t(s, dir, "events")
-      def labeled(name: String, df: DataFrame): DataFrame =
-        df.agg(count(lit(1)).as("violations"))
-          .select(lit(name).as("check_name"), col("violations"))
-      labeled("accepted_values_event_type",
-          events.where(!col("event_type").isin(
-            "click", "view", "purchase", "signup", "error")
-            || col("event_type").isNull))
-        .unionByName(labeled("not_null_n_name", nation.where(col("n_name").isNull)))
-        .unionByName(labeled("relationships_nation_region",
-          nation.join(broadcast(region.select(col("r_regionkey").as("n_regionkey"))),
-            Seq("n_regionkey"), "left_anti")))
-        .unionByName(labeled("unique_n_nationkey",
-          nation.groupBy("n_nationkey").agg(count(lit(1)).as("c"))
-            .where(col("c") > 1)))
-        .orderBy("check_name")
-    }),
-
-    // Q5: declared-schema validation with coercion (pandera parity)
-    "q25_schema_validate" -> ((s, dir) => {
-      val expected = StructType(Seq(
-        StructField("l_orderkey", LongType, nullable = false),
-        StructField("l_linenumber", LongType, nullable = false), // int → long coerce
-        StructField("l_quantity", DoubleType, nullable = true),
-        StructField("l_returnflag", StringType, nullable = false)))
-      Validator.validateOrThrow(
-          t(s, dir, "lineitem")
-            .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"),
-          expected)
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // R1/P16/P5/S8: the FULL wide→long price transform pipeline — validate
-    // (regex columns), drop all-null ticker columns, stack() unpivot keeping
-    // all-null rows, FX suffix strip + whole-value remap
-    "q26_price_transform" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val wide = ev.groupBy(to_date(col("ts")).cast(TimestampType).as("Date"))
-        .agg(
-          min(when(col("event_type") === "click", col("value"))).as("Open_AAA"),
-          max(when(col("event_type") === "click", col("value"))).as("High_AAA"),
-          min(when(col("event_type") === "view", col("value"))).as("Low_AAA"),
-          max(when(col("event_type") === "view", col("value"))).as("Close_AAA"),
-          count(when(col("event_type") === "click", lit(1))).as("Volume_AAA"),
-          min(when(col("event_type") === "purchase", col("value"))).as("Open_CHF=X"),
-          max(when(col("event_type") === "purchase", col("value"))).as("High_CHF=X"),
-          min(when(col("event_type") === "signup", col("value"))).as("Low_CHF=X"),
-          max(when(col("event_type") === "signup", col("value"))).as("Close_CHF=X"),
-          count(when(col("event_type") === "purchase", lit(1))).as("Volume_CHF=X"),
-          max(lit(null).cast(DoubleType)).as("Open_DEAD"),
-          max(lit(null).cast(DoubleType)).as("High_DEAD"),
-          max(lit(null).cast(DoubleType)).as("Low_DEAD"),
-          max(lit(null).cast(DoubleType)).as("Close_DEAD"),
-          max(lit(null).cast(LongType)).as("Volume_DEAD"))
-      graft.transform.PriceTransforms.transformPrices(wide, "fx")
-        .orderBy("symbol", "date_stamp")
-    }),
-
-    // P1–P8: the stock-symbol transform — validate, rename map, literal
-    // '.'→'-' fix, null fills, bool casts, date stamp, 8-col projection
-    "q27_symbol_transform" -> ((s, dir) => {
-      val raw = t(s, dir, "nation").select(
-        concat(col("n_name"), lit(".X")).as("Symbol"),
-        lower(col("n_name")).as("Security"),
-        when(col("n_regionkey") === 0, lit(null).cast(StringType))
-          .otherwise(concat(lit("S"), col("n_regionkey").cast(StringType)))
-          .as("GICS Sector"),
-        lit(null).cast(StringType).as("GICS Sub-Industry"),
-        (col("n_regionkey") === 0).as("in_sp400"),
-        lit(null).cast(BooleanType).as("in_sp500"),
-        (col("n_regionkey") === 2).as("in_sp600"))
-      graft.transform.SymbolTransforms
-        .transformStockSymbols(raw, java.sql.Date.valueOf("2024-06-01"))
-        .orderBy("symbol")
-    }),
-
-    // P17: deterministic hash-based sampling (portable md5 — the
-    // distributed-safe replacement for pandas .sample(n))
-    "q28_hash_sample" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .where(TextFunctions.portableHash(col("c_name")) % 20 === 0)
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")),
-
-    // W2: replace (full-overwrite) write semantics — second replace wins
-    "q29_replace_write" -> ((s, dir) => {
-      val out = scratch("graft_replace_") + "/tbl"
-      UpsertWriter.replace(
-        t(s, dir, "nation").select(col("n_nationkey").as("key"),
-          col("n_name").as("name")), out)
-      UpsertWriter.replace(
-        t(s, dir, "region").select(col("r_regionkey").as("key"),
-          col("r_name").as("name")), out)
-      s.read.parquet(out).orderBy("key")
-    }),
-
-    // ---- large-scale pipeline extensions (driver-mandated) ----
-
-    // exact dedup: hash-groupBy on normalized content
-    "q30_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents")).orderBy("chash")),
-
-    // minhash signatures (8 lanes, 3-word shingles)
-    "q31_minhash_signatures" -> ((s, dir) =>
-      Dedup.minhashSignature(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // minhash LSH candidate pairs (4 bands × 2 rows)
-    "q32_minhash_lsh_pairs" -> ((s, dir) =>
-      Dedup.minhashLshPairs(t(s, dir, "documents")).orderBy("id_a", "id_b")),
-
-    // 16-bit simhash signatures
-    "q33_simhash" -> ((s, dir) =>
-      Dedup.simhash(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // exact n-gram Jaccard near-dup pairs (inverted-index self-join)
-    "q34_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.3)
-        .orderBy("id_a", "id_b")),
-
-    // language-ID by marker-word voting (n-gram heuristic shape)
-    "q35_lang_id" -> ((s, dir) => {
-      val txt = col("text")
-      val hits = Map(
-        "de" -> TextFunctions.langHits(txt, Seq("fast", "slow")),
-        "en" -> TextFunctions.langHits(txt, Seq("the", "a")),
-        "es" -> TextFunctions.langHits(txt, Seq("big", "small")),
-        "fr" -> TextFunctions.langHits(txt, Seq("key", "order")),
-        "zh" -> TextFunctions.langHits(txt, Seq("scan", "merge")))
-      val top = greatest(hits.values.toSeq: _*)
-      val pred = Seq("de", "en", "es", "fr", "zh").foldRight(lit("und")) {
-        (l, acc) => when(hits(l) === top && top > 0, lit(l)).otherwise(acc)
-      }
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang").as("labeled_lang"), pred.as("pred_lang"))
-        .orderBy("doc_id")
-    }),
-
-    // quality scoring: token/char/stopword stats, all single-pass exprs
-    "q36_text_quality" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.nTokens(txt).as("n_tokens"),
-          TextFunctions.subTokenCount(txt).as("n_subtokens"),
-          TextFunctions.meanTokenLen(txt).as("mean_token_len"),
-          TextFunctions.stopwordRatio(txt, Seq("the", "a")).as("stopword_ratio"))
-        .orderBy("doc_id")
-    }),
-
-    // winnowing-style fingerprint: k-min shingle hashes (order-independent)
-    "q37_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          concat_ws("-", TextFunctions.fingerprint(col("text"))).as("fingerprint"))
-        .orderBy("doc_id")),
-
-    // feature-hashing embeddings (the hashing trick): signed token-count
-    // histograms, INTEGER-EXACT so the DuckDB twin reproduces every value
-    // — the model-free featurizer closing text → vector → ANN. Exploded
-    // to scalar rows for the value-hash compare
-    "q119_hash_embed" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          posexplode(TextFunctions.hashEmbed(col("text"), 64))
-            .as(Seq("pos", "v")))
-        .orderBy("doc_id", "pos")),
-
-    // the CLOSED text→ANN pipeline: raw documents → feature-hashed
-    // vectors → IVFADC index → cell-pruned search + exact rerank, no
-    // external model anywhere. The oracle rebuilds the SAME vectors from
-    // the same portable hash and brute-forces them; recall gated
-    // in-query as in every approximate path. Zero-norm vectors (empty /
-    // whitespace-only text) have undefined cosine and rank on NEITHER
-    // side: Spark's null-sim rows never enter the top-k heap, and the
-    // twin filters list_dot_product(ev, ev) > 0 to match
-    "q120_text_ann_pipeline" -> ((s, dir) => {
-      val base = q120Fixture(s, dir)
-      val emb = textEmb(s, dir)
-      val probes = emb.where(col("vec_id") < 25)
-      val cents = s.read.parquet(s"$base/cents")
-      val cb = s.read.parquet(s"$base/cb")
-      val ann = Similarity.ivfAdcTopKRerank(s, s"$base/idx", cb, cents,
-        emb, probes, k = 5, nprobe = 6, shortlist = 100)
-      val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      val nHits = ann.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).select(
-        col("n_exact"),
-        (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"))
-    }),
-
-    // CCNet-style LM familiarity (Wenzek et al., LREC'20): score every
-    // document against a bigram model trained on a reference slice of
-    // the corpus (doc_id % 3 == 0). All quantities integer — gram
-    // totals, known-gram counts, reference-count mass — so the gate is
-    // decimal-exact; log-space perplexity is a float epilogue the
-    // caller applies to the same joined counts
-    "q121_lm_familiarity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val model = Retrieval.ngramModel(
-        docs.where(col("doc_id") % 3 === 0), "text")
-      Retrieval.familiarityGate(docs, model, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // deterministic global shuffle + shard assignment: the
-    // training-order export stage — reproducible hash sort key, hash
-    // shard, and the within-shard ordinal computed by the packSequences
-    // prefix sum (no shard-sized window task). Stats-only consumer, so
-    // the input pre-projects to the id
-    "q122_shuffle_shard" -> ((s, dir) =>
-      graft.operators.Corpus.shuffleShard(
-          t(s, dir, "documents").select("doc_id"), "doc_id",
-          nShards = 4, seed = "s42")
-        .select(col("doc_id"), col("shard"), col("sort_key"), col("pos"))
-        .orderBy("doc_id")),
-
-    // packing materialized end to end: the same pack arithmetic as q68,
-    // then each pack's documents concatenate in id order into one
-    // training sequence — the materializing-consumer path SCALE.md
-    // describes, with per-pack state bounded by the token budget
-    "q123_pack_materialize" -> ((s, dir) => {
-      val packed = graft.operators.Corpus.packSequences(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          col("text"),
-          TextFunctions.nTokens(col("text")).cast("long").as("__n_tokens")),
-        "lang", "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializePacks(packed, "lang", "doc_id",
-          "text")
-        .orderBy("lang", "pack_id")
-    }),
-
-    // DSIR-shape importance gate (Xie et al., NeurIPS'23): keep documents
-    // whose bigram mass is at least as target-like (lang='en' reference)
-    // as raw-like (even-doc_id corpus slice) — the cross-multiplied
-    // integer form of the importance-ratio test, decimal(38,0) products
-    // so the gate survives corpus-scale totals; the float log-ratio is a
-    // caller epilogue over the same joined counts
-    "q124_importance_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Retrieval.importanceGate(docs,
-          target = docs.where(col("lang") === "en"),
-          raw = docs.where(col("doc_id") % 2 === 0),
-          "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Gopher repetition filters (Rae et al. 2021 §A1.1): duplicate-line
-    // share, duplicate-line char mass, and top-bigram char mass, each
-    // thresholded as a cross-multiplied integer fraction (≤30% dup
-    // lines, ≤20% dup-line chars, ≤20% top-2-gram chars). The stats are
-    // ONE fused codegen pass per row — no explode, no shuffle
-    "q125_repetition_filter" -> ((s, dir) => {
-      val zeros = array(Seq.fill(6)(lit(0L)): _*)
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          coalesce(TextFunctions.repetitionStats(col("text")), zeros)
-            .as("st"),
-          coalesce(length(col("text")).cast("long"), lit(0L))
-            .as("n_chars"))
-        .select(col("doc_id"),
-          col("st")(0).as("n_lines"), col("st")(1).as("dup_lines"),
-          col("st")(2).as("line_chars"),
-          col("st")(3).as("dup_line_chars"),
-          col("st")(4).as("top2_cnt"), col("st")(5).as("top2_chars"),
-          col("n_chars"))
-        .withColumn("keep",
-          col("dup_lines") * 10 <= col("n_lines") * 3 &&
-          col("dup_line_chars") * 5 <= col("line_chars") &&
-          col("top2_chars") * 5 <= col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // PII scrub: sequential email→IP→phone redaction with stage-local
-    // counts — pure narrow codegen'd regex map (operators.Scrub). The
-    // synthetic corpus carries no PII, so deterministic PII is APPENDED
-    // in-query (both engines build the identical string) to make the
-    // oracle discriminate: email on doc_id%3=0, IPv4 on %4=0, phone on
-    // %5=0 — 60 distinct presence/absence combinations per 60 ids
-    "q126_pii_scrub" -> ((s, dir) => {
-      val pii = t(s, dir, "documents")
-        .withColumn("text", concat(col("text"),
-          when(pmod(col("doc_id"), lit(3)) === 0,
-            concat(lit(" contact user"), col("doc_id").cast(StringType),
-              lit("@mail.example.com"))).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(4)) === 0,
-            concat(lit(" at 10."),
-              pmod(col("doc_id"), lit(200)).cast(StringType),
-              lit(".0.1"))).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(5)) === 0,
-            concat(lit(" call +1 555-01"),
-              lpad(pmod(col("doc_id"), lit(100)).cast(StringType), 2, "0")))
-            .otherwise(lit(""))))
-      graft.operators.Scrub.redactPii(pii)
-        .select(col("doc_id"), col("n_email"), col("n_ip"), col("n_phone"),
-          md5(col("redacted")).as("redacted_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // budget-bounded corpus selection: best docs by score until the token
-    // budget fills — distributed prefix sum over a (score desc, id) range
-    // partitioning, NO global-sort window (operators.Corpus). Pre-projects
-    // to the three consumed columns: the RDD boundary blocks Catalyst
-    // pruning, so the caller prunes (documented on packSequences too)
-    "q127_budget_select" -> ((s, dir) =>
-      graft.operators.Corpus.selectToTokenBudget(
-          t(s, dir, "documents").select(
-            col("doc_id"), col("n_chars"),
-            size(TextFunctions.tokens(col("text"))).cast(LongType)
-              .as("nt")),
-          col("n_chars").cast(DoubleType), "doc_id", col("nt"),
-          tokenBudget = 9000L)
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
-        .orderBy("doc_id")),
-
-    // incremental near-dup dedup index: even-id docs arrive first, odd-id
-    // docs second; each batch rejects against the accepted-doc index
-    // (band-key candidates + exact jaccard verify) then against itself
-    // (smaller-id witness), survivors fold into the index. The oracle
-    // replays the identical two-batch policy in SQL
-    "q128_dedup_index" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val none = docs.limit(0)
-      val b1 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-      val b2 = docs.where(pmod(col("doc_id"), lit(2)) === 1)
-      val (a1r, idx1r) = graft.operators.Dedup.dedupIndexAddBatch(
-        graft.operators.Dedup.dedupIndexKeys(none), b1)
-      // materialize the state between batches — exactly what a real
-      // deployment does (the operator persists the index, whose hashes
-      // column carries the witness sets; accepted TEXT is never re-read);
-      // without it batch 2's lineage recomputes batch 1's whole dedup
-      val (a1, idx1) = (a1r.localCheckpoint(), idx1r.localCheckpoint())
-      val (a2, _) = graft.operators.Dedup.dedupIndexAddBatch(idx1, b2)
-      a1.select(col("doc_id"), lit(1L).as("batch"))
-        .unionByName(a2.select(col("doc_id"), lit(2L).as("batch")))
-        .orderBy("doc_id")
-    }),
-
-    // streaming near-dup dedup: the q128 policy applied per micro-batch
-    // (even-id file then odd-id file, mtime-pinned arrival order) with
-    // marker-committed versioned state — backlog replay == batch result
-    "q129_stream_dedup_index" -> ((s, dir) => {
-      val root = scratch("graft_sdidx_")
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      // even ids arrive as batch 1, odd as batch 2 (parityBacklog's
-      // slice order; arrival order pinned by mtime AND name) — the
-      // shared writer replaces the hand-rolled even/odd fixture this
-      // query carried, byte-identical backlog, concurrent slice writes
-      val (src, schema) = parityBacklog(s, root, docs)
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingDedupIndex.runAvailableNow(
-          s, src, schema, s"$root/state", s"$root/ckpt")
-      }
-      val (accepted, _, _) =
-        graft.streaming.StreamingDedupIndex.readState(s, s"$root/state")
-      accepted.select(col("doc_id"), col("batch")).orderBy("doc_id")
-    }),
-
-    // model-based quality filter, trained AND applied in-pipeline: the
-    // 80% train split (doc_id%5≠0) labels en-vs-rest, one aggregate
-    // builds the class-centroid model, a 1-row broadcast scores every
-    // doc with an integer-exact cross-multiplied margin
-    "q130_quality_classifier" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-      val seed = docs.where(pmod(col("doc_id"), lit(5)) =!= 0)
-      val model = graft.operators.Classify.centroidModel(
-        seed, col("lang") === "en")
-      graft.operators.Classify.scoreByModel(docs, model)
-        .select(col("doc_id"), col("margin").cast(LongType).as("margin"),
-          col("quality_pred"))
-        .orderBy("doc_id")
-    }),
-
-    // sign-foldable classifier refresh: the q130 model follows a change
-    // feed (delete seed docs with id%7=0, insert id%5=0∧id%3=0) with
-    // delta-sized work; emitted model == a rebuild over the final seed
-    // membership, checked value-for-value by the oracle
-    "q131_classifier_feed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-      val lab = col("lang") === "en"
-      val seed0 = docs.where(pmod(col("doc_id"), lit(5)) =!= 0)
-      val model0 = graft.operators.Classify.centroidModel(seed0, lab)
-      val feed = seed0.where(pmod(col("doc_id"), lit(7)) === 0)
-          .withColumn("__sign", lit(-1L))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(5)) === 0 &&
-            pmod(col("doc_id"), lit(3)) === 0)
-          .withColumn("__sign", lit(1L)))
-      graft.operators.Classify.applyFeedCentroidModel(model0, feed, lab)
-        .select(posexplode(col("pos_sum")).as(Seq("pos", "wpos")),
-          col("neg_sum"), col("n_pos"), col("n_neg"))
-        .select(col("pos"), col("wpos"),
-          col("neg_sum").getItem(col("pos")).as("wneg"),
-          col("n_pos"), col("n_neg"))
-        .orderBy("pos")
-    }),
-
-    // epoch-repetition mixing (data-constrained training): equal
-    // per-domain token targets, scarce domains repeat up to 4 epochs,
-    // abundant ones subsample into epoch 0 — capped-uniform integer
-    // allocation + hash-thresholded partial epochs, no RNG
-    "q132_epoch_mix" -> ((s, dir) =>
-      graft.operators.Corpus.allocateEpochs(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"),
-            size(TextFunctions.tokens(col("text"))).cast(LongType)
-              .as("nt")),
-          "lang", "doc_id", col("nt"), tokenBudget = 40000L, maxEpochs = 4)
-        .select(col("doc_id"), col("lang"), col("epoch"))
-        .orderBy("doc_id", "epoch")),
-
-    // the round-9 curation pipeline end-to-end: train the quality
-    // classifier on the 80% split, keep positively-classified docs,
-    // budget-select the best margins, epoch-mix the survivors — four
-    // operators composed, one oracle replaying the whole chain
-    "q133_curation_pipeline" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-      val seed = docs.where(pmod(col("doc_id"), lit(5)) =!= 0)
-      val model = graft.operators.Classify.centroidModel(
-        seed, col("lang") === "en")
-      val scored = graft.operators.Classify.scoreByModel(docs, model)
-        .where(col("quality_pred"))
-        .select(col("doc_id"), col("lang"),
-          // the integer margin IS the score; double cast is exact far
-          // beyond any realistic magnitude here
-          col("margin").cast(DoubleType).as("score"),
-          size(TextFunctions.tokens(col("text"))).cast(LongType).as("nt"))
-      val selected = graft.operators.Corpus.selectToTokenBudget(
-        scored, col("score"), "doc_id", col("nt"), tokenBudget = 6000L)
-      graft.operators.Corpus.allocateEpochs(
-          selected.select("doc_id", "lang", "nt"),
-          "lang", "doc_id", col("nt"), tokenBudget = 8000L, maxEpochs = 3)
-        .select(col("doc_id"), col("lang"), col("epoch"))
-        .orderBy("doc_id", "epoch")
-    }),
-
-    // Unicode NFC canonicalization (codegen'd kernel vs DuckDB's
-    // nfc_normalize): the ASCII corpus is salted in-query with a
-    // decomposed accent sequence on even ids so the normalization
-    // actually rewrites — lengths shrink, md5s match cross-engine.
-    // (Both engines count BMP chars identically here; the corpus plus
-    // the salt stay inside the BMP by construction.)
-    "q134_nfc_normalize" -> ((s, dir) => {
-      val decomposed = "Cafe\u0301 :: " // 'e' + U+0301 combining acute
-      val doc = t(s, dir, "documents")
-        .withColumn("raw", when(pmod(col("doc_id"), lit(2)) === 0,
-          concat(lit(decomposed), col("text"))).otherwise(col("text")))
-      val norm = TextFunctions.nfcNormalize(col("raw"))
-      doc.select(col("doc_id"),
-          length(col("raw")).cast(LongType).as("len_raw"),
-          length(norm).cast(LongType).as("len_nfc"),
-          md5(norm).as("nfc_md5"),
-          (norm =!= col("raw")).as("changed"))
-        .orderBy("doc_id")
-    }),
-
-    // streaming curation as a PURE streaming query: PII-salted docs
-    // stream through the codegen'd scrub map and a stream-static
-    // broadcast join with the 1-row classifier model — no foreachBatch,
-    // no state store; append sink == batch result by construction,
-    // value-checked by the oracle (q126's salt + q130's model, scored
-    // on the SCRUBBED text)
-    "q135_stream_curate" -> ((s, dir) => {
-      val root = scratch("graft_scur_")
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-      // model trained batch-side on the raw 80% seed (the static side)
-      val model = graft.operators.Classify.centroidModel(
-        docs.where(pmod(col("doc_id"), lit(5)) =!= 0),
-        col("lang") === "en").localCheckpoint()
-      // source backlog: q126's deterministic PII salt, two files
-      val salted = docs.withColumn("text", concat(col("text"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit(" contact user"), col("doc_id").cast(StringType),
-            lit("@mail.example.com"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(4)) === 0,
-          concat(lit(" at 10."),
-            pmod(col("doc_id"), lit(200)).cast(StringType),
-            lit(".0.1"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(5)) === 0,
-          concat(lit(" call +1 555-01"),
-            lpad(pmod(col("doc_id"), lit(100)).cast(StringType), 2, "0")))
-          .otherwise(lit(""))))
-        .select("doc_id", "text")
-      val src = java.nio.file.Paths.get(s"$root/src")
-      java.nio.file.Files.createDirectories(src)
-      salted.where(pmod(col("doc_id"), lit(2)) === 0).coalesce(1)
-        .write.parquet(s"$root/b1")
-      salted.where(pmod(col("doc_id"), lit(2)) === 1).coalesce(1)
-        .write.parquet(s"$root/b2")
-      def firstPart(d: String): java.nio.file.Path = {
-        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(d))
-        try ls.filter(p => p.getFileName.toString.startsWith("part-") &&
-            p.toString.endsWith(".parquet")).findFirst.get
-        finally ls.close()
-      }
-      java.nio.file.Files.copy(firstPart(s"$root/b1"),
-        src.resolve("a_even.parquet"))
-      java.nio.file.Files.copy(firstPart(s"$root/b2"),
-        src.resolve("b_odd.parquet"))
-      val schema = s.read.parquet(s"$root/b1").schema
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingCurate.runAvailableNow(
-          s, src.toString, schema, model, s"$root/out", s"$root/ckpt")
-      }
-      s.read.parquet(s"$root/out").orderBy("doc_id")
-    }),
-
-    // the FULL streaming corpus pipeline, stateless + stateful stages
-    // composed: per micro-batch, scrub → classifier gate (the q135
-    // stages, via the runner's prepare hook) feed the incremental
-    // near-dup dedup index (the q129 state machinery) — what is banded,
-    // verified, and persisted is the curated text the trainer will see,
-    // and a gate-dropped doc is never judged nor a witness. One oracle
-    // replays scrub + model + gate + the two-batch dedup policy
-    "q140_stream_curate_dedup" -> ((s, dir) => {
-      val (accepted, model) = streamCurateDedupAccepted(s, dir)
-      // margin re-derived by scoring the persisted curated text with the
-      // same model — deterministic, equals the gate-time margin
-      graft.operators.Classify.scoreByModel(accepted, model, "text")
-        .select(col("doc_id"), col("batch"),
-          md5(col("text")).as("redacted_md5"),
-          col("margin").cast(LongType).as("margin"))
-        .orderBy("doc_id")
-    }),
-
-    // the full training-data pipeline, end to end under ONE oracle:
-    // q140's streamed curation→dedup front half (scrub + broadcast
-    // model gate composed in front of the stateful hash-set index),
-    // then the tokenizer × packing back half over the ACCEPTED curated
-    // corpus — piece vocab learned on the survivors, count-only BPE
-    // kernel for real token counts, range-shuffle prefix-sum packing,
-    // pack materialization. No new shuffle beyond the components'
-    // pinned shapes (q135 + q129 + q137 + q139/q123).
-    "q141_corpus_to_packs" -> ((s, dir) => {
-      val (accepted, _) = streamCurateDedupAccepted(s, dir)
-      val corpus = accepted.select("doc_id", "text")
-        .join(t(s, dir, "documents").select("doc_id", "lang"), Seq("doc_id"))
-      val pieces = q137Pieces(corpus)
-      val withN = corpus.select(col("doc_id"), col("lang"), col("text"),
-        graft.functions.TextFunctions.bpeCount(col("text"), pieces)
-          .cast(LongType).as("__n_tokens"))
-      val packed = graft.operators.Corpus.packSequences(withN, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializePacks(packed, "lang", "doc_id",
-          "text")
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"), md5(col("pack_text")).as("pack_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // dedup-index unlearning: erase accepted docs (id%11=0) from the
-    // index, then replay EXACTLY those docs — re-admitted only if their
-    // erased selves were their sole witnesses; prior rejections stand
-    "q136_dedup_unlearn" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val none = docs.limit(0)
-      val b1 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-      val b2 = docs.where(pmod(col("doc_id"), lit(2)) === 1)
-      val (a1r, idx1r) = graft.operators.Dedup.dedupIndexAddBatch(
-        graft.operators.Dedup.dedupIndexKeys(none), b1)
-      val (a1, idx1) = (a1r.localCheckpoint(), idx1r.localCheckpoint())
-      val (a2r, idx2r) = graft.operators.Dedup.dedupIndexAddBatch(idx1, b2)
-      val (a2, idx2) = (a2r.localCheckpoint(), idx2r.localCheckpoint())
-      val acc12 = a1.withColumn("batch", lit(1L))
-        .unionByName(a2.withColumn("batch", lit(2L)))
-      val doomed = acc12.where(pmod(col("doc_id"), lit(11)) === 0)
-        .select("doc_id")
-      val (accKept, idx3) = graft.operators.Dedup.dedupIndexRemove(
-        idx2, acc12, doomed)
-      val b3 = docs.join(doomed, Seq("doc_id")) // erased content re-arrives
-      val (a3, _) = graft.operators.Dedup.dedupIndexAddBatch(
-        idx3.localCheckpoint(), b3)
-      accKept.select(col("doc_id"), col("batch"))
-        .unionByName(a3.select(col("doc_id"), lit(3L).as("batch")))
-        .orderBy("doc_id")
-    }),
-
-    // greedy longest-match subword tokenization (WordPiece's MaxMatch
-    // rule over a BPE-ish piece vocabulary — Devlin et al. '19 §B;
-    // pieces = q86's frequent-word vocab + the corpus char alphabet as
-    // fallback): the vocab builds in-pipeline, collects driver-side as
-    // model metadata (vocab-sized, guard-checked), and applies through
-    // the codegen'd trie kernel — one narrow pass, no UDF, no shuffle
-    // beyond the vocab build. size(bpeEncode) is the REAL token count
-    // the packing/budget operators accept via their nTokens column
-    "q137_bpe_encode" -> ((s, dir) => {
-      // the synthetic corpus is whole frequent words — salt each doc
-      // with a deterministic COMPOUND (its first 16 chars, spaces
-      // removed) so the greedy matcher actually has to decompose
-      // unseen words into word-pieces, not just look up whole tokens
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      docs.select(col("doc_id"),
-          graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-            .as("__ids"))
-        .select(col("doc_id"),
-          size(col("__ids")).cast(LongType).as("n_pieces"),
-          md5(array_join(transform(col("__ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // q68's sequence packing driven by REAL subword token counts
-    // (size(bpeEncode) over the q137 piece vocab) instead of whitespace
-    // tokens — the composition the packing/budget operators advertise
-    // (`nTokensCol` is caller-supplied); same salted corpus as q137 so
-    // the piece vocab exercises compound decomposition
-    "q139_bpe_pack" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val withN = docs.select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.bpeCount(col("text"), pieces)
-          .cast(LongType).as("__n_tokens"))
-      graft.operators.Corpus.packSequences(withN, "lang", "doc_id",
-          col("__n_tokens"), tokenBudget = 2048)
-        .groupBy("lang", "pack_id")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // BPE merge LEARNING (Sennrich '16 learn_bpe, k-bounded): 16 rounds
-    // of pair-count → top-pair → greedy merge over the word-frequency
-    // dict; the twin unrolls the same 16 iterations as chained CTEs over
-    // sentinel-wrapped symbol strings (replace() is exactly the greedy
-    // left-to-right non-overlapping merge). Deterministic by the total
-    // tie-break (count DESC, lhs, rhs) on both engines.
-    "q142_bpe_learn" -> ((s, dir) =>
-      graft.operators.Corpus.learnBpeMerges(
-          t(s, dir, "documents"), "text", numMerges = 16)
-        .orderBy("merge_rank")),
-
-    // token-ID pack materialization — the trainer-facing export: the
-    // q137 subword ids pack under the q68 prefix-sum arithmetic and
-    // each pack emits its FLAT ID STREAM (docs' id arrays concatenated
-    // in id order), digested for the oracle compare. Same salted
-    // corpus as q137 so compounds decompose.
-    "q144_token_packs" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val withIds = docs.select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-            .as("__ids"))
-        .withColumn("__n_tokens", size(col("__ids")).cast(LongType))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // pack DECODE-integrity audit: every pack's id stream decodes back
-    // through the vocabulary (BpeDecodeExpr id→piece concat) and the
-    // reconstruction is judged against raw text — decode∘encode must
-    // equal the corpus text minus whitespace (word boundaries are not
-    // in the id stream), so the oracle rebuilds each pack's digest
-    // straight from regexp-stripped document text with NO tokenizer at
-    // all. A version-skewed vocab, corrupted pack, or lossy kernel
-    // surfaces as a digest mismatch (unknown ids decode to U+FFFD,
-    // never silently). The check a trainer runs before trusting packs.
-    "q152_pack_decode_audit" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val withIds = docs.select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-            .as("__ids"))
-        .withColumn("__n_tokens", size(col("__ids")).cast(LongType))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          size(col("pack_ids")).cast(LongType).as("n_ids"),
-          graft.functions.TextFunctions.bpeDecode(col("pack_ids"), pieces)
-            .as("__txt"),
-          // PER-SEGMENT audit: slice each member doc's id range out of
-          // the flat stream by its doc_offsets boundaries and decode it
-          // alone — pins that the offsets actually delineate documents
-          // (a shifted boundary changes some segment's digest even when
-          // the whole-pack digest still matches). slice/element_at ride
-          // plain attributes, so each pack id is touched once across
-          // the lambda, not once per segment
-          transform(sequence(lit(1), size(col("doc_offsets")) - 1),
-            i => md5(graft.functions.TextFunctions.bpeDecode(
-              slice(col("pack_ids"),
-                element_at(col("doc_offsets"), i) + 1,
-                element_at(col("doc_offsets"), i + 1)
-                  - element_at(col("doc_offsets"), i)),
-              pieces))).as("__segs"))
-        .select(col("lang"), col("pack_id"), col("n_docs"), col("n_ids"),
-          length(col("__txt")).cast(LongType).as("decoded_chars"),
-          md5(col("__txt")).as("decoded_md5"),
-          md5(array_join(col("__segs"), " ")).as("segs_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // STREAMING sequence packing: the batch packer's prefix sum turned
-    // into flatMapGroupsWithState state (ONE Long cursor per shard),
-    // fed by a stateless in-stream tokenize (the q137 MaxMatch count
-    // kernel as a codegen projection) over an id-RANGE-split two-file
-    // backlog (mtime-pinned arrival order, one file per micro-batch).
-    // Under an id-ordered ingest the streamed assignment must equal the
-    // batch (shard, id)-order pack arithmetic doc-for-doc — which only
-    // holds if the cursor survives the micro-batch boundary (a fresh
-    // batch-2 cursor would restart every shard's packs at 0)
-    "q153_stream_token_packs" -> ((s, dir) => {
-      val root = scratch("graft_spack_")
-      val salted = saltedDocs(s, dir) // vocab input: UNFILTERED, as q144
-      val pieces = q137Pieces(salted)
-      val (src, schema) = idRangeBacklog(s, root,
-        salted.where(col("text").isNotNull)
-          .select("doc_id", "lang", "text"))
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingPack.runAvailableNow(
-          s, src, schema, s"$root/out", s"$root/ckpt",
-          tokenBudget = 2048,
-          prepare = df => df.select(col("lang").as("shard"), col("doc_id"),
-            graft.functions.TextFunctions.bpeCount(col("text"), pieces)
-              .cast(LongType).as("n_tokens")))
-      }
-      s.read.parquet(s"$root/out")
-        .select(col("shard").as("lang"), col("doc_id"), col("n_tokens"),
-          col("pack_id"))
-        .orderBy("doc_id")
-    }),
-
-    // streaming CLOSED-pack export — q144's trainer-facing artifact
-    // produced INCREMENTALLY: the state buffers each shard's one open
-    // pack (budget-bounded ids) and emits a pack the moment a doc lands
-    // past its boundary, so a trainer consumes packs while ingest still
-    // runs. Emitted packs must be byte-identical to the batch export's
-    // (same digest, same membership); each shard's final open pack
-    // stays in state — completeness is unknowable mid-stream — so the
-    // oracle excludes exactly the per-shard max pack
-    "q155_stream_pack_export" -> ((s, dir) => {
-      val root = scratch("graft_spexp_")
-      val salted = saltedDocs(s, dir)
-      val pieces = q137Pieces(salted)
-      val (src, schema) = idRangeBacklog(s, root,
-        salted.where(col("text").isNotNull)
-          .select("doc_id", "lang", "text"))
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingPack.runMaterializeAvailableNow(
-          s, src, schema, s"$root/out", s"$root/ckpt",
-          tokenBudget = 2048,
-          // null-doc guard on the SOURCE column (pushes to the scan):
-          // a where on the computed ids column would sink below the
-          // projection and run the encode kernel twice per row
-          prepare = df => df.where(col("text").isNotNull)
-            .select(col("lang").as("shard"), col("doc_id"),
-              graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-                .as("ids")))
-      }
-      s.read.parquet(s"$root/out")
-        .select(col("shard").as("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // token-LEVEL decontamination (GPT-3 Appendix C's 13-gram rule):
-    // train/eval id streams under the q137 tokenizer, a train doc
-    // flagged per eval-overlapping 13-token window. The eval set is the
-    // canonical leak shape — benchmark prompts QUOTING web documents
-    // verbatim: each eval doc (id%50=0) carries its successor doc's
-    // full token stream as a quote (array concat == tokenizing the
-    // concatenated text, the tokenizer is word-local), so every
-    // id%50=1 train doc of >=13 tokens must flag with its full window
-    // census, on top of the corpus's natural duplicate overlap. The
-    // text-level family (q71 exact / q96 bloom / q113 near-dup) judges
-    // surface text; this judges the stream the model trains on — eval
-    // windows broadcast, corpus pass is explode → broadcast join →
-    // per-doc count, one exchange over the hit set only
-    "q154_token_decontaminate" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.decontaminateTokenNgrams(train, ev, n = 13)
-        .orderBy("doc_id")
-    }),
-
-    // q154's SCALE path (the q96↔q71 relationship at token level): a
-    // driver Bloom over the eval windows rides the typed sliding pass,
-    // so a clean doc emits zero rows and only the candidate sliver pays
-    // the exact verify join. Bloom = no false negatives, so the result
-    // EQUALS the exact operator's — the oracle is q154's twin verbatim
-    "q156_token_decontaminate_bloom" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.decontaminateTokenNgramsBloom(train, ev, n = 13)
-        .orderBy("doc_id")
-    }),
-
-    // q156's Bloom prefilter composed with q157's int64 fingerprints —
-    // the 100 TB default (zero rows for clean docs AND 8 bytes per
-    // window, no string ever materialized). Same twin as q154: the
-    // gate asserts hashed-bloom == exact string-window result
-    "q164_token_decontaminate_bloom_hashed" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.decontaminateTokenNgramsBloom(train, ev, n = 13,
-          hashWindows = true)
-        .orderBy("doc_id")
-    }),
-
-    // matched-SPAN coverage: the Llama-2/PaLM-era contamination metric
-    // — per contaminated doc, the DISTINCT token positions covered by
-    // at least one matching 13-gram (overlaps don't double-count)
-    // alongside the hit count and doc length; integer columns only.
-    // Runs the int64 fingerprint representation; the twin computes the
-    // interval union over string windows, so the gate asserts both the
-    // coverage arithmetic and the hashed path's equality
-    "q166_token_decontaminate_coverage" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.decontaminateTokenCoverage(train, ev, n = 13,
-          hashWindows = true)
-        .orderBy("doc_id")
-    }),
-
-    // the coverage AUDIT turned into the corpus GATE (the Llama-2
-    // policy): a train doc drops only when its matched-span coverage
-    // fraction exceeds 80% — integer basis points, no float in the
-    // decision — so the doc that IS a benchmark page (the planted
-    // successor quotes: covered == n_tokens) drops while a doc merely
-    // sharing phrases stays. The output is the SURVIVING corpus: the
-    // row set itself asserts both sides of the threshold
-    "q171_decontaminate_by_coverage" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.decontaminateByCoverage(train, ev, n = 13,
-          maxCoverageBp = 8000L, hashWindows = true)
-        // universe alignment with the twin, whose lenB derives from the
-        // seq CTE (docs with >=1 piece): a null-ids or zero-token doc
-        // survives the GATE (nothing to match) but has no seq row, so
-        // it stays out of the reported survivor list on both sides
-        .where(size(col("ids")) > 0)
-        .select(col("doc_id"),
-          size(col("ids")).cast(LongType).as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // the attribution report from the eval suite's side: per benchmark
-    // doc, how many distinct train docs quote it and how many window
-    // pairs match — "which benchmark is compromised", the complement of
-    // q154's "which train docs must go". Eval windows keep their doc
-    // attribution (no distinct), so pair counts mirror the twin's join
-    "q167_contamination_by_eval_doc" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.contaminationByEvalDoc(train, ev, n = 13,
-          hashWindows = true)
-        .orderBy("eval_doc_id")
-    }),
-
-    // the growing-eval-suite maintenance path: the %50==0 suite's
-    // PERSISTED hit table (memoized fixture, computed at the same
-    // hashed representation the delta runs at) merged with the NEW
-    // %50==25 benchmark's delta windows — the result must equal a full
-    // recompute against the combined suite, which is exactly what the
-    // twin computes (it never sees the old/new split); the timed
-    // region is the maintenance path alone
-    "q165_token_decontaminate_delta" -> ((s, dir) => {
-      val root = q165Fixture(s, dir)
-      def rd(p: String) = s.read.parquet(s"$root/$p")
-      graft.operators.Dedup.decontaminateTokenNgramsDelta(
-          rd("train"), rd("old_hits"), rd("ev_old"), rd("ev_new"), n = 13,
-          hashWindows = true)
-        .orderBy("doc_id")
-    }),
-
-    // q154's 100 TB REPRESENTATION: each 13-id window collapses to an
-    // int64 fingerprint inside the same typed sliding pass on BOTH
-    // sides, so 8 bytes ride the join instead of ~4·13 string bytes and
-    // no window string is ever materialized. Collisions can only
-    // over-flag (drop-list one-sidedness); the oracle is q154's twin
-    // VERBATIM, so the gate asserts hashed == string-window exactly
-    "q157_token_decontaminate_hashed" -> ((s, dir) => {
-      val (train, ev) = tokenDecontamFixture(s, dir)
-      graft.operators.Dedup.decontaminateTokenNgrams(train, ev, n = 13,
-          hashWindows = true)
-        .orderBy("doc_id")
-    }),
-
-    // the capstone arc TOKEN-DECONTAMINATED end to end: q140's streamed
-    // curate→dedup survivors, piece vocab learned on them, then the
-    // streaming closed-pack export (q155) with the GPT-3 Appendix-C
-    // 13-gram gate composed INTO the stream's stateless prepare — eval
-    // window fingerprints (benchmark-sized, driver-collected before
-    // ingest) binary-searched inside the tokenize projection, so a
-    // contaminated doc never reaches the stateful packer and the
-    // artifact a trainer consumes carries the guarantee, not just a
-    // batch audit. Eval = each accepted id%50=0 doc quoting its
-    // accepted successor verbatim (the q154 leak shape); emitted packs
-    // equal the batch arithmetic over the clean corpus, minus each
-    // shard's structurally-unemittable final open pack
-    "q158_stream_decontam_packs" -> ((s, dir) => {
-      val root = scratch("graft_sdp_")
-      val (accepted, _) = streamCurateDedupAccepted(s, dir)
-      val corpus = accepted.select("doc_id", "text")
-        .join(t(s, dir, "documents").select("doc_id", "lang"), Seq("doc_id"))
-      val pieces = q137Pieces(corpus)
-      val withIds = corpus.select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-            .as("ids")).localCheckpoint()
-      val sib = withIds.select((col("doc_id") - 1).as("doc_id"),
-        col("ids").as("sib_ids"))
-      val ev = withIds.where(col("doc_id") % 50 === 0 &&
-          size(col("ids")) > 0)
-        .join(sib, Seq("doc_id"), "left")
-        .select(col("doc_id"), concat(col("ids"),
-          coalesce(col("sib_ids"), array().cast("array<int>"))).as("ids"))
-      val evalHashes = graft.operators.Dedup.evalWindowHashSet(ev, n = 13)
-      // ONE digest projection for both branches below, so the empty
-      // branch's schema is DERIVED from ClosedPack exactly like the
-      // populated one's — a pack-schema change can never desync them
-      def packDigests(packs: DataFrame): DataFrame = packs
-        .select(col("shard").as("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-      // a curation chain that accepts nothing is a legitimate tiny-SF
-      // outcome, not a harness error: zero packs, same schema — the
-      // twin's chain yields zero rows from the same emptiness, so the
-      // gate stays green at every scale factor (idRangeBacklog's loud
-      // empty-frame require stays for the genuinely-broken-fixture
-      // case in the streaming queries whose sources can never be
-      // empty). The probe rides the localCheckpointed withIds — no
-      // join replay, one cached-partition limit(1)
-      if (withIds.where(col("doc_id") % 50 =!= 0).isEmpty) {
-        import s.implicits._
-        packDigests(s.emptyDataset[
-          graft.streaming.StreamingPack.ClosedPack].toDF())
-      } else {
-        val (src, schema) = idRangeBacklog(s, root,
-          corpus.where(col("doc_id") % 50 =!= 0)
-            .select("doc_id", "lang", "text"))
-        withShufflePartitions(s, 2) {
-          graft.streaming.StreamingPack.runMaterializeAvailableNow(
-            s, src, schema, s"$root/out", s"$root/ckpt", tokenBudget = 2048,
-            prepare = df => graft.operators.Dedup.dropContaminatedStream(
-              df.select(col("lang").as("shard"), col("doc_id"),
-                graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-                  .as("ids")),
-              evalHashes, n = 13))
-        }
-        packDigests(s.read.parquet(s"$root/out"))
-      }
-    }),
-
-    // BYTE-level (GPT-2-style) BPE: pretokens keep their whitespace,
-    // base symbols are UTF-8 BYTES (Latin-1-char carried), the base
-    // alphabet is all 256 bytes — so UNK is STRUCTURALLY impossible
-    // and decode∘encode reconstructs the EXACT original text,
-    // whitespace included (the char-level family only gives the
-    // stripped-text contract, q152). The corpus is salted with
-    // multi-byte UTF-8 — accented Latin, CJK, an arrow, Greek, and a
-    // supplementary-plane emoji (4-byte UTF-8, a surrogate pair in
-    // the JVM) — so the gate exercises every UTF-8 width. The oracle
-    // recomputes the identity from the raw text with NO tokenizer:
-    // a lossy kernel, vocab gap, or pretokenizer drift breaks the
-    // digest. n_pretoks additionally gates the whitespace-preserving
-    // pretokenizer (Java regex) against DuckDB's RE2 reading of the
-    // same pattern; n_bytes binds the decoded byte length.
-    "q159_byte_bpe_roundtrip" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-        .where(col("text").isNotNull)
-      val salted = docs.withColumn("text", concat(col("text"),
-        lit(byteBpeSalt), col("doc_id").cast(StringType)))
-      val mergeTable = graft.operators.Corpus.learnByteBpeMerges(salted,
-        "text", numMerges = 16)
-      val merges = graft.operators.Corpus.collectMerges(mergeTable)
-      val vocab = graft.operators.Corpus.byteMergeVocab(mergeTable)
-      salted.select(col("doc_id"),
-          col("text"),
-          graft.functions.TextFunctions.byteBpeEncode(col("text"), merges,
-            vocab).as("__ids"))
-        // decode ONCE into __txt (q152's pattern): the kernel walks the
-        // full id stream, and CollapseProject keeps a non-cheap
-        // expression referenced twice un-inlined
-        .select(col("doc_id"), col("text"), col("__ids"),
-          graft.functions.TextFunctions.byteBpeDecode(col("__ids"), vocab)
-            .as("__txt"))
-        .select(col("doc_id"),
-          size(regexp_extract_all(col("text"),
-            lit("\\S+\\s*|^\\s+"), lit(0))).cast(LongType).as("n_pretoks"),
-          (size(col("__ids")) <= octet_length(col("text")))
-            .as("ids_le_bytes"),
-          octet_length(col("__txt")).cast(LongType).as("n_bytes"),
-          md5(col("__txt")).as("roundtrip_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // MULTIMODAL sequence packing: a trainer's packs interleave text
-    // and image docs — text contributes tokenizer ids (the identity
-    // byte tokenizer here, ids == bytes+1, so the twin derives the id
-    // stream from hex() with NO tokenizer), an image contributes a
-    // fixed-length PLACEHOLDER span (id 0 — reserved-unreachable in
-    // the byte vocab — repeated once per ViT patch, patch count from
-    // the stored dims: floor(w/16)·floor(h/16)). The pack arithmetic,
-    // flat stream, and doc_offsets discipline are q144's verbatim
-    // (boundaries delineate segments regardless of modality); each
-    // pack additionally reports its modality mix, computed in the SAME
-    // pack shuffle. Every doc_id%3==0 doc plays an image with dims
-    // 64·(1+id%5) × 64·(1+id%4) — deterministic pure-SQL metadata, so
-    // the twin reproduces spans, offsets, digests, and mix exactly
-    "q169_multimodal_packs" -> ((s, dir) => {
-      graft.operators.Multimodal.packMultimodalSequences(
-          multimodalDocs(t(s, dir, "documents")
-            .select("doc_id", "lang", "text")),
-          "lang", "doc_id", "__ids", "modality", tokenBudget = 2048)
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"), col("n_text_docs"), col("n_image_docs"),
-          col("text_tokens"), col("image_patches"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // q169's STREAMING sibling: the mixed-modality corpus through the
-    // q155/q163 incremental closed-pack export. The modality fork is
-    // pure stateless prepare (placeholder spans from dims arithmetic
-    // vs identity-byte text ids, branched per row), so the pinned
-    // micro-batch shape is untouched — one shard exchange, one
-    // budget-bounded state op. The mix is derived FROM THE ARTIFACT
-    // ALONE: placeholder id 0 is unreachable for text (byte ids are
-    // 1..256), so image_patches = the pack's zero-id count and
-    // text_tokens = the rest — the audit a pack consumer can run with
-    // no upstream metadata. Twin = q169's arithmetic minus each
-    // shard's final open pack (structurally unemittable mid-stream)
-    "q170_stream_multimodal_packs" -> ((s, dir) => {
-      val root = scratch("graft_smm_")
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-        .where(col("doc_id") % 3 === 0 || col("text").isNotNull)
-      val (src, schema) = idRangeBacklog(s, root, docs)
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingPack.runMaterializeAvailableNow(
-          s, src, schema, s"$root/out", s"$root/ckpt", tokenBudget = 2048,
-          prepare = df => df.select(col("lang").as("shard"), col("doc_id"),
-            multimodalIds.as("ids")))
-      }
-      s.read.parquet(s"$root/out")
-        .select(col("shard").as("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          size(filter(col("pack_ids"), i => i === 0)).cast(LongType)
-            .as("image_patches"),
-          col("pack_ids"), col("doc_offsets"))
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          (col("pack_tokens") - col("image_patches")).as("text_tokens"),
-          col("image_patches"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // the q162-class per-SEGMENT audit for MIXED packs: each member's
-    // id range, sliced out by doc_offsets, must be either an
-    // all-placeholder span of exactly the metadata-derived patch count
-    // (image) or decode ALONE to exactly that member's text (text) —
-    // the check a multimodal trainer runs before trusting that
-    // attention masks cut where documents do. The segment's first id
-    // classifies it (0 is reserved: text byte ids are 1..256), so the
-    // audit needs NO modality metadata — the artifact is
-    // self-describing. A shifted boundary flips a segment digest even
-    // when whole-pack counts still match
-    "q172_multimodal_pack_segments" -> ((s, dir) => {
-      val vocab = graft.operators.Corpus.identityByteVocab
-      def seg(i: Column) = slice(col("pack_ids"),
-        element_at(col("doc_offsets"), i) + 1,
-        element_at(col("doc_offsets"), i + 1)
-          - element_at(col("doc_offsets"), i))
-      graft.operators.Multimodal.packMultimodalSequences(
-          multimodalDocs(t(s, dir, "documents")
-            .select("doc_id", "lang", "text")),
-          "lang", "doc_id", "__ids", "modality", tokenBudget = 2048)
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          transform(sequence(lit(1), size(col("doc_offsets")) - 1),
-            i => when(element_at(seg(i), 1) === 0,
-              concat(lit("i"), size(seg(i)).cast(StringType)))
-              .otherwise(md5(graft.functions.TextFunctions.byteBpeDecode(
-                seg(i), vocab)))).as("__segs"))
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          md5(array_join(col("__segs"), " ")).as("segs_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // trainer-tensor derivation: doc_offsets expand into the per-token
-    // position_ids (reset to 0 at every document boundary) and
-    // segment_ids (member index per token) a trainer's loader feeds a
-    // packed-attention model — the arithmetic is pure offset algebra
-    // over budget-bounded arrays, so the twin states both tensors
-    // exactly from the shared q144 pack chain. A zero-token member
-    // keeps its segment index in the numbering but contributes no
-    // tokens, so both tensors stay length == pack_tokens.
-    "q173_pack_trainer_tensors" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val withIds = docs.select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.bpeEncode(col("text"), pieces)
-            .as("__ids"))
-        .withColumn("__n_tokens", size(col("__ids")).cast(LongType))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      def joined(c: Column) = md5(array_join(
-        transform(c, i => i.cast(StringType)), " "))
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        // per-member lengths off the offsets: lens[i] = off[i+1] - off[i]
-        .withColumn("__lens", zip_with(
-          slice(col("doc_offsets"), lit(2), size(col("doc_offsets")) - 1),
-          slice(col("doc_offsets"), lit(1), size(col("doc_offsets")) - 1),
-          (e, b) => e - b))
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          joined(flatten(transform(col("__lens"),
-            l => when(l > 0, sequence(lit(0), l - 1))
-              .otherwise(array().cast("array<int>"))))).as("pos_md5"),
-          joined(flatten(transform(col("__lens"),
-            (l, i) => array_repeat(i.cast("int"), l)))).as("seg_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // EOD-separated packs: every document contributes its ids PLUS one
-    // document-separator id (-1 — outside every vocab's id space, the
-    // GPT-2 <|endoftext|> convention) BEFORE packing, so boundaries are
-    // findable in the flat stream itself and the budget pays for the
-    // separator (n_tokens + 1). eod_ok re-derives the invariant from
-    // the ARTIFACT arrays — the token before every doc_offsets
-    // boundary is the separator — so a packer regression flips a gate
-    // instead of hiding in prose; the digests stay exact cross-engine.
-    "q174_eod_packs" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val withIds = docs.select(col("doc_id"), col("lang"),
-          concat(graft.functions.TextFunctions.bpeEncode(col("text"),
-            pieces), array(lit(-1))).as("__ids"))
-        .withColumn("__n_tokens", size(col("__ids")).cast(LongType))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"),
-          forall(slice(col("doc_offsets"), lit(2),
-              size(col("doc_offsets")) - 1),
-            o => element_at(col("pack_ids"), o) === -1).as("eod_ok"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // SemDeDup (Abbas et al. 2023): k-means cells as the candidate
-    // blocks for embedding-level duplicate pruning, keep-priority =
-    // least-similar-to-centroid. The corpus is salted with exact
-    // semantic duplicates (every 10th vector re-enters under id+10⁶ —
-    // the synthetic embeddings have NO natural pairs above 0.9: the
-    // closest non-planted pair measures < 0.7 at both SFs, so the twin
-    // can state the pair universe and the kept count EXACTLY). Gated
-    // IN-QUERY three ways: n_kept matches the twin's arithmetic,
-    // candidate recall over the exact pair set (identical vectors
-    // share a cell, so planted recall is 1.0; gate 0.8 tolerates
-    // natural-pair drift), and the SemDeDup postcondition recomputed
-    // from the OUTPUT labels — no two kept members of one cell within
-    // threshold, exactly zero violations.
-    "q175_semantic_dedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val corpus = emb.unionByName(emb.where(col("vec_id") % 10 === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          col("embedding")))
-      val centroids = Similarity.kmeans(emb, k = 16, iterations = 3)
-      val dd = Similarity.semanticDedup(corpus, centroids,
-        threshold = 0.9)
-      val exact = Dedup.embeddingNearDupPairs(corpus, threshold = 0.9)
-      val cells = dd.select(col("vec_id"), col("cell"), col("keep"))
-      // exact pairs annotated with both members' (cell, keep)
-      val annotated = exact
-        .join(cells.select(col("vec_id").as("id_a"), col("cell").as("ca"),
-          col("keep").as("ka")), "id_a")
-        .join(cells.select(col("vec_id").as("id_b"), col("cell").as("cb"),
-          col("keep").as("kb")), "id_b")
-      val counts = annotated.agg(
-        count(lit(1)).as("n_exact_pairs"),
-        sum(when(col("ca") === col("cb"), 1L).otherwise(0L))
-          .as("__n_caught"),
-        sum(when(col("ca") === col("cb") && col("ka") && col("kb"), 1L)
-          .otherwise(0L)).as("__n_kept_viol"))
-      val totals = dd.agg(
-        count(lit(1)).as("n_vecs"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"))
-      // a pairless corpus leaves the pair-side sums NULL (agg over
-      // zero rows): zero caught of zero pairs is a PASS, not a null gate
-      totals.crossJoin(counts).select(
-        col("n_vecs"), col("n_kept"), col("n_exact_pairs"),
-        (coalesce(col("__n_caught"), lit(0L)) * 10 >=
-          col("n_exact_pairs") * 8).as("recall_ok"),
-        (coalesce(col("__n_kept_viol"), lit(0L)) === 0)
-          .as("kept_dissimilar_ok"))
-    }),
-
-    // no-split FFD packing (SFT-style: documents stay intact, packs
-    // bin-pack instead of splitting). The twin knows the exact doc and
-    // token universe; the packing guarantees are re-derived from the
-    // OUTPUT: every doc placed exactly once, every multi-doc pack
-    // within budget, at most one ≤-half-full pack per (shard, bucket)
-    // group (the first-fit theorem), and fill efficiency (measured
-    // 0.86 @ sf0.01, see SCALE.md for sf0.1; gate 0.75).
-    "q176_ffd_pack_nosplit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").where(col("text").isNotNull)
-      val placed = graft.operators.Corpus.packSequencesNoSplit(docs,
-        "lang", "doc_id",
-        graft.functions.TextFunctions.nTokens(col("text")),
-        tokenBudget = 512, nBuckets = 4)
-      val packs = placed.groupBy("shard", "bucket", "pack_seq")
-        .agg(count(lit(1)).as("nd"), sum("n_tokens").as("fill"))
-      val packStats = packs.agg(
-        count(lit(1)).as("__n_packs"),
-        sum(when(col("nd") >= 2 && col("fill") > 512, 1L).otherwise(0L))
-          .as("__over"),
-        sum(when(col("fill") * 2 <= 512, 1L).otherwise(0L))
-          .as("__n_half"))
-      val groupStats = packs.select("shard", "bucket").distinct()
-        .agg(count(lit(1)).as("__n_groups"))
-      val docStats = placed.agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(col("doc_id")).as("__n_distinct"),
-        sum(col("n_tokens")).as("total_tokens"))
-      docStats.crossJoin(packStats).crossJoin(groupStats).select(
-        col("n_docs"), col("total_tokens"),
-        (col("__n_distinct") === col("n_docs")).as("no_split_ok"),
-        (col("__over") === 0).as("within_budget_ok"),
-        (col("__n_half") <= col("__n_groups")).as("half_sparse_ok"),
-        (col("total_tokens") * 100 >= col("__n_packs") * lit(512) * 75)
-          .as("efficiency_ok"))
-    }),
-
-    // cross-document LINE-level dedup, keep-first (CCNet / RefinedWeb
-    // boilerplate removal). The corpus has no newlines, so both
-    // engines construct the SAME lined corpus: 10-word chunks as
-    // lines, plus a verbatim boilerplate line planted on every
-    // doc_id % 7 == 0 (the nav/footer chrome the stage exists to
-    // strip). Keep-first keeps the boilerplate ONLY in its
-    // lowest-(doc, pos) occurrence; organic chunk collisions collapse
-    // identically on both sides. Exact per-doc reassembly md5.
-    "q177_line_dedup_keep_first" -> ((s, dir) => {
-      val cleaned = graft.operators.Dedup.dedupLinesKeepFirst(
-        linedDocs(s, dir))
-      cleaned.select(col("doc_id"),
-          when(col("text") === "", lit(0))
-            .otherwise(size(split(col("text"), "\n")))
-            .cast(LongType).as("n_lines_kept"),
-          md5(col("text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // the companion boilerplate STRIP: any line present in >= 3
-    // distinct docs is removed from ALL of them (the first page does
-    // not keep the navigation either) — the planted chrome vanishes
-    // corpus-wide, unique content is untouched
-    "q178_strip_frequent_lines" -> ((s, dir) => {
-      val cleaned = graft.operators.Dedup.stripFrequentLines(
-        linedDocs(s, dir), minDocs = 3)
-      cleaned.select(col("doc_id"),
-          when(col("text") === "", lit(0))
-            .otherwise(size(split(col("text"), "\n")))
-            .cast(LongType).as("n_lines_kept"),
-          md5(col("text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // incremental line dedup: the q177 semantics absorbed batch by
-    // batch through a persistent seen-line index — batch 1 = even doc
-    // ids, batch 2 = odd; the planted boilerplate's canonical copy
-    // lands in batch 1 (doc 0), so every batch-2 carrier losing it is
-    // the cross-batch memory the oracle checks. The twin states the
-    // composed result as ONE arrival-order rule: keep-first by
-    // (batch, doc_id, pos)
-    "q179_incremental_line_dedup" -> ((s, dir) => {
-      val lined = linedDocs(s, dir)
-      val idx0 = lined.select(col("text").as("line")).limit(0)
-      val (c1, idx1) = graft.operators.Dedup.lineIndexAddBatch(
-        idx0, lined.where(col("doc_id") % 2 === 0))
-      val (c2, _) = graft.operators.Dedup.lineIndexAddBatch(
-        idx1, lined.where(col("doc_id") % 2 === 1))
-      c1.unionByName(c2).select(col("doc_id"),
-          when(col("text") === "", lit(0))
-            .otherwise(size(split(col("text"), "\n")))
-            .cast(LongType).as("n_lines_kept"),
-          md5(col("text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // q179 as a STREAM: lineIndexAddBatch per micro-batch under the
-    // family's marker-committed versioned state (delta-per-batch +
-    // atomic `_current` rename LAST), replayed off a parity-split
-    // two-file backlog — arrival order ≠ id order, so the green row
-    // proves batch 1 (even ids) OWNS its lines against smaller odd
-    // batch-2 ids, i.e. the state genuinely carried across the
-    // micro-batch boundary. Output is the state itself read back:
-    // cleaned docs + their acceptance batch, collapsed by the twin into
-    // ONE arrival-order keep-first rule (parity, doc_id, pos).
-    "q188_stream_line_dedup" -> ((s, dir) => {
-      val root = scratch("graft_slined_")
-      val lined = linedDocs(s, dir)
-      val (src, schema) = parityBacklog(s, root, lined)
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingLineDedup.runAvailableNow(
-          s, src, schema, s"$root/state", s"$root/ckpt")
-      }
-      val (cleaned, _, _) = graft.streaming.StreamingLineDedup
-        .readState(s, s"$root/state")
-      cleaned.select(col("doc_id"),
-          when(col("text") === "", lit(0))
-            .otherwise(size(split(col("text"), "\n")))
-            .cast(LongType).as("n_lines_kept"),
-          md5(col("text")).as("clean_md5"),
-          col("batch"))
-        .orderBy("doc_id")
-    }),
-
-    // q178's frequent-line strip as a STREAM: a per-line distinct-doc
-    // COUNT index absorbs each micro-batch (counts add — globally
-    // unique ids make per-batch distinct sets disjoint), and a line
-    // strips from the batch being processed iff its CUMULATIVE count
-    // reaches minDocs. Arrival-order semantics gated cross-engine: a
-    // line crossing the threshold only once batch 2 arrives strips
-    // from batch-2 docs while batch-1 copies stand (a stream cannot
-    // retract; the batch operator is the retroactive form) — the twin
-    // states exactly that two-regime rule off the parity split.
-    "q190_stream_line_strip" -> ((s, dir) => {
-      val root = scratch("graft_slstrip_")
-      val lined = linedDocs(s, dir)
-      val (src, schema) = parityBacklog(s, root, lined)
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingLineStrip.runAvailableNow(
-          s, src, schema, s"$root/state", s"$root/ckpt", minDocs = 3)
-      }
-      val (cleaned, _, _) = graft.streaming.StreamingLineStrip
-        .readState(s, s"$root/state")
-      cleaned.select(col("doc_id"),
-          when(col("text") === "", lit(0))
-            .otherwise(size(split(col("text"), "\n")))
-            .cast(LongType).as("n_lines_kept"),
-          md5(col("text")).as("clean_md5"),
-          col("batch"))
-        .orderBy("doc_id")
-    }),
-
-    // the unigram-LM (SentencePiece) member of the tokenizer family —
-    // the third inference rule after greedy MaxMatch (q137) and
-    // rank-ordered merges (q143): a frequency-seeded substring piece
-    // table with exact INTEGER costs (Corpus.buildUnigramVocab /
-    // collectUnigramPieces), then per-word minimum-cost Viterbi
-    // segmentation, ties broken toward the UTF-8-binary-smallest piece
-    // sequence. The twin re-derives every choice: same candidate
-    // counting, same (cnt desc, piece) selection and ids, same integer
-    // costs (HUGEINT floor-div), and the DP itself unrolled as 16
-    // chained per-position stages (the salt compound caps word length
-    // at 16) each keeping one (cost, path)-minimal row per word — so
-    // ids_md5 pins the full id stream, not just counts. Same
-    // compound-salted corpus as q137 so the lattice has real
-    // decomposition work
-    "q180_unigram_viterbi" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = unigramPieces(docs)
-      docs.select(col("doc_id"),
-          graft.functions.TextFunctions.unigramEncode(col("text"), pieces)
-            .as("__ids"))
-        .select(col("doc_id"),
-          size(col("__ids")).cast(LongType).as("n_pieces"),
-          md5(array_join(transform(col("__ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // LM-based quality filter from the unigram tokenizer's OTHER
-    // output: the exact integer Viterbi cost IS the document's
-    // surprise under the unigram LM (Σ −log p(piece) on the cost
-    // grid), so mean-surprise ranks text by familiarity — the CCNet
-    // perplexity-filter shape with zero floats. The gate is
-    // self-normalizing: keep docs whose mean piece cost ≤ the corpus
-    // mean, cross-multiplied in decimals so the row hashes exactly
-    "q183_unigram_surprise" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = unigramPieces(docs)
-      val dec = "decimal(38,0)"
-      // scored feeds BOTH the totals row and the output — checkpoint the
-      // narrow per-doc frame so the corpus-wide Viterbi DP runs ONCE,
-      // the same two-consumer fix tokenDistributionDrift carries
-      val scored = docs.select(col("doc_id"),
-          graft.functions.TextFunctions.unigramCost(col("text"), pieces)
-            .as("__c"))
-        .select(col("doc_id"),
-          col("__c.n_pieces").cast(LongType).as("n_pieces"),
-          col("__c.cost").as("vit_cost"))
-        .localCheckpoint()
-      val tot = scored.agg(sum(col("vit_cost")).cast(dec).as("__tc"),
-        sum(col("n_pieces")).cast(dec).as("__tn"))
-      scored.crossJoin(broadcast(tot))
-        .select(col("doc_id"), col("n_pieces"), col("vit_cost"),
-          (col("vit_cost").cast(dec) * col("__tn") <=
-            col("__tc") * col("n_pieces").cast(dec)).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // one hard-EM iteration of the unigram tokenizer (Kudo §3.2's loop,
-    // Viterbi-hard E-step + usage-based M-step + zero-usage prune):
-    // E = one explode(unigramEncode) aggregate over the corpus, M =
-    // Corpus.unigramHardEmStep (ids stable, costs re-estimated,
-    // never-used multi-char pieces dropped), then the corpus re-encodes
-    // under the NEW model. The twin re-derives the usage counts from
-    // its own DP segmentation (per-word ids × word multiplicity), the
-    // same prune and integer re-costing, and a SECOND unrolled Viterbi
-    // — ids2_md5 gates the re-encoded stream choice for choice
-    "q184_unigram_hard_em" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val p1 = unigramPieces(docs)
-      val usage = docs.select(explode(
-          graft.functions.TextFunctions.unigramEncode(col("text"), p1))
-          .as("id"))
-        .groupBy("id").agg(count(lit(1)).as("u"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val p2 = graft.operators.Corpus.unigramHardEmStep(p1, usage)
-      docs.select(col("doc_id"),
-          graft.functions.TextFunctions.unigramEncode(col("text"), p2)
-            .as("__ids"))
-        .select(col("doc_id"),
-          size(col("__ids")).cast(LongType).as("n_pieces2"),
-          md5(array_join(transform(col("__ids"),
-            i => i.cast(StringType)), " ")).as("ids2_md5"),
-          lit(p1.size - p2.size).cast(LongType).as("n_pruned"))
-        .orderBy("doc_id")
-    }),
-
-    // corpus-drift monitor between two snapshots (even/odd id slices of
-    // the salted corpus, so the token space scales with the docs): the
-    // EXACT total-variation distance as a rational — per-token
-    // drift_num = |n_a·T_b − n_b·T_a| in DECIMAL(38,0), the suite
-    // total and denominator 2·T_a·T_b riding every row — top 40
-    // contributors by (drift_num desc, token). No float division
-    // anywhere; the twin computes the identical integers in HUGEINT
-    "q181_corpus_drift" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val drift = graft.operators.Corpus.tokenDistributionDrift(
-        docs.where(pmod(col("doc_id"), lit(2)) === 0),
-        docs.where(pmod(col("doc_id"), lit(2)) === 1), "text")
-      val dec = "decimal(38,0)"
-      val tot = drift.agg(
-        sum(col("drift_num")).cast(dec).as("tvd_num"),
-        (sum(col("n_a")).cast(dec) * sum(col("n_b")).cast(dec) * lit(2))
-          .cast(dec).as("tvd_den"))
-      drift.crossJoin(broadcast(tot))
-        .orderBy(col("drift_num").desc, col("token"))
-        .limit(40)
-        // exact decimals inside, doubles at the gate boundary (the
-        // suite convention): every value here is ≤ T_a·T_b ≪ 2^53, so
-        // the cast is exact at any test scale
-        .select(col("token"), col("n_a"), col("n_b"),
-          col("drift_num").cast(DoubleType).as("drift_num"),
-          col("tvd_num").cast(DoubleType).as("tvd_num"),
-          col("tvd_den").cast(DoubleType).as("tvd_den"))
-    }),
-
-    // q181 over the BIGRAM distribution: word-order / phrase drift a
-    // unigram histogram cannot see (the q52/q125 shingle semantics —
-    // a doc shorter than n contributes its one whole-doc shingle).
-    // Same exact-rational machinery, same top-40 report
-    "q185_drift_bigrams" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val drift = graft.operators.Corpus.tokenDistributionDrift(
-        docs.where(pmod(col("doc_id"), lit(2)) === 0),
-        docs.where(pmod(col("doc_id"), lit(2)) === 1), "text", ngram = 2)
-      val dec = "decimal(38,0)"
-      val tot = drift.agg(
-        sum(col("drift_num")).cast(dec).as("tvd_num"),
-        (sum(col("n_a")).cast(dec) * sum(col("n_b")).cast(dec) * lit(2))
-          .cast(dec).as("tvd_den"))
-      drift.crossJoin(broadcast(tot))
-        .orderBy(col("drift_num").desc, col("token"))
-        .limit(40)
-        .select(col("token"), col("n_a"), col("n_b"),
-          col("drift_num").cast(DoubleType).as("drift_num"),
-          col("tvd_num").cast(DoubleType).as("tvd_num"),
-          col("tvd_den").cast(DoubleType).as("tvd_den"))
-    }),
-
-    // curation-audit attribution: every doc labeled with its FIRST
-    // rejecting stage through the standard chain — null text → quality
-    // heuristics (q79b's gates) → Gopher repetition (q125's integer
-    // thresholds) → exact-dup keep-first (computed on the survivors,
-    // the population-dependent stage) → eval decontamination (3-word
-    // shingles vs the doc_id % 50 == 0 slice) — or 'accepted'. The
-    // operability report a production pipeline ships next to its
-    // output; Corpus.attributeRejections resolves priority in ONE
-    // shuffle over the tagged reject-id union
-    "q182_curation_audit" -> ((s, dir) => {
-      import graft.operators.{Corpus, Dedup}
-      val all = t(s, dir, "documents").select("doc_id", "text")
-      val docs = all.where(pmod(col("doc_id"), lit(50)) =!= 0)
-      val evalDocs = all.where(pmod(col("doc_id"), lit(50)) === 0)
-      val txt = col("text")
-      val qualBad = !qualityKeep(txt)
-      val repKeep = repetitionKeep(txt)
-      val surv13 = docs.where(txt.isNotNull && !qualBad && repKeep)
-      val keepIds = Dedup.exact(surv13).select(col("keep_id").as("doc_id"))
-      val nonNull = docs.where(txt.isNotNull)
-      Corpus.attributeRejections(docs, "doc_id", Seq(
-          "null_text" -> docs.where(txt.isNull),
-          "quality" -> docs.where(txt.isNotNull && qualBad),
-          "repetition" -> docs.where(txt.isNotNull && !repKeep),
-          "exact_dup" -> surv13.join(keepIds, Seq("doc_id"), "left_anti"),
-          "contaminated" -> nonNull.join(
-            Dedup.decontaminate(nonNull, evalDocs, shingleN = 3)
-              .select("doc_id"), Seq("doc_id"), "left_anti")))
-        .orderBy("doc_id")
-    }),
-
-    // image near-duplicate pairs for the multimodal family: perceptual
-    // aHash over the stub decoder's 32 integer byte-histogram lanes
-    // (bit j = lane_j·32 > Σ lanes, exact cross-multiplied integers —
-    // q47's hex-exact byte convention extended to bits), paired via the
-    // SAME banded exact-Hamming machinery as the text SimHash path
-    // (pigeonhole over 4 bands, recall exactly 1, shuffle linear in
-    // assets). The twin brute-forces the ≤ maxHamming pair set —
-    // banding is exact, so the sets must be identical — and each pair
-    // also carries its dHash (gradient-sign) distance as a second,
-    // independently-derived lane fingerprint over the same bytes.
-    "q186_image_phash_neardup" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val assets = Multimodal.fromDocuments(
-        t(s, dir, "documents").select("doc_id", "text", "source"))
-      val pairs = Multimodal.imageNearDupPairs(assets, maxHamming = 3,
-        dim = 32, bands = 4)
-      val dh = Multimodal.perceptualHashes(assets, dim = 32, kind = "dhash")
-      pairs
-        .join(dh.select(col("asset_id").as("id_a"), col("phash").as("__da")),
-          "id_a")
-        .join(dh.select(col("asset_id").as("id_b"), col("phash").as("__db")),
-          "id_b")
-        .select(col("id_a"), col("id_b"), col("hamming").as("a_hamming"),
-          bit_count(col("__da").bitwiseXOR(col("__db"))).cast(LongType)
-            .as("d_hamming"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // unigram ids through the trainer-handoff arc: the q180 Viterbi
-    // encoder feeds the q144 prefix-sum packer, and each pack is
-    // audited q152-style — the flat id stream's digest (the actual
-    // unigram ids, gated against the twin's per-word DP id strings
-    // pushed through the same pack arithmetic), the whole-pack decode
-    // (id→piece concat must equal the member texts minus whitespace —
-    // the unigram alphabet keeps every corpus char, so decode∘encode
-    // is exact with no UNK), and the per-segment boundary audit (a
-    // shifted doc_offsets boundary changes a segment digest even when
-    // the pack digest survives). The one check chain a trainer runs
-    // before trusting unigram packs.
-    "q187_unigram_pack_decode" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = unigramPieces(docs)
-      val vocab = pieces.map(p => (p._1, p._2))
-      val withIds = docs.select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.unigramEncode(col("text"), pieces)
-            .as("__ids"))
-        .withColumn("__n_tokens", size(col("__ids")).cast(LongType))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          size(col("pack_ids")).cast(LongType).as("n_ids"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          graft.functions.TextFunctions.bpeDecode(col("pack_ids"), vocab)
-            .as("__txt"),
-          transform(sequence(lit(1), size(col("doc_offsets")) - 1),
-            i => md5(graft.functions.TextFunctions.bpeDecode(
-              slice(col("pack_ids"),
-                element_at(col("doc_offsets"), i) + 1,
-                element_at(col("doc_offsets"), i + 1)
-                  - element_at(col("doc_offsets"), i)),
-              vocab))).as("__segs"))
-        .select(col("lang"), col("pack_id"), col("n_docs"), col("n_ids"),
-          col("ids_md5"),
-          length(col("__txt")).cast(LongType).as("decoded_chars"),
-          md5(col("__txt")).as("decoded_md5"),
-          md5(array_join(col("__segs"), " ")).as("segs_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // the multimodal dedup arc CLOSED: q186's perceptual-hash pairs
-    // through the large-star/small-star connected components (the q78
-    // machinery, modality-agnostic by construction) to the standard
-    // keep-one-per-cluster decision — min asset id is the canonical
-    // copy, every other cluster member drops. The twin re-derives the
-    // pairs brute-force and walks the SAME reachability as q78's
-    // recursive CTE, so both the cluster STRUCTURE and the keep rule
-    // are gated cross-engine.
-    "q189_image_dedup_clusters" -> ((s, dir) => {
-      import graft.operators.{Dedup, Multimodal}
-      val assets = Multimodal.fromDocuments(
-        t(s, dir, "documents").select("doc_id", "text", "source"))
-      val pairs = Multimodal.imageNearDupPairs(assets, maxHamming = 3,
-        dim = 32, bands = 4)
-      Dedup.nearDupClusters(
-          assets.select(col("asset_id").as("doc_id")),
-          pairs.select(col("id_a"), col("id_b")))
-        .select(col("doc_id").as("asset_id"), col("root"),
-          (col("doc_id") === col("root")).as("keep"))
-        .orderBy("asset_id")
-    }),
-
-    // frame-level STORAGE dedup — fixed-size chunking over the opaque
-    // payloads (the dedup-filesystem design): 64-byte frames keyed by
-    // content digest, canonical copy = corpus-global minimum packed
-    // (asset ‖ frame) occurrence, ownership joined back on the 8-byte
-    // pack (the line-dedup plan shape). Per asset: frames, canonical
-    // copies it holds, duplicate occurrences, reclaimable bytes. The
-    // twin re-cuts the frames hex-exactly and restates ownership.
-    "q191_frame_storage_dedup" -> ((s, dir) =>
-      graft.operators.Multimodal.frameDedupStats(
-          graft.operators.Multimodal.fromDocuments(
-            t(s, dir, "documents").select("doc_id", "text", "source")),
-          frameBytes = 64)
-        .orderBy("asset_id")),
-
-    // the full two-stage MinHash pipeline on TEXT: banded candidates +
-    // EXACT Jaccard verification restricted to the candidate set (the
-    // 10 TB design: quadratic verify cost only where bands collided).
-    // q32 gates the candidate stage and q34 the all-pairs ground truth;
-    // this row gates the composition — candidate ∩ (jaccard >= 0.3),
-    // each pair carrying its true similarity
-    "q197_minhash_verified_pairs" -> ((s, dir) =>
-      graft.operators.Dedup.minhashLshVerifiedPairs(
-          t(s, dir, "documents"), threshold = 0.3)
-        .orderBy("id_a", "id_b")),
-
-    // q193's candidates through the exact verify stage: per surviving
-    // pair the TRUE fraction of shared k-frame windows (candidate-
-    // restricted shingle Jaccard over the phash streams) — precision
-    // the raw band collisions can't promise
-    "q195_frame_seq_verified" -> ((s, dir) =>
-      graft.operators.Multimodal.frameSequenceNearDupVerified(
-          graft.operators.Multimodal.fromDocuments(
-            t(s, dir, "documents").select("doc_id", "text", "source")),
-          frameBytes = 64, threshold = 0.35, k = 3, dim = 8)
-        .orderBy("id_a", "id_b")),
-
-    // INCREMENTAL frame-level storage dedup (the store's ingest path,
-    // q191's stat made batch-absorbing): even assets arrive first and
-    // seed the digest index, odd assets probe it — a frame already
-    // digested stores nothing, fresh frames keep-first within their
-    // batch. The twin collapses the composition to ONE arrival-order
-    // rule: stored iff the occurrence is its digest's minimum under
-    // (parity, asset, idx)
-    "q196_frame_index_add" -> ((s, dir) => {
-      val sess = s
-      import sess.implicits._
-      val assets = graft.operators.Multimodal.fromDocuments(
-        t(s, dir, "documents").select("doc_id", "text", "source"))
-      val idx0 = Seq.empty[String].toDF("digest")
-      val (st1, d1) = graft.operators.Multimodal.frameIndexAddBatch(
-        idx0, assets.where(col("asset_id") % 2 === 0), frameBytes = 64)
-      val (st2, _) = graft.operators.Multimodal.frameIndexAddBatch(
-        d1, assets.where(col("asset_id") % 2 === 1), frameBytes = 64)
-      st1.unionByName(st2).orderBy("asset_id")
-    }),
-
-    // q196's ingest path lifted under the marker-committed versioned
-    // state family (the q188 pattern on frames): the parity backlog
-    // replays as two micro-batches, each probing the persistent digest
-    // index and appending its stats + fresh-digest delta; the gated
-    // output is the full stats state with each asset's ingest batch.
-    // Arrival order ≠ id order (odd ids arrive second), so the twin's
-    // parity-major ownership window states exactly the batch-chain
-    // rule: a frame digest belongs to the batch that saw it first — a
-    // later batch's smaller asset id never wins retroactively
-    "q198_stream_frame_index" -> ((s, dir) => {
-      val root = scratch("graft_sframes_")
-      val docs = t(s, dir, "documents").select("doc_id", "text", "source")
-      val (src, schema) = parityBacklog(s, root, docs)
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingFrameIndex.runAvailableNow(
-          s, src, schema, s"$root/state", s"$root/ckpt", frameBytes = 64)
-      }
-      val (stats, _, _) = graft.streaming.StreamingFrameIndex
-        .readState(s, s"$root/state")
-      stats.orderBy("asset_id")
-    }),
-
-    // the MULTIMODAL CAPSTONE — the whole asset chain under ONE twin
-    // (the q141 text-capstone rule applied to the image side): decode
-    // (payloads → perceptual hashes), q186/q189 phash near-dup
-    // keep-one (non-root assets DROP), then the kept universe flows
-    // into BOTH the q191 frame-store stats (ownership resolved within
-    // the post-dedup corpus — what the store would actually hold) and
-    // the q169 multimodal packer, with the per-pack storage rollup
-    // computed IN the one pack shuffle (materializeTokenPacks
-    // extraAggs). Every number in a row crosses at least two stages,
-    // so a drift in any composition seam flips a digest; component
-    // gates (q169/q186/q189/q191) stay untouched
-    "q201_multimodal_capstone" -> ((s, dir) => {
-      import graft.operators.{Corpus, Dedup, Multimodal}
-      val base = t(s, dir, "documents")
-      val assets = Multimodal.fromDocuments(
-        base.select("doc_id", "text", "source"))
-      val pairs = Multimodal.imageNearDupPairs(assets, maxHamming = 3,
-        dim = 32, bands = 4)
-      val kept = Dedup.nearDupClusters(
-          assets.select(col("asset_id").as("doc_id")),
-          pairs.select(col("id_a"), col("id_b")))
-        .where(col("doc_id") === col("root")).select("doc_id")
-        .localCheckpoint() // feeds the pack chain AND the frame stats
-      val mm = multimodalDocs(base.select("doc_id", "lang", "text"))
-        .join(kept, Seq("doc_id"), "left_semi")
-      val packed = Corpus.packSequences(mm, "lang", "doc_id",
-        size(col("__ids")).cast(LongType), tokenBudget = 2048)
-      val fr = Multimodal.frameDedupStats(
-        assets.join(mm.select(col("doc_id").as("asset_id")),
-          Seq("asset_id"), "left_semi"),
-        frameBytes = 64)
-      val withFr = packed.join(
-        fr.withColumnRenamed("asset_id", "doc_id"), Seq("doc_id"), "left")
-      Corpus.materializeTokenPacks(withFr, "lang", "doc_id", "__ids",
-          extraAggs = Seq(
-            sum(when(col("modality") === "text", lit(1L)).otherwise(0L))
-              .as("n_text_docs"),
-            sum(when(col("modality") === "image", lit(1L)).otherwise(0L))
-              .as("n_image_docs"),
-            sum(when(col("modality") === "text", col("n_tokens"))
-              .otherwise(0L)).as("text_tokens"),
-            sum(when(col("modality") === "image", col("n_tokens"))
-              .otherwise(0L)).as("image_patches"),
-            sum(coalesce(col("n_frames"), lit(0L))).as("frames"),
-            sum(coalesce(col("own_frames"), lit(0L))).as("own_frames"),
-            sum(coalesce(col("dup_frames"), lit(0L))).as("dup_frames"),
-            sum(coalesce(col("dup_bytes"), lit(0L))).as("dup_bytes")))
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"), col("n_text_docs"), col("n_image_docs"),
-          col("text_tokens"), col("image_patches"), col("frames"),
-          col("own_frames"), col("dup_frames"), col("dup_bytes"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // the unigram family's SOFT (lattice) E-step gated cross-engine:
-    // SentencePiece's published forward-backward expected counts
-    // (q184/q194 gate the hard/Viterbi variant; CorpusSpec pins where
-    // the two provably diverge). The dictionary is the corpus tokens
-    // TRUNCATED TO 4 CHARS — that bounds every lattice value by
-    // L·Z^4·expScale, inside DuckDB's HUGEINT, so the twin can replay
-    // the exact Z-homogenized integer forward-backward (α̃/β̃ unrolled
-    // over 4 positions) instead of trusting floats; pieces are all
-    // 1-2-char substrings with occurrence-count numerators, ids by
-    // piece order. Output: per kept piece (singles + soft-used multis)
-    // the seed count, the E-step's expected usage on the 2^20 grid,
-    // and the M-step's re-cost — the full soft E→M round, bit-exact
-    "q200_unigram_soft_estep" -> ((s, dir) => {
-      import graft.operators.Corpus
-      val sess = s
-      import sess.implicits._
-      val expScale = 1L << 20
-      val dict = t(s, dir, "documents").where(col("text").isNotNull)
-        .select(explode(graft.functions.TextFunctions.tokens(col("text")))
-          .as("tok0"))
-        .select(substring(col("tok0"), 1, 4).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("wc"))
-        .localCheckpoint() // feeds the seed scan AND the E-step
-      val occ = dict.select(col("tok"), col("wc"),
-        explode(sequence(lit(1), length(col("tok")))).as("i"))
-      val ps = occ
-        .select(col("tok").substr(col("i"), lit(1)).as("piece"), col("wc"))
-        .unionByName(occ.where(col("i") + 1 <= length(col("tok")))
-          .select(col("tok").substr(col("i"), lit(2)).as("piece"),
-            col("wc")))
-        .groupBy("piece").agg(sum("wc").as("n_seed"))
-        .orderBy("piece").collect().zipWithIndex
-        .map { case (r, ix) => (r.getString(0), ix + 1, r.getLong(1)) }
-        .toSeq
-      val usage = Corpus.unigramSoftUsage(dict, "tok", "wc", ps, expScale)
-        .collect()
-        .map(r => r.getInt(0) -> r.getDecimal(1).longValueExact()).toMap
-      val nSeed = ps.map(p => p._2 -> p._3).toMap
-      Corpus.unigramHardEmStep(ps, usage) // recost + zero-usage drop
-        .map { case (p, id, c) =>
-          (p, id.toLong, nSeed(id), usage.getOrElse(id, 0L), c) }
-        .toDF("piece", "id", "n_seed", "soft_u", "cost")
-        .orderBy("id")
-    }),
-
-    // CROSS-MODAL (image-text) pair dedup — the LAION-shaped
-    // composition: a pair drops only when BOTH channels agree, caption
-    // near-dup (q197's verified Jaccard >= 0.3) AND image
-    // phash-near-dup (q186's banded Hamming <= 3), walked to keep-one
-    // through the q78 CC machinery on the conjunction pair graph. The
-    // harness pair dataset is documents with caption = text and
-    // payload = the UTF-8 bytes (the stand-in image); the channels
-    // still measure DIFFERENT similarity structures — shingle Jaccard
-    // vs byte-histogram phash — so at sf0.01 the conjunction (21
-    // pairs) is a proper subset of both (4 caption-only + 2 image-only
-    // decoy pairs drop). The twin re-derives both channels' pair CTEs
-    // and the same recursive reachability as q189
-    "q199_crossmodal_dedup" -> ((s, dir) => {
-      val pairsIn = t(s, dir, "documents")
-        .select(col("doc_id").as("asset_id"), col("text").as("caption"),
-          encode(col("text"), "UTF-8").cast("binary").as("payload"))
-      graft.operators.Multimodal.crossModalDedupClusters(pairsIn,
-          threshold = 0.3, maxHamming = 3, dim = 32)
-        .orderBy("asset_id")
-    }),
-
-    // the unigram LEARN LOOP closed as a driver arc (q184 gates ONE
-    // hard-EM iteration; this runs Corpus.learnUnigram — seed → 2×
-    // (E → M → shrink-to-target) at the q180-family constants, target
-    // 100) and ships the result through the unified tokenizer
-    // artifact: the gated table is what save→load returns, so the
-    // round-trip is load-bearing. The twin unrolls both rounds — two
-    // chained Viterbi DP passes, the usage/recost/prune algebra in
-    // HUGEINT, and the identical shrink arithmetic
-    "q194_learn_unigram" -> ((s, dir) => {
-      import graft.operators.{Tokenizer, UnigramTokenizer}
-      val learned = graft.operators.Corpus.learnUnigram(
-        saltedDocs(s, dir), "text", vocabSize = 100, rounds = 2,
-        maxPieceLen = 4, minCount = 8, seedSize = 120)
-      val root = scratch("graft_unilearn_")
-      Tokenizer.save(s, UnigramTokenizer(learned), s"$root/uni")
-      val back = Tokenizer.load(s, s"$root/uni")
-        .asInstanceOf[UnigramTokenizer].pieces
-      val sess = s
-      import sess.implicits._
-      back.toDF("piece", "id", "cost")
-        .select(col("piece"), col("id").cast(LongType).as("id"),
-          col("cost"))
-        .orderBy("id")
-    }),
-
-    // frame-SEQUENCE near-dup (the video-shaped gap in the multimodal
-    // family): per-frame integer phashes (dim=8 lanes over 64-byte
-    // frames), shingled k=3 along time, MinHash/LSH-banded — two
-    // assets pair when they share a 3-consecutive-frame run, the
-    // video-copy-detection shape. Pure reuse of the q32 machinery over
-    // the rendered phash stream; the twin re-derives frames, lanes,
-    // hash bits, stream, shingles, and bands from the hex payload
-    "q193_frame_seq_neardup" -> ((s, dir) =>
-      graft.operators.Multimodal.frameSequenceNearDupPairs(
-          graft.operators.Multimodal.fromDocuments(
-            t(s, dir, "documents").select("doc_id", "text", "source")),
-          frameBytes = 64, k = 3, dim = 8)
-        .orderBy("id_a", "id_b")),
-
-    // q179's incremental composition at the CRAWL-SCALE index
-    // representation (hashLines = true): the persistent seen-line
-    // index stores 60-bit md5-prefix fingerprints, so the probe join
-    // ships 8 bytes per seen line instead of the line text, and the
-    // state parquet carries the representation marker (a mismatched
-    // probe fails loudly — DedupSpec). The twin RE-DERIVES membership
-    // and keep-first from the SAME digest, so a fingerprint collision
-    // on the gated corpus would surface as a red row, never a silent
-    // divergence from hashed-mode semantics.
-    "q192_line_dedup_hashed" -> ((s, dir) => {
-      val lined = linedDocs(s, dir)
-      val idx0 = lined.select(lit(0L).as("line")).limit(0)
-      val (c1, idx1) = graft.operators.Dedup.lineIndexAddBatch(
-        idx0, lined.where(col("doc_id") % 2 === 0), hashLines = true)
-      val (c2, _) = graft.operators.Dedup.lineIndexAddBatch(
-        idx1, lined.where(col("doc_id") % 2 === 1), hashLines = true)
-      c1.unionByName(c2).select(col("doc_id"),
-          when(col("text") === "", lit(0))
-            .otherwise(size(split(col("text"), "\n")))
-            .cast(LongType).as("n_lines_kept"),
-          md5(col("text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // q159 under GPT-2's PUBLISHED pretokenization (Radford et al.
-    // 2019 — the gpt2 encoder regex: contractions split, one literal
-    // space binds to a word, letter/digit/punct runs split, a
-    // whitespace run sheds all but its last space via the (?!\S)
-    // lookahead). The corpus adds gpt2Salt so every branch of the
-    // pattern is live. The pattern tiles the input completely, so the
-    // exact-reconstruction audit holds unchanged; n_pretoks is the
-    // REAL cross-engine pin — Java's lookahead reading vs the twin's
-    // independent RE2 derivation (a lookahead-free variant plus a
-    // run-split adjustment term: RE2 has no lookahead, so equality is
-    // a theorem about the two decompositions, checked per doc)
-    "q168_byte_bpe_gpt2_pretok" -> ((s, dir) => {
-      import graft.functions.ByteBpeKernel
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-        .where(col("text").isNotNull)
-      val salted = docs.withColumn("text", concat(col("text"),
-        lit(byteBpeSalt), lit(gpt2Salt), col("doc_id").cast(StringType)))
-      val mergeTable = graft.operators.Corpus.learnByteBpeMerges(salted,
-        "text", numMerges = 16, pretokPattern = ByteBpeKernel.gpt2Pattern)
-      val merges = graft.operators.Corpus.collectMerges(mergeTable)
-      val vocab = graft.operators.Corpus.byteMergeVocab(mergeTable)
-      salted.select(col("doc_id"),
-          col("text"),
-          graft.functions.TextFunctions.byteBpeEncode(col("text"), merges,
-            vocab, ByteBpeKernel.gpt2Pattern).as("__ids"))
-        .select(col("doc_id"), col("text"), col("__ids"),
-          graft.functions.TextFunctions.byteBpeDecode(col("__ids"), vocab)
-            .as("__txt"))
-        .select(col("doc_id"),
-          size(regexp_extract_all(col("text"),
-            lit(ByteBpeKernel.gpt2Pattern), lit(0)))
-            .cast(LongType).as("n_pretoks"),
-          (size(col("__ids")) <= octet_length(col("text")))
-            .as("ids_le_bytes"),
-          octet_length(col("__txt")).cast(LongType).as("n_bytes"),
-          md5(col("__txt")).as("roundtrip_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // the byte family joins the ONE unified tokenizer artifact (r11
-    // item 6's schema, third kind): learn → persist → load through the
-    // single kind-dispatching loader → the LOADED tokenizer must
-    // reproduce the built one's ids exactly (in-query equality over
-    // every doc) AND its decode∘encode must still be the exact-text
-    // identity — the ship-a-byte-tokenizer contract. The vocabulary's
-    // Latin-1 byte-carrier strings (control chars included) round-trip
-    // through parquet like any piece strings; the loader refuses an
-    // artifact whose alphabet doesn't cover all 256 bytes (that would
-    // resurrect UNK, the failure mode the family exists to exclude)
-    "q161_byte_artifact_roundtrip" -> ((s, dir) => {
-      import graft.operators.{ByteMergeTokenizer, Tokenizer}
-      val root = scratch("graft_btok_")
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-        .where(col("text").isNotNull)
-      val salted = docs.withColumn("text", concat(col("text"),
-        lit(byteBpeSalt), col("doc_id").cast(StringType)))
-      val mt = graft.operators.Corpus.learnByteBpeMerges(salted, "text",
-        numMerges = 16)
-      val built = ByteMergeTokenizer(
-        graft.operators.Corpus.collectMerges(mt),
-        graft.operators.Corpus.byteMergeVocab(mt))
-      Tokenizer.save(s, built, s"$root/byte")
-      val loaded = Tokenizer.load(s, s"$root/byte")
-      salted.select(col("doc_id"), col("text"),
-          built.encode(col("text")).as("__a"),
-          loaded.encode(col("text")).as("__b"))
-        .select(col("doc_id"),
-          (col("__a") === col("__b")).as("ids_match"),
-          md5(loaded.decode(col("__b"))).as("roundtrip_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // the byte family through the PACK pipeline, audited EXACTLY:
-    // byte-merge ids packed under a SQL-computable weight (the doc's
-    // byte length — any caller-supplied nTokens column works, and this
-    // one lets the twin replicate the pack boundaries with no
-    // tokenizer), then each pack's flat id stream DECODES to the exact
-    // concatenation of its member docs — whitespace included, the
-    // guarantee q152's stripped-text audit structurally can't give.
-    // decoded_bytes doubles as a second independent derivation (the
-    // twin computes it from strlen, the query from the decoded string)
-    "q162_byte_packs_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-        .where(col("text").isNotNull)
-      val salted = docs.withColumn("text", concat(col("text"),
-        lit(byteBpeSalt), col("doc_id").cast(StringType)))
-      val mt = graft.operators.Corpus.learnByteBpeMerges(salted, "text",
-        numMerges = 16)
-      val merges = graft.operators.Corpus.collectMerges(mt)
-      val vocab = graft.operators.Corpus.byteMergeVocab(mt)
-      val withIds = salted.select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.byteBpeEncode(col("text"), merges,
-          vocab).as("__ids"),
-        octet_length(col("text")).cast(LongType).as("__n_tokens"))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 8192)
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        // decode each pack's ~budget-sized id stream ONCE (q152 pattern)
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens").as("pack_bytes"),
-          graft.functions.TextFunctions.byteBpeDecode(col("pack_ids"),
-            vocab).as("__txt"),
-          // q152's per-segment audit, byte family: each member's id
-          // range sliced out by doc_offsets decodes ALONE to exactly
-          // that member's text (the twin hashes the member texts
-          // directly) — a shifted boundary flips a segment digest even
-          // when the whole-pack digest still matches
-          transform(sequence(lit(1), size(col("doc_offsets")) - 1),
-            i => md5(graft.functions.TextFunctions.byteBpeDecode(
-              slice(col("pack_ids"),
-                element_at(col("doc_offsets"), i) + 1,
-                element_at(col("doc_offsets"), i + 1)
-                  - element_at(col("doc_offsets"), i)),
-              vocab))).as("__segs"))
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_bytes"),
-          octet_length(col("__txt")).cast(LongType).as("decoded_bytes"),
-          md5(col("__txt")).as("decoded_md5"),
-          md5(array_join(col("__segs"), " ")).as("segs_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // the byte family through the STREAMING packer: q155's incremental
-    // closed-pack export with the byte encode kernel as the stateless
-    // prepare — emitted packs must carry the q162 exact-reconstruction
-    // property (each closed pack's ids decode to its member texts
-    // verbatim, ACROSS micro-batch boundaries), minus each shard's
-    // structurally-unemittable final open pack. The streamed cursor
-    // advances by ids.length, so this runs the IDENTITY byte tokenizer
-    // (0 merges: ids == bytes, boundaries replicate from strlen with
-    // no tokenizer on the twin side); the learned-merge payload is
-    // gated by q161/q162 — here the gate is the streaming composition
-    "q163_stream_byte_packs" -> ((s, dir) => {
-      val root = scratch("graft_sbp_")
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
-        .where(col("text").isNotNull)
-      val salted = docs.withColumn("text", concat(col("text"),
-        lit(byteBpeSalt), col("doc_id").cast(StringType)))
-      val merges = Seq.empty[(String, String)]
-      val vocab = graft.operators.Corpus.identityByteVocab
-      val (src, schema) = idRangeBacklog(s, root, salted)
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingPack.runMaterializeAvailableNow(
-          s, src, schema, s"$root/out", s"$root/ckpt", tokenBudget = 8192,
-          prepare = df => df.select(col("lang").as("shard"), col("doc_id"),
-            graft.functions.TextFunctions.byteBpeEncode(col("text"),
-              merges, vocab).as("ids")))
-      }
-      s.read.parquet(s"$root/out")
-        // decode each pack's id stream ONCE (q152 pattern)
-        .select(col("shard").as("lang"), col("pack_id"), col("n_docs"),
-          graft.functions.TextFunctions.byteBpeDecode(col("pack_ids"),
-            vocab).as("__txt"))
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          octet_length(col("__txt")).cast(LongType).as("decoded_bytes"),
-          md5(col("__txt")).as("decoded_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // the trainer-facing export under the LEARNED tokenizer: q142's
-    // merge table drives rank-ordered id emission (BpeMergeEncodeExpr
-    // over the buildMergeVocab symbol ids — alphabet 1..A, then merges
-    // at A+rank), feeding the SAME packer + token-pack materialization
-    // as q144. This closes the learning arc at the artifact a trainer
-    // consumes: q144 could only ship MaxMatch ids; a pipeline that
-    // selects the learned tokenizer (q150's A/B) exports through this
-    "q151_merge_token_packs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val mergeTable = graft.operators.Corpus.learnBpeMerges(docs, "text",
-        numMerges = 16)
-      val merges = graft.operators.Corpus.collectMerges(mergeTable)
-      val vocab = graft.operators.Corpus.collectPieces(
-        graft.operators.Corpus.buildMergeVocab(docs, "text", mergeTable))
-      val withIds = docs.select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.bpeMergeEncode(col("text"), merges,
-            vocab).as("__ids"))
-        .withColumn("__n_tokens", size(col("__ids")).cast(LongType))
-      val packed = graft.operators.Corpus.packSequences(withIds, "lang",
-        "doc_id", col("__n_tokens"), tokenBudget = 2048)
-      graft.operators.Corpus.materializeTokenPacks(packed, "lang",
-          "doc_id", "__ids")
-        .select(col("lang"), col("pack_id"), col("n_docs"),
-          col("pack_tokens"),
-          md5(array_join(transform(col("pack_ids"),
-            i => i.cast(StringType)), " ")).as("ids_md5"),
-          md5(array_join(transform(col("doc_offsets"),
-            i => i.cast(StringType)), " ")).as("offsets_md5"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // tokenizer ARTIFACT persistence: both artifacts — the piece vocab
-    // (q137's) and the learned merge table (q142's) — write to parquet
-    // model files, load back, and drive their inference kernels; the
-    // oracle recomputes both paths from the corpus, so a green row
-    // proves the persisted artifacts reproduce the built ones exactly
-    // (the ship-a-tokenizer contract)
-    "q145_artifact_roundtrip" -> ((s, dir) => {
-      import graft.operators.{MaxMatchTokenizer, MergeTokenizer, Tokenizer}
-      val root = scratch("graft_tok_")
-      val raw = t(s, dir, "documents")
-      val salted = raw.withColumn("text", saltCompound(col("text")))
-      val builtMax = MaxMatchTokenizer(graft.operators.Corpus.collectPieces(
-        graft.operators.Corpus.buildPieceVocab(salted, "text",
-          minCount = 5, maxSize = 200)))
-      val mergeTable =
-        graft.operators.Corpus.learnBpeMerges(raw, "text", numMerges = 16)
-      val builtMerge = MergeTokenizer(
-        graft.operators.Corpus.collectMerges(mergeTable),
-        graft.operators.Corpus.collectPieces(
-          graft.operators.Corpus.buildMergeVocab(raw, "text", mergeTable)))
-      // both kinds persist in the ONE unified schema and come back
-      // through the ONE loader — the artifact's kind column, not the
-      // call site, decides which kernel family runs
-      Tokenizer.save(s, builtMax, s"$root/max")
-      Tokenizer.save(s, builtMerge, s"$root/mrg")
-      val loadedMax = Tokenizer.load(s, s"$root/max")
-      val loadedMerge = Tokenizer.load(s, s"$root/mrg")
-      salted.select(col("doc_id"),
-          loadedMax.count(col("text")).cast(LongType).as("n_pieces"))
-        .join(raw.select(col("doc_id"),
-          loadedMerge.count(col("text")).cast(LongType)
-            .as("n_bpe_tokens")), Seq("doc_id"))
-        .orderBy("doc_id")
-    }),
-
-    // tokenizer EVALUATION: per-language fertility/compression report
-    // over the learned (q142) tokenizer — words, word bytes, and BPE
-    // tokens roll up per lang as exact BIGINT sums (fertility =
-    // n_bpe_tokens/n_words and bytes-per-token = n_word_bytes/
-    // n_bpe_tokens are downstream divisions; sums keep the gate
-    // hash-exact). Byte accounting is octet_length/strlen on the two
-    // engines — equal on this pure-ASCII corpus, so the multi-byte
-    // semantics are pinned by TextKernelsSpec, not this gate. One
-    // narrow codegen projection (tokens + merge-count kernels) then
-    // ONE O(#langs) aggregate — no per-word shuffle
-    "q146_tokenizer_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.operators.Corpus.collectMerges(
-        graft.operators.Corpus.learnBpeMerges(docs, "text", numMerges = 16))
-      docs.filter(col("text").isNotNull)
-        .select(col("lang"),
-          graft.functions.TextFunctions.tokens(col("text")).as("tk"),
-          graft.functions.TextFunctions.bpeMergeCount(col("text"), merges)
-            .cast(LongType).as("n_bpe"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(col("tk")).cast(LongType)).as("n_words"),
-          sum(graft.functions.TextFunctions.tokenByteSum(col("tk")))
-            .as("n_word_bytes"),
-          sum(col("n_bpe")).as("n_bpe_tokens"))
-        .orderBy("lang")
-    }),
-
-    // tokenizer A/B comparison: the two shipped tokenizers — the
-    // frequency piece vocab under MaxMatch inference (q137 family) and
-    // the learned merge table under rank-ordered inference (q142/q143
-    // family) — run over the SAME raw corpus, reporting per-language
-    // token totals and per-doc win counts (which tokenizer compresses
-    // each doc better). The model-selection report a pipeline runs
-    // before committing to a tokenizer; one narrow projection carrying
-    // both kernels, one O(#langs) aggregate
-    "q150_tokenizer_compare" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pieces = q137Pieces(docs)
-      val merges = graft.operators.Corpus.collectMerges(
-        graft.operators.Corpus.learnBpeMerges(docs, "text", numMerges = 16))
-      docs.filter(col("text").isNotNull)
-        .select(col("lang"),
-          graft.functions.TextFunctions.bpeCount(col("text"), pieces)
-            .cast(LongType).as("nmax"),
-          graft.functions.TextFunctions.bpeMergeCount(col("text"), merges)
-            .cast(LongType).as("nmrg"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("nmax")).as("n_maxmatch_tokens"),
-          sum(col("nmrg")).as("n_merge_tokens"),
-          sum(when(col("nmrg") < col("nmax"), lit(1L)).otherwise(lit(0L)))
-            .as("n_merge_wins"),
-          sum(when(col("nmax") < col("nmrg"), lit(1L)).otherwise(lit(0L)))
-            .as("n_maxmatch_wins"))
-        .orderBy("lang")
-    }),
-
-    // pack-efficiency audit over q139's packing: per shard the pack
-    // count, capacity (n_packs × budget), actual token total, and the
-    // oversize-doc census (docs longer than the whole budget — the
-    // ones a trainer must chunk before packing). Two metadata-sized
-    // aggregates on top of the pinned packer shape; all-BIGINT output
-    // so utilization = total/capacity is a downstream division
-    "q147_pack_efficiency" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val withN = docs.select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.bpeCount(col("text"), pieces)
-          .cast(LongType).as("__n_tokens"))
-      graft.operators.Corpus.packSequences(withN, "lang", "doc_id",
-          col("__n_tokens"), tokenBudget = 2048)
-        .where(col("pack_id").isNotNull)
-        .groupBy("lang", "pack_id")
-        .agg(sum(col("n_tokens")).as("pt"),
-          sum(when(col("n_tokens") > lit(2048L), lit(1L))
-            .otherwise(lit(0L))).as("os"),
-          max(col("n_tokens")).as("mx"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_packs"),
-          sum(col("pt")).as("total_tokens"),
-          sum(col("os")).as("n_oversize_docs"),
-          max(col("mx")).as("max_doc_tokens"))
-        .withColumn("capacity_tokens", col("n_packs") * lit(2048L))
-        .select("lang", "n_packs", "capacity_tokens", "total_tokens",
-          "n_oversize_docs", "max_doc_tokens")
-        .orderBy("lang")
-    }),
-
-    // vocabulary-coverage audit: the piece vocab trains on ENGLISH
-    // docs only, then tokenizes every OTHER language — n_unk counts
-    // the MaxMatch walk's UNK emissions (positions where no piece, not
-    // even the single character, matches: zero by construction on the
-    // build corpus, real character-level OOV at apply time). The
-    // synthetic corpus is all-lowercase ASCII in every lang, so the
-    // eval slice gets the classic casing-OOV perturbation — an
-    // UPPERCASED prefix echo — and every uppercase char is a
-    // guaranteed UNK. Per-doc (n_pieces, n_unk) is the coverage
-    // report a tokenizer ships with; ONE narrow projection with the
-    // fused count+UNK kernel (a single tokenize + trie walk emits
-    // both), no shuffle beyond the output sort
-    "q148_vocab_coverage" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pieces = q137Pieces(docs.where(col("lang") === "en"))
-      docs.where(col("lang") =!= "en" && col("text").isNotNull)
-        .withColumn("text", concat(col("text"), lit(" "),
-          upper(substring(col("text"), 1, 12))))
-        .select(col("doc_id"), col("lang"),
-          graft.functions.TextFunctions.bpeCountUnk(col("text"), pieces)
-            .as("__cu"))
-        .select(col("doc_id"), col("lang"),
-          col("__cu.n_pieces").cast(LongType).as("n_pieces"),
-          col("__cu.n_unk").cast(LongType).as("n_unk"))
-        .orderBy("doc_id")
-    }),
-
-    // the remediation pipeline q147's oversize census feeds, gated:
-    // chunk at 64 whitespace tokens, re-pack by REAL BPE counts, and
-    // prove n_oversize == 0 while the packing arithmetic balances.
-    // The zero is corpus-conditional, not universal: a chunk's BPE
-    // count is bounded by 64 × max-word-chars (char fallback), which
-    // stays under the 2048 budget only while words are ≤ 32 chars —
-    // true here (plain words ≤ ~12 chars, salt compounds ≤ 16), and
-    // exactly what the gated census verifies. cid = doc_id·2³² +
-    // chunk_id keeps chunk order inside doc order with no reachable
-    // collision (2³² chunks = a 274-billion-token document). Same
-    // shuffle classes as q139/q147 — the chunk explode is narrow
-    "q149_chunk_repack" -> ((s, dir) => {
-      val docs = saltedDocs(s, dir)
-      val pieces = q137Pieces(docs)
-      val chunks = graft.operators.Corpus
-        .chunkDocuments(docs, maxTokens = 64)
-        .select(col("doc_id"),
-          (col("doc_id") * lit(4294967296L) + col("chunk_id")).as("cid"),
-          col("text"))
-        .join(docs.select("doc_id", "lang"), Seq("doc_id"))
-      val withN = chunks.select(col("cid"), col("lang"),
-        graft.functions.TextFunctions.bpeCount(col("text"), pieces)
-          .cast(LongType).as("__n_tokens"))
-      graft.operators.Corpus.packSequences(withN, "lang", "cid",
-          col("__n_tokens"), tokenBudget = 2048)
-        .where(col("pack_id").isNotNull)
-        .groupBy("lang", "pack_id")
-        .agg(count(lit(1)).as("nch"), sum(col("n_tokens")).as("pt"),
-          sum(when(col("n_tokens") > lit(2048L), lit(1L))
-            .otherwise(lit(0L))).as("os"),
-          max(col("n_tokens")).as("mx"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_packs"),
-          sum(col("nch")).as("n_chunks"),
-          sum(col("pt")).as("total_tokens"),
-          sum(col("os")).as("n_oversize_chunks"),
-          max(col("mx")).as("max_chunk_tokens"))
-        .withColumn("capacity_tokens", col("n_packs") * lit(2048L))
-        .select("lang", "n_chunks", "n_packs", "capacity_tokens",
-          "total_tokens", "n_oversize_chunks", "max_chunk_tokens")
-        .orderBy("lang")
-    }),
-
-    // learn → apply, closed in BPE's own semantics: the q142 merge
-    // table collects driver-side (model metadata, k rows) and applies
-    // IN RANK ORDER through the memoized codegen kernel — per-doc
-    // token counts under true Sennrich apply_bpe inference (vs q137's
-    // MaxMatch rule, which can segment differently)
-    "q143_bpe_learn_apply" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.operators.Corpus.collectMerges(
-        graft.operators.Corpus.learnBpeMerges(docs, "text", numMerges = 16))
-      docs.select(col("doc_id"),
-          graft.functions.TextFunctions.bpeMergeCount(col("text"), merges)
-            .cast(LongType).as("n_bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // learn-loop EXHAUSTION gated cross-engine (the r12 ADVICE #1
-    // thread closed on a LIVE row instead of an unreachable branch): a
-    // sparse corpus slice with a pair-count floor exhausts the learn
-    // loop strictly before k=16, so the twin's chain runs REAL empty
-    // stages — a CROSS JOIN there would empty every later blw and
-    // zero the apply counts; only LEFT-JOIN state propagation (the
-    // 9b2d9a6 fix) keeps the final segmentation readable off blw16.
-    // n_merges pins the exhaustion RANK itself to the twin's
-    // stage-emptiness pattern
-    "q160_bpe_learn_exhausted" -> ((s, dir) => {
-      // FIXED 20-doc slice (sf-invariant size) + floor 60: at sf0.01
-      // the pair counts run 159..40 over 16 ranks, so the loop stops
-      // at rank 9 — seven REAL empty twin stages
-      val sparse = t(s, dir, "documents")
-        .where(pmod(col("doc_id"), lit(25)) === 0 && col("doc_id") < 500)
-      val merges = graft.operators.Corpus.collectMerges(
-        graft.operators.Corpus.learnBpeMerges(sparse, "text",
-          numMerges = 16, minPairCount = 60L))
-      sparse.select(col("doc_id"),
-          graft.functions.TextFunctions.bpeMergeCount(col("text"), merges)
-            .cast(LongType).as("n_bpe_tokens"),
-          lit(merges.length.toLong).as("n_merges"))
-        .orderBy("doc_id")
-    }),
-
-    // split-leakage audit: the q107 cluster-granularity split leaks ZERO
-    // near-dup pairs across the train/eval boundary (structural — the
-    // split is constant per connected component), while a per-document
-    // hash split over the SAME pair graph leaks at the pair rate. The
-    // audit is the operator under test; the naive column is the
-    // counterexample that shows it measures something real.
-    "q138_split_leak_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs)
-      val clusters = Dedup.nearDupClusters(docs, pairs)
-      val clusterAsg = graft.operators.Corpus.clusterSplit(docs, clusters, evalPct = 10)
-      val naiveAsg = docs.withColumn("split",
-        when(pmod(TextFunctions.portableHash(
-            concat(lit("split|"), col("doc_id").cast("string"))), lit(100))
-          < 10, lit("eval")).otherwise(lit("train")))
-      pairs.agg(count(lit(1)).as("pairs_total"))
-        .crossJoin(broadcast(graft.operators.Corpus.splitLeakCount(clusterAsg, pairs)
-          .withColumnRenamed("cross_pairs", "cross_pairs_cluster")))
-        .crossJoin(broadcast(graft.operators.Corpus.splitLeakCount(naiveAsg, pairs)
-          .withColumnRenamed("cross_pairs", "cross_pairs_naive")))
-    }),
-
-    // exact cosine top-k (brute force baseline; queries broadcast)
-    "q38_sim_bruteforce" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 10), k = 5)
-        .orderBy("query_id", "rnk")
-    }),
-
-    // IVF-bucketed ANN: centroid assign, probe own cell
-    "q39_sim_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 10), centroids, k = 5)
-        .orderBy("query_id", "rnk")
-    }),
-
-    // embedding-cosine near-duplicate pairs; the registered entry is the
-    // size-switched form (exact all-pairs under the row limit — which these
-    // SFs are — IVF-cell-bucketed candidates above it, PlanAuditSpec pins
-    // the large-path plan shape)
-    "q40_embedding_neardup" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairsAuto(t(s, dir, "embeddings"), threshold = 0.4)
-        .orderBy("id_a", "id_b")),
-
-    // random-hyperplane LSH near-dup (the linear-candidate scale path for
-    // q40), gated against the exact all-pairs ground truth IN-QUERY:
-    // precision is 1 by construction (candidates verify with the exact
-    // cosine kernel, so found ⊆ exact) and the banding parameters are sized
-    // for ≥0.9 recall (measured 1.0 @ sf0.01, 0.995 @ sf0.1) — both facts
-    // surface as oracle-checked booleans, integer arithmetic only.
-    "q56_embedding_neardup_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val exact = Dedup.embeddingNearDupPairs(emb, threshold = 0.4)
-        .agg(count(lit(1)).as("n_pairs_exact"))
-      val found = Dedup.embeddingNearDupPairsLsh(emb, threshold = 0.4,
-          nBits = 60, bands = 20)
-        .agg(count(lit(1)).as("n_pairs_found"))
-      exact.crossJoin(found).select(
-        col("n_pairs_exact"),
-        (col("n_pairs_found") * 10 >= col("n_pairs_exact") * 9).as("recall_ok"),
-        (col("n_pairs_found") <= col("n_pairs_exact")).as("precision_ok"))
-    }),
-
-    // full ANN pipeline: deterministic k-means index build + multi-probe
-    // IVF search, recall@5 gated IN-QUERY against the exact brute-force
-    // baseline over a 50-query probe set (measured 0.964 @ sf0.01,
-    // 0.932 @ sf0.1 at cells=16 nprobe=12; gate 0.9). The driver's
-    // rows/hash check thus certifies the ANN index actually finds near
-    // neighbors — not merely that rows came back.
-    "q57_ann_kmeans_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.where(col("vec_id") < 50)
-      val centroids = Similarity.kmeans(emb, k = 16, iterations = 3)
-      val ann = Similarity.ivfTopK(emb, probes, centroids, k = 5, nprobe = 12)
-      val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      val nHits = ann.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).select(
-        col("n_exact"),
-        (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"))
-    }),
-
-    // multimodal: binary payload + typed metadata, payload-pruned summary
-    "q41_multimodal_meta" -> ((s, dir) =>
-      Multimodal.metadataSummary(
-        Multimodal.fromDocuments(t(s, dir, "documents")))),
-
-    // simhash near-dups: banded candidate gen (exact for hamming<bands),
-    // popcount verify on candidates only
-    "q44_simhash_neardup" -> ((s, dir) =>
-      Dedup.simhashNearDupPairs(t(s, dir, "documents"), maxHamming = 2)
-        .orderBy("id_a", "id_b")),
-
-    // C4/Gopher-style quality filter: signals + keep decision in one pass
-    "q45_quality_filter" -> ((s, dir) => {
-      val txt = col("text")
-      val nt = TextFunctions.nTokens(txt)
-      val mtl = TextFunctions.meanTokenLen(txt)
-      val pr = TextFunctions.punctRatio(txt)
-      t(s, dir, "documents")
-        .select(col("doc_id"), nt.as("n_tokens"), mtl.as("mean_token_len"),
-          pr.as("punct_ratio"),
-          (nt >= 20 && mtl >= 3.0 && mtl <= 10.0 && pr <= 0.2).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // per-language corpus stats (exact decimal-free aggregates)
-    "q46_lang_stats" -> ((s, dir) =>
-      t(s, dir, "documents").groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.nTokens(col("text")).cast(LongType)).as("total_tokens"),
-          sum(col("n_chars")).as("total_chars"),
-          (sum(col("n_chars")).cast(DoubleType) / count(lit(1))).as("avg_chars"))
-        .orderBy("lang")),
-
-    // ROLLUP hierarchy aggregation (subtotals + grand total)
-    "q53_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("sum_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
-
-    // top-k per group with deterministic tie-break — bounded-heap
-    // topKByScore (revenue desc, custkey asc), not a row_number window:
-    // segment cardinality is fixed while customers scale with data, so a
-    // per-segment window task would hold a data-sized partition
-    "q54_topk_per_group" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")
-          .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))),
-          Seq("o_custkey"))
-        .groupBy("c_mktsegment", "o_custkey")
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("revenue"))
-        .groupBy("c_mktsegment")
-        .agg(graft.functions.TopKAggregate.topKByScore(
-          col("revenue"), col("o_custkey"), 3).as("__top"))
-        .select(col("c_mktsegment"),
-          posexplode(col("__top")).as(Seq("__pos", "__e")))
-        .select(col("c_mktsegment"),
-          col("__e").getField("id").as("o_custkey"),
-          col("__e").getField("score").as("revenue"),
-          (col("__pos") + lit(1)).cast(IntegerType).as("rnk"))
-        .orderBy("c_mktsegment", "rnk")
-    }),
-
-    // per-column data profile (nulls / distincts / bounds) in one pass
-    "q55_profile" -> ((s, dir) =>
-      t(s, dir, "orders").agg(
-        count(lit(1)).as("n_rows"),
-        count(col("o_custkey")).as("custkey_nonnull"),
-        countDistinct(col("o_custkey")).as("custkey_distinct"),
-        countDistinct(col("o_orderstatus")).as("status_distinct"),
-        min(col("o_totalprice")).as("price_min"),
-        max(col("o_totalprice")).as("price_max"),
-        min(to_date(col("o_orderdate"))).as("date_min"),
-        max(to_date(col("o_orderdate"))).as("date_max"))),
-
-    // streaming exact dedup: dropDuplicates state across micro-batches —
-    // the same backlog ingested twice (2 files, 1 file per batch) yields
-    // each event exactly once
-    "q50_stream_dedup" -> ((s, dir) => {
-      val root = scratch("graft_sdedup_")
-      val src = java.nio.file.Paths.get(s"$root/src")
-      java.nio.file.Files.createDirectories(src)
-      val ev = java.nio.file.Paths.get(s"$dir/events.parquet")
-      java.nio.file.Files.copy(ev, src.resolve("f1.parquet"))
-      java.nio.file.Files.copy(ev, src.resolve("f2.parquet"))
-      val schema = rawTable(s, dir, "events").schema
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingDedup.runAvailableNow(
-          s, src.toString, schema, s"$root/table", s"$root/ckpt",
-          Seq("event_id"))
-      }
-      s.read.parquet(s"$root/table")
-        .select("event_id", "user_id", "event_type")
-        .orderBy("event_id")
-    }),
-
-    // binned range join: points-in-interval without an equi key — bin
-    // equi-join + exact containment filter, no cross product
-    "q51_range_join" -> ((s, dir) => {
-      val usExpr = expr("unix_micros(ts)")
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), usExpr.as("ts_us"))
-      val iv = t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(min(usExpr).as("start_us"))
-        .where(col("user_id") % 20 === 0)
-        .select(col("user_id").as("iv_user"), col("start_us"),
-          (col("start_us") + 3600L * 1000000L).as("end_us"))
-      Temporal.rangeJoinBinned(ev, "ts_us", iv, "start_us", "end_us",
-          binSizeUs = 3600L * 1000000L)
-        .groupBy("iv_user").agg(count(lit(1)).as("n_points"))
-        .orderBy("iv_user")
-    }),
-
-    // Gopher-style repetition signals (dup-token and top-bigram ratios)
-    "q52_text_repetition" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.dupTokenRatio(col("text")).as("dup_token_ratio"),
-          TextFunctions.dupBigramRatio(col("text")).as("top_bigram_ratio"))
-        .orderBy("doc_id")),
-
-    // stateful streaming sessionization: flatMapGroupsWithState custom
-    // state (last-ts, session-id) per user; backlog replay == batch result
-    "q49_stateful_sessionize" -> ((s, dir) => {
-      val out = scratch("graft_statess_")
-      val schema = rawTable(s, dir, "events").schema
-      withShufflePartitions(s, 2) {
-        graft.streaming.StatefulSessionize.runAvailableNow(
-          s, s"$dir/events.parquet", schema,
-          s"$out/table", s"$out/ckpt", gapSeconds = 1800L,
-          maxFilesPerTrigger = 1000)
-      }
-      s.read.parquet(s"$out/table").orderBy("user_id", "ts_us", "session_id")
-    }),
-
-    // JSON property extraction + aggregation (events.props is a JSON blob)
-    "q48_json_extract" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast(IntegerType).as("k"))
-        .groupBy("event_type")
-        .agg(count(col("k")).as("n_with_k"),
-          sum(col("k").cast(LongType)).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type")),
-
-    // multimodal decode: partition-local batch feature extraction over
-    // binary payloads (stub decoder; Spark plumbing is real). Lane
-    // features are integer byte sums represented as float — summing them
-    // back is exact integer arithmetic, and the single final divide is one
-    // IEEE op both engines agree on, so a DuckDB twin exists.
-    "q47_multimodal_decode" -> ((s, dir) =>
-      Multimodal.decodeFeatures(
-          Multimodal.fromDocuments(t(s, dir, "documents")), dim = 8)
-        .select(col("asset_id"),
-          expr("aggregate(feature, 0L, (a, x) -> a + cast(x as long))")
-            .as("byte_sum"),
-          size(col("feature")).as("n_lanes"))
-        .withColumn("feature_norm", col("byte_sum").cast(DoubleType) / 255.0)
-        .orderBy("asset_id")),
-
-    // structured-streaming ingestion: AvailableNow + foreachBatch PK merge
-    "q42_stream_upsert" -> ((s, dir) => {
-      val out = scratch("graft_stream_")
-      // raw physical schema: the stream reads the files as-is (ts unused)
-      val schema = rawTable(s, dir, "events").schema
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingUpsert.runAvailableNow(
-          s, s"$dir/events.parquet", schema,
-          s"$out/table", s"$out/ckpt", Seq("event_id"))
-      }
-      s.read.parquet(s"$out/table")
-        .select("event_id", "user_id", "event_type", "value")
-        .orderBy("event_id")
-    }),
-
-    // streaming windowed aggregation: watermark + 10-min tumbling windows,
-    // AvailableNow backlog replay == the batch result (complete mode)
-    "q43_stream_windowed" -> ((s, dir) => {
-      val out = scratch("graft_streamw_")
-      val schema = rawTable(s, dir, "events").schema
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingUpsert.runWindowedAvailableNow(
-          s, s"$dir/events.parquet", schema,
-          s"$out/table", s"$out/ckpt", "ts", "event_type")
-      }
-      s.read.parquet(s"$out/table").orderBy("win_start", "event_type")
-    }),
-
-    // salted two-phase aggregation: result must equal the plain groupBy —
-    // the salt only reshapes the shuffle (hot key fans out over 16
-    // reducers before the per-key merge)
-    "q62_salted_agg" -> ((s, dir) =>
-      graft.operators.Skew.saltedAgg(t(s, dir, "lineitem"),
-          Seq("l_returnflag"), col("l_orderkey"), saltBuckets = 16)(
-        partials = Seq(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast(DecimalType(18, 2))).as("q")),
-        finals = Seq(sum(col("n")).as("n_rows"),
-          sum(col("q")).cast(DoubleType).as("sum_qty")))
-        .orderBy("l_returnflag")),
-
-    // salted replicated join: result must equal the plain equi-join — the
-    // right side replicates 8×, the skewed left picks a deterministic salt
-    "q63_salted_join" -> ((s, dir) => {
-      val left = t(s, dir, "orders").select(col("o_orderkey"),
-        col("o_custkey").as("cust_key"), col("o_totalprice"))
-      val right = t(s, dir, "customer").select(
-        col("c_custkey").as("cust_key"), col("c_mktsegment"))
-      graft.operators.Skew.saltedJoin(left, right, Seq("cust_key"),
-          col("o_orderkey"), factor = 8)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("revenue"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // versioned-lake time travel: commit v0, PK-upsert v1 (every status
-    // overwritten), then read AS OF v0 — the oracle is the plain v0
-    // snapshot, so a reader that sees v1 (broken isolation) hash-fails
-    "q64_time_travel" -> ((s, dir) => {
-      val root = scratch("graft_vt_") + "/tbl"
-      val orders = t(s, dir, "orders")
-      val v0 = orders.where(col("o_orderkey") % 2 === 0)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      graft.store.VersionedTable.write(v0, root)
-      val updates = orders
-        .select(col("o_orderkey"), lit("X").as("o_orderstatus"),
-          col("o_totalprice"))
-      graft.store.VersionedTable.upsert(s, root, updates, Seq("o_orderkey"))
-      graft.store.VersionedTable.read(s, root, asOf = Some(0L))
-        .orderBy("o_orderkey")
-    }),
-
-    // near-dup cluster assignment: connected components over the minhash
-    // LSH pair graph (smallest reachable doc id = cluster root) — the
-    // canonical-representative step after pairwise detection
-    "q78_neardup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.nearDupClusters(docs, Dedup.minhashLshPairs(docs))
-        .orderBy("doc_id")
-    }),
-
-    // the composed corpus-construction pipeline, end-to-end: exact-dedup →
-    // near-dup cluster representatives → decontaminate vs the eval slice →
-    // quality-filter → stratified mixture → sequence packing. Every stage
-    // is individually oracle-gated (q30/q78/q71/q45/q67/q68); this entry
-    // gates the COMPOSITION — the column contracts between stages and the
-    // combined plan — the LLM-corpus analogue of the reference's chained
-    // etl_flow (py_pipeline/orchestration.py:155-209)
-    "q79_corpus_pipeline" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val keepIds = Dedup.exact(docs).select(col("keep_id").as("doc_id"))
-      val kept = docs.join(keepIds, Seq("doc_id"), "left_semi")
-      val reps = Dedup.nearDupClusters(kept, Dedup.minhashLshPairs(kept))
-        .where(col("doc_id") === col("root")).select("doc_id")
-      val repDocs = kept.join(reps, Seq("doc_id"), "left_semi")
-      val clean = Dedup.decontaminate(
-        repDocs.where(col("doc_id") % 50 =!= 0),
-        docs.where(col("doc_id") % 50 === 0), shingleN = 3)
-      val quality = clean.where(qualityKeep(col("text")))
-      val mixed = graft.operators.Corpus.stratifiedSample(quality,
-        "lang", "doc_id",
-        Map("en" -> 10, "de" -> 30, "fr" -> 30), defaultRate = 50)
-      graft.operators.Corpus.packSequences(
-          mixed.select(col("doc_id"), col("lang"),
-            TextFunctions.nTokens(col("text")).cast("long").as("__n_tokens")),
-          "lang", "doc_id", col("__n_tokens"), tokenBudget = 2048)
-        .groupBy("lang", "pack_id")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // q79 with the span-excision stage wired in: … → decontaminate →
-    // EXCISE duplicated spans (boilerplate removal — the Lee et al. ACL'22
-    // step) → quality-filter over the EXCISED text → mix → pack. Excision
-    // changes texts, so the quality gate and token budgets downstream see
-    // the cleaned corpus — the composition contract this entry gates
-    "q79b_pipeline_excise" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val keepIds = Dedup.exact(docs).select(col("keep_id").as("doc_id"))
-      val kept = docs.join(keepIds, Seq("doc_id"), "left_semi")
-      val reps = Dedup.nearDupClusters(kept, Dedup.minhashLshPairs(kept))
-        .where(col("doc_id") === col("root")).select("doc_id")
-      val repDocs = kept.join(reps, Seq("doc_id"), "left_semi")
-      val clean = Dedup.decontaminate(
-        repDocs.where(col("doc_id") % 50 =!= 0),
-        docs.where(col("doc_id") % 50 === 0), shingleN = 3)
-      val excised = Dedup.exciseDuplicatedSpans(clean, shingleK = 8)
-      val quality = excised.where(qualityKeep(col("text")))
-      val mixed = graft.operators.Corpus.stratifiedSample(quality,
-        "lang", "doc_id",
-        Map("en" -> 10, "de" -> 30, "fr" -> 30), defaultRate = 50)
-      graft.operators.Corpus.packSequences(
-          mixed.select(col("doc_id"), col("lang"),
-            TextFunctions.nTokens(col("text")).cast("long").as("__n_tokens")),
-          "lang", "doc_id", col("__n_tokens"), tokenBudget = 2048)
-        .groupBy("lang", "pack_id")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"))
-        .orderBy("lang", "pack_id")
-    }),
-
-    // bucketed fact-fact join: both sides written bucketed on the join key
-    // (16 buckets) so the sort-merge join consumes bucket-local data with
-    // ZERO exchange (PlanAuditSpec pins the no-shuffle plan); the oracle
-    // twin is the PLAIN join — bucketing must not change a single row
-    "q80_bucketed_join" -> ((s, dir) => {
-      val tmp = scratch("graft_q80_")
-      val orders = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val items = t(s, dir, "lineitem").groupBy("l_orderkey")
-        .agg(sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("sum_qty"),
-          count(lit(1)).as("n_items"))
-      // repartition by the bucket key first: each write task owns exactly
-      // one bucket, so the table is 16 files, not tasks×buckets shards
-      orders.repartition(16, col("o_orderkey"))
-        .write.mode("overwrite").option("path", s"$tmp/o")
-        .bucketBy(16, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable("q80_orders_b")
-      items.repartition(16, col("l_orderkey"))
-        .write.mode("overwrite").option("path", s"$tmp/i")
-        .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable("q80_items_b")
-      s.table("q80_orders_b")
-        .join(s.table("q80_items_b"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select("o_orderkey", "o_custkey", "o_totalprice",
-          "sum_qty", "n_items")
-        .orderBy("o_orderkey")
-    }),
-
-    // small-file compaction: fragment a table to 40 files, compact to 1,
-    // and emit measured file counts + content aggregates — the oracle's
-    // constants and the source table prove rows survived byte-identically
-    "q81_compaction" -> ((s, dir) => {
-      val tmp = scratch("graft_q81_") + "/t"
-      val orders = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      orders.repartition(40).write.mode("overwrite").parquet(tmp)
-      val before = graft.store.Compactor.dataFileCount(tmp)
-      graft.store.Compactor.compact(s, tmp, targetFileBytes = 1L << 30)
-      val after = graft.store.Compactor.dataFileCount(tmp)
-      s.read.parquet(tmp).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("sum_price"),
-          min("o_orderkey").as("min_key"),
-          max("o_orderkey").as("max_key"))
-        .withColumn("files_before", lit(before))
-        .withColumn("files_after", lit(after))
-        .select("files_before", "files_after", "n_rows", "sum_price",
-          "min_key", "max_key")
-    }),
-
-    // O1-O5 end-to-end: the FULL orchestration path — etlFlow (symbols
-    // ETL, chunked price ETL with PK merge, lake→warehouse promotion) for
-    // both asset categories over the deterministic fixture source, then
-    // the dbt stage (runModels) and the declared DQ suite. Output =
-    // fct_prices + the suite's total violation count; a green row proves
-    // the composed path, not just its pieces (the reference's CI runs the
-    // whole flow, .github/workflows/ci_cd.yml:55-61)
-    "q82_flow_e2e" -> ((s, dir) => {
-      val root = scratch("graft_q82_")
-      val (lake, dw) = (s"$root/lake", s"$root/dw")
-      val src = new PhFixtureSource(dir)
-      val start = java.time.LocalDate.parse("2024-01-01")
-      val end = java.time.LocalDate.parse("2024-02-01")
-      // the flow's tables are O(symbols×days) rows — run its many small
-      // stages at few shuffle partitions (a real deployment sizes
-      // partitions to data; 32 empty tasks per tiny stage is pure
-      // scheduler overhead), restored after
-      val violations = withShufflePartitions(s, 4) {
-        // the two asset flows touch disjoint lake/warehouse paths — run
-        // them CONCURRENTLY (what a real orchestrator does with
-        // independent DAG branches); Spark schedules both flows' small
-        // jobs into the idle cores the serial version wasted
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val flows = Seq("sp_stocks", "fx").map(cat => Future {
-          graft.pipeline.Flow.etlFlow(s, src, lake, dw, cat,
-            Some(start), Some(end), today = end)
-        })
-        flows.foreach(Await.result(_, Duration.Inf))
-        graft.pipeline.Flow.runModels(s, dw)
-        graft.pipeline.Flow.runDataTests(s, dw).map(_.violations).sum
-      }
-      s.read.parquet(s"$dw/fct_prices")
-        .withColumn("dq_violations", lit(violations))
-        .orderBy("symbol", "date_stamp")
-    }),
-
-    // exact token top-k: one map-side-combined shuffle on the token, then
-    // TakeOrdered for the k rows — the top-k itself never materializes the
-    // full distribution on the driver
-    "q83_token_topk" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(50)),
-
-    // Misra-Gries heavy hitters with the theory gate run IN-QUERY: the
-    // sketch (k=64 counters per aggregation buffer, shuffle traffic
-    // independent of corpus size) must contain EVERY token whose exact
-    // count exceeds N/(k+1) — the mergeable-summaries guarantee, which a
-    // broken reduce/merge would violate immediately. Output is the exact
-    // totals plus the two gate booleans, all engine-independent.
-    "q84_heavy_hitters" -> ((s, dir) => {
-      val k = 64
-      // ONE corpus scan: the exact per-token counts feed the weighted
-      // sketch (each (token,cnt) row is an exact singleton summary, so the
-      // N/(k+1) mergeable-summaries bound is unchanged), the exact totals,
-      // AND the exact heavy set. Eager localCheckpoint (distinct-token-
-      // sized, not corpus-sized) rather than persist(): checkpoint blocks
-      // are reclaimed by the ContextCleaner once the frame is unreachable,
-      // so repeated runs in a shared session don't pin stale cache entries.
-      val cnts = t(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
-      val sketch = cnts
-        .agg(graft.operators.Sketches
-          .heavyHitterSketchWeighted(k)(col("token"), col("cnt")).as("sk"))
-        .select(explode(map_keys(col("sk"))).as("token"))
-      val totals = cnts.agg(sum("cnt").as("n_total"))
-      val heavy = cnts
-        .crossJoin(totals) // 1-row gate assembly
-        .where(col("cnt") * (k + 1) > col("n_total"))
-      val missed = heavy.join(sketch, Seq("token"), "left_anti")
-        .agg(count(lit(1)).as("n_missed"))
-      val nHeavy = heavy.agg(count(lit(1)).as("n_heavy"))
-      val nCand = sketch.agg(count(lit(1)).as("n_cand"))
-      totals.crossJoin(nHeavy).crossJoin(missed).crossJoin(nCand)
-        .select(col("n_total"), col("n_heavy"),
-          (col("n_missed") === 0).as("superset_ok"),
-          (col("n_cand") <= k).as("bounded_ok"))
-    }),
-
-    // GDPR-erasure: delete every order of the sampled "erasure request"
-    // customers from a written lake table (one anti-join, atomic swap),
-    // then read the table back — the oracle twin is the equivalent
-    // NOT IN filter over the source
-    "q85_targeted_delete" -> ((s, dir) => {
-      val tmp = scratch("graft_q85_") + "/t"
-      t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        .write.parquet(tmp)
-      val erasure = t(s, dir, "customer")
-        .where(pmod(TextFunctions.portableHash(col("c_name")), lit(20)) === 0)
-        .select(col("c_custkey").as("o_custkey"))
-      UpsertWriter.delete(s, tmp, erasure, Seq("o_custkey"))
-      s.read.parquet(tmp).orderBy("o_orderkey")
-    }),
-
-    // tokenizer vocabulary: frequency-filtered, size-capped, dense ids by
-    // (count desc, token asc) — the rank window runs on the vocab-sized
-    // top cut, never the corpus-sized distribution
-    "q86_vocab_build" -> ((s, dir) =>
-      graft.operators.Corpus.buildVocab(t(s, dir, "documents"), "text",
-        minCount = 5, maxSize = 200).orderBy("token_id")),
-
-    // temperature-reweighted language mixture (T=2): integer fixed-point
-    // thresholds from exact domain counts, hash-filtered rows — fully
-    // deterministic, reproduced bit-for-bit by the SQL twin
-    "q87_temperature_mix" -> ((s, dir) =>
-      graft.operators.Corpus.temperatureSample(t(s, dir, "documents"),
-          "lang", "doc_id", fracPct = 30)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-
-    // deterministic exact-k per-group sample (the distributed reservoir):
-    // hash-ranked window, k rows per language
-    "q88_group_sample" -> ((s, dir) =>
-      graft.operators.Corpus.samplePerGroup(t(s, dir, "documents"),
-          "lang", "doc_id", k = 40)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")),
-
-    // approximate quantiles (Greenwald-Khanna style sketch) with the
-    // error gate run in-query: at accuracy 10000 the rank error is
-    // n/10000, so each approx quantile must land within 1% of the value
-    // RANGE of its exact counterpart — emitted values are the EXACT ones
-    // (decimal-deterministic), the sketch only has to pass the gate
-    "q92_approx_quantiles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_extendedprice").as("x"))
-      val exact = li.agg(
-        expr("percentile(x, 0.5)").as("p50"),
-        expr("percentile(x, 0.9)").as("p90"),
-        expr("percentile(x, 0.99)").as("p99"),
-        min("x").as("lo"), max("x").as("hi"))
-      val approx = li.agg(
-        expr("approx_percentile(x, array(0.5D, 0.9D, 0.99D), 10000)").as("ap"))
-      exact.crossJoin(approx) // 1-row gate assembly
-        .select(col("p50"), col("p90"), col("p99"),
-          (greatest(
-            abs(col("ap")(0) - col("p50")),
-            abs(col("ap")(1) - col("p90")),
-            abs(col("ap")(2) - col("p99"))) / (col("hi") - col("lo")) <= 0.01)
-            .as("within_tol"))
-    }),
-
-    // incremental aggregate maintenance (the materialized-view merge): a
-    // pre-cut aggregate STATE (count + decimal sum per key) merges with
-    // the delta's state by re-aggregating the union — associativity means
-    // the merged result must equal a full recompute, which is exactly
-    // what the twin computes. At 100 TB this is the pattern that turns a
-    // daily full-table groupBy into a delta-sized one.
-    "q93_incremental_agg" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      def state(df: DataFrame) = df.groupBy("o_custkey").agg(
-        count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast(DecimalType(18, 2))).as("total"))
-      val cut = "1997-01-01"
-      val base = state(orders.where(col("o_orderdate") < lit(cut)))
-      val delta = state(orders.where(col("o_orderdate") >= lit(cut)))
-      base.unionByName(delta)
-        .groupBy("o_custkey")
-        .agg(sum("n").as("n"), sum("total").as("total"))
-        .select(col("o_custkey"), col("n"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy("o_custkey")
-    }),
-
-    // HLL approximate distinct with the error gate run in-query: the
-    // sketch (fixed bytes per partition, merge order-independent →
-    // deterministic) must land within 5% of the exact distinct count —
-    // the reason to ship it is that at 100 TB the exact count shuffles
-    // every distinct key and the sketch shuffles ~kilobytes
-    "q90_approx_distinct" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val approx = li.agg(
-        approx_count_distinct(col("l_partkey"), 0.02).as("approx"))
-      li.agg(countDistinct(col("l_partkey")).as("exact"))
-        .crossJoin(approx) // 1-row gate assembly
-        .select(col("exact"),
-          (abs(col("approx") - col("exact")).cast("double") / col("exact")
-            <= 0.05).as("within_tol"))
-    }),
-
-    // CDC over the versioned lake: write v0 (even keys), PK-merge an
-    // update batch (every 3rd key, status rewritten), then snapshotDiff
-    // v0→v1 classifies every key as insert/update/unchanged — the twin
-    // derives the same classes from key arithmetic alone
-    "q91_snapshot_diff" -> ((s, dir) => {
-      val root = q91Fixture(s, dir) // untimed-once input construction
-      graft.store.VersionedTable
-        .snapshotDiff(s, root, from = 0L, to = 1L, Seq("o_orderkey"))
-        .groupBy("change_type")
-        .agg(count(lit(1)).as("n"),
-          min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
-        .orderBy("change_type")
-    }),
-
-    // z-order layout: 3-column Morton interleave (l_partkey, l_suppkey,
-    // l_linenumber), range-partition into 16 files (ZOrderSpec proves
-    // multi-column file pruning), read back and emit rows + recomputed z —
-    // the twin's plain scan must agree row-for-row, proving the layout
-    // loses nothing and pinning the N-column interleave bit-for-bit
-    "q89_zorder_layout" -> ((s, dir) => {
-      val tmp = scratch("graft_q89_") + "/t"
-      val li = t(s, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      graft.store.ZOrder.layoutN(li,
-        Seq("l_partkey", "l_suppkey", "l_linenumber"), tmp, numFiles = 16)
-      s.read.parquet(tmp)
-        .withColumn("z", graft.store.ZOrder.zValueN(
-          Seq(col("l_partkey"), col("l_suppkey"), col("l_linenumber"))))
-        .orderBy("z", "l_orderkey", "l_linenumber")
-    }),
-
-    // 5-row moving average per key: the windowed sum runs over DECIMAL
-    // (exact, associative — safe against DuckDB's segment-tree window
-    // evaluation order), one final double divide
-    "q76_moving_avg" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-        .rowsBetween(-4, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          (sum(col("value").cast(DecimalType(18, 6))).over(w)
-            .cast(DoubleType) / count(lit(1)).over(w)).as("ma5"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // per-key period-over-period returns: lag + elementwise arithmetic,
-    // IEEE-identical on both engines; zero/missing base yields NULL (ANSI
-    // division would error, DuckDB would emit inf — NULL is the contract)
-    "q77_returns" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-      val prev = lag(col("value"), 1).over(w)
-      t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          when(prev =!= 0.0, (col("value") - prev) / prev).as("ret"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // exact quantiles per group (sort-based percentile with linear
-    // interpolation — the same definition as DuckDB's quantile_cont)
-    "q74_quantiles" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          expr("percentile(l_quantity, 0.25)").as("q25"),
-          expr("percentile(l_quantity, 0.5)").as("q50"),
-          expr("percentile(l_quantity, 0.75)").as("q75"),
-          expr("percentile(l_quantity, 0.9)").as("q90"))
-        .orderBy("l_returnflag")),
-
-    // moment-exact statistics: mean/stddev/corr derived from DECIMAL-exact
-    // power sums (sum x, x², y, y², xy), so the only float ops are the
-    // final identical expressions on identical inputs — unlike the
-    // built-in corr/stddev whose float accumulation order varies
-    "q75_moment_stats" -> ((s, dir) => {
-      // operands enter DECIMAL before multiplying: the products and sums
-      // are exact, so no float accumulation order can leak in
-      val q = col("l_quantity").cast(DecimalType(18, 2))
-      val p = col("l_extendedprice").cast(DecimalType(18, 2))
-      def dsum(c: Column) = sum(c).cast(DoubleType)
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          dsum(q).as("sq"), dsum(q * q).as("sq2"),
-          dsum(p).as("sp"), dsum(p * p).as("sp2"),
-          dsum(q * p).as("sqp"))
-        .select(col("l_returnflag"), col("n"),
-          (col("sq") / col("n")).as("mean_qty"),
-          sqrt((col("sq2") - col("sq") * col("sq") / col("n"))
-            / (col("n") - 1)).as("std_qty"),
-          ((col("n") * col("sqp") - col("sq") * col("sp"))
-            / sqrt((col("n") * col("sq2") - col("sq") * col("sq"))
-              * (col("n") * col("sp2") - col("sp") * col("sp"))))
-            .as("corr_qty_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // incremental streaming near-dup: two id-ordered backlog files, one
-    // per micro-batch; batch 2's docs are rejected against the band-key
-    // HISTORY accumulated from batch 1 (and lower ids within-batch), so
-    // the final table equals the global lower-id band-collision rule the
-    // oracle computes
-    "q73_stream_neardup" -> ((s, dir) => {
-      val root = scratch("graft_snd_")
-      val src = java.nio.file.Paths.get(s"$root/src")
-      java.nio.file.Files.createDirectories(src)
-      val docs = rawTable(s, dir, "documents")
-      val mid = docs.count() / 2
-      def writeHalf(df: DataFrame, name: String): Unit = {
-        val tmp = s"$root/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        java.nio.file.Files.move(part, src.resolve(name))
-      }
-      writeHalf(docs.where(col("doc_id") < mid), "f1.parquet")
-      writeHalf(docs.where(col("doc_id") >= mid), "f2.parquet")
-      // FileStreamSource orders the backlog by modification time; the
-      // oracle's history-based rejection assumes f1 (low doc ids) lands
-      // first, so pin distinct, increasing mtimes — two moves inside the
-      // same mtime granularity could otherwise tie and flip the order
-      java.nio.file.Files.setLastModifiedTime(src.resolve("f1.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
-      java.nio.file.Files.setLastModifiedTime(src.resolve("f2.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(1000000001000L))
-      withShufflePartitions(s, 2) {
-        graft.streaming.StreamingNearDup.runAvailableNow(
-          s, src.toString, docs.schema,
-          s"$root/table", s"$root/hist", s"$root/ckpt")
-      }
-      s.read.parquet(s"$root/table")
-        .select("doc_id", "lang").orderBy("doc_id")
-    }),
-
-    // benchmark decontamination: drop training docs sharing any 3-gram
-    // with the held-out eval slice (doc_id % 50 == 0) — the test-set
-    // leakage guard every pretraining corpus needs
-    "q71_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.decontaminate(
-          docs.where(col("doc_id") % 50 =!= 0),
-          docs.where(col("doc_id") % 50 === 0), shingleN = 3)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // PII scrubbing over deterministic synthetic contact strings (emails
-    // derived from customer names): replace + count, identical Java/RE2
-    // regex subset on both engines
-    "q72_pii_scrub" -> ((s, dir) => {
-      val raw = concat(lit("contact "),
-        lower(translate(col("c_name"), "# ", "_.")), lit("@example.com"),
-        lit(" or call 555-0123 ref "), col("c_custkey").cast(StringType))
-      t(s, dir, "customer")
-        .select(col("c_custkey"), raw.as("raw"))
-        .select(col("c_custkey"),
-          TextFunctions.scrubPii(col("raw")).as("scrubbed"),
-          regexp_count(col("raw"), lit(TextFunctions.EmailRe)).as("n_emails"),
-          regexp_count(col("raw"), lit(TextFunctions.PhoneRe)).as("n_phones"))
-        .orderBy("c_custkey")
-    }),
-
-    // multimodal resize: batch-local transcode contract (stub truncation),
-    // metadata tracks the new size; byte sums prove the payload transform
-    "q69_multimodal_resize" -> ((s, dir) => {
-      val resized = Multimodal.resizeStub(
-        Multimodal.fromDocuments(t(s, dir, "documents")), targetBytes = 500)
-      val feats = Multimodal.decodeFeatures(resized, dim = 1)
-        .select(col("asset_id"),
-          col("feature").getItem(0).cast(LongType).as("byte_sum"))
-      resized.select(col("asset_id"), col("meta.n_bytes").as("n_bytes"))
-        .join(feats, "asset_id")
-        .orderBy("asset_id")
-    }),
-
-    // multimodal frame sampling: payload cut into 256-byte frames, every
-    // 2nd kept, exploded batch-locally to a flat relational table
-    "q70_multimodal_framesample" -> ((s, dir) =>
-      Multimodal.frameSample(
-          Multimodal.fromDocuments(t(s, dir, "documents")),
-          frameBytes = 256, everyN = 2)
-        .select(col("asset_id"), col("frame_idx"),
-          octet_length(col("frame")).as("frame_bytes"),
-          expr("aggregate(transform(sequence(1, octet_length(frame)), " +
-            "i -> cast(conv(substring(hex(frame), 2*i-1, 2), 16, 10) as long))" +
-            ", 0L, (a, x) -> a + x)").as("byte_sum"))
-        .orderBy("asset_id", "frame_idx")),
-
-    // symmetric int8 absmax quantization of the embedding column (the
-    // 4×-storage lever): emitted aggregates are integer-exact, the scale
-    // divide + floor(+0.5) rounding is IEEE-identical on both engines
-    "q66_quantize_int8" -> ((s, dir) =>
-      graft.operators.Corpus.quantizeInt8(t(s, dir, "embeddings"))
-        .select(col("vec_id"),
-          expr("aggregate(qvec, 0L, (a, x) -> a + cast(x as long))")
-            .as("q_sum"),
-          array_min(col("qvec")).as("q_min"),
-          array_max(col("qvec")).as("q_max"))
-        .orderBy("vec_id")),
-
-    // training-mixture construction: per-language deterministic sampling
-    // rates (downweight en, upweight the rest) via stratum-salted portable
-    // hash — a pure narrow filter, reproducible across runs/executors
-    "q67_stratified_sample" -> ((s, dir) =>
-      graft.operators.Corpus.stratifiedSample(t(s, dir, "documents"),
-          "lang", "doc_id",
-          Map("en" -> 10, "de" -> 30, "fr" -> 30), defaultRate = 50)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")),
-
-    // token-budget sequence packing (pretraining batch layout): docs cut
-    // into ≤2048-token packs per language by cumulative offset — one
-    // shuffle + one per-shard sort
-    // stats-only consumer: pre-project to (id, shard, token count) so the
-    // prefix-sum range shuffle carries three narrow columns, not text
-    // (the RDD boundary blocks Catalyst pruning — see packSequences doc)
-    "q68_pack_sequences" -> ((s, dir) =>
-      graft.operators.Corpus.packSequences(
-          t(s, dir, "documents").select(col("doc_id"), col("lang"),
-            TextFunctions.nTokens(col("text")).cast("long").as("__n_tokens")),
-          "lang", "doc_id", col("__n_tokens"), tokenBudget = 2048)
-        .groupBy("lang", "pack_id")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"))
-        .orderBy("lang", "pack_id")),
-
-    // as-of join, FORWARD direction with tolerance: nearest click at-or-
-    // after each purchase per user, voided when farther than 24 h (DuckDB
-    // proves it with a native ASOF JOIN + tolerance CASE)
-    "q65_asof_forward_tolerance" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-      Temporal.asOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-          Seq("click_id"), direction = "forward",
-          toleranceUs = Some(86400L * 1000000L))
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("click_id"))
-        .orderBy("purchase_id")
-    }),
-
-    // span-level exact dedup (Lee et al. 2022, fixed-shingle ExactSubstr):
-    // maximal per-doc extents of 8-token windows that occur more than once
-    // anywhere in the corpus — the verbatim-boilerplate catcher that
-    // whole-doc hash (q30) and near-dup banding (q32/q44) both miss
-    "q94_span_dedup" -> ((s, dir) =>
-      graft.operators.Dedup.duplicatedSpans(t(s, dir, "documents"), 8)
-        .orderBy("doc_id", "span_start")),
-
-    // CDC-maintained incremental view over the versioned lake: v0 = even
-    // keys; v1 merges a custkey-migrating update batch (every 3rd key);
-    // v2 merges a price-doubling batch (every 5th key). The per-custkey
-    // (count, decimal-sum) state is bootstrapped from v0 and maintained
-    // ONLY from the two signed change feeds — never recomputed — and the
-    // in-query gate joins it against the full recompute of v2: `ok` is
-    // exact (decimal) agreement per group, which any sign/retraction bug
-    // flips to false
-    "q95_cdc_incremental" -> ((s, dir) => {
-      val root = q95Fixture(s, dir) // untimed-once input construction
-      import graft.store.{IncrementalView, VersionedTable}
-      val s0 = IncrementalView.state(
-        VersionedTable.read(s, root, Some(0L)), "o_custkey", "o_totalprice")
-      val s1 = IncrementalView.applyFeed(s0,
-        VersionedTable.changeFeed(s, root, 0L, 1L, Seq("o_orderkey")),
-        "o_custkey", "o_totalprice")
-      val s2 = IncrementalView.applyFeed(s1,
-        VersionedTable.changeFeed(s, root, 1L, 2L, Seq("o_orderkey")),
-        "o_custkey", "o_totalprice")
-      val full = IncrementalView.state(
-        VersionedTable.read(s, root), "o_custkey", "o_totalprice")
-      val inc = s2.select(col("o_custkey"),
-        col("n").as("n_inc"), col("total").as("total_inc"))
-      full.join(inc, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"), col("n"),
-          col("total").cast(DoubleType).as("total"),
-          (col("n") <=> col("n_inc") &&
-            col("total") <=> col("total_inc")).as("ok"))
-        .orderBy("o_custkey")
-    }),
-
-    // Bloom-prefiltered decontamination (the 100 TB path): a driver-built
-    // bloom over the eval shingles probes the corpus in a NARROW codegen'd
-    // filter — no corpus-wide shingle explode/shuffle; only candidate
-    // survivors pay the exact semi-join verify. Bloom filters have no
-    // false negatives, so the oracle is the EXACT decontamination result
-    "q96_decontaminate_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.decontaminateBloom(
-          docs.where(col("doc_id") % 40 =!= 0),
-          docs.where(col("doc_id") % 40 === 0), shingleN = 3)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // Count-Min point-estimate gates: the weighted CMS builds off the SAME
-    // exact counts frame (one corpus scan total; localCheckpoint for the
-    // same bounded-lifetime reason as q84), and for the exact top-20
-    // tokens the in-query gates re-prove the sketch theory every run —
-    // estimates never undercount, and overcount stays within the bound
-    "q97_cms_topk_gate" -> ((s, dir) => {
-      val eps = 0.0005
-      val cnts = t(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
-      val cms = graft.operators.Sketches
-        .countMinOfCounts(cnts, "token", "cnt", eps, 0.99, 42)
-      val totals = cnts.agg(sum("cnt").as("n_total"))
-      val est = graft.functions.SketchExpressions.cmsEstimate(col("token"), cms)
-      // gate at 2·eps·N, not eps·N: the CMS guarantee P(err ≤ eps·N) holds
-      // only with confidence 0.99 PER PROBE, so 20 probes carry a few
-      // percent worst-case spurious-failure chance on reseeded/regenerated
-      // data. Markov per depth-row gives P(err > 2·eps·N) ≤ (2e)^-d — with
-      // d = ceil(ln 100) = 5 that is ~2e-4 per probe, negligible across 20.
-      cnts.orderBy(col("cnt").desc, col("token")).limit(20)
-        .crossJoin(totals) // 1-row gate assembly
-        .select(col("token"), col("cnt"),
-          (est >= col("cnt")).as("lower_ok"),
-          (est <= col("cnt") + ceil(lit(2 * eps) * col("n_total")).cast("long"))
-            .as("upper_ok"))
-        .orderBy(col("cnt").desc, col("token"))
-    }),
-
-    // variable-length matched spans: per document pair, every maximal run
-    // of verbatim-shared tokens with its TRUE length (a 200-token quote is
-    // one row, match_len 200) — the pairwise complement of q94's per-doc
-    // extents, k-gram seeds extended along join diagonals
-    "q98_matched_spans" -> ((s, dir) =>
-      graft.operators.Dedup.maximalMatchedSpans(t(s, dir, "documents"), 8)
-        .orderBy("doc_a", "doc_b", "a_start", "b_start")),
-
-    // incremental maintenance of NON-invertible aggregates: the per-group
-    // (count, sum, min, max) state folds two change feeds — an update
-    // batch and a DELETE batch — where min/max re-scan only the groups
-    // whose deleted rows touched the current extremum. The gate joins the
-    // maintained state against a full recompute of the final version:
-    // any missed dirty group or bad extremum algebra flips ok to false
-    "q99_incremental_minmax" -> ((s, dir) => {
-      val root = q99Fixture(s, dir)
-      import graft.store.{IncrementalView, VersionedTable}
-      val s0 = IncrementalView.stateMinMax(
-        VersionedTable.read(s, root, Some(0L)), "o_custkey", "o_totalprice")
-      val s1 = IncrementalView.applyFeedMinMax(s0,
-        VersionedTable.changeFeed(s, root, 0L, 1L, Seq("o_orderkey")),
-        VersionedTable.read(s, root, Some(1L)), "o_custkey", "o_totalprice")
-      val s2 = IncrementalView.applyFeedMinMax(s1,
-        VersionedTable.changeFeed(s, root, 1L, 2L, Seq("o_orderkey")),
-        VersionedTable.read(s, root, Some(2L)), "o_custkey", "o_totalprice")
-      val full = IncrementalView.stateMinMax(
-        VersionedTable.read(s, root), "o_custkey", "o_totalprice")
-      val inc = s2.select(col("o_custkey"), col("n").as("n_i"),
-        col("total").as("t_i"), col("lo").as("lo_i"), col("hi").as("hi_i"))
-      full.join(inc, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"), col("n"),
-          col("total").cast(DoubleType).as("total"),
-          col("lo").cast(DoubleType).as("lo"),
-          col("hi").cast(DoubleType).as("hi"),
-          (col("n") <=> col("n_i") && col("total") <=> col("t_i") &&
-            col("lo") <=> col("lo_i") && col("hi") <=> col("hi_i")).as("ok"))
-        .orderBy("o_custkey")
-    }),
-
-    // hub-shingle diagnostic for span pairing: how many 8-token windows the
-    // q98 frequency cap would exclude from pairing (here cap=2, sized to
-    // this corpus's max shingle frequency of 3 so the gate exercises a
-    // nonzero hub set) — one shuffle on the shingle digest, scalar output
-    "q100_hub_shingles" -> ((s, dir) =>
-      graft.operators.Dedup.hubShingleStats(t(s, dir, "documents"),
-        shingleK = 8, maxShingleFreq = 2)),
-
-    // soft dedup: near-dup clusters thin to ~2 docs each (min-id
-    // representative guaranteed + hash-deterministic extras) instead of
-    // hard keep-one — the training-mixture trade that lets popular
-    // content retain some extra mass; twin replays the q78 recursive-CTE
-    // clusters and the same integer hash rule
-    "q101_cluster_weighted_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val clusters = Dedup.nearDupClusters(docs, Dedup.minhashLshPairs(docs))
-      graft.operators.Corpus
-        .clusterWeightedSample(docs, clusters, targetPerCluster = 2)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // IVF cell-clustered STORAGE layout: corpus written partitionBy(cell)
-    // so a probe scans only the probed cells' partition directories (file
-    // pruning pinned in PlanAuditSpec — the bytes-touched analogue of the
-    // cell shuffle key). Gates: recall ≥ 0.9 vs exact brute force AND
-    // rank-for-rank equality with the unclustered ivfTopK — proving the
-    // layout changes which BYTES are read, not a single result row. The
-    // clustered write runs in the timed region by design (like q80): the
-    // layout is the operator under proof
-    "q102_ann_clustered_layout" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.where(col("vec_id") < 50)
-      val centroids = Similarity.kmeans(emb, k = 16, iterations = 3)
-      val path = scratch("graft_q102_") + "/emb"
-      Similarity.writeClustered(emb, centroids, path)
-      val ann = Similarity.ivfTopKClustered(s, path, probes, centroids,
-        k = 5, nprobe = 12)
-      val plain = Similarity.ivfTopK(emb, probes, centroids, k = 5, nprobe = 12)
-      val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      val nHits = ann.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nSame = ann.join(plain, Seq("query_id", "neighbor_id", "rnk"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_same"))
-      val nAnn = ann.agg(count(lit(1)).as("n_ann"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).crossJoin(nAnn).crossJoin(nSame).select(
-        col("n_exact"),
-        (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"),
-        (col("n_same") === col("n_ann") && col("n_ann") === col("n_exact"))
-          .as("layout_ok"))
-    }),
-
-    // incremental SECOND-moment maintenance: unlike q99's min/max, ±x²
-    // is invertible, so mean/variance state folds the same update+DELETE
-    // feeds with no dirty-group rescan ever; the gate compares the
-    // maintained (n, total, total2) decimals against a full recompute —
-    // mean surfaces as pure IEEE division of exact doubles
-    "q103_incremental_moments" -> ((s, dir) => {
-      val root = q99Fixture(s, dir)
-      import graft.store.{IncrementalView, VersionedTable}
-      val s0 = IncrementalView.stateMoments(
-        VersionedTable.read(s, root, Some(0L)), "o_custkey", "o_totalprice")
-      val s1 = IncrementalView.applyFeedMoments(s0,
-        VersionedTable.changeFeed(s, root, 0L, 1L, Seq("o_orderkey")),
-        "o_custkey", "o_totalprice")
-      val s2 = IncrementalView.applyFeedMoments(s1,
-        VersionedTable.changeFeed(s, root, 1L, 2L, Seq("o_orderkey")),
-        "o_custkey", "o_totalprice")
-      val full = IncrementalView.stateMoments(
-        VersionedTable.read(s, root), "o_custkey", "o_totalprice")
-      val inc = s2.select(col("o_custkey"), col("n").as("n_i"),
-        col("total").as("t_i"), col("total2").as("t2_i"))
-      full.join(inc, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"), col("n"),
-          col("total").cast(DoubleType).as("total"),
-          (col("total").cast(DoubleType) / col("n")).as("mean"),
-          (col("n") <=> col("n_i") && col("total") <=> col("t_i") &&
-            col("total2") <=> col("t2_i")).as("ok"))
-        .orderBy("o_custkey")
-    }),
-
-    // streaming lakehouse end-to-end: a 3-file backlog streams through
-    // AvailableNow, each micro-batch PK-merging AND committing a version;
-    // the per-custkey view state then folds ONLY the per-batch change
-    // feeds — however many batches the trigger chose — and the gate
-    // compares it against a full recompute of the final table (= all
-    // orders, since the three slices partition the key space)
-    "q104_stream_lakehouse" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      // the 3-file source backlog is input construction — memoized so the
-      // timed region is the stream + versioned commits (the operator),
-      // not the parquet writes that build its input; the checkpoint and
-      // table root stay fresh per run (a stream cannot re-run a consumed
-      // checkpoint)
-      val srcDir = memoFixture("q104src", dir) { () =>
-        val base = scratch("graft_q104src_")
-        val src = s"$base/src"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-        for (i <- 0 to 2) {
-          val staging = s"$base/stage$i"
-          orders.where(col("o_orderkey") % 3 === i)
-            .coalesce(1).write.mode("overwrite").parquet(staging)
-          val part = new java.io.File(staging).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(src, s"slice$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-        src
-      }
-      val tmp = scratch("graft_q104_")
-      val root = s"$tmp/tbl"
-      graft.streaming.StreamingUpsert.runVersionedAvailableNow(
-        s, srcDir, orders.schema, root, s"$tmp/ckpt", Seq("o_orderkey"),
-        maxFilesPerTrigger = 1)
-      import graft.store.{IncrementalView, VersionedTable}
-      val vs = VersionedTable.versions(root).sorted
-      var st = IncrementalView.state(
-        VersionedTable.read(s, root, Some(vs.head)),
-        "o_custkey", "o_totalprice")
-      for ((a, b) <- vs.zip(vs.tail))
-        st = IncrementalView.applyFeed(st,
-          VersionedTable.changeFeed(s, root, a, b, Seq("o_orderkey")),
-          "o_custkey", "o_totalprice")
-      val full = IncrementalView.state(
-        VersionedTable.read(s, root), "o_custkey", "o_totalprice")
-      val inc = st.select(col("o_custkey"),
-        col("n").as("n_i"), col("total").as("t_i"))
-      full.join(inc, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"), col("n"),
-          col("total").cast(DoubleType).as("total"),
-          (col("n") <=> col("n_i") && col("total") <=> col("t_i")).as("ok"))
-        .orderBy("o_custkey")
-    }),
-
-    // incremental COUNT DISTINCT: the (group, value) multiplicity state is
-    // sign-foldable even though the distinct scalar is not invertible —
-    // the update feed migrates values (old price out, doubled price in)
-    // and the delete feed retracts multiplicities, some to zero; the gate
-    // compares the state-read distinct counts against a recompute
-    "q105_incremental_distinct" -> ((s, dir) => {
-      val root = q99Fixture(s, dir)
-      import graft.store.{IncrementalView, VersionedTable}
-      var st = IncrementalView.stateDistinct(
-        VersionedTable.read(s, root, Some(0L)), "o_custkey", "o_totalprice")
-      for ((a, b) <- Seq((0L, 1L), (1L, 2L)))
-        st = IncrementalView.applyFeedDistinct(st,
-          VersionedTable.changeFeed(s, root, a, b, Seq("o_orderkey")),
-          "o_custkey", "o_totalprice")
-      val inc = IncrementalView.distinctCounts(st, "o_custkey")
-        .select(col("o_custkey"), col("n_distinct").as("nd_i"))
-      val full = VersionedTable.read(s, root)
-        .groupBy("o_custkey")
-        .agg(countDistinct(col("o_totalprice").cast(DecimalType(18, 2)))
-          .as("n_distinct"))
-      full.join(inc, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"), col("n_distinct"),
-          (col("n_distinct") <=> col("nd_i")).as("ok"))
-        .orderBy("o_custkey")
-    }),
-
-    // sliding-window chunking (64-token budget, 8-token overlap): the
-    // long-document preprocessing step before packing — narrow transform +
-    // posexplode, integer-exact chunk arithmetic, chunk text hashed by the
-    // oracle verbatim
-    "q106_chunk_documents" -> ((s, dir) =>
-      graft.operators.Corpus.chunkDocuments(t(s, dir, "documents"),
-          maxTokens = 64, overlap = 8)
-        .orderBy("doc_id", "chunk_id")),
-
-    // leakage-safe split: eval/train decided by hashing the near-dup
-    // CLUSTER root, so no near-duplicate pair straddles the boundary —
-    // the twin replays the q78 recursive-CTE clusters and the hash rule
-    "q107_cluster_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val clusters = Dedup.nearDupClusters(docs, Dedup.minhashLshPairs(docs))
-      graft.operators.Corpus.clusterSplit(docs, clusters, evalPct = 10)
-        .select("doc_id", "root", "split")
-        .orderBy("doc_id")
-    }),
-
-    // per-group winsorization: prices clipped to the exact per-flag
-    // [p05, p95] quantiles (quantile_cont-parity percentile + elementwise
-    // least/greatest — every output double is either a raw input value or
-    // a group constant, so the twin hash-matches exactly)
-    "q108_winsorize" -> ((s, dir) =>
-      graft.transform.PriceTransforms.winsorize(
-          t(s, dir, "lineitem")
-            .select("l_orderkey", "l_linenumber", "l_returnflag",
-              "l_extendedprice"),
-          "l_returnflag", "l_extendedprice", lo = 0.05, hi = 0.95)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("l_extendedprice").as("w_price"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    // inverted index over trigram shingle terms: exact df / total tf per
-    // term; posting lists materialize only for terms with df <= 16 (stop
-    // terms elide to NULL so no reduce task ever builds a corpus-sized
-    // list — stats stay exact for every term)
-    "q109_inverted_index" -> ((s, dir) =>
-      Retrieval.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, postingsCap = 16)
-        .orderBy("term")),
-
-    // BM25 top-25 for a 3-term query: tf counted inside the token array
-    // (no explode/shuffle of corpus rows), corpus stats via a one-row
-    // broadcast, TakeOrdered top-k; scores emitted in exact micro-units
-    "q110_bm25_topk" -> ((s, dir) =>
-      Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("dup", "spark", "merge"), topK = 25)),
-
-    // rare-bigram quality gate: occurrences whose corpus frequency is
-    // under 1/8 of the mean flag as rare; docs over 5% rare are dropped.
-    // The threshold compare is pure integer (decimal-38) math
-    "q111_rare_ngram_gate" -> ((s, dir) =>
-      Retrieval.rareNgramGate(t(s, dir, "documents"), "doc_id", "text",
-          n = 2, rareFactor = 8, keepDen = 20)
-        .orderBy("doc_id")),
-
-    // incrementally-maintained inverted index: the (term, doc, tf)
-    // multiplicity state folds two delta-sized change feeds (doc rewrite,
-    // doc delete) and must equal a full re-tokenize of the final corpus —
-    // the retrieval member of the incremental-view family (q95/q99/q103/
-    // q105). Twin rebuilds the final corpus from the pure doc_id mutation
-    // rules; the ok gate compares fold vs rebuild in-query
-    "q112_incremental_index" -> ((s, dir) => {
-      val root = q112Fixture(s, dir)
-      import graft.store.VersionedTable
-      val s0 = Retrieval.indexState(
-        VersionedTable.read(s, root, Some(0L)), "doc_id", "text")
-      val s1 = Retrieval.applyFeedIndex(s0,
-        VersionedTable.changeFeed(s, root, 0L, 1L, Seq("doc_id")),
-        "doc_id", "text")
-      val s2 = Retrieval.applyFeedIndex(s1,
-        VersionedTable.changeFeed(s, root, 1L, 2L, Seq("doc_id")),
-        "doc_id", "text")
-      val inc = Retrieval.termStats(s2)
-        .select(col("term"), col("df").as("df_i"), col("tf_total").as("t_i"))
-      val full = Retrieval.termStats(Retrieval.indexState(
-        VersionedTable.read(s, root), "doc_id", "text"))
-      full.join(inc, Seq("term"), "full_outer")
-        .select(col("term"), col("df"), col("tf_total"),
-          (col("df") <=> col("df_i") && col("tf_total") <=> col("t_i"))
-            .as("ok"))
-        .orderBy("term")
-    }),
-
-    // NEAR-dup decontamination: q71's exact rule drops a train doc on ANY
-    // shared shingle (verbatim leakage); this drops only LSH candidates of
-    // an eval doc whose exact distinct-shingle Jaccard verifies >= 0.5 —
-    // the paraphrased-leakage rule. Twin replays the banding + jaccard
-    "q113_decontaminate_neardup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.decontaminateNearDup(
-          docs.where(col("doc_id") % 50 =!= 0),
-          docs.where(col("doc_id") % 50 === 0), threshold = 0.5)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // PQ-compressed ANN: ADC over 16-byte codes ranks the whole corpus, a
-    // 100-candidate shortlist reranks with the exact cosine kernel (only
-    // the shortlist's full vectors are ever fetched). Gate mirrors
-    // q57/q102: recall@5 >= 0.9 vs brute force, proven in-query
-    "q114_ann_pq" -> ((s, dir) => {
-      val base = q114Fixture(s, dir)
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.where(col("vec_id") < 50)
-      val cb = s.read.parquet(s"$base/cb")
-      val enc = s.read.parquet(s"$base/enc")
-      val ann = Similarity.pqTopKRerank(enc, cb, emb, probes,
-        k = 5, shortlist = 100)
-      val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      val nHits = ann.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).select(
-        col("n_exact"),
-        (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"))
-    }),
-
-    // IVF×PQ composition (IVFADC — the FAISS IndexIVFPQ deploy): PQ codes
-    // stored cell-partitioned, so the ADC pass reads ONLY probed cells'
-    // FILES — nprobe/cells of a 32×-compressed corpus — then the exact
-    // rerank fetches just the shortlist. Gates mirror q102+q114: recall@5
-    // >= 0.9 vs brute force, AND rank-for-rank equality with the
-    // whole-corpus pqTopK at nprobe = cells (the routing drops bytes,
-    // never candidates)
-    "q115_ann_ivfadc" -> ((s, dir) => {
-      val pqBase = q114Fixture(s, dir)
-      val base = q115Fixture(s, dir)
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.where(col("vec_id") < 50)
-      val cb = s.read.parquet(s"$pqBase/cb")
-      val enc = s.read.parquet(s"$pqBase/enc")
-      val cents = s.read.parquet(s"$base/cents")
-      val ann = Similarity.ivfAdcTopKRerank(s, s"$base/idx", cb, cents,
-        emb, probes, k = 5, nprobe = 12, shortlist = 100)
-      val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      val full = Similarity.ivfAdcTopK(s, s"$base/idx", cb, cents, probes,
-        k = 5, nprobe = 16)
-      val plain = Similarity.pqTopK(enc, cb, probes, k = 5)
-      val nHits = ann.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nSame = full.join(plain, Seq("query_id", "neighbor_id", "rnk"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_same"))
-      val nFull = full.agg(count(lit(1)).as("n_full"))
-      val nPlain = plain.agg(count(lit(1)).as("n_plain"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).crossJoin(nFull).crossJoin(nPlain)
-        .crossJoin(nSame).select(
-          col("n_exact"),
-          (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"),
-          (col("n_same") === col("n_full") && col("n_full") === col("n_plain"))
-            .as("adc_ok"))
-    }),
-
-    // RESIDUAL IVFADC (true Jégou §V / FAISS IndexIVFPQ): the PQ
-    // codebooks quantize cell residuals x̂ − c_cell instead of raw unit
-    // directions — residuals concentrate near zero, so the same m×k
-    // budget buys lower quantization error — and the ADC score adds the
-    // per-(query, cell) q̂·c_cell offset back. Same recall gate as
-    // q114/q115 at the same nprobe/shortlist settings
-    "q116_ann_ivfadc_residual" -> ((s, dir) => {
-      val base = q116Fixture(s, dir)
-      val cents = s.read.parquet(s"${q115Fixture(s, dir)}/cents")
-      val emb = t(s, dir, "embeddings")
-      val probes = emb.where(col("vec_id") < 50)
-      val rcb = s.read.parquet(s"$base/rcb")
-      val ann = Similarity.ivfAdcTopKRerank(s, s"$base/idx", rcb, cents,
-        emb, probes, k = 5, nprobe = 12, shortlist = 100, residual = true)
-      val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      val nHits = ann.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).select(
-        col("n_exact"),
-        (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"))
-    }),
-
-    // incremental ANN index maintenance: the clustered PQ index mutated
-    // by ONE delta-sized feed application (touched cells only) must be
-    // search-indistinguishable from a full rebuild over the post-feed
-    // corpus — maintained and rebuilt searches rank-for-rank identical
-    // (exact: cell+code are deterministic functions of vector and index
-    // state) plus the usual recall gate vs brute force on the FINAL
-    // corpus
-    "q117_ann_index_maintain" -> ((s, dir) => {
-      val base = q117Fixture(s, dir)
-      val cents = s.read.parquet(s"${q115Fixture(s, dir)}/cents")
-      val cb = s.read.parquet(s"${q114Fixture(s, dir)}/cb")
-      val fin = s.read.parquet(s"$base/final")
-      val probes = fin.where(col("vec_id") < 50)
-      val annM = Similarity.ivfAdcTopKRerank(s, s"$base/idx", cb, cents,
-        fin, probes, k = 5, nprobe = 12, shortlist = 100)
-      val annR = Similarity.ivfAdcTopKRerank(s, s"$base/rebuilt", cb, cents,
-        fin, probes, k = 5, nprobe = 12, shortlist = 100)
-      val exact = Similarity.bruteForceTopK(fin, probes, k = 5)
-      val nHits = annM.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nSame = annM.join(annR, Seq("query_id", "neighbor_id", "rnk"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_same"))
-      val nM = annM.agg(count(lit(1)).as("n_m"))
-      val nR = annR.agg(count(lit(1)).as("n_r"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).crossJoin(nM).crossJoin(nR).crossJoin(nSame)
-        .select(
-          col("n_exact"),
-          (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"),
-          (col("n_same") === col("n_m") && col("n_m") === col("n_r"))
-            .as("maintain_ok"))
-    }),
-
-    // streaming ANN freshness: the backlog streams through micro-batches
-    // that each commit a table version AND fold its change feed into the
-    // clustered PQ index — after the drain, searching the streamed index
-    // must be rank-for-rank the rebuilt twin (whatever batch boundaries
-    // the trigger chose), with the recall gate vs brute force over the
-    // final snapshot
-    "q118_stream_ann_index" -> ((s, dir) => {
-      val base = q118Fixture(s, dir)
-      val cents = s.read.parquet(s"${q115Fixture(s, dir)}/cents")
-      val cb = s.read.parquet(s"${q114Fixture(s, dir)}/cb")
-      val fin = graft.store.VersionedTable.read(s, s"$base/tbl")
-      val probes = fin.where(col("vec_id") < 50)
-      val annM = Similarity.ivfAdcTopKRerank(s, s"$base/idx", cb, cents,
-        fin, probes, k = 5, nprobe = 12, shortlist = 100)
-      val annR = Similarity.ivfAdcTopKRerank(s, s"$base/rebuilt", cb, cents,
-        fin, probes, k = 5, nprobe = 12, shortlist = 100)
-      val exact = Similarity.bruteForceTopK(fin, probes, k = 5)
-      val nHits = annM.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val nSame = annM.join(annR, Seq("query_id", "neighbor_id", "rnk"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_same"))
-      val nM = annM.agg(count(lit(1)).as("n_m"))
-      val nR = annR.agg(count(lit(1)).as("n_r"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      nExact.crossJoin(nHits).crossJoin(nM).crossJoin(nR).crossJoin(nSame)
-        .select(
-          col("n_exact"),
-          (col("n_hits") * 10 >= col("n_exact") * 9).as("recall_ok"),
-          (col("n_same") === col("n_m") && col("n_m") === col("n_r"))
-            .as("stream_ok"))
-    }),
-  )
-
-  // ---------------------------------------------------------------- oracles
-
-  def oracleSql: Map[String, String] = {
-    val mhTerms = Dedup.minhashCoeffs(8).zipWithIndex.map { case ((a, b), i) =>
-      s"min((hv * $a + $b) % ${Dedup.MinhashP}) AS mh$i"
-    }.mkString(", ")
-    val shingleCtes =
-      s"""toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")})) AS s
-         |       FROM toks)""".stripMargin
-    val cosSql = "list_dot_product(qv, cv) / " +
-      "(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
-    // banded-LSH candidate pairs + recursive min-root reachability over the
-    // doc set in CTE `srcTable` (a `sig` CTE must already be in scope) —
-    // mirrors Dedup.minhashLshPairs + nearDupClusters; ONE definition
-    // shared by the q78/q79/q79b/q101/q107 twins so the banding and root
-    // rules can never drift apart between oracles
-    def clusterCtes(srcTable: String): String = {
-      val bandKeys = (0 until 4).map { b =>
-        s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' || " +
-          s"CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-      }.mkString(" UNION ALL ")
-      s"""banded AS ($bandKeys),
-         |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM banded a JOIN banded b
-         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-         |e AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM $srcTable
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a)""".stripMargin
-    }
-    // the two-batch incremental dedup-index policy (q128 batch form,
-    // q129 streaming form — IDENTICAL semantics, one oracle): batch 1 =
-    // even ids (smaller-id-wins within batch), batch 2 = odd ids
-    // (accepted-index witness wins on any id, then smaller-id within
-    // batch); banding + exact-jaccard verify mirror Dedup.dedupIndexAddBatch
-    // CTE prefix shared by q128/q129/q136: banding + jaccard verify +
-    // the two-batch accept sets (acc1 even ids, acc2 odd ids)
-    val dedupIndexCtes: String = {
-      val bandKeys = (0 until 4).map { b =>
-        s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' " +
-          s"|| CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-      }.mkString(" UNION ALL ")
-      s"""WITH $shingleCtes,
-         |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-         |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-         |banded AS ($bandKeys),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-         |cand AS (SELECT DISTINCT a.doc_id AS aid, b.doc_id AS bid
-         |  FROM banded a JOIN banded b
-         |  ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
-         |inter AS (SELECT c.aid, c.bid, count(*) AS cnt
-         |  FROM cand c
-         |  JOIN sh x ON x.doc_id = c.aid
-         |  JOIN sh y ON y.doc_id = c.bid AND y.s = x.s
-         |  GROUP BY 1, 2),
-         |ver AS (SELECT i.aid, i.bid FROM inter i
-         |  JOIN sz sa ON sa.doc_id = i.aid
-         |  JOIN sz sb ON sb.doc_id = i.bid
-         |  WHERE i.cnt::DOUBLE >= 0.3 * (sa.sz + sb.sz - i.cnt)),
-         |rej1 AS (SELECT DISTINCT bid FROM ver
-         |  WHERE bid % 2 = 0 AND aid % 2 = 0 AND aid < bid),
-         |acc1 AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 0
-         |  AND doc_id NOT IN (SELECT bid FROM rej1)),
-         |rej2 AS (SELECT DISTINCT bid FROM ver WHERE bid % 2 = 1
-         |  AND (aid IN (SELECT doc_id FROM acc1)
-         |       OR (aid % 2 = 1 AND aid < bid))),
-         |acc2 AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 1
-         |  AND doc_id NOT IN (SELECT bid FROM rej2))""".stripMargin
-    }
-
-    // Parameterized BPE block (q137/q139/q141): over a source CTE
-    // exposing (doc_id, text), emits the piece vocab (frequent words +
-    // char alphabet, min-id on collisions), relational best-match
-    // lengths, the greedy MaxMatch walk as a recursive CTE, and
-    // per-doc piece counts/digests in `seq`. Every multiply-referenced
-    // stage is AS MATERIALIZED (the bpeLearnCtes lesson): DuckDB
-    // inlines plain CTEs per reference, so `ta`/`words`/`pieces`/
-    // `bestid` would each re-expand their WHOLE upstream — including
-    // an expensive caller chain like q141's streamed-curation `corp` —
-    // once per consumer. Measured on the q141 twin: ~20 min inlined →
-    // ~2 min materialized, same rows.
-    def bpePieceCtes(srcCte: String): String =
-      s"""ta AS MATERIALIZED (SELECT doc_id, $toksSql AS arr
-         |  FROM $srcCte),
-         |toks AS MATERIALIZED (SELECT doc_id, unnest(arr) AS tok,
-         |    unnest(range(1, len(arr) + 1)) AS ord
-         |  FROM ta WHERE len(arr) > 0),
-         |words AS MATERIALIZED (SELECT DISTINCT tok FROM toks),
-         |wv0 AS (SELECT tok AS token, CAST(sum(c) AS BIGINT) AS cnt
-         |  FROM (SELECT tok, count(*) AS c FROM toks GROUP BY tok)
-         |  GROUP BY tok HAVING sum(c) >= 5
-         |  ORDER BY cnt DESC, token LIMIT 200),
-         |wv AS (SELECT token AS piece,
-         |    CAST(row_number() OVER (ORDER BY cnt DESC, token) AS INTEGER)
-         |      AS id FROM wv0),
-         |wpos AS MATERIALIZED (SELECT tok,
-         |    CAST(unnest(range(1, length(tok) + 1)) AS INTEGER) AS p
-         |  FROM words),
-         |alpha AS (SELECT ch,
-         |    CAST(200 + row_number() OVER (ORDER BY ch) AS INTEGER) AS id
-         |  FROM (SELECT DISTINCT substr(tok, p, 1) AS ch FROM wpos)),
-         |pieces AS MATERIALIZED (SELECT piece, MIN(id) AS id FROM (
-         |    SELECT piece, id FROM wv
-         |    UNION ALL SELECT ch AS piece, id FROM alpha) GROUP BY piece),
-         |lens AS (SELECT DISTINCT CAST(length(piece) AS INTEGER) AS l
-         |  FROM pieces),
-         |best AS (SELECT w.tok, w.p, MAX(length(pc.piece)) AS blen
-         |  FROM wpos w JOIN lens ln ON ln.l <= length(w.tok) - w.p + 1
-         |  JOIN pieces pc ON pc.piece = substr(w.tok, w.p, ln.l)
-         |  GROUP BY w.tok, w.p),
-         |bestid AS MATERIALIZED (SELECT b.tok, b.p,
-         |    CAST(b.blen AS INTEGER) AS blen, pc.id
-         |  FROM best b JOIN pieces pc
-         |    ON pc.piece = substr(b.tok, b.p, b.blen)),
-         |greedy AS (
-         |  SELECT tok, CAST(1 AS INTEGER) AS p, CAST(0 AS INTEGER) AS step
-         |    FROM words
-         |  UNION ALL
-         |  SELECT g.tok, CAST(g.p + b.blen AS INTEGER),
-         |      CAST(g.step + 1 AS INTEGER)
-         |    FROM greedy g JOIN bestid b ON b.tok = g.tok AND b.p = g.p),
-         |wp AS MATERIALIZED (SELECT g.tok, g.step, b.id
-         |  FROM greedy g JOIN bestid b ON b.tok = g.tok AND b.p = g.p),
-         |seq AS MATERIALIZED (SELECT t.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_pieces,
-         |    string_agg(CAST(wp.id AS VARCHAR), ' '
-         |      ORDER BY t.ord, wp.step) AS ids_str
-         |  FROM toks t JOIN wp ON wp.tok = t.tok
-         |  GROUP BY t.doc_id)""".stripMargin
-
-    // q137/q139's instantiation: the compound-salted corpus
-    val bpeSeqCtes: String =
-      s"""docs2 AS (SELECT doc_id,
-         |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-         |      AS text FROM documents),
-         |${bpePieceCtes("docs2")}""".stripMargin
-
-    // q180: the unigram-LM Viterbi twin. The builder CTEs restate
-    // Corpus.buildUnigramVocab/collectUnigramPieces (substring
-    // candidates weighted by token occurrences, alphabet always kept,
-    // (cnt desc, piece) selection + ids, HUGEINT floor-div costs), and
-    // the DP unrolls as `maxW` chained per-position stages — stage k
-    // keeps, per word, ONE row: the (cost, path)-minimal segmentation
-    // of the word's first k characters, `path` being the pieces joined
-    // by chr(1) so `ORDER BY cost, path` under binary collation is
-    // EXACTLY the kernel's UTF-8-byte tie-break. Word length is capped
-    // by construction (base tokens ≤ 8 chars, the salt compound ≤ 16),
-    // so the unroll is total, not a truncation. Every stage is AS
-    // MATERIALIZED — ub{k} is referenced by up to `maxL` later stages
-    // plus the final per-length pick, and DuckDB inlines plain CTEs
-    // per reference (the bpePieceCtes lesson).
-    // the DP half alone, prefix- and cost-table-parameterized so a
-    // SECOND Viterbi pass (q184's hard-EM re-encode, over re-estimated
-    // costs) unrolls from the same generator: emits {p}b0..{p}b{maxW},
-    // {p}seg (per-word segmentation: ids, piece count, total cost) and
-    // {p}enc (per-doc rollup incl. the exact vit_cost) over the shared
-    // utc/utoks word feed, reading piece costs from `costCte`
-    def unigramDpCtes(p: String, costCte: String, maxL: Int,
-        maxW: Int): String = {
-      val stages = (1 to maxW).map { k =>
-        val cands = (math.max(0, k - maxL) until k).map { j =>
-          s"""SELECT b.w AS w, b.cost + pc.cost AS cost,
-             |      b.path || chr(1) || pc.piece AS path,
-             |      CASE WHEN b.ids = '' THEN CAST(pc.id AS VARCHAR)
-             |        ELSE b.ids || ' ' || CAST(pc.id AS VARCHAR) END AS ids,
-             |      b.n + 1 AS n
-             |    FROM ${p}b$j b JOIN $costCte pc ON pc.plen = ${k - j}
-             |      AND pc.piece = substr(b.w, ${j + 1}, ${k - j})
-             |    WHERE length(b.w) >= $k""".stripMargin
-        }.mkString("\n    UNION ALL\n")
-        s"""${p}b$k AS MATERIALIZED (SELECT w, cost, path, ids, n FROM (
-           |  SELECT w, cost, path, ids, n, row_number() OVER (
-           |      PARTITION BY w ORDER BY cost, path) AS rn FROM (
-           |$cands
-           |  )) WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      val pick = (1 to maxW)
-        .map(k => s"SELECT w, ids, n, cost FROM ${p}b$k WHERE length(w) = $k")
-        .mkString("\n  UNION ALL\n  ")
-      s"""${p}b0 AS (SELECT tok AS w, CAST(0 AS BIGINT) AS cost, '' AS path,
-         |    '' AS ids, 0 AS n FROM utc),
-         |$stages,
-         |${p}seg AS MATERIALIZED (
-         |  $pick),
-         |${p}enc AS (SELECT t.doc_id, CAST(sum(s.n) AS BIGINT) AS n_pieces,
-         |    CAST(sum(s.cost) AS BIGINT) AS vit_cost,
-         |    md5(string_agg(s.ids, ' ' ORDER BY t.ord)) AS ids_md5
-         |  FROM utoks t JOIN ${p}seg s ON s.w = t.tok
-         |  GROUP BY 1)""".stripMargin
-    }
-
-    def unigramCtes(maxL: Int, minCount: Long, maxSize: Int,
-        scale: Long, maxW: Int): String = {
-      s"""uta AS MATERIALIZED (SELECT doc_id, $toksSql AS arr FROM docs2),
-         |utoks AS MATERIALIZED (SELECT doc_id, unnest(arr) AS tok,
-         |    unnest(range(1, len(arr) + 1)) AS ord
-         |  FROM uta WHERE len(arr) > 0),
-         |utc AS MATERIALIZED (SELECT tok, CAST(count(*) AS BIGINT) AS wc
-         |  FROM utoks GROUP BY tok),
-         |usub AS MATERIALIZED (
-         |  SELECT substr(tok, i, l) AS piece, CAST(sum(wc) AS BIGINT) AS cnt
-         |  FROM (SELECT tok, wc, l,
-         |        unnest(range(1, length(tok) - l + 2)) AS i
-         |      FROM (SELECT tok, wc,
-         |          unnest(range(1, least(length(tok), $maxL) + 1)) AS l
-         |        FROM utc))
-         |  GROUP BY 1),
-         |umulti AS (SELECT piece, cnt FROM usub
-         |  WHERE length(piece) >= 2 AND cnt >= $minCount
-         |  ORDER BY cnt DESC, piece LIMIT $maxSize),
-         |upieces AS (SELECT piece, cnt,
-         |    CAST(row_number() OVER (ORDER BY cnt DESC, piece) AS INTEGER)
-         |      AS id
-         |  FROM (SELECT * FROM umulti UNION ALL
-         |    SELECT piece, cnt FROM usub WHERE length(piece) = 1)),
-         |utot AS (SELECT CAST(sum(cnt) AS HUGEINT) AS t FROM upieces),
-         |upc AS MATERIALIZED (SELECT p.piece, p.id,
-         |    CAST(length(p.piece) AS INTEGER) AS plen,
-         |    CAST(1 + (CAST($scale AS HUGEINT) * (u.t - p.cnt)) // u.t
-         |      AS BIGINT) AS cost
-         |  FROM upieces p, utot u),
-         |${unigramDpCtes("u", "upc", maxL, maxW)}""".stripMargin
-    }
-
-    // q142: the same 16 learn-BPE iterations the Spark side runs,
-    // UNROLLED as chained CTE stages (k is a bounded constant, so the
-    // loop unrolls at SQL-generation time). Symbols ride sentinel-
-    // wrapped strings — ESC||sym||FS per symbol — so adjacent pair
-    // occurrences share no characters and DuckDB's left-to-right
-    // non-overlapping replace() IS the greedy BPE merge; a merged
-    // symbol is strictly longer than its left half, so no within-pass
-    // cascade on either engine. Stages past corpus exhaustion (blt$i
-    // empty — fewer than k learnable merges) propagate state unchanged
-    // via LEFT JOIN ON true, mirroring the Spark loop's early stop; a
-    // CROSS JOIN would empty every later blw and silently desync the
-    // q143/q145/q146/q150 twins on sparse corpora.
-    val bpeLearnK = 16
-    val bpeLearnUnwrapRe =
-      "regexp_extract_all(syms, e'\\x1b([^\\x1c]*)\\x1c', 1)"
-    // the k learn iterations as chained CTEs (blwc word counts, blw0
-    // char-wrapped symbols, then per stage: pair explode → top-1 →
-    // replace-apply). `word` rides the whole chain so the APPLY twin
-    // (q143) can read each word's final segmentation off blw{k}.
-    def bpeLearnChainCtes(sourceTable: String, minPairCount: Long): String = {
-      val wrapInit = "regexp_replace(word, '(.)', e'\\x1b\\\\1\\x1c', 'g')"
-      // every stage is AS MATERIALIZED: each blw/blt is referenced
-      // twice downstream, and DuckDB inlines non-materialized CTEs —
-      // a k-deep chain would otherwise expand to 2^k scans. The HAVING
-      // floor mirrors learnBpeMerges' minPairCount (>= 1 is a no-op,
-      // which is what the q142-family default instantiates); a stage
-      // whose best pair misses the floor leaves blt$i EMPTY and the
-      // LEFT JOIN propagates state unchanged — the exhaustion path
-      // q160 gates on a live row
-      val stages = (0 until bpeLearnK).map { i =>
-        s"""blp$i AS MATERIALIZED (SELECT a[u] AS lhs, a[u + 1] AS rhs, cnt FROM
-           |  (SELECT cnt, a, unnest(range(1, len(a))) AS u FROM
-           |    (SELECT cnt, $bpeLearnUnwrapRe AS a FROM blw$i))),
-           |blt$i AS MATERIALIZED (SELECT lhs, rhs, CAST(sum(cnt) AS BIGINT) AS c
-           |  FROM blp$i GROUP BY 1, 2
-           |  HAVING sum(cnt) >= $minPairCount
-           |  ORDER BY c DESC, lhs, rhs LIMIT 1),
-           |blw${i + 1} AS MATERIALIZED (SELECT w.word, w.cnt,
-           |  CASE WHEN t.lhs IS NULL THEN w.syms ELSE replace(w.syms,
-           |    e'\\x1b' || t.lhs || e'\\x1c\\x1b' || t.rhs || e'\\x1c',
-           |    e'\\x1b' || t.lhs || t.rhs || e'\\x1c') END AS syms
-           |  FROM blw$i w LEFT JOIN blt$i t ON true)""".stripMargin
-      }.mkString(",\n")
-      s"""blwc AS MATERIALIZED (SELECT token AS word,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM (SELECT unnest($toksSql) AS token FROM $sourceTable)
-         |  GROUP BY 1),
-         |blw0 AS MATERIALIZED (SELECT word, cnt, $wrapInit AS syms
-         |  FROM blwc WHERE length(word) >= 2),
-         |$stages""".stripMargin
-    }
-    val bpeLearnCtes: String = bpeLearnChainCtes("documents", 1L)
-    // q142: the learned merge table itself
-    val bpeLearnOracle: String = {
-      val ranks = (0 until bpeLearnK).map { i =>
-        s"""SELECT CAST(${i + 1} AS INTEGER) AS merge_rank, lhs, rhs,
-           |  lhs || rhs AS merged, c AS pair_count FROM blt$i""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH $bpeLearnCtes
-         |$ranks
-         |ORDER BY merge_rank""".stripMargin
-    }
-    // q143: rank-ordered APPLY of the learned merges — per-word symbol
-    // counts read off the final stage's segmentation (words of length
-    // 1 were never in the chain: one symbol each; docs with no tokens
-    // count 0; null text stays null)
-    val bpeLearnApplyOracle: String =
-      s"""WITH $bpeLearnCtes,
-         |wfin AS (SELECT word,
-         |    CAST(len($bpeLearnUnwrapRe) AS BIGINT) AS wc
-         |  FROM blw$bpeLearnK),
-         |dtk AS (SELECT doc_id, unnest($toksSql) AS word FROM documents),
-         |dcnt AS (SELECT d.doc_id, SUM(COALESCE(w.wc, 1)) AS n
-         |  FROM dtk d LEFT JOIN wfin w USING (word) GROUP BY 1)
-         |SELECT doc.doc_id,
-         |  CASE WHEN doc.text IS NULL THEN NULL
-         |    ELSE CAST(COALESCE(dc.n, 0) AS BIGINT) END AS n_bpe_tokens
-         |FROM documents doc LEFT JOIN dcnt dc USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-
-    val dedupIndexOracle: String =
-      s"""$dedupIndexCtes
-         |SELECT doc_id, CAST(1 AS BIGINT) AS batch FROM acc1
-         |UNION ALL
-         |SELECT doc_id, CAST(2 AS BIGINT) AS batch FROM acc2
-         |ORDER BY doc_id""".stripMargin
-
-    // q136: erase doc_id%11=0 from the index, then replay EXACTLY those
-    // docs as batch 3 — judged fresh against the post-removal index
-    // (index witness on any id, then smaller-id within the batch)
-    val dedupUnlearnOracle: String =
-      s"""$dedupIndexCtes,
-         |allacc AS (SELECT doc_id, 1 AS b FROM acc1
-         |  UNION ALL SELECT doc_id, 2 FROM acc2),
-         |rem AS (SELECT doc_id FROM allacc WHERE doc_id % 11 = 0),
-         |idx3 AS (SELECT doc_id FROM allacc
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM rem)),
-         |rej3 AS (SELECT DISTINCT bid FROM ver
-         |  WHERE bid IN (SELECT doc_id FROM rem)
-         |  AND (aid IN (SELECT doc_id FROM idx3)
-         |       OR (aid IN (SELECT doc_id FROM rem) AND aid < bid))),
-         |acc3 AS (SELECT doc_id FROM rem
-         |  WHERE doc_id NOT IN (SELECT bid FROM rej3))
-         |SELECT a.doc_id, CAST(a.b AS BIGINT) AS batch FROM allacc a
-         |WHERE a.doc_id NOT IN (SELECT doc_id FROM rem)
-         |UNION ALL
-         |SELECT doc_id, CAST(3 AS BIGINT) AS batch FROM acc3
-         |ORDER BY doc_id""".stripMargin
-
-    def simhashCtes(bits: Int): String = {
-      val sums = (0 until bits).map(b =>
-        s"sum(CASE WHEN (hv >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS s$b")
-        .mkString(", ")
-      val assemble = (0 until bits).map(b =>
-        s"CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-      s"""toks AS (SELECT doc_id, unnest(list_distinct($toksSql)) AS tok
-         |  FROM documents),
-         |h AS (SELECT doc_id, ${pHashSql("tok")} AS hv FROM toks),
-         |bits AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
-         |sig AS (SELECT doc_id, CAST($assemble AS BIGINT) AS simhash
-         |  FROM bits)""".stripMargin
-    }
-
-    // q135's scrub + model + gate, then the q128/q129 two-batch dedup
-    // policy over the GATED SCRUBBED corpus — the full streaming
-    // pipeline's batch-equivalent replay. CTE chain through gacc2;
-    // shared by q140 (accept list + margins) and q141 (the packs
-    // pipeline over the accepted corpus).
-    val streamCurateCtes: String = {
-      val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ipRe = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
-      val phoneRe = "\\+\\d[\\d\\- ]{7,}\\d"
-      val toksOfSc =
-        "list_filter(string_split_regex(sc, '\\s+'), t -> strlen(t) > 0)"
-      val marginSql =
-        "n.nneg * coalesce(dd.dp, 0) - n.npos * coalesce(dd.dn, 0)"
-      val gBandKeys = (0 until 4).map { b =>
-        s"SELECT doc_id, $b AS band, CAST(gmh${2 * b} AS VARCHAR) || '_' " +
-          s"|| CAST(gmh${2 * b + 1} AS VARCHAR) AS key FROM gsig"
-      }.mkString(" UNION ALL ")
-      val gMhTerms = Dedup.minhashCoeffs(8).zipWithIndex.map {
-        case ((a, b), i) =>
-          s"min((hv * $a + $b) % ${Dedup.MinhashP}) AS gmh$i"
-      }.mkString(", ")
-      s"""pii AS (SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id ||
-         |      '@mail.example.com' ELSE '' END ||
-         |    CASE WHEN doc_id % 4 = 0 THEN ' at 10.' || (doc_id % 200) ||
-         |      '.0.1' ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 0 THEN ' call +1 555-01' ||
-         |      lpad((doc_id % 100)::VARCHAR, 2, '0') ELSE '' END AS t
-         |  FROM documents),
-         |sA AS (SELECT doc_id,
-         |    regexp_replace(t, '$emailRe', '<EMAIL>', 'g') AS t1 FROM pii),
-         |sB AS (SELECT doc_id,
-         |    regexp_replace(t1, '$ipRe', '<IP>', 'g') AS t2 FROM sA),
-         |scr AS (SELECT doc_id,
-         |    regexp_replace(t2, '$phoneRe', '<PHONE>', 'g') AS sc FROM sB),
-         |tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-         |  WHERE text IS NOT NULL),
-         |t2d AS (SELECT doc_id, unnest(toks) AS tok FROM tk),
-         |hh AS (SELECT doc_id, ${pHashSql("tok")} AS hv FROM t2d),
-         |v AS (SELECT doc_id, hv % 64 AS bucket,
-         |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-         |    AS BIGINT) AS v
-         |  FROM hh GROUP BY 1, 2),
-         |seed AS (SELECT doc_id, (lang = 'en') AS lab FROM documents
-         |  WHERE doc_id % 5 <> 0),
-         |smod AS (SELECT bucket,
-         |    SUM(CASE WHEN lab THEN v ELSE 0 END) AS sp,
-         |    SUM(CASE WHEN NOT lab THEN v ELSE 0 END) AS sn
-         |  FROM v JOIN seed USING (doc_id) GROUP BY 1),
-         |n AS (SELECT SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS npos,
-         |    SUM(CASE WHEN NOT lab THEN 1 ELSE 0 END) AS nneg
-         |  FROM seed),
-         |tksc AS (SELECT doc_id, $toksOfSc AS toks FROM scr
-         |  WHERE sc IS NOT NULL),
-         |t2s AS (SELECT doc_id, unnest(toks) AS tok FROM tksc),
-         |hs AS (SELECT doc_id, ${pHashSql("tok")} AS hv FROM t2s),
-         |vs AS (SELECT doc_id, hv % 64 AS bucket,
-         |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-         |    AS BIGINT) AS v
-         |  FROM hs GROUP BY 1, 2),
-         |dd AS (SELECT vs.doc_id, SUM(vs.v * smod.sp) AS dp,
-         |    SUM(vs.v * smod.sn) AS dn
-         |  FROM vs JOIN smod USING (bucket) GROUP BY 1),
-         |gated AS (SELECT scr.doc_id, scr.sc AS text,
-         |    CAST($marginSql AS BIGINT) AS margin
-         |  FROM scr CROSS JOIN n
-         |  LEFT JOIN dd ON dd.doc_id = scr.doc_id
-         |  WHERE scr.sc IS NOT NULL AND $marginSql > 0),
-         |gtk AS (SELECT doc_id, $toksSql AS tk FROM gated),
-         |gsh AS (SELECT doc_id,
-         |    unnest(list_distinct(${shinglesSql("tk")})) AS s FROM gtk),
-         |gh AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM gsh),
-         |gsig AS (SELECT doc_id, $gMhTerms FROM gh GROUP BY doc_id),
-         |gband AS ($gBandKeys),
-         |gsz AS (SELECT doc_id, count(*) AS sz FROM gsh GROUP BY 1),
-         |gcand AS (SELECT DISTINCT a.doc_id AS aid, b.doc_id AS bid
-         |  FROM gband a JOIN gband b
-         |  ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id),
-         |ginter AS (SELECT c.aid, c.bid, count(*) AS cnt
-         |  FROM gcand c
-         |  JOIN gsh x ON x.doc_id = c.aid
-         |  JOIN gsh y ON y.doc_id = c.bid AND y.s = x.s
-         |  GROUP BY 1, 2),
-         |gver AS (SELECT i.aid, i.bid FROM ginter i
-         |  JOIN gsz sa ON sa.doc_id = i.aid
-         |  JOIN gsz sb ON sb.doc_id = i.bid
-         |  WHERE i.cnt::DOUBLE >= 0.3 * (sa.sz + sb.sz - i.cnt)),
-         |grej1 AS (SELECT DISTINCT bid FROM gver
-         |  WHERE bid % 2 = 0 AND aid % 2 = 0 AND aid < bid),
-         |gacc1 AS (SELECT doc_id FROM gated WHERE doc_id % 2 = 0
-         |  AND doc_id NOT IN (SELECT bid FROM grej1)),
-         |grej2 AS (SELECT DISTINCT bid FROM gver WHERE bid % 2 = 1
-         |  AND (aid IN (SELECT doc_id FROM gacc1)
-         |       OR (aid % 2 = 1 AND aid < bid))),
-         |gacc2 AS (SELECT doc_id FROM gated WHERE doc_id % 2 = 1
-         |  AND doc_id NOT IN (SELECT bid FROM grej2))""".stripMargin
-    }
-
-    // q154/q156 share this twin: the Bloom path is gated on EQUALITY
-    // with the exact operator (same relationship as q96 to q71)
-    val tokenDecontamSql: String =
-      s"""WITH RECURSIVE
-         |$bpeSeqCtes,
-         |tws AS (SELECT doc_id, string_split(ids_str, ' ') AS ids
-         |  FROM seq),
-         |twin AS (SELECT doc_id,
-         |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-         |  FROM (SELECT doc_id, ids,
-         |      unnest(range(1, len(ids) - 13 + 2)) AS u
-         |    FROM tws WHERE len(ids) >= 13)),
-         |evq AS (SELECT e.doc_id,
-         |    l1.ids || COALESCE(l2.ids, CAST([] AS VARCHAR[])) AS ids
-         |  FROM documents e
-         |  JOIN tws l1 ON l1.doc_id = e.doc_id
-         |  LEFT JOIN tws l2 ON l2.doc_id = e.doc_id + 1
-         |  WHERE e.doc_id % 50 = 0),
-         |evw AS (SELECT doc_id,
-         |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-         |  FROM (SELECT doc_id, ids,
-         |      unnest(range(1, len(ids) - 13 + 2)) AS u
-         |    FROM evq WHERE len(ids) >= 13)),
-         |evg AS (SELECT DISTINCT gram FROM evw)
-         |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         |FROM twin t JOIN evg USING (gram)
-         |WHERE t.doc_id % 50 <> 0
-         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
-
-    Map(
-      "q01_pruned_scan" ->
-        """SELECT l_orderkey, l_linenumber, l_quantity,
-          |  CAST(l_shipdate AS DATE) AS ship_date
-          |FROM lineitem
-          |WHERE CAST(l_shipdate AS DATE)
-          |  BETWEEN DATE '1996-03-01' AND DATE '1996-06-30'
-          |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "q02_project_rename" ->
-        """SELECT c_custkey AS custkey, c_name AS name, c_mktsegment AS segment
-          |FROM customer ORDER BY custkey""".stripMargin,
-
-      "q03_string_clean" ->
-        """SELECT p_partkey, translate(p_name, ' ', '-') AS name_slug,
-          |  replace(p_brand, '#', '') AS brand_clean,
-          |  lower(p_type) AS type_lower
-          |FROM part ORDER BY p_partkey""".stripMargin,
-
-      "q04_value_remap" ->
-        """SELECT CASE o_orderstatus WHEN 'O' THEN 'OPEN' WHEN 'F' THEN 'FINISHED'
-          |  WHEN 'P' THEN 'PARTIAL' ELSE o_orderstatus END AS status,
-          |  CAST(count(*) AS BIGINT) AS n
-          |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-
-      "q05_null_fill_cast" ->
-        """SELECT event_id, CAST(ts AS DATE) AS event_date,
-          |  CAST(user_id AS INTEGER) AS user_id_int,
-          |  coalesce(CASE WHEN event_type = 'error' THEN NULL ELSE value END, 0.0)
-          |    AS value_filled
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      "q06_round_conditional" ->
-        """SELECT l_orderkey, l_linenumber,
-          |  CASE WHEN l_returnflag = 'A'
-          |    THEN round(CAST(l_extendedprice / 8 AS DECIMAL(38,9)), 1)::DOUBLE
-          |    ELSE round(CAST(l_extendedprice / 8 AS DECIMAL(38,9)), 3)::DOUBLE
-          |  END AS price_rounded
-          |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "q07_unpivot" ->
-        """SELECT l_orderkey, l_linenumber, measure, val FROM (
-          |  SELECT l_orderkey, l_linenumber, 'quantity' AS measure,
-          |    l_quantity AS val FROM lineitem
-          |  UNION ALL SELECT l_orderkey, l_linenumber, 'extendedprice',
-          |    l_extendedprice FROM lineitem
-          |  UNION ALL SELECT l_orderkey, l_linenumber, 'discount', l_discount
-          |    FROM lineitem
-          |  UNION ALL SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem
-          |) ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-
-      "q08_union_by_name" ->
-        """SELECT c_custkey, c_mktsegment AS segment, true AS is_building
-          |FROM customer WHERE c_mktsegment = 'BUILDING'
-          |UNION ALL
-          |SELECT c_custkey, c_mktsegment, NULL
-          |FROM customer WHERE c_mktsegment <> 'BUILDING'
-          |ORDER BY c_custkey""".stripMargin,
-
-      "q60_pivot" ->
-        """SELECT l_returnflag,
-          |  sum(CASE WHEN l_linestatus = 'F'
-          |    THEN CAST(l_quantity AS DECIMAL(18,2)) END)::DOUBLE AS qty_f,
-          |  sum(CASE WHEN l_linestatus = 'O'
-          |    THEN CAST(l_quantity AS DECIMAL(18,2)) END)::DOUBLE AS qty_o
-          |FROM lineitem GROUP BY l_returnflag
-          |ORDER BY l_returnflag""".stripMargin,
-
-      "q61_date_spine" ->
-        """WITH b AS (SELECT min(CAST(ts AS DATE)) AS lo,
-          |  max(CAST(ts AS DATE)) AS hi FROM events),
-          |spine AS (SELECT unnest(generate_series(lo, hi,
-          |  INTERVAL 1 DAY))::DATE AS d FROM b),
-          |ev AS (SELECT CAST(ts AS DATE) AS d, event_id FROM events)
-          |SELECT spine.d AS d, CAST(count(ev.event_id) AS BIGINT) AS n_events
-          |FROM spine LEFT JOIN ev ON spine.d = ev.d
-          |GROUP BY spine.d ORDER BY d""".stripMargin,
-
-      "q09_distinct" ->
-        """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-          |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-      "q10_null_counts" ->
-        """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-          |  CAST(count(text) AS BIGINT) AS n_text,
-          |  CAST(count(lang) AS BIGINT) AS n_lang,
-          |  CAST(count(source) AS BIGINT) AS n_source
-          |FROM documents""".stripMargin,
-
-      "q11_unique_check" ->
-        """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
-          |FROM orders GROUP BY o_custkey HAVING count(*) > 1
-          |ORDER BY o_custkey""".stripMargin,
-
-      "q12_upsert_merge" ->
-        """SELECT o_orderkey, o_orderstatus AS status, o_totalprice AS totalprice
-          |FROM orders WHERE o_orderkey % 3 <> 0 AND o_orderkey % 2 <> 0
-          |UNION ALL
-          |SELECT o_orderkey, 'U', o_totalprice / 2
-          |FROM orders WHERE o_orderkey % 2 = 0
-          |ORDER BY o_orderkey""".stripMargin,
-
-      "q13_ffill_candles" ->
-        s"""WITH ${phSql(fx = false)}
-           |$ffillSelectSql
-           |FROM ph
-           |WINDOW w AS (PARTITION BY symbol ORDER BY date_stamp $ffillFrame)
-           |ORDER BY symbol, date_stamp""".stripMargin,
-
-      "q58_ffill_incremental" ->
-        s"""WITH ${phSql(fx = false)},
-           |filled AS (
-           |$ffillSelectSql
-           |FROM ph
-           |WINDOW w AS (PARTITION BY symbol ORDER BY date_stamp $ffillFrame))
-           |SELECT * FROM filled WHERE date_stamp >= DATE '2024-01-15'
-           |ORDER BY symbol, date_stamp""".stripMargin,
-
-      "q14_stg_stock_prices" ->
-        s"""WITH ${phSql(fx = false)},
-           |rounded AS (
-           |  SELECT date_stamp, symbol,
-           |    round(CAST(open AS DECIMAL(38,9)), 2)::DOUBLE AS open,
-           |    round(CAST(high AS DECIMAL(38,9)), 2)::DOUBLE AS high,
-           |    round(CAST(low AS DECIMAL(38,9)), 2)::DOUBLE AS low,
-           |    round(CAST(close AS DECIMAL(38,9)), 2)::DOUBLE AS close,
-           |    CAST(volume AS BIGINT) AS volume
-           |  FROM ph)
-           |$ffillSelectSql
-           |FROM rounded
-           |WINDOW w AS (PARTITION BY symbol ORDER BY date_stamp $ffillFrame)
-           |ORDER BY symbol, date_stamp""".stripMargin,
-
-      "q15_stg_fx_prices" ->
-        s"""WITH ${phSql(fx = true)},
-           |rounded AS (
-           |  SELECT date_stamp, symbol,
-           |    CASE WHEN symbol = 'USDJPY'
-           |      THEN round(CAST(open AS DECIMAL(38,9)), 3)::DOUBLE
-           |      ELSE round(CAST(open AS DECIMAL(38,9)), 5)::DOUBLE END AS open,
-           |    CASE WHEN symbol = 'USDJPY'
-           |      THEN round(CAST(high AS DECIMAL(38,9)), 3)::DOUBLE
-           |      ELSE round(CAST(high AS DECIMAL(38,9)), 5)::DOUBLE END AS high,
-           |    CASE WHEN symbol = 'USDJPY'
-           |      THEN round(CAST(low AS DECIMAL(38,9)), 3)::DOUBLE
-           |      ELSE round(CAST(low AS DECIMAL(38,9)), 5)::DOUBLE END AS low,
-           |    CASE WHEN symbol = 'USDJPY'
-           |      THEN round(CAST(close AS DECIMAL(38,9)), 3)::DOUBLE
-           |      ELSE round(CAST(close AS DECIMAL(38,9)), 5)::DOUBLE END AS close,
-           |    CAST(volume AS BIGINT) AS volume
-           |  FROM ph)
-           |$ffillSelectSql
-           |FROM rounded
-           |WINDOW w AS (PARTITION BY symbol ORDER BY date_stamp $ffillFrame)
-           |ORDER BY symbol, date_stamp""".stripMargin,
-
-      "q16_dim_symbols_union" ->
-        """SELECT symbol, name, sector, industry, asset_type,
-          |  in_sp400, in_sp500, in_sp600, date_stamp
-          |FROM (
-          |  SELECT symbol, NULL AS name, NULL AS sector, NULL AS industry,
-          |    'FX' AS asset_type, false AS in_sp400, false AS in_sp500,
-          |    false AS in_sp600, CAST(NULL AS DATE) AS date_stamp
-          |  FROM (SELECT DISTINCT event_type AS symbol FROM events)
-          |  UNION ALL
-          |  SELECT n_name, lower(n_name), 'R' || CAST(n_regionkey AS VARCHAR),
-          |    'Missing', 'Stock', n_regionkey = 0, n_regionkey = 1,
-          |    n_regionkey = 2, DATE '2024-01-01'
-          |  FROM nation
-          |) ORDER BY symbol""".stripMargin,
-
-      "q17_referential_orphans" ->
-        """SELECT c_custkey, c_name FROM customer
-          |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-          |ORDER BY c_custkey""".stripMargin,
-
-      "q18_groupby_agg" ->
-        """SELECT l_returnflag, l_linestatus,
-          |  sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE AS sum_qty,
-          |  sum(CAST(l_extendedprice AS DECIMAL(18,2)))::DOUBLE AS sum_base,
-          |  sum(CAST(l_discount AS DECIMAL(18,2)))::DOUBLE / count(*) AS avg_disc,
-          |  CAST(count(*) AS BIGINT) AS n
-          |FROM lineitem GROUP BY l_returnflag, l_linestatus
-          |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-      "q19_join_agg" ->
-        """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
-          |  sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE AS revenue
-          |FROM orders
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-      "q20_topk" ->
-        """SELECT o_custkey,
-          |  sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE AS revenue
-          |FROM orders GROUP BY o_custkey
-          |ORDER BY revenue DESC, o_custkey LIMIT 10""".stripMargin,
-
-      "q21_window_funcs" ->
-        """SELECT event_id, user_id, value,
-          |  CAST(row_number() OVER (PARTITION BY user_id
-          |    ORDER BY value DESC, event_id) AS INTEGER) AS value_rank,
-          |  lag(value, 1) OVER (PARTITION BY user_id ORDER BY event_id)
-          |    AS prev_value,
-          |  sum(CAST(value AS DECIMAL(18,2))) OVER w3::DOUBLE
-          |    / count(*) OVER w3 AS mov_avg3
-          |FROM events
-          |WINDOW w3 AS (PARTITION BY user_id ORDER BY event_id
-          |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-          |ORDER BY event_id""".stripMargin,
-
-      "q22_sessionize" ->
-        """WITH o AS (
-          |  SELECT user_id,
-          |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-          |      OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id
-          |        ORDER BY ts)) > 1800000000
-          |    THEN 1 ELSE 0 END AS brk
-          |  FROM events)
-          |SELECT user_id, CAST(sum(brk) AS BIGINT) AS n_sessions,
-          |  CAST(count(*) AS BIGINT) AS n_events
-          |FROM o GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      "q59_session_window" ->
-        """WITH o AS (
-          |  SELECT user_id, ts,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-          |    THEN 1 ELSE 0 END AS brk
-          |  FROM events
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |sess AS (
-          |  SELECT user_id, ts,
-          |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          |  FROM o)
-          |SELECT (epoch_us(min(ts)) // 1000000) AS sess_start, user_id,
-          |  CAST(count(*) AS BIGINT) AS n_events
-          |FROM sess GROUP BY user_id, sid
-          |ORDER BY user_id, sess_start""".stripMargin,
-
-      "q23_asof_join" ->
-        """WITH u AS (
-          |  SELECT user_id, ts AS t, 1 AS side, event_id AS l_id,
-          |    CAST(NULL AS BIGINT) AS r_id
-          |  FROM events WHERE event_type = 'purchase'
-          |  UNION ALL
-          |  SELECT user_id, ts, 0, NULL, event_id
-          |  FROM events WHERE event_type = 'click'),
-          |w AS (
-          |  SELECT user_id, side, l_id,
-          |    last_value(r_id IGNORE NULLS) OVER (PARTITION BY user_id
-          |      ORDER BY t, side, r_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id
-          |  FROM u)
-          |SELECT l_id AS purchase_id, user_id, click_id
-          |FROM w WHERE side = 1 ORDER BY purchase_id""".stripMargin,
-
-      "q24_dq_suite" ->
-        """SELECT 'accepted_values_event_type' AS check_name,
-          |  CAST(count(*) AS BIGINT) AS violations
-          |FROM events WHERE event_type NOT IN
-          |  ('click','view','purchase','signup','error') OR event_type IS NULL
-          |UNION ALL
-          |SELECT 'not_null_n_name', CAST(count(*) AS BIGINT)
-          |FROM nation WHERE n_name IS NULL
-          |UNION ALL
-          |SELECT 'relationships_nation_region', CAST(count(*) AS BIGINT)
-          |FROM nation WHERE NOT EXISTS
-          |  (SELECT 1 FROM region WHERE r_regionkey = n_regionkey)
-          |UNION ALL
-          |SELECT 'unique_n_nationkey', CAST(count(*) AS BIGINT) FROM
-          |  (SELECT n_nationkey FROM nation GROUP BY 1 HAVING count(*) > 1)
-          |ORDER BY check_name""".stripMargin,
-
-      "q25_schema_validate" ->
-        """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-          |  l_quantity, l_returnflag
-          |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "q26_price_transform" ->
-        """WITH wide AS (
-          |  SELECT CAST(ts AS DATE) AS d,
-          |    min(CASE WHEN event_type='click' THEN value END) AS o_a,
-          |    max(CASE WHEN event_type='click' THEN value END) AS h_a,
-          |    min(CASE WHEN event_type='view' THEN value END) AS l_a,
-          |    max(CASE WHEN event_type='view' THEN value END) AS c_a,
-          |    count(CASE WHEN event_type='click' THEN 1 END) AS v_a,
-          |    min(CASE WHEN event_type='purchase' THEN value END) AS o_c,
-          |    max(CASE WHEN event_type='purchase' THEN value END) AS h_c,
-          |    min(CASE WHEN event_type='signup' THEN value END) AS l_c,
-          |    max(CASE WHEN event_type='signup' THEN value END) AS c_c,
-          |    count(CASE WHEN event_type='purchase' THEN 1 END) AS v_c
-          |  FROM events GROUP BY 1)
-          |SELECT d AS date_stamp, symbol, open, high, low, close, volume FROM (
-          |  SELECT d, 'AAA' AS symbol, o_a AS open, h_a AS high, l_a AS low,
-          |    c_a AS close, v_a AS volume FROM wide
-          |  UNION ALL
-          |  SELECT d, 'USDCHF', o_c, h_c, l_c, c_c, v_c FROM wide)
-          |ORDER BY symbol, date_stamp""".stripMargin,
-
-      "q27_symbol_transform" ->
-        """SELECT translate(n_name || '.X', '.', '-') AS symbol,
-          |  lower(n_name) AS name,
-          |  coalesce(CASE WHEN n_regionkey = 0 THEN NULL
-          |    ELSE 'S' || CAST(n_regionkey AS VARCHAR) END, 'Missing') AS sector,
-          |  'Missing' AS industry,
-          |  n_regionkey = 0 AS in_sp400,
-          |  false AS in_sp500,
-          |  n_regionkey = 2 AS in_sp600,
-          |  DATE '2024-06-01' AS date_stamp
-          |FROM nation ORDER BY symbol""".stripMargin,
-
-      "q28_hash_sample" ->
-        s"""SELECT c_custkey, c_name, c_mktsegment FROM customer
-           |WHERE ${pHashSql("c_name")} % 20 = 0
-           |ORDER BY c_custkey""".stripMargin,
-
-      "q29_replace_write" ->
-        """SELECT r_regionkey AS key, r_name AS name FROM region
-          |ORDER BY key""".stripMargin,
-
-      "q43_stream_windowed" ->
-        """SELECT (epoch_us(ts) // 600000000) * 600 AS win_start, event_type,
-          |  CAST(count(*) AS BIGINT) AS n,
-          |  sum(CAST(value AS DECIMAL(18,6)))::DOUBLE AS sum_value
-          |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin,
-
-      "q45_quality_filter" ->
-        s"""WITH q AS (SELECT doc_id, $toksSql AS tk, text FROM documents),
-           |m AS (SELECT doc_id,
-           |  CAST(len(tk) AS INTEGER) AS n_tokens,
-           |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |    list_aggregate(list_transform(tk, x -> strlen(x)), 'sum')::DOUBLE
-           |      / len(tk) END AS mean_token_len,
-           |  CASE WHEN strlen(text) = 0 THEN 0.0 ELSE
-           |    (strlen(text) - strlen(regexp_replace(text,
-           |      '[^a-zA-Z0-9\\s]', '', 'g')))::DOUBLE / strlen(text)
-           |  END AS punct_ratio
-           |  FROM q)
-           |SELECT doc_id, n_tokens, mean_token_len, punct_ratio,
-           |  n_tokens >= 20 AND mean_token_len >= 3.0
-           |    AND mean_token_len <= 10.0 AND punct_ratio <= 0.2 AS keep
-           |FROM m ORDER BY doc_id""".stripMargin,
-
-      "q46_lang_stats" ->
-        s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(len($toksSql)) AS BIGINT) AS total_tokens,
-           |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           |  sum(n_chars)::DOUBLE / count(*) AS avg_chars
-           |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-      "q53_rollup" ->
-        """SELECT l_returnflag, l_linestatus,
-          |  sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE AS sum_qty,
-          |  CAST(count(*) AS BIGINT) AS n
-          |FROM lineitem
-          |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-          |ORDER BY l_returnflag ASC NULLS FIRST,
-          |  l_linestatus ASC NULLS FIRST""".stripMargin,
-
-      "q54_topk_per_group" ->
-        """WITH rev AS (
-          |  SELECT c_mktsegment, o_custkey,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE AS revenue
-          |  FROM orders JOIN customer ON o_custkey = c_custkey
-          |  GROUP BY c_mktsegment, o_custkey),
-          |ranked AS (
-          |  SELECT *, CAST(row_number() OVER (PARTITION BY c_mktsegment
-          |    ORDER BY revenue DESC, o_custkey) AS INTEGER) AS rnk
-          |  FROM rev)
-          |SELECT o_custkey, c_mktsegment, revenue, rnk
-          |FROM ranked WHERE rnk <= 3
-          |ORDER BY c_mktsegment, rnk""".stripMargin,
-
-      "q55_profile" ->
-        """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-          |  CAST(count(o_custkey) AS BIGINT) AS custkey_nonnull,
-          |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS custkey_distinct,
-          |  CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS status_distinct,
-          |  min(o_totalprice) AS price_min,
-          |  max(o_totalprice) AS price_max,
-          |  CAST(min(o_orderdate) AS DATE) AS date_min,
-          |  CAST(max(o_orderdate) AS DATE) AS date_max
-          |FROM orders""".stripMargin,
-
-      "q50_stream_dedup" ->
-        """SELECT event_id, user_id, event_type FROM events
-          |ORDER BY event_id""".stripMargin,
-
-      "q51_range_join" ->
-        """WITH ev AS (SELECT event_id, epoch_us(ts) AS ts_us FROM events),
-          |iv AS (
-          |  SELECT user_id AS iv_user, min(epoch_us(ts)) AS start_us,
-          |    min(epoch_us(ts)) + 3600000000 AS end_us
-          |  FROM events GROUP BY user_id HAVING user_id % 20 = 0)
-          |SELECT iv_user, CAST(count(*) AS BIGINT) AS n_points
-          |FROM ev JOIN iv ON ts_us BETWEEN start_us AND end_us
-          |GROUP BY iv_user ORDER BY iv_user""".stripMargin,
-
-      "q52_text_repetition" ->
-        s"""WITH q AS (SELECT doc_id, $toksSql AS tk FROM documents),
-           |g AS (SELECT doc_id, tk, ${shinglesSql("tk", 2)} AS grams FROM q)
-           |SELECT doc_id,
-           |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |    1.0 - len(list_distinct(tk))::DOUBLE / len(tk) END
-           |    AS dup_token_ratio,
-           |  CASE WHEN len(tk) < 2 THEN 0.0 ELSE
-           |    list_max(list_transform(list_distinct(grams),
-           |      gg -> len(list_filter(grams, x -> x = gg))))::DOUBLE
-           |      / len(grams) END AS top_bigram_ratio
-           |FROM g ORDER BY doc_id""".stripMargin,
-
-      "q49_stateful_sessionize" ->
-        """WITH o AS (
-          |  SELECT user_id, epoch_us(ts) AS ts_us,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-          |    THEN 1 ELSE 0 END AS brk
-          |  FROM events
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY ts))
-          |SELECT user_id, ts_us,
-          |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS BIGINT)
-          |    AS session_id
-          |FROM o ORDER BY user_id, ts_us, session_id""".stripMargin,
-
-      "q48_json_extract" ->
-        """SELECT event_type,
-          |  CAST(count(json_extract(props, '$.k')) AS BIGINT) AS n_with_k,
-          |  CAST(sum(json_extract(props, '$.k')::INTEGER) AS BIGINT) AS sum_k,
-          |  min(json_extract(props, '$.k')::INTEGER) AS min_k,
-          |  max(json_extract(props, '$.k')::INTEGER) AS max_k
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      "q30_dedup_exact" ->
-        """SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS chash,
-          |  CAST(min(doc_id) AS BIGINT) AS keep_id,
-          |  CAST(count(*) AS BIGINT) AS dup_count
-          |FROM documents GROUP BY 1 ORDER BY chash""".stripMargin,
-
-      "q31_minhash_signatures" ->
-        s"""WITH $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh)
-           |SELECT doc_id, $mhTerms
-           |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "q32_minhash_lsh_pairs" -> {
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' || " +
-            s"CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |banded AS ($bandKeys)
-           |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |FROM banded a JOIN banded b
-           |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      "q33_simhash" ->
-        s"""WITH ${simhashCtes(16)}
-           |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin,
-
-      "q44_simhash_neardup" ->
-        s"""WITH ${simhashCtes(32)},
-           |pairs AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           |    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-           |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id)
-           |SELECT id_a, id_b, hamming FROM pairs
-           |WHERE hamming <= 2 ORDER BY id_a, id_b""".stripMargin,
-
-      "q34_ngram_jaccard" ->
-        s"""WITH $shingleCtes,
-           |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           |inter AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2)
-           |SELECT id_a, id_b,
-           |  i::DOUBLE / (sa.sz + sb.sz - i) AS jaccard
-           |FROM inter
-           |JOIN sz sa ON sa.doc_id = id_a
-           |JOIN sz sb ON sb.doc_id = id_b
-           |WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.3
-           |ORDER BY id_a, id_b""".stripMargin,
-
-      "q35_lang_id" -> {
-        def hits(ws: Seq[String]) =
-          s"len(list_filter($toksSql, t -> t IN (${ws.map(w => s"'$w'").mkString(",")})))"
-        val h = Map(
-          "de" -> hits(Seq("fast", "slow")), "en" -> hits(Seq("the", "a")),
-          "es" -> hits(Seq("big", "small")), "fr" -> hits(Seq("key", "order")),
-          "zh" -> hits(Seq("scan", "merge")))
-        val top = s"greatest(${Seq("de", "en", "es", "fr", "zh").map(l => s"h_$l").mkString(",")})"
-        val pred = Seq("de", "en", "es", "fr", "zh")
-          .map(l => s"WHEN h_$l = $top AND $top > 0 THEN '$l'")
-          .mkString(" ")
-        s"""WITH scored AS (SELECT doc_id, lang,
-           |  ${h.map { case (l, e) => s"$e AS h_$l" }.mkString(", ")}
-           |  FROM documents)
-           |SELECT doc_id, lang AS labeled_lang,
-           |  CASE $pred ELSE 'und' END AS pred_lang
-           |FROM scored ORDER BY doc_id""".stripMargin
-      },
-
-      "q36_text_quality" ->
-        s"""WITH q AS (SELECT doc_id, $toksSql AS tk, text FROM documents)
-           |SELECT doc_id,
-           |  CAST(len(tk) AS INTEGER) AS n_tokens,
-           |  CAST(len(regexp_extract_all(text,
-           |    '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS INTEGER) AS n_subtokens,
-           |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |    list_aggregate(list_transform(tk, x -> strlen(x)), 'sum')::DOUBLE
-           |      / len(tk) END AS mean_token_len,
-           |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |    len(list_filter(tk, x -> x IN ('the','a')))::DOUBLE / len(tk)
-           |  END AS stopword_ratio
-           |FROM q ORDER BY doc_id""".stripMargin,
-
-      "q37_fingerprint" ->
-        s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-           |fp AS (SELECT doc_id,
-           |  list_slice(list_sort(list_transform(
-           |    list_distinct(${shinglesSql("tk")}),
-           |    s -> ${pHashSql("s")})), 1, 4) AS f
-           |  FROM toks)
-           |SELECT doc_id, array_to_string(f, '-') AS fingerprint
-           |FROM fp ORDER BY doc_id""".stripMargin,
-
-      "q119_hash_embed" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |t2 AS (SELECT doc_id, unnest(toks) AS t FROM tk),
-           |h AS (SELECT doc_id, ${pHashSql("t")} AS hv FROM t2),
-           |agg AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM h GROUP BY 1, 2),
-           |grid AS (SELECT tk.doc_id, r.range AS pos
-           |  FROM tk, range(64) r)
-           |SELECT g.doc_id, CAST(g.pos AS INTEGER) AS pos,
-           |  coalesce(a.v, 0) AS v
-           |FROM grid g LEFT JOIN agg a
-           |  ON a.doc_id = g.doc_id AND a.bucket = g.pos
-           |ORDER BY g.doc_id, pos""".stripMargin,
-
-      "q120_text_ann_pipeline" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |t2 AS (SELECT doc_id, unnest(toks) AS t FROM tk),
-           |h AS (SELECT doc_id, ${pHashSql("t")} AS hv FROM t2),
-           |agg AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM h GROUP BY 1, 2),
-           |grid AS (SELECT tk.doc_id, r.range AS pos
-           |  FROM tk, range(64) r),
-           |emb AS (SELECT g.doc_id,
-           |  list(CAST(coalesce(a.v, 0) AS DOUBLE) ORDER BY g.pos) AS ev
-           |  FROM grid g LEFT JOIN agg a
-           |    ON a.doc_id = g.doc_id AND a.bucket = g.pos
-           |  GROUP BY g.doc_id),
-           |q AS (SELECT doc_id AS query_id, ev AS qv FROM emb
-           |  WHERE doc_id < 25 AND list_dot_product(ev, ev) > 0),
-           |c AS (SELECT doc_id AS neighbor_id, ev AS cv FROM emb
-           |  WHERE list_dot_product(ev, ev) > 0),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok FROM x""".stripMargin,
-
-      "q121_lm_familiarity" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |g AS (SELECT doc_id, unnest(${shinglesSql("toks", 2)}) AS gram
-           |  FROM tk),
-           |model AS (SELECT gram, count(*) AS cnt FROM g
-           |  WHERE doc_id % 3 = 0 GROUP BY 1),
-           |agg AS (SELECT g.doc_id, count(*) AS n_grams,
-           |  count(m.cnt) AS n_known,
-           |  CAST(coalesce(sum(m.cnt), 0) AS BIGINT) AS ref_mass
-           |  FROM g LEFT JOIN model m USING (gram) GROUP BY 1)
-           |SELECT d.doc_id,
-           |  coalesce(n_grams, 0) AS n_grams,
-           |  coalesce(n_known, 0) AS n_known,
-           |  coalesce(ref_mass, 0) AS ref_mass,
-           |  coalesce(n_known * 2 >= n_grams * 1, TRUE) AS keep
-           |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q124_importance_gate" ->
-        s"""WITH tk AS (SELECT doc_id, lang, $toksSql AS toks
-           |  FROM documents WHERE text IS NOT NULL),
-           |g AS (SELECT doc_id, lang, unnest(${shinglesSql("toks", 2)}) AS gram
-           |  FROM tk),
-           |tm AS (SELECT gram, count(*) AS cnt_t FROM g
-           |  WHERE lang = 'en' GROUP BY 1),
-           |rm AS (SELECT gram, count(*) AS cnt_r FROM g
-           |  WHERE doc_id % 2 = 0 GROUP BY 1),
-           |tot AS (SELECT
-           |  (SELECT CAST(coalesce(sum(cnt_t), 0) AS BIGINT) FROM tm) AS t_total,
-           |  (SELECT CAST(coalesce(sum(cnt_r), 0) AS BIGINT) FROM rm) AS r_total),
-           |agg AS (SELECT g.doc_id, count(*) AS n_grams,
-           |  CAST(coalesce(sum(tm.cnt_t), 0) AS BIGINT) AS t_mass,
-           |  CAST(coalesce(sum(rm.cnt_r), 0) AS BIGINT) AS r_mass
-           |  FROM g LEFT JOIN tm USING (gram) LEFT JOIN rm USING (gram)
-           |  GROUP BY 1)
-           |SELECT d.doc_id,
-           |  coalesce(n_grams, 0) AS n_grams,
-           |  coalesce(t_mass, 0) AS t_mass,
-           |  coalesce(r_mass, 0) AS r_mass,
-           |  t_total, r_total,
-           |  coalesce(t_mass, 0)::HUGEINT * r_total::HUGEINT >=
-           |    coalesce(r_mass, 0)::HUGEINT * t_total::HUGEINT AS keep
-           |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-           |CROSS JOIN tot
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q125_repetition_filter" ->
-        s"""WITH l AS (SELECT doc_id, line FROM (
-           |    SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-           |    FROM documents WHERE text IS NOT NULL)
-           |  WHERE len(line) > 0),
-           |lc AS (SELECT doc_id, line, count(*) AS c FROM l GROUP BY 1, 2),
-           |ls AS (SELECT doc_id,
-           |  CAST(sum(c) AS BIGINT) AS n_lines,
-           |  CAST(coalesce(sum(c) FILTER (WHERE c >= 2), 0) AS BIGINT)
-           |    AS dup_lines,
-           |  CAST(sum(c * len(line)) AS BIGINT) AS line_chars,
-           |  CAST(coalesce(sum(c * len(line)) FILTER (WHERE c >= 2), 0)
-           |    AS BIGINT) AS dup_line_chars
-           |  FROM lc GROUP BY 1),
-           |tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |g AS (SELECT doc_id, unnest(${shinglesSql("toks", 2)}) AS gram
-           |  FROM tk),
-           |gcnt AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-           |top AS (SELECT doc_id, CAST(c AS BIGINT) AS top2_cnt,
-           |  CAST(c * len(gram) AS BIGINT) AS top2_chars
-           |  FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-           |      ORDER BY c DESC, gram) AS rn FROM gcnt)
-           |  WHERE rn = 1)
-           |SELECT d.doc_id,
-           |  coalesce(n_lines, 0) AS n_lines,
-           |  coalesce(dup_lines, 0) AS dup_lines,
-           |  coalesce(line_chars, 0) AS line_chars,
-           |  coalesce(dup_line_chars, 0) AS dup_line_chars,
-           |  coalesce(top2_cnt, 0) AS top2_cnt,
-           |  coalesce(top2_chars, 0) AS top2_chars,
-           |  CAST(coalesce(len(d.text), 0) AS BIGINT) AS n_chars,
-           |  (coalesce(dup_lines, 0) * 10 <= coalesce(n_lines, 0) * 3
-           |   AND coalesce(dup_line_chars, 0) * 5 <= coalesce(line_chars, 0)
-           |   AND coalesce(top2_chars, 0) * 5 <=
-           |     CAST(coalesce(len(d.text), 0) AS BIGINT)) AS keep
-           |FROM documents d
-           |LEFT JOIN ls ON d.doc_id = ls.doc_id
-           |LEFT JOIN top ON d.doc_id = top.doc_id
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q126_pii_scrub" ->
-        """WITH pii AS (SELECT doc_id, text ||
-           |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id ||
-           |      '@mail.example.com' ELSE '' END ||
-           |    CASE WHEN doc_id % 4 = 0 THEN ' at 10.' || (doc_id % 200) ||
-           |      '.0.1' ELSE '' END ||
-           |    CASE WHEN doc_id % 5 = 0 THEN ' call +1 555-01' ||
-           |      lpad((doc_id % 100)::VARCHAR, 2, '0') ELSE '' END AS t
-           |  FROM documents),
-           |s1 AS (SELECT doc_id, t, regexp_replace(t,
-           |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-           |    '<EMAIL>', 'g') AS t1 FROM pii),
-           |s2 AS (SELECT doc_id, t, t1, regexp_replace(t1,
-           |    '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g') AS t2
-           |  FROM s1)
-           |SELECT doc_id,
-           |  CAST(len(regexp_extract_all(t,
-           |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-           |    AS BIGINT) AS n_email,
-           |  CAST(len(regexp_extract_all(t1,
-           |    '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ip,
-           |  CAST(len(regexp_extract_all(t2,
-           |    '\+\d[\d\- ]{7,}\d')) AS BIGINT) AS n_phone,
-           |  md5(regexp_replace(t2, '\+\d[\d\- ]{7,}\d',
-           |    '<PHONE>', 'g')) AS redacted_md5
-           |FROM s2 ORDER BY doc_id""".stripMargin,
-
-      "q128_dedup_index" -> dedupIndexOracle,
-      // the streaming replay applies the IDENTICAL two-batch policy
-      // (even-id file then odd-id file), so it shares q128's oracle
-      "q129_stream_dedup_index" -> dedupIndexOracle,
-      "q136_dedup_unlearn" -> dedupUnlearnOracle,
-
-      // greedy longest-match subword encode, replayed relationally: the
-      // per-(word,position) LONGEST matching piece is precomputed as a
-      // table (equi-join on substr at each distinct piece length), and
-      // the greedy walk is a recursive CTE stepping p -> p + best_len(p)
-      // — position sets are word-lengths, never corpus-sized
-      "q137_bpe_encode" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes
-           |SELECT d.doc_id,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE COALESCE(s.n_pieces, 0) END AS n_pieces,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE md5(COALESCE(s.ids_str, '')) END AS ids_md5
-           |FROM docs2 d LEFT JOIN seq s USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // the q137 per-doc subword counts fed through q68's pack
-      // arithmetic — the tokenizer × packing composition gate
-      "q139_bpe_pack" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |nt AS (SELECT d.doc_id, doc.lang,
-           |    CASE WHEN d.text IS NULL THEN NULL
-           |      ELSE COALESCE(s.n_pieces, 0) END AS n_tokens
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)),
-           |c AS (SELECT doc_id, lang, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM nt),
-           |p AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id, n_tokens
-           |  FROM c)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-           |FROM p GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin,
-
-      "q142_bpe_learn" -> bpeLearnOracle,
-
-      "q143_bpe_learn_apply" -> bpeLearnApplyOracle,
-
-      // q160: the exhaustion path live — sparse slice + pair-count
-      // floor 60 leaves real EMPTY blt stages; the apply counts off
-      // blw16 only survive them under LEFT-JOIN state propagation,
-      // and n_merges counts exactly the non-empty stages
-      "q160_bpe_learn_exhausted" -> {
-        val ranks = (0 until bpeLearnK).map { i =>
-          s"SELECT lhs, rhs FROM blt$i"
-        }.mkString(" UNION ALL ")
-        s"""WITH sparse AS MATERIALIZED (SELECT doc_id, text
-           |  FROM documents WHERE doc_id % 25 = 0 AND doc_id < 500),
-           |${bpeLearnChainCtes("sparse", 60L)},
-           |nmg AS (SELECT CAST(count(*) AS BIGINT) AS n_merges
-           |  FROM ($ranks)),
-           |wfin AS (SELECT word,
-           |    CAST(len($bpeLearnUnwrapRe) AS BIGINT) AS wc
-           |  FROM blw$bpeLearnK),
-           |dtk AS (SELECT doc_id, unnest($toksSql) AS word FROM sparse),
-           |dcnt AS (SELECT d.doc_id, SUM(COALESCE(w.wc, 1)) AS n
-           |  FROM dtk d LEFT JOIN wfin w USING (word) GROUP BY 1)
-           |SELECT doc.doc_id,
-           |  CASE WHEN doc.text IS NULL THEN NULL
-           |    ELSE CAST(COALESCE(dc.n, 0) AS BIGINT) END AS n_bpe_tokens,
-           |  nmg.n_merges
-           |FROM sparse doc LEFT JOIN dcnt dc USING (doc_id)
-           |CROSS JOIN nmg
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      // both artifact paths recomputed from the corpus: the MaxMatch
-      // count off the salted-vocab block, the merge-order count off
-      // the learn chain's final segmentations — a green row proves
-      // the parquet-persisted artifacts reproduce the built ones
-      "q145_artifact_roundtrip" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |$bpeLearnCtes,
-           |wfin2 AS (SELECT word,
-           |    CAST(len($bpeLearnUnwrapRe) AS BIGINT) AS wc
-           |  FROM blw$bpeLearnK),
-           |dtk2 AS (SELECT doc_id, unnest($toksSql) AS word
-           |  FROM documents),
-           |dcnt2 AS (SELECT d.doc_id, SUM(COALESCE(w.wc, 1)) AS n
-           |  FROM dtk2 d LEFT JOIN wfin2 w USING (word) GROUP BY 1)
-           |SELECT d.doc_id,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE COALESCE(s.n_pieces, 0) END AS n_pieces,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE CAST(COALESCE(dc.n, 0) AS BIGINT) END AS n_bpe_tokens
-           |FROM docs2 d
-           |LEFT JOIN seq s USING (doc_id)
-           |LEFT JOIN dcnt2 dc USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // per-lang rollup of the q143 per-word counts plus word/byte
-      // totals off the shared tokenizer (strlen = bytes = Spark
-      // octet_length; zh multi-byte text keeps both engines honest);
-      // every sum CAST to BIGINT (DuckDB SUM(BIGINT) is HUGEINT)
-      "q146_tokenizer_fertility" ->
-        s"""WITH $bpeLearnCtes,
-           |wf3 AS (SELECT word,
-           |    CAST(len($bpeLearnUnwrapRe) AS BIGINT) AS wc
-           |  FROM blw$bpeLearnK),
-           |dtk3 AS (SELECT doc_id, unnest($toksSql) AS word
-           |  FROM documents WHERE text IS NOT NULL),
-           |dw3 AS (SELECT d.doc_id,
-           |    CAST(count(*) AS BIGINT) AS n_words,
-           |    CAST(sum(strlen(d.word)) AS BIGINT) AS n_bytes,
-           |    CAST(sum(COALESCE(w.wc, 1)) AS BIGINT) AS n_bpe
-           |  FROM dtk3 d LEFT JOIN wf3 w USING (word) GROUP BY 1)
-           |SELECT doc.lang,
-           |  CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(COALESCE(sum(dw3.n_words), 0) AS BIGINT) AS n_words,
-           |  CAST(COALESCE(sum(dw3.n_bytes), 0) AS BIGINT)
-           |    AS n_word_bytes,
-           |  CAST(COALESCE(sum(dw3.n_bpe), 0) AS BIGINT) AS n_bpe_tokens
-           |FROM documents doc LEFT JOIN dw3 USING (doc_id)
-           |WHERE doc.text IS NOT NULL
-           |GROUP BY 1 ORDER BY lang""".stripMargin,
-
-      // both tokenizer chains over the SAME raw corpus: the q137-style
-      // vocab/greedy-walk block instantiated on `rawd` gives per-doc
-      // MaxMatch counts (seq), the learn chain's last stage gives
-      // per-word merge counts — joined per doc, rolled up per lang
-      // with the win census
-      "q150_tokenizer_compare" ->
-        s"""WITH RECURSIVE
-           |rawd AS (SELECT doc_id, text FROM documents),
-           |${bpePieceCtes("rawd")},
-           |$bpeLearnCtes,
-           |wfm AS (SELECT word,
-           |    CAST(len($bpeLearnUnwrapRe) AS BIGINT) AS wc
-           |  FROM blw$bpeLearnK),
-           |dtm AS (SELECT doc_id, unnest($toksSql) AS word
-           |  FROM documents WHERE text IS NOT NULL),
-           |dcm AS (SELECT d.doc_id,
-           |    CAST(sum(COALESCE(w.wc, 1)) AS BIGINT) AS nm
-           |  FROM dtm d LEFT JOIN wfm w USING (word) GROUP BY 1),
-           |per AS (SELECT doc.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) AS nmax,
-           |    COALESCE(dc.nm, 0) AS nmrg
-           |  FROM documents doc LEFT JOIN seq s USING (doc_id)
-           |  LEFT JOIN dcm dc USING (doc_id)
-           |  WHERE doc.text IS NOT NULL)
-           |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(nmax) AS BIGINT) AS n_maxmatch_tokens,
-           |  CAST(sum(nmrg) AS BIGINT) AS n_merge_tokens,
-           |  CAST(sum(CASE WHEN nmrg < nmax THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_merge_wins,
-           |  CAST(sum(CASE WHEN nmax < nmrg THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_maxmatch_wins
-           |FROM per GROUP BY 1 ORDER BY lang""".stripMargin,
-
-      // q139's pack arithmetic rolled up twice: per (lang, pack) then
-      // per lang, with the oversize census (n_tokens > budget) riding
-      // the first rollup
-      "q147_pack_efficiency" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |nt4 AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) AS n_tokens
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |c4 AS (SELECT doc_id, lang, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM nt4),
-           |p4 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  n_tokens FROM c4),
-           |pp4 AS (SELECT lang, pack_id,
-           |    CAST(sum(n_tokens) AS BIGINT) AS pt,
-           |    CAST(sum(CASE WHEN n_tokens > 2048 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS os,
-           |    CAST(max(n_tokens) AS BIGINT) AS mx
-           |  FROM p4 GROUP BY 1, 2)
-           |SELECT lang, CAST(count(*) AS BIGINT) AS n_packs,
-           |  CAST(count(*) * 2048 AS BIGINT) AS capacity_tokens,
-           |  CAST(sum(pt) AS BIGINT) AS total_tokens,
-           |  CAST(sum(os) AS BIGINT) AS n_oversize_docs,
-           |  CAST(max(mx) AS BIGINT) AS max_doc_tokens
-           |FROM pp4 GROUP BY 1 ORDER BY lang""".stripMargin,
-
-      // vocab trained on the en slice (same wv/alpha/min(id)
-      // construction as q137's twin), applied to every other lang with
-      // an UNK-tolerant greedy walk: a position with no matching piece
-      // (LEFT JOIN miss) advances one char and counts as UNK — the
-      // kernel's exact rule
-      "q148_vocab_coverage" ->
-        s"""WITH RECURSIVE
-           |tr AS (SELECT doc_id, text FROM documents
-           |  WHERE lang = 'en'),
-           |ev AS (SELECT doc_id, lang,
-           |    text || ' ' || upper(substr(text, 1, 12)) AS text
-           |  FROM documents
-           |  WHERE lang <> 'en' AND text IS NOT NULL),
-           |bptk8 AS (SELECT unnest($toksSql) AS token FROM tr),
-           |wv08 AS (SELECT token, count(*) AS cnt FROM bptk8
-           |  GROUP BY token HAVING count(*) >= 5
-           |  ORDER BY cnt DESC, token LIMIT 200),
-           |wv8 AS (SELECT token AS piece,
-           |    CAST(row_number() OVER (ORDER BY cnt DESC, token)
-           |      AS INTEGER) AS id FROM wv08),
-           |trw8 AS (SELECT DISTINCT tok FROM
-           |  (SELECT unnest($toksSql) AS tok FROM tr)),
-           |trpos8 AS (SELECT tok,
-           |    CAST(unnest(range(1, length(tok) + 1)) AS INTEGER) AS p
-           |  FROM trw8),
-           |alpha8 AS (SELECT ch,
-           |    CAST(200 + row_number() OVER (ORDER BY ch) AS INTEGER)
-           |      AS id
-           |  FROM (SELECT DISTINCT substr(tok, p, 1) AS ch FROM trpos8)),
-           |pieces8 AS (SELECT piece, MIN(id) AS id FROM (
-           |    SELECT piece, id FROM wv8
-           |    UNION ALL SELECT ch AS piece, id FROM alpha8)
-           |  GROUP BY piece),
-           |lens8 AS (SELECT DISTINCT CAST(length(piece) AS INTEGER) AS l
-           |  FROM pieces8),
-           |eta8 AS (SELECT doc_id, $toksSql AS arr FROM ev),
-           |etoks8 AS (SELECT doc_id, unnest(arr) AS tok
-           |  FROM eta8 WHERE len(arr) > 0),
-           |ew8 AS (SELECT DISTINCT tok FROM etoks8),
-           |ewpos8 AS (SELECT tok,
-           |    CAST(unnest(range(1, length(tok) + 1)) AS INTEGER) AS p
-           |  FROM ew8),
-           |ebest8 AS (SELECT w.tok, w.p,
-           |    CAST(MAX(length(pc.piece)) AS INTEGER) AS blen
-           |  FROM ewpos8 w JOIN lens8 ln ON ln.l <= length(w.tok) - w.p + 1
-           |  JOIN pieces8 pc ON pc.piece = substr(w.tok, w.p, ln.l)
-           |  GROUP BY w.tok, w.p),
-           |ebid8 AS MATERIALIZED (SELECT w.tok, w.p,
-           |    COALESCE(b.blen, 1) AS blen,
-           |    CASE WHEN b.blen IS NULL THEN 1 ELSE 0 END AS unk
-           |  FROM ewpos8 w LEFT JOIN ebest8 b
-           |    ON b.tok = w.tok AND b.p = w.p),
-           |egreedy8 AS (
-           |  SELECT tok, CAST(1 AS INTEGER) AS p FROM ew8
-           |  UNION ALL
-           |  SELECT g.tok, CAST(g.p + b.blen AS INTEGER)
-           |    FROM egreedy8 g JOIN ebid8 b ON b.tok = g.tok AND b.p = g.p),
-           |ewc8 AS (SELECT g.tok, CAST(count(*) AS BIGINT) AS wc,
-           |    CAST(sum(b.unk) AS BIGINT) AS wunk
-           |  FROM egreedy8 g JOIN ebid8 b ON b.tok = g.tok AND b.p = g.p
-           |  GROUP BY g.tok),
-           |eseq8 AS (SELECT t.doc_id,
-           |    CAST(sum(w.wc) AS BIGINT) AS n_pieces,
-           |    CAST(sum(w.wunk) AS BIGINT) AS n_unk
-           |  FROM etoks8 t JOIN ewc8 w ON w.tok = t.tok GROUP BY 1)
-           |SELECT e.doc_id, e.lang,
-           |  COALESCE(s.n_pieces, 0) AS n_pieces,
-           |  COALESCE(s.n_unk, 0) AS n_unk
-           |FROM ev e LEFT JOIN eseq8 s USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // chunk at 64 whitespace tokens off the shared ord column
-      // (token at ord lands in chunk (ord-1)//64), per-chunk BPE
-      // counts = sum of the greedy walk's per-word piece counts,
-      // then q139's pack arithmetic over cid order and q147's two
-      // rollups with the oversize census
-      "q149_chunk_repack" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |wcnt9 AS (SELECT tok, CAST(count(*) AS BIGINT) AS wc
-           |  FROM wp GROUP BY tok),
-           |ct9 AS (SELECT t.doc_id,
-           |    CAST((t.ord - 1) // 64 AS BIGINT) AS chunk_id, w.wc
-           |  FROM toks t JOIN wcnt9 w USING (tok)),
-           |chk9 AS (SELECT doc_id, doc_id * 4294967296 + chunk_id AS cid,
-           |    CAST(sum(wc) AS BIGINT) AS n_tokens
-           |  FROM ct9 GROUP BY 1, 2),
-           |lg9 AS (SELECT c.cid, d.lang, c.n_tokens
-           |  FROM chk9 c JOIN documents d USING (doc_id)),
-           |cc9 AS (SELECT cid, lang, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY cid
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM lg9),
-           |p9 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  n_tokens FROM cc9),
-           |pp9 AS (SELECT lang, pack_id,
-           |    CAST(count(*) AS BIGINT) AS nch,
-           |    CAST(sum(n_tokens) AS BIGINT) AS pt,
-           |    CAST(sum(CASE WHEN n_tokens > 2048 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS os,
-           |    CAST(max(n_tokens) AS BIGINT) AS mx
-           |  FROM p9 GROUP BY 1, 2)
-           |SELECT lang, CAST(sum(nch) AS BIGINT) AS n_chunks,
-           |  CAST(count(*) AS BIGINT) AS n_packs,
-           |  CAST(count(*) * 2048 AS BIGINT) AS capacity_tokens,
-           |  CAST(sum(pt) AS BIGINT) AS total_tokens,
-           |  CAST(sum(os) AS BIGINT) AS n_oversize_chunks,
-           |  CAST(max(mx) AS BIGINT) AS max_chunk_tokens
-           |FROM pp9 GROUP BY 1 ORDER BY lang""".stripMargin,
-
-      // the q137 per-doc id STRINGS packed under q68's arithmetic;
-      // empty-token docs stay in n_docs but contribute nothing to the
-      // stream (NULLed out of the string_agg), exactly as flatten
-      // skips their empty arrays
-      "q144_token_packs" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |nt3 AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) AS n_tokens,
-           |    COALESCE(s.ids_str, '') AS ids_str
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |cc2 AS (SELECT doc_id, lang, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM nt3),
-           |pk2 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, ids_str FROM cc2),
-           |pko AS (SELECT lang, pack_id, doc_id, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM pk2)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5
-           |FROM pko GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q152: the decode-integrity twin needs NO tokenizer on the
-      // decode side — decode∘encode over the MaxMatch vocab must equal
-      // the (salted) document text minus whitespace, so each pack's
-      // digest rebuilds from regexp-stripped text while the pack
-      // arithmetic still rides the piece counts
-      "q152_pack_decode_audit" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |dnt AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) AS n_tokens,
-           |    regexp_replace(d.text, '\\s+', '', 'g') AS dec
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |dcc AS (SELECT doc_id, lang, n_tokens, dec,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM dnt),
-           |dpk AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, dec FROM dcc)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS n_ids,
-           |  CAST(length(COALESCE(string_agg(dec, '' ORDER BY doc_id), ''))
-           |    AS BIGINT) AS decoded_chars,
-           |  md5(COALESCE(string_agg(dec, '' ORDER BY doc_id), ''))
-           |    AS decoded_md5,
-           |  md5(string_agg(md5(dec), ' ' ORDER BY doc_id)) AS segs_md5
-           |FROM dpk GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q153: the STREAMED per-doc pack assignment must equal the batch
-      // (lang, doc_id)-order prefix-sum arithmetic doc-for-doc — the
-      // fixture's id-range file split makes arrival order the id order,
-      // so the batch window cumsum IS the streaming cursor's trajectory
-      "q153_stream_token_packs" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |snt AS (SELECT d.doc_id, doc.lang,
-           |    CAST(COALESCE(s.n_pieces, 0) AS BIGINT) AS n_tokens
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |scc AS (SELECT doc_id, lang, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM snt)
-           |SELECT lang, doc_id, n_tokens,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
-           |FROM scc ORDER BY doc_id""".stripMargin,
-
-      // q154: token windows off the shared seq CTE's id strings —
-      // list_slice windows of the split id list; the eval side is each
-      // id%50=0 doc's ids CONCATENATED with its successor's (the
-      // planted verbatim quote — list concat == tokenizing the
-      // concatenated text since the tokenizer is word-local); train
-      // windows counted per doc on exact string equality (the same
-      // space-joined representation the Spark side joins on)
-      "q154_token_decontaminate" -> tokenDecontamSql,
-
-      // q156: the Bloom-prefiltered scale path must EQUAL the exact
-      // operator (no false negatives; false positives die in the exact
-      // verify join) — the oracle is q154's twin, verbatim
-      "q156_token_decontaminate_bloom" -> tokenDecontamSql,
-
-      // q157: the int64 window-hash representation must EQUAL the
-      // string-window result — same twin, so the gate IS the equality
-      // (a fingerprint collision on this corpus would go red here)
-      "q157_token_decontaminate_hashed" -> tokenDecontamSql,
-
-      // q164: bloom prefilter over int64 fingerprints — same twin
-      // again: bloom (no false negatives) + exact verify + collision
-      // one-sidedness means the composed path must still EQUAL the
-      // exact string-window result
-      "q164_token_decontaminate_bloom_hashed" -> tokenDecontamSql,
-
-      // q166: coverage = count(DISTINCT covered position) — the twin
-      // materializes each matched window's start, explodes its 13
-      // positions, and de-duplicates; n_hits and n_tokens ride the
-      // same matched set and the corpus token lengths
-      "q166_token_decontaminate_coverage" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |tws6 AS (SELECT doc_id, string_split(ids_str, ' ') AS ids
-           |  FROM seq),
-           |twin6 AS (SELECT doc_id, u,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM tws6 WHERE len(ids) >= 13)),
-           |evq6 AS (SELECT e.doc_id,
-           |    l1.ids || COALESCE(l2.ids, CAST([] AS VARCHAR[])) AS ids
-           |  FROM documents e
-           |  JOIN tws6 l1 ON l1.doc_id = e.doc_id
-           |  LEFT JOIN tws6 l2 ON l2.doc_id = e.doc_id + 1
-           |  WHERE e.doc_id % 50 = 0),
-           |evw6 AS (SELECT doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM evq6 WHERE len(ids) >= 13)),
-           |evg6 AS (SELECT DISTINCT gram FROM evw6),
-           |mtw6 AS MATERIALIZED (SELECT t.doc_id, t.u
-           |  FROM twin6 t JOIN evg6 USING (gram)
-           |  WHERE t.doc_id % 50 <> 0),
-           |hit6 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
-           |  FROM mtw6 GROUP BY doc_id),
-           |cvd6 AS (SELECT doc_id, CAST(count(DISTINCT pos) AS BIGINT)
-           |    AS covered
-           |  FROM (SELECT doc_id, unnest(range(u, u + 13)) AS pos
-           |    FROM mtw6) GROUP BY doc_id),
-           |len6 AS (SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens
-           |  FROM tws6)
-           |SELECT h.doc_id, h.n_hits, c.covered, l.n_tokens
-           |FROM hit6 h JOIN cvd6 c USING (doc_id) JOIN len6 l USING (doc_id)
-           |ORDER BY h.doc_id""".stripMargin,
-
-      // q171: q166's coverage chain crossed with the 80% threshold,
-      // then the survivor list — every %50<>0 train doc NOT in the
-      // drop set, with its token length; the planted successor quotes
-      // (covered == n_tokens) are exactly the absentees
-      "q171_decontaminate_by_coverage" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |twsB AS MATERIALIZED (SELECT doc_id,
-           |    string_split(ids_str, ' ') AS ids FROM seq),
-           |twinB AS (SELECT doc_id, u,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM twsB WHERE len(ids) >= 13)),
-           |evqB AS (SELECT e.doc_id,
-           |    l1.ids || COALESCE(l2.ids, CAST([] AS VARCHAR[])) AS ids
-           |  FROM documents e
-           |  JOIN twsB l1 ON l1.doc_id = e.doc_id
-           |  LEFT JOIN twsB l2 ON l2.doc_id = e.doc_id + 1
-           |  WHERE e.doc_id % 50 = 0),
-           |evwB AS (SELECT doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM evqB WHERE len(ids) >= 13)),
-           |evgB AS (SELECT DISTINCT gram FROM evwB),
-           |mtwB AS MATERIALIZED (SELECT t.doc_id, t.u
-           |  FROM twinB t JOIN evgB USING (gram)
-           |  WHERE t.doc_id % 50 <> 0),
-           |cvdB AS (SELECT doc_id, CAST(count(DISTINCT pos) AS BIGINT)
-           |    AS covered
-           |  FROM (SELECT doc_id, unnest(range(u, u + 13)) AS pos
-           |    FROM mtwB) GROUP BY doc_id),
-           |lenB AS (SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens
-           |  FROM twsB),
-           |drpB AS (SELECT c.doc_id FROM cvdB c JOIN lenB l USING (doc_id)
-           |  WHERE c.covered * 10000 > 8000 * l.n_tokens)
-           |SELECT l.doc_id, l.n_tokens
-           |FROM lenB l
-           |WHERE l.doc_id % 50 <> 0
-           |  AND l.doc_id NOT IN (SELECT doc_id FROM drpB)
-           |ORDER BY l.doc_id""".stripMargin,
-
-      // q167: the attribution twin joins train windows against eval
-      // windows WITH doc attribution (evw7, not a distinct gram set) —
-      // per eval doc, distinct quoting train docs and matched pairs
-      "q167_contamination_by_eval_doc" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |tws7 AS (SELECT doc_id, string_split(ids_str, ' ') AS ids
-           |  FROM seq),
-           |twin7 AS (SELECT doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM tws7 WHERE len(ids) >= 13)),
-           |evq7 AS (SELECT e.doc_id,
-           |    l1.ids || COALESCE(l2.ids, CAST([] AS VARCHAR[])) AS ids
-           |  FROM documents e
-           |  JOIN tws7 l1 ON l1.doc_id = e.doc_id
-           |  LEFT JOIN tws7 l2 ON l2.doc_id = e.doc_id + 1
-           |  WHERE e.doc_id % 50 = 0),
-           |evw7 AS (SELECT doc_id AS eval_doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM evq7 WHERE len(ids) >= 13))
-           |SELECT e.eval_doc_id,
-           |  CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_train_docs,
-           |  CAST(count(*) AS BIGINT) AS n_matched
-           |FROM twin7 t JOIN evw7 e USING (gram)
-           |WHERE t.doc_id % 50 <> 0
-           |GROUP BY e.eval_doc_id ORDER BY e.eval_doc_id""".stripMargin,
-
-      // q165: the twin is a FULL RECOMPUTE against the combined suite
-      // (%50==0 and %50==25 slices) — it never sees the old/new split,
-      // so a green row proves the incremental merge (old hit table +
-      // delta windows only) reconstructs the from-scratch answer
-      "q165_token_decontaminate_delta" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |tws5 AS (SELECT doc_id, string_split(ids_str, ' ') AS ids
-           |  FROM seq),
-           |twin5 AS (SELECT doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM tws5 WHERE len(ids) >= 13)),
-           |evq5 AS (SELECT e.doc_id,
-           |    l1.ids || COALESCE(l2.ids, CAST([] AS VARCHAR[])) AS ids
-           |  FROM documents e
-           |  JOIN tws5 l1 ON l1.doc_id = e.doc_id
-           |  LEFT JOIN tws5 l2 ON l2.doc_id = e.doc_id + 1
-           |  WHERE e.doc_id % 50 = 0 OR e.doc_id % 50 = 25),
-           |evw5 AS (SELECT doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM evq5 WHERE len(ids) >= 13)),
-           |evg5 AS (SELECT DISTINCT gram FROM evw5)
-           |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-           |FROM twin5 t JOIN evg5 USING (gram)
-           |WHERE t.doc_id % 50 <> 0 AND t.doc_id % 50 <> 25
-           |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
-      // q159: byte-level BPE's exact-identity contract needs NO
-      // tokenizer on the oracle side — decode∘encode must equal the
-      // salted text VERBATIM (whitespace and all), so the twin just
-      // hashes the raw construction; the pretoken count gates the
-      // Java-regex pretokenizer against RE2's reading of the pattern
-      // the pretokenizer is DEFINED over Java's \s = [ \t\n\x0B\f\r]
-      // (the kernel and the Spark regexp_extract_all agree); DuckDB's
-      // RE2 \s omits \x0B, so the twin spells the Java class explicitly
-      // — otherwise a vertical-tab doc reds the gate on a healthy build
-      "q159_byte_bpe_roundtrip" ->
-        s"""SELECT doc_id,
-           |  CAST(len(regexp_extract_all(text || '$byteBpeSalt' ||
-           |    CAST(doc_id AS VARCHAR),
-           |    '[^ \\t\\n\\x0B\\f\\r]+[ \\t\\n\\x0B\\f\\r]*|^[ \\t\\n\\x0B\\f\\r]+'))
-           |    AS BIGINT) AS n_pretoks,
-           |  true AS ids_le_bytes,
-           |  CAST(strlen(text || '$byteBpeSalt' ||
-           |    CAST(doc_id AS VARCHAR)) AS BIGINT) AS n_bytes,
-           |  md5(text || '$byteBpeSalt' || CAST(doc_id AS VARCHAR))
-           |    AS roundtrip_md5
-           |FROM documents WHERE text IS NOT NULL
-           |ORDER BY doc_id""".stripMargin,
-
-      // q168: the GPT-2 pretokenizer's cross-engine pin. RE2 has no
-      // lookahead, so the twin derives the SAME count independently:
-      // a lookahead-free variant of the pattern (the final \s+ eats a
-      // whole whitespace run where Java's \s+(?!\S) sheds the last
-      // space into the next word — same COUNT whenever the run ends
-      // in a space) plus an adjustment term counting the one shape
-      // that differs — a run of >=2 whitespace chars ENDING in
-      // non-space whitespace before a non-whitespace char, which Java
-      // splits into two pretokens and the variant keeps as one. Java's
-      // \s class is spelled out ([ \t\n\x0B\f\r] — RE2's \s omits
-      // \x0B, the q159 lesson); \p{L}/\p{N} are Unicode categories in
-      // both engines. Exact reconstruction and byte length audit as in
-      // q159 — the twin recomputes the identity from the raw text with
-      // NO tokenizer, so a lossy kernel or pretokenizer drift breaks
-      // the digest
-      "q168_byte_bpe_gpt2_pretok" ->
-        s"""WITH g8 AS MATERIALIZED (SELECT doc_id,
-           |    text || '$byteBpeSalt' || '$gpt2SaltSql' ||
-           |      CAST(doc_id AS VARCHAR) AS txt
-           |  FROM documents WHERE text IS NOT NULL)
-           |SELECT doc_id,
-           |  CAST(len(regexp_extract_all(txt,
-           |      '''s|''t|''re|''ve|''m|''ll|''d| ?\\p{L}+| ?\\p{N}+| ?[^ \\t\\n\\x0B\\f\\r\\p{L}\\p{N}]+|[ \\t\\n\\x0B\\f\\r]+'))
-           |    + len(regexp_extract_all(txt,
-           |      '[ \\t\\n\\x0B\\f\\r][\\t\\n\\x0B\\f\\r][^ \\t\\n\\x0B\\f\\r]'))
-           |    AS BIGINT) AS n_pretoks,
-           |  true AS ids_le_bytes,
-           |  CAST(strlen(txt) AS BIGINT) AS n_bytes,
-           |  md5(txt) AS roundtrip_md5
-           |FROM g8 ORDER BY doc_id""".stripMargin,
-
-      // q170: q169's chain at the same budget minus each lang's final
-      // pack (the stream's open pack is structurally unemittable —
-      // q155/q163's convention); text_tokens/image_patches here come
-      // from the modality column, so the green row proves the
-      // artifact-side zero-id derivation equals ground truth
-      "q170_stream_multimodal_packs" ->
-        s"""WITH smm AS MATERIALIZED (
-           |  SELECT doc_id, lang, 'image' AS modality,
-           |    CAST(16 * (1 + doc_id % 5) * (1 + doc_id % 4) AS BIGINT)
-           |      AS n_tokens,
-           |    NULL AS hx
-           |  FROM documents WHERE doc_id % 3 = 0
-           |  UNION ALL
-           |  SELECT doc_id, lang, 'text' AS modality,
-           |    CAST(octet_length(encode(text)) AS BIGINT) AS n_tokens,
-           |    hex(encode(text)) AS hx
-           |  FROM documents WHERE doc_id % 3 <> 0 AND text IS NOT NULL),
-           |smi AS (SELECT doc_id, lang, modality, n_tokens,
-           |  CASE WHEN modality = 'image'
-           |    THEN array_to_string(list_transform(
-           |      range(1, CAST(n_tokens AS INTEGER) + 1), i -> '0'), ' ')
-           |    ELSE array_to_string(list_transform(
-           |      range(1, CAST(n_tokens AS INTEGER) + 1),
-           |      i -> CAST(('0x' || substr(hx, CAST(2*i-1 AS INTEGER), 2))
-           |        ::BIGINT + 1 AS VARCHAR)), ' ')
-           |  END AS ids_str FROM smm),
-           |smc AS (SELECT doc_id, lang, modality, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM smi),
-           |smp AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, modality, n_tokens, ids_str FROM smc),
-           |smo AS (SELECT lang, pack_id, doc_id, modality, n_tokens,
-           |  ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM smp),
-           |sag AS MATERIALIZED (SELECT lang, pack_id,
-           |  count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  CAST(sum(CASE WHEN modality = 'text' THEN n_tokens ELSE 0
-           |    END) AS BIGINT) AS text_tokens,
-           |  CAST(sum(CASE WHEN modality = 'image' THEN n_tokens ELSE 0
-           |    END) AS BIGINT) AS image_patches,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5
-           |  FROM smo GROUP BY lang, pack_id)
-           |SELECT a.lang, a.pack_id, a.n_docs, a.pack_tokens,
-           |  a.text_tokens, a.image_patches, a.ids_md5, a.offsets_md5
-           |FROM sag a JOIN (SELECT lang, max(pack_id) AS mp
-           |  FROM sag GROUP BY lang) m USING (lang)
-           |WHERE a.pack_id < m.mp
-           |ORDER BY a.lang, a.pack_id""".stripMargin,
-
-      // q172: per-doc segment representations — 'i'||patches for an
-      // image, md5(text) for a text doc (identity-byte decode == the
-      // exact text) — aggregated per pack in doc order; the chain is
-      // q169's through the pack assignment
-      "q172_multimodal_pack_segments" ->
-        s"""WITH gmm AS MATERIALIZED (
-           |  SELECT doc_id, lang, 'image' AS modality,
-           |    CAST(16 * (1 + doc_id % 5) * (1 + doc_id % 4) AS BIGINT)
-           |      AS n_tokens,
-           |    NULL AS text
-           |  FROM documents WHERE doc_id % 3 = 0
-           |  UNION ALL
-           |  SELECT doc_id, lang, 'text' AS modality,
-           |    CAST(octet_length(encode(text)) AS BIGINT) AS n_tokens,
-           |    text
-           |  FROM documents WHERE doc_id % 3 <> 0 AND text IS NOT NULL),
-           |gmc AS (SELECT doc_id, lang, modality, n_tokens, text,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM gmm),
-           |gmp AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, modality, n_tokens,
-           |  CASE WHEN modality = 'image'
-           |    THEN 'i' || CAST(n_tokens AS VARCHAR)
-           |    ELSE md5(text) END AS seg
-           |  FROM gmc)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(string_agg(seg, ' ' ORDER BY doc_id)) AS segs_md5
-           |FROM gmp GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q169: the multimodal pack twin is q144's arithmetic with a
-      // two-modality source — text docs' ids derive from hex() under
-      // the identity byte tokenizer (ids == bytes+1, no tokenizer in
-      // the twin), image docs' spans are '0' repeated over the
-      // metadata-derived patch count (floor(64(1+id%5)/16) ·
-      // floor(64(1+id%4)/16) = 16(1+id%5)(1+id%4)); cumsum, pack
-      // boundaries, offsets ('0' + per-doc cumulative ends), and the
-      // empty-doc skip in the id digest all follow the q144 twin
-      "q169_multimodal_packs" ->
-        s"""WITH mm AS MATERIALIZED (
-           |  SELECT doc_id, lang, 'image' AS modality,
-           |    CAST(16 * (1 + doc_id % 5) * (1 + doc_id % 4) AS BIGINT)
-           |      AS n_tokens,
-           |    NULL AS hx
-           |  FROM documents WHERE doc_id % 3 = 0
-           |  UNION ALL
-           |  SELECT doc_id, lang, 'text' AS modality,
-           |    CAST(octet_length(encode(text)) AS BIGINT) AS n_tokens,
-           |    hex(encode(text)) AS hx
-           |  FROM documents WHERE doc_id % 3 <> 0 AND text IS NOT NULL),
-           |mi AS (SELECT doc_id, lang, modality, n_tokens,
-           |  CASE WHEN modality = 'image'
-           |    THEN array_to_string(list_transform(
-           |      range(1, CAST(n_tokens AS INTEGER) + 1), i -> '0'), ' ')
-           |    ELSE array_to_string(list_transform(
-           |      range(1, CAST(n_tokens AS INTEGER) + 1),
-           |      i -> CAST(('0x' || substr(hx, CAST(2*i-1 AS INTEGER), 2))
-           |        ::BIGINT + 1 AS VARCHAR)), ' ')
-           |  END AS ids_str FROM mm),
-           |mc AS (SELECT doc_id, lang, modality, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM mi),
-           |mp AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, modality, n_tokens, ids_str FROM mc),
-           |mo AS (SELECT lang, pack_id, doc_id, modality, n_tokens,
-           |  ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM mp)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  CAST(sum(CASE WHEN modality = 'text' THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_text_docs,
-           |  CAST(sum(CASE WHEN modality = 'image' THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_image_docs,
-           |  CAST(sum(CASE WHEN modality = 'text' THEN n_tokens ELSE 0
-           |    END) AS BIGINT) AS text_tokens,
-           |  CAST(sum(CASE WHEN modality = 'image' THEN n_tokens ELSE 0
-           |    END) AS BIGINT) AS image_patches,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5
-           |FROM mo GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q173: the trainer tensors are pure offset algebra over the
-      // q144 pack chain, so the twin states them exactly: per member
-      // (id order), position ids are 0..n-1 and segment ids repeat the
-      // member's 0-based rank; zero-token members keep their rank but
-      // emit nothing (NULL skips the string_agg like q144's empty-ids
-      // skip)
-      "q173_pack_trainer_tensors" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |tt3 AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) AS n_tokens
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |tc2 AS (SELECT doc_id, lang, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM tt3),
-           |tp2 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens FROM tc2),
-           |tsg AS (SELECT lang, pack_id, doc_id, n_tokens,
-           |  row_number() OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id) - 1 AS seg
-           |  FROM tp2),
-           |tts AS (SELECT lang, pack_id, doc_id, n_tokens,
-           |  CASE WHEN n_tokens = 0 THEN NULL
-           |    ELSE array_to_string(range(n_tokens), ' ') END AS pos_str,
-           |  CASE WHEN n_tokens = 0 THEN NULL
-           |    ELSE rtrim(repeat(CAST(seg AS VARCHAR) || ' ', n_tokens))
-           |  END AS seg_str
-           |  FROM tsg)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(COALESCE(string_agg(pos_str, ' ' ORDER BY doc_id), ''))
-           |    AS pos_md5,
-           |  md5(COALESCE(string_agg(seg_str, ' ' ORDER BY doc_id), ''))
-           |    AS seg_md5
-           |FROM tts GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q174: q144's arithmetic with every doc one separator id richer
-      // — ids gain a trailing -1 (a tokenless doc is JUST '-1'), the
-      // weights gain +1, and the digests follow; eod_ok is the gate the
-      // Spark side re-derives from the artifact
-      "q174_eod_packs" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |en3 AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) + 1 AS n_tokens,
-           |    COALESCE(s.ids_str || ' ', '') || '-1' AS ids_str
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |ec2 AS (SELECT doc_id, lang, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM en3),
-           |ep2 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, ids_str FROM ec2),
-           |epo AS (SELECT lang, pack_id, doc_id, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM ep2)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(string_agg(ids_str, ' ' ORDER BY doc_id)) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5,
-           |  TRUE AS eod_ok
-           |FROM epo GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q175: the twin owns the exact universe — vector count, the
-      // full pairwise above-threshold count over the duplicate-salted
-      // corpus, and (because the planted pairs are DISJOINT and the
-      // closest natural pair sits < 0.7, far under the 0.9 threshold)
-      // the kept count as n_vecs − n_pairs. The cell-candidate recall
-      // and the kept-set mutual-dissimilarity postcondition are
-      // measured IN-QUERY on the Spark side, so a failing gate breaks
-      // the hash
-      "q175_semantic_dedup" ->
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-           |  FROM embeddings WHERE embedding IS NOT NULL),
-           |u AS (SELECT vec_id, v FROM e
-           |  UNION ALL
-           |  SELECT vec_id + 1000000, v FROM e WHERE vec_id % 10 = 0),
-           |pairs AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.v AS qv,
-           |    b.v AS cv
-           |  FROM u a JOIN u b ON a.vec_id < b.vec_id),
-           |x AS (SELECT count(*) AS n_exact_pairs FROM pairs
-           |  WHERE $cosSql > 0.9)
-           |SELECT (SELECT CAST(count(*) AS BIGINT) FROM u) AS n_vecs,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM u) - n_exact_pairs
-           |    AS n_kept,
-           |  n_exact_pairs, TRUE AS recall_ok,
-           |  TRUE AS kept_dissimilar_ok
-           |FROM x""".stripMargin,
-
-      // q176: the twin states the doc/token universe exactly; the
-      // packing guarantees (placement completeness, budget, the
-      // first-fit half-full theorem, fill efficiency) are re-derived
-      // from the OUTPUT on the Spark side
-      "q176_ffd_pack_nosplit" ->
-        s"""WITH tk AS (SELECT doc_id, len($toksSql) AS n
-           |  FROM documents WHERE text IS NOT NULL)
-           |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(n) AS BIGINT) AS total_tokens,
-           |  TRUE AS no_split_ok, TRUE AS within_budget_ok,
-           |  TRUE AS half_sparse_ok, TRUE AS efficiency_ok
-           |FROM tk""".stripMargin,
-
-      // q177: the lined corpus (10-word chunk lines + the planted
-      // boilerplate on doc_id % 7 == 0) is stated identically here;
-      // keep-first = row_number over (doc_id, pos) per line; docs
-      // whose every line lost reassemble to ''
-      "q177_line_dedup_keep_first" ->
-        s"""WITH d2 AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL AND len($toksSql) > 0),
-           |ln0 AS (SELECT doc_id, u AS lpos,
-           |    array_to_string(list_slice(toks, u*10+1, u*10+10), ' ')
-           |      AS line
-           |  FROM (SELECT doc_id, toks,
-           |      unnest(range((len(toks)+9)//10)) AS u FROM d2)),
-           |lnb AS (SELECT doc_id, lpos, line FROM ln0
-           |  UNION ALL
-           |  SELECT doc_id, (len(toks)+9)//10 AS lpos,
-           |    'nav home about contact subscribe' AS line
-           |  FROM d2 WHERE doc_id % 7 = 0),
-           |win AS (SELECT doc_id, lpos, line, row_number() OVER (
-           |    PARTITION BY line ORDER BY doc_id, lpos) AS rn FROM lnb),
-           |reb AS (SELECT doc_id,
-           |    string_agg(line, chr(10) ORDER BY lpos) AS clean,
-           |    count(*) AS nk
-           |  FROM win WHERE rn = 1 GROUP BY doc_id)
-           |SELECT d2.doc_id,
-           |  CAST(COALESCE(r.nk, 0) AS BIGINT) AS n_lines_kept,
-           |  md5(COALESCE(r.clean, '')) AS clean_md5
-           |FROM d2 LEFT JOIN reb r USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q178: same lined corpus; any line in >= 3 distinct docs is
-      // removed from ALL of them
-      "q178_strip_frequent_lines" ->
-        s"""WITH d2 AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL AND len($toksSql) > 0),
-           |ln0 AS (SELECT doc_id, u AS lpos,
-           |    array_to_string(list_slice(toks, u*10+1, u*10+10), ' ')
-           |      AS line
-           |  FROM (SELECT doc_id, toks,
-           |      unnest(range((len(toks)+9)//10)) AS u FROM d2)),
-           |lnb AS (SELECT doc_id, lpos, line FROM ln0
-           |  UNION ALL
-           |  SELECT doc_id, (len(toks)+9)//10 AS lpos,
-           |    'nav home about contact subscribe' AS line
-           |  FROM d2 WHERE doc_id % 7 = 0),
-           |freq AS (SELECT line FROM lnb GROUP BY line
-           |  HAVING count(DISTINCT doc_id) >= 3),
-           |reb AS (SELECT doc_id,
-           |    string_agg(line, chr(10) ORDER BY lpos) AS clean,
-           |    count(*) AS nk
-           |  FROM lnb ANTI JOIN freq USING (line) GROUP BY doc_id)
-           |SELECT d2.doc_id,
-           |  CAST(COALESCE(r.nk, 0) AS BIGINT) AS n_lines_kept,
-           |  md5(COALESCE(r.clean, '')) AS clean_md5
-           |FROM d2 LEFT JOIN reb r USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q179: the two-batch incremental composition collapses to ONE
-      // arrival-order keep-first rule — (batch = parity, doc_id, pos)
-      // — so the oracle is q177's with the widened ORDER BY; the green
-      // row proves the index carried batch-1 lines into batch 2
-      "q179_incremental_line_dedup" ->
-        s"""WITH d2 AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL AND len($toksSql) > 0),
-           |ln0 AS (SELECT doc_id, u AS lpos,
-           |    array_to_string(list_slice(toks, u*10+1, u*10+10), ' ')
-           |      AS line
-           |  FROM (SELECT doc_id, toks,
-           |      unnest(range((len(toks)+9)//10)) AS u FROM d2)),
-           |lnb AS (SELECT doc_id, lpos, line FROM ln0
-           |  UNION ALL
-           |  SELECT doc_id, (len(toks)+9)//10 AS lpos,
-           |    'nav home about contact subscribe' AS line
-           |  FROM d2 WHERE doc_id % 7 = 0),
-           |win AS (SELECT doc_id, lpos, line, row_number() OVER (
-           |    PARTITION BY line ORDER BY doc_id % 2, doc_id, lpos)
-           |    AS rn FROM lnb),
-           |reb AS (SELECT doc_id,
-           |    string_agg(line, chr(10) ORDER BY lpos) AS clean,
-           |    count(*) AS nk
-           |  FROM win WHERE rn = 1 GROUP BY doc_id)
-           |SELECT d2.doc_id,
-           |  CAST(COALESCE(r.nk, 0) AS BIGINT) AS n_lines_kept,
-           |  md5(COALESCE(r.clean, '')) AS clean_md5
-           |FROM d2 LEFT JOIN reb r USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q188: the streamed run must collapse to the SAME arrival-order
-      // rule as q179 (the backlog's parity split IS q179's batch
-      // split), with each doc additionally pinned to its acceptance
-      // batch — evens are batch 1, odds batch 2
-      "q188_stream_line_dedup" ->
-        s"""WITH d2 AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL AND len($toksSql) > 0),
-           |ln0 AS (SELECT doc_id, u AS lpos,
-           |    array_to_string(list_slice(toks, u*10+1, u*10+10), ' ')
-           |      AS line
-           |  FROM (SELECT doc_id, toks,
-           |      unnest(range((len(toks)+9)//10)) AS u FROM d2)),
-           |lnb AS (SELECT doc_id, lpos, line FROM ln0
-           |  UNION ALL
-           |  SELECT doc_id, (len(toks)+9)//10 AS lpos,
-           |    'nav home about contact subscribe' AS line
-           |  FROM d2 WHERE doc_id % 7 = 0),
-           |win AS (SELECT doc_id, lpos, line, row_number() OVER (
-           |    PARTITION BY line ORDER BY doc_id % 2, doc_id, lpos)
-           |    AS rn FROM lnb),
-           |reb AS (SELECT doc_id,
-           |    string_agg(line, chr(10) ORDER BY lpos) AS clean,
-           |    count(*) AS nk
-           |  FROM win WHERE rn = 1 GROUP BY doc_id)
-           |SELECT d2.doc_id,
-           |  CAST(COALESCE(r.nk, 0) AS BIGINT) AS n_lines_kept,
-           |  md5(COALESCE(r.clean, '')) AS clean_md5,
-           |  CAST(CASE WHEN d2.doc_id % 2 = 0 THEN 1 ELSE 2 END
-           |    AS BIGINT) AS batch
-           |FROM d2 LEFT JOIN reb r USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q190: the streamed strip's two-regime rule stated directly —
-      // an even (batch-1) doc loses a line iff batch 1 ALONE has it in
-      // ≥ minDocs distinct docs; an odd (batch-2) doc iff the WHOLE
-      // corpus does (cumulative count at its batch). Batch-1 copies of
-      // a line that only crosses in batch 2 stand — the no-retraction
-      // contract, gated
-      "q190_stream_line_strip" ->
-        s"""WITH d2 AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL AND len($toksSql) > 0),
-           |ln0 AS (SELECT doc_id, u AS lpos,
-           |    array_to_string(list_slice(toks, u*10+1, u*10+10), ' ')
-           |      AS line
-           |  FROM (SELECT doc_id, toks,
-           |      unnest(range((len(toks)+9)//10)) AS u FROM d2)),
-           |lnb AS (SELECT doc_id, lpos, line FROM ln0
-           |  UNION ALL
-           |  SELECT doc_id, (len(toks)+9)//10 AS lpos,
-           |    'nav home about contact subscribe' AS line
-           |  FROM d2 WHERE doc_id % 7 = 0),
-           |c1 AS (SELECT line, count(DISTINCT doc_id) AS n FROM lnb
-           |  WHERE doc_id % 2 = 0 GROUP BY 1),
-           |ct AS (SELECT line, count(DISTINCT doc_id) AS n FROM lnb
-           |  GROUP BY 1),
-           |keepl AS (SELECT l.doc_id, l.lpos, l.line FROM lnb l
-           |  LEFT JOIN c1 ON c1.line = l.line
-           |  LEFT JOIN ct ON ct.line = l.line
-           |  WHERE (CASE WHEN l.doc_id % 2 = 0
-           |    THEN COALESCE(c1.n, 0) ELSE ct.n END) < 3),
-           |reb AS (SELECT doc_id,
-           |    string_agg(line, chr(10) ORDER BY lpos) AS clean,
-           |    count(*) AS nk
-           |  FROM keepl GROUP BY doc_id)
-           |SELECT d2.doc_id,
-           |  CAST(COALESCE(r.nk, 0) AS BIGINT) AS n_lines_kept,
-           |  md5(COALESCE(r.clean, '')) AS clean_md5,
-           |  CAST(CASE WHEN d2.doc_id % 2 = 0 THEN 1 ELSE 2 END
-           |    AS BIGINT) AS batch
-           |FROM d2 LEFT JOIN reb r USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q180: the unigram Viterbi twin — builder + costs + the DP
-      // unrolled per position (see unigramCtes); ids_md5 pins the full
-      // per-doc id stream, so every tie-break choice is gated, not
-      // just segment counts. Constants mirror the Spark call:
-      // maxPieceLen 4, minCount 8, maxSize 120, costScale 2^20,
-      // word-length cap 16 (the salt compound's length)
-      "q180_unigram_viterbi" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |${unigramCtes(4, 8L, 120, 1L << 20, 16)}
-           |SELECT d.doc_id,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE COALESCE(u.n_pieces, 0) END AS n_pieces,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE COALESCE(u.ids_md5, md5('')) END AS ids_md5
-           |FROM docs2 d LEFT JOIN uenc u USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q183: per-doc vit_cost off the same DP (uenc carries it), the
-      // self-normalizing mean-surprise gate cross-multiplied in HUGEINT.
-      // Like q180/q137, a non-null ZERO-TOKEN doc coalesces to (0, 0,
-      // keep=true — 0 ≤ 0) instead of riding the join's NULL: the Spark
-      // side emits size([]) = 0 for it, only null TEXT stays NULL
-      "q183_unigram_surprise" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |${unigramCtes(4, 8L, 120, 1L << 20, 16)},
-           |stot AS (SELECT CAST(sum(vit_cost) AS HUGEINT) AS tc,
-           |    CAST(sum(n_pieces) AS HUGEINT) AS tn FROM uenc),
-           |sfin AS (SELECT d.doc_id,
-           |    CASE WHEN d.text IS NULL THEN NULL
-           |      ELSE COALESCE(u.n_pieces, 0) END AS n_pieces,
-           |    CASE WHEN d.text IS NULL THEN NULL
-           |      ELSE COALESCE(u.vit_cost, 0) END AS vit_cost
-           |  FROM docs2 d LEFT JOIN uenc u USING (doc_id))
-           |SELECT f.doc_id, f.n_pieces, f.vit_cost,
-           |  (CAST(f.vit_cost AS HUGEINT) * s.tn
-           |    <= s.tc * CAST(f.n_pieces AS HUGEINT)) AS keep
-           |FROM sfin f CROSS JOIN stot s
-           |ORDER BY doc_id""".stripMargin,
-
-      // q184: E-step usage from the first DP's own segmentation
-      // (per-word ids × word multiplicity), zero-usage multi-char
-      // prune, integer re-costing, then the SECOND unrolled Viterbi
-      // over the new table
-      "q184_unigram_hard_em" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |${unigramCtes(4, 8L, 120, 1L << 20, 16)},
-           |vuse AS (SELECT CAST(unnest(string_split(s.ids, ' '))
-           |      AS INTEGER) AS id, c.wc
-           |  FROM useg s JOIN utc c ON c.tok = s.w),
-           |vcnt AS (SELECT id, CAST(sum(wc) AS BIGINT) AS u
-           |  FROM vuse GROUP BY 1),
-           |vkept AS (SELECT p.piece, p.id, p.plen, coalesce(v.u, 0) AS u
-           |  FROM upc p LEFT JOIN vcnt v USING (id)
-           |  WHERE p.plen = 1 OR coalesce(v.u, 0) > 0),
-           |vtot AS (SELECT CAST(sum(u) AS HUGEINT) AS t FROM vkept),
-           |vpc AS MATERIALIZED (SELECT k.piece, k.id, k.plen,
-           |    CAST(1 + (CAST(${1L << 20} AS HUGEINT) * (vt.t - k.u)) // vt.t
-           |      AS BIGINT) AS cost
-           |  FROM vkept k, vtot vt),
-           |${unigramDpCtes("v", "vpc", 4, 16)}
-           |SELECT d.doc_id,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE COALESCE(v.n_pieces, 0) END AS n_pieces2,
-           |  CASE WHEN d.text IS NULL THEN NULL
-           |    ELSE COALESCE(v.ids_md5, md5('')) END AS ids2_md5,
-           |  CAST((SELECT count(*) FROM upc) - (SELECT count(*) FROM vkept)
-           |    AS BIGINT) AS n_pruned
-           |FROM docs2 d LEFT JOIN venc v USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q194: the 2-round learn loop unrolled — q184's EM algebra run
-      // twice with the shrink-to-target prune between rounds: after
-      // each recost, singles stay and multis keep the top
-      // greatest(100 − |singles|, (3·|multis|)//4) by (usage desc,
-      // piece) — the exact integer arithmetic of Corpus.learnUnigram.
-      // The second DP pass reads the round-1 survivor table (vsel)
-      // through the same generator; the output is the FINAL table
-      "q194_learn_unigram" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |${unigramCtes(4, 8L, 120, 1L << 20, 16)},
-           |vuse AS (SELECT CAST(unnest(string_split(s.ids, ' '))
-           |      AS INTEGER) AS id, c.wc
-           |  FROM useg s JOIN utc c ON c.tok = s.w),
-           |vcnt AS (SELECT id, CAST(sum(wc) AS BIGINT) AS u
-           |  FROM vuse GROUP BY 1),
-           |vkept AS (SELECT p.piece, p.id, p.plen, coalesce(v.u, 0) AS u
-           |  FROM upc p LEFT JOIN vcnt v USING (id)
-           |  WHERE p.plen = 1 OR coalesce(v.u, 0) > 0),
-           |vtot AS (SELECT CAST(sum(u) AS HUGEINT) AS t FROM vkept),
-           |vpc0 AS MATERIALIZED (SELECT k.piece, k.id, k.plen, k.u,
-           |    CAST(1 + (CAST(${1L << 20} AS HUGEINT) * (vt.t - k.u)) // vt.t
-           |      AS BIGINT) AS cost
-           |  FROM vkept k, vtot vt),
-           |vkm AS (SELECT greatest(
-           |    100 - (SELECT count(*) FROM vpc0 WHERE plen = 1),
-           |    (3 * (SELECT count(*) FROM vpc0 WHERE plen > 1)) // 4) AS k),
-           |vsel AS MATERIALIZED (
-           |  SELECT piece, id, plen, cost FROM vpc0 WHERE plen = 1
-           |  UNION ALL
-           |  SELECT piece, id, plen, cost FROM (
-           |    SELECT piece, id, plen, cost,
-           |      row_number() OVER (ORDER BY u DESC, piece) AS rn
-           |    FROM vpc0 WHERE plen > 1)
-           |  WHERE rn <= (SELECT k FROM vkm)),
-           |${unigramDpCtes("w", "vsel", 4, 16)},
-           |wuse AS (SELECT CAST(unnest(string_split(s.ids, ' '))
-           |      AS INTEGER) AS id, c.wc
-           |  FROM wseg s JOIN utc c ON c.tok = s.w),
-           |wcnt AS (SELECT id, CAST(sum(wc) AS BIGINT) AS u
-           |  FROM wuse GROUP BY 1),
-           |wkept AS (SELECT p.piece, p.id, p.plen, coalesce(v.u, 0) AS u
-           |  FROM vsel p LEFT JOIN wcnt v USING (id)
-           |  WHERE p.plen = 1 OR coalesce(v.u, 0) > 0),
-           |wtot AS (SELECT CAST(sum(u) AS HUGEINT) AS t FROM wkept),
-           |wpc0 AS MATERIALIZED (SELECT k.piece, k.id, k.plen, k.u,
-           |    CAST(1 + (CAST(${1L << 20} AS HUGEINT) * (wt.t - k.u)) // wt.t
-           |      AS BIGINT) AS cost
-           |  FROM wkept k, wtot wt),
-           |wkm AS (SELECT greatest(
-           |    100 - (SELECT count(*) FROM wpc0 WHERE plen = 1),
-           |    (3 * (SELECT count(*) FROM wpc0 WHERE plen > 1)) // 4) AS k),
-           |wsel AS (
-           |  SELECT piece, id, cost FROM wpc0 WHERE plen = 1
-           |  UNION ALL
-           |  SELECT piece, id, cost FROM (
-           |    SELECT piece, id, cost,
-           |      row_number() OVER (ORDER BY u DESC, piece) AS rn
-           |    FROM wpc0 WHERE plen > 1)
-           |  WHERE rn <= (SELECT k FROM wkm))
-           |SELECT piece, CAST(id AS BIGINT) AS id, cost
-           |FROM wsel ORDER BY id""".stripMargin,
-
-      // q181: exact-rational TVD — identical integers via HUGEINT
-      // cross-multiplication, DECIMAL(38,0) on the wire for dtype
-      // parity with Spark's decimal columns
-      "q181_corpus_drift" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |t0 AS (SELECT doc_id, unnest($toksSql) AS token FROM docs2),
-           |cnt AS (SELECT token,
-           |    CAST(count(*) FILTER (WHERE doc_id % 2 = 0) AS BIGINT) AS n_a,
-           |    CAST(count(*) FILTER (WHERE doc_id % 2 = 1) AS BIGINT) AS n_b
-           |  FROM t0 GROUP BY 1),
-           |tot AS (SELECT CAST(sum(n_a) AS HUGEINT) AS ta,
-           |    CAST(sum(n_b) AS HUGEINT) AS tb FROM cnt),
-           |d AS (SELECT token, n_a, n_b,
-           |    CAST(abs(CAST(n_a AS HUGEINT) * tb - CAST(n_b AS HUGEINT) * ta)
-           |      AS DECIMAL(38,0)) AS drift_num
-           |  FROM cnt, tot),
-           |t2 AS (SELECT CAST(sum(drift_num) AS DECIMAL(38,0)) AS tvd_num,
-           |    (SELECT CAST(2 * ta * tb AS DECIMAL(38,0)) FROM tot)
-           |      AS tvd_den FROM d)
-           |SELECT token, n_a, n_b,
-           |  CAST(drift_num AS DOUBLE) AS drift_num,
-           |  CAST(tvd_num AS DOUBLE) AS tvd_num,
-           |  CAST(tvd_den AS DOUBLE) AS tvd_den
-           |FROM d, t2
-           |ORDER BY drift_num DESC, token LIMIT 40""".stripMargin,
-
-      // q185: q181's machinery over the bigram shingle distribution
-      // (whole-doc shingle for short docs — the established fragment)
-      "q185_drift_bigrams" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |t0 AS (SELECT doc_id, unnest(${shinglesSql("tk", 2)}) AS token
-           |  FROM (SELECT doc_id, $toksSql AS tk FROM docs2)),
-           |cnt AS (SELECT token,
-           |    CAST(count(*) FILTER (WHERE doc_id % 2 = 0) AS BIGINT) AS n_a,
-           |    CAST(count(*) FILTER (WHERE doc_id % 2 = 1) AS BIGINT) AS n_b
-           |  FROM t0 GROUP BY 1),
-           |tot AS (SELECT CAST(sum(n_a) AS HUGEINT) AS ta,
-           |    CAST(sum(n_b) AS HUGEINT) AS tb FROM cnt),
-           |d AS (SELECT token, n_a, n_b,
-           |    CAST(abs(CAST(n_a AS HUGEINT) * tb - CAST(n_b AS HUGEINT) * ta)
-           |      AS DECIMAL(38,0)) AS drift_num
-           |  FROM cnt, tot),
-           |t2 AS (SELECT CAST(sum(drift_num) AS DECIMAL(38,0)) AS tvd_num,
-           |    (SELECT CAST(2 * ta * tb AS DECIMAL(38,0)) FROM tot)
-           |      AS tvd_den FROM d)
-           |SELECT token, n_a, n_b,
-           |  CAST(drift_num AS DOUBLE) AS drift_num,
-           |  CAST(tvd_num AS DOUBLE) AS tvd_num,
-           |  CAST(tvd_den AS DOUBLE) AS tvd_den
-           |FROM d, t2
-           |ORDER BY drift_num DESC, token LIMIT 40""".stripMargin,
-
-      // q182: the sequential chain restated as accept/reject CTEs
-      // (q79b's quality gates, q125's repetition thresholds, the
-      // contentHash keep-first among stage-3 survivors, q79b's
-      // 3-shingle eval contamination) resolved by the same priority
-      // CASE the Spark side's attributeRejections applies
-      "q182_curation_audit" ->
-        s"""WITH tr AS (SELECT doc_id, text FROM documents
-           |  WHERE doc_id % 50 <> 0),
-           |tk3 AS (SELECT doc_id, text, $toksSql AS tk FROM tr
-           |  WHERE text IS NOT NULL),
-           |qb AS (SELECT doc_id FROM (
-           |    SELECT doc_id, len(tk) AS ntok,
-           |      CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |        list_aggregate(list_transform(tk, x -> strlen(x)),
-           |          'sum')::DOUBLE / len(tk) END AS mtl,
-           |      CASE WHEN strlen(text) = 0 THEN 0.0 ELSE
-           |        (strlen(text) - strlen(regexp_replace(text,
-           |          '[^a-zA-Z0-9\\s]', '', 'g')))::DOUBLE / strlen(text)
-           |      END AS pr
-           |    FROM tk3)
-           |  WHERE NOT (ntok >= 20 AND mtl >= 3.0 AND mtl <= 10.0
-           |    AND pr <= 0.2)),
-           |rl AS (SELECT doc_id, line FROM (
-           |    SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-           |    FROM tr WHERE text IS NOT NULL)
-           |  WHERE len(line) > 0),
-           |rlc AS (SELECT doc_id, line, count(*) AS c FROM rl GROUP BY 1, 2),
-           |rls AS (SELECT doc_id,
-           |    CAST(sum(c) AS BIGINT) AS n_lines,
-           |    CAST(coalesce(sum(c) FILTER (WHERE c >= 2), 0) AS BIGINT)
-           |      AS dup_lines,
-           |    CAST(sum(c * len(line)) AS BIGINT) AS line_chars,
-           |    CAST(coalesce(sum(c * len(line)) FILTER (WHERE c >= 2), 0)
-           |      AS BIGINT) AS dup_line_chars
-           |  FROM rlc GROUP BY 1),
-           |rg AS (SELECT doc_id, unnest(${shinglesSql("tk", 2)}) AS gram
-           |  FROM tk3),
-           |rgc AS (SELECT doc_id, gram, count(*) AS c FROM rg GROUP BY 1, 2),
-           |rtop AS (SELECT doc_id, CAST(c * len(gram) AS BIGINT)
-           |    AS top2_chars
-           |  FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-           |      ORDER BY c DESC, gram) AS rn FROM rgc)
-           |  WHERE rn = 1),
-           |rb AS (SELECT t.doc_id FROM tk3 t
-           |  LEFT JOIN rls ON t.doc_id = rls.doc_id
-           |  LEFT JOIN rtop ON t.doc_id = rtop.doc_id
-           |  WHERE NOT (coalesce(dup_lines, 0) * 10
-           |      <= coalesce(n_lines, 0) * 3
-           |    AND coalesce(dup_line_chars, 0) * 5
-           |      <= coalesce(line_chars, 0)
-           |    AND coalesce(top2_chars, 0) * 5
-           |      <= CAST(coalesce(len(t.text), 0) AS BIGINT))),
-           |s13 AS (SELECT doc_id, text FROM tk3
-           |  WHERE doc_id NOT IN (SELECT doc_id FROM qb)
-           |    AND doc_id NOT IN (SELECT doc_id FROM rb)),
-           |ch2 AS (SELECT doc_id,
-           |    md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS chash
-           |  FROM s13),
-           |kp AS (SELECT min(doc_id) AS k FROM ch2 GROUP BY chash),
-           |db AS (SELECT doc_id FROM ch2
-           |  WHERE doc_id NOT IN (SELECT k FROM kp)),
-           |tsh2 AS (SELECT doc_id,
-           |    unnest(list_distinct(${shinglesSql("tk")})) AS s FROM tk3),
-           |etk AS (SELECT doc_id, $toksSql AS tk FROM documents
-           |  WHERE doc_id % 50 = 0),
-           |esh2 AS (SELECT DISTINCT
-           |    unnest(list_distinct(${shinglesSql("tk")})) AS s FROM etk),
-           |cb AS (SELECT DISTINCT t.doc_id FROM tsh2 t JOIN esh2 USING (s))
-           |SELECT t.doc_id, CASE
-           |    WHEN t.text IS NULL THEN 'null_text'
-           |    WHEN t.doc_id IN (SELECT doc_id FROM qb) THEN 'quality'
-           |    WHEN t.doc_id IN (SELECT doc_id FROM rb) THEN 'repetition'
-           |    WHEN t.doc_id IN (SELECT doc_id FROM db) THEN 'exact_dup'
-           |    WHEN t.doc_id IN (SELECT doc_id FROM cb) THEN 'contaminated'
-           |    ELSE 'accepted' END AS stage
-           |FROM tr t ORDER BY doc_id""".stripMargin,
-
-      // q186: perceptual-hash image near-dup — the twin re-derives the
-      // 32 byte-histogram lanes hex-exactly (q47's convention), builds
-      // aHash/dHash bit-for-bit with the same cross-multiplied integer
-      // rule, and BRUTE-FORCES the ≤3-Hamming pair set: banding is
-      // exact (pigeonhole), so the banded Spark pair set must equal
-      // the all-pairs reference
-      "q186_image_phash_neardup" ->
-        """WITH b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-          |  FROM documents),
-          |lv AS (SELECT asset_id, UNNEST(list_transform(
-          |    range(1, octet_length(payload) + 1),
-          |    i -> {'l': (i - 1) % 32,
-          |          'v': ('0x' || substr(hex(payload), 2*i-1, 2))::BIGINT}))
-          |    AS s
-          |  FROM b),
-          |lanes AS (SELECT asset_id, s.l AS lane, SUM(s.v) AS v
-          |  FROM lv GROUP BY 1, 2),
-          |dense AS (SELECT b.asset_id, r.lane, COALESCE(l.v, 0) AS v
-          |  FROM b CROSS JOIN (SELECT UNNEST(range(0, 32)) AS lane) r
-          |  LEFT JOIN lanes l
-          |    ON l.asset_id = b.asset_id AND l.lane = r.lane),
-          |tot AS (SELECT asset_id, SUM(v) AS tot FROM dense GROUP BY 1),
-          |ah AS (SELECT d.asset_id,
-          |    CAST(SUM(CASE WHEN d.v * 32 > t.tot
-          |      THEN (CAST(1 AS BIGINT) << d.lane) ELSE 0 END) AS BIGINT)
-          |      AS h
-          |  FROM dense d JOIN tot t USING (asset_id) GROUP BY 1),
-          |dh AS (SELECT x.asset_id,
-          |    CAST(SUM(CASE WHEN x.v > y.v
-          |      THEN (CAST(1 AS BIGINT) << x.lane) ELSE 0 END) AS BIGINT)
-          |      AS h
-          |  FROM dense x JOIN dense y
-          |    ON y.asset_id = x.asset_id AND y.lane = x.lane + 1
-          |  GROUP BY 1),
-          |cand AS (SELECT x.asset_id AS id_a, y.asset_id AS id_b,
-          |    CAST(bit_count(xor(x.h, y.h)) AS BIGINT) AS a_hamming
-          |  FROM ah x JOIN ah y ON x.asset_id < y.asset_id
-          |  WHERE bit_count(xor(x.h, y.h)) <= 3)
-          |SELECT c.id_a, c.id_b, c.a_hamming,
-          |  CAST(bit_count(xor(da.h, db.h)) AS BIGINT) AS d_hamming
-          |FROM cand c
-          |JOIN dh da ON da.asset_id = c.id_a
-          |JOIN dh db ON db.asset_id = c.id_b
-          |ORDER BY id_a, id_b""".stripMargin,
-
-      // q187: the q180 DP's per-word id strings aggregated to per-doc
-      // streams and pushed through the q144 pack CTEs; the decode side
-      // needs NO tokenizer (unigram decode∘encode = salted text minus
-      // whitespace — the alphabet keeps every corpus char, so no UNK),
-      // exactly q152's regexp-strip rebuild, while ids_md5 gates the
-      // actual id stream digest per pack
-      "q187_unigram_pack_decode" ->
-        s"""WITH docs2 AS (SELECT doc_id,
-           |    text || ' ' || regexp_replace(substr(text, 1, 16), ' ', '', 'g')
-           |      AS text FROM documents),
-           |${unigramCtes(4, 8L, 120, 1L << 20, 16)},
-           |uids AS (SELECT t.doc_id,
-           |    string_agg(s.ids, ' ' ORDER BY t.ord) AS ids_str,
-           |    CAST(sum(s.n) AS BIGINT) AS n_pieces
-           |  FROM utoks t JOIN useg s ON s.w = t.tok
-           |  GROUP BY 1),
-           |qnt AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(u.n_pieces, 0) AS n_tokens,
-           |    COALESCE(u.ids_str, '') AS ids_str,
-           |    regexp_replace(d.text, '\\s+', '', 'g') AS dec
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN uids u USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |qcc AS (SELECT doc_id, lang, n_tokens, ids_str, dec,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM qnt),
-           |qpk AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, ids_str, dec FROM qcc)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS n_ids,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  CAST(length(COALESCE(string_agg(dec, '' ORDER BY doc_id), ''))
-           |    AS BIGINT) AS decoded_chars,
-           |  md5(COALESCE(string_agg(dec, '' ORDER BY doc_id), ''))
-           |    AS decoded_md5,
-           |  md5(string_agg(md5(dec), ' ' ORDER BY doc_id)) AS segs_md5
-           |FROM qpk GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q189: q186's brute-forced pair set walked to connected
-      // components by the same recursive reachability as q78's twin;
-      // keep = the cluster-min rule stated directly
-      "q189_image_dedup_clusters" ->
-        """WITH RECURSIVE b AS (SELECT doc_id AS asset_id,
-          |    encode(text) AS payload FROM documents),
-          |lv AS (SELECT asset_id, UNNEST(list_transform(
-          |    range(1, octet_length(payload) + 1),
-          |    i -> {'l': (i - 1) % 32,
-          |          'v': ('0x' || substr(hex(payload), 2*i-1, 2))::BIGINT}))
-          |    AS s
-          |  FROM b),
-          |lanes AS (SELECT asset_id, s.l AS lane, SUM(s.v) AS v
-          |  FROM lv GROUP BY 1, 2),
-          |dense AS (SELECT b.asset_id, r.lane, COALESCE(l.v, 0) AS v
-          |  FROM b CROSS JOIN (SELECT UNNEST(range(0, 32)) AS lane) r
-          |  LEFT JOIN lanes l
-          |    ON l.asset_id = b.asset_id AND l.lane = r.lane),
-          |tot AS (SELECT asset_id, SUM(v) AS tot FROM dense GROUP BY 1),
-          |ah AS (SELECT d.asset_id,
-          |    CAST(SUM(CASE WHEN d.v * 32 > t.tot
-          |      THEN (CAST(1 AS BIGINT) << d.lane) ELSE 0 END) AS BIGINT)
-          |      AS h
-          |  FROM dense d JOIN tot t USING (asset_id) GROUP BY 1),
-          |cand AS (SELECT x.asset_id AS id_a, y.asset_id AS id_b
-          |  FROM ah x JOIN ah y ON x.asset_id < y.asset_id
-          |  WHERE bit_count(xor(x.h, y.h)) <= 3),
-          |e AS (SELECT id_a AS a, id_b AS bb FROM cand
-          |  UNION SELECT id_b, id_a FROM cand),
-          |reach(src, dst) AS (
-          |  SELECT asset_id, asset_id FROM b
-          |  UNION
-          |  SELECT r.src, e.bb FROM reach r JOIN e ON r.dst = e.a)
-          |SELECT src AS asset_id, min(dst) AS root,
-          |  (src = min(dst)) AS keep
-          |FROM reach GROUP BY src ORDER BY asset_id""".stripMargin,
-
-      // q191: frames re-cut from the hex payload (frame i = hex chars
-      // [i·128+1, 128], byte length = hex length / 2), digest-keyed
-      // ownership by the same packed-min rule
-      "q191_frame_storage_dedup" ->
-        """WITH b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-          |  FROM documents),
-          |fr0 AS (SELECT asset_id, UNNEST(list_transform(
-          |    range((octet_length(payload) + 63) // 64),
-          |    i -> {'idx': i,
-          |          'h': lower(substr(hex(payload), i*128 + 1, 128))}))
-          |    AS s
-          |  FROM b WHERE octet_length(payload) > 0),
-          |fr AS (SELECT asset_id, s.idx AS frame_idx, md5(s.h) AS k,
-          |    CAST(length(s.h) // 2 AS BIGINT) AS fb FROM fr0),
-          |own AS (SELECT k, min(asset_id * 16777216 + frame_idx) AS o
-          |  FROM fr GROUP BY 1),
-          |occ AS (SELECT f.asset_id, f.fb,
-          |    (f.asset_id * 16777216 + f.frame_idx = o.o) AS canon
-          |  FROM fr f JOIN own o USING (k)),
-          |per AS (SELECT asset_id,
-          |    CAST(count(*) AS BIGINT) AS n_frames,
-          |    CAST(count(*) FILTER (WHERE canon) AS BIGINT) AS own_frames,
-          |    CAST(count(*) FILTER (WHERE NOT canon) AS BIGINT)
-          |      AS dup_frames,
-          |    CAST(COALESCE(sum(fb) FILTER (WHERE NOT canon), 0) AS BIGINT)
-          |      AS dup_bytes
-          |  FROM occ GROUP BY 1)
-          |SELECT b.asset_id,
-          |  CAST(COALESCE(p.n_frames, 0) AS BIGINT) AS n_frames,
-          |  CAST(COALESCE(p.own_frames, 0) AS BIGINT) AS own_frames,
-          |  CAST(COALESCE(p.dup_frames, 0) AS BIGINT) AS dup_frames,
-          |  CAST(COALESCE(p.dup_bytes, 0) AS BIGINT) AS dup_bytes
-          |FROM b LEFT JOIN per p USING (asset_id)
-          |ORDER BY asset_id""".stripMargin,
-
-      // q193: frames re-cut from hex (the q191 convention), per-frame
-      // lanes = byte sums at positions ≡ j mod 8, aHash bits by the
-      // integer cross-multiply, stream in frame order, then exactly
-      // the q32 shingle→minhash→band pipeline over the stream tokens
-      "q193_frame_seq_neardup" -> {
-        val mh = graft.operators.Dedup.minhashCoeffs(8).zipWithIndex
-          .map { case ((a, b), i) =>
-            s"min((hv * $a + $b) % ${graft.operators.Dedup.MinhashP}) AS mh$i"
-          }.mkString(", ")
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT asset_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) " +
-            s"|| '_' || CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-           |  FROM documents),
-           |fr AS (SELECT asset_id, s.idx AS frame_idx, s.h AS h FROM (
-           |    SELECT asset_id, UNNEST(list_transform(
-           |      range((octet_length(payload) + 63) // 64),
-           |      i -> {'idx': i,
-           |            'h': lower(substr(hex(payload), i*128 + 1, 128))}))
-           |      AS s
-           |    FROM b WHERE octet_length(payload) > 0)),
-           |lane AS (SELECT asset_id, frame_idx, list_transform(range(8),
-           |    j -> coalesce(list_sum(list_transform(range(len(h) // 2),
-           |      p -> CASE WHEN p % 8 = j
-           |           THEN ('0x' || substr(h, p*2 + 1, 2))::BIGINT
-           |           ELSE 0 END)), 0)) AS l
-           |  FROM fr),
-           |ph AS (SELECT asset_id, frame_idx,
-           |    list_sum(list_transform(range(8), j ->
-           |      CASE WHEN l[j+1] * 8 > list_sum(l)
-           |           THEN (1::BIGINT << j) ELSE 0 END)) AS phash
-           |  FROM lane),
-           |stream AS (SELECT asset_id,
-           |    string_agg(CAST(phash AS VARCHAR), ' ' ORDER BY frame_idx)
-           |      AS t
-           |  FROM ph GROUP BY asset_id),
-           |tk0 AS (SELECT asset_id,
-           |    list_filter(string_split_regex(t, '\\s+'),
-           |      x -> strlen(x) > 0) AS tk FROM stream),
-           |sh AS (SELECT asset_id,
-           |    unnest(list_distinct(${shinglesSql("tk")})) AS s FROM tk0),
-           |h AS (SELECT asset_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT asset_id, $mh FROM h GROUP BY asset_id),
-           |banded AS ($bandKeys)
-           |SELECT DISTINCT a.asset_id AS id_a, b.asset_id AS id_b
-           |FROM banded a JOIN banded b
-           |  ON a.band = b.band AND a.key = b.key
-           |  AND a.asset_id < b.asset_id
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      // q195: q193's pipeline + the exact verify — candidate pairs
-      // joined back to both sides' distinct k-frame shingle sets; the
-      // double division is the q34 convention
-      "q195_frame_seq_verified" -> {
-        val mh = graft.operators.Dedup.minhashCoeffs(8).zipWithIndex
-          .map { case ((a, b), i) =>
-            s"min((hv * $a + $b) % ${graft.operators.Dedup.MinhashP}) AS mh$i"
-          }.mkString(", ")
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT asset_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) " +
-            s"|| '_' || CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-           |  FROM documents),
-           |fr AS (SELECT asset_id, s.idx AS frame_idx, s.h AS h FROM (
-           |    SELECT asset_id, UNNEST(list_transform(
-           |      range((octet_length(payload) + 63) // 64),
-           |      i -> {'idx': i,
-           |            'h': lower(substr(hex(payload), i*128 + 1, 128))}))
-           |      AS s
-           |    FROM b WHERE octet_length(payload) > 0)),
-           |lane AS (SELECT asset_id, frame_idx, list_transform(range(8),
-           |    j -> coalesce(list_sum(list_transform(range(len(h) // 2),
-           |      p -> CASE WHEN p % 8 = j
-           |           THEN ('0x' || substr(h, p*2 + 1, 2))::BIGINT
-           |           ELSE 0 END)), 0)) AS l
-           |  FROM fr),
-           |ph AS (SELECT asset_id, frame_idx,
-           |    list_sum(list_transform(range(8), j ->
-           |      CASE WHEN l[j+1] * 8 > list_sum(l)
-           |           THEN (1::BIGINT << j) ELSE 0 END)) AS phash
-           |  FROM lane),
-           |stream AS (SELECT asset_id,
-           |    string_agg(CAST(phash AS VARCHAR), ' ' ORDER BY frame_idx)
-           |      AS t
-           |  FROM ph GROUP BY asset_id),
-           |tk0 AS (SELECT asset_id,
-           |    list_filter(string_split_regex(t, '\\s+'),
-           |      x -> strlen(x) > 0) AS tk FROM stream),
-           |sh AS (SELECT asset_id,
-           |    unnest(list_distinct(${shinglesSql("tk")})) AS s FROM tk0),
-           |h AS (SELECT asset_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT asset_id, $mh FROM h GROUP BY asset_id),
-           |banded AS ($bandKeys),
-           |pairs AS (SELECT DISTINCT a.asset_id AS id_a,
-           |    b.asset_id AS id_b
-           |  FROM banded a JOIN banded b
-           |  ON a.band = b.band AND a.key = b.key
-           |  AND a.asset_id < b.asset_id),
-           |sz AS (SELECT asset_id, count(*) AS sz FROM sh GROUP BY 1),
-           |inter AS (SELECT p.id_a, p.id_b, count(*) AS i
-           |  FROM pairs p
-           |  JOIN sh a ON a.asset_id = p.id_a
-           |  JOIN sh b2 ON b2.asset_id = p.id_b AND b2.s = a.s
-           |  GROUP BY 1, 2)
-           |SELECT id_a, id_b,
-           |  i::DOUBLE / (sa.sz + sb.sz - i) AS jaccard
-           |FROM inter
-           |JOIN sz sa ON sa.asset_id = id_a
-           |JOIN sz sb ON sb.asset_id = id_b
-           |WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.35
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      // q196: q191's frame cut with the two-batch composition stated
-      // as one arrival-order rule — stored iff the occurrence is its
-      // digest's minimum under (parity, asset, idx)
-      "q196_frame_index_add" ->
-        """WITH b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-          |  FROM documents),
-          |fr0 AS (SELECT asset_id, UNNEST(list_transform(
-          |    range((octet_length(payload) + 63) // 64),
-          |    i -> {'idx': i,
-          |          'h': lower(substr(hex(payload), i*128 + 1, 128))}))
-          |    AS s
-          |  FROM b WHERE octet_length(payload) > 0),
-          |fr AS (SELECT asset_id, s.idx AS frame_idx, md5(s.h) AS k,
-          |    CAST(length(s.h) // 2 AS BIGINT) AS fb FROM fr0),
-          |occ AS (SELECT asset_id, fb, row_number() OVER (
-          |    PARTITION BY k
-          |    ORDER BY asset_id % 2, asset_id, frame_idx) = 1 AS stored
-          |  FROM fr),
-          |per AS (SELECT asset_id,
-          |    CAST(count(*) AS BIGINT) AS n_frames,
-          |    CAST(count(*) FILTER (WHERE stored) AS BIGINT)
-          |      AS stored_frames,
-          |    CAST(count(*) FILTER (WHERE NOT stored) AS BIGINT)
-          |      AS dup_frames,
-          |    CAST(COALESCE(sum(fb) FILTER (WHERE NOT stored), 0)
-          |      AS BIGINT) AS dup_bytes
-          |  FROM occ GROUP BY 1)
-          |SELECT b.asset_id,
-          |  CAST(COALESCE(p.n_frames, 0) AS BIGINT) AS n_frames,
-          |  CAST(COALESCE(p.stored_frames, 0) AS BIGINT) AS stored_frames,
-          |  CAST(COALESCE(p.dup_frames, 0) AS BIGINT) AS dup_frames,
-          |  CAST(COALESCE(p.dup_bytes, 0) AS BIGINT) AS dup_bytes
-          |FROM b LEFT JOIN per p USING (asset_id)
-          |ORDER BY asset_id""".stripMargin,
-
-      // q198: q196's algebra with the streaming batch stamp — the
-      // parity-major window IS the two-micro-batch arrival order, and
-      // batch = parity + 1 restates the replay's ingest schedule
-      "q198_stream_frame_index" ->
-        """WITH b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-          |  FROM documents),
-          |fr0 AS (SELECT asset_id, UNNEST(list_transform(
-          |    range((octet_length(payload) + 63) // 64),
-          |    i -> {'idx': i,
-          |          'h': lower(substr(hex(payload), i*128 + 1, 128))}))
-          |    AS s
-          |  FROM b WHERE octet_length(payload) > 0),
-          |fr AS (SELECT asset_id, s.idx AS frame_idx, md5(s.h) AS k,
-          |    CAST(length(s.h) // 2 AS BIGINT) AS fb FROM fr0),
-          |occ AS (SELECT asset_id, fb, row_number() OVER (
-          |    PARTITION BY k
-          |    ORDER BY asset_id % 2, asset_id, frame_idx) = 1 AS stored
-          |  FROM fr),
-          |per AS (SELECT asset_id,
-          |    CAST(count(*) AS BIGINT) AS n_frames,
-          |    CAST(count(*) FILTER (WHERE stored) AS BIGINT)
-          |      AS stored_frames,
-          |    CAST(count(*) FILTER (WHERE NOT stored) AS BIGINT)
-          |      AS dup_frames,
-          |    CAST(COALESCE(sum(fb) FILTER (WHERE NOT stored), 0)
-          |      AS BIGINT) AS dup_bytes
-          |  FROM occ GROUP BY 1)
-          |SELECT b.asset_id,
-          |  CAST(COALESCE(p.n_frames, 0) AS BIGINT) AS n_frames,
-          |  CAST(COALESCE(p.stored_frames, 0) AS BIGINT) AS stored_frames,
-          |  CAST(COALESCE(p.dup_frames, 0) AS BIGINT) AS dup_frames,
-          |  CAST(COALESCE(p.dup_bytes, 0) AS BIGINT) AS dup_bytes,
-          |  CAST(b.asset_id % 2 + 1 AS BIGINT) AS batch
-          |FROM b LEFT JOIN per p USING (asset_id)
-          |ORDER BY asset_id""".stripMargin,
-
-      // q201: the q189 reachability (keep = cluster-min root) feeding
-      // the q169 pack arithmetic over the kept universe, with the q191
-      // frame-cut/ownership CTEs (f-prefixed to avoid collisions)
-      // computed over the SAME universe and rolled up per pack in the
-      // final aggregate — one twin spanning every composition seam
-      "q201_multimodal_capstone" ->
-        """WITH RECURSIVE b AS (SELECT doc_id AS asset_id,
-          |    encode(text) AS payload FROM documents),
-          |lv AS (SELECT asset_id, UNNEST(list_transform(
-          |    range(1, octet_length(payload) + 1),
-          |    i -> {'l': (i - 1) % 32,
-          |          'v': ('0x' || substr(hex(payload), 2*i-1, 2))::BIGINT}))
-          |    AS s
-          |  FROM b),
-          |lanes AS (SELECT asset_id, s.l AS lane, SUM(s.v) AS v
-          |  FROM lv GROUP BY 1, 2),
-          |dense AS (SELECT b.asset_id, r.lane, COALESCE(l.v, 0) AS v
-          |  FROM b CROSS JOIN (SELECT UNNEST(range(0, 32)) AS lane) r
-          |  LEFT JOIN lanes l
-          |    ON l.asset_id = b.asset_id AND l.lane = r.lane),
-          |tot AS (SELECT asset_id, SUM(v) AS tot FROM dense GROUP BY 1),
-          |ah AS (SELECT d.asset_id,
-          |    CAST(SUM(CASE WHEN d.v * 32 > t.tot
-          |      THEN (CAST(1 AS BIGINT) << d.lane) ELSE 0 END) AS BIGINT)
-          |      AS h
-          |  FROM dense d JOIN tot t USING (asset_id) GROUP BY 1),
-          |cand AS (SELECT x.asset_id AS id_a, y.asset_id AS id_b
-          |  FROM ah x JOIN ah y ON x.asset_id < y.asset_id
-          |  WHERE bit_count(xor(x.h, y.h)) <= 3),
-          |e AS (SELECT id_a AS a, id_b AS bb FROM cand
-          |  UNION SELECT id_b, id_a FROM cand),
-          |reach(src, dst) AS (
-          |  SELECT asset_id, asset_id FROM b
-          |  UNION
-          |  SELECT r.src, e.bb FROM reach r JOIN e ON r.dst = e.a),
-          |keep AS (SELECT src AS doc_id FROM reach GROUP BY src
-          |  HAVING src = min(dst)),
-          |mm AS MATERIALIZED (
-          |  SELECT doc_id, lang, 'image' AS modality,
-          |    CAST(16 * (1 + doc_id % 5) * (1 + doc_id % 4) AS BIGINT)
-          |      AS n_tokens,
-          |    CAST(NULL AS VARCHAR) AS hx
-          |  FROM documents WHERE doc_id % 3 = 0
-          |    AND doc_id IN (SELECT doc_id FROM keep)
-          |  UNION ALL
-          |  SELECT doc_id, lang, 'text' AS modality,
-          |    CAST(octet_length(encode(text)) AS BIGINT) AS n_tokens,
-          |    hex(encode(text)) AS hx
-          |  FROM documents WHERE doc_id % 3 <> 0 AND text IS NOT NULL
-          |    AND doc_id IN (SELECT doc_id FROM keep)),
-          |mi AS (SELECT doc_id, lang, modality, n_tokens,
-          |  CASE WHEN modality = 'image'
-          |    THEN array_to_string(list_transform(
-          |      range(1, CAST(n_tokens AS INTEGER) + 1), i -> '0'), ' ')
-          |    ELSE array_to_string(list_transform(
-          |      range(1, CAST(n_tokens AS INTEGER) + 1),
-          |      i -> CAST(('0x' || substr(hx, CAST(2*i-1 AS INTEGER), 2))
-          |        ::BIGINT + 1 AS VARCHAR)), ' ')
-          |  END AS ids_str FROM mm),
-          |mc AS (SELECT doc_id, lang, modality, n_tokens, ids_str,
-          |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM mi),
-          |mp AS (SELECT lang,
-          |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-          |  doc_id, modality, n_tokens, ids_str FROM mc),
-          |mo AS (SELECT lang, pack_id, doc_id, modality, n_tokens,
-          |  ids_str,
-          |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-          |    ORDER BY doc_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-          |  FROM mp),
-          |ffr0 AS (SELECT b.asset_id, UNNEST(list_transform(
-          |    range((octet_length(payload) + 63) // 64),
-          |    i -> {'idx': i,
-          |          'h': lower(substr(hex(payload), i*128 + 1, 128))}))
-          |    AS s
-          |  FROM b JOIN mm ON mm.doc_id = b.asset_id
-          |  WHERE octet_length(payload) > 0),
-          |ffr AS (SELECT asset_id, s.idx AS frame_idx, md5(s.h) AS k,
-          |    CAST(length(s.h) // 2 AS BIGINT) AS fb FROM ffr0),
-          |fown AS (SELECT k, min(asset_id * 16777216 + frame_idx) AS o
-          |  FROM ffr GROUP BY 1),
-          |focc AS (SELECT f.asset_id, f.fb,
-          |    (f.asset_id * 16777216 + f.frame_idx = o.o) AS canon
-          |  FROM ffr f JOIN fown o USING (k)),
-          |fper AS (SELECT asset_id,
-          |    CAST(count(*) AS BIGINT) AS n_frames,
-          |    CAST(count(*) FILTER (WHERE canon) AS BIGINT) AS own_frames,
-          |    CAST(count(*) FILTER (WHERE NOT canon) AS BIGINT)
-          |      AS dup_frames,
-          |    CAST(COALESCE(sum(fb) FILTER (WHERE NOT canon), 0) AS BIGINT)
-          |      AS dup_bytes
-          |  FROM focc GROUP BY 1)
-          |SELECT mo.lang, mo.pack_id, count(*) AS n_docs,
-          |  CAST(sum(mo.n_tokens) AS BIGINT) AS pack_tokens,
-          |  CAST(sum(CASE WHEN mo.modality = 'text' THEN 1 ELSE 0 END)
-          |    AS BIGINT) AS n_text_docs,
-          |  CAST(sum(CASE WHEN mo.modality = 'image' THEN 1 ELSE 0 END)
-          |    AS BIGINT) AS n_image_docs,
-          |  CAST(sum(CASE WHEN mo.modality = 'text' THEN mo.n_tokens
-          |    ELSE 0 END) AS BIGINT) AS text_tokens,
-          |  CAST(sum(CASE WHEN mo.modality = 'image' THEN mo.n_tokens
-          |    ELSE 0 END) AS BIGINT) AS image_patches,
-          |  CAST(sum(COALESCE(fp.n_frames, 0)) AS BIGINT) AS frames,
-          |  CAST(sum(COALESCE(fp.own_frames, 0)) AS BIGINT) AS own_frames,
-          |  CAST(sum(COALESCE(fp.dup_frames, 0)) AS BIGINT) AS dup_frames,
-          |  CAST(sum(COALESCE(fp.dup_bytes, 0)) AS BIGINT) AS dup_bytes,
-          |  md5(COALESCE(string_agg(
-          |    CASE WHEN mo.ids_str = '' THEN NULL ELSE mo.ids_str END, ' '
-          |    ORDER BY mo.doc_id), '')) AS ids_md5,
-          |  md5('0' || string_agg(' ' || CAST(mo.e AS VARCHAR), ''
-          |    ORDER BY mo.doc_id)) AS offsets_md5
-          |FROM mo LEFT JOIN fper fp ON fp.asset_id = mo.doc_id
-          |GROUP BY mo.lang, mo.pack_id
-          |ORDER BY mo.lang, mo.pack_id""".stripMargin,
-
-      // q200: the exact-integer lattice forward-backward replayed in
-      // HUGEINT — words are <= 4 chars by construction, so α̃ (a0..a4)
-      // and β̃ (B1..B4) unroll as guarded CASE columns over the seven
-      // per-word piece weights; Z-homogenization (double pieces weigh
-      // n·Z) keeps every marginal an integer ratio, one floor division
-      // per (word, piece) onto the 2^20 grid, then the same M-step
-      // floor arithmetic as the hard-EM twins
-      "q200_unigram_soft_estep" ->
-        s"""WITH d0 AS (SELECT unnest($toksSql) AS tok0 FROM documents
-           |  WHERE text IS NOT NULL),
-           |d AS (SELECT substr(tok0, 1, 4) AS tok,
-           |    CAST(count(*) AS HUGEINT) AS wc FROM d0 GROUP BY 1),
-           |pos AS (SELECT tok, wc,
-           |    unnest(range(1, length(tok) + 1)) AS i FROM d),
-           |sub AS (SELECT substr(tok, i, 1) AS piece, wc FROM pos
-           |  UNION ALL
-           |  SELECT substr(tok, i, 2), wc FROM pos
-           |  WHERE i + 1 <= length(tok)),
-           |seed AS (SELECT piece, CAST(sum(wc) AS HUGEINT) AS n_seed
-           |  FROM sub GROUP BY 1),
-           |p AS (SELECT piece,
-           |    CAST(row_number() OVER (ORDER BY piece) AS BIGINT) AS id,
-           |    n_seed FROM seed),
-           |zz AS (SELECT CAST(sum(n_seed) AS HUGEINT) AS z FROM p),
-           |lat AS (SELECT tok, wc, length(tok) AS n, z.z,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,1,1)) AS w11,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,2,1)) AS w12,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,3,1)) AS w13,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,4,1)) AS w14,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,1,2)
-           |     AND length(tok) >= 2) AS w21,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,2,2)
-           |     AND length(tok) >= 3) AS w22,
-           |  (SELECT n_seed FROM p WHERE p.piece = substr(tok,3,2)
-           |     AND length(tok) >= 4) AS w23
-           |  FROM d, zz z),
-           |ab AS (SELECT *,
-           |  CAST(1 AS HUGEINT) AS a0,
-           |  w11 AS a1,
-           |  CASE WHEN n >= 2 THEN w11*w12 + w21*z END AS a2,
-           |  CASE WHEN n >= 3 THEN (w11*w12 + w21*z)*w13 + w11*w22*z
-           |    END AS a3,
-           |  CASE WHEN n >= 4 THEN
-           |    ((w11*w12 + w21*z)*w13 + w11*w22*z)*w14
-           |      + (w11*w12 + w21*z)*w23*z END AS a4,
-           |  CASE WHEN n = 4 THEN 1 END AS b4,
-           |  CASE WHEN n = 3 THEN 1 WHEN n = 4 THEN w14 END AS b3,
-           |  CASE WHEN n = 2 THEN 1 WHEN n = 3 THEN w13
-           |    WHEN n = 4 THEN w13*w14 + w23*z END AS b2,
-           |  CASE WHEN n = 1 THEN 1 WHEN n = 2 THEN w12
-           |    WHEN n = 3 THEN w12*w13 + w22*z
-           |    WHEN n = 4 THEN w12*(w13*w14 + w23*z) + w22*z*w14
-           |    END AS b1
-           |  FROM lat),
-           |aa AS (SELECT *, CASE n WHEN 1 THEN a1 WHEN 2 THEN a2
-           |    WHEN 3 THEN a3 ELSE a4 END AS tot FROM ab),
-           |occn AS (
-           |  SELECT tok, wc, tot, substr(tok,1,1) AS piece,
-           |    a0*w11*b1 AS num FROM aa
-           |  UNION ALL SELECT tok, wc, tot, substr(tok,2,1),
-           |    a1*w12*b2 FROM aa WHERE n >= 2
-           |  UNION ALL SELECT tok, wc, tot, substr(tok,3,1),
-           |    a2*w13*b3 FROM aa WHERE n >= 3
-           |  UNION ALL SELECT tok, wc, tot, substr(tok,4,1),
-           |    a3*w14*b4 FROM aa WHERE n >= 4
-           |  UNION ALL SELECT tok, wc, tot, substr(tok,1,2),
-           |    a0*w21*z*b2 FROM aa WHERE n >= 2
-           |  UNION ALL SELECT tok, wc, tot, substr(tok,2,2),
-           |    a1*w22*z*b3 FROM aa WHERE n >= 3
-           |  UNION ALL SELECT tok, wc, tot, substr(tok,3,2),
-           |    a2*w23*z*b4 FROM aa WHERE n >= 4),
-           |ew AS (SELECT tok, wc, piece,
-           |    (CAST(1048576 AS HUGEINT) * sum(num)) // tot AS e
-           |  FROM occn GROUP BY tok, wc, piece, tot),
-           |su AS (SELECT piece, sum(wc * e) AS soft_u FROM ew GROUP BY 1),
-           |kept AS (SELECT p.piece, p.id, p.n_seed,
-           |    COALESCE(su.soft_u, 0) AS soft_u
-           |  FROM p LEFT JOIN su USING (piece)
-           |  WHERE length(p.piece) = 1 OR COALESCE(su.soft_u, 0) > 0),
-           |t2 AS (SELECT CAST(sum(soft_u) AS HUGEINT) AS t2 FROM kept)
-           |SELECT piece, id, CAST(n_seed AS BIGINT) AS n_seed,
-           |  CAST(soft_u AS BIGINT) AS soft_u,
-           |  CAST(1 + (CAST(1048576 AS HUGEINT) * (t.t2 - soft_u)) // t.t2
-           |    AS BIGINT) AS cost
-           |FROM kept, t2 t ORDER BY id""".stripMargin,
-
-      // q199: the conjunction of the q197 caption CTEs (verified
-      // Jaccard >= 0.3) and the q186 image CTEs (ahash Hamming <= 3),
-      // then q189's recursive min-root reachability over the
-      // conjunction edges; keep = the cluster-min rule
-      "q199_crossmodal_dedup" -> {
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' || " +
-            s"CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH RECURSIVE $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |banded AS ($bandKeys),
-           |cpairs AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-           |  FROM banded a JOIN banded b2
-           |  ON a.band = b2.band AND a.key = b2.key
-           |    AND a.doc_id < b2.doc_id),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           |inter AS (SELECT p.id_a, p.id_b, count(*) AS i
-           |  FROM cpairs p
-           |  JOIN sh a ON a.doc_id = p.id_a
-           |  JOIN sh b2 ON b2.doc_id = p.id_b AND b2.s = a.s
-           |  GROUP BY 1, 2),
-           |cap AS (SELECT id_a, id_b FROM inter
-           |  JOIN sz sa ON sa.doc_id = id_a
-           |  JOIN sz sb ON sb.doc_id = id_b
-           |  WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.3),
-           |b AS (SELECT doc_id AS asset_id, encode(text) AS payload
-           |  FROM documents),
-           |lv AS (SELECT asset_id, UNNEST(list_transform(
-           |    range(1, octet_length(payload) + 1),
-           |    i -> {'l': (i - 1) % 32,
-           |          'v': ('0x' || substr(hex(payload), 2*i-1, 2))::BIGINT}))
-           |    AS s
-           |  FROM b),
-           |lanes AS (SELECT asset_id, s.l AS lane, SUM(s.v) AS v
-           |  FROM lv GROUP BY 1, 2),
-           |dense AS (SELECT b.asset_id, r.lane, COALESCE(l.v, 0) AS v
-           |  FROM b CROSS JOIN (SELECT UNNEST(range(0, 32)) AS lane) r
-           |  LEFT JOIN lanes l
-           |    ON l.asset_id = b.asset_id AND l.lane = r.lane),
-           |tot AS (SELECT asset_id, SUM(v) AS tot FROM dense GROUP BY 1),
-           |ah AS (SELECT d.asset_id,
-           |    CAST(SUM(CASE WHEN d.v * 32 > t.tot
-           |      THEN (CAST(1 AS BIGINT) << d.lane) ELSE 0 END) AS BIGINT)
-           |      AS h
-           |  FROM dense d JOIN tot t USING (asset_id) GROUP BY 1),
-           |icand AS (SELECT x.asset_id AS id_a, y.asset_id AS id_b
-           |  FROM ah x JOIN ah y ON x.asset_id < y.asset_id
-           |  WHERE bit_count(xor(x.h, y.h)) <= 3),
-           |conj AS (SELECT c.id_a, c.id_b
-           |  FROM cap c JOIN icand i2 USING (id_a, id_b)),
-           |e AS (SELECT id_a AS a, id_b AS bb FROM conj
-           |  UNION SELECT id_b, id_a FROM conj),
-           |reach(src, dst) AS (
-           |  SELECT doc_id, doc_id FROM documents
-           |  UNION
-           |  SELECT r.src, e.bb FROM reach r JOIN e ON r.dst = e.a)
-           |SELECT src AS asset_id, min(dst) AS root,
-           |  (src = min(dst)) AS keep
-           |FROM reach GROUP BY src ORDER BY asset_id""".stripMargin
-      },
-
-      // q197: the text two-stage composition — q32's banded candidates
-      // intersected with q34's exact Jaccard, restricted to candidates
-      "q197_minhash_verified_pairs" -> {
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' || " +
-            s"CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |banded AS ($bandKeys),
-           |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM banded a JOIN banded b
-           |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           |inter AS (SELECT p.id_a, p.id_b, count(*) AS i
-           |  FROM pairs p
-           |  JOIN sh a ON a.doc_id = p.id_a
-           |  JOIN sh b2 ON b2.doc_id = p.id_b AND b2.s = a.s
-           |  GROUP BY 1, 2)
-           |SELECT id_a, id_b,
-           |  i::DOUBLE / (sa.sz + sb.sz - i) AS jaccard
-           |FROM inter
-           |JOIN sz sa ON sa.doc_id = id_a
-           |JOIN sz sb ON sb.doc_id = id_b
-           |WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.3
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      // q192: q179's arrival-order keep-first rule with BOTH index
-      // membership and within-batch grouping re-derived from the same
-      // 60-bit md5-prefix digest the hashed index stores — partitioning
-      // the window by the digest instead of the line IS the hashed
-      // semantics, so a collision would diverge here, not hide
-      "q192_line_dedup_hashed" ->
-        s"""WITH d2 AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL AND len($toksSql) > 0),
-           |ln0 AS (SELECT doc_id, u AS lpos,
-           |    array_to_string(list_slice(toks, u*10+1, u*10+10), ' ')
-           |      AS line
-           |  FROM (SELECT doc_id, toks,
-           |      unnest(range((len(toks)+9)//10)) AS u FROM d2)),
-           |lnb AS (SELECT doc_id, lpos, line FROM ln0
-           |  UNION ALL
-           |  SELECT doc_id, (len(toks)+9)//10 AS lpos,
-           |    'nav home about contact subscribe' AS line
-           |  FROM d2 WHERE doc_id % 7 = 0),
-           |win AS (SELECT doc_id, lpos, line, row_number() OVER (
-           |    PARTITION BY ('0x' || substr(md5(line), 1, 15))::BIGINT
-           |    ORDER BY doc_id % 2, doc_id, lpos) AS rn FROM lnb),
-           |reb AS (SELECT doc_id,
-           |    string_agg(line, chr(10) ORDER BY lpos) AS clean,
-           |    count(*) AS nk
-           |  FROM win WHERE rn = 1 GROUP BY doc_id)
-           |SELECT d2.doc_id,
-           |  CAST(COALESCE(r.nk, 0) AS BIGINT) AS n_lines_kept,
-           |  md5(COALESCE(r.clean, '')) AS clean_md5
-           |FROM d2 LEFT JOIN reb r USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // q162: byte ids through the packer — pack boundaries replicate
-      // from strlen weights (no tokenizer needed), and each pack's
-      // decoded stream must equal its member texts concatenated in doc
-      // order VERBATIM; decoded_bytes re-derives the same quantity from
-      // the opposite side (strlen of the concat vs sum of weights)
-      "q162_byte_packs_exact" ->
-        s"""WITH bslt AS MATERIALIZED (SELECT doc_id, lang,
-           |    text || '$byteBpeSalt' || CAST(doc_id AS VARCHAR) AS text
-           |  FROM documents WHERE text IS NOT NULL),
-           |bnt AS (SELECT doc_id, lang, text,
-           |    CAST(strlen(text) AS BIGINT) AS n_tokens FROM bslt),
-           |bcc AS (SELECT doc_id, lang, text, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM bnt),
-           |bpk AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 8192 AS BIGINT) AS pack_id,
-           |  doc_id, text, n_tokens FROM bcc)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_bytes,
-           |  CAST(strlen(string_agg(text, '' ORDER BY doc_id)) AS BIGINT)
-           |    AS decoded_bytes,
-           |  md5(string_agg(text, '' ORDER BY doc_id)) AS decoded_md5,
-           |  md5(string_agg(md5(text), ' ' ORDER BY doc_id)) AS segs_md5
-           |FROM bpk GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin,
-
-      // q163: q162's boundary arithmetic (ids == bytes under the
-      // identity byte tokenizer, so strlen IS the cursor) minus each
-      // shard's final open pack — the streamed export's reconstruction
-      // gate across micro-batch boundaries
-      "q163_stream_byte_packs" ->
-        s"""WITH sslt AS MATERIALIZED (SELECT doc_id, lang,
-           |    text || '$byteBpeSalt' || CAST(doc_id AS VARCHAR) AS text
-           |  FROM documents WHERE text IS NOT NULL),
-           |snt3 AS (SELECT doc_id, lang, text,
-           |    CAST(strlen(text) AS BIGINT) AS n_tokens FROM sslt),
-           |scc3 AS (SELECT doc_id, lang, text, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM snt3),
-           |spk3 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 8192 AS BIGINT) AS pack_id,
-           |  doc_id, text, n_tokens FROM scc3),
-           |sag3 AS MATERIALIZED (SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(strlen(string_agg(text, '' ORDER BY doc_id)) AS BIGINT)
-           |    AS decoded_bytes,
-           |  md5(string_agg(text, '' ORDER BY doc_id)) AS decoded_md5
-           |  FROM spk3 GROUP BY lang, pack_id)
-           |SELECT a.lang, a.pack_id, a.n_docs, a.decoded_bytes,
-           |  a.decoded_md5
-           |FROM sag3 a JOIN (SELECT lang, max(pack_id) AS mp
-           |  FROM sag3 GROUP BY lang) m USING (lang)
-           |WHERE a.pack_id < m.mp
-           |ORDER BY a.lang, a.pack_id""".stripMargin,
-
-      // q161: the persisted-artifact gate — the loaded tokenizer's ids
-      // equal the built one's (in-query equality; the twin asserts the
-      // invariant) and its decode still reconstructs the salted text
-      // verbatim, which the twin recomputes with no tokenizer at all
-      "q161_byte_artifact_roundtrip" ->
-        s"""SELECT doc_id, true AS ids_match,
-           |  md5(text || '$byteBpeSalt' || CAST(doc_id AS VARCHAR))
-           |    AS roundtrip_md5
-           |FROM documents WHERE text IS NOT NULL
-           |ORDER BY doc_id""".stripMargin,
-
-      // q155: q144's pack rows (same CTE chain) minus each shard's LAST
-      // pack — the streamed export can only emit a pack once a doc
-      // lands past its boundary, so the final open pack per shard is
-      // structurally unemittable mid-stream
-      "q155_stream_pack_export" ->
-        s"""WITH RECURSIVE
-           |$bpeSeqCtes,
-           |nt5 AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_pieces, 0) AS n_tokens,
-           |    COALESCE(s.ids_str, '') AS ids_str
-           |  FROM docs2 d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN seq s USING (doc_id)
-           |  WHERE d.text IS NOT NULL),
-           |cc5 AS (SELECT doc_id, lang, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM nt5),
-           |pk5 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, ids_str FROM cc5),
-           |pk5o AS (SELECT lang, pack_id, doc_id, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM pk5),
-           |ag5 AS (SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5
-           |  FROM pk5o GROUP BY lang, pack_id)
-           |SELECT a.lang, a.pack_id, a.n_docs, a.pack_tokens, a.ids_md5,
-           |  a.offsets_md5
-           |FROM ag5 a JOIN (SELECT lang, max(pack_id) AS mp
-           |  FROM ag5 GROUP BY lang) m USING (lang)
-           |WHERE a.pack_id < m.mp
-           |ORDER BY a.lang, a.pack_id""".stripMargin,
-
-      // q151: q144's packing arithmetic fed by the LEARNED tokenizer's
-      // id stream — per-word final segmentations off blw16 (1-char
-      // words never entered the chain: they segment as themselves),
-      // each symbol mapped through the merge vocab (alphabet sorted =
-      // ids 1..A, merged symbol = A + rank, min(id) on collisions,
-      // unseen → 0)
-      "q151_merge_token_packs" -> {
-        val mergedRanks = (0 until bpeLearnK).map { i =>
-          s"SELECT lhs, rhs, ${i + 1} AS r FROM blt$i"
-        }.mkString(" UNION ALL ")
-        s"""WITH $bpeLearnCtes,
-           |mvch AS (SELECT DISTINCT
-           |    unnest(regexp_extract_all(word, '(.)', 1)) AS ch
-           |  FROM blwc),
-           |mva AS (SELECT ch AS piece,
-           |    CAST(row_number() OVER (ORDER BY ch) AS INTEGER) AS id
-           |  FROM mvch),
-           |mvn AS (SELECT CAST(count(*) AS INTEGER) AS a FROM mva),
-           |mvm AS (SELECT lhs || rhs AS piece, CAST(r + a AS INTEGER) AS id
-           |  FROM ($mergedRanks) CROSS JOIN mvn),
-           |mvv AS (SELECT piece, MIN(id) AS id FROM
-           |  (SELECT piece, id FROM mva
-           |   UNION ALL SELECT piece, id FROM mvm) GROUP BY piece),
-           |mwall AS (SELECT word, $bpeLearnUnwrapRe AS sa FROM blw$bpeLearnK
-           |  UNION ALL SELECT word, [word] AS sa FROM blwc
-           |  WHERE length(word) < 2),
-           |mwsym AS (SELECT word, unnest(sa) AS s,
-           |    unnest(range(1, len(sa) + 1)) AS p FROM mwall),
-           |mwids AS (SELECT word, CAST(count(*) AS BIGINT) AS wc,
-           |    string_agg(CAST(COALESCE(v.id, 0) AS VARCHAR), ' '
-           |      ORDER BY w.p) AS ids_str
-           |  FROM mwsym w LEFT JOIN mvv v ON v.piece = w.s
-           |  GROUP BY word),
-           |mta AS (SELECT doc_id, $toksSql AS arr FROM documents
-           |  WHERE text IS NOT NULL),
-           |mtk AS (SELECT doc_id, unnest(arr) AS word,
-           |    unnest(range(1, len(arr) + 1)) AS ord
-           |  FROM mta WHERE len(arr) > 0),
-           |mseq AS (SELECT t.doc_id, CAST(sum(w.wc) AS BIGINT) AS n_tokens,
-           |    string_agg(w.ids_str, ' ' ORDER BY t.ord) AS ids_str
-           |  FROM mtk t JOIN mwids w USING (word) GROUP BY t.doc_id),
-           |mnt AS (SELECT d.doc_id, doc.lang,
-           |    COALESCE(s.n_tokens, 0) AS n_tokens,
-           |    COALESCE(s.ids_str, '') AS ids_str
-           |  FROM mta d JOIN documents doc USING (doc_id)
-           |  LEFT JOIN mseq s USING (doc_id)),
-           |mcc AS (SELECT doc_id, lang, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM mnt),
-           |mpk AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, ids_str FROM mcc),
-           |mpko AS (SELECT lang, pack_id, doc_id, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM mpk)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5
-           |FROM mpko GROUP BY lang, pack_id
-           |ORDER BY lang, pack_id""".stripMargin
-      },
-
-      "q130_quality_classifier" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |t2 AS (SELECT doc_id, unnest(toks) AS t FROM tk),
-           |hh AS (SELECT doc_id, ${pHashSql("t")} AS hv FROM t2),
-           |v AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM hh GROUP BY 1, 2),
-           |seed AS (SELECT doc_id, (lang = 'en') AS lab FROM documents
-           |  WHERE doc_id % 5 <> 0),
-           |s AS (SELECT bucket,
-           |    SUM(CASE WHEN lab THEN v ELSE 0 END) AS sp,
-           |    SUM(CASE WHEN NOT lab THEN v ELSE 0 END) AS sn
-           |  FROM v JOIN seed USING (doc_id) GROUP BY 1),
-           |n AS (SELECT SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS npos,
-           |    SUM(CASE WHEN NOT lab THEN 1 ELSE 0 END) AS nneg
-           |  FROM seed),
-           |d AS (SELECT v.doc_id, SUM(v.v * s.sp) AS dp,
-           |    SUM(v.v * s.sn) AS dn
-           |  FROM v JOIN s USING (bucket) GROUP BY 1)
-           |SELECT doc.doc_id,
-           |  CASE WHEN doc.text IS NULL THEN NULL
-           |    ELSE CAST(n.nneg * coalesce(d.dp, 0)
-           |      - n.npos * coalesce(d.dn, 0) AS BIGINT) END AS margin,
-           |  CASE WHEN doc.text IS NULL THEN NULL
-           |    ELSE (n.nneg * coalesce(d.dp, 0)
-           |      - n.npos * coalesce(d.dn, 0)) > 0 END AS quality_pred
-           |FROM documents doc CROSS JOIN n
-           |LEFT JOIN d ON d.doc_id = doc.doc_id
-           |ORDER BY doc.doc_id""".stripMargin,
-
-      "q131_classifier_feed" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |t2 AS (SELECT doc_id, unnest(toks) AS t FROM tk),
-           |hh AS (SELECT doc_id, ${pHashSql("t")} AS hv FROM t2),
-           |v AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM hh GROUP BY 1, 2),
-           |m AS (SELECT doc_id, (lang = 'en') AS lab FROM documents
-           |  WHERE (doc_id % 5 <> 0 AND doc_id % 7 <> 0)
-           |     OR (doc_id % 5 = 0 AND doc_id % 3 = 0)),
-           |s AS (SELECT bucket,
-           |    SUM(CASE WHEN lab THEN v ELSE 0 END) AS sp,
-           |    SUM(CASE WHEN NOT lab THEN v ELSE 0 END) AS sn
-           |  FROM v JOIN m USING (doc_id) GROUP BY 1),
-           |n AS (SELECT
-           |    CAST(SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS npos,
-           |    CAST(SUM(CASE WHEN NOT lab THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS nneg FROM m)
-           |SELECT CAST(g.range AS INTEGER) AS pos,
-           |  CAST(coalesce(s.sp, 0) AS BIGINT) AS wpos,
-           |  CAST(coalesce(s.sn, 0) AS BIGINT) AS wneg,
-           |  n.npos AS n_pos, n.nneg AS n_neg
-           |FROM range(64) g CROSS JOIN n
-           |LEFT JOIN s ON s.bucket = g.range
-           |ORDER BY pos""".stripMargin,
-
-      "q132_epoch_mix" ->
-        s"""WITH tk AS (SELECT doc_id, lang, len($toksSql) AS nt
-           |  FROM documents),
-           |cnt AS (SELECT lang,
-           |    CAST(SUM(coalesce(nt, 0)) AS HUGEINT) AS n
-           |  FROM tk GROUP BY 1),
-           |tgt AS (SELECT CAST(40000 AS HUGEINT) // count(*) AS t
-           |  FROM cnt),
-           |p1 AS (SELECT lang, n, t,
-           |    CASE WHEN n <= 0 THEN CAST(0 AS HUGEINT)
-           |         ELSE least(t // n, CAST(4 AS HUGEINT)) END AS fullep
-           |  FROM cnt CROSS JOIN tgt),
-           |plan AS (SELECT lang, fullep,
-           |    CASE WHEN n <= 0 OR fullep >= 4 THEN CAST(0 AS HUGEINT)
-           |         ELSE least((CAST(1000000 AS HUGEINT)
-           |             * (t - fullep * n)) // n,
-           |           CAST(1000000 AS HUGEINT)) END AS keep
-           |  FROM p1),
-           |fullc AS (SELECT t.doc_id, t.lang,
-           |    unnest(range(0, CAST(p.fullep AS BIGINT))) AS epoch
-           |  FROM tk t JOIN plan p USING (lang)),
-           |part AS (SELECT t.doc_id, t.lang,
-           |    CAST(p.fullep AS BIGINT) AS epoch
-           |  FROM tk t JOIN plan p USING (lang)
-           |  WHERE ${pHashSql(
-                  "t.lang || '@' || CAST(p.fullep AS BIGINT) || '|' || t.doc_id")}
-           |    % 1000000 < p.keep)
-           |SELECT doc_id, lang, CAST(epoch AS BIGINT) AS epoch
-           |FROM (SELECT * FROM fullc UNION ALL SELECT * FROM part)
-           |ORDER BY doc_id, epoch""".stripMargin,
-
-      "q133_curation_pipeline" ->
-        s"""WITH tk AS (SELECT doc_id, lang, $toksSql AS toks
-           |  FROM documents WHERE text IS NOT NULL),
-           |t2 AS (SELECT doc_id, unnest(toks) AS t FROM tk),
-           |hh AS (SELECT doc_id, ${pHashSql("t")} AS hv FROM t2),
-           |v AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM hh GROUP BY 1, 2),
-           |seed AS (SELECT doc_id, (lang = 'en') AS lab FROM documents
-           |  WHERE doc_id % 5 <> 0),
-           |s AS (SELECT bucket,
-           |    SUM(CASE WHEN lab THEN v ELSE 0 END) AS sp,
-           |    SUM(CASE WHEN NOT lab THEN v ELSE 0 END) AS sn
-           |  FROM v JOIN seed USING (doc_id) GROUP BY 1),
-           |n AS (SELECT SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS npos,
-           |    SUM(CASE WHEN NOT lab THEN 1 ELSE 0 END) AS nneg
-           |  FROM seed),
-           |dd AS (SELECT v.doc_id, SUM(v.v * s.sp) AS dp,
-           |    SUM(v.v * s.sn) AS dn
-           |  FROM v JOIN s USING (bucket) GROUP BY 1),
-           |kept AS (SELECT k.doc_id, k.lang,
-           |    CAST(n.nneg * coalesce(dd.dp, 0)
-           |      - n.npos * coalesce(dd.dn, 0) AS DOUBLE) AS score,
-           |    len(k.toks) AS nt
-           |  FROM tk k CROSS JOIN n
-           |  LEFT JOIN dd ON dd.doc_id = k.doc_id
-           |  WHERE n.nneg * coalesce(dd.dp, 0)
-           |      - n.npos * coalesce(dd.dn, 0) > 0),
-           |sel AS (SELECT doc_id, lang, nt FROM (
-           |    SELECT *, sum(nt) OVER (ORDER BY score DESC, doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |    FROM kept)
-           |  WHERE cum <= 6000),
-           |cnt AS (SELECT lang,
-           |    CAST(SUM(coalesce(nt, 0)) AS HUGEINT) AS cn
-           |  FROM sel GROUP BY 1),
-           |tgt AS (SELECT CAST(8000 AS HUGEINT) // count(*) AS t
-           |  FROM cnt),
-           |p1 AS (SELECT lang, cn, t,
-           |    CASE WHEN cn <= 0 THEN CAST(0 AS HUGEINT)
-           |         ELSE least(t // cn, CAST(3 AS HUGEINT)) END AS fullep
-           |  FROM cnt CROSS JOIN tgt),
-           |plan AS (SELECT lang, fullep,
-           |    CASE WHEN cn <= 0 OR fullep >= 3 THEN CAST(0 AS HUGEINT)
-           |         ELSE least((CAST(1000000 AS HUGEINT)
-           |             * (t - fullep * cn)) // cn,
-           |           CAST(1000000 AS HUGEINT)) END AS keep
-           |  FROM p1),
-           |fullc AS (SELECT x.doc_id, x.lang,
-           |    unnest(range(0, CAST(p.fullep AS BIGINT))) AS epoch
-           |  FROM sel x JOIN plan p USING (lang)),
-           |part AS (SELECT x.doc_id, x.lang,
-           |    CAST(p.fullep AS BIGINT) AS epoch
-           |  FROM sel x JOIN plan p USING (lang)
-           |  WHERE ${pHashSql(
-                  "x.lang || '@' || CAST(p.fullep AS BIGINT) || '|' || x.doc_id")}
-           |    % 1000000 < p.keep)
-           |SELECT doc_id, lang, CAST(epoch AS BIGINT) AS epoch
-           |FROM (SELECT * FROM fullc UNION ALL SELECT * FROM part)
-           |ORDER BY doc_id, epoch""".stripMargin,
-
-      "q134_nfc_normalize" ->
-        """WITH r AS (SELECT doc_id,
-          |    CASE WHEN doc_id % 2 = 0
-          |      THEN 'Cafe' || chr(769) || ' :: ' || text ELSE text END
-          |      AS raw
-          |  FROM documents)
-          |SELECT doc_id,
-          |  CAST(len(raw) AS BIGINT) AS len_raw,
-          |  CAST(len(nfc_normalize(raw)) AS BIGINT) AS len_nfc,
-          |  md5(nfc_normalize(raw)) AS nfc_md5,
-          |  (nfc_normalize(raw) <> raw) AS changed
-          |FROM r ORDER BY doc_id""".stripMargin,
-
-      "q135_stream_curate" -> {
-        // regexes injected as Scala values: s-interpolated triple quotes
-        // process escapes, so backslashes must ride in via $-injection
-        val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-        val ipRe = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
-        val phoneRe = "\\+\\d[\\d\\- ]{7,}\\d"
-        val toksOfSc =
-          "list_filter(string_split_regex(sc, '\\s+'), t -> strlen(t) > 0)"
-        s"""WITH pii AS (SELECT doc_id, text ||
-           |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id ||
-           |      '@mail.example.com' ELSE '' END ||
-           |    CASE WHEN doc_id % 4 = 0 THEN ' at 10.' || (doc_id % 200) ||
-           |      '.0.1' ELSE '' END ||
-           |    CASE WHEN doc_id % 5 = 0 THEN ' call +1 555-01' ||
-           |      lpad((doc_id % 100)::VARCHAR, 2, '0') ELSE '' END AS t
-           |  FROM documents),
-           |sA AS (SELECT doc_id, t,
-           |    regexp_replace(t, '$emailRe', '<EMAIL>', 'g') AS t1
-           |  FROM pii),
-           |sB AS (SELECT doc_id, t, t1,
-           |    regexp_replace(t1, '$ipRe', '<IP>', 'g') AS t2 FROM sA),
-           |scr AS (SELECT doc_id, t, t1, t2,
-           |    regexp_replace(t2, '$phoneRe', '<PHONE>', 'g') AS sc
-           |  FROM sB),
-           |tk AS (SELECT doc_id, $toksSql AS toks FROM documents
-           |  WHERE text IS NOT NULL),
-           |t2d AS (SELECT doc_id, unnest(toks) AS tok FROM tk),
-           |hh AS (SELECT doc_id, ${pHashSql("tok")} AS hv FROM t2d),
-           |v AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM hh GROUP BY 1, 2),
-           |seed AS (SELECT doc_id, (lang = 'en') AS lab FROM documents
-           |  WHERE doc_id % 5 <> 0),
-           |smod AS (SELECT bucket,
-           |    SUM(CASE WHEN lab THEN v ELSE 0 END) AS sp,
-           |    SUM(CASE WHEN NOT lab THEN v ELSE 0 END) AS sn
-           |  FROM v JOIN seed USING (doc_id) GROUP BY 1),
-           |n AS (SELECT SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS npos,
-           |    SUM(CASE WHEN NOT lab THEN 1 ELSE 0 END) AS nneg
-           |  FROM seed),
-           |tksc AS (SELECT doc_id, $toksOfSc AS toks FROM scr
-           |  WHERE sc IS NOT NULL),
-           |t2s AS (SELECT doc_id, unnest(toks) AS tok FROM tksc),
-           |hs AS (SELECT doc_id, ${pHashSql("tok")} AS hv FROM t2s),
-           |vs AS (SELECT doc_id, hv % 64 AS bucket,
-           |  CAST(SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END)
-           |    AS BIGINT) AS v
-           |  FROM hs GROUP BY 1, 2),
-           |dd AS (SELECT vs.doc_id, SUM(vs.v * smod.sp) AS dp,
-           |    SUM(vs.v * smod.sn) AS dn
-           |  FROM vs JOIN smod USING (bucket) GROUP BY 1)
-           |SELECT scr.doc_id,
-           |  CAST(len(regexp_extract_all(scr.t, '$emailRe')) AS BIGINT)
-           |    AS n_email,
-           |  CAST(len(regexp_extract_all(scr.t1, '$ipRe')) AS BIGINT)
-           |    AS n_ip,
-           |  CAST(len(regexp_extract_all(scr.t2, '$phoneRe')) AS BIGINT)
-           |    AS n_phone,
-           |  md5(scr.sc) AS redacted_md5,
-           |  CASE WHEN scr.sc IS NULL THEN NULL
-           |    ELSE CAST(n.nneg * coalesce(dd.dp, 0)
-           |      - n.npos * coalesce(dd.dn, 0) AS BIGINT) END AS margin,
-           |  CASE WHEN scr.sc IS NULL THEN NULL
-           |    ELSE (n.nneg * coalesce(dd.dp, 0)
-           |      - n.npos * coalesce(dd.dn, 0)) > 0 END AS quality_pred
-           |FROM scr CROSS JOIN n
-           |LEFT JOIN dd ON dd.doc_id = scr.doc_id
-           |ORDER BY scr.doc_id""".stripMargin
-      },
-
-      // q135's scrub + model + gate, then the q128/q129 two-batch
-      // dedup policy over the GATED SCRUBBED corpus — the full
-      // streaming pipeline's batch-equivalent replay
-      "q140_stream_curate_dedup" ->
-        s"""WITH $streamCurateCtes
-           |SELECT g.doc_id, b.batch, md5(g.text) AS redacted_md5, g.margin
-           |FROM gated g JOIN (
-           |  SELECT doc_id, CAST(1 AS BIGINT) AS batch FROM gacc1
-           |  UNION ALL
-           |  SELECT doc_id, CAST(2 AS BIGINT) AS batch FROM gacc2) b
-           |  USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      // the capstone composition: q140's accepted curated corpus fed
-      // through the piece-vocab + greedy-walk block (learned on the
-      // SURVIVORS) and the q123 pack arithmetic — the whole
-      // corpus→tokens→packs pipeline under one oracle
-      "q141_corpus_to_packs" ->
-        s"""WITH RECURSIVE
-           |$streamCurateCtes,
-           |acc AS (SELECT g.doc_id, g.text FROM gated g
-           |  JOIN (SELECT doc_id FROM gacc1
-           |        UNION ALL SELECT doc_id FROM gacc2) b USING (doc_id)),
-           |corp AS MATERIALIZED (SELECT a.doc_id, d.lang, a.text
-           |  FROM acc a JOIN documents d USING (doc_id)),
-           |${bpePieceCtes("corp")},
-           |nt2 AS (SELECT c2.doc_id, c2.lang, c2.text,
-           |    COALESCE(s2.n_pieces, 0) AS n_tokens
-           |  FROM corp c2 LEFT JOIN seq s2 USING (doc_id)),
-           |cc AS (SELECT doc_id, lang, text, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM nt2),
-           |pk AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, text, n_tokens FROM cc)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(string_agg(text, ' ' ORDER BY doc_id)) AS pack_md5
-           |FROM pk GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin,
-
-      // q158: the q141 arc with the q154 13-gram gate BETWEEN tokenize
-      // and pack — q140's accepted survivors, piece ids off the shared
-      // seq CTE, eval = accepted id%50=0 docs quoting their accepted
-      // successors (the q154 leak shape over the CURATED corpus), train
-      // docs with any eval-overlapping window dropped, then the q155
-      // closed-pack arithmetic (per-shard max pack excluded — the
-      // stream's final open pack is structurally unemittable)
-      "q158_stream_decontam_packs" ->
-        s"""WITH RECURSIVE
-           |$streamCurateCtes,
-           |acc AS (SELECT g.doc_id, g.text FROM gated g
-           |  JOIN (SELECT doc_id FROM gacc1
-           |        UNION ALL SELECT doc_id FROM gacc2) b USING (doc_id)),
-           |corp AS MATERIALIZED (SELECT a.doc_id, d.lang, a.text
-           |  FROM acc a JOIN documents d USING (doc_id)),
-           |${bpePieceCtes("corp")},
-           |dcorp AS MATERIALIZED (SELECT doc_id, lang FROM corp),
-           |dseq AS MATERIALIZED (SELECT doc_id, n_pieces, ids_str
-           |  FROM seq),
-           |dtw AS MATERIALIZED (SELECT doc_id,
-           |    string_split(ids_str, ' ') AS ids
-           |  FROM dseq),
-           |devq AS (SELECT c.doc_id,
-           |    l1.ids || COALESCE(l2.ids, CAST([] AS VARCHAR[])) AS ids
-           |  FROM dcorp c
-           |  JOIN dtw l1 ON l1.doc_id = c.doc_id
-           |  LEFT JOIN dtw l2 ON l2.doc_id = c.doc_id + 1
-           |  WHERE c.doc_id % 50 = 0),
-           |devw AS (SELECT DISTINCT
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM devq WHERE len(ids) >= 13)),
-           |dtrw AS (SELECT doc_id,
-           |    array_to_string(list_slice(ids, u, u + 12), ' ') AS gram
-           |  FROM (SELECT doc_id, ids,
-           |      unnest(range(1, len(ids) - 13 + 2)) AS u
-           |    FROM dtw WHERE len(ids) >= 13)),
-           |dcont AS (SELECT DISTINCT t.doc_id
-           |  FROM dtrw t JOIN devw USING (gram)),
-           |dcln AS (SELECT c.doc_id, c.lang,
-           |    COALESCE(s.n_pieces, 0) AS n_tokens,
-           |    COALESCE(s.ids_str, '') AS ids_str
-           |  FROM dcorp c LEFT JOIN dseq s USING (doc_id)
-           |  WHERE c.doc_id % 50 <> 0
-           |    AND c.doc_id NOT IN (SELECT doc_id FROM dcont)),
-           |dcc8 AS (SELECT doc_id, lang, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM dcln),
-           |dpk8 AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, n_tokens, ids_str FROM dcc8),
-           |dpk8o AS (SELECT lang, pack_id, doc_id, n_tokens, ids_str,
-           |  sum(n_tokens) OVER (PARTITION BY lang, pack_id
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-           |  FROM dpk8),
-           |dag8 AS MATERIALIZED (SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  md5(COALESCE(string_agg(
-           |    CASE WHEN ids_str = '' THEN NULL ELSE ids_str END, ' '
-           |    ORDER BY doc_id), '')) AS ids_md5,
-           |  md5('0' || string_agg(' ' || CAST(e AS VARCHAR), ''
-           |    ORDER BY doc_id)) AS offsets_md5
-           |  FROM dpk8o GROUP BY lang, pack_id)
-           |SELECT a.lang, a.pack_id, a.n_docs, a.pack_tokens, a.ids_md5,
-           |  a.offsets_md5
-           |FROM dag8 a JOIN (SELECT lang, max(pack_id) AS mp
-           |  FROM dag8 GROUP BY lang) m USING (lang)
-           |WHERE a.pack_id < m.mp
-           |ORDER BY a.lang, a.pack_id""".stripMargin,
-
-      "q127_budget_select" ->
-        s"""WITH tk AS (SELECT doc_id, n_chars, len($toksSql) AS nt
-           |  FROM documents),
-           |c AS (SELECT doc_id, nt,
-           |    sum(nt) OVER (ORDER BY n_chars DESC, doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM tk WHERE nt IS NOT NULL)
-           |SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
-           |  CAST(cum AS BIGINT) AS cum_tokens
-           |FROM c WHERE cum <= 9000 ORDER BY doc_id""".stripMargin,
-
-      "q122_shuffle_shard" ->
-        s"""WITH k AS (SELECT doc_id,
-           |  ${pHashSql("'s42|' || doc_id")} AS sort_key,
-           |  ${pHashSql("'s42#' || doc_id")} % 4 AS shard
-           |  FROM documents)
-           |SELECT doc_id, shard, sort_key,
-           |  row_number() OVER (PARTITION BY shard
-           |    ORDER BY sort_key, doc_id) - 1 AS pos
-           |FROM k ORDER BY doc_id""".stripMargin,
-
-      "q123_pack_materialize" ->
-        s"""WITH d AS (SELECT doc_id, lang, text,
-           |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-           |c AS (SELECT doc_id, lang, text, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM d),
-           |p AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-           |  doc_id, text, n_tokens FROM c)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-           |  string_agg(text, ' ' ORDER BY doc_id) AS pack_text
-           |FROM p WHERE pack_id IS NOT NULL
-           |GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin,
-
-      "q38_sim_bruteforce" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM embeddings WHERE vec_id < 10),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM embeddings),
-           |scored AS (
-           |  SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, neighbor_id, sim,
-           |  row_number() OVER (PARTITION BY query_id
-           |    ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored)
-           |SELECT query_id, neighbor_id, CAST(rnk AS INTEGER) AS rnk, sim
-           |FROM ranked WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-      "q39_sim_ivf" ->
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |cent AS (SELECT vec_id AS centroid_id, v AS cvec FROM e
-           |  WHERE vec_id < 10),
-           |scored AS (
-           |  SELECT e.vec_id, e.v, centroid_id,
-           |    list_dot_product(v, cvec) /
-           |    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cvec, cvec)))
-           |      AS csim
-           |  FROM e CROSS JOIN cent),
-           |asg AS (SELECT vec_id, v, centroid_id AS cell FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY vec_id
-           |    ORDER BY csim DESC, centroid_id) AS r FROM scored) WHERE r = 1),
-           |q AS (SELECT vec_id AS query_id, v AS qv, cell FROM asg
-           |  WHERE vec_id < 10),
-           |pairs AS (
-           |  SELECT query_id, a.vec_id AS neighbor_id, qv, a.v AS cv
-           |  FROM q JOIN asg a USING (cell) WHERE query_id <> a.vec_id),
-           |ranked AS (SELECT query_id, neighbor_id, $cosSql AS sim FROM pairs),
-           |final AS (SELECT query_id, neighbor_id, sim,
-           |  row_number() OVER (PARTITION BY query_id
-           |    ORDER BY sim DESC, neighbor_id) AS rnk FROM ranked)
-           |SELECT query_id, neighbor_id, CAST(rnk AS INTEGER) AS rnk, sim
-           |FROM final WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-      "q40_embedding_neardup" ->
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |pairs AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           |    a.v AS qv, b.v AS cv
-           |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-           |SELECT id_a, id_b, $cosSql AS cos
-           |FROM pairs WHERE $cosSql > 0.4
-           |ORDER BY id_a, id_b""".stripMargin,
-
-      "q62_salted_agg" ->
-        """SELECT l_returnflag, count(*) AS n_rows,
-          |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-          |FROM lineitem GROUP BY l_returnflag
-          |ORDER BY l_returnflag""".stripMargin,
-
-      "q63_salted_join" ->
-        """SELECT c.c_mktsegment, count(*) AS n_orders,
-          |  CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS revenue
-          |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-          |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin,
-
-      "q64_time_travel" ->
-        """SELECT o_orderkey, o_orderstatus, o_totalprice
-          |FROM orders WHERE o_orderkey % 2 = 0
-          |ORDER BY o_orderkey""".stripMargin,
-
-      "q78_neardup_clusters" ->
-        s"""WITH RECURSIVE $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |${clusterCtes("documents")}
-           |SELECT src AS doc_id, min(dst) AS root FROM reach
-           |GROUP BY src ORDER BY doc_id""".stripMargin,
-
-      // the q107 cluster split vs a per-doc hash split, audited over the
-      // SAME pairs CTE the clusters were built from: cluster leaks 0
-      // (structural), naive leaks at the pair rate
-      "q138_split_leak_audit" ->
-        s"""WITH RECURSIVE $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |${clusterCtes("documents")},
-           |cr AS (SELECT src AS doc_id, min(dst) AS root FROM reach
-           |  GROUP BY src),
-           |casg AS (SELECT doc_id,
-           |  CASE WHEN ${pHashSql("'split|' || CAST(root AS VARCHAR)")} % 100 < 10
-           |    THEN 'eval' ELSE 'train' END AS split FROM cr),
-           |nasg AS (SELECT doc_id,
-           |  CASE WHEN ${pHashSql("'split|' || CAST(doc_id AS VARCHAR)")} % 100 < 10
-           |    THEN 'eval' ELSE 'train' END AS split FROM documents)
-           |SELECT
-           |  (SELECT CAST(count(*) AS BIGINT) FROM pairs) AS pairs_total,
-           |  (SELECT CAST(count(*) FILTER (WHERE a.split <> b.split) AS BIGINT)
-           |     FROM pairs p JOIN casg a ON p.id_a = a.doc_id
-           |     JOIN casg b ON p.id_b = b.doc_id) AS cross_pairs_cluster,
-           |  (SELECT CAST(count(*) FILTER (WHERE a.split <> b.split) AS BIGINT)
-           |     FROM pairs p JOIN nasg a ON p.id_a = a.doc_id
-           |     JOIN nasg b ON p.id_b = b.doc_id) AS cross_pairs_naive""".stripMargin,
-
-      "q108_winsorize" ->
-        """WITH b AS (SELECT l_returnflag,
-          |    quantile_cont(l_extendedprice, 0.05) AS plo,
-          |    quantile_cont(l_extendedprice, 0.95) AS phi
-          |  FROM lineitem GROUP BY l_returnflag)
-          |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-          |  least(greatest(l.l_extendedprice, b.plo), b.phi) AS w_price
-          |FROM lineitem l JOIN b USING (l_returnflag)
-          |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "q109_inverted_index" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
-           |sh AS (SELECT doc_id, unnest(${shinglesSql("tk")}) AS term
-           |  FROM tk),
-           |per AS (SELECT term, doc_id, count(*) AS tf FROM sh GROUP BY 1, 2)
-           |SELECT term, CAST(count(*) AS BIGINT) AS df,
-           |  CAST(sum(tf) AS BIGINT) AS tf_total,
-           |  CASE WHEN count(*) <= 16 THEN
-           |    array_to_string(list_sort(list(doc_id)), ',') END AS postings
-           |FROM per GROUP BY term ORDER BY term""".stripMargin,
-
-      "q110_bm25_topk" -> {
-        // same operand ORDER as Retrieval.bm25TopK so identical integer
-        // inputs take identical IEEE paths; ln() may differ by an ulp
-        // between libms, which the micro-unit rounding absorbs
-        val terms = Seq("dup", "spark", "merge")
-        val tfCols = terms.zipWithIndex.map { case (tm, i) =>
-          s"CAST(len(list_filter(toks, x -> x = '$tm')) AS BIGINT) AS tf$i"
-        }.mkString(",\n  ")
-        val dfCols = terms.indices.map { i =>
-          s"CAST(count(*) FILTER (WHERE tf$i > 0) AS BIGINT) AS df$i"
-        }.mkString(",\n  ")
-        val w = terms.indices.map { i =>
-          s"ln(1.0 + (CAST(n AS DOUBLE) - CAST(df$i AS DOUBLE) + 0.5)" +
-            s" / (CAST(df$i AS DOUBLE) + 0.5))" +
-            s" * (CAST(tf$i AS DOUBLE) * 2.2)" +
-            s" / (CAST(tf$i AS DOUBLE) + 1.2 * (0.25 + 0.75 *" +
-            s" CAST(dl AS DOUBLE) / (CAST(sdl AS DOUBLE) / CAST(n AS DOUBLE))))"
-        }.mkString(" + ")
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |per AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-           |  $tfCols
-           |  FROM tk),
-           |st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-           |  CAST(sum(dl) AS BIGINT) AS sdl,
-           |  $dfCols FROM per)
-           |SELECT doc_id, CAST(round(($w) * 1e6) AS BIGINT) AS score_e6
-           |FROM per, st ORDER BY score_e6 DESC, doc_id LIMIT 25""".stripMargin
-      },
-
-      "q111_rare_ngram_gate" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
-           |gg AS (SELECT doc_id, unnest(${shinglesSql("tk", 2)}) AS g
-           |  FROM tk),
-           |c AS (SELECT g, CAST(count(*) AS BIGINT) AS cnt FROM gg
-           |  GROUP BY g),
-           |t AS (SELECT CAST(count(*) AS BIGINT) AS d,
-           |  CAST(sum(cnt) AS BIGINT) AS tt FROM c),
-           |judged AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_ngrams,
-           |  CAST(count(*) FILTER (WHERE c.cnt * 8 * t.d < t.tt) AS BIGINT)
-           |    AS n_rare,
-           |  CAST(count(*) FILTER (WHERE c.cnt * 8 * t.d < t.tt) AS BIGINT)
-           |    * 20 <= CAST(count(*) AS BIGINT) AS keep
-           |FROM gg JOIN c USING (g), t
-           |GROUP BY doc_id)
-           |SELECT d.doc_id, coalesce(n_ngrams, 0) AS n_ngrams,
-           |  coalesce(n_rare, 0) AS n_rare, coalesce(keep, TRUE) AS keep
-           |FROM documents d LEFT JOIN judged USING (doc_id)
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q112_incremental_index" ->
-        s"""WITH base AS (SELECT doc_id,
-           |    CASE WHEN doc_id % 5 = 0 THEN text || ' graftextra'
-           |      ELSE text END AS text
-           |  FROM documents WHERE doc_id % 7 <> 0),
-           |tk AS (SELECT doc_id, $toksSql AS tk FROM base),
-           |sh AS (SELECT doc_id, unnest(${shinglesSql("tk")}) AS term
-           |  FROM tk),
-           |per AS (SELECT term, doc_id, count(*) AS tf FROM sh GROUP BY 1, 2)
-           |SELECT term, CAST(count(*) AS BIGINT) AS df,
-           |  CAST(sum(tf) AS BIGINT) AS tf_total, TRUE AS ok
-           |FROM per GROUP BY term ORDER BY term""".stripMargin,
-
-      "q113_decontaminate_neardup" -> {
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' " +
-            s"|| CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |banded AS ($bandKeys),
-           |tb AS (SELECT * FROM banded WHERE doc_id % 50 <> 0),
-           |eb AS (SELECT * FROM banded WHERE doc_id % 50 = 0),
-           |cand AS (SELECT DISTINCT tb.doc_id AS tid, eb.doc_id AS eid
-           |  FROM tb JOIN eb ON tb.band = eb.band AND tb.key = eb.key),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-           |inter AS (SELECT c.tid, c.eid, count(*) AS i
-           |  FROM cand c JOIN sh a ON a.doc_id = c.tid
-           |  JOIN sh b ON b.doc_id = c.eid AND b.s = a.s
-           |  GROUP BY 1, 2),
-           |bad AS (SELECT DISTINCT i2.tid FROM inter i2
-           |  JOIN sz a ON a.doc_id = i2.tid JOIN sz b ON b.doc_id = i2.eid
-           |  WHERE CAST(i2.i AS DOUBLE) >=
-           |    0.5 * CAST(a.sz + b.sz - i2.i AS DOUBLE))
-           |SELECT d.doc_id, d.lang FROM documents d
-           |WHERE d.doc_id % 50 <> 0
-           |  AND d.doc_id NOT IN (SELECT tid FROM bad)
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      "q114_ann_pq" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM embeddings WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM embeddings),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok FROM x""".stripMargin,
-
-      "q117_ann_index_maintain" ->
-        s"""WITH fin AS (
-           |  SELECT vec_id, embedding FROM embeddings
-           |  WHERE vec_id % 5 <> 0 AND vec_id % 7 <> 0
-           |  UNION ALL
-           |  SELECT vec_id, list_transform(embedding,
-           |    x -> CAST(CAST(x AS DOUBLE) * 0.5 + 0.125 AS FLOAT))
-           |  FROM embeddings WHERE vec_id % 5 = 0
-           |  UNION ALL
-           |  SELECT vec_id + 10000, list_transform(embedding,
-           |    x -> CAST(1.0 - CAST(x AS DOUBLE) AS FLOAT))
-           |  FROM embeddings WHERE vec_id % 11 = 0),
-           |q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM fin WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM fin),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok, TRUE AS maintain_ok
-           |FROM x""".stripMargin,
-
-      "q118_stream_ann_index" ->
-        s"""WITH fin AS (
-           |  SELECT vec_id,
-           |    CASE WHEN vec_id % 9 = 0 THEN list_transform(embedding,
-           |      x -> CAST(CAST(x AS DOUBLE) * 0.5 + 0.125 AS FLOAT))
-           |    ELSE embedding END AS embedding
-           |  FROM embeddings),
-           |q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM fin WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM fin),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok, TRUE AS stream_ok
-           |FROM x""".stripMargin,
-
-      "q106_chunk_documents" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |ch AS (SELECT doc_id,
-           |    unnest(list_transform(
-           |      range(0, 1 + (greatest(len(toks) - 64, 0) + 55) // 56),
-           |      i -> struct_pack(cid := i,
-           |        c := list_slice(toks, i * 56 + 1, i * 56 + 64)))) AS s
-           |  FROM tk WHERE len(toks) > 0)
-           |SELECT doc_id, CAST(s.cid AS BIGINT) AS chunk_id,
-           |  CAST(len(s.c) AS BIGINT) AS n_tokens,
-           |  array_to_string(s.c, ' ') AS text
-           |FROM ch ORDER BY doc_id, chunk_id""".stripMargin,
-
-      "q107_cluster_split" ->
-        s"""WITH RECURSIVE $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |${clusterCtes("documents")},
-           |cr AS (SELECT src AS doc_id, min(dst) AS root FROM reach
-           |  GROUP BY src)
-           |SELECT doc_id, root,
-           |  CASE WHEN ${pHashSql("'split|' || CAST(root AS VARCHAR)")} % 100 < 10
-           |    THEN 'eval' ELSE 'train' END AS split
-           |FROM cr ORDER BY doc_id""".stripMargin,
-
-      "q101_cluster_weighted_sample" -> {
-        s"""WITH RECURSIVE $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |${clusterCtes("documents")},
-           |cr AS (SELECT src AS doc_id, min(dst) AS root FROM reach
-           |  GROUP BY src),
-           |sz AS (SELECT root, count(*) AS csz FROM cr GROUP BY root),
-           |kp AS (SELECT cr.doc_id FROM cr JOIN sz USING (root)
-           |  WHERE cr.doc_id = cr.root OR
-           |    ${pHashSql("CAST(root AS VARCHAR) || '|' || " +
-                  "CAST(cr.doc_id AS VARCHAR)")} % csz < 1)
-           |SELECT d.doc_id, d.lang FROM documents d JOIN kp USING (doc_id)
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      "q79_corpus_pipeline" -> {
-        s"""WITH RECURSIVE
-           |ch AS (SELECT doc_id,
-           |  md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS chash
-           |  FROM documents),
-           |keep AS (SELECT min(doc_id) AS doc_id FROM ch GROUP BY chash),
-           |kd AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
-           |ktoks AS (SELECT doc_id, $toksSql AS tk FROM kd),
-           |ksh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM ktoks),
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM ksh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |${clusterCtes("kd")},
-           |reps AS (SELECT src AS doc_id FROM reach
-           |  GROUP BY src HAVING min(dst) = src),
-           |rd AS (SELECT kd.* FROM kd JOIN reps USING (doc_id)),
-           |ttoks AS (SELECT doc_id, $toksSql AS tk FROM rd
-           |  WHERE doc_id % 50 <> 0),
-           |tsh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM ttoks),
-           |etoks AS (SELECT doc_id, $toksSql AS tk FROM documents
-           |  WHERE doc_id % 50 = 0),
-           |esh AS (SELECT DISTINCT unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM etoks),
-           |cont AS (SELECT DISTINCT tsh.doc_id FROM tsh JOIN esh USING (s)),
-           |clean AS (SELECT * FROM rd WHERE doc_id % 50 <> 0
-           |  AND doc_id NOT IN (SELECT doc_id FROM cont)),
-           |qm AS (SELECT doc_id, lang, text, $toksSql AS tk FROM clean),
-           |qf AS (SELECT doc_id, lang,
-           |  CAST(len(tk) AS INTEGER) AS n_tokens,
-           |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |    list_aggregate(list_transform(tk, x -> strlen(x)), 'sum')::DOUBLE
-           |      / len(tk) END AS mtl,
-           |  CASE WHEN strlen(text) = 0 THEN 0.0 ELSE
-           |    (strlen(text) - strlen(regexp_replace(text,
-           |      '[^a-zA-Z0-9\\s]', '', 'g')))::DOUBLE / strlen(text)
-           |  END AS pr
-           |  FROM qm),
-           |q AS (SELECT doc_id, lang, n_tokens FROM qf
-           |  WHERE n_tokens >= 20 AND mtl >= 3.0 AND mtl <= 10.0
-           |    AND pr <= 0.2),
-           |mx AS (SELECT doc_id, lang, n_tokens FROM q
-           |  WHERE ('0x' || substr(md5(lang || '|' ||
-           |      CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 <
-           |    CASE lang WHEN 'en' THEN 10 WHEN 'de' THEN 30
-           |      WHEN 'fr' THEN 30 ELSE 50 END),
-           |c AS (SELECT lang, CAST(n_tokens AS BIGINT) AS n_tokens,
-           |  sum(CAST(n_tokens AS BIGINT)) OVER (PARTITION BY lang
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM mx),
-           |p AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id, n_tokens
-           |  FROM c)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-           |FROM p GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin
-      },
-
-      "q79b_pipeline_excise" -> {
-        s"""WITH RECURSIVE
-           |ch AS (SELECT doc_id,
-           |  md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS chash
-           |  FROM documents),
-           |keep AS (SELECT min(doc_id) AS doc_id FROM ch GROUP BY chash),
-           |kd AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
-           |ktoks AS (SELECT doc_id, $toksSql AS tk FROM kd),
-           |ksh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM ktoks),
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM ksh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |${clusterCtes("kd")},
-           |reps AS (SELECT src AS doc_id FROM reach
-           |  GROUP BY src HAVING min(dst) = src),
-           |rd AS (SELECT kd.* FROM kd JOIN reps USING (doc_id)),
-           |ttoks AS (SELECT doc_id, $toksSql AS tk FROM rd
-           |  WHERE doc_id % 50 <> 0),
-           |tsh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM ttoks),
-           |etoks AS (SELECT doc_id, $toksSql AS tk FROM documents
-           |  WHERE doc_id % 50 = 0),
-           |esh AS (SELECT DISTINCT unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM etoks),
-           |cont AS (SELECT DISTINCT tsh.doc_id FROM tsh JOIN esh USING (s)),
-           |clean AS (SELECT * FROM rd WHERE doc_id % 50 <> 0
-           |  AND doc_id NOT IN (SELECT doc_id FROM cont)),
-           |ctk AS (SELECT doc_id, lang, text, $toksSql AS toks FROM clean),
-           |ssh0 AS (SELECT doc_id,
-           |    unnest(list_transform(range(1, len(toks) - 8 + 2),
-           |      i -> struct_pack(pos := i - 1,
-           |        h := md5(array_to_string(list_slice(toks, i, i + 7), ' '))))) AS sp
-           |  FROM ctk WHERE len(toks) >= 8),
-           |ssh AS (SELECT doc_id, sp.pos AS pos, sp.h AS h FROM ssh0),
-           |sdup AS (SELECT doc_id, pos FROM
-           |  (SELECT doc_id, pos, count(*) OVER (PARTITION BY h) AS c FROM ssh)
-           |  WHERE c > 1),
-           |sisl AS (SELECT doc_id, pos,
-           |    CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 8
-           |      THEN 1 ELSE 0 END AS brk FROM sdup),
-           |sgrp AS (SELECT doc_id, pos,
-           |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g FROM sisl),
-           |spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
-           |  FROM sgrp GROUP BY doc_id, g),
-           |pt0 AS (SELECT doc_id,
-           |    unnest(list_transform(range(1, len(toks) + 1),
-           |      i -> struct_pack(pos := i - 1, tok := toks[i]))) AS pt
-           |  FROM ctk),
-           |pt AS (SELECT doc_id, pt.pos AS pos, pt.tok AS tok FROM pt0),
-           |keptt AS (SELECT p.doc_id, p.pos, p.tok FROM pt p
-           |  WHERE NOT EXISTS (SELECT 1 FROM spans sp
-           |    WHERE sp.doc_id = p.doc_id AND p.pos BETWEEN sp.s AND sp.e)),
-           |rebuilt AS (SELECT doc_id,
-           |    coalesce(string_agg(tok, ' ' ORDER BY pos), '') AS ntext
-           |  FROM keptt GROUP BY doc_id),
-           |exc AS (SELECT c.doc_id, c.lang,
-           |    CASE WHEN EXISTS (SELECT 1 FROM spans sp
-           |        WHERE sp.doc_id = c.doc_id)
-           |      THEN coalesce(r.ntext, '') ELSE c.text END AS text
-           |  FROM clean c LEFT JOIN rebuilt r ON c.doc_id = r.doc_id),
-           |qm AS (SELECT doc_id, lang, text, $toksSql AS tk FROM exc),
-           |qf AS (SELECT doc_id, lang,
-           |  CAST(len(tk) AS INTEGER) AS n_tokens,
-           |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE
-           |    list_aggregate(list_transform(tk, x -> strlen(x)), 'sum')::DOUBLE
-           |      / len(tk) END AS mtl,
-           |  CASE WHEN strlen(text) = 0 THEN 0.0 ELSE
-           |    (strlen(text) - strlen(regexp_replace(text,
-           |      '[^a-zA-Z0-9\\s]', '', 'g')))::DOUBLE / strlen(text)
-           |  END AS pr
-           |  FROM qm),
-           |q AS (SELECT doc_id, lang, n_tokens FROM qf
-           |  WHERE n_tokens >= 20 AND mtl >= 3.0 AND mtl <= 10.0
-           |    AND pr <= 0.2),
-           |mx AS (SELECT doc_id, lang, n_tokens FROM q
-           |  WHERE ('0x' || substr(md5(lang || '|' ||
-           |      CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 <
-           |    CASE lang WHEN 'en' THEN 10 WHEN 'de' THEN 30
-           |      WHEN 'fr' THEN 30 ELSE 50 END),
-           |c AS (SELECT lang, CAST(n_tokens AS BIGINT) AS n_tokens,
-           |  sum(CAST(n_tokens AS BIGINT)) OVER (PARTITION BY lang
-           |    ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM mx),
-           |p AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id, n_tokens
-           |  FROM c)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-           |FROM p GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin
-      },
-
-      "q80_bucketed_join" ->
-        """WITH i AS (SELECT l_orderkey,
-          |  sum(CAST(l_quantity AS DECIMAL(18,2)))::DOUBLE AS sum_qty,
-          |  count(*) AS n_items
-          |  FROM lineitem GROUP BY l_orderkey)
-          |SELECT o_orderkey, o_custkey, o_totalprice, sum_qty, n_items
-          |FROM orders JOIN i ON o_orderkey = l_orderkey
-          |ORDER BY o_orderkey""".stripMargin,
-
-      "q81_compaction" ->
-        """SELECT CAST(40 AS BIGINT) AS files_before,
-          |  CAST(1 AS BIGINT) AS files_after,
-          |  CAST(count(*) AS BIGINT) AS n_rows,
-          |  sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE AS sum_price,
-          |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-          |FROM orders""".stripMargin,
-
-      "q82_flow_e2e" -> {
-        val fxPh = phSql(fx = true)
-          .replace("base_ev", "bevf").replace("ph AS", "phf AS")
-        val stPh = phSql(fx = false)
-          .replace("base_ev", "bevs").replace("ph AS", "phs AS")
-        def fxRound(c: String) =
-          s"CASE WHEN symbol = 'USDJPY' " +
-            s"THEN round(CAST($c AS DECIMAL(38,9)), 3)::DOUBLE " +
-            s"ELSE round(CAST($c AS DECIMAL(38,9)), 5)::DOUBLE END AS $c"
-        def stRound(c: String) =
-          s"round(CAST($c AS DECIMAL(38,9)), 2)::DOUBLE AS $c"
-        s"""WITH $fxPh,
-           |$stPh,
-           |fxr AS (SELECT date_stamp, symbol,
-           |  ${fxRound("open")}, ${fxRound("high")},
-           |  ${fxRound("low")}, ${fxRound("close")},
-           |  CAST(volume AS BIGINT) AS volume FROM phf),
-           |str AS (SELECT date_stamp, symbol,
-           |  ${stRound("open")}, ${stRound("high")},
-           |  ${stRound("low")}, ${stRound("close")},
-           |  CAST(volume AS BIGINT) AS volume FROM phs),
-           |fxs AS (
-           |$ffillSelectSql
-           |FROM fxr
-           |WINDOW w AS (PARTITION BY symbol ORDER BY date_stamp $ffillFrame)),
-           |sts AS (
-           |$ffillSelectSql
-           |FROM str
-           |WINDOW w AS (PARTITION BY symbol ORDER BY date_stamp $ffillFrame))
-           |SELECT date_stamp, symbol, open, high, low, close, volume,
-           |  CAST(0 AS BIGINT) AS dq_violations
-           |FROM (SELECT * FROM fxs UNION ALL SELECT * FROM sts)
-           |ORDER BY symbol, date_stamp""".stripMargin
-      },
-
-      "q83_token_topk" ->
-        s"""WITH tk AS (SELECT unnest($toksSql) AS token FROM documents)
-           |SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tk
-           |GROUP BY token ORDER BY cnt DESC, token LIMIT 50""".stripMargin,
-
-      "q84_heavy_hitters" ->
-        s"""WITH tk AS (SELECT unnest($toksSql) AS token FROM documents),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM tk),
-           |c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY token)
-           |SELECT n_total,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c, tot
-           |     WHERE cnt * 65 > n_total) AS n_heavy,
-           |  TRUE AS superset_ok, TRUE AS bounded_ok
-           |FROM tot""".stripMargin,
-
-      "q85_targeted_delete" ->
-        s"""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-           |FROM orders
-           |WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
-           |  WHERE ${pHashSql("c_name")} % 20 = 0)
-           |ORDER BY o_orderkey""".stripMargin,
-
-      "q86_vocab_build" ->
-        s"""WITH tk AS (SELECT unnest($toksSql) AS token FROM documents),
-           |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tk
-           |  GROUP BY token HAVING count(*) >= 5
-           |  ORDER BY cnt DESC, token LIMIT 200)
-           |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, token)
-           |    AS INTEGER) AS token_id, token, cnt
-           |FROM c ORDER BY token_id""".stripMargin,
-
-      "q87_temperature_mix" ->
-        s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-           |  FROM documents GROUP BY lang),
-           |w AS (SELECT lang, n,
-           |  CAST(floor(1000000.0 * sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS wt
-           |  FROM c),
-           |agg AS (SELECT SUM(wt) AS s, SUM(n) AS total FROM w),
-           |thr AS (SELECT lang,
-           |  CAST(LEAST((CAST(1000000 AS HUGEINT) * wt
-           |      * ((CAST(total AS HUGEINT) * 30) // 100)) // (CAST(s AS HUGEINT) * n),
-           |    1000000) AS BIGINT) AS t
-           |  FROM w, agg)
-           |SELECT d.doc_id, d.lang, d.source
-           |FROM documents d JOIN thr ON d.lang = thr.lang
-           |WHERE ${pHashSql("d.lang || '|' || CAST(d.doc_id AS VARCHAR)")}
-           |  % 1000000 < thr.t
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q88_group_sample" ->
-        s"""WITH r AS (SELECT doc_id, lang,
-           |  row_number() OVER (PARTITION BY lang ORDER BY
-           |    ${pHashSql("lang || '|' || CAST(doc_id AS VARCHAR)")},
-           |    doc_id) AS rk
-           |  FROM documents)
-           |SELECT doc_id, lang FROM r WHERE rk <= 40
-           |ORDER BY doc_id""".stripMargin,
-
-      "q92_approx_quantiles" ->
-        """SELECT quantile_cont(l_extendedprice, 0.5) AS p50,
-          |  quantile_cont(l_extendedprice, 0.9) AS p90,
-          |  quantile_cont(l_extendedprice, 0.99) AS p99,
-          |  TRUE AS within_tol
-          |FROM lineitem""".stripMargin,
-
-      "q93_incremental_agg" ->
-        """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-          |  sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE AS total
-          |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-      "q94_span_dedup" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |sh0 AS (SELECT doc_id,
-           |    unnest(list_transform(range(1, len(toks) - 8 + 2),
-           |      i -> struct_pack(pos := i - 1,
-           |        h := md5(array_to_string(list_slice(toks, i, i + 7), ' '))))) AS sp
-           |  FROM tk WHERE len(toks) >= 8),
-           |sh AS (SELECT doc_id, sp.pos AS pos, sp.h AS h FROM sh0),
-           |dup AS (SELECT doc_id, pos FROM
-           |  (SELECT doc_id, pos, count(*) OVER (PARTITION BY h) AS c FROM sh)
-           |  WHERE c > 1),
-           |isl AS (SELECT doc_id, pos,
-           |    CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 8
-           |      THEN 1 ELSE 0 END AS brk FROM dup),
-           |grp AS (SELECT doc_id, pos,
-           |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g FROM isl)
-           |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-           |  CAST(max(pos) + 7 AS BIGINT) AS span_end,
-           |  CAST(max(pos) + 8 - min(pos) AS BIGINT) AS dup_tokens
-           |FROM grp GROUP BY doc_id, g
-           |ORDER BY doc_id, span_start""".stripMargin,
-
-      "q98_matched_spans" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |sh0 AS (SELECT doc_id,
-           |    unnest(list_transform(range(1, len(toks) - 8 + 2),
-           |      i -> struct_pack(pos := i - 1,
-           |        h := md5(array_to_string(list_slice(toks, i, i + 7), ' '))))) AS sp
-           |  FROM tk WHERE len(toks) >= 8),
-           |sh AS (SELECT doc_id, sp.pos AS pos, sp.h AS h FROM sh0),
-           |occ AS (SELECT doc_id, pos, h FROM
-           |  (SELECT doc_id, pos, h, count(*) OVER (PARTITION BY h) AS c FROM sh)
-           |  WHERE c > 1 AND c <= 1000),
-           |seeds AS (SELECT a.doc_id AS da, a.pos AS pa, b.doc_id AS db,
-           |    b.pos AS pb, a.pos - b.pos AS diag
-           |  FROM occ a JOIN occ b ON a.h = b.h
-           |    AND (a.doc_id < b.doc_id
-           |      OR (a.doc_id = b.doc_id AND a.pos < b.pos))),
-           |isl AS (SELECT da, db, pa, pb, diag,
-           |    CASE WHEN pa > lag(pa)
-           |        OVER (PARTITION BY da, db, diag ORDER BY pa) + 1
-           |      THEN 1 ELSE 0 END AS brk FROM seeds),
-           |grp AS (SELECT da, db, pa, pb, diag,
-           |    sum(brk) OVER (PARTITION BY da, db, diag ORDER BY pa) AS g
-           |  FROM isl)
-           |SELECT da AS doc_a, db AS doc_b,
-           |  CAST(min(pa) AS BIGINT) AS a_start,
-           |  CAST(min(pb) AS BIGINT) AS b_start,
-           |  CAST(max(pa) - min(pa) + 8 AS BIGINT) AS match_len
-           |FROM grp GROUP BY da, db, diag, g
-           |ORDER BY doc_a, doc_b, a_start, b_start""".stripMargin,
-
-      "q100_hub_shingles" ->
-        s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |sh0 AS (SELECT doc_id,
-           |    unnest(list_transform(range(1, len(toks) - 8 + 2),
-           |      i -> md5(array_to_string(list_slice(toks, i, i + 7), ' ')))) AS h
-           |  FROM tk WHERE len(toks) >= 8),
-           |c AS (SELECT h, count(*) AS c FROM sh0 GROUP BY h)
-           |SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS total_occurrences,
-           |  CAST(coalesce(sum(CASE WHEN c > 1 THEN c END), 0) AS BIGINT)
-           |    AS dup_occurrences,
-           |  CAST(count(CASE WHEN c > 2 THEN 1 END) AS BIGINT) AS hub_shingles,
-           |  CAST(coalesce(sum(CASE WHEN c > 2 THEN c END), 0) AS BIGINT)
-           |    AS hub_occurrences
-           |FROM c""".stripMargin,
-
-      "q105_incremental_distinct" ->
-        """WITH fin AS (
-          |  SELECT o_orderkey, o_custkey,
-          |    CASE WHEN o_orderkey % 3 = 0 THEN 2 * o_totalprice
-          |         ELSE o_totalprice END AS price
-          |  FROM orders
-          |  WHERE (o_orderkey % 2 = 0 OR o_orderkey % 3 = 0)
-          |    AND o_orderkey % 7 <> 0)
-          |SELECT o_custkey,
-          |  CAST(count(DISTINCT CAST(price AS DECIMAL(18,2))) AS BIGINT)
-          |    AS n_distinct,
-          |  TRUE AS ok
-          |FROM fin GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-      "q104_stream_lakehouse" ->
-        """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-          |  sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE AS total,
-          |  TRUE AS ok
-          |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-      "q103_incremental_moments" ->
-        """WITH fin AS (
-          |  SELECT o_orderkey, o_custkey,
-          |    CASE WHEN o_orderkey % 3 = 0 THEN 2 * o_totalprice
-          |         ELSE o_totalprice END AS price
-          |  FROM orders
-          |  WHERE (o_orderkey % 2 = 0 OR o_orderkey % 3 = 0)
-          |    AND o_orderkey % 7 <> 0)
-          |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-          |  sum(CAST(price AS DECIMAL(18,2)))::DOUBLE AS total,
-          |  sum(CAST(price AS DECIMAL(18,2)))::DOUBLE / count(*) AS mean,
-          |  TRUE AS ok
-          |FROM fin GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-      "q99_incremental_minmax" ->
-        """WITH fin AS (
-          |  SELECT o_orderkey, o_custkey,
-          |    CASE WHEN o_orderkey % 3 = 0 THEN 2 * o_totalprice
-          |         ELSE o_totalprice END AS price
-          |  FROM orders
-          |  WHERE (o_orderkey % 2 = 0 OR o_orderkey % 3 = 0)
-          |    AND o_orderkey % 7 <> 0)
-          |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-          |  sum(CAST(price AS DECIMAL(18,2)))::DOUBLE AS total,
-          |  min(CAST(price AS DECIMAL(18,2)))::DOUBLE AS lo,
-          |  max(CAST(price AS DECIMAL(18,2)))::DOUBLE AS hi,
-          |  TRUE AS ok
-          |FROM fin GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-      "q95_cdc_incremental" ->
-        """WITH fin AS (
-          |  SELECT o_orderkey,
-          |    CASE WHEN o_orderkey % 5 = 0 THEN o_custkey
-          |         WHEN o_orderkey % 3 = 0 THEN o_custkey + 7
-          |         ELSE o_custkey END AS ck,
-          |    CASE WHEN o_orderkey % 5 = 0 THEN 2 * o_totalprice
-          |         ELSE o_totalprice END AS price
-          |  FROM orders
-          |  WHERE o_orderkey % 2 = 0 OR o_orderkey % 3 = 0 OR o_orderkey % 5 = 0)
-          |SELECT ck AS o_custkey, CAST(count(*) AS BIGINT) AS n,
-          |  sum(CAST(price AS DECIMAL(18,2)))::DOUBLE AS total, TRUE AS ok
-          |FROM fin GROUP BY ck ORDER BY o_custkey""".stripMargin,
-
-      "q96_decontaminate_bloom" ->
-        s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-           |sh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM toks),
-           |ev AS (SELECT DISTINCT s FROM sh WHERE doc_id % 40 = 0),
-           |cont AS (SELECT DISTINCT sh.doc_id FROM sh JOIN ev USING (s))
-           |SELECT d.doc_id, d.lang FROM documents d
-           |WHERE d.doc_id % 40 <> 0
-           |  AND d.doc_id NOT IN (SELECT doc_id FROM cont)
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q97_cms_topk_gate" ->
-        s"""WITH tk AS (SELECT unnest($toksSql) AS token FROM documents),
-           |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tk
-           |  GROUP BY token)
-           |SELECT token, cnt, TRUE AS lower_ok, TRUE AS upper_ok
-           |FROM c ORDER BY cnt DESC, token LIMIT 20""".stripMargin,
-
-      "q90_approx_distinct" ->
-        """SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact,
-          |  TRUE AS within_tol
-          |FROM lineitem""".stripMargin,
-
-      "q91_snapshot_diff" ->
-        """WITH c AS (
-          |  SELECT CASE WHEN o_orderkey % 2 = 1 THEN 'insert'
-          |              WHEN o_orderkey % 3 = 0 THEN 'update'
-          |              ELSE 'unchanged' END AS change_type,
-          |    o_orderkey
-          |  FROM orders WHERE o_orderkey % 2 = 0 OR o_orderkey % 3 = 0)
-          |SELECT change_type, CAST(count(*) AS BIGINT) AS n,
-          |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-          |FROM c GROUP BY change_type ORDER BY change_type""".stripMargin,
-
-      "q89_zorder_layout" -> {
-        val z = graft.store.ZOrder.zValueNSql(
-          Seq("l_partkey", "l_suppkey", "l_linenumber"))
-        s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, $z AS z
-           |FROM lineitem
-           |ORDER BY z, l_orderkey, l_linenumber""".stripMargin
-      },
-
-      "q76_moving_avg" ->
-        """SELECT user_id, event_id,
-          |  CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) /
-          |    count(*) OVER w AS ma5
-          |FROM events
-          |WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-          |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-          |ORDER BY user_id, event_id""".stripMargin,
-
-      "q77_returns" ->
-        """SELECT user_id, event_id,
-          |  CASE WHEN lag(value) OVER w <> 0
-          |    THEN (value - lag(value) OVER w) / lag(value) OVER w
-          |  END AS ret
-          |FROM events
-          |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-          |ORDER BY user_id, event_id""".stripMargin,
-
-      "q74_quantiles" ->
-        """SELECT l_returnflag,
-          |  quantile_cont(l_quantity, 0.25) AS q25,
-          |  quantile_cont(l_quantity, 0.5) AS q50,
-          |  quantile_cont(l_quantity, 0.75) AS q75,
-          |  quantile_cont(l_quantity, 0.9) AS q90
-          |FROM lineitem GROUP BY l_returnflag
-          |ORDER BY l_returnflag""".stripMargin,
-
-      "q75_moment_stats" ->
-        """WITH m AS (SELECT l_returnflag, count(*) AS n,
-          |  CAST(sum(qd) AS DOUBLE) AS sq,
-          |  CAST(sum(qd * qd) AS DOUBLE) AS sq2,
-          |  CAST(sum(pd) AS DOUBLE) AS sp,
-          |  CAST(sum(pd * pd) AS DOUBLE) AS sp2,
-          |  CAST(sum(qd * pd) AS DOUBLE) AS sqp
-          |  FROM (SELECT l_returnflag,
-          |    CAST(l_quantity AS DECIMAL(18,2)) AS qd,
-          |    CAST(l_extendedprice AS DECIMAL(18,2)) AS pd
-          |    FROM lineitem) GROUP BY l_returnflag)
-          |SELECT l_returnflag, n,
-          |  sq / n AS mean_qty,
-          |  sqrt((sq2 - sq * sq / n) / (n - 1)) AS std_qty,
-          |  (n * sqp - sq * sp) /
-          |    sqrt((n * sq2 - sq * sq) * (n * sp2 - sp * sp))
-          |    AS corr_qty_price
-          |FROM m ORDER BY l_returnflag""".stripMargin,
-
-      "q73_stream_neardup" -> {
-        val bandKeys = (0 until 4).map { b =>
-          s"SELECT doc_id, $b AS band, CAST(mh${2 * b} AS VARCHAR) || '_' || " +
-            s"CAST(mh${2 * b + 1} AS VARCHAR) AS key FROM sig"
-        }.mkString(" UNION ALL ")
-        s"""WITH $shingleCtes,
-           |h AS (SELECT doc_id, ${pHashSql("s")} AS hv FROM sh),
-           |sig AS (SELECT doc_id, $mhTerms FROM h GROUP BY doc_id),
-           |banded AS ($bandKeys),
-           |rej AS (SELECT DISTINCT b.doc_id FROM banded a JOIN banded b
-           |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
-           |SELECT d.doc_id, d.lang FROM documents d
-           |WHERE d.doc_id NOT IN (SELECT doc_id FROM rej)
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      "q71_decontaminate" ->
-        s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-           |sh AS (SELECT doc_id, unnest(list_distinct(${shinglesSql("tk")}))
-           |  AS s FROM toks),
-           |ev AS (SELECT DISTINCT s FROM sh WHERE doc_id % 50 = 0),
-           |cont AS (SELECT DISTINCT sh.doc_id FROM sh JOIN ev USING (s))
-           |SELECT d.doc_id, d.lang FROM documents d
-           |WHERE d.doc_id % 50 <> 0
-           |  AND d.doc_id NOT IN (SELECT doc_id FROM cont)
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q72_pii_scrub" ->
-        """WITH r AS (SELECT c_custkey,
-          |  'contact ' || lower(translate(c_name, '# ', '_.')) ||
-          |  '@example.com or call 555-0123 ref ' ||
-          |  CAST(c_custkey AS VARCHAR) AS raw
-          |  FROM customer)
-          |SELECT c_custkey,
-          |  regexp_replace(regexp_replace(raw,
-          |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>',
-          |    'g'), '\b\d{3}-\d{4}\b', '<PHONE>', 'g') AS scrubbed,
-          |  CAST(len(regexp_extract_all(raw,
-          |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-          |    AS INTEGER) AS n_emails,
-          |  CAST(len(regexp_extract_all(raw, '\b\d{3}-\d{4}\b'))
-          |    AS INTEGER) AS n_phones
-          |FROM r ORDER BY c_custkey""".stripMargin,
-
-      "q69_multimodal_resize" ->
-        """WITH b AS (SELECT doc_id AS asset_id,
-          |  substr(hex(encode(text)), 1, 1000) AS hx FROM documents)
-          |SELECT asset_id, CAST(strlen(hx) // 2 AS BIGINT) AS n_bytes,
-          |  CAST(COALESCE(list_aggregate(list_transform(
-          |    range(1, strlen(hx) // 2 + 1),
-          |    i -> ('0x' || substr(hx, 2*i-1, 2))::BIGINT), 'sum'), 0)
-          |    AS BIGINT) AS byte_sum
-          |FROM b ORDER BY asset_id""".stripMargin,
-
-      "q70_multimodal_framesample" ->
-        """WITH b AS (SELECT doc_id AS asset_id, hex(encode(text)) AS hx,
-          |  octet_length(encode(text)) AS n FROM documents),
-          |idx AS (SELECT asset_id, hx,
-          |  unnest(range(0, (n + 255) // 256)) AS frame_idx FROM b),
-          |f AS (SELECT asset_id, frame_idx,
-          |  substr(hx, CAST(frame_idx * 512 + 1 AS INTEGER), 512) AS fhx
-          |  FROM idx WHERE frame_idx % 2 = 0)
-          |SELECT asset_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-          |  CAST(strlen(fhx) // 2 AS INTEGER) AS frame_bytes,
-          |  CAST(COALESCE(list_aggregate(list_transform(
-          |    range(1, strlen(fhx) // 2 + 1),
-          |    i -> ('0x' || substr(fhx, 2*i-1, 2))::BIGINT), 'sum'), 0)
-          |    AS BIGINT) AS byte_sum
-          |FROM f ORDER BY asset_id, frame_idx""".stripMargin,
-
-      "q66_quantize_int8" ->
-        """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |q AS (SELECT vec_id, v,
-          |  greatest(list_max(list_transform(v, x -> abs(x))), 1e-12)
-          |    AS qscale FROM e),
-          |qq AS (SELECT vec_id,
-          |  list_transform(v, x ->
-          |    CAST(floor(x * 127.0 / qscale + 0.5) AS INTEGER)) AS qvec
-          |  FROM q)
-          |SELECT vec_id,
-          |  CAST(COALESCE(list_aggregate(qvec, 'sum'), 0) AS BIGINT) AS q_sum,
-          |  CAST(list_min(qvec) AS INTEGER) AS q_min,
-          |  CAST(list_max(qvec) AS INTEGER) AS q_max
-          |FROM qq ORDER BY vec_id""".stripMargin,
-
-      "q67_stratified_sample" ->
-        """SELECT doc_id, lang FROM documents
-          |WHERE ('0x' || substr(md5(lang || '|' || CAST(doc_id AS VARCHAR)),
-          |    1, 8))::BIGINT % 100 <
-          |  CASE lang WHEN 'en' THEN 10 WHEN 'de' THEN 30 WHEN 'fr' THEN 30
-          |    ELSE 50 END
-          |ORDER BY doc_id""".stripMargin,
-
-      "q68_pack_sequences" ->
-        s"""WITH d AS (SELECT doc_id, lang,
-           |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-           |c AS (SELECT doc_id, lang, n_tokens,
-           |  sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM d),
-           |p AS (SELECT lang,
-           |  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id, n_tokens
-           |  FROM c)
-           |SELECT lang, pack_id, count(*) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-           |FROM p GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin,
-
-      "q65_asof_forward_tolerance" ->
-        """WITH j AS (
-          |  SELECT p.event_id AS purchase_id, p.user_id,
-          |    p.ts AS pts, c.ts AS cts, c.event_id AS cid
-          |  FROM (SELECT event_id, user_id, ts FROM events
-          |        WHERE event_type = 'purchase') p
-          |  ASOF LEFT JOIN (SELECT event_id, user_id, ts FROM events
-          |        WHERE event_type = 'click') c
-          |    ON p.user_id = c.user_id AND p.ts <= c.ts)
-          |SELECT purchase_id, user_id,
-          |  CASE WHEN cts IS NOT NULL
-          |    AND epoch_us(cts) - epoch_us(pts) <= 86400000000
-          |    THEN cid END AS click_id
-          |FROM j ORDER BY purchase_id""".stripMargin,
-
-      // the gates are integer-arithmetic booleans: recall_ok/precision_ok
-      // are TRUE by parameter sizing (see the query comments), n_pairs_exact
-      // is the same count q40's oracle computes
-      "q56_embedding_neardup_lsh" ->
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |pairs AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.v AS qv, b.v AS cv
-           |  FROM e a JOIN e b ON a.vec_id < b.vec_id),
-           |x AS (SELECT count(*) AS n_pairs_exact FROM pairs
-           |  WHERE $cosSql > 0.4)
-           |SELECT n_pairs_exact, TRUE AS recall_ok, TRUE AS precision_ok
-           |FROM x""".stripMargin,
-
-      "q57_ann_kmeans_ivf" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM embeddings WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM embeddings),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok FROM x""".stripMargin,
-
-      "q102_ann_clustered_layout" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM embeddings WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM embeddings),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok, TRUE AS layout_ok
-           |FROM x""".stripMargin,
-
-      "q115_ann_ivfadc" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM embeddings WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM embeddings),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok, TRUE AS adc_ok
-           |FROM x""".stripMargin,
-
-      "q116_ann_ivfadc_residual" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           |  FROM embeddings WHERE vec_id < 50),
-           |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-           |  FROM embeddings),
-           |scored AS (SELECT query_id, neighbor_id, $cosSql AS sim
-           |  FROM q JOIN c ON query_id <> neighbor_id),
-           |ranked AS (SELECT query_id, row_number() OVER (
-           |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-           |  FROM scored),
-           |x AS (SELECT count(*) AS n_exact FROM ranked WHERE rnk <= 5)
-           |SELECT n_exact, TRUE AS recall_ok FROM x""".stripMargin,
-
-      "q41_multimodal_meta" ->
-        """SELECT 'text/plain' AS media_type,
-          |  CAST(count(*) AS BIGINT) AS n_assets,
-          |  CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-          |  CAST(max(octet_length(encode(text))) AS BIGINT) AS max_bytes
-          |FROM documents""".stripMargin,
-
-      "q42_stream_upsert" ->
-        """SELECT event_id, user_id, event_type, value
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // byte_sum = total UTF-8 byte sum (integer-exact through the lane
-      // features); feature_norm = ONE final IEEE divide, identical on both
-      // engines
-      "q47_multimodal_decode" ->
-        """WITH b AS (
-          |  SELECT doc_id AS asset_id, encode(text) AS payload FROM documents),
-          |s AS (SELECT asset_id,
-          |  CAST(COALESCE(list_aggregate(list_transform(
-          |    range(1, octet_length(payload) + 1),
-          |    i -> ('0x' || substr(hex(payload), 2*i-1, 2))::BIGINT), 'sum'),
-          |    0) AS BIGINT) AS byte_sum
-          |  FROM b)
-          |SELECT asset_id, byte_sum, CAST(8 AS INTEGER) AS n_lanes,
-          |  byte_sum::DOUBLE / 255.0::DOUBLE AS feature_norm
-          |FROM s ORDER BY asset_id""".stripMargin,
-    )
-  }
+  private[graft] def wipeStaleFixtures(): Unit = Shared.wipeStaleFixtures()
 }

@@ -28,10 +28,12 @@ import org.apache.spark.sql.functions._
   *    ([[graft.operators.Sizing.materialize]]). The anti-join side and the
   *    union side both read the materialized rows, so the delta's lineage
   *    (a wide unpivot, a streaming micro-batch) runs once per merge.
-  *  - At 100 TB a full rewrite per merge is wrong; partition the target by a
-  *    date column (`partitionBy`) and only the partitions containing updated
-  *    keys are rewritten (dynamic partition overwrite), i.e. a daily merge
-  *    touches one day-partition, not the history.
+  *  - [[upsert]] rewrites the whole table (into `<path>__tmp`, then a
+  *    directory swap). At 100 TB a full rewrite per merge is wrong:
+  *    [[upsertPartitioned]] keeps the target partitioned by a date column
+  *    and rewrites only the partitions containing updated keys (dynamic
+  *    partition overwrite), i.e. a daily merge touches one day-partition,
+  *    not the history.
   *  - Single-writer assumption matches the reference (one Prefect worker).
   */
 object UpsertWriter {
@@ -43,17 +45,12 @@ object UpsertWriter {
   /** PK merge (dlt "merge", load.py:49-62): rows whose PK exists in
     * `updates` are replaced; new PKs are inserted. Idempotent: re-merging
     * the same batch leaves the table unchanged (e2e_test.py:246-291).
-    *
-    * @param partitionBy  optional hive-style partition columns; with
-    *   `spark.sql.sources.partitionOverwriteMode=dynamic` only touched
-    *   partitions rewrite — the 100 TB path.
     */
   def upsert(
       spark: SparkSession,
       path: String,
       updates: DataFrame,
       pk: Seq[String],
-      partitionBy: Seq[String] = Nil,
       broadcastThresholdRows: Long = 4000000L,
       allowNewColumns: Boolean = false,
   ): Unit = {
@@ -66,7 +63,7 @@ object UpsertWriter {
     // first write.
     val dedupedUpdates = updates.dropDuplicates(pk)
     if (!Files.exists(target)) {
-      writeAtomic(dedupedUpdates, target, partitionBy)
+      writeAtomic(dedupedUpdates, target, Nil)
       return
     }
     val existing = spark.read.parquet(path)
@@ -81,7 +78,7 @@ object UpsertWriter {
     // discipline of the W4 gate.
     val merged = survivors.unionByName(delta,
       allowMissingColumns = allowNewColumns)
-    writeAtomic(merged, target, partitionBy)
+    writeAtomic(merged, target, Nil)
   }
 
   /** Targeted key deletion — the GDPR-erasure / right-to-be-forgotten
