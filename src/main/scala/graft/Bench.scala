@@ -499,47 +499,17 @@ object Bench {
     // driver never sets this
     val only: Option[Seq[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    // Bench-harness-only I/O setup (query semantics untouched): scratch
-    // tables + streaming checkpoints go to tmpfs so the ~6 streaming
-    // queries' per-micro-batch WAL/commit fsyncs measure memory writes,
-    // not disk latency; retain the minimum checkpoint history.
-    if (sys.props.get("graft.scratch").isEmpty &&
-        new java.io.File("/dev/shm").isDirectory) {
-      // tmpfs is RAM: wipe leftovers from prior runs BEFORE pointing the
-      // scratch property at it, else every bench invocation's per-query
-      // temp tables + streaming checkpoints accumulate until reboot
-      // (an externally preset -Dgraft.scratch is respected, not clobbered)
-      deleteRecursively(java.nio.file.Paths.get("/dev/shm/graft_bench"))
-      System.setProperty("graft.scratch", "/dev/shm/graft_bench")
-    }
-    // stale-fixture hygiene for NON-default scratch roots (custom
-    // -Dgraft.scratch or the java.io.tmpdir fallback): memoFixture's
-    // cache is per-JVM and always builds into a fresh temp dir, so the
-    // preserved fixtures/ child would accumulate one tree per run
-    // forever. Wipe it ONCE at suite startup — before any query runs —
-    // mirroring the /dev/shm leftover wipe above.
-    SparkEntry.wipeStaleFixtures()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench-harness-only I/O setup: scratch and checkpoints on tmpfs
+    Harness.tmpfsScratch("graft_bench")
+    val spark = Harness.session(cpus)
     // same session surface as Verify: SQL kernels + the
     // size(bpe_encode)->count rewrite (ScaleSmoke deliberately does NOT
     // install it — its encode-vs-count comparison asserts the naive
     // plan survived)
     GraftExtensions.install(spark)
-    // per-query scratch wipe (default ON): each query's temp tables and
-    // streaming checkpoints are ephemeral, so wiping between queries
+    // per-query scratch wipe (default ON, see Harness.wipeScratch):
     // bounds the checkpoint/state dirs a long suite accumulates on the
-    // tmpfs scratch. EXCEPT the `fixtures/` child: memoized fixture
-    // trees are cross-query by design (q115's centroids feed
-    // q116/q117/q118; the versioned-lake fixtures feed their incremental
-    // views) — round 10's first wipe-enabled run deleted them mid-suite
-    // and killed six queries with PATH_NOT_FOUND.
+    // tmpfs scratch.
     // SPARK_GRAFT_WIPE_SCRATCH=0 reproduces the old accumulate-to-the-
     // end behavior for A/B runs.
     val wipeScratch =
@@ -586,15 +556,7 @@ object Bench {
     }
     val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
       val r = name -> benchOne(spark, sfDir, name, fn)
-      if (wipeScratch) sys.props.get("graft.scratch").foreach { root =>
-        val d = java.nio.file.Paths.get(root)
-        if (java.nio.file.Files.isDirectory(d)) {
-          val ls = java.nio.file.Files.list(d)
-          try ls.forEach { p =>
-            if (p.getFileName.toString != "fixtures") deleteRecursively(p)
-          } finally ls.close()
-        }
-      }
+      if (wipeScratch) Harness.wipeScratch()
       if ((i + 1) % canaryStride == 0 || i == ordered.length - 1)
         probeCanary(i)
       r

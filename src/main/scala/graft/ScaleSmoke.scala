@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.tools.Profile
 
 /** Data-bound scaling measurement (builder-side; the driver never runs
   * this). The cross-SF check in SCALE.md is overhead-dominated — sf0.1
@@ -67,51 +69,26 @@ object ScaleSmoke {
           .as("embedding"))
   }
 
-  /** Cumulative shuffle-byte tally (SPARK_GRAFT_SCALE_SHUFFLE=1): the
-    * ×128-class runs record per-op shuffle traffic next to wall time —
-    * a constant that only bites past the usual envelope shows up here
-    * first. Listener delivery is async, so each snapshot DRAINS the bus
-    * first (`listenerBus.waitUntilEmpty` via reflection — the member is
-    * private[spark], which is public at the bytecode level) so no task-end
-    * event from the warm run leaks into the timed delta; if the
-    * reflective drain is unavailable the old settle sleep stands in and
-    * the numbers degrade to ~exact.
+  /** (steady seconds, result rows, shuffle write bytes, read bytes). With
+    * a recorder (SPARK_GRAFT_SCALE_SHUFFLE=1) the shuffle totals bracket
+    * the TIMED run only: the ×128-class runs record per-op shuffle
+    * traffic next to wall time, so a constant that only bites past the
+    * usual envelope shows up here first. The recorder drains the
+    * listener bus on both sides, so no task-end event of the warm run
+    * leaks into the timed totals; without one they are zero.
     */
-  private final class ShuffleTally(sc: org.apache.spark.SparkContext)
-      extends org.apache.spark.scheduler.SparkListener {
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val read = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    private def drain(): Unit =
-      try {
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Exception => Thread.sleep(800) }
-    def snapshot(): (Long, Long) = {
-      drain()
-      (write.get, read.get)
-    }
-  }
-
-  /** (steady seconds, result rows, shuffle write bytes, read bytes) —
-    * the shuffle deltas bracket the TIMED run only (zero without a
-    * tally). */
-  private def time(body: => Long, tally: Option[ShuffleTally])
+  private def time(body: => Long, rec: Option[Profile.Recorder])
       : (Double, Long, Long, Long) = {
     body // warm: codegen + JIT
-    val (w0, r0) = tally.fold((0L, 0L))(_.snapshot())
-    val t0 = System.nanoTime()
-    val n = body
-    val sec = (System.nanoTime() - t0) / 1e9
-    val (w1, r1) = tally.fold((0L, 0L))(_.snapshot())
-    (sec, n, w1 - w0, r1 - r0)
+    rec match {
+      case Some(r) =>
+        val (n, run) = r.record(body)
+        (run.wallNs / 1e9, n, run.shuffleWrite, run.shuffleRead)
+      case None =>
+        val t0 = System.nanoTime()
+        val n = body
+        ((System.nanoTime() - t0) / 1e9, n, 0L, 0L)
+    }
   }
 
   /** Shared fixed-eval fixture for the two decontaminate ops (see the
@@ -138,19 +115,11 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tally: Option[ShuffleTally] =
-      if (sys.env.get("SPARK_GRAFT_SCALE_SHUFFLE").contains("1")) {
-        val t = new ShuffleTally(spark.sparkContext)
-        spark.sparkContext.addSparkListener(t)
-        Some(t)
-      } else None
+    val spark = Harness.session(cpus)
+    val rec =
+      if (sys.env.get("SPARK_GRAFT_SCALE_SHUFFLE").contains("1"))
+        Some(new Profile.Recorder(spark))
+      else None
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "lang", "text")
     val mults = args.headOption.map(_.split(",").map(_.toInt).toSeq)
@@ -599,8 +568,8 @@ object ScaleSmoke {
       val timed = ops.filter(o => onlyOps.forall(_.contains(o._1)))
         .map { case (name, mk) =>
         val f = mk()
-        val (sec, n, sw, sr) = time(f(), tally)
-        val shuf = if (tally.isDefined)
+        val (sec, n, sw, sr) = time(f(), rec)
+        val shuf = if (rec.isDefined)
           f" shufW=${sw / 1e9}%.2fGB shufR=${sr / 1e9}%.2fGB" else ""
         System.err.println(
           f"[scale] x$m $name%-18s $sec%7.2f s ($n rows)$shuf")
@@ -610,16 +579,16 @@ object ScaleSmoke {
     }
     val json = results.map { case (m, rows, timed) =>
       val qs = timed.map { case (k, v, sw, sr) =>
-        val shuf = if (tally.isDefined)
+        val shuf = if (rec.isDefined)
           s""","shuffle_write":$sw,"shuffle_read":$sr""" else ""
         s""""$k":{"sec":${f"$v%.3f"}$shuf}"""
       }.mkString("{", ",", "}")
       s"""{"mult":$m,"rows":$rows,"ops":$qs}"""
     }.mkString("[", ",", "]")
     println(json)
-    // unregister before stop: a tally left on the bus would keep
-    // counting the session teardown's task events into a live reference
-    tally.foreach(spark.sparkContext.removeSparkListener)
+    // unregister before stop: a recorder left on the bus would keep
+    // counting the session teardown's task events
+    rec.foreach(_.close())
     spark.stop()
   }
 }

@@ -66,13 +66,7 @@ object Verify {
     // per-JVM; without this, the tmpdir-fallback scratch accumulates one
     // tree per verify run forever)
     SparkEntry.wipeStaleFixtures()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     // harness sessions carry the full graft surface: SQL-registered
     // kernels plus the size(bpe_encode)->count rewrite, so any query
     // spelling the naive form gets the allocation-free kernel

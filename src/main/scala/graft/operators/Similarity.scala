@@ -731,12 +731,14 @@ object Similarity {
       residual: Boolean = false): Unit = {
     val root = java.nio.file.Paths.get(path)
     val existing = scala.collection.mutable.Set.empty[Long]
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.list(root).iterator().forEachRemaining { p =>
+    if (java.nio.file.Files.exists(root)) {
+      val ls = java.nio.file.Files.list(root)
+      try ls.forEach { p =>
         val name = p.getFileName.toString
         if (name.startsWith("cell="))
           existing += name.stripPrefix("cell=").toLong
-      }
+      } finally ls.close()
+    }
     val out = encodeClusteredPQ(corpus, centroids, codebooks, idCol,
       vecCol, residual).persist()
     try {
@@ -772,13 +774,15 @@ object Similarity {
       }
       val emptied = touched.filterNot(surviving).map(String.valueOf)
       val root = java.nio.file.Paths.get(path)
-      if (emptied.nonEmpty && java.nio.file.Files.exists(root))
-        java.nio.file.Files.list(root).iterator().forEachRemaining { p =>
+      if (emptied.nonEmpty && java.nio.file.Files.exists(root)) {
+        val ls = java.nio.file.Files.list(root)
+        try ls.forEach { p =>
           val name = p.getFileName.toString
           if (name.startsWith("cell=") &&
               emptied.contains(name.stripPrefix("cell=")))
             graft.store.UpsertWriter.deleteRecursively(p)
-        }
+        } finally ls.close()
+      }
     } finally graft.store.UpsertWriter.deleteRecursively(stagingRoot)
   }
 

@@ -170,14 +170,16 @@ object UpsertWriter {
     // hive-escapes special chars in partition paths — ':' writes as %3A —
     // so reconstructing "col=value" from the raw value would miss them)
     val emptied = touched.filterNot(surviving).map(String.valueOf).toSet
-    if (emptied.nonEmpty && Files.exists(Paths.get(path)))
-      Files.list(Paths.get(path)).iterator().forEachRemaining { p =>
+    if (emptied.nonEmpty && Files.exists(Paths.get(path))) {
+      val ls = Files.list(Paths.get(path))
+      try ls.forEach { p =>
         val name = p.getFileName.toString
         if (name.startsWith(s"$partitionCol=") &&
             emptied.contains(unescapePathName(
               name.stripPrefix(s"$partitionCol="))))
           deleteRecursively(p)
-      }
+      } finally ls.close()
+    }
     deleteRecursively(Paths.get(staging))
   }
 

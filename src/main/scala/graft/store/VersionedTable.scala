@@ -1,7 +1,8 @@
 package graft.store
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -26,17 +27,12 @@ object VersionedTable {
   def versions(root: String): Seq[Long] = {
     val r = Paths.get(root)
     if (!Files.exists(r)) Seq.empty
-    else Files.list(r).iterator().asInstanceOf[java.util.Iterator[Path]]
-      .asScala_like.filter(_.getFileName.toString.startsWith("v="))
-      .map(_.getFileName.toString.stripPrefix("v=").toLong).toSeq.sorted
-  }
-
-  // tiny shim: java iterator → scala without importing CollectionConverters
-  // at use sites
-  private implicit class JIter[A](val it: java.util.Iterator[A]) {
-    def asScala_like: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
+    else {
+      val ls = Files.list(r)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
+        .toSeq.sorted
+      finally ls.close()
     }
   }
 
@@ -193,10 +189,6 @@ object VersionedTable {
       .filter(v => v != current)
       .sorted(Ordering[Long].reverse)
       .drop(math.max(keepLast - 1, 0))
-      .foreach { v =>
-        Files.walk(versionDir(root, v))
-          .sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-      }
+      .foreach(v => UpsertWriter.deleteRecursively(versionDir(root, v)))
   }
 }

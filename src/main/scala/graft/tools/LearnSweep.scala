@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-iteration telemetry for [[graft.operators.Corpus.learnBpeMerges]]
   * at real-world k (builder-side; the driver never runs this): prints
   * one line per merge iteration — dict rows after the merge and wall
@@ -25,13 +23,7 @@ object LearnSweep {
     val mult = if (args.length > 2) args(2).toInt else 1
     val mode = if (args.length > 3) args(3) else "bpe"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(cpus)
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "lang", "text")
     val docs = if (mult > 1)

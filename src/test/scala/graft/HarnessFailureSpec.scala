@@ -359,13 +359,17 @@ class HarnessFailureSpec extends SparkSpec {
     // those readings. q128's r16 evidence ([257,569]) was retired by
     // the r17 single-pass + r18 witness-array rewrites of the operator
     // it measured (OPTIMIZATION_r18.md change 2: a quiet reading can
-    // no longer reach 2.6 s, and a regression TO it must flag); the
-    // pin now guards the POST-rewrite quiet evidence (r18 closing reps
-    // 92-101 cs, canary-clean) plus steal headroom.
+    // no longer reach 2.6 s); the pin guards the POST-rewrite quiet
+    // evidence (r18 closing reps 92-101 cs, canary-clean) plus steal
+    // headroom, and caps hi at the committed 300 so a regen cannot
+    // widen it further. With hi=300 the outlier rule flags only at
+    // 2*hi = 600 cs, so a regression to the 426-528 cs pre-rewrite
+    // readings would NOT flag.
     assert(parsed("107")._1 <= 137 && parsed("107")._2 >= 403,
       s"q107 band ${parsed("107")} no longer covers the recorded quiet evidence [137,403]")
-    assert(parsed("128")._1 <= 92 && parsed("128")._2 >= 250,
-      s"q128 band ${parsed("128")} no longer covers the recorded post-rewrite quiet evidence [92,250]")
+    assert(parsed("128")._1 <= 92 && parsed("128")._2 >= 250 &&
+        parsed("128")._2 <= 300,
+      s"q128 band ${parsed("128")} no longer covers the recorded post-rewrite quiet evidence [92,250] within hi <= 300")
   }
 
   test("canary series turns a sustained window into a query-index span") {

@@ -219,4 +219,22 @@ class VersionedTableSpec extends SparkSpec {
     assert(errors.isEmpty, s"a commit failed: ${errors.peek()}")
     assert(Set(0L, 1L).contains(VersionedTable.latestVersion(r).get))
   }
+
+  test("listing and vacuuming versions close their directory streams") {
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fds), "needs Linux /proc")
+    def open(): Int = {
+      val ls = Files.list(fds)
+      try ls.count().toInt finally ls.close()
+    }
+    val r = root()
+    (0 to 3).foreach(i => VersionedTable.write(Seq((i.toLong, "v")).toDF("id", "v"), r))
+    val before = open()
+    (1 to 200).foreach(_ => assert(VersionedTable.versions(r) == Seq(0L, 1L, 2L, 3L)))
+    VersionedTable.vacuum(r)
+    assert(VersionedTable.versions(r) == Seq(3L))
+    // a small slack for descriptors other threads open meanwhile
+    val grown = open() - before
+    assert(grown <= 20, s"$grown file descriptors leaked")
+  }
 }

@@ -118,9 +118,11 @@ HAND = {
     # bands sit far above ANY legitimate post-change reading in both
     # directions. Lows anchor just under the post-change quiet minima
     # (closing run, canary host_windows: []); his at ~3x the post-change
-    # quiet maxima — wide enough for moderate steal, far below the
-    # pre-rewrite readings, so a true regression to the old plans
-    # FLAGS. q189/q199/q201 his close the r17 ADVICE item (lows were
+    # quiet maxima — wide enough for moderate steal. This narrows the
+    # bands but does NOT make a regression to the old plans flag: the
+    # outlier rule fires at 2*hi, above every pre-rewrite quiet reading
+    # (q128 hi=300 flags at >=600 cs vs 426-528). q189/q199/q201 his
+    # close the r17 ADVICE item (lows were
     # re-based in r17 off polluted upper bounds; two quiet rounds of
     # post-change evidence now exist: q189 1.44-2.27 s, q199 1.53-1.75,
     # q201 1.86-2.37). The regen that applied this ran
