@@ -446,37 +446,41 @@ object Dedup {
     * DuckDB oracles likewise share one `clusterCtes` banding fragment).
     */
   private[graft] def bandedKeys(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      shingleN: Int, idCol: String, textCol: String, outIdCol: String,
-      withHashes: Boolean = false): DataFrame = {
-    import graft.functions.TextExpressions
-    // `withHashes` (the dedup-index state shape) additionally carries each
-    // doc's DISTINCT shingle xxhash64 set as `hashes: array<long>`,
-    // materialized ONCE per doc on its band-0 row (a doc with any key has
-    // every band, so band 0 is a canonical representative) and null on the
-    // others — the persisted witness sets that let [[dedupIndexAddBatch]]
-    // verify jaccard by hash intersection without re-reading accepted text
-    // fused codegen kernel — value-identical to the former
-    // transform(array_distinct(shingles(text, n)), xxhash64) HOF chain,
-    // which evaluated interpreted (one boxed lambda call per shingle)
-    val hashesCol =
-      if (withHashes) TextExpressions.shingleHashes(col(textCol), shingleN)
-      else lit(null).cast("array<long>")
-    val banded = docs
-      .select(col(idCol).as(outIdCol),
-        TextExpressions.minhashSig(col(textCol), bands * rowsPerBand,
-          shingleN).as("__sig"),
-        hashesCol.as("__h"))
-      .select(col(outIdCol), explode(array(
-        (0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws("_", (0 until rowsPerBand)
-              .map(r => col("__sig").getItem(b * rowsPerBand + r)): _*)
-              .as("key"))
-        }: _*)).as("bk"), col("__h"))
-      .select(col(outIdCol), col("bk.band").as("band"),
-        col("bk.key").as("key"),
-        when(col("bk.band") === 0, col("__h")).as("hashes"))
-    if (withHashes) banded else banded.drop("hashes")
+      shingleN: Int, idCol: String, textCol: String, outIdCol: String)
+      : DataFrame =
+    bandRows(withBandKeys(docs.select(col(idCol).as(outIdCol),
+      col(textCol)), textCol, bands, rowsPerBand, shingleN).drop(textCol),
+      outIdCol, bands).drop("keys")
+
+  /** `docs` plus `keys`, each row's LSH band keys in band order: band b's
+    * key joins minhash signature entries b·rowsPerBand until
+    * (b+1)·rowsPerBand with "_". The signature is its own projection, so
+    * the kernel runs once per row.
+    */
+  private def withBandKeys(docs: DataFrame, textCol: String, bands: Int,
+      rowsPerBand: Int, shingleN: Int): DataFrame =
+    docs
+      .withColumn("__sig", graft.functions.TextExpressions.minhashSig(
+        col(textCol), bands * rowsPerBand, shingleN))
+      .withColumn("keys", array((0 until bands).map { b =>
+        concat_ws("_", (0 until rowsPerBand)
+          .map(r => col("__sig").getItem(b * rowsPerBand + r)): _*)
+      }: _*))
+      .drop("__sig")
+
+  /** One (band, key) row per entry of each row's `keys` array: (id,
+    * band, key, every other column). An `explode`, not a `posexplode`:
+    * the optimizer folds only the former over an empty relation.
+    */
+  private def bandRows(keyed: DataFrame, idCol: String, bands: Int)
+      : DataFrame = {
+    val rest = keyed.columns.toSeq.filter(_ != idCol).map(col)
+    keyed
+      .select(col(idCol) +: explode(array((0 until bands).map { b =>
+        struct(lit(b).as("band"), col("keys")(b).as("key"))
+      }: _*)).as("__bk") +: rest: _*)
+      .select(col(idCol) +: col("__bk.band").as("band") +:
+        col("__bk.key").as("key") +: rest: _*)
   }
 
   /** SimHash over token hashes: bit b of the signature is set when the sum
@@ -1794,8 +1798,34 @@ object Dedup {
   def dedupIndexKeys(docs: DataFrame, bands: Int = 4, rowsPerBand: Int = 2,
       shingleN: Int = 3, idCol: String = "doc_id", textCol: String = "text")
       : DataFrame =
-    bandedKeys(docs, bands, rowsPerBand, shingleN, idCol, textCol, idCol,
-      withHashes = true)
+    indexRows(witnessKeys(docs, bands, rowsPerBand, shingleN, idCol,
+      textCol), idCol)
+
+  /** A batch's band-key rows as the verdict needs them: (id, band, key,
+    * keys, hashes, text). Every band row carries the doc's `keys` (all
+    * its band keys, band order) and its `hashes` (distinct shingle
+    * xxhash64 set), so a candidate pair verifies without a lookup join;
+    * `text` rides on the band-0 row only (a doc always has every band,
+    * so band 0 is a canonical representative). The hashes come from one
+    * fused kernel, value-identical to
+    * `transform(array_distinct(shingles(text, n)), xxhash64)`.
+    */
+  private def witnessKeys(docs: DataFrame, bands: Int, rowsPerBand: Int,
+      shingleN: Int, idCol: String, textCol: String): DataFrame = {
+    val keyed = withBandKeys(docs.select(col(idCol), col(textCol)),
+      textCol, bands, rowsPerBand, shingleN)
+    bandRows(keyed.select(col(idCol), col("keys"),
+        graft.functions.TextExpressions.shingleHashes(col(textCol), shingleN)
+          .as("hashes"), col(textCol)),
+      idCol, bands)
+      .withColumn(textCol, when(col("band") === 0, col(textCol)))
+  }
+
+  /** Band-key rows in index-state shape: the witness set kept on the
+    * band-0 row only. */
+  private def indexRows(keys: DataFrame, idCol: String): DataFrame =
+    keys.select(col(idCol), col("band"), col("key"),
+      when(col("band") === 0, col("hashes")).as("hashes"))
 
   /** Online near-dup dedup — the incremental-maintenance member of the
     * dedup family (the inverted index and the ANN index have the same
@@ -1818,114 +1848,112 @@ object Dedup {
     *     c — documented over-drop, the price of a one-pass rule);
     *  3. survivors fold into the state: index ∪ bandKeys(accepted).
     *
-    * Scale shape: candidates come from band-key equi-joins (never
-    * all-pairs); only candidate-involved docs explode hashes for the
-    * verify (semi-join gated, as in [[decontaminateNearDup]]); the index
-    * is metadata-rows that a real deployment materializes between
-    * batches (the returned frames are plain DataFrames — persist them).
-    * The verify intersects the PERSISTED per-doc shingle-hash sets
-    * (`hashes` in the index state) — per-batch work is O(batch +
-    * candidates); accepted docs' TEXT is never read after their
-    * admission batch, so a 100 TB accepted corpus costs each batch only
-    * its band-key join, not a lake re-scan. Hash-set jaccard equals the
-    * string-exact jaccard up to 64-bit xxhash collisions (the
-    * plain-Scala string-exact replay in PropertySpec pins the equality).
+    * Scale shape (see [[dedupIndexVerdict]]): candidates come from
+    * band-key equi-joins (never all-pairs) and verify with one fused
+    * jaccard kernel on the PERSISTED per-doc shingle-hash sets, so
+    * per-batch work is O(batch + candidates) and accepted docs' TEXT is
+    * never read after their admission batch: a 100 TB accepted corpus
+    * costs each batch only its band-key join, not a lake re-scan.
+    * Hash-set jaccard equals the string-exact jaccard up to 64-bit
+    * xxhash collisions (the plain-Scala string-exact replay in
+    * PropertySpec pins the equality).
     *
     * Requires globally unique ids across the index and all batches.
-    * Returns (accepted batch docs, updated index keys).
+    * Returns (accepted batch docs, updated index keys), both LAZY over
+    * one verdict; persist them when both are consumed. The accepted
+    * frame is the batch's own rows, every column, whose id the verdict
+    * accepted.
     */
   def dedupIndexAddBatch(indexKeys: DataFrame, batch: DataFrame,
       threshold: Double = 0.3, bands: Int = 4,
       rowsPerBand: Int = 2, shingleN: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame) = {
-    val (accepted, batchKeys) = dedupIndexAddBatchParts(indexKeys, batch,
-      threshold, bands, rowsPerBand, shingleN, idCol, textCol)
-    // survivors fold into the state as their slice of the materialized
-    // batch keys — row-identical to a dedupIndexKeys(accepted) rebuild
-    // (accepted ⊆ batch by id and bandedKeys is per-row), minus the
-    // second minhash/shingle kernel pass over the accepted text
-    val newIndex = indexKeys.unionByName(
-      batchKeys.join(accepted.select(col(idCol)), Seq(idCol), "left_semi"))
-    (accepted, newIndex)
+    val (accepted, keys) = dedupIndexParts(dedupIndexVerdict(indexKeys,
+      batch, threshold, bands, rowsPerBand, shingleN, idCol, textCol),
+      idCol, textCol)
+    (batch.join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+      indexKeys.unionByName(keys))
   }
 
-  /** [[dedupIndexAddBatch]] with the batch's key state exposed: returns
-    * (accepted batch docs, the batch's full [[dedupIndexKeys]]-shaped
-    * frame, MATERIALIZED). ONE kernel pass over the batch text computes
-    * band keys and band-0 witness hash sets, `localCheckpoint`ed so
-    * candidate generation (three lineage uses: the index probe and both
-    * sides of the within-batch self-join), both verify sides, and the
-    * state fold read materialized rows instead of re-running the
-    * minhash/shingle kernels per lineage use — the round-17 profile
-    * measured the old hash-free-keys shape at ~6 kernel passes per
-    * batch, the dominant cost of the whole dedup-index family. Callers
-    * persisting per-batch state deltas (StreamingDedupIndex) semi-join
-    * this frame to the accepted ids instead of re-keying accepted text.
+  /** One batch's judgment against `indexKeys` (the rules of
+    * [[dedupIndexAddBatch]]), LAZY over ONE eager materialization of
+    * the batch's [[witnessKeys]]: one row per batch doc with its text,
+    * its witness `hashes`, its band `keys` (band order) and the
+    * `accepted` flag.
+    *
+    * Plan, in one exchange:
+    *  - the batch's key rows are the probe side of ONE band-key
+    *    equi-join against the index's and the batch's own key rows,
+    *    broadcast only when their observed count and estimated bytes
+    *    are within [[Sizing.broadcastIfFits]]'s caps (every key row
+    *    carries the doc's arrays, so rows alone do not bound it;
+    *    otherwise the planner decides);
+    *  - an index doc witnesses on any shared key and brings its
+    *    persisted band-0 witness set by id; a batch doc witnesses only
+    *    a larger id, with its set on every key row, and only on the
+    *    lowest band the pair shares, so each batch pair verifies once
+    *    with no distinct (an index pair verifies once per shared band);
+    *  - `jaccard_meets` is the fused threshold test (as a plain SQL
+    *    filter the optimizer would push `size(array_intersect)` into
+    *    the join condition and evaluate it three times per pair); null
+    *    or empty witness sets (null-text docs) never reject;
+    *  - the rejections and the batch's band-0 rows meet in ONE
+    *    aggregate on the doc id, so the flag, the text, the hashes and
+    *    the keys come out of one shuffle.
     */
-  private[graft] def dedupIndexAddBatchParts(indexKeys: DataFrame,
+  private[graft] def dedupIndexVerdict(indexKeys: DataFrame,
       batch: DataFrame, threshold: Double = 0.3, bands: Int = 4,
       rowsPerBand: Int = 2, shingleN: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text"): (DataFrame, DataFrame) = {
+      textCol: String = "text"): DataFrame = {
     require(threshold > 0, "dedupIndexAddBatch needs threshold > 0 — a " +
       "zero-overlap banded candidate produces no intersection row")
-    val batchKeys = bandedKeys(batch, bands, rowsPerBand, shingleN,
-      idCol, textCol, idCol, withHashes = true).localCheckpoint()
-    // ONE candidate join (r18 optimization): the index probe and the
-    // within-batch self-probe share the (band, key) equi-join, so a
-    // provenance tag on the witness side replaces the former two joins
-    // + union — rule 1 (the index always wins, whatever the ids) keeps
-    // every index match, rule 2 (drop-the-larger-id pair rule) keeps a
-    // within-batch witness only when its id is smaller. Each id lives
-    // on exactly one side (ids are globally unique), so the tagged
-    // union can never double-emit a pair; distinct() collapses the
-    // multi-band hits exactly as before.
-    val rights = indexKeys
+    val (keys, keyRows, keyBytes) = Sizing.materializeSized(witnessKeys(
+      batch, bands, rowsPerBand, shingleN, idCol, textCol))
+    val side = Sizing.broadcastIfFits(keys.select(col("band"), col("key"),
+      col(idCol).as("bid"), col("keys").as("__bk"),
+      col("hashes").as("__bh")), keyRows, keyBytes)
+    // one candidate join for both rules: index rows witness on any
+    // shared key, batch rows only a larger id, and only on the lowest
+    // band the two docs share, so a batch pair verifies once
+    val witnesses = indexKeys
       .select(col("band"), col("key"), col(idCol).as("aid"),
-        lit(true).as("__idx"))
-      .unionByName(batchKeys
-        .select(col("band"), col("key"), col(idCol).as("aid"),
-          lit(false).as("__idx")))
-    val cand = batchKeys
-      .select(col("band"), col("key"), col(idCol).as("bid"))
-      .join(rights, Seq("band", "key"))
-      .where(col("__idx") || col("aid") < col("bid"))
-      .select("bid", "aid").distinct()
-    // jaccard verify directly on the persisted band-0 witness ARRAYS
-    // (r18): join each candidate pair to its two hash sets and compare
-    // with one codegen array_intersect — value-identical to the former
-    // explode → (aid, sh) join → count aggregate → two size aggregates
-    // → two joins shape, at ~6 fewer exchanges per batch (the r18
-    // streaming profile measured the batch body as ~18 one-task AQE
-    // jobs at ~34 ms driver gap each; at corpus scale the removed
-    // aggregations were candidate-bounded but still full shuffle
-    // passes over the exploded hash rows). The sets are distinct by
-    // construction (shingleHashes), so |array_intersect| equals the
-    // old per-pair join count. An inter row existed only when the sets
-    // share ≥1 hash — hence the __i >= 1 guard, under which null/empty
-    // witness sets (null-text docs) can never reject, exactly like the
-    // former explode-of-null producing no rows. The index side still
-    // reads ONLY the persisted witness sets: accepted text is never
-    // touched, and the candidate-pair join is candidate-bounded like
-    // the semi-gated explode was.
-    val bh = batchKeys.where(col("band") === 0)
-      .select(col(idCol).as("bid"), col("hashes").as("__bh"))
-    val ah = indexKeys.where(col("band") === 0)
-      .select(col(idCol).as("aid"), col("hashes").as("__ah"))
-      .unionByName(batchKeys.where(col("band") === 0)
-        .select(col(idCol).as("aid"), col("hashes").as("__ah")))
-    // jaccard_meets is the fused form of `size(array_intersect) >= 1 &&
-    // size(array_intersect).cast(double) >= threshold * (size(a) +
-    // size(b) - size(array_intersect)).cast(double)` — as a plain SQL
-    // filter the optimizer pushes it into the join condition and
-    // re-evaluates the intersect for every reference (3× per pair, the
-    // top per-batch exec cost in the r18 profile); the kernel probes
-    // one hash set once (TextKernelsSpec pins value-equality)
-    val rejected = cand.join(bh, Seq("bid")).join(ah, Seq("aid"))
+        lit(null).cast("array<string>").as("__ak"),
+        lit(null).cast("array<long>").as("__ah"), lit(true).as("__idx"))
+      .unionByName(keys.select(col("band"), col("key"), col(idCol).as("aid"),
+        col("keys").as("__ak"), col("hashes").as("__ah"),
+        lit(false).as("__idx")))
+    val lowestShared = (0 until bands).map { b =>
+      lit(b) >= col("band") || col("__ak")(b) =!= col("__bk")(b)
+    }.reduce(_ && _)
+    val indexSets = indexKeys.where(col("band") === 0)
+      .select(col(idCol).as("aid"), col("hashes").as("__ih"))
+    val rejected = witnesses.join(side, Seq("band", "key"))
+      .where(col("__idx") || (col("aid") < col("bid") && lowestShared))
+      .join(indexSets, Seq("aid"), "left")
       .where(graft.functions.TextExpressions.jaccardMeets(
-        col("__bh"), col("__ah"), threshold))
-      .select(col("bid").as(idCol)).distinct()
-    val accepted = batch.join(rejected, Seq(idCol), "left_anti")
-    (accepted, batchKeys)
+        col("__bh"), coalesce(col("__ah"), col("__ih")), threshold))
+      .select(col("bid").as(idCol), lit(true).as("__rej"))
+    // each doc's one band-0 row is its payload; collect_list keeps the
+    // aggregate hash-based (an object buffer), where first() would sort
+    keys.where(col("band") === 0)
+      .select(col(idCol), struct(col(textCol), col("hashes"), col("keys"))
+        .as("__doc"), lit(false).as("__rej"))
+      .unionByName(rejected, allowMissingColumns = true)
+      .groupBy(idCol)
+      .agg(collect_list("__doc")(0).as("__doc"), max("__rej").as("__rej"))
+      .select(col(idCol), col("__doc")(textCol).as(textCol),
+        col("__doc.hashes").as("hashes"), col("__doc.keys").as("keys"),
+        (!col("__rej")).as("accepted"))
+  }
+
+  /** The accepted docs (id, text) and their index-state key rows, as two
+    * narrow projections of a [[dedupIndexVerdict]]. */
+  private[graft] def dedupIndexParts(verdict: DataFrame, idCol: String,
+      textCol: String): (DataFrame, DataFrame) = {
+    val ok = verdict.where(col("accepted"))
+    (ok.select(col(idCol), col(textCol)),
+      indexRows(ok.select(col(idCol),
+        posexplode(col("keys")).as(Seq("band", "key")), col("hashes")), idCol))
   }
 
   /** Unlearn docs from the dedup index (the GDPR-erasure path the

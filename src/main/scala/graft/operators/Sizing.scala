@@ -52,6 +52,31 @@ object Sizing {
     (done, rows.get("n").asInstanceOf[Long])
   }
 
+  /** [[materialize]] that also returns the rows' estimated bytes
+    * ([[approxRowBytes]]), observed in the same job: the input of
+    * [[broadcastIfFits]] for a frame whose rows carry arrays. Columns
+    * are measured positionally, as in [[fitsBroadcast]].
+    */
+  def materializeSized(df: DataFrame): (DataFrame, Long, Long) = {
+    val obs = Observation()
+    val safe = df.toDF(df.columns.indices.map(i => s"__c$i"): _*)
+    val done = safe.observe(obs, count(lit(1)).as("n"),
+      coalesce(sum(approxRowBytes(safe.schema)), lit(0L)).as("b"))
+      .localCheckpoint().toDF(df.columns: _*)
+    (done, obs.get("n").asInstanceOf[Long], obs.get("b").asInstanceOf[Long])
+  }
+
+  /** Hint `df` for broadcast when an OBSERVED size, `rows` rows and
+    * an estimated `bytes` (e.g. from [[materializeSized]] on the frame
+    * `df` projects), is within both [[DefaultBroadcastRows]] and
+    * [[DefaultBroadcastBytes]]; otherwise return it unhinted, so the
+    * planner decides by its own size estimate. No probe job runs.
+    */
+  def broadcastIfFits(df: DataFrame, rows: Long, bytes: Long): DataFrame =
+    if (rows <= DefaultBroadcastRows && bytes <= DefaultBroadcastBytes)
+      broadcast(df)
+    else df
+
   /** Schema-driven estimate of one row's in-memory bytes: variable-width
     * columns (strings, binary, arrays, maps, structs of them) measured per
     * row, fixed-width from the type's default size. Underestimates JVM

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Sizing}
 
 /** Streaming near-dup dedup — [[graft.operators.Dedup.dedupIndexAddBatch]]
   * applied per micro-batch, the streaming member of the dedup family
@@ -50,28 +50,26 @@ object StreamingDedupIndex {
 
   def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
-  private def addBatch(threshold: Double, idCol: String, textCol: String)
-      (keys: DataFrame, fresh: DataFrame): (DataFrame, DataFrame) =
-    Dedup.dedupIndexAddBatchParts(keys, fresh, threshold, idCol = idCol,
-      textCol = textCol)
-
-  /** One micro-batch's acceptance frame, LAZY — factored out of
+  /** One micro-batch's state delta, LAZY — factored out of
     * [[runAvailableNow]] so its executed plan can be audited (the
     * read-schema pin that accepted TEXT is never re-read: the only scan
     * of the accepted state is the id-column replay guard; the near-dup
     * verify runs on the keys state's persisted `hashes` sets). Returns
     * the accepted subset of `batch` judged against the committed state,
-    * the batch's materialized [[graft.operators.Dedup.dedupIndexKeys]]
-    * frame (slice it to accepted ids for the keys delta — no re-keying),
-    * and the state version it read.
+    * their [[graft.operators.Dedup.dedupIndexKeys]]-shaped key rows (the
+    * keys delta) and the state version it read. Both frames project one
+    * verdict, which [[runAvailableNow]] materializes before writing
+    * them.
     */
   def batchAccepted(spark: SparkSession, stateRoot: String, batch: DataFrame,
       threshold: Double = 0.3, idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame, Long) = {
-    val ((acc, batchKeys), v) = state(idCol, textCol).judge(spark,
-      stateRoot, batch.select(col(idCol), col(textCol)))(
-      addBatch(threshold, idCol, textCol))
-    (acc, batchKeys, v)
+    val ((acc, keys), v) = state(idCol, textCol).judge(spark,
+      stateRoot, batch.select(col(idCol), col(textCol))) { (k, b, unseen) =>
+      Dedup.dedupIndexParts(unseen(Dedup.dedupIndexVerdict(k, b, threshold,
+        idCol = idCol, textCol = textCol)), idCol, textCol)
+    }
+    (acc, keys, v)
   }
 
   /** Replay a parquet backlog with AvailableNow, one file per micro-batch
@@ -101,14 +99,11 @@ object StreamingDedupIndex {
   ): Unit =
     state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
         stateRoot, checkpointDir, maxFilesPerTrigger,
-        b => prepare(b).select(col(idCol), col(textCol))) { (keys, fresh) =>
-      val (acc, batchKeys) = addBatch(threshold, idCol, textCol)(keys, fresh)
-      // the accepted write computes the judgment ONCE; the keys delta is
-      // the batch's already-materialized key frame sliced to the ids just
-      // written (read back from the delta — the parquet IS the
-      // materialization), so accepted text is never re-keyed and no extra
-      // localCheckpoint pass runs
-      (acc, accepted => batchKeys.join(fresh.sparkSession.read
-        .parquet(accepted).select(col(idCol)), Seq(idCol), "left_semi"))
+        b => prepare(b).select(col(idCol), col(textCol))) { (k, b, unseen) =>
+      // both parts are narrow projections of ONE materialized verdict:
+      // no read-back of the accepted delta, no second pass over the batch
+      val (judged, _) = Sizing.materialize(unseen(Dedup.dedupIndexVerdict(k,
+        b, threshold, idCol = idCol, textCol = textCol)))
+      Dedup.dedupIndexParts(judged, idCol, textCol)
     }
 }

@@ -78,9 +78,7 @@ object StreamingFrameIndex {
   ): Unit =
     state.runAvailableNow(spark, sourceDir, schema, stateRoot,
         checkpointDir, maxFilesPerTrigger, Multimodal.fromDocuments) {
-      (digests, fresh) =>
-        val (stats, freshDigests) =
-          Multimodal.frameIndexAddBatch(digests, fresh, frameBytes)
-        (stats, _ => freshDigests)
+      (digests, batch, unseen) =>
+        Multimodal.frameIndexAddBatch(digests, unseen(batch), frameBytes)
     }
 }

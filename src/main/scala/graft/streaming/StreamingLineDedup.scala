@@ -76,11 +76,10 @@ object StreamingLineDedup {
   ): Unit =
     state(idCol, textCol, hashLines).runAvailableNow(spark, sourceDir,
         schema, stateRoot, checkpointDir, maxFilesPerTrigger,
-        _.select(col(idCol), col(textCol))) { (lines, fresh) =>
+        _.select(col(idCol), col(textCol))) { (lines, batch, unseen) =>
       // both writes read the ONE materialization lineIndexAddBatchParts
       // made of the probed batch
-      val (cleaned, freshLines) = Dedup.lineIndexAddBatchParts(
-        lines, fresh, idCol, textCol, sep, hashLines)
-      (cleaned, _ => freshLines)
+      Dedup.lineIndexAddBatchParts(lines, unseen(batch), idCol, textCol,
+        sep, hashLines)
     }
 }

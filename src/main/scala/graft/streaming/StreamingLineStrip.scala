@@ -73,9 +73,8 @@ object StreamingLineStrip {
   ): Unit =
     state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
         stateRoot, checkpointDir, maxFilesPerTrigger,
-        _.select(col(idCol), col(textCol))) { (counts, fresh) =>
-      val (cleaned, delta) = Dedup.lineCountAddBatch(
-        counts, fresh, minDocs, idCol, textCol, sep)
-      (cleaned, _ => delta)
+        _.select(col(idCol), col(textCol))) { (counts, batch, unseen) =>
+      Dedup.lineCountAddBatch(counts, unseen(batch), minDocs, idCol,
+        textCol, sep)
     }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
@@ -37,7 +38,9 @@ import graft.store.{Marker, UpsertWriter}
   *    replay), so the replay appends nothing — also for rows the
   *    family's own probe could never reject, such as null text, and
   *    without re-counting a replayed batch into a count index. The guard
-  *    prunes the output part to its id column.
+  *    prunes the output part to its id column. The runner hands it to
+  *    the family's step, which applies it once, before anything it
+  *    writes is derived: to the batch, or (dedup) to its verdict rows.
   */
 private[streaming] final case class VersionedStateRunner(
     output: (String, StructType),
@@ -67,38 +70,43 @@ private[streaming] final case class VersionedStateRunner(
         (empty(output), empty(index), 0L)
     }
 
-  /** `step` over the live index and `batch` minus the ids the output
-    * state already holds (the replay guard), LAZY, with the version read.
+  /** `step` over the live index, `batch` and the replay guard (drops the
+    * rows of an id-keyed frame whose id the output state holds), LAZY,
+    * with the version read.
     */
   def judge[A](spark: SparkSession, stateRoot: String, batch: DataFrame)
-      (step: (DataFrame, DataFrame) => A): (A, Long) = {
+      (step: (DataFrame, DataFrame, DataFrame => DataFrame) => A)
+      : (A, Long) = {
     val (out, idx, v) = read(spark, stateRoot)
-    (step(idx, batch.join(out.select(col(idCol)), Seq(idCol), "left_anti")),
-      v)
+    val seen = out.select(col(idCol))
+    (step(idx, batch, _.join(seen, Seq(idCol), "left_anti")), v)
   }
 
   /** Replay a parquet backlog with AvailableNow: per micro-batch,
     * `prepare` → [[judge]] → the output part (batch-stamped) → the index
     * part → `_current` LAST. `step` returns the batch's output rows and
-    * its index delta as a function of the output part's delta path, so a
-    * family may derive the index delta from the output as written
-    * instead of recomputing it.
+    * its index delta; a family that derives both from one judgment
+    * materializes it inside `step`, so each write reads it once. Each of
+    * the three steps runs under its own job description.
     */
   def runAvailableNow(spark: SparkSession, sourceDir: String,
       schema: StructType, stateRoot: String, checkpointDir: String,
       maxFilesPerTrigger: Int, prepare: DataFrame => DataFrame)
-      (step: (DataFrame, DataFrame) => (DataFrame, String => DataFrame))
+      (step: (DataFrame, DataFrame, DataFrame => DataFrame)
+        => (DataFrame, DataFrame))
       : Unit =
     StreamingUpsert.runBatches(spark, sourceDir, schema, checkpointDir,
         maxFilesPerTrigger) { batch =>
-      val ((rows, indexDelta), v) =
-        judge(batch.sparkSession, stateRoot, prepare(batch))(step)
+      val sc = batch.sparkSession.sparkContext
+      val ((rows, indexDelta), v) = described(sc, "judge")(
+        judge(batch.sparkSession, stateRoot, prepare(batch))(step))
       val next = v + 1
-      val outPath = s"$stateRoot/delta/d$next/${output._1}"
-      rows.withColumn("batch", lit(next))
-        .write.mode("overwrite").parquet(outPath)
-      indexDelta(outPath)
-        .write.mode("overwrite").parquet(s"$stateRoot/delta/d$next/${index._1}")
+      described(sc, s"output part ${output._1}")(
+        rows.withColumn("batch", lit(next)).write.mode("overwrite")
+          .parquet(s"$stateRoot/delta/d$next/${output._1}"))
+      described(sc, s"index part ${index._1}")(
+        indexDelta.write.mode("overwrite")
+          .parquet(s"$stateRoot/delta/d$next/${index._1}"))
       Marker.commit(stateRoot, "_current", next) // LAST: see the crash note
     }
 
@@ -124,6 +132,14 @@ private[streaming] final case class VersionedStateRunner(
 }
 
 private[streaming] object VersionedStateRunner {
+
+  /** Run `body` under job description `desc`, then restore the one the
+    * stream set for the batch. */
+  private def described[A](sc: SparkContext, desc: String)(body: => A): A = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
 
   private def subPaths(stateRoot: String, sub: String, v: Long)
       : Seq[String] = {

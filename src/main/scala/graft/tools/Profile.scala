@@ -16,8 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * delivered result, and a [[Profile.Recorder]] reports per run:
   *   - each Spark job's wall, tasks, executor time, shuffle and input
   *     bytes, and the driver gap (run wall minus the jobs' walls);
-  *   - each streaming query's lifetime (started to terminated) and every
-  *     micro-batch's `durationMs` split; the lifetime minus the summed
+  *   - each streaming query's lifetime (started to terminated), every
+  *     micro-batch's `durationMs` split and its Spark job count (jobs
+  *     grouped by the `streaming.sql.batchId` local property the stream
+  *     sets on each batch's jobs); the lifetime minus the summed
   *     `triggerExecution` is the per-query start/stop constant;
   *   - the distinct AQE-final plans of the SQL executions it ran,
   *     micro-batches included, read from Spark's SQL status store.
@@ -35,11 +37,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   */
 object Profile {
 
+  /** `batch` is the (query id, batch id) a micro-batch job ran for. */
   final case class Job(id: Int, desc: String, wallMs: Long, tasks: Long,
-      execMs: Long, shuffleWrite: Long, shuffleRead: Long, input: Long)
+      execMs: Long, shuffleWrite: Long, shuffleRead: Long, input: Long,
+      batch: Option[(String, Long)])
   final case class Batch(batchId: Long, durationMs: Map[String, Long])
   final case class StreamRun(name: String, lifetimeMs: Long,
-      batches: Seq[Batch]) {
+      batches: Seq[Batch], jobsPerBatch: Map[Long, Int]) {
     def constantMs: Long =
       lifetimeMs - batches.map(_.durationMs.getOrElse("triggerExecution", 0L)).sum
   }
@@ -78,12 +82,16 @@ object Profile {
     */
   final class Recorder(spark: SparkSession) extends AutoCloseable {
     private val sc = spark.sparkContext
-    private val jobStart = mutable.Map[Int, (Long, String)]()
+    // per job: start, description, (query id, batch id) of a micro-batch
+    private val jobStart =
+      mutable.Map[Int, (Long, String, Option[(String, Long)])]()
     private val jobEnd = mutable.Map[Int, Long]()
     private val jobOfStage = mutable.Map[Int, Int]()
     // per job: tasks, executor ms, shuffle write, shuffle read, input
     private val totals = mutable.Map[Int, Array[Long]]()
-    private val streamStart = mutable.LinkedHashMap[UUID, (String, Long)]()
+    // by run id: name, query id, start
+    private val streamStart =
+      mutable.LinkedHashMap[UUID, (String, String, Long)]()
     private val streamEnd = mutable.Map[UUID, Long]()
     private val batches = mutable.ArrayBuffer[(UUID, Batch)]()
 
@@ -93,7 +101,11 @@ object Profile {
         val desc = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
-        jobStart(e.jobId) = (System.nanoTime(), desc.getOrElse(""))
+        val batch = for (p <- Option(e.properties);
+             q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          yield (q, b.toLong)
+        jobStart(e.jobId) = (System.nanoTime(), desc.getOrElse(""), batch)
         e.stageIds.foreach(jobOfStage(_) = e.jobId)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -114,8 +126,8 @@ object Profile {
     private val streams = new StreamingQueryListener {
       // delivered synchronously inside start(), so the time is exact
       override def onQueryStarted(e: QueryStartedEvent): Unit = locked {
-        streamStart(e.runId) =
-          (Option(e.name).getOrElse(e.id.toString), System.nanoTime())
+        streamStart(e.runId) = (Option(e.name).getOrElse(e.id.toString),
+          e.id.toString, System.nanoTime())
       }
       override def onQueryProgress(e: QueryProgressEvent): Unit = locked {
         val p = e.progress
@@ -160,14 +172,16 @@ object Profile {
       val wallNs = System.nanoTime() - t0
       drain()
       val run = locked {
-        val js = jobStart.toSeq.sortBy(_._1).map { case (id, (t, desc)) =>
+        val js = jobStart.toSeq.sortBy(_._1).map { case (id, (t, desc, b)) =>
           val x = totals.getOrElse(id, new Array[Long](5))
           Job(id, desc, jobEnd.get(id).fold(-1L)(e => (e - t) / 1000000L),
-            x(0), x(1), x(2), x(3), x(4))
+            x(0), x(1), x(2), x(3), x(4), b)
         }
-        val ss = streamStart.toSeq.map { case (id, (name, t)) =>
+        val ss = streamStart.toSeq.map { case (id, (name, query, t)) =>
           StreamRun(name, streamEnd.get(id).fold(-1L)(e => (e - t) / 1000000L),
-            batches.collect { case (`id`, b) => b }.toSeq)
+            batches.collect { case (`id`, b) => b }.toSeq,
+            js.flatMap(_.batch).collect { case (`query`, b) => b }
+              .groupBy(identity).view.mapValues(_.size).toMap)
         }
         Run(wallNs, js, ss, executions(before))
       }
@@ -211,7 +225,9 @@ object Profile {
     }
     r.streams.foreach { s =>
       println(s"[profile]   stream ${s.name} lifetime=${s.lifetimeMs} ms " +
-        s"batches=${s.batches.length} constant=${s.constantMs} ms")
+        s"batches=${s.batches.length} constant=${s.constantMs} ms " +
+        "jobs/batch=" + s.jobsPerBatch.toSeq.sorted
+          .map { case (b, n) => s"$b:$n" }.mkString(" "))
       s.batches.foreach { b =>
         println(s"[profile]     batch ${b.batchId} " + b.durationMs.toSeq
           .sortBy(-_._2).map { case (k, v) => s"$k=$v" }.mkString(" "))

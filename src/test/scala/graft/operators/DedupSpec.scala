@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.{col, size, when, xxhash64}
+
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
@@ -572,6 +574,76 @@ class DedupSpec extends SparkSpec {
     // replaying the same batch against the grown index rejects everything
     val (a3, _) = Dedup.dedupIndexAddBatch(idx2, b2)
     assert(ids(a3) == Set.empty[Long])
+  }
+
+  test("dedupIndexAddBatch keeps the pair rule on every witness shape") {
+    def words(p: String, from: Int, to: Int) =
+      (from to to).map(i => s"$p$i").mkString(" ")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().toSet
+    val index = Dedup.dedupIndexKeys(
+      Seq((5L, words("x", 1, 30))).toDF("doc_id", "text"))
+    val batch = Seq(
+      // 1 and 2 are one text: they collide in all 4 bands, 1 survives
+      (1L, words("p", 1, 30)), (2L, words("p", 1, 30)),
+      // 30 verifies against index doc 5 AND batch doc 25; 25 against 5
+      (25L, words("x", 1, 29) + " y1"), (30L, words("x", 1, 29) + " y2"),
+      // a chain: 40~41 and 41~42 verify, 40~42 is below the threshold;
+      // the pair rule drops both 41 and 42
+      (40L, words("b", 1, 30)), (41L, words("b", 7, 36)),
+      (42L, words("b", 19, 48)),
+      (50L, null.asInstanceOf[String]), (60L, words("z", 1, 12)))
+      .toDF("doc_id", "text")
+    val (acc, next) = Dedup.dedupIndexAddBatch(index, batch)
+    assert(acc.as[(Long, String)].collect().toSet == Set(
+      (1L, words("p", 1, 30)), (40L, words("b", 1, 30)),
+      (50L, null.asInstanceOf[String]), (60L, words("z", 1, 12))))
+    // the keys delta as literals: (id, band, key, xxhash64 and size of
+    // the band-0 witness set)
+    val delta = next.where(col("doc_id") =!= 5L)
+      .select(col("doc_id"), col("band"), col("key"),
+        when(col("hashes").isNotNull, xxhash64(col("hashes"))),
+        size(col("hashes")))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
+        Option(r.get(3)), Option(r.get(4)).filter(_ != -1))).toSet
+    assert(delta == Set(
+      (1L, 0, "104374189_55239935", Some(-637290922256416945L), Some(28)),
+      (1L, 1, "6105681_55240102", None, None),
+      (1L, 2, "54825511_34740234", None, None),
+      (1L, 3, "50812382_46423711", None, None),
+      (40L, 0, "69288650_80182917", Some(210813904814880411L), Some(28)),
+      (40L, 1, "70233997_96802861", None, None),
+      (40L, 2, "21367118_19648644", None, None),
+      (40L, 3, "163788281_4302589", None, None),
+      (50L, 0, "", None, None), (50L, 1, "", None, None),
+      (50L, 2, "", None, None), (50L, 3, "", None, None),
+      (60L, 0, "4598879_367170229", Some(-1259092418789878242L), Some(10)),
+      (60L, 1, "448412665_48562792", None, None),
+      (60L, 2, "370801994_15670843", None, None),
+      (60L, 3, "32543332_395114682", None, None)))
+    // doc 30 has each witness on its own: the index alone rejects it,
+    // and so does batch doc 25 alone
+    assert(!ids(Dedup.dedupIndexAddBatch(index,
+      batch.where(col("doc_id") =!= 25L))._1).contains(30L))
+    val none = Dedup.dedupIndexKeys(Seq.empty[(Long, String)]
+      .toDF("doc_id", "text"))
+    assert(ids(Dedup.dedupIndexAddBatch(none, batch)._1)
+      == Set(1L, 25L, 40L, 50L, 60L))
+  }
+
+  test("dedupIndexAddBatch returns the accepted batch rows whole") {
+    val dup = "the quick brown fox jumps over the lazy dog again and again"
+    val batch = Seq((7L, dup, 0.5, "a"), (8L, dup, 1.5, "b"),
+      (9L, "entirely different words no neighbor shares", 2.5, "c"))
+      .toDF("doc_id", "text", "amp", "tag")
+    val none = Dedup.dedupIndexKeys(Seq.empty[(Long, String)]
+      .toDF("doc_id", "text"))
+    val (acc, _) = Dedup.dedupIndexAddBatch(none, batch)
+    // every batch column, in the batch's order, with the batch's values
+    assert(acc.columns.toSeq == batch.columns.toSeq)
+    assert(acc.as[(Long, String, Double, String)].collect().toSet == Set(
+      (7L, dup, 0.5, "a"),
+      (9L, "entirely different words no neighbor shares", 2.5, "c")))
   }
 
   test("dedupIndexRemove unlearns; re-arrivals judge against what remains") {

@@ -45,6 +45,30 @@ class SizingSpec extends SparkSpec {
     assert(z == 0L && noRows.columns.toSeq == Seq("id", "v"))
   }
 
+  test("materializeSized measures array rows; a wide-row frame over the " +
+      "byte cap is left unhinted") {
+    def hinted(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }.nonEmpty
+    // key-frame-shaped rows: every row carries a 2000-hash witness set
+    val wide = spark.range(0, 8).select($"id".as("k.id"),
+      array_repeat($"id", 2000).as("hashes"), lit("t").as("text"))
+    val (rows, n, bytes) = Sizing.materializeSized(wide)
+    assert(n == 8L && rows.columns.toSeq == wide.columns.toSeq)
+    assert(bytes >= 8L * 2000 * 8)
+    assert(hinted(Sizing.broadcastIfFits(rows, n, bytes)))
+    // far under the row cap, but as many such rows as overflow the byte
+    // cap: no hint, whatever the row count says
+    val over = Sizing.DefaultBroadcastBytes / (bytes / n) + 1
+    assert(over < Sizing.DefaultBroadcastRows)
+    assert(!hinted(Sizing.broadcastIfFits(rows, over, over * (bytes / n))))
+    assert(!hinted(Sizing.broadcastIfFits(rows,
+      Sizing.DefaultBroadcastRows + 1, bytes)))
+    val (none, zero, noBytes) = Sizing.materializeSized(wide.where(lit(false)))
+    assert(zero == 0L && noBytes == 0L && none.isEmpty)
+  }
+
   test("fanOut raises an under-partitioned narrow frame to the session " +
       "parallelism and leaves everything else untouched") {
     val target = spark.sparkContext.defaultParallelism

@@ -127,6 +127,27 @@ class StreamingDedupIndexSpec extends SparkSpec {
     assert(accepted(s"$root/state") == before)
   }
 
+  test("a micro-batch runs in at most 8 Spark jobs") {
+    val root = Files.createTempDirectory("graft_sdi_jobs_").toString
+    val src = SparkEntry.slicedBacklog(spark, root, Seq(
+      Seq((10L, dup), (20L, dup), (30L, "some clean unrelated words here")),
+      Seq((5L, dup), (40L, "entirely novel content for batch two")),
+      Seq((50L, dup + " again"), (60L, null.asInstanceOf[String])))
+      .map(_.toDF("doc_id", "text")))._1
+    val schema = spark.read.parquet(src).schema
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val run = try rec.record(StreamingDedupIndex.runAvailableNow(spark, src,
+      schema, s"$root/state", s"$root/ckpt"))._2 finally rec.close()
+    // the batch's key-frame checkpoint; the verdict's three broadcasts
+    // (replay guard, batch probe, index witness sets), its exchange and
+    // its checkpoint; the two part writes
+    val perBatch = run.streams.flatMap(_.jobsPerBatch)
+    assert(perBatch.size == 3, run.jobs)
+    assert(perBatch.forall(_._2 <= 8), perBatch.sorted)
+    assert(accepted(s"$root/state") == Map(10L -> 1L, 30L -> 1L, 40L -> 2L,
+      60L -> 3L))
+  }
+
   test("readState trusts the marker, not stray version directories") {
     val root = Files.createTempDirectory("graft_sdi3_").toString
     val src = writeBacklog(root)
