@@ -88,9 +88,8 @@ object Flow {
     }
 
     // symbol universe: distinct-collect from the lake (extract.py:80-99)
-    val universe = spark.read.parquet(symbolsPath)
-      .select("symbol").distinct().orderBy("symbol")
-      .collect().map(_.getString(0)).toSeq
+    val universe =
+      Extract.symbolUniverse(spark, lakeRoot, "symbols", assetCategory)
 
     // chunked price ETL with PK merge (orchestration.py:56-108)
     val pricesPath = s"$lakeRoot/price_history/$assetCategory"

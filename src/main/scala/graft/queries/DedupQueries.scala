@@ -1003,10 +1003,10 @@ private[graft] object DedupQueries {
           java.nio.file.attribute.FileTime.fromMillis(1000000001000L))
         withShufflePartitions(s, 2) {
           graft.streaming.StreamingNearDup.runAvailableNow(
-            s, src.toString, docs.schema,
-            s"$root/table", s"$root/hist", s"$root/ckpt")
+            s, src.toString, docs.schema, s"$root/state", s"$root/ckpt")
         }
-        s.read.parquet(s"$root/table")
+        graft.streaming.StreamingNearDup
+          .readState(s, s"$root/state", docs.schema)._1
           .select("doc_id", "lang").orderBy("doc_id")
       },
       {

@@ -70,7 +70,7 @@ object UpsertWriter {
     val (delta, rows) = graft.operators.Sizing.materialize(dedupedUpdates)
     val updatesSide =
       if (rows <= broadcastThresholdRows) broadcast(delta) else delta
-    val survivors = existing.join(updatesSide, pk, "left_anti")
+    val survivors = antiJoin(existing, updatesSide, pk)
     // schema evolution: with allowNewColumns a delta may carry columns the
     // table lacks (and vice versa) — surviving rows get typed nulls for the
     // new columns, the table schema widens on this write. Default is
@@ -116,11 +116,19 @@ object UpsertWriter {
     // be byte-heavy under the row cap
     val keysSide = graft.operators.Sizing
       .maybeBroadcast(keySet, broadcastThresholdRows)
-    // the using-join hoists key columns to the front — restore the
-    // table's own column order so a delete never changes its schema
-    target.join(keysSide, keyCols, "left_anti")
-      .select(target.columns.map(col): _*)
+    antiJoin(target, keysSide, keyCols)
   }
+
+  /** The rows of `target` whose `keyCols` tuple is not in `keys`, in
+    * `target`'s own column order — the one anti-join every merge and
+    * delete here goes through. A using-column join hoists the key
+    * columns to the front, and a `unionByName` after it keeps that
+    * order, so without the projection a merge would reorder the table.
+    */
+  private[graft] def antiJoin(target: DataFrame, keys: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    target.join(keys, keyCols, "left_anti")
+      .select(target.columns.map(col): _*)
 
   /** Partition-scoped deletion — the 100 TB path, mirroring
     * [[upsertPartitioned]]: only partitions that actually contain doomed
@@ -149,8 +157,7 @@ object UpsertWriter {
     if (touched.isEmpty) return
     val pruned = spark.read.parquet(path)
       .where(col(partitionCol).isin(touched: _*)) // partition-pruned
-    val survivors = pruned.join(broadcast(keySet), keyCols, "left_anti")
-      .select(pruned.columns.map(col): _*)
+    val survivors = antiJoin(pruned, broadcast(keySet), keyCols)
     // dynamic overwrite only replaces partitions PRESENT in the staged
     // data — a partition the delete fully emptied writes no rows, so its
     // stale files must be dropped explicitly afterwards. Computed BEFORE
@@ -267,8 +274,7 @@ object UpsertWriter {
       .map(_.get(0)).toSeq
     val existing = spark.read.parquet(path)
       .where(col(partitionCol).isin(touched: _*)) // partition-pruned
-    val merged = existing.join(broadcast(dedup), pk, "left_anti")
-      .unionByName(dedup)
+    val merged = antiJoin(existing, broadcast(dedup), pk).unionByName(dedup)
     val staging = Files.createTempDirectory("graft_upsert_stage_").toString + "/s"
     merged.write.partitionBy(partitionCol).parquet(staging)
     spark.read.parquet(staging)
@@ -284,6 +290,6 @@ object UpsertWriter {
     */
   def mergePlan(target: DataFrame, updates: DataFrame, pk: Seq[String]): DataFrame = {
     val dedup = updates.dropDuplicates(pk)
-    target.join(broadcast(dedup), pk, "left_anti").unionByName(dedup)
+    antiJoin(target, broadcast(dedup), pk).unionByName(dedup)
   }
 }

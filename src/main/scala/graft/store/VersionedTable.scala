@@ -63,9 +63,8 @@ object VersionedTable {
   def delete(spark: SparkSession, root: String, keys: DataFrame,
       pk: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
-    write(read(spark, root)
-      .join(keys.select(pk.map(col): _*).dropDuplicates(pk), pk, "left_anti"),
-      root)
+    write(UpsertWriter.antiJoin(read(spark, root),
+      keys.select(pk.map(col): _*).dropDuplicates(pk), pk), root)
   }
 
   /** Read the latest snapshot, or `asOf` a specific version (time travel). */

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Custom-state streaming sessionization with
@@ -53,7 +53,8 @@ object StatefulSessionize {
   }
 
   /** Replay a parquet backlog through the stateful sessionizer with
-    * AvailableNow, appending sessionized events to `targetPath`. With
+    * AvailableNow, appending sessionized events to `targetPath` through
+    * the parquet file sink (a replayed batch writes nothing). With
     * `maxFilesPerTrigger=1` each file is its own micro-batch, so sessions
     * provably span batch boundaries via the state store.
     */
@@ -69,11 +70,7 @@ object StatefulSessionize {
       maxFilesPerTrigger: Int = 1,
   ): Unit = {
     import spark.implicits._
-    val (src, base) = StreamingUpsert.globAndBase(sourceDir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
+    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
     // epoch-µs from whatever physical shape the parquet carries: raw
     // INT64 nanos divide straight down; timestamp variants normalize via
     // the shared session-TZ rule first (see StreamingUpsert.eventTime)
@@ -84,16 +81,7 @@ object StatefulSessionize {
     val typed = raw.select(
       col(keyCol).cast("long").as("user_id"),
       tsUs.as("ts_us")).as[Ev]
-    val query = sessionizeTyped(typed, gapSeconds)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[SessionedEv], _: Long) =>
-          batch.write.mode("append").parquet(targetPath)
-      }
-      .start()
-    query.awaitTermination()
+    Backlog.toFiles(sessionizeTyped(typed, gapSeconds), targetPath,
+      checkpointDir)
   }
 }

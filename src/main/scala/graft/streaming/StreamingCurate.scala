@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Classify, Scrub}
@@ -38,11 +37,7 @@ object StreamingCurate {
       maxFilesPerTrigger: Int = 1,
       textCol: String = "text",
   ): Unit = {
-    val (src, base) = StreamingUpsert.globAndBase(sourceDir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
+    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
     // stream-static BROADCAST CROSS JOIN with the 1-row static model
     // (Classify.scoreByModel issues docs.crossJoin(broadcast(model)) —
     // stream-static cross joins are supported, and against a broadcast
@@ -57,13 +52,6 @@ object StreamingCurate {
       md5(col(textCol)).as("redacted_md5"),
       col("margin").cast("long").as("margin"),
       col("quality_pred"))
-    val query = curated.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", targetPath)
-      .format("parquet")
-      .start()
-    query.awaitTermination()
+    Backlog.toFiles(curated, targetPath, checkpointDir)
   }
 }

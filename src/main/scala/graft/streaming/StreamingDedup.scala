@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Streaming exact deduplication: `dropDuplicates(keys)` on an unbounded
@@ -14,6 +13,10 @@ import org.apache.spark.sql.types.StructType
   * bounded backlog replay, as here); a live deployment passes
   * `withWatermarkCol`/`delay` so state for old event-times is evicted —
   * Spark then guarantees dedup only within the watermark horizon.
+  *
+  * Output goes through the parquet file sink ([[Backlog.toFiles]]): its
+  * `_spark_metadata` log commits each batch's files under the batch id,
+  * so a batch replayed after a crash writes nothing new.
   */
 object StreamingDedup {
 
@@ -28,21 +31,8 @@ object StreamingDedup {
       withWatermarkCol: Option[String] = None,
       delay: String = "1 hour",
   ): Unit = {
-    val (src, base) = StreamingUpsert.globAndBase(sourceDir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
+    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
     val withWm = withWatermarkCol.fold(raw)(c => raw.withWatermark(c, delay))
-    val deduped = withWm.dropDuplicates(keys)
-    val query = deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(targetPath)
-      }
-      .start()
-    query.awaitTermination()
+    Backlog.toFiles(withWm.dropDuplicates(keys), targetPath, checkpointDir)
   }
 }

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Sizing}
+import graft.store.UpsertWriter
 
 /** Incremental NEAR-duplicate dedup of a document stream — the
   * daily-crawl-increment shape of a continuously-ingesting training-data
@@ -19,72 +17,62 @@ import graft.operators.Dedup
   * "occupies" its keys, so the filter is "have I seen anything like this
   * before", not "is a surviving representative similar".
   *
-  * Scale shape: history grows as bands×docs small fixed-width rows,
-  * partitioned by (band, key) on disk at scale; the per-batch work is one
-  * semi join against it — the same linear candidate profile as
-  * [[Dedup.minhashLshPairs]]. The append sink shares
-  * [[StreamingDedup]]'s replay caveat (retries may duplicate appends; a
-  * PK-merge sink upgrades it to exactly-once).
+  * State: the [[VersionedStateRunner]] layout keyed by `doc_id` — batch
+  * N writes its accepted docs (every source column, batch-stamped) to
+  * `delta/d<N>/accepted` and every batch doc's band keys to
+  * `delta/d<N>/keys`, `_current` last. A batch replayed after its
+  * marker landed finds every one of its ids in the key history and
+  * judges nothing.
+  *
+  * Scale shape: the key history grows as bands×docs small fixed-width
+  * rows; the per-batch work is one semi join against it — the same
+  * linear candidate profile as [[Dedup.minhashLshPairs]].
   */
 object StreamingNearDup {
 
-  private val bandSchema = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("band", IntegerType, nullable = false),
-    StructField("key", StringType, nullable = true),
-  ))
+  private def state(schema: StructType) = VersionedStateRunner(
+    "accepted" -> schema.add(StructField("batch", LongType)),
+    "keys" -> StructType(Seq(StructField("doc_id", LongType),
+      StructField("band", IntegerType), StructField("key", StringType))),
+    "doc_id")
 
-  private[streaming] def bandKeys(docs: DataFrame, bands: Int,
-      rowsPerBand: Int, shingleN: Int): DataFrame = {
-    val sig = Dedup.minhashSignature(docs, bands * rowsPerBand, shingleN)
-    sig.select(col("doc_id"), explode(array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("_", (0 until rowsPerBand)
-          .map(r => col(s"mh${b * rowsPerBand + r}")): _*).as("key"))
-    }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.key"))
-  }
+  /** The live accepted docs (each source `schema` column plus its
+    * acceptance batch), the band-key history and the committed version
+    * (see [[VersionedStateRunner.read]]); empty before the first batch.
+    */
+  def readState(spark: SparkSession, stateRoot: String, schema: StructType)
+      : (DataFrame, DataFrame, Long) =
+    state(schema).read(spark, stateRoot)
 
   def runAvailableNow(
       spark: SparkSession,
       sourceDir: String,
       schema: StructType,
-      targetPath: String,
-      historyPath: String,
+      stateRoot: String,
       checkpointDir: String,
       bands: Int = 4,
       rowsPerBand: Int = 2,
       shingleN: Int = 3,
       maxFilesPerTrigger: Int = 1,
-  ): Unit = {
-    val (src, base) = StreamingUpsert.globAndBase(sourceDir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val banded = bandKeys(batch, bands, rowsPerBand, shingleN)
-        val hist =
-          if (Files.exists(Paths.get(historyPath))) s.read.parquet(historyPath)
-          else s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], bandSchema)
-        val rejectHist = banded
-          .join(hist.select("band", "key"), Seq("band", "key"), "left_semi")
-          .select("doc_id")
-        val rejectLocal = banded
-          .join(banded.toDF("other_id", "band", "key"), Seq("band", "key"))
-          .where(col("other_id") < col("doc_id"))
-          .select("doc_id")
-        val rejected = rejectHist.union(rejectLocal).distinct()
-        batch.join(rejected, Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(targetPath)
-        banded.write.mode("append").parquet(historyPath)
-      }
-      .start()
-    query.awaitTermination()
-  }
+  ): Unit =
+    state(schema).runAvailableNow(spark, sourceDir, schema, stateRoot,
+        checkpointDir, maxFilesPerTrigger, identity) { (hist, batch, _) =>
+      // the replay guard runs on the HISTORY's ids, a superset of the
+      // accepted ones (every judged doc's keys land there): a replayed
+      // batch then re-adds no keys for the docs it rejected, either
+      val docs = UpsertWriter.antiJoin(batch, hist.select("doc_id"),
+        Seq("doc_id"))
+      // the keys feed both probes and the index part: banded once
+      val (banded, _) = Sizing.materialize(Dedup.bandedKeys(docs, bands,
+        rowsPerBand, shingleN, "doc_id", "text", "doc_id"))
+      val rejectHist = banded
+        .join(hist.select("band", "key"), Seq("band", "key"), "left_semi")
+        .select("doc_id")
+      val rejectLocal = banded
+        .join(banded.toDF("other_id", "band", "key"), Seq("band", "key"))
+        .where(col("other_id") < col("doc_id"))
+        .select("doc_id")
+      val rejected = rejectHist.union(rejectLocal).distinct()
+      (UpsertWriter.antiJoin(docs, rejected, Seq("doc_id")), banded)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming sequence packing — the stateful streaming twin of
@@ -197,24 +197,12 @@ object StreamingPack {
       prepare: DataFrame => DataFrame = identity,
   ): Unit = {
     import spark.implicits._
-    val (src, base) = StreamingUpsert.globAndBase(sourceDir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
+    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
     val typed = prepare(raw)
       .select(guarded("shard", "string"), guarded("doc_id", "long"),
         guarded("n_tokens", "long"))
       .as[PackDocIn]
-    val query = packTyped(typed, tokenBudget)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", targetPath)
-      .format("parquet")
-      .start()
-    query.awaitTermination()
+    Backlog.toFiles(packTyped(typed, tokenBudget), targetPath, checkpointDir)
   }
 
   /** [[materializeTyped]]'s backlog runner: `prepare` must yield
@@ -234,23 +222,12 @@ object StreamingPack {
       prepare: DataFrame => DataFrame = identity,
   ): Unit = {
     import spark.implicits._
-    val (src, base) = StreamingUpsert.globAndBase(sourceDir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
+    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
     val typed = prepare(raw)
       .select(guarded("shard", "string"), guarded("doc_id", "long"),
         guarded("ids", "array<int>"))
       .as[PackDocIds]
-    val query = materializeTyped(typed, tokenBudget)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", targetPath)
-      .format("parquet")
-      .start()
-    query.awaitTermination()
+    Backlog.toFiles(materializeTyped(typed, tokenBudget), targetPath,
+      checkpointDir)
   }
 }

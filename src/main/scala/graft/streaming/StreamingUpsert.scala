@@ -2,14 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 import graft.store.{Marker, UpsertWriter}
 
 /** Structured-Streaming ingestion with exactly-once PK merge — the
   * idiomatic Spark upgrade of the reference's cron-batch incremental loads
-  * (SURVEY.md §2.11): file-source stream → `Trigger.AvailableNow` →
+  * (SURVEY.md §2.11): file-source stream → the AvailableNow trigger →
   * `foreachBatch` running the same [[UpsertWriter]] merge the batch path
   * uses. PK dedup in the sink IS the late/duplicate-data strategy, exactly
   * like the reference's re-run-and-merge semantics (e2e_test.py:246-291) —
@@ -17,42 +16,6 @@ import graft.store.{Marker, UpsertWriter}
   * aggregations.
   */
 object StreamingUpsert {
-
-  /** The file-stream source force-sets basePath to the raw path unless it
-    * is a glob — and a file basePath is rejected. For a single parquet file,
-    * turn the filename into an exact-match glob ([e]vents.parquet) and
-    * anchor basePath at the parent directory.
-    */
-  private[streaming] def globAndBase(sourcePath: String): (String, String) = {
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    if (sourcePath.endsWith(".parquet")) {
-      val n = p.getName
-      (new org.apache.hadoop.fs.Path(
-        p.getParent, s"[${n.head}]${n.tail}").toString, p.getParent.toString)
-    } else (sourcePath, sourcePath)
-  }
-
-  /** Shared plumbing for the foreachBatch sinks: file-source stream over
-    * the backlog → `Trigger.AvailableNow` → `sink` per micro-batch, with
-    * checkpointed exactly-once progress. One implementation so a source
-    * or trigger fix can never reach one sink and miss the other.
-    */
-  private[streaming] def runBatches(spark: SparkSession, sourceDir: String,
-      schema: StructType, checkpointDir: String, maxFilesPerTrigger: Int)
-      (sink: DataFrame => Unit): Unit = {
-    val (src, base) = globAndBase(sourceDir)
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", base)
-      .parquet(src)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
-      .start()
-    query.awaitTermination()
-  }
 
   /** Stream every file under `sourceDir` into a PK-merged parquet table at
     * `targetPath`. AvailableNow processes the current backlog then stops —
@@ -69,7 +32,8 @@ object StreamingUpsert {
       pk: Seq[String],
       maxFilesPerTrigger: Int = 1000,
   ): Unit =
-    runBatches(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
+        Some(maxFilesPerTrigger)), checkpointDir) {
       batch => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
     }
 
@@ -99,7 +63,8 @@ object StreamingUpsert {
       pk: Seq[String],
       maxFilesPerTrigger: Int = 1,
   ): Unit =
-    runBatches(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
+        Some(maxFilesPerTrigger)), checkpointDir) {
       batch => graft.store.VersionedTable.upsert(
         batch.sparkSession, tableRoot, batch, pk): Unit
     }
@@ -141,7 +106,8 @@ object StreamingUpsert {
   ): Unit = {
     require(pk.length == 1,
       "runVersionedWithAnnIndex: pk must be the single vector-id column")
-    runBatches(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
+        Some(maxFilesPerTrigger)), checkpointDir) {
       batch =>
         val s = batch.sparkSession
         val before = graft.store.VersionedTable.latestVersion(tableRoot)
@@ -210,13 +176,6 @@ object StreamingUpsert {
     }
   }
 
-  /** Windowed streaming aggregation with a watermark — the standard
-    * late-data-bounded shape (10-minute windows, `lateness` allowed).
-    * Returns the streaming DataFrame for the caller to sink.
-    *
-    * sum accumulates in decimal so the result is order-independent and
-    * exact — a double sum would vary with micro-batch boundaries.
-    */
   /** Event-time normalization for a column read straight off parquet —
     * branch on the READ schema so every testdata era works without flags:
     * INT64 raw nanos (legacy `nanosAsLong` era) → µs timestamp;
@@ -231,6 +190,13 @@ object StreamingUpsert {
       case _ => col(timeCol)
     }
 
+  /** Windowed streaming aggregation with a watermark — the standard
+    * late-data-bounded shape (10-minute windows, `lateness` allowed).
+    * Returns the streaming DataFrame for the caller to sink.
+    *
+    * sum accumulates in decimal so the result is order-independent and
+    * exact — a double sum would vary with micro-batch boundaries.
+    */
   def windowedCounts(events: DataFrame, timeCol: String, keyCol: String,
       windowDuration: String, lateness: String): DataFrame =
     events
@@ -240,7 +206,7 @@ object StreamingUpsert {
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
 
   /** Run the windowed aggregation over a parquet backlog with
-    * `Trigger.AvailableNow`, materializing the COMPLETE final state to
+    * the AvailableNow trigger, materializing the COMPLETE final state to
     * `targetPath` (foreachBatch overwrite — every micro-batch rewrites the
     * aggregate, the last one wins, so the backlog result equals the batch
     * query). The event-time column is normalized from whatever physical
@@ -257,22 +223,14 @@ object StreamingUpsert {
       windowDuration: String = "10 minutes",
       lateness: String = "10 minutes",
   ): Unit = {
-    val (src, base) = globAndBase(sourceGlob)
-    val raw = spark.readStream.schema(schema)
-      .option("basePath", base).parquet(src)
+    val raw = Backlog.read(spark, sourceGlob, schema, None)
     val withTs = raw.withColumn(timeCol, eventTime(schema, timeCol))
     val agg = windowedCounts(withTs, timeCol, keyCol, windowDuration, lateness)
       .select(
         unix_timestamp(col("window.start")).as("win_start"),
         col(keyCol), col("n"), col("sum_value"))
-    val query = agg.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(targetPath)
-      }
-      .start()
-    query.awaitTermination()
+    Backlog.eachBatch(agg, checkpointDir, "complete") {
+      _.write.mode("overwrite").parquet(targetPath)
+    }
   }
 }

@@ -11,11 +11,11 @@ import graft.store.{Marker, UpsertWriter}
 
 /** The marker-committed, append-only state of the stateful streaming
   * families ([[StreamingDedupIndex]], [[StreamingLineDedup]],
-  * [[StreamingLineStrip]], [[StreamingFrameIndex]]) and the one
-  * per-batch loop that grows it. A family declares its two parts — the
-  * `output` (the batch's kept rows, keyed by `idCol`, stamped with their
-  * batch number) and the `index` (what later batches probe) — each a
-  * `(sub-directory, schema)`, plus its per-batch step.
+  * [[StreamingLineStrip]], [[StreamingFrameIndex]], [[StreamingNearDup]])
+  * and the one per-batch loop that grows it. A family declares its two
+  * parts — the `output` (the batch's kept rows, keyed by `idCol`, stamped
+  * with their batch number) and the `index` (what later batches probe) —
+  * each a `(sub-directory, schema)`, plus its per-batch step.
   *
   * Layout under `stateRoot`: batch N writes exactly its own rows to
   * `delta/d<N>/<output>`, then `delta/d<N>/<index>`, and only then
@@ -41,6 +41,8 @@ import graft.store.{Marker, UpsertWriter}
   *    prunes the output part to its id column. The runner hands it to
   *    the family's step, which applies it once, before anything it
   *    writes is derived: to the batch, or (dedup) to its verdict rows.
+  *    A family whose index holds every judged id (near-dup's key
+  *    history) may guard by those ids instead, a superset.
   */
 private[streaming] final case class VersionedStateRunner(
     output: (String, StructType),
@@ -95,8 +97,8 @@ private[streaming] final case class VersionedStateRunner(
       (step: (DataFrame, DataFrame, DataFrame => DataFrame)
         => (DataFrame, DataFrame))
       : Unit =
-    StreamingUpsert.runBatches(spark, sourceDir, schema, checkpointDir,
-        maxFilesPerTrigger) { batch =>
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
+        Some(maxFilesPerTrigger)), checkpointDir) { batch =>
       val sc = batch.sparkSession.sparkContext
       val ((rows, indexDelta), v) = described(sc, "judge")(
         judge(batch.sparkSession, stateRoot, prepare(batch))(step))

@@ -2,7 +2,7 @@ package graft.transform
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, functions => F}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -101,6 +101,11 @@ object PriceTransforms {
     val dead = dataCols.zipWithIndex
       .filter { case (_, i) => counts.getLong(i + 1) == 0L }.map(_._1).toSet
     val live = validated.drop(dead.toSeq: _*)
+    // every ticker all-null: transform.py stacks what is left to an empty
+    // frame, and a stack() of no tickers is not valid SQL
+    if (live.columns.forall(_ == "Date"))
+      return df.sparkSession.createDataFrame(
+        df.sparkSession.sparkContext.emptyRDD[Row], Schemas.transformedPrices)
 
     // R1: wide→long. Tickers = union of suffixes across field columns;
     // fields = union of prefixes — extra fields beyond OHLCV (e.g.

@@ -16,8 +16,8 @@ class FlowSpec extends SparkSpec {
   import spark.implicits._
 
   /** Deterministic in-memory source standing in for Wikipedia/Yahoo. */
-  private class FixtureSource(failSymbols: Set[String] = Set.empty)
-      extends RawSource {
+  private class FixtureSource(failSymbols: Set[String] = Set.empty,
+      nullSymbols: Set[String] = Set.empty) extends RawSource {
     override def fetchSymbols(s: SparkSession, cat: String): DataFrame =
       if (cat == "sp_stocks")
         Seq(
@@ -37,7 +37,8 @@ class FlowSpec extends SparkSpec {
         val base = Timestamp.valueOf(d.atStartOfDay())
         val cells: Seq[Any] = ok.flatMap { sym =>
           val v = (sym.hashCode.abs % 100 + d.getDayOfMonth).toDouble
-          Seq[Any](v, v + 1.0, v - 1.0, v + 0.5, (d.getDayOfMonth * 10).toLong)
+          if (nullSymbols(sym)) Seq.fill[Any](5)(null)
+          else Seq[Any](v, v + 1.0, v - 1.0, v + 0.5, (d.getDayOfMonth * 10).toLong)
         }
         org.apache.spark.sql.Row.fromSeq(base +: cells)
       }
@@ -102,6 +103,19 @@ class FlowSpec extends SparkSpec {
     assert(e.failed == Seq("CHF=X"))
     // promotion happened BEFORE the raise (O3)
     assert(spark.read.parquet(s"$dw/price_history_fx").count() == 3)
+  }
+
+  test("a chunk whose every ticker is all-null merges nothing") {
+    val (lake, dw) = roots()
+    // chunkSize 1: CHF=X is a chunk of its own, fetched but all-null
+    Flow.etlFlow(spark, new FixtureSource(nullSymbols = Set("CHF=X")),
+      lake, dw, "fx",
+      start = Some(LocalDate.parse("2024-01-01")),
+      end = Some(LocalDate.parse("2024-01-05")),
+      today = LocalDate.parse("2024-06-01"), chunkSize = 1)
+    val syms = spark.read.parquet(s"$dw/price_history_fx")
+      .select("symbol").as[String].collect().toSeq
+    assert(syms.length == 5 && syms.toSet == Set("EURUSD"))
   }
 
   test("stock flow: models produce dim_symbols and fct_prices that pass DQ") {

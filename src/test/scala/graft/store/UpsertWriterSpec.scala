@@ -29,6 +29,15 @@ class UpsertWriterSpec extends SparkSpec {
     assert(got == Seq((1L, "a"), (2L, "B"), (3L, "c")))
   }
 
+  test("merge keeps the table's column order when the pk is not first") {
+    val p = tmp()
+    UpsertWriter.upsert(spark, p, Seq(("a", 1L), ("b", 2L)).toDF("v", "id"), Seq("id"))
+    UpsertWriter.upsert(spark, p, Seq(("B", 2L), ("c", 3L)).toDF("v", "id"), Seq("id"))
+    assert(spark.read.parquet(p).columns.toSeq == Seq("v", "id"))
+    assert(UpsertWriter.mergePlan(spark.read.parquet(p),
+      Seq(("C", 3L)).toDF("v", "id"), Seq("id")).columns.toSeq == Seq("v", "id"))
+  }
+
   test("merge is idempotent: re-merging the same batch changes nothing") {
     val p = tmp()
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")

@@ -180,6 +180,17 @@ class VersionedTableSpec extends SparkSpec {
     assert(got == full)
   }
 
+  test("a pk-last table keeps its column order, so changeFeed works") {
+    val r = root()
+    VersionedTable.write(Seq(("a", 1L), ("b", 2L)).toDF("name", "id"), r)
+    VersionedTable.upsert(spark, r, Seq(("B", 2L)).toDF("name", "id"), Seq("id"))
+    VersionedTable.delete(spark, r, Seq(1L).toDF("id"), Seq("id"))
+    assert(VersionedTable.read(spark, r).columns.toSeq == Seq("name", "id"))
+    val feed = VersionedTable.changeFeed(spark, r, 0L, 2L, Seq("id"))
+      .select("id", "name", "__sign").as[(Long, String, Long)].collect().toSet
+    assert(feed == Set((1L, "a", -1L), (2L, "b", -1L), (2L, "B", 1L)))
+  }
+
   test("versioned delete commits an anti-joined snapshot, history intact") {
     val r = root()
     VersionedTable.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), r)

@@ -31,13 +31,15 @@ class StreamingNearDupSpec extends SparkSpec {
       (12L, "fresh unseen content with novel words entirely")), root, "f2.parquet")
     val schema = Seq((0L, "x")).toDF("doc_id", "text").schema
     StreamingNearDup.runAvailableNow(spark, s"$root/src", schema,
-      s"$root/table", s"$root/hist", s"$root/ckpt")
-    val kept = spark.read.parquet(s"$root/table")
+      s"$root/state", s"$root/ckpt")
+    val (table, hist, _) =
+      StreamingNearDup.readState(spark, s"$root/state", schema)
+    val kept = table
       .select("doc_id").as[Long].collect().sorted.toSeq
     // 10 collides with history (doc 1); 12 collides with 11 in-batch
     assert(kept == Seq(1L, 2L, 11L))
     // history retains keys for ALL seen docs, rejected ones included
-    val histDocs = spark.read.parquet(s"$root/hist")
+    val histDocs = hist
       .select("doc_id").distinct().count()
     assert(histDocs == 5)
   }

@@ -70,6 +70,16 @@ class TransformsSpec extends SparkSpec {
     assert(PriceTransforms.transformPrices(empty, "fx").count() == 0)
   }
 
+  test("transformPrices: every ticker all-null gives an empty long frame") {
+    val wide = Seq(
+      (Timestamp.valueOf("2024-01-01 00:00:00"),
+        Option.empty[Double], Option.empty[Long]))
+      .toDF("Date", "Open_DEAD", "Volume_DEAD")
+    val out = PriceTransforms.transformPrices(wide, "sp_stocks")
+    assert(out.schema == graft.model.Schemas.transformedPrices)
+    assert(out.isEmpty)
+  }
+
   test("transformPrices: empty input a validator would reject returns unchanged") {
     // the guard precedes validation (transform.py:73-74): an empty fetch
     // with a wrong-typed matched column is not a schema failure
