@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TopKAggregate
 import graft.functions.VectorFunctions._
+import graft.store.UpsertWriter
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (driver-mandated extension — SURVEY.md §7.9).
@@ -639,11 +640,10 @@ object Similarity {
     * what a rebuild would compute) name the TOUCHED cells; only those
     * partitions are read, anti-joined against the feed's ids (both
     * signs, so re-applying a feed upserts rather than duplicates),
-    * unioned with the fresh codes, and dynamically overwritten —
-    * untouched cells' files are never opened. A cell the feed fully
-    * empties writes no rows under dynamic overwrite, so its stale
-    * directory is dropped explicitly (same discipline as
-    * `UpsertWriter.deletePartitioned`). Result is row-identical to
+    * unioned with the fresh codes, and rewritten through the store's one
+    * staged partition rewrite (`UpsertWriter.rewritePartitions`, which
+    * also drops a cell the feed fully empties) — untouched cells' files
+    * are never opened. Result is row-identical to
     * `writeClusteredPQ` over the post-feed corpus, which the q117 gate
     * and SimilaritySpec assert. The multi-cell mutation is NOT atomic —
     * a caller that must survive a crash mid-fold should track the
@@ -657,12 +657,6 @@ object Similarity {
       residual: Boolean = false): Unit = {
     val adds = encodeClusteredPQ(feed.where(col("__sign") === 1),
       centroids, codebooks, idCol, vecCol, residual)
-    // ids whose CURRENT index row must leave: updates/deletes retract
-    // their old image via the −1 rows, and the +1 ids are retracted too
-    // so re-applying a feed over an already-folded cell upserts instead
-    // of duplicating (row-level idempotence; a pure insert's id is
-    // normally absent and anti-joins as a no-op)
-    val removeIds = feed.select(col(idCol)).distinct()
     // the −1 images' cells recompute deterministically from the old
     // vectors — zero/null old images were never written, contribute none
     val oldCells = encodeClusteredPQ(feed.where(col("__sign") === -1),
@@ -673,16 +667,15 @@ object Similarity {
     val pruned = spark.read.parquet(path)
       .where(col("cell").isin(touched: _*))
       .withColumn("cell", col("cell").cast("long"))
-    // delta id sets are usually broadcast-sized, but a bootstrap-scale
-    // batch (millions of inserts in one feed) is not — size-probe before
-    // forcing the broadcast, the library-wide countAtMost convention
-    val rm = removeIds.withColumnRenamed(idCol, "__rm")
-    val rmSide = if (Sizing.countAtMost(rm, 2000000L)) broadcast(rm) else rm
-    val survivors = pruned
-      .join(rmSide, col(idCol) === col("__rm"), "left_anti")
-    val out = survivors.select(col(idCol), col("cell"), col("code"))
+    // ids whose CURRENT index row must leave: updates/deletes retract
+    // their old image via the −1 rows, and the +1 ids are retracted too
+    // so re-applying a feed over an already-folded cell upserts instead
+    // of duplicating (row-level idempotence; a pure insert's id is
+    // normally absent and anti-joins as a no-op)
+    val out = UpsertWriter.deletePlan(pruned, feed, Seq(idCol))
+      .select(col(idCol), col("cell"), col("code"))
       .unionByName(adds)
-    overwriteCells(spark, path, out, touched.toSet)
+    UpsertWriter.rewritePartitions(spark, path, out, "cell", touched)
   }
 
   /** Rebuild EXACTLY the cells a change feed touches from the
@@ -706,20 +699,16 @@ object Similarity {
       vecCol, residual).select("cell")
       .distinct().collect().map(_.getLong(0)) // both signs' cells
     if (touched.isEmpty) return
-    // persist: overwriteCells actions its input twice (surviving-cell
-    // probe + staged write), and THIS input is an O(corpus) encode scan —
-    // cache the touched-cell slice so the corpus is read once
-    val out = encodeClusteredPQ(corpus, centroids, codebooks, idCol,
-      vecCol, residual).where(col("cell").isin(touched: _*)).persist()
-    try overwriteCells(spark, path, out, touched.toSet)
-    finally out.unpersist()
+    UpsertWriter.rewritePartitions(spark, path,
+      encodeClusteredPQ(corpus, centroids, codebooks, idCol, vecCol,
+        residual).where(col("cell").isin(touched: _*)), "cell", touched)
   }
 
   /** Rebuild a clustered-PQ index IN PLACE from the authoritative corpus
     * snapshot — the recovery of last resort (e.g. the gap's change feeds
     * were vacuumed). Every current cell directory plus every cell the
     * snapshot encodes counts as touched, so stale cells drop and fresh
-    * ones land through the same staged [[overwriteCells]] path the
+    * ones land through the same staged partition rewrite the
     * incremental fold uses — which never touches root-level files, so a
     * caller's recovery marker survives a crash mid-rebuild (unlike
     * [[writeClusteredPQ]]'s wholesale static overwrite). Idempotent:
@@ -729,61 +718,10 @@ object Similarity {
       corpus: DataFrame, centroids: DataFrame, codebooks: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       residual: Boolean = false): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    val existing = scala.collection.mutable.Set.empty[Long]
-    if (java.nio.file.Files.exists(root)) {
-      val ls = java.nio.file.Files.list(root)
-      try ls.forEach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("cell="))
-          existing += name.stripPrefix("cell=").toLong
-      } finally ls.close()
-    }
-    val out = encodeClusteredPQ(corpus, centroids, codebooks, idCol,
-      vecCol, residual).persist()
-    try {
-      val fresh = out.select("cell").distinct()
-        .collect().map(_.getLong(0)).toSet
-      overwriteCells(spark, path, out, existing.toSet ++ fresh)
-    } finally out.unpersist()
-  }
-
-  /** Stage `out`, dynamically overwrite its cell partitions, then drop
-    * the `touched` cells that ended up empty (dynamic overwrite writes no
-    * rows for them, leaving stale directories — same discipline as
-    * `UpsertWriter.deletePartitioned`). The surviving-cell set is
-    * computed BEFORE the staged write because an all-empty staging dir
-    * has no readable schema; the staging tree is removed in a finally so
-    * a failed write never strands an index-sized copy on disk.
-    */
-  private def overwriteCells(spark: SparkSession, path: String,
-      out: DataFrame, touched: Set[Long]): Unit = {
-    val surviving = out.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val stagingRoot = java.nio.file.Files
-      .createTempDirectory("graft_pq_maintain_")
-    try {
-      if (surviving.nonEmpty) {
-        val staging = s"$stagingRoot/s"
-        out.write.partitionBy("cell").parquet(staging)
-        spark.read.parquet(staging)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell")
-          .parquet(path)
-      }
-      val emptied = touched.filterNot(surviving).map(String.valueOf)
-      val root = java.nio.file.Paths.get(path)
-      if (emptied.nonEmpty && java.nio.file.Files.exists(root)) {
-        val ls = java.nio.file.Files.list(root)
-        try ls.forEach { p =>
-          val name = p.getFileName.toString
-          if (name.startsWith("cell=") &&
-              emptied.contains(name.stripPrefix("cell=")))
-            graft.store.UpsertWriter.deleteRecursively(p)
-        } finally ls.close()
-      }
-    } finally graft.store.UpsertWriter.deleteRecursively(stagingRoot)
+    UpsertWriter.rewritePartitions(spark, path,
+      encodeClusteredPQ(corpus, centroids, codebooks, idCol, vecCol,
+        residual), "cell",
+      UpsertWriter.partitionDirs(java.nio.file.Paths.get(path), "cell").keys)
   }
 
   /** ADC top-k over a [[writeClusteredPQ]] table. The query assignment

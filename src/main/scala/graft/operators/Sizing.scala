@@ -130,14 +130,6 @@ object Sizing {
     n <= rowLimit && bytes <= byteLimit
   }
 
-  /** Hint `df` for broadcast only when provably at most `rowLimit` rows AND
-    * `byteLimit` estimated bytes; otherwise return it unhinted so the join
-    * shuffles both sides by key.
-    */
-  def maybeBroadcast(df: DataFrame, rowLimit: Long,
-      byteLimit: Long = DefaultBroadcastBytes): DataFrame =
-    if (fitsBroadcast(df, rowLimit, byteLimit)) broadcast(df) else df
-
   /** Conditionally RAISE a frame's parallelism ahead of a compute-heavy
     * per-row kernel (minhash/shingle signatures, simhash, payload
     * decode): when the planned partition count is far below the

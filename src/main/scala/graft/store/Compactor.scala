@@ -28,7 +28,7 @@ object Compactor {
     val bytes = dirBytes(target)
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val df = spark.read.parquet(path).repartition(n)
-    UpsertWriter.writeAtomic(df, target, partitionBy = Seq.empty)
+    UpsertWriter.writeAtomic(df, target)
     n
   }
 

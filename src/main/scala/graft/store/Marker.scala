@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 /** A version number committed to one small file under `dir` — the
   * commit point of every marker-committed layout here (a
   * [[VersionedTable]]'s `_latest`, a streaming state's `_current` and
-  * `_compacted`, an ANN index's `_indexed_version`). The value is
+  * `_compacted` plus its checkpoint's `_state_batch`, an ANN index's
+  * `_indexed_version`). The value is
   * written to a uniquely named temp file and renamed over `name`
   * atomically, so a reader sees the old value or the new one, never a
   * torn write, and two concurrent commits never share a temp file.

@@ -3,8 +3,12 @@ package graft.store
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Sizing
 
 /** Primary-key merge (upsert) and replace writers over parquet table
   * directories — the reference's dlt `write_disposition="merge"/"replace"`
@@ -17,23 +21,25 @@ import org.apache.spark.sql.functions._
   * then an atomic tmp-write + directory swap (write-audit-publish).
   *
   * Scale design (SURVEY.md §7):
-  *  - The daily update set is small relative to the target (1-day increment
-  *    vs a 25-year history) → BROADCAST the updates side of the anti-join,
-  *    so the target is never shuffled: the merge is one narrow scan+filter
-  *    over the big table plus the rewrite. `broadcastThresholdRows` guards
-  *    against genuinely large updates, falling back to a shuffle join which
-  *    AQE will plan.
-  *  - The deduplicated update set is materialized ONCE, and its row count
-  *    — the broadcast decision — comes from that same job
-  *    ([[graft.operators.Sizing.materialize]]). The anti-join side and the
-  *    union side both read the materialized rows, so the delta's lineage
-  *    (a wide unpivot, a streaming micro-batch) runs once per merge.
-  *  - [[upsert]] rewrites the whole table (into `<path>__tmp`, then a
-  *    directory swap). At 100 TB a full rewrite per merge is wrong:
-  *    [[upsertPartitioned]] keeps the target partitioned by a date column
-  *    and rewrites only the partitions containing updated keys (dynamic
-  *    partition overwrite), i.e. a daily merge touches one day-partition,
-  *    not the history.
+  *  - Every merge and delete here (and in [[VersionedTable]] and the ANN
+  *    index fold) goes through one core, [[Delta]]: the update or key set
+  *    is deduplicated on its key and materialized ONCE, and its row count
+  *    and estimated bytes come from that same job
+  *    ([[graft.operators.Sizing.materializeSized]]). One broadcast rule,
+  *    [[graft.operators.Sizing.broadcastIfFits]] (≤ 1M rows and ≤ 256 MB,
+  *    the rule the dedup verdict uses), hints the anti-join side: a daily
+  *    delta is broadcast, so the target is never shuffled; a genuinely
+  *    large one stays unhinted and AQE plans the join. Every reader — the
+  *    anti-join side, the union side, the partitioned paths' touched
+  *    values — reads the materialized rows, so the delta's lineage (a
+  *    wide unpivot, a streaming micro-batch) runs once per write.
+  *  - [[upsert]] and [[delete]] rewrite the whole table (into
+  *    `<path>__tmp`, then a directory swap). At 100 TB a full rewrite per
+  *    merge is wrong: [[upsertPartitioned]] and [[deletePartitioned]]
+  *    keep the target partitioned by a date column and rewrite only the
+  *    partitions the delta touches through one staged rewrite
+  *    ([[rewritePartitions]]), i.e. a daily merge touches one
+  *    day-partition, not the history.
   *  - Single-writer assumption matches the reference (one Prefect worker).
   */
 object UpsertWriter {
@@ -41,6 +47,36 @@ object UpsertWriter {
   /** Overwrite-all (dlt "replace", load.py:52-53,104-105). */
   def replace(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
+
+  /** A merge's update set or a delete's key set, deduplicated on
+    * `keyCols` (an arbitrary-but-deterministic row per key, like dlt's
+    * staged MERGE; the reference's batches are PK-unique) and
+    * materialized ONCE, with its size observed in the same job.
+    */
+  private final class Delta(delta: DataFrame, keyCols: Seq[String]) {
+    private val (rows, n, bytes) =
+      Sizing.materializeSized(delta.dropDuplicates(keyCols))
+
+    /** `target` without the rows whose `keyCols` tuple is in the delta,
+      * plus (`merge`) the delta's rows. With `allowNewColumns` a delta may
+      * carry columns the table lacks (and vice versa): survivors get typed
+      * nulls and the schema widens. The default is strict, so schema
+      * drift fails loudly, matching the validated-schema discipline of
+      * the W4 gate.
+      */
+    def applyTo(target: DataFrame, merge: Boolean,
+        allowNewColumns: Boolean = false): DataFrame = {
+      val survivors =
+        antiJoin(target, Sizing.broadcastIfFits(rows, n, bytes), keyCols)
+      if (merge) survivors.unionByName(rows, allowMissingColumns = allowNewColumns)
+      else survivors
+    }
+
+    /** The delta's distinct values of `c`, read from the materialized
+      * rows. */
+    def values(c: String): Seq[Any] =
+      rows.select(c).distinct().collect().map(_.get(0)).toSeq
+  }
 
   /** PK merge (dlt "merge", load.py:49-62): rows whose PK exists in
     * `updates` are replaced; new PKs are inserted. Idempotent: re-merging
@@ -51,79 +87,59 @@ object UpsertWriter {
       path: String,
       updates: DataFrame,
       pk: Seq[String],
-      broadcastThresholdRows: Long = 4000000L,
       allowNewColumns: Boolean = false,
   ): Unit = {
     require(pk.nonEmpty, "upsert requires a primary key")
     val target = Paths.get(path)
-    // Dedup the incoming batch itself on PK (last occurrence wins is not
-    // observable in the reference — its batches are PK-unique; we keep an
-    // arbitrary-but-deterministic first row like dlt's staged MERGE).
-    // Applies to the CREATE path too: the table must be PK-unique from its
-    // first write.
-    val dedupedUpdates = updates.dropDuplicates(pk)
-    if (!Files.exists(target)) {
-      writeAtomic(dedupedUpdates, target, Nil)
-      return
-    }
-    val existing = spark.read.parquet(path)
-    val (delta, rows) = graft.operators.Sizing.materialize(dedupedUpdates)
-    val updatesSide =
-      if (rows <= broadcastThresholdRows) broadcast(delta) else delta
-    val survivors = antiJoin(existing, updatesSide, pk)
-    // schema evolution: with allowNewColumns a delta may carry columns the
-    // table lacks (and vice versa) — surviving rows get typed nulls for the
-    // new columns, the table schema widens on this write. Default is
-    // strict (schema drift fails loudly), matching the validated-schema
-    // discipline of the W4 gate.
-    val merged = survivors.unionByName(delta,
-      allowMissingColumns = allowNewColumns)
-    writeAtomic(merged, target, Nil)
+    // the table must be PK-unique from its first write
+    if (!Files.exists(target))
+      writeAtomic(updates.dropDuplicates(pk), target)
+    else
+      writeAtomic(new Delta(updates, pk).applyTo(spark.read.parquet(path),
+        merge = true, allowNewColumns), target)
   }
 
   /** Targeted key deletion — the GDPR-erasure / right-to-be-forgotten
     * write: every row whose `keyCols` tuple appears in `keys` is removed,
-    * everything else survives byte-identically. The relational core is one
-    * LEFT ANTI join with the (small, broadcast-guarded) key set — the
-    * target is scanned once, never shuffled — followed by the same atomic
-    * write-audit-publish swap the merge path uses. `keyCols` need not be a
-    * primary key: deleting by `user_id` removes ALL of a user's rows.
+    * everything else survives byte-identically. The relational core is
+    * [[deletePlan]], followed by the same atomic write-audit-publish swap
+    * the merge path uses. `keyCols` need not be a primary key: deleting
+    * by `user_id` removes ALL of a user's rows.
     */
   def delete(
       spark: SparkSession,
       path: String,
       keys: DataFrame,
       keyCols: Seq[String],
-      partitionBy: Seq[String] = Nil,
-      broadcastThresholdRows: Long = 4000000L,
   ): Unit = {
     require(keyCols.nonEmpty, "delete requires key columns")
     val target = Paths.get(path)
     require(Files.exists(target), s"delete target $path does not exist")
-    val survivors = deletePlan(spark.read.parquet(path), keys, keyCols,
-      broadcastThresholdRows)
-    writeAtomic(survivors, target, partitionBy)
+    writeAtomic(deletePlan(spark.read.parquet(path), keys, keyCols), target)
   }
 
-  /** The delete RESULT as a DataFrame (no I/O) — the relational core of
-    * [[delete]], exposed for plan audits and composition: one broadcast-
-    * guarded LEFT ANTI join, target never shuffled.
+  /** The delete RESULT as a DataFrame — the relational core of [[delete]]:
+    * the key set is materialized once (one job), then one size-guarded
+    * LEFT ANTI join; a broadcast key set never shuffles the target.
     */
-  def deletePlan(target: DataFrame, keys: DataFrame, keyCols: Seq[String],
-      broadcastThresholdRows: Long = 4000000L): DataFrame = {
-    val keySet = keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
-    // byte-aware guard (not just rows): wide multi-column key tuples can
-    // be byte-heavy under the row cap
-    val keysSide = graft.operators.Sizing
-      .maybeBroadcast(keySet, broadcastThresholdRows)
-    antiJoin(target, keysSide, keyCols)
-  }
+  def deletePlan(target: DataFrame, keys: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    new Delta(keys.select(keyCols.map(col): _*), keyCols)
+      .applyTo(target, merge = false)
+
+  /** The merge RESULT as a DataFrame — the relational core of W1, used by
+    * the harness oracle queries and [[VersionedTable.upsert]]: the update
+    * set is materialized once (one job), then anti-join + union.
+    */
+  def mergePlan(target: DataFrame, updates: DataFrame, pk: Seq[String]): DataFrame =
+    new Delta(updates, pk).applyTo(target, merge = true)
 
   /** The rows of `target` whose `keyCols` tuple is not in `keys`, in
-    * `target`'s own column order — the one anti-join every merge and
-    * delete here goes through. A using-column join hoists the key
-    * columns to the front, and a `unionByName` after it keeps that
-    * order, so without the projection a merge would reorder the table.
+    * `target`'s own column order — the anti-join of [[Delta]] (and of
+    * `StreamingNearDup`'s in-batch guards). A using-column join hoists
+    * the key columns to the front, and a `unionByName` after it keeps
+    * that order, so without the projection a merge would reorder the
+    * table.
     */
   private[graft] def antiJoin(target: DataFrame, keys: DataFrame,
       keyCols: Seq[String]): DataFrame =
@@ -132,9 +148,9 @@ object UpsertWriter {
 
   /** Partition-scoped deletion — the 100 TB path, mirroring
     * [[upsertPartitioned]]: only partitions that actually contain doomed
-    * keys are read (partition-pruned scan) and rewritten (dynamic
-    * partition overwrite). The deletion key set must carry the partition
-    * column so untouched partitions are provably key-free.
+    * keys are read (partition-pruned scan) and rewritten
+    * ([[rewritePartitions]]). The deletion key set must carry the
+    * partition column so untouched partitions are provably key-free.
     */
   def deletePartitioned(
       spark: SparkSession,
@@ -146,9 +162,8 @@ object UpsertWriter {
     require(keyCols.contains(partitionCol),
       s"deletion keys $keyCols must contain partition column $partitionCol " +
         "so untouched partitions are provably unaffected")
-    val keySet = keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
-    val touched = keySet.select(partitionCol).distinct().collect()
-      .map(_.get(0)).toSeq
+    val delta = new Delta(keys.select(keyCols.map(col): _*), keyCols)
+    val touched = delta.values(partitionCol)
     // a null partition value would silently match nothing in the isin
     // prune below — fail loudly instead of reporting a successful no-op
     require(!touched.contains(null),
@@ -157,38 +172,86 @@ object UpsertWriter {
     if (touched.isEmpty) return
     val pruned = spark.read.parquet(path)
       .where(col(partitionCol).isin(touched: _*)) // partition-pruned
-    val survivors = antiJoin(pruned, broadcast(keySet), keyCols)
-    // dynamic overwrite only replaces partitions PRESENT in the staged
-    // data — a partition the delete fully emptied writes no rows, so its
-    // stale files must be dropped explicitly afterwards. Computed BEFORE
-    // the staged write: an all-empty staging dir has no readable schema.
-    val surviving = survivors.select(partitionCol)
-      .distinct().collect().map(_.get(0)).toSet
-    val staging = Files.createTempDirectory("graft_delete_stage_").toString + "/s"
-    if (surviving.nonEmpty) {
-      survivors.write.partitionBy(partitionCol).parquet(staging)
-      spark.read.parquet(staging)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path)
-    }
-    // match emptied partitions against the ACTUAL directory names (Spark
-    // hive-escapes special chars in partition paths — ':' writes as %3A —
-    // so reconstructing "col=value" from the raw value would miss them)
-    val emptied = touched.filterNot(surviving).map(String.valueOf).toSet
-    if (emptied.nonEmpty && Files.exists(Paths.get(path))) {
-      val ls = Files.list(Paths.get(path))
-      try ls.forEach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith(s"$partitionCol=") &&
-            emptied.contains(unescapePathName(
-              name.stripPrefix(s"$partitionCol="))))
-          deleteRecursively(p)
-      } finally ls.close()
-    }
-    deleteRecursively(Paths.get(staging))
+    rewritePartitions(spark, path, delta.applyTo(pruned, merge = false),
+      partitionCol, touched)
   }
+
+  /** Partition-scoped PK merge — the 100 TB path. The target is hive-
+    * partitioned by `partitionCol`; only partitions that actually contain
+    * updated keys are read (partition-pruned scan) and rewritten
+    * ([[rewritePartitions]]). A daily delta against a 25-year history
+    * touches one day-partition, not the history.
+    */
+  def upsertPartitioned(
+      spark: SparkSession,
+      path: String,
+      updates: DataFrame,
+      pk: Seq[String],
+      partitionCol: String,
+  ): Unit = {
+    require(pk.nonEmpty, "upsertPartitioned requires a primary key")
+    // the PK must pin the partition: otherwise an update whose key lives in
+    // an untouched partition would be inserted rather than replace it,
+    // silently duplicating the key
+    require(pk.contains(partitionCol),
+      s"primary key $pk must contain partition column $partitionCol")
+    if (!Files.exists(Paths.get(path))) {
+      updates.dropDuplicates(pk).write.partitionBy(partitionCol).parquet(path)
+      return
+    }
+    val delta = new Delta(updates, pk)
+    val touched = delta.values(partitionCol)
+    val existing = spark.read.parquet(path)
+      .where(col(partitionCol).isin(touched: _*)) // partition-pruned
+    rewritePartitions(spark, path, delta.applyTo(existing, merge = true),
+      partitionCol, touched)
+  }
+
+  /** Replace the `touched` partitions of the table at `path` (hive-
+    * partitioned by `partitionCol`) with `rows`, leaving every other
+    * partition's files untouched. `rows` is evaluated once: it is staged
+    * beside the table in `<path>__stage` (Spark cannot overwrite a path
+    * it is reading), the staged partitions are dynamically overwritten
+    * into the table, and the touched partitions `rows` left empty — a
+    * dynamic overwrite writes nothing for them — are dropped. Both
+    * partition sets come from directory names (hive-unescaped, since
+    * Spark escapes e.g. ':' as %3A), not from a job. The staging tree is
+    * removed in a `finally`, so a failed write never strands a copy.
+    */
+  private[graft] def rewritePartitions(spark: SparkSession, path: String,
+      rows: DataFrame, partitionCol: String, touched: Iterable[Any]): Unit = {
+    val target = Paths.get(path)
+    val stage = Paths.get(target.toString + "__stage")
+    deleteRecursively(stage)
+    try {
+      rows.write.partitionBy(partitionCol).parquet(stage.toString)
+      val surviving = partitionDirs(stage, partitionCol).keySet
+      if (surviving.nonEmpty)
+        spark.read.schema(rows.schema).parquet(stage.toString)
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partitionCol)
+          .parquet(path)
+      val emptied = touched.map(String.valueOf).toSet -- surviving
+      partitionDirs(target, partitionCol).foreach { case (v, dir) =>
+        if (emptied(v)) deleteRecursively(dir)
+      }
+    } finally deleteRecursively(stage)
+  }
+
+  /** The `partitionCol=<value>` directories under `dir`, by hive-unescaped
+    * value. */
+  private[graft] def partitionDirs(dir: Path, partitionCol: String)
+      : Map[String, Path] =
+    if (!Files.exists(dir)) Map.empty
+    else {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.map(p => p.getFileName.toString -> p)
+        .collect { case (n, p) if n.startsWith(s"$partitionCol=") =>
+          unescapePathName(n.stripPrefix(s"$partitionCol=")) -> p
+        }.toMap
+      finally ls.close()
+    }
 
   /** Inverse of Hive/Spark partition-path escaping: %XX hex sequences
     * decode back to the original character.
@@ -211,13 +274,11 @@ object UpsertWriter {
     * (not one atomic op) — acceptable under the single-writer assumption,
     * and crash-recoverable: `<path>__old` retains the previous version.
     */
-  private[store] def writeAtomic(df: DataFrame, target: Path, partitionBy: Seq[String]): Unit = {
+  private[store] def writeAtomic(df: DataFrame, target: Path): Unit = {
     val tmp = Paths.get(target.toString + "__tmp")
     val old = Paths.get(target.toString + "__old")
     deleteRecursively(tmp); deleteRecursively(old)
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
+    df.write.mode("overwrite").parquet(tmp.toString)
     if (Files.exists(target))
       Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
@@ -238,58 +299,4 @@ object UpsertWriter {
         .forEach(f => Files.delete(f))
       finally walk.close()
     }
-
-  /** Partition-scoped PK merge — the 100 TB path. The target is hive-
-    * partitioned by `partitionCol`; only partitions that actually contain
-    * updated keys are read (partition-pruned scan) and rewritten (dynamic
-    * partition overwrite). A daily delta against a 25-year history touches
-    * one day-partition, not the history.
-    *
-    * Mechanics: collect the delta's distinct partition values (small — the
-    * delta is the small side by assumption), scan ONLY those partitions of
-    * the target, merge, stage the merged partitions to a temp dir (Spark
-    * cannot overwrite a path it is reading), then dynamic-overwrite from
-    * the staged copy so untouched partitions' files are never rewritten.
-    */
-  def upsertPartitioned(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      pk: Seq[String],
-      partitionCol: String,
-  ): Unit = {
-    require(pk.nonEmpty, "upsertPartitioned requires a primary key")
-    // the PK must pin the partition: otherwise an update whose key lives in
-    // an untouched partition would be inserted rather than replace it,
-    // silently duplicating the key
-    require(pk.contains(partitionCol),
-      s"primary key $pk must contain partition column $partitionCol")
-    val target = Paths.get(path)
-    val dedup = updates.dropDuplicates(pk)
-    if (!Files.exists(target)) {
-      dedup.write.partitionBy(partitionCol).parquet(path)
-      return
-    }
-    val touched = dedup.select(partitionCol).distinct().collect()
-      .map(_.get(0)).toSeq
-    val existing = spark.read.parquet(path)
-      .where(col(partitionCol).isin(touched: _*)) // partition-pruned
-    val merged = antiJoin(existing, broadcast(dedup), pk).unionByName(dedup)
-    val staging = Files.createTempDirectory("graft_upsert_stage_").toString + "/s"
-    merged.write.partitionBy(partitionCol).parquet(staging)
-    spark.read.parquet(staging)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(path)
-    deleteRecursively(Paths.get(staging))
-  }
-
-  /** The merge RESULT as a DataFrame (no I/O) — the relational core of W1,
-    * used by the harness oracle queries and by foreachBatch streaming sinks.
-    */
-  def mergePlan(target: DataFrame, updates: DataFrame, pk: Seq[String]): DataFrame = {
-    val dedup = updates.dropDuplicates(pk)
-    antiJoin(target, broadcast(dedup), pk).unionByName(dedup)
-  }
 }

@@ -61,11 +61,8 @@ object VersionedTable {
     * versions still contain the rows (vacuum to actually purge them).
     */
   def delete(spark: SparkSession, root: String, keys: DataFrame,
-      pk: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.col
-    write(UpsertWriter.antiJoin(read(spark, root),
-      keys.select(pk.map(col): _*).dropDuplicates(pk), pk), root)
-  }
+      pk: Seq[String]): Long =
+    write(UpsertWriter.deletePlan(read(spark, root), keys, pk), root)
 
   /** Read the latest snapshot, or `asOf` a specific version (time travel). */
   def read(spark: SparkSession, root: String, asOf: Option[Long] = None): DataFrame = {

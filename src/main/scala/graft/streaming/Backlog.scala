@@ -58,12 +58,13 @@ private[streaming] object Backlog {
     drain(stream.writeStream.outputMode("append").format("parquet")
       .option("path", targetPath), checkpointDir)
 
-  /** Drain `stream` through `sink` once per micro-batch. `sink` must be
-    * idempotent on a replayed batch (see the object doc). */
+  /** Drain `stream` through `sink` once per micro-batch, with the
+    * batch's id (a replay re-runs the same id). `sink` must be idempotent
+    * on a replayed batch (see the object doc). */
   def eachBatch(stream: DataFrame, checkpointDir: String,
-      outputMode: String = "append")(sink: DataFrame => Unit): Unit =
+      outputMode: String = "append")(sink: (DataFrame, Long) => Unit): Unit =
     drain(stream.writeStream.outputMode(outputMode)
-      .foreachBatch((batch: DataFrame, _: Long) => sink(batch)),
+      .foreachBatch((batch: DataFrame, id: Long) => sink(batch, id)),
       checkpointDir)
 
   private def drain(w: DataStreamWriter[_], checkpointDir: String): Unit =

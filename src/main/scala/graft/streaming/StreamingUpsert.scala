@@ -34,7 +34,7 @@ object StreamingUpsert {
   ): Unit =
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) {
-      batch => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
+      (batch, _) => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
     }
 
   /** Stream the backlog into a [[graft.store.VersionedTable]]: every
@@ -65,7 +65,7 @@ object StreamingUpsert {
   ): Unit =
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) {
-      batch => graft.store.VersionedTable.upsert(
+      (batch, _) => graft.store.VersionedTable.upsert(
         batch.sparkSession, tableRoot, batch, pk): Unit
     }
 
@@ -108,7 +108,7 @@ object StreamingUpsert {
       "runVersionedWithAnnIndex: pk must be the single vector-id column")
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) {
-      batch =>
+      (batch, _) =>
         val s = batch.sparkSession
         val before = graft.store.VersionedTable.latestVersion(tableRoot)
           .getOrElse(throw new IllegalStateException(
@@ -230,7 +230,7 @@ object StreamingUpsert {
         unix_timestamp(col("window.start")).as("win_start"),
         col(keyCol), col("n"), col("sum_value"))
     Backlog.eachBatch(agg, checkpointDir, "complete") {
-      _.write.mode("overwrite").parquet(targetPath)
+      (batch, _) => batch.write.mode("overwrite").parquet(targetPath)
     }
   }
 }

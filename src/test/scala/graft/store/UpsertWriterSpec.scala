@@ -2,6 +2,8 @@ package graft.store
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.{col, concat, lit, udf}
 
 import graft.SparkSpec
@@ -76,9 +78,24 @@ class UpsertWriterSpec extends SparkSpec {
   test("merge semantics are identical when the broadcast guard rejects") {
     val p = tmp()
     UpsertWriter.upsert(spark, p, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
-    // force the non-broadcast (shuffle join) fallback path
-    UpsertWriter.upsert(spark, p, Seq((2L, "B"), (3L, "c")).toDF("id", "v"),
-      Seq("id"), broadcastThresholdRows = 1L)
+    // force the non-broadcast (shuffle join) fallback path: the size
+    // guard's hint is ignored and no side is broadcast by size either
+    val confs = Seq("spark.sql.optimizer.disableHints" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val delta = Seq((2L, "B"), (3L, "c")).toDF("id", "v")
+      val merge = UpsertWriter.mergePlan(spark.read.parquet(p), delta, Seq("id"))
+      merge.collect()
+      val plan = merge.queryExecution.executedPlan.toString
+      assert(plan.contains("LeftAnti") && !plan.contains("BroadcastHashJoin"),
+        s"expected a shuffled anti-join:\n$plan")
+      UpsertWriter.upsert(spark, p, delta, Seq("id"))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
     val got = spark.read.parquet(p).orderBy("id").as[(Long, String)].collect().toSeq
     assert(got == Seq((1L, "a"), (2L, "B"), (3L, "c")))
   }
@@ -206,6 +223,73 @@ class UpsertWriterSpec extends SparkSpec {
       .orderBy("id").as[(Long, String)].collect().toSeq
     assert(got == want)
     assert(got == Seq((1L, "a"), (2L, "v2"), (3L, "v3"), (4L, "v4"), (5L, "v5")))
+  }
+
+  test("partitioned upsert and delete evaluate the delta's lineage once") {
+    val p = tmp()
+    UpsertWriter.upsertPartitioned(spark, p,
+      Seq(("d1", 1L, "a"), ("d2", 2L, "b")).toDF("day", "id", "v"),
+      Seq("day", "id"), "day")
+    // every evaluation of a delta's lineage adds its row count
+    val evaluated = spark.sparkContext.longAccumulator("delta_rows")
+    val tick = udf { (id: Long) => evaluated.add(1L); id }.asNondeterministic()
+    def ticked(from: Long, to: Long) = spark.range(from, to).select(
+      concat(lit("d"), (col("id") % 2 + 1).cast("string")).as("day"),
+      tick(col("id")).as("id"), concat(lit("v"), col("id")).as("v"))
+    UpsertWriter.upsertPartitioned(spark, p, ticked(2, 6), Seq("day", "id"), "day")
+    assert(evaluated.value == 4L,
+      s"the update set's 4 rows were evaluated ${evaluated.value} times")
+    evaluated.reset()
+    UpsertWriter.deletePartitioned(spark, p, ticked(2, 4).drop("v"),
+      Seq("day", "id"), "day")
+    assert(evaluated.value == 2L,
+      s"the key set's 2 rows were evaluated ${evaluated.value} times")
+    val got = spark.read.parquet(p).orderBy("id", "day")
+      .select("day", "id", "v").as[(String, Long, String)].collect().toSeq
+    assert(got == Seq(("d1", 1L, "a"), ("d2", 2L, "b"), ("d1", 4L, "v4"),
+      ("d2", 5L, "v5")))
+  }
+
+  test("no staging directory survives a partitioned write") {
+    spark.version // the session's own scratch exists before the snapshot
+    val root = Files.createTempDirectory("graft_upsert_")
+    val p = s"$root/t"
+    def names(dir: java.nio.file.Path): Set[String] = {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet
+      finally ls.close()
+    }
+    val sysTmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratch() = names(sysTmp).filter(_.startsWith("graft_"))
+    val before = scratch()
+    // anything new in the temp dir, or beside the table
+    def leftovers() = (scratch() -- before - root.getFileName.toString) ++
+      (names(root) - "t")
+    UpsertWriter.upsertPartitioned(spark, p,
+      Seq(("d1", 1L, "a"), ("d2", 2L, "b")).toDF("day", "id", "v"),
+      Seq("day", "id"), "day")
+    UpsertWriter.upsertPartitioned(spark, p,
+      Seq(("d1", 3L, "c"), ("d3", 4L, "d")).toDF("day", "id", "v"),
+      Seq("day", "id"), "day")
+    UpsertWriter.deletePartitioned(spark, p,
+      Seq(("d2", 2L), ("d3", 4L)).toDF("day", "id"), Seq("day", "id"), "day")
+    assert(leftovers().isEmpty, s"left behind: ${leftovers()}")
+    assert(names(java.nio.file.Paths.get(p)).filter(_.startsWith("day=")) ==
+      Set("day=d1"))
+    // a write that throws: d1's data page is garbage behind an intact
+    // footer, so the schema reads and the staged rewrite's scan fails
+    val d1 = java.nio.file.Paths.get(p, "day=d1")
+    names(d1).filter(_.endsWith(".parquet")).foreach { f =>
+      val ch = java.nio.channels.FileChannel.open(d1.resolve(f),
+        java.nio.file.StandardOpenOption.WRITE)
+      try ch.write(java.nio.ByteBuffer.wrap(Array.fill[Byte](24)(-1)), 4L)
+      finally ch.close()
+    }
+    intercept[Exception] {
+      UpsertWriter.upsertPartitioned(spark, p,
+        Seq(("d1", 5L, "e")).toDF("day", "id", "v"), Seq("day", "id"), "day")
+    }
+    assert(leftovers().isEmpty, s"left behind by a failed write: ${leftovers()}")
   }
 
   test("mergePlan (relational form) matches the writer semantics") {

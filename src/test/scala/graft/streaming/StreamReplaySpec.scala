@@ -12,12 +12,12 @@ import org.apache.spark.sql.types.StructType
 import graft.{SparkEntry, SparkSpec}
 import graft.operators.Classify
 
-/** Every append-shaped stream survives a crash between its sink write
-  * and the checkpoint's batch commit: the replayed batch leaves the
-  * output row-identical to a clean run. The crash is simulated by
-  * deleting the checkpoint's last `commits/<N>` entry after a clean
-  * 2-file drain, so the restart re-runs batch N against a sink that
-  * already holds it.
+/** Every stream survives a crash between its sink write and the
+  * checkpoint's batch commit: the replayed batch leaves the output
+  * row-identical to a clean run (and a marker-committed state at the
+  * same version). The crash is simulated by deleting the checkpoint's
+  * last `commits/<N>` entry after a clean 2-file drain, so the restart
+  * re-runs batch N against a sink that already holds it.
   */
 class StreamReplaySpec extends SparkSpec {
   import spark.implicits._
@@ -88,9 +88,9 @@ class StreamReplaySpec extends SparkSpec {
           s"$root/state", s"$root/ckpt")
     } { root =>
       val schema = Seq((0L, "")).toDF("doc_id", "text").schema
-      val (acc, keys, _) =
+      val (acc, keys, v) =
         StreamingNearDup.readState(spark, s"$root/state", schema)
-      Seq(acc, keys)
+      Seq(acc, keys, Seq(v).toDF("version"))
     }
   }
 
@@ -121,8 +121,26 @@ class StreamReplaySpec extends SparkSpec {
         StreamingDedupIndex.runAvailableNow(spark, src, schema,
           s"$root/state", s"$root/ckpt")
     } { root =>
-      val (acc, keys, _) = StreamingDedupIndex.readState(spark, s"$root/state")
-      Seq(acc, keys)
+      val (acc, keys, v) = StreamingDedupIndex.readState(spark, s"$root/state")
+      Seq(acc, keys, Seq(v).toDF("version"))
     }
+  }
+
+  private val pkSlices = Seq(Seq((1L, "a"), (2L, "b")), Seq((2L, "B"), (3L, "c")))
+    .map(_.toDF("id", "v"))
+
+  test("StreamingUpsert: a replayed batch re-merges to the same table") {
+    assertReplaySafe(pkSlices) { (src, schema, root) =>
+      StreamingUpsert.runAvailableNow(spark, src, schema, s"$root/out",
+        s"$root/ckpt", Seq("id"), maxFilesPerTrigger = 1)
+    }(root => Seq(spark.read.parquet(s"$root/out")))
+  }
+
+  test("StreamingUpsert versioned: a replayed batch re-merges to the same " +
+      "latest snapshot") {
+    assertReplaySafe(pkSlices) { (src, schema, root) =>
+      StreamingUpsert.runVersionedAvailableNow(spark, src, schema,
+        s"$root/tbl", s"$root/ckpt", Seq("id"))
+    }(root => Seq(graft.store.VersionedTable.read(spark, s"$root/tbl")))
   }
 }
