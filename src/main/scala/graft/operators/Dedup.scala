@@ -390,28 +390,24 @@ object Dedup {
     * (without the prune, every shingle of every doc would ride the
     * verify exchanges even when bands collided for a tiny fraction of
     * the corpus — the exact cost the two-stage design exists to avoid).
-    * The candidate pairs and the pruned shingle set are each
+    * The candidate pairs, their ids and the pruned shingle set are each
     * materialized ONCE (`localCheckpoint`, the
-    * [[lineIndexAddBatchParts]] pattern): `cand` feeds the id prune,
-    * both intersection sides and the size probe; `sh` feeds both
-    * intersection sides plus the per-doc sizes. Size/id sides
-    * broadcast only under the row cap ([[Sizing]]), hash joins
-    * otherwise.
+    * [[lineIndexAddBatchParts]] pattern): `cand` feeds the id prune and
+    * both intersection sides; `sh` feeds both intersection sides. The
+    * id and shingle sides broadcast by the sizes observed while they
+    * materialize ([[Sizing.broadcastIfFits]]), hash joins otherwise.
     */
   def minhashLshVerifiedPairs(docs: DataFrame, threshold: Double,
       bands: Int = 4, rowsPerBand: Int = 2, shingleN: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastRowLimit: Long = Sizing.DefaultBroadcastRows): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val cand = minhashLshPairs(docs, bands, rowsPerBand, shingleN,
       idCol, textCol).localCheckpoint()
-    val candIds = cand.select(col("id_a").as(idCol))
-      .union(cand.select(col("id_b").as(idCol))).distinct()
-      .localCheckpoint()
-    // broadcast decisions probe the materialized candidate ids — at scale
-    // candidates are small even when the corpus is not, so the verify
-    // stage usually gets the broadcast fast path regardless of corpus size
-    val bc = Sizing.countAtMost(candIds, broadcastRowLimit)
-    def side(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
+    // at scale candidates are small even when the corpus is not, so the
+    // verify stage usually gets the broadcast fast path regardless of
+    // corpus size
+    val (candIds, nIds, idBytes) = Sizing.materializeSized(
+      cand.select(col("id_a").as(idCol))
+        .union(cand.select(col("id_b").as(idCol))).distinct())
     // candidate docs keep their distinct shingle set as ONE array row
     // (r18): the verify joins each candidate pair to its two arrays and
     // computes the exact jaccard with one fused kernel — replacing the
@@ -421,19 +417,17 @@ object Dedup {
     // "no intersection row" (a pure minhash collision never surfaces,
     // whatever the threshold); null-text docs carry a null array, which
     // nulls the kernel — the explode form likewise never emitted them
-    val sh = docs
-      .join(side(candIds), Seq(idCol), "left_semi")
+    val (sh, nSh, shBytes) = Sizing.materializeSized(docs
+      .join(Sizing.broadcastIfFits(candIds, nIds, idBytes), Seq(idCol),
+        "left_semi")
       .select(col(idCol),
         array_distinct(graft.functions.TextExpressions
-          .shingles(col(textCol), shingleN)).as("shs"))
-      .localCheckpoint()
-    // the verify side carries per-doc ARRAYS, so its broadcast decision
-    // is byte-aware (the prefix-filter twin's rule), not row-capped
-    val bcArr = Sizing.fitsBroadcast(sh, broadcastRowLimit)
-    def arrSide(df: DataFrame): DataFrame = if (bcArr) broadcast(df) else df
+          .shingles(col(textCol), shingleN)).as("shs")))
     cand
-      .join(arrSide(sh.toDF("id_a", "__sa")), "id_a")
-      .join(arrSide(sh.toDF("id_b", "__sb")), "id_b")
+      .join(Sizing.broadcastIfFits(sh.toDF("id_a", "__sa"), nSh, shBytes),
+        "id_a")
+      .join(Sizing.broadcastIfFits(sh.toDF("id_b", "__sb"), nSh, shBytes),
+        "id_b")
       .withColumn("jaccard", graft.functions.TextExpressions
         .jaccardValue(col("__sa"), col("__sb")))
       .where(col("jaccard") >= threshold)
@@ -568,8 +562,7 @@ object Dedup {
     * or switching to [[minhashLshPairs]].
     */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double, shingleN: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastRowLimit: Long = Sizing.DefaultBroadcastRows): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val sh = docs.select(col(idCol),
       explode(array_distinct(
         graft.functions.TextExpressions.shingles(col(textCol), shingleN))).as("sh"))
@@ -580,13 +573,12 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(count("*").as("inter"))
     // per-doc sizes broadcast only when the doc table is provably small;
     // a 10⁹-doc corpus falls back to hash-partitioned joins on id. The
-    // broadcast side is (id, count) — fixed-width rows — so the row cap
-    // alone bounds its bytes; no byte probe needed here.
-    val bc = Sizing.countAtMost(docs, broadcastRowLimit)
-    def side(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
+    // broadcast side is (id, count), so the probe measures the id
+    // projection, not the text
+    val bc = Sizing.fitsBroadcast(docs.select(col(idCol)))
     inter
-      .join(side(sizes.toDF("id_a", "sz_a")), "id_a")
-      .join(side(sizes.toDF("id_b", "sz_b")), "id_b")
+      .join(Sizing.broadcastIfFits(sizes.toDF("id_a", "sz_a"), bc), "id_a")
+      .join(Sizing.broadcastIfFits(sizes.toDF("id_b", "sz_b"), bc), "id_b")
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .where(col("jaccard") >= threshold)
@@ -610,8 +602,7 @@ object Dedup {
     * dominate anyway and counting beats distinct+verify.
     */
   def ngramJaccardPairsPrefix(docs: DataFrame, threshold: Double, shingleN: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastRowLimit: Long = Sizing.DefaultBroadcastRows): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val base = docs.select(col(idCol).as("id"),
       array_sort(array_distinct(
         graft.functions.TextExpressions.shingles(col(textCol), shingleN))).as("sh"))
@@ -632,13 +623,12 @@ object Dedup {
     // Beyond broadcast size both sides hash-partition by id instead — the
     // shuffle is linear in candidates and never materializes the corpus on
     // one node.
-    val bc = Sizing.fitsBroadcast(base, broadcastRowLimit)
-    def side(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
+    val bc = Sizing.fitsBroadcast(base)
     cand
-      .join(side(base.select(col("id").as("id_a"), col("sh").as("sh_a"),
-        col("sz").as("sz_a"))), "id_a")
-      .join(side(base.select(col("id").as("id_b"), col("sh").as("sh_b"),
-        col("sz").as("sz_b"))), "id_b")
+      .join(Sizing.broadcastIfFits(base.select(col("id").as("id_a"),
+        col("sh").as("sh_a"), col("sz").as("sz_a")), bc), "id_a")
+      .join(Sizing.broadcastIfFits(base.select(col("id").as("id_b"),
+        col("sh").as("sh_b"), col("sz").as("sz_b")), bc), "id_b")
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
@@ -661,8 +651,7 @@ object Dedup {
     */
   def embeddingNearDupPairsLsh(embeddings: DataFrame, threshold: Double,
       nBits: Int = 16, bands: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastRowLimit: Long = Sizing.DefaultBroadcastRows): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val bandBits = nBits / bands
     val mask = (1L << bandBits) - 1
     val sig = embeddings.select(col(idCol),
@@ -687,16 +676,15 @@ object Dedup {
     // dedup AFTER the threshold filter (survivors are few). On the
     // hash-partitioned path duplicates would inflate the join shuffle, so
     // dedup first.
-    val bc = Sizing.fitsBroadcast(embeddings, broadcastRowLimit)
-    def side(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
+    val bc = Sizing.fitsBroadcast(embeddings)
     val cand = if (bc) rawCand else rawCand.distinct()
     val withNorm = embeddings.select(col(idCol), col(vecCol),
       VectorFunctions.norm(col(vecCol)).as("nrm"))
     cand
-      .join(side(withNorm.select(col(idCol).as("id_a"),
-        col(vecCol).as("va"), col("nrm").as("na"))), "id_a")
-      .join(side(withNorm.select(col(idCol).as("id_b"),
-        col(vecCol).as("vb"), col("nrm").as("nb"))), "id_b")
+      .join(Sizing.broadcastIfFits(withNorm.select(col(idCol).as("id_a"),
+        col(vecCol).as("va"), col("nrm").as("na")), bc), "id_a")
+      .join(Sizing.broadcastIfFits(withNorm.select(col(idCol).as("id_b"),
+        col(vecCol).as("vb"), col("nrm").as("nb")), bc), "id_b")
       .withColumn("cos", VectorFunctions.cosineWithNorms(
         VectorFunctions.dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cos") > threshold)
@@ -875,8 +863,8 @@ object Dedup {
     * a leak-severity signal, not just a flag; anti-join the ids against
     * `train` to drop). Shape: the eval side's DISTINCT windows are
     * benchmark-sized by definition — guard-checked, and BROADCAST while
-    * they fit (`broadcastWindows` rows; a 13-id window string is ~70
-    * bytes, so the default ~35 MB of relation) — making the corpus pass
+    * they fit ([[Sizing.broadcastIfFits]]'s 1M rows and 256 MB, observed
+    * while the windows materialize) — making the corpus pass
     * explode → broadcast hash join → partial-agg count per doc: the
     * only exchange is over the (tiny) hit set. An oversized eval side
     * falls back to a plain shuffled hash join — still one linear pass,
@@ -895,25 +883,23 @@ object Dedup {
   def decontaminateTokenNgrams(train: DataFrame, eval: DataFrame, n: Int,
       idCol: String = "doc_id", idsCol: String = "ids",
       maxEvalWindows: Long = 10000000L,
-      broadcastWindows: Long = 500000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenNgrams needs a positive n")
     def windows(df: DataFrame) =
       if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
       else tokenWindows(df, idCol, idsCol, n)
     // materialize the (benchmark-sized) eval windows ONCE: the guard
-    // count below and the join would otherwise each execute the whole
-    // eval branch — including its tokenize passes — from scratch
-    val evalW = windows(eval)
-      .select("gram").distinct().localCheckpoint()
-    val nEval = evalW.count()
+    // and the join would otherwise each execute the whole eval branch —
+    // including its tokenize passes — from scratch
+    val (evalW, nEval, evalBytes) = Sizing.materializeSized(
+      windows(eval).select("gram").distinct())
     require(nEval <= maxEvalWindows,
       s"decontaminateTokenNgrams: eval set has $nEval distinct windows — " +
         s"the broadcast side is capped at $maxEvalWindows; shard the eval " +
         "set or raise n (windows per doc shrink as n grows)")
-    val evalSide = if (nEval <= broadcastWindows) broadcast(evalW) else evalW
     markRepr(windows(train)
-      .join(evalSide, Seq("gram")) // right side distinct: no fanout
+      // right side distinct: no fanout
+      .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits")), hashWindows)
   }
@@ -1057,11 +1043,10 @@ object Dedup {
     require(n >= 1, "evalWindowHashSet needs a positive n")
     val s = eval.sparkSession
     import s.implicits._
-    // checkpoint: the count guard and the collect would otherwise each
+    // materialize: the count guard and the collect would otherwise each
     // run the whole eval branch (including any tokenize kernel upstream)
-    val hs = tokenWindowHashes(eval, idCol, idsCol, n)
-      .select("gram").distinct().localCheckpoint()
-    val nw = hs.count()
+    val (hs, nw) = Sizing.materialize(tokenWindowHashes(eval, idCol, idsCol, n)
+      .select("gram").distinct())
     require(nw <= maxEvalWindows,
       s"evalWindowHashSet: eval set has $nw distinct windows — driver " +
         s"state is capped at $maxEvalWindows; shard the eval set or raise n")
@@ -1134,15 +1119,13 @@ object Dedup {
   def decontaminateTokenNgramsBloom(train: DataFrame, eval: DataFrame,
       n: Int, idCol: String = "doc_id", idsCol: String = "ids",
       fpp: Double = 0.01, maxEvalWindows: Long = 10000000L,
-      broadcastWindows: Long = 500000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenNgramsBloom needs a positive n")
     val s = train.sparkSession
     import s.implicits._
-    val evalW = (if (hashWindows) tokenWindowHashes(eval, idCol, idsCol, n)
-        else tokenWindows(eval, idCol, idsCol, n))
-      .select("gram").distinct().localCheckpoint()
-    val nEval = evalW.count()
+    val (evalW, nEval, evalBytes) = Sizing.materializeSized(
+      (if (hashWindows) tokenWindowHashes(eval, idCol, idsCol, n)
+        else tokenWindows(eval, idCol, idsCol, n)).select("gram").distinct())
     if (nEval == 0) // nothing to leak against — no contaminated docs
       // same schema (incl. nullability) as the normal path, so a caller
       // sharding the eval set can unionByName empty and non-empty shards
@@ -1157,17 +1140,16 @@ object Dedup {
     // cleaned with the plan, where an explicit broadcast would leak one
     // resident bloom per invocation until app shutdown
     val bloom = evalW.stat.bloomFilter("gram", nEval, fpp)
-    // the verify join's build side is the full eval window relation —
-    // same conditional as the exact operator: past the cap, shuffle the
-    // (bloom-shrunk) candidate sliver instead of forcing a huge build
-    val evalSide = if (nEval <= broadcastWindows) broadcast(evalW) else evalW
     val cand =
       if (hashWindows) tokenWindowHashes(train, idCol, idsCol, n,
         keep = h => bloom.mightContainLong(h))
       else tokenWindows(train, idCol, idsCol, n,
         keep = g => bloom.mightContainString(g))
+    // exact verify on the sliver; its build side is the full eval window
+    // relation — same rule as the exact operator: past the caps, shuffle
+    // the (bloom-shrunk) candidate sliver instead of forcing a huge build
     markRepr(cand
-      .join(evalSide, Seq("gram")) // exact verify on the sliver
+      .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits")), hashWindows)
   }
@@ -1204,21 +1186,19 @@ object Dedup {
   def decontaminateTokenCoverage(train: DataFrame, eval: DataFrame, n: Int,
       idCol: String = "doc_id", idsCol: String = "ids",
       maxEvalWindows: Long = 10000000L,
-      broadcastWindows: Long = 500000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenCoverage needs a positive n")
     def evalWindows(df: DataFrame) =
       if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
       else tokenWindows(df, idCol, idsCol, n)
-    val evalW = evalWindows(eval).select("gram").distinct().localCheckpoint()
-    val nEval = evalW.count()
+    val (evalW, nEval, evalBytes) = Sizing.materializeSized(
+      evalWindows(eval).select("gram").distinct())
     require(nEval <= maxEvalWindows,
       s"decontaminateTokenCoverage: eval set has $nEval distinct windows " +
         s"— the broadcast side is capped at $maxEvalWindows; shard the " +
         "eval set or raise n")
-    val evalSide = if (nEval <= broadcastWindows) broadcast(evalW) else evalW
     val matched = tokenWindowsPos(train, idCol, idsCol, n, hashWindows)
-      .join(evalSide, Seq("gram"))
+      .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
       .select(col(idCol), col("pos"))
       .localCheckpoint() // the sliver: reused by BOTH aggregates below
     val hits = matched.groupBy(col(idCol))
@@ -1258,12 +1238,11 @@ object Dedup {
       maxCoverageBp: Long = 8000L,
       idCol: String = "doc_id", idsCol: String = "ids",
       maxEvalWindows: Long = 10000000L,
-      broadcastWindows: Long = 500000L,
       hashWindows: Boolean = false): DataFrame = {
     require(maxCoverageBp >= 0 && maxCoverageBp <= 10000,
       s"maxCoverageBp is basis points in [0, 10000], got $maxCoverageBp")
     val dropped = decontaminateTokenCoverage(train, eval, n, idCol, idsCol,
-        maxEvalWindows, broadcastWindows, hashWindows)
+        maxEvalWindows, hashWindows)
       .where(col("covered") * lit(10000L) >
         lit(maxCoverageBp) * col("n_tokens"))
       .select(col(idCol))
@@ -1286,22 +1265,18 @@ object Dedup {
   def contaminationByEvalDoc(train: DataFrame, eval: DataFrame, n: Int,
       idCol: String = "doc_id", idsCol: String = "ids",
       maxEvalWindows: Long = 10000000L,
-      broadcastWindows: Long = 500000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "contaminationByEvalDoc needs a positive n")
     def windows(df: DataFrame) =
       if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
       else tokenWindows(df, idCol, idsCol, n)
-    val evalW = windows(eval)
-      .select(col(idCol).as("eval_doc_id"), col("gram"))
-      .localCheckpoint()
-    val nEval = evalW.count()
+    val (evalW, nEval, evalBytes) = Sizing.materializeSized(windows(eval)
+      .select(col(idCol).as("eval_doc_id"), col("gram")))
     require(nEval <= maxEvalWindows,
       s"contaminationByEvalDoc: eval set has $nEval windows — the " +
         s"build side is capped at $maxEvalWindows; shard the eval set")
-    val evalSide = if (nEval <= broadcastWindows) broadcast(evalW) else evalW
     windows(train)
-      .join(evalSide, Seq("gram"))
+      .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
       .groupBy(col("eval_doc_id"))
       .agg(countDistinct(col(idCol)).as("n_train_docs"),
         count(lit(1)).as("n_matched"))
@@ -1377,7 +1352,6 @@ object Dedup {
       evalOld: DataFrame, evalNew: DataFrame, n: Int,
       idCol: String = "doc_id", idsCol: String = "ids",
       maxEvalWindows: Long = 10000000L,
-      broadcastWindows: Long = 500000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenNgramsDelta needs a positive n")
     requireRepr(oldHits, hashWindows, "decontaminateTokenNgramsDelta")
@@ -1385,9 +1359,9 @@ object Dedup {
       if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
       else tokenWindows(df, idCol, idsCol, n)
     val oldW = windows(evalOld).select("gram").distinct()
-    val deltaW = windows(evalNew).select("gram").distinct()
-      .join(oldW, Seq("gram"), "left_anti").localCheckpoint()
-    val nDelta = deltaW.count()
+    val (deltaW, nDelta, deltaBytes) = Sizing.materializeSized(
+      windows(evalNew).select("gram").distinct()
+        .join(oldW, Seq("gram"), "left_anti"))
     // the docstring's common case — a new benchmark with zero novel
     // windows — must not pay the corpus traversal against an empty
     // build side
@@ -1397,10 +1371,8 @@ object Dedup {
     require(nDelta <= maxEvalWindows,
       s"decontaminateTokenNgramsDelta: new eval windows number $nDelta — " +
         s"the build side is capped at $maxEvalWindows; shard the delta")
-    val deltaSide =
-      if (nDelta <= broadcastWindows) broadcast(deltaW) else deltaW
     val deltaHits = windows(train)
-      .join(deltaSide, Seq("gram"))
+      .join(Sizing.broadcastIfFits(deltaW, nDelta, deltaBytes), Seq("gram"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"))
     markRepr(oldHits.select(col(idCol), col("n_hits").as("__old"))
@@ -1430,9 +1402,10 @@ object Dedup {
       fpp: Double = 0.01, maxEvalShingles: Long = 10000000L): DataFrame = {
     def shArr(c: Column) =
       array_distinct(graft.functions.TextExpressions.shingles(c, shingleN))
-    val evalShingles = eval
-      .select(explode(shArr(col(textCol))).as("sh")).distinct()
-    val n = evalShingles.count()
+    // materialize: the count, the bloom build and the verify semi-join
+    // would otherwise each run the eval branch's shingle pass
+    val (evalShingles, n) = Sizing.materialize(eval
+      .select(explode(shArr(col(textCol))).as("sh")).distinct())
     if (n == 0) return train // nothing to leak against — exact no-op
     require(n <= maxEvalShingles,
       s"decontaminateBloom: eval set has $n distinct shingles — the bloom " +

@@ -231,20 +231,21 @@ object Retrieval {
     * [[rareNgramGate]] contract).
     *
     * Scale shape: one explode-side shuffle join on gram — broadcast
-    * when the model fits ([[Sizing.countAtMost]] probe, the library's
-    * size-guard convention), hash join with AQE skew handling
-    * otherwise. The model is never collected; the corpus is read once.
+    * when the model fits (its rows and bytes observed in the one job
+    * that materializes it, [[Sizing.broadcastIfFits]]), hash join with
+    * AQE skew handling otherwise. The model is never collected and its
+    * lineage runs once; the corpus is read once.
     */
   def familiarityGate(docs: DataFrame, model: DataFrame, idCol: String,
-      textCol: String, n: Int = 2, keepNum: Int = 1, keepDen: Int = 2,
-      broadcastRowLimit: Long = 2000000L): DataFrame = {
+      textCol: String, n: Int = 2, keepNum: Int = 1, keepDen: Int = 2)
+      : DataFrame = {
     require(keepDen >= 1 && keepNum >= 0,
       "familiarityGate needs keepNum >= 0 and keepDen >= 1")
     val grams = docs.select(col(idCol).as("doc_id"),
       explode(TextFunctions.shingles(col(textCol), n)).as("gram"))
-    val m = if (Sizing.countAtMost(model, broadcastRowLimit))
-      broadcast(model) else model
-    val judged = grams.join(m, Seq("gram"), "left")
+    val (m, nModel, modelBytes) = Sizing.materializeSized(model)
+    val judged = grams
+      .join(Sizing.broadcastIfFits(m, nModel, modelBytes), Seq("gram"), "left")
       .groupBy("doc_id").agg(
         count(lit(1)).as("n_grams"),
         count(col("cnt")).as("n_known"),
@@ -284,30 +285,31 @@ object Retrieval {
     * the [[familiarityGate]]/[[rareNgramGate]] contract.
     *
     * Scale shape: the two models full-outer-merge on gram (model-sized,
-    * never corpus-sized), so the corpus pays ONE gram-keyed shuffle join
-    * — broadcast when the merged model fits ([[Sizing.countAtMost]]
-    * probe), hash join with AQE skew handling otherwise — plus a one-row
-    * totals broadcast. Both models are sign-foldable via
-    * [[applyFeedNgramModel]], so the gate follows mutating reference
+    * never corpus-sized) and materialize once, so the corpus pays ONE
+    * gram-keyed shuffle join — broadcast when the merged model fits
+    * (observed in that one job, [[Sizing.broadcastIfFits]]), hash join
+    * with AQE skew handling otherwise — plus a one-row totals broadcast
+    * read off the same materialized model. Both models are sign-foldable
+    * via [[applyFeedNgramModel]], so the gate follows mutating reference
     * slices with delta-sized work.
     */
   def importanceGate(docs: DataFrame, target: DataFrame, raw: DataFrame,
       idCol: String, textCol: String, n: Int = 2, keepNum: Int = 1,
-      keepDen: Int = 1, broadcastRowLimit: Long = 2000000L): DataFrame = {
+      keepDen: Int = 1): DataFrame = {
     require(keepDen >= 1 && keepNum >= 0,
       "importanceGate needs keepNum >= 0 and keepDen >= 1")
-    val model = ngramModel(target, textCol, n)
-      .withColumnRenamed("cnt", "cnt_t")
-      .join(ngramModel(raw, textCol, n).withColumnRenamed("cnt", "cnt_r"),
-        Seq("gram"), "full_outer")
+    val (model, nModel, modelBytes) = Sizing.materializeSized(
+      ngramModel(target, textCol, n)
+        .withColumnRenamed("cnt", "cnt_t")
+        .join(ngramModel(raw, textCol, n).withColumnRenamed("cnt", "cnt_r"),
+          Seq("gram"), "full_outer"))
     val totals = model.agg(
       coalesce(sum("cnt_t"), lit(0L)).as("t_total"),
       coalesce(sum("cnt_r"), lit(0L)).as("r_total"))
-    val m = if (Sizing.countAtMost(model, broadcastRowLimit))
-      broadcast(model) else model
     val judged = docs.select(col(idCol).as("doc_id"),
         explode(TextFunctions.shingles(col(textCol), n)).as("gram"))
-      .join(m, Seq("gram"), "left")
+      .join(Sizing.broadcastIfFits(model, nModel, modelBytes), Seq("gram"),
+        "left")
       .groupBy("doc_id").agg(
         count(lit(1)).as("n_grams"),
         coalesce(sum("cnt_t"), lit(0L)).as("t_mass"),

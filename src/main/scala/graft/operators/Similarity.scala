@@ -483,15 +483,18 @@ object Similarity {
     val kCodes = cb(0).length
     val sub = cb(0)(0).length
     val maxQueries = math.max(1L, Sizing.DefaultBroadcastRows / (m.toLong * kCodes))
-    require(Sizing.countAtMost(queries, maxQueries),
+    // one collect of at most maxQueries + 1 rows is both the guard and
+    // the LUT's input: no separate probe job
+    val collected = queries.select(col(idCol).cast("long"), col(vecCol))
+      .limit((maxQueries + 1).toInt).collect()
+    require(collected.length <= maxQueries,
       s"pqTopK: `queries` is the PROBE set, not a corpus — its ADC lookup " +
         s"table is |queries| x m x k rows and must broadcast. More than " +
         s"$maxQueries query rows found (cap = ${Sizing.DefaultBroadcastRows} " +
         s"LUT rows / (m=$m x k=$kCodes)); batch the probe set instead.")
     // per-query LUT over UNIT query directions: with unit-normalized
     // encodings, approximate cosine = Σ_s q̂_s · c_{s,code_s} directly
-    val qRows = queries.where(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long"), col(vecCol)).collect().flatMap { r =>
+    val qRows = collected.filterNot(_.isNullAt(1)).flatMap { r =>
         val raw = toDoubles(r.getSeq[Any](1))
         val qn = math.sqrt(raw.map(x => x * x).sum)
         // a zero query has no direction — excluded, matching unitize

@@ -5,19 +5,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Size-guarded broadcast decisions, shared by the store and the
-  * dedup/similarity operators.
+  * dedup/decontamination/retrieval operators.
   *
   * A `broadcast()` hint on a table that does NOT fit executor memory is a
   * scale-killer: the driver collects the whole table and every executor
-  * holds a full copy. These helpers keep the broadcast fast-path for
-  * provably-small inputs and fall back to a plain (hash-partitioned
-  * shuffle) join otherwise — the 100 TB-safe default.
-  *
-  * Row count alone is NOT a safe proxy when rows carry arrays (shingle
-  * lists, embeddings): 1M rows × multi-KB arrays still blows the broadcast
-  * budget. [[fitsBroadcast]] therefore also estimates BYTES — one probe job
-  * computes the capped row count and a schema-driven per-row size estimate
-  * together, and both must pass.
+  * holds a full copy. One rule keeps the broadcast fast path: a side is
+  * hinted only with at most [[DefaultBroadcastRows]] rows AND estimated
+  * ([[approxRowBytes]]; rows carrying arrays make a row count alone
+  * unsafe) at most [[DefaultBroadcastBytes]] bytes, and otherwise joins
+  * hash-partitioned — the 100 TB-safe default. A side the operator
+  * materializes anyway is OBSERVED: [[materializeSized]] counts its rows
+  * and bytes in that job (the count also feeds `require` caps and empty
+  * shortcuts), so no probe runs. A lazily read, corpus-sized input is
+  * never materialized just to be sized: [[fitsBroadcast]] PROBES it in
+  * one job over at most cap+1 rows.
   */
 object Sizing {
 
@@ -34,8 +35,7 @@ object Sizing {
 
   /** Cheap "has at most n rows" probe without a full count:
     * limit(n+1).count() stops scanning once n+1 rows are found. It runs
-    * `df`'s lineage once more than the caller's own action does; a
-    * caller that needs the rows anyway uses [[materialize]] instead.
+    * `df`'s lineage once more than the caller's own action does.
     */
   def countAtMost(df: DataFrame, n: Long): Boolean =
     df.limit((math.min(n, Int.MaxValue - 1L) + 1).toInt).count() <= n
@@ -73,9 +73,14 @@ object Sizing {
     * planner decides by its own size estimate. No probe job runs.
     */
   def broadcastIfFits(df: DataFrame, rows: Long, bytes: Long): DataFrame =
-    if (rows <= DefaultBroadcastRows && bytes <= DefaultBroadcastBytes)
-      broadcast(df)
-    else df
+    broadcastIfFits(df,
+      rows <= DefaultBroadcastRows && bytes <= DefaultBroadcastBytes)
+
+  /** Hint `df` for broadcast when a [[fitsBroadcast]] probe found the
+    * side it projects within the cap pair; otherwise return it unhinted.
+    */
+  def broadcastIfFits(df: DataFrame, fits: Boolean): DataFrame =
+    if (fits) broadcast(df) else df
 
   /** Schema-driven estimate of one row's in-memory bytes: variable-width
     * columns (strings, binary, arrays, maps, structs of them) measured per

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.store.Marker
+
 /** The one source and the two drains every file-backlog stream in this
   * package runs through — the streaming shape of the reference's cron
   * incremental loads (SURVEY.md §2.11): a parquet backlog replayed under
@@ -20,9 +22,10 @@ import org.apache.spark.sql.types.StructType
   *    log entry writes nothing.
   *  - [[eachBatch]], `foreachBatch` for a sink that is idempotent on its
   *    own: a PK merge, the [[VersionedStateRunner]] marker commit with
-  *    its id replay guard, or a complete-mode overwrite. A `foreachBatch`
-  *    body must never append: nothing there tells a replay from a fresh
-  *    batch.
+  *    its id replay guard, or a complete-mode overwrite. A replayed id
+  *    that the `_state_batch` marker (committed after the sink) holds
+  *    skips the sink, so e.g. no extra table version; a crash before that
+  *    marker still replays, so a `foreachBatch` body must never append.
   */
 private[streaming] object Backlog {
 
@@ -58,14 +61,18 @@ private[streaming] object Backlog {
     drain(stream.writeStream.outputMode("append").format("parquet")
       .option("path", targetPath), checkpointDir)
 
-  /** Drain `stream` through `sink` once per micro-batch, with the
-    * batch's id (a replay re-runs the same id). `sink` must be idempotent
-    * on a replayed batch (see the object doc). */
+  /** Drain `stream` through `sink` once per micro-batch, skipping a
+    * replayed batch id the `_state_batch` marker holds. `sink` must be
+    * idempotent on a replay the marker misses (see the object doc). */
   def eachBatch(stream: DataFrame, checkpointDir: String,
-      outputMode: String = "append")(sink: (DataFrame, Long) => Unit): Unit =
+      outputMode: String = "append")(sink: DataFrame => Unit): Unit =
     drain(stream.writeStream.outputMode(outputMode)
-      .foreachBatch((batch: DataFrame, id: Long) => sink(batch, id)),
-      checkpointDir)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        if (!Marker.read(checkpointDir, "_state_batch").exists(_ >= id)) {
+          sink(batch)
+          Marker.commit(checkpointDir, "_state_batch", id)
+        }
+      }, checkpointDir)
 
   private def drain(w: DataStreamWriter[_], checkpointDir: String): Unit =
     w.trigger(Trigger.AvailableNow())

@@ -34,7 +34,7 @@ object StreamingUpsert {
   ): Unit =
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) {
-      (batch, _) => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
+      batch => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
     }
 
   /** Stream the backlog into a [[graft.store.VersionedTable]]: every
@@ -43,16 +43,15 @@ object StreamingUpsert {
     * the streaming-lakehouse shape. Downstream incremental views
     * ([[graft.store.IncrementalView]]) then fold the per-batch change
     * feeds without ever rescanning the table, whatever batch boundaries
-    * the trigger chose. Effectively-once AT SNAPSHOT LEVEL: the
-    * checkpoint replays a failed batch and the PK merge makes the replay
-    * idempotent for the table's CONTENT — but a crash in the window
-    * between the version commit and the stream's checkpoint commit
-    * replays the batch and commits a content-identical EXTRA version, so
-    * the version count/history may differ from a clean run (as with any
-    * sink whose commit is not atomic with the source offset commit).
-    * Downstream [[graft.store.IncrementalView]] folds stay correct either
-    * way — a duplicate version's change feed is empty because the merge
-    * found nothing to change.
+    * the trigger chose. Exactly-once per batch on one checkpoint: a
+    * crash between the version commit and the stream's checkpoint commit
+    * replays the batch, and [[Backlog.eachBatch]]'s batch id marker skips
+    * it, so the version history equals a clean run's. Only a crash
+    * between the version commit and that marker (or a fresh checkpoint
+    * over an existing table) replays the merge; the PK merge keeps the
+    * CONTENT identical, and the content-identical extra version it commits
+    * has an empty change feed, so downstream
+    * [[graft.store.IncrementalView]] folds stay correct.
     */
   def runVersionedAvailableNow(
       spark: SparkSession,
@@ -65,7 +64,7 @@ object StreamingUpsert {
   ): Unit =
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) {
-      (batch, _) => graft.store.VersionedTable.upsert(
+      batch => graft.store.VersionedTable.upsert(
         batch.sparkSession, tableRoot, batch, pk): Unit
     }
 
@@ -76,9 +75,9 @@ object StreamingUpsert {
     * partitions only). The index never rebuilds: after the backlog
     * drains it is row-identical to `writeClusteredPQ` over the final
     * snapshot, whatever batch boundaries the trigger chose (q118's
-    * gate). `pk` must be the single vector-id column. Same
-    * effectively-once caveat as [[runVersionedAvailableNow]] for the
-    * VERSION HISTORY; the index itself is crash-exact: an
+    * gate). `pk` must be the single vector-id column. Same batch id
+    * replay skip as [[runVersionedAvailableNow]] for the VERSION
+    * HISTORY; the index itself is crash-exact: an
     * `_indexed_version` marker in the index directory (atomic rename,
     * advanced only after a fold completes) records the table version the
     * index reflects, and a batch that finds the marker lagging the table
@@ -86,9 +85,9 @@ object StreamingUpsert {
     * old/new/partial mixtures — first repairs those cells from the
     * authoritative snapshot
     * ([[graft.operators.Similarity.repairClusteredPQCells]]) before
-    * folding its own delta. A replayed batch whose fold DID complete
-    * finds marker == table version and skips straight to the (empty)
-    * duplicate-version feed, a no-op.
+    * folding its own delta. A replayed batch the id marker misses whose
+    * fold DID complete finds marker == table version and skips straight
+    * to the (empty) duplicate-version feed, a no-op.
     */
   def runVersionedWithAnnIndex(
       spark: SparkSession,
@@ -108,7 +107,7 @@ object StreamingUpsert {
       "runVersionedWithAnnIndex: pk must be the single vector-id column")
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) {
-      (batch, _) =>
+      batch =>
         val s = batch.sparkSession
         val before = graft.store.VersionedTable.latestVersion(tableRoot)
           .getOrElse(throw new IllegalStateException(
@@ -230,7 +229,7 @@ object StreamingUpsert {
         unix_timestamp(col("window.start")).as("win_start"),
         col(keyCol), col("n"), col("sum_value"))
     Backlog.eachBatch(agg, checkpointDir, "complete") {
-      (batch, _) => batch.write.mode("overwrite").parquet(targetPath)
+      batch => batch.write.mode("overwrite").parquet(targetPath)
     }
   }
 }

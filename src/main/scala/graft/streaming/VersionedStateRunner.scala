@@ -33,10 +33,10 @@ import graft.store.{Marker, UpsertWriter}
   *    state is never half a batch ahead of the marker.
   *  - A batch that dies after the marker but before the stream's
   *    checkpoint commit replays against a state that already holds it.
-  *    After `_current`, the runner commits the batch's stream id to a
-  *    `_state_batch` marker under the checkpoint directory, so a replay
-  *    on the same checkpoint finds its id there and writes nothing: no
-  *    empty `delta/d<N+1>`, no new version.
+  *    After `_current`, [[Backlog.eachBatch]] commits the batch's stream
+  *    id to its `_state_batch` marker, so a replay on the same checkpoint
+  *    finds its id there and writes nothing: no empty `delta/d<N+1>`, no
+  *    new version.
   *  - A replay the id marker does not cover — a fresh checkpoint over
   *    existing state, or a crash between the two markers — runs again.
   *    The replay guard anti-joins away every id already in the output
@@ -92,11 +92,11 @@ private[streaming] final case class VersionedStateRunner(
 
   /** Replay a parquet backlog with AvailableNow: per micro-batch,
     * `prepare` → [[judge]] → the output part (batch-stamped) → the index
-    * part → `_current` → the batch id marker. A batch id the marker
-    * already holds is skipped (see the crash note). `step` returns the
-    * batch's output rows and its index delta; a family that derives both
-    * from one judgment materializes it inside `step`, so each write reads
-    * it once. Each of the three steps runs under its own job description.
+    * part → `_current`, under [[Backlog.eachBatch]]'s batch id marker
+    * (see the crash note). `step` returns the batch's output rows and its
+    * index delta; a family that derives both from one judgment
+    * materializes it inside `step`, so each write reads it once. Each of
+    * the three steps runs under its own job description.
     */
   def runAvailableNow(spark: SparkSession, sourceDir: String,
       schema: StructType, stateRoot: String, checkpointDir: String,
@@ -105,21 +105,18 @@ private[streaming] final case class VersionedStateRunner(
         => (DataFrame, DataFrame))
       : Unit =
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
-        Some(maxFilesPerTrigger)), checkpointDir) { (batch, id) =>
-      if (!Marker.read(checkpointDir, "_state_batch").exists(_ >= id)) {
-        val sc = batch.sparkSession.sparkContext
-        val ((rows, indexDelta), v) = described(sc, "judge")(
-          judge(batch.sparkSession, stateRoot, prepare(batch))(step))
-        val next = v + 1
-        described(sc, s"output part ${output._1}")(
-          rows.withColumn("batch", lit(next)).write.mode("overwrite")
-            .parquet(s"$stateRoot/delta/d$next/${output._1}"))
-        described(sc, s"index part ${index._1}")(
-          indexDelta.write.mode("overwrite")
-            .parquet(s"$stateRoot/delta/d$next/${index._1}"))
-        Marker.commit(stateRoot, "_current", next) // see the crash note
-        Marker.commit(checkpointDir, "_state_batch", id)
-      }
+        Some(maxFilesPerTrigger)), checkpointDir) { batch =>
+      val sc = batch.sparkSession.sparkContext
+      val ((rows, indexDelta), v) = described(sc, "judge")(
+        judge(batch.sparkSession, stateRoot, prepare(batch))(step))
+      val next = v + 1
+      described(sc, s"output part ${output._1}")(
+        rows.withColumn("batch", lit(next)).write.mode("overwrite")
+          .parquet(s"$stateRoot/delta/d$next/${output._1}"))
+      described(sc, s"index part ${index._1}")(
+        indexDelta.write.mode("overwrite")
+          .parquet(s"$stateRoot/delta/d$next/${index._1}"))
+      Marker.commit(stateRoot, "_current", next) // see the crash note
     }
 
   /** Fold the committed log into `snapshot/s<v>` — the index part through

@@ -94,42 +94,34 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  private def withNoAutoBroadcast[A](body: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      body
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("size-guarded LSH verify: over-limit corpus hash-partitions, same result") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    withNoAutoBroadcast {
+    val guarded = withForcedShuffle {
       val guarded = graft.operators.Dedup.embeddingNearDupPairsLsh(
-        emb, 0.4, nBits = 16, bands = 4, broadcastRowLimit = 10)
+        emb, 0.4, nBits = 16, bands = 4)
       val p = plan(guarded)
       assert(!p.contains("BroadcastExchange"),
         s"large-corpus verify must not broadcast the embedding table:\n$p")
-      val fast = graft.operators.Dedup.embeddingNearDupPairsLsh(
-        emb, 0.4, nBits = 16, bands = 4)
-      assert(guarded.collect().toSet == fast.collect().toSet)
+      guarded.collect().toSet
     }
+    val fast = graft.operators.Dedup.embeddingNearDupPairsLsh(
+      emb, 0.4, nBits = 16, bands = 4)
+    assert(guarded == fast.collect().toSet)
   }
 
   test("size-guarded jaccard: over-limit corpus hash-partitions, same result") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    withNoAutoBroadcast {
-      val guarded = graft.operators.Dedup.ngramJaccardPairs(
-        docs, 0.2, broadcastRowLimit = 10)
+    val guarded = withForcedShuffle {
+      val guarded = graft.operators.Dedup.ngramJaccardPairs(docs, 0.2)
       val p = plan(guarded)
       assert(!p.contains("BroadcastExchange"),
         s"large-corpus sizes join must not broadcast:\n$p")
-      val prefix = graft.operators.Dedup.ngramJaccardPairsPrefix(
-        docs, 0.2, broadcastRowLimit = 10)
+      val prefix = graft.operators.Dedup.ngramJaccardPairsPrefix(docs, 0.2)
       assert(!plan(prefix).contains("BroadcastExchange"))
-      val fast = graft.operators.Dedup.ngramJaccardPairs(docs, 0.2)
-      assert(guarded.collect().toSet == fast.collect().toSet)
+      guarded.collect().toSet
     }
+    val fast = graft.operators.Dedup.ngramJaccardPairs(docs, 0.2)
+    assert(guarded == fast.collect().toSet)
   }
 
   test("embeddingNearDupPairsAuto large path: cell equi-join, no nested loop") {

@@ -8,6 +8,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Run `body` as if every join side were over the broadcast caps: a
+    * size guard's hint is ignored and no side is broadcast by size
+    * either. */
+  def withForcedShuffle[A](body: => A): A = {
+    val confs = Seq("spark.sql.optimizer.disableHints" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.{col, size, when, xxhash64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, lit, size, udf, when, xxhash64}
 
 import graft.SparkSpec
 
@@ -204,16 +205,23 @@ class DedupSpec extends SparkSpec {
       (103L, Some(Seq(7, 8, 9)))           // clean benchmark: absent
     ).toDF("doc_id", "ids")
     for (hw <- Seq(false, true);
-         // broadcastWindows = 0 forces the shuffled-join fallback the
-         // oversized doc-attributed eval relation takes at scale — the
-         // branch must report identically to the broadcast path
-         bw <- Seq(500000L, 0L)) {
-      val got = Dedup.contaminationByEvalDoc(train, ev, n = 3,
-          hashWindows = hw, broadcastWindows = bw)
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2)))).toMap
+         // the forced leg takes the shuffled-join fallback the oversized
+         // doc-attributed eval relation takes at scale — the branch must
+         // report identically to the broadcast path
+         forced <- Seq(false, true)) {
+      def attribution() = Dedup.contaminationByEvalDoc(train, ev, n = 3,
+        hashWindows = hw)
+      val rows = if (!forced) attribution().collect() else withForcedShuffle {
+        val out = attribution()
+        val p = out.queryExecution.executedPlan.toString
+        assert(!p.contains("BroadcastExchange"),
+          s"the forced leg must not broadcast the eval side:\n$p")
+        out.collect()
+      }
+      val got = rows.map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+        .toMap
       assert(got == Map(100L -> ((2L, 2L)), 101L -> ((1L, 1L)),
-        102L -> ((2L, 4L))), s"hashWindows=$hw broadcastWindows=$bw")
+        102L -> ((2L, 4L))), s"hashWindows=$hw forcedShuffle=$forced")
     }
   }
 
@@ -387,6 +395,29 @@ class DedupSpec extends SparkSpec {
       none.columns.toSeq == Seq("doc_id", "n_hits"))
     assert(Dedup.decontaminateTokenNgramsBloom(train, emptyEv, n = 3,
       hashWindows = true).count() == 0)
+  }
+
+  test("decontaminateBloom evaluates the eval side's lineage once") {
+    val train = Seq(
+      (1L, "the quick brown fox jumps"),
+      (2L, "completely different words here"),
+      (3L, "lazy dogs sleep all day")
+    ).toDF("doc_id", "text")
+    // every evaluation of the eval set's lineage adds its row count
+    val evaluated = spark.sparkContext.longAccumulator("eval_rows")
+    val tick = udf { (t: String) => evaluated.add(1L); t }.asNondeterministic()
+    def eval(f: Column => Column) = spark.range(0, 2).select(
+      col("id").as("doc_id"),
+      f(when(col("id") === 0, lit("a quick brown fox appeared"))
+        .otherwise(lit("lazy dogs sleep often"))).as("text"))
+    val bloomed = Dedup.decontaminateBloom(train, eval(c => tick(c)),
+        shingleN = 3)
+      .select("doc_id").as[Long].collect().toSeq.sorted
+    assert(evaluated.value == 2L,
+      s"the eval set's 2 rows were evaluated ${evaluated.value} times")
+    assert(bloomed == Dedup.decontaminate(train, eval(identity), shingleN = 3)
+      .select("doc_id").as[Long].collect().toSeq.sorted)
+    assert(bloomed == Seq(2L))
   }
 
   test("bloom-prefiltered decontamination equals the exact operator") {
@@ -792,6 +823,30 @@ class DedupSpec extends SparkSpec {
     // a threshold above the true fraction empties the result
     assert(Dedup.minhashLshVerifiedPairs(docs, threshold = 0.9)
       .count() == 0)
+  }
+
+  test("one minhashLshVerifiedPairs and one decontaminateTokenNgrams call " +
+      "run their pinned Spark jobs") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight"),
+      (2L, "the quick brown fox jumps over the lazy dog today"),
+      (3L, "completely different text about spark catalyst planning")
+    ).toDF("doc_id", "text")
+    val train = Seq((1L, Seq(1, 2, 3, 1, 2, 3)), (2L, Seq(7, 7, 7, 7)))
+      .toDF("doc_id", "ids")
+    val ev = Seq((100L, Seq(0, 1, 2, 3))).toDF("doc_id", "ids")
+    val rec = new graft.tools.Profile.Recorder(spark)
+    def jobs(body: => Any): Int = rec.record(body)._2.jobs.length
+    try {
+      // each side's size is observed in the job that materializes it:
+      // no probe job ahead of a broadcast
+      val nVerify = jobs(Dedup.minhashLshVerifiedPairs(docs, threshold = 0.5)
+        .collect())
+      assert(nVerify == 9, s"minhashLshVerifiedPairs ran $nVerify jobs")
+      val nDecon = jobs(Dedup.decontaminateTokenNgrams(train, ev, n = 3)
+        .collect())
+      assert(nDecon == 5, s"decontaminateTokenNgrams ran $nDecon jobs")
+    } finally rec.close()
   }
 
   test("stripFrequentLines removes >=minDocs lines from ALL docs, counts distinct docs") {

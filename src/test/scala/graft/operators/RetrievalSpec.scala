@@ -195,6 +195,30 @@ class RetrievalSpec extends SparkSpec {
     assert(openGate.forall(identity))
   }
 
+  test("familiarityGate and importanceGate evaluate the model's lineage once") {
+    // every evaluation of a reference slice's lineage adds its row count
+    val evaluated = spark.sparkContext.longAccumulator("ref_rows")
+    val tick = udf { (t: String) => evaluated.add(1L); t }.asNondeterministic()
+    def ref(texts: String*) = spark.range(0, texts.length).select(
+      col("id").as("doc_id"),
+      tick(element_at(typedLit(texts), col("id").cast("int") + 1)).as("text"))
+    val docs = Seq((1L, "a b c"), (2L, "x y z"), (3L, "a b x y"))
+      .toDF("doc_id", "text")
+    val fam = Retrieval.familiarityGate(docs,
+        Retrieval.ngramModel(ref("a b c", "a b d"), "text"), "doc_id", "text")
+      .orderBy("doc_id").select("n_known").as[Long].collect().toSeq
+    assert(evaluated.value == 2L,
+      s"the model's 2 reference rows were evaluated ${evaluated.value} times")
+    assert(fam == Seq(2L, 0L, 1L))
+    evaluated.reset()
+    val imp = Retrieval.importanceGate(docs, ref("a b c", "a b d"),
+        ref("x y z", "a b x y"), "doc_id", "text")
+      .orderBy("doc_id").select("keep").as[Boolean].collect().toSeq
+    assert(evaluated.value == 4L,
+      s"the models' 4 reference rows were evaluated ${evaluated.value} times")
+    assert(imp == Seq(true, false, false))
+  }
+
   test("applyFeedNgramModel: folded feeds equal a rebuilt model") {
     val v0 = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
     val model0 = Retrieval.ngramModel(v0, "text")

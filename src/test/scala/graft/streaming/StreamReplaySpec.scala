@@ -141,6 +141,8 @@ class StreamReplaySpec extends SparkSpec {
     assertReplaySafe(pkSlices) { (src, schema, root) =>
       StreamingUpsert.runVersionedAvailableNow(spark, src, schema,
         s"$root/tbl", s"$root/ckpt", Seq("id"))
-    }(root => Seq(graft.store.VersionedTable.read(spark, s"$root/tbl")))
+    }(root => Seq(graft.store.VersionedTable.read(spark, s"$root/tbl"),
+      graft.store.VersionedTable.latestVersion(s"$root/tbl").toSeq
+        .toDF("version")))
   }
 }
