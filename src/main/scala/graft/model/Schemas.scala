@@ -59,25 +59,21 @@ object Schemas {
   ))
 
   /** A pandera-style regex column pattern over flattened wide-price column
-    * names: e.g. `Open_.+` of DoubleType, coerced (validate.py:54-58).
+    * names: e.g. `Open_.+` of DoubleType (validate.py:54-58). Every
+    * pattern is nullable and coerced, as in the reference.
     */
-  final case class ColumnPattern(
-      regex: String,
-      dataType: DataType,
-      nullable: Boolean = true,
-      coerce: Boolean = false,
-  )
+  final case class ColumnPattern(regex: String, dataType: DataType)
 
   /** Raw wide prices (py_pipeline/validate.py:51-72): columns are
     * (Price ∈ {Open,High,Low,Close,Volume}) × Ticker, flattened to
     * `Price_Ticker`, plus the DatetimeIndex flattened to a `Date` column.
     */
   val rawPricePatterns: Seq[ColumnPattern] = Seq(
-    ColumnPattern("Open_.+", DoubleType, nullable = true, coerce = true),
-    ColumnPattern("High_.+", DoubleType, nullable = true, coerce = true),
-    ColumnPattern("Low_.+", DoubleType, nullable = true, coerce = true),
-    ColumnPattern("Close_.+", DoubleType, nullable = true, coerce = true),
-    ColumnPattern("Volume_.+", LongType, nullable = true, coerce = true),
+    ColumnPattern("Open_.+", DoubleType),
+    ColumnPattern("High_.+", DoubleType),
+    ColumnPattern("Low_.+", DoubleType),
+    ColumnPattern("Close_.+", DoubleType),
+    ColumnPattern("Volume_.+", LongType),
   )
 
   /** The raw wide-price frame's index column (the DatetimeIndex check at

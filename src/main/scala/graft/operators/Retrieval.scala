@@ -190,33 +190,15 @@ object Retrieval {
     * CCNet-style language-model familiarity filter (Wenzek et al.,
     * LREC'20 keep documents whose n-grams the target distribution
     * actually produces; cf. the RedPajama/Dolma quality stacks). The
-    * model is just `(gram, cnt)` — mergeable across corpus shards,
-    * incrementally maintainable with the same signed-feed discipline as
-    * [[indexState]], and vocabulary-sized (Zipf-bounded), orders of
-    * magnitude smaller than the corpus it summarizes.
+    * model is just `(gram, cnt)` — mergeable across corpus shards and
+    * vocabulary-sized (Zipf-bounded), orders of magnitude smaller than
+    * the corpus it summarizes.
     */
   def ngramModel(reference: DataFrame, textCol: String,
       n: Int = 2): DataFrame =
     reference.select(
         explode(TextFunctions.shingles(col(textCol), n)).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
-
-  /** Fold one signed change feed into an [[ngramModel]]: every gram
-    * occurrence contributes its row's `__sign`, so an updated reference
-    * doc retracts its old grams and adds the new, and a delete retracts
-    * its whole gram multiset — the model follows a mutating reference
-    * corpus with delta-sized work, the [[applyFeedIndex]] discipline.
-    * Grams whose count reaches zero vanish, matching a rebuild that
-    * never saw the doc.
-    */
-  def applyFeedNgramModel(model: DataFrame, feed: DataFrame,
-      textCol: String, n: Int = 2): DataFrame =
-    model.unionByName(
-        feed.select(col("__sign"),
-            explode(TextFunctions.shingles(col(textCol), n)).as("gram"))
-          .groupBy("gram").agg(sum("__sign").as("cnt")))
-      .groupBy("gram").agg(sum("cnt").as("cnt"))
-      .where(col("cnt") > 0)
 
   /** Score documents against an [[ngramModel]]: per doc, the gram total
     * (with multiplicity), how many of those occurrences the reference
@@ -289,9 +271,7 @@ object Retrieval {
     * gram-keyed shuffle join — broadcast when the merged model fits
     * (observed in that one job, [[Sizing.broadcastIfFits]]), hash join
     * with AQE skew handling otherwise — plus a one-row totals broadcast
-    * read off the same materialized model. Both models are sign-foldable
-    * via [[applyFeedNgramModel]], so the gate follows mutating reference
-    * slices with delta-sized work.
+    * read off the same materialized model.
     */
   def importanceGate(docs: DataFrame, target: DataFrame, raw: DataFrame,
       idCol: String, textCol: String, n: Int = 2, keepNum: Int = 1,

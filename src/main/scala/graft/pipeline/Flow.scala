@@ -1,10 +1,10 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
 import java.sql.Date
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
 import graft.operators.Sizing
@@ -75,7 +75,7 @@ object Flow {
 
     // symbols ETL (orchestration.py:166-172): stamp = end − 1 day
     val rawSymbols = source.fetchSymbols(spark, assetCategory)
-    val symbolsPath = s"$lakeRoot/symbols/$assetCategory"
+    val symbolsPath = Extract.lakePath(lakeRoot, "symbols", assetCategory)
     if (assetCategory == "sp_stocks") {
       val t = SymbolTransforms.transformStockSymbols(
         rawSymbols, Date.valueOf(e.minusDays(1)))
@@ -92,7 +92,7 @@ object Flow {
       Extract.symbolUniverse(spark, lakeRoot, "symbols", assetCategory)
 
     // chunked price ETL with PK merge (orchestration.py:56-108)
-    val pricesPath = s"$lakeRoot/price_history/$assetCategory"
+    val pricesPath = Extract.lakePath(lakeRoot, "price_history", assetCategory)
     val failed = Seq.newBuilder[String]
     chunked(universe, chunkSize).foreach { chunk =>
       val (wide, errs) = source.fetchPrices(spark, chunk, s, e)
@@ -112,9 +112,11 @@ object Flow {
     // it propagates with the symbol failures attached as suppressed.
     val allFailed = failed.result()
     try {
-      promote(spark, symbolsPath, s"$warehouseRoot/symbols_$assetCategory",
+      promote(spark, lakeRoot, "symbols", assetCategory,
+        s"$warehouseRoot/symbols_$assetCategory",
         if (assetCategory == "sp_stocks") Some(Seq("symbol", "date_stamp")) else None)
-      promote(spark, pricesPath, s"$warehouseRoot/price_history_$assetCategory",
+      promote(spark, lakeRoot, "price_history", assetCategory,
+        s"$warehouseRoot/price_history_$assetCategory",
         Some(Seq("date_stamp", "symbol")), dateRange = Some((s, e)))
     } catch {
       case e: Throwable =>
@@ -124,14 +126,15 @@ object Flow {
     if (allFailed.nonEmpty) throw PartialFailure(allFailed)
   }
 
-  /** S3→DW promotion (orchestration.py:122-152): pruned + date-filtered
-    * lake scan, then merge (or replace when pk=None) into the warehouse
-    * table. Filter and projection push down to the parquet scan.
+  /** S3→DW promotion (orchestration.py:122-152): the lake table's
+    * date-filtered scan ([[Extract.fromLake]]; the filter pushes down to
+    * parquet), merged (or replaced when pk=None) into the warehouse table.
+    * A lake table that was never written promotes nothing.
     */
-  def promote(spark: SparkSession, lakePath: String, dwPath: String,
-      pk: Option[Seq[String]], dateRange: Option[(LocalDate, LocalDate)] = None)
-      : Unit =
-    lakeScan(spark, lakePath, dateRange).foreach { scan =>
+  def promote(spark: SparkSession, lakeRoot: String, dataset: String,
+      assetCategory: String, dwPath: String, pk: Option[Seq[String]],
+      dateRange: Option[(LocalDate, LocalDate)] = None): Unit =
+    lakeTable(spark, lakeRoot, dataset, assetCategory, dateRange).foreach { scan =>
       pk match {
         case Some(keys) => UpsertWriter.upsert(spark, dwPath, scan, keys)
         case None => UpsertWriter.replace(scan, dwPath)
@@ -140,14 +143,14 @@ object Flow {
 
   /** S9 variant of [[promote]]: the warehouse is a JDBC database (the
     * reference selects Postgres/Snowflake via config, load.py:126-137).
-    * Same pruned + date-filtered lake scan; merge (pk given) runs as a
-    * server-side MERGE from a staged table, replace recreates the table.
+    * Same lake read; merge (pk given) runs as a server-side MERGE from a
+    * staged table, replace recreates the table.
     */
-  def promoteJdbc(spark: SparkSession, lakePath: String, url: String,
-      table: String, pk: Option[Seq[String]],
-      props: java.util.Properties,
+  def promoteJdbc(spark: SparkSession, lakeRoot: String, dataset: String,
+      assetCategory: String, url: String, table: String,
+      pk: Option[Seq[String]], props: java.util.Properties,
       dateRange: Option[(LocalDate, LocalDate)] = None): Unit =
-    lakeScan(spark, lakePath, dateRange).foreach { scan =>
+    lakeTable(spark, lakeRoot, dataset, assetCategory, dateRange).foreach { scan =>
       pk match {
         case Some(keys) =>
           graft.store.JdbcWarehouse.upsert(spark, scan, url, table, keys, props)
@@ -155,19 +158,15 @@ object Flow {
       }
     }
 
-  /** The lake side of both promotions: the table's scan, date-filtered
-    * when a range is given (the filter pushes down to parquet); None when
-    * the lake table was never written.
-    */
-  private def lakeScan(spark: SparkSession, lakePath: String,
-      dateRange: Option[(LocalDate, LocalDate)]): Option[DataFrame] =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(lakePath))) None
-    else {
-      val scan = spark.read.parquet(lakePath)
-      Some(dateRange.fold(scan) { case (s, e) =>
-        scan.where(col("date_stamp").between(Date.valueOf(s), Date.valueOf(e)))
-      })
-    }
+  /** [[Extract.fromLake]] over `dateRange`; None when the lake table was
+    * never written. */
+  private def lakeTable(spark: SparkSession, lakeRoot: String, dataset: String,
+      assetCategory: String, dateRange: Option[(LocalDate, LocalDate)])
+      : Option[DataFrame] =
+    if (!Files.exists(Paths.get(Extract.lakePath(lakeRoot, dataset, assetCategory))))
+      None
+    else Some(Extract.fromLake(spark, lakeRoot, dataset, assetCategory,
+      dateRange = dateRange.map { case (s, e) => (Date.valueOf(s), Date.valueOf(e)) }))
 
   /** O5: the dbt stage — run the 6 models in topo order, then the declared
     * data-test suite (orchestration.py:261-274).

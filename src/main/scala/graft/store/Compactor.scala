@@ -24,7 +24,7 @@ object Compactor {
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val target = Paths.get(path)
-    if (!Files.exists(target)) return 0
+    if (!UpsertWriter.recover(target)) return 0
     val bytes = dirBytes(target)
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val df = spark.read.parquet(path).repartition(n)

@@ -58,18 +58,14 @@ object UpsertWriter {
       Sizing.materializeSized(delta.dropDuplicates(keyCols))
 
     /** `target` without the rows whose `keyCols` tuple is in the delta,
-      * plus (`merge`) the delta's rows. With `allowNewColumns` a delta may
-      * carry columns the table lacks (and vice versa): survivors get typed
-      * nulls and the schema widens. The default is strict, so schema
-      * drift fails loudly, matching the validated-schema discipline of
-      * the W4 gate.
+      * plus (`merge`) the delta's rows. The union is by name and strict:
+      * a delta whose columns differ from the table's fails loudly,
+      * matching the validated-schema discipline of the W4 gate.
       */
-    def applyTo(target: DataFrame, merge: Boolean,
-        allowNewColumns: Boolean = false): DataFrame = {
+    def applyTo(target: DataFrame, merge: Boolean): DataFrame = {
       val survivors =
         antiJoin(target, Sizing.broadcastIfFits(rows, n, bytes), keyCols)
-      if (merge) survivors.unionByName(rows, allowMissingColumns = allowNewColumns)
-      else survivors
+      if (merge) survivors.unionByName(rows) else survivors
     }
 
     /** The delta's distinct values of `c`, read from the materialized
@@ -87,16 +83,15 @@ object UpsertWriter {
       path: String,
       updates: DataFrame,
       pk: Seq[String],
-      allowNewColumns: Boolean = false,
   ): Unit = {
     require(pk.nonEmpty, "upsert requires a primary key")
     val target = Paths.get(path)
     // the table must be PK-unique from its first write
-    if (!Files.exists(target))
+    if (!recover(target))
       writeAtomic(updates.dropDuplicates(pk), target)
     else
       writeAtomic(new Delta(updates, pk).applyTo(spark.read.parquet(path),
-        merge = true, allowNewColumns), target)
+        merge = true), target)
   }
 
   /** Targeted key deletion — the GDPR-erasure / right-to-be-forgotten
@@ -114,7 +109,7 @@ object UpsertWriter {
   ): Unit = {
     require(keyCols.nonEmpty, "delete requires key columns")
     val target = Paths.get(path)
-    require(Files.exists(target), s"delete target $path does not exist")
+    require(recover(target), s"delete target $path does not exist")
     writeAtomic(deletePlan(spark.read.parquet(path), keys, keyCols), target)
   }
 
@@ -272,7 +267,8 @@ object UpsertWriter {
 
   /** Write to `<path>__tmp`, then swap directories. The swap is two renames
     * (not one atomic op) — acceptable under the single-writer assumption,
-    * and crash-recoverable: `<path>__old` retains the previous version.
+    * and crash-recoverable: `<path>__old` retains the previous version,
+    * and [[recover]] puts it back when a crash fell between the renames.
     */
   private[store] def writeAtomic(df: DataFrame, target: Path): Unit = {
     val tmp = Paths.get(target.toString + "__tmp")
@@ -283,6 +279,20 @@ object UpsertWriter {
       Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
+  }
+
+  /** Whether the table at `target` exists, after undoing a crash between
+    * [[writeAtomic]]'s two renames: that leaves `<path>__old` and no
+    * `<path>`, and the previous version is restored. Every writer and
+    * compactor checks for its table through this, so such a crash is
+    * never taken for a first write (which would replace the history with
+    * one batch).
+    */
+  private[store] def recover(target: Path): Boolean = {
+    val old = Paths.get(target.toString + "__old")
+    if (!Files.exists(target) && Files.exists(old))
+      Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
+    Files.exists(target)
   }
 
   /** Shared recursive delete — the one copy (`Similarity`'s index

@@ -12,15 +12,15 @@ import graft.model.Schemas.ColumnPattern
   *  - column presence + dtype checks against a declared StructType;
   *  - nullable flags enforced via aggregated null counts (Spark's
   *    StructField.nullable is advisory, so enforcement is a data check);
-  *  - dtype coercion (`coerce=True`) via explicit cast on mismatch;
+  *  - dtype coercion (`coerce=True`, as in every reference schema) via
+  *    explicit cast on mismatch;
   *  - regex column matching over dynamic ticker sets;
   *  - LAZY validation: ALL violations are accumulated, then thrown once
   *    (pandera `lazy=True`).
   *
   * Scale note: the only action is ONE aggregate over the non-nullable
   * columns (a single pass, map-side combinable); everything else inspects
-  * `df.schema` on the driver. At 100 TB the null-count pass is a full scan —
-  * callers that trust upstream writers can pass `checkNulls = false`.
+  * `df.schema` on the driver.
   */
 object Validator {
 
@@ -35,13 +35,11 @@ object Validator {
 
   /** Numeric widening the reference gets from pandera `coerce=True`. */
   private def coercible(from: DataType, to: DataType): Boolean = (from, to) match {
-    case (a, b) if a == b => true
     case (ByteType | ShortType | IntegerType, LongType) => true
     case (ByteType | ShortType | IntegerType | LongType, DoubleType) => true
     case (FloatType, DoubleType) => true
     case (_: NumericType, _: DecimalType) => true
     case (TimestampType, DateType) => true
-    case (StringType, _) => false
     case _ => false
   }
 
@@ -49,137 +47,82 @@ object Validator {
     * coerced) frame or a full list of violations — never throws on the
     * first error (pandera lazy=True parity).
     */
-  def validate(
-      df: DataFrame,
-      expected: StructType,
-      coerce: Boolean = true,
-      checkNulls: Boolean = true,
-  ): Either[Seq[SchemaViolation], DataFrame] = {
-    val errs = Seq.newBuilder[SchemaViolation]
-    val actual = df.schema.map(f => f.name -> f.dataType).toMap
-
-    // presence + dtype
-    val casts = expected.fields.flatMap { f =>
-      actual.get(f.name) match {
-        case None =>
-          errs += SchemaViolation(f.name, "column_in_dataframe", "column missing")
-          None
-        case Some(dt) if dt == f.dataType => None
-        case Some(dt) if coerce && coercible(dt, f.dataType) =>
-          Some(f.name -> f.dataType)
-        case Some(dt) =>
-          errs += SchemaViolation(f.name, "dtype",
-            s"expected ${f.dataType.simpleString}, got ${dt.simpleString}")
-          None
-      }
-    }.toMap
-
-    val coerced = if (casts.isEmpty) df else {
-      df.select(df.columns.map { c =>
-        casts.get(c).map(t => col(c).cast(t).as(c)).getOrElse(col(c))
-      }.toSeq: _*)
+  def validate(df: DataFrame, expected: StructType)
+      : Either[Seq[SchemaViolation], DataFrame] = {
+    val present = df.columns.toSet
+    val missing = expected.fields.collect {
+      case f if !present(f.name) =>
+        SchemaViolation(f.name, "column_in_dataframe", "column missing")
     }
+    val (dtypeErrs, coerced) = conform(df,
+      expected.fields.collect { case f if present(f.name) => f.name -> f.dataType })
 
     // nullability: single aggregate pass over all non-nullable present columns
-    if (checkNulls) {
-      val nonNullable = expected.fields
-        .filter(f => !f.nullable && actual.contains(f.name)).map(_.name)
-      if (nonNullable.nonEmpty) {
-        val aggs: Seq[Column] =
-          nonNullable.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(c)).toSeq
-        val row = coerced.agg(aggs.head, aggs.tail: _*).head()
-        nonNullable.zipWithIndex.foreach { case (c, i) =>
-          val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-          if (n > 0) errs += SchemaViolation(c, "not_nullable", s"$n null value(s)")
-        }
+    val nonNullable = expected.fields
+      .filter(f => !f.nullable && present(f.name)).map(_.name)
+    val nullErrs = if (nonNullable.isEmpty) Nil else {
+      val aggs: Seq[Column] =
+        nonNullable.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(c)).toSeq
+      val row = coerced.agg(aggs.head, aggs.tail: _*).head()
+      nonNullable.toSeq.zipWithIndex.flatMap { case (c, i) =>
+        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
+        if (n > 0) Some(SchemaViolation(c, "not_nullable", s"$n null value(s)"))
+        else None
       }
     }
 
-    val all = errs.result()
+    val all = missing.toSeq ++ dtypeErrs ++ nullErrs
     if (all.nonEmpty) Left(all) else Right(coerced)
   }
 
   /** Throwing variant — used at the pre-write gate (load.py:55-63). */
-  def validateOrThrow(
-      df: DataFrame,
-      expected: StructType,
-      coerce: Boolean = true,
-      checkNulls: Boolean = true,
-  ): DataFrame =
-    validate(df, expected, coerce, checkNulls)
-      .fold(vs => throw SchemaValidationException(vs), identity)
-
-  /** Row-level quarantine split: rows violating VALUE checks (nulls in
-    * declared non-nullable columns) are routed to the invalid side with a
-    * `__violations` column naming the failed columns, instead of failing
-    * the batch. The 100 TB posture: one bad record must not kill a
-    * multi-hour job — quarantine, continue, inspect later. Structural
-    * violations (missing columns, uncoercible dtypes) still fail fast via
-    * the returned Left — they affect every row.
-    */
-  def quarantine(df: DataFrame, expected: StructType, coerce: Boolean = true)
-      : Either[Seq[SchemaViolation], (DataFrame, DataFrame)] =
-    validate(df, expected, coerce, checkNulls = false).map { coerced =>
-      val nonNullable = expected.fields.filter(!_.nullable).map(_.name)
-        .filter(coerced.columns.contains)
-      val violations = array_compact(array(nonNullable.map(c =>
-        when(col(c).isNull, lit(c)).otherwise(lit(null))): _*))
-      val flagged = coerced.withColumn("__violations", violations)
-      val valid = flagged.where(size(col("__violations")) === 0)
-        .drop("__violations")
-      val invalid = flagged.where(size(col("__violations")) > 0)
-      (valid, invalid)
-    }
+  def validateOrThrow(df: DataFrame, expected: StructType): DataFrame =
+    validate(df, expected).fold(vs => throw SchemaValidationException(vs), identity)
 
   /** Regex-column validation for the wide raw-price frame
     * (validate.py:54-71): columns matching a declared pattern must have (or
     * be coercible to) its type; plus the frame-level index check.
     *
-    * `strict = false` reproduces pandera's default: columns matching NO
-    * pattern pass through untouched (the reference's raw CSVs carry
-    * `Adj Close_<ticker>` columns that no pattern declares — they survive
-    * validation and the downstream stack, tests/e2e_test.py:173).
+    * Columns matching NO pattern pass through untouched, pandera's
+    * `strict=False` (the reference's raw CSVs carry `Adj Close_<ticker>`
+    * columns that no pattern declares — they survive validation and the
+    * downstream stack, tests/e2e_test.py:173).
     */
-  def validateWide(
-      df: DataFrame,
-      patterns: Seq[ColumnPattern],
-      index: StructField,
-      strict: Boolean = false,
-  ): Either[Seq[SchemaViolation], DataFrame] = {
-    val errs = Seq.newBuilder[SchemaViolation]
-    val compiled = patterns.map(p => (p, p.regex.r))
-
-    df.schema.fields.find(_.name == index.name) match {
+  def validateWide(df: DataFrame, patterns: Seq[ColumnPattern],
+      index: StructField): Either[Seq[SchemaViolation], DataFrame] = {
+    val indexErrs = df.schema.fields.find(_.name == index.name) match {
       case None =>
-        errs += SchemaViolation(index.name, "check_index_dtype", "index column missing")
+        Seq(SchemaViolation(index.name, "check_index_dtype", "index column missing"))
       case Some(f) if f.dataType != index.dataType =>
-        errs += SchemaViolation(index.name, "check_index_dtype",
-          s"expected ${index.dataType.simpleString}, got ${f.dataType.simpleString}")
-      case _ => ()
+        Seq(SchemaViolation(index.name, "check_index_dtype",
+          s"expected ${index.dataType.simpleString}, got ${f.dataType.simpleString}"))
+      case _ => Nil
     }
+    val compiled = patterns.map(p => (p.regex.r.pattern, p.dataType))
+    val (dtypeErrs, coerced) = conform(df,
+      df.columns.toSeq.filter(_ != index.name).flatMap { c =>
+        compiled.collectFirst { case (r, t) if r.matcher(c).matches() => c -> t }
+      })
+    val all = indexErrs ++ dtypeErrs
+    if (all.nonEmpty) Left(all) else Right(coerced)
+  }
 
-    val casts = df.schema.fields.filter(_.name != index.name).flatMap { f =>
-      compiled.find { case (_, r) => r.pattern.matcher(f.name).matches() } match {
-        case None =>
-          if (strict)
-            errs += SchemaViolation(f.name, "check_column_index_names",
-              "column matches no declared (Price, Ticker) pattern")
-          None
-        case Some((p, _)) if f.dataType == p.dataType => None
-        case Some((p, _)) if p.coerce && coercible(f.dataType, p.dataType) =>
-          Some(f.name -> p.dataType)
-        case Some((p, _)) =>
-          errs += SchemaViolation(f.name, "dtype",
-            s"expected ${p.dataType.simpleString}, got ${f.dataType.simpleString}")
-          None
-      }
-    }.toMap
-
-    val all = errs.result()
-    if (all.nonEmpty) Left(all)
-    else if (casts.isEmpty) Right(df)
-    else Right(df.select(df.columns.map { c =>
-      casts.get(c).map(t => col(c).cast(t).as(c)).getOrElse(col(c))
-    }.toSeq: _*))
+  /** The one dtype rule of both gates: each `(column, declared type)` of
+    * `declared` (columns present in `df`) keeps an equal type, is cast
+    * when [[coercible]] (pandera `coerce=True`) and is otherwise a `dtype`
+    * violation. Returns the violations and `df` with the casts projected
+    * in place (`df` itself when nothing is cast).
+    */
+  private def conform(df: DataFrame, declared: Seq[(String, DataType)])
+      : (Seq[SchemaViolation], DataFrame) = {
+    val actual = df.schema.map(f => f.name -> f.dataType).toMap
+    val changed = declared.filter { case (c, t) => actual(c) != t }
+    val (casts, errs) = changed.partition { case (c, t) => coercible(actual(c), t) }
+    val castTo = casts.toMap
+    val out = if (castTo.isEmpty) df else df.select(df.columns.toSeq.map { c =>
+      castTo.get(c).fold(col(c))(t => col(c).cast(t).as(c))
+    }: _*)
+    (errs.map { case (c, t) => SchemaViolation(c, "dtype",
+      s"expected ${t.simpleString}, got ${actual(c).simpleString}") }, out)
   }
 }

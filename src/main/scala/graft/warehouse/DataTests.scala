@@ -6,15 +6,13 @@ import org.apache.spark.sql.functions._
 /** Declarative data-quality checks — the dbt test surface
   * (reference: dw_transformer/models/properties.yml; SURVEY.md §2.9).
   *
-  * Each check returns the VIOLATING rows as a DataFrame (empty = pass),
-  * exactly like dbt's generated `SELECT ... WHERE <violation>` tests; the
-  * runner counts them. Checks compose into a suite evaluated in one pass
-  * per table where possible.
-  *
-  * Scale: not_null/accepted_values are narrow scans (predicate-pushdown
-  * friendly); unique is one hash-aggregate shuffle on the key;
-  * relationships is a left-anti join — broadcast when the parent side is a
-  * dim (dim_symbols is ~1.5k rows vs a 100 TB fact: always broadcast).
+  * [[coreModelSuite]] is the daily run's suite: the reference's ten
+  * declared checks over `dim_symbols` and `fct_prices`, counted in ONE
+  * Spark action (dbt runs its generated tests one statement at a time).
+  * The single-check forms (`notNull`, `unique`, `acceptedValues`,
+  * `relationships`) return the VIOLATING rows, exactly like dbt's
+  * generated `SELECT ... WHERE <violation>` tests; they state each check's
+  * meaning, and DataTestsSpec compares the suite's counts against them.
   */
 object DataTests {
 
@@ -50,50 +48,12 @@ object DataTests {
   final case class AcceptedValues(column: String, values: Seq[Any]) extends Check {
     val name = "accepted_values"
   }
-  final case class Relationships(column: String, parent: DataFrame,
-      parentKey: String) extends Check { val name = "relationships" }
 
-  /** One 1-row frame holding every check's violation count, columns
-    * `<prefix><index>`. The row-predicate checks (not_null,
-    * accepted_values) FUSE into a single aggregate over one scan of the
-    * table; each shuffling check (unique's groupBy, relationships'
-    * anti-join) contributes its own 1-row count; all pieces cross-join
-    * into one row, so an entire table's suite — any number of checks —
-    * materializes in ONE Spark action instead of one job per check (dbt
-    * runs its generated tests one statement at a time; there is no reason
-    * for a Spark suite to pay that serialization).
-    */
-  private def checksFrame(df: DataFrame, checks: Seq[Check],
-      prefix: String): DataFrame = {
-    // count(when(cond, 1)) rather than sum: count is never null on an
-    // empty table
-    val narrow = checks.zipWithIndex.collect {
-      case (NotNull(c), i) =>
-        count(when(col(c).isNull, 1)).as(s"$prefix$i")
-      case (AcceptedValues(c, vs), i) =>
-        count(when(!col(c).isin(vs: _*) || col(c).isNull, 1)).as(s"$prefix$i")
-    }
-    val shuffling = checks.zipWithIndex.collect {
-      case (Unique(c), i) =>
-        unique(df, c).agg(count(lit(1)).as(s"$prefix$i"))
-      case (Relationships(c, parent, pk), i) =>
-        relationships(df, c, parent, pk).agg(count(lit(1)).as(s"$prefix$i"))
-    }
-    val pieces =
-      (if (narrow.isEmpty) Nil
-       else Seq(df.agg(narrow.head, narrow.tail: _*))) ++ shuffling
-    require(pieces.nonEmpty, "empty check suite")
-    pieces.reduce(_.crossJoin(_)) // all 1-row
+  /** Every `column` value must exist in the other table of
+    * [[coreModelSuite]]. */
+  final case class Relationships(column: String) extends Check {
+    val name = "relationships"
   }
-
-  private def extract(row: org.apache.spark.sql.Row, table: String,
-      checks: Seq[Check], prefix: String): Seq[CheckResult] =
-    checks.zipWithIndex.map { case (c, i) =>
-      CheckResult(table, c.name, c.column, row.getAs[Long](s"$prefix$i"))
-    }
-
-  def run(table: String, df: DataFrame, checks: Seq[Check]): Seq[CheckResult] =
-    extract(checksFrame(df, checks, "v").head(), table, checks, "v")
 
   /** The reference's full declared suite over the two core models
     * (properties.yml:96-160), both directions of the dim↔fct relationship
@@ -110,10 +70,10 @@ object DataTests {
       AcceptedValues("in_sp400", Seq(true, false)),
       AcceptedValues("in_sp500", Seq(true, false)),
       AcceptedValues("in_sp600", Seq(true, false)),
-      Relationships("symbol", fctPrices, "symbol"))
+      Relationships("symbol"))
     val fctChecks = Seq[Check](
       NotNull("date_stamp"), NotNull("symbol"),
-      Relationships("symbol", dimSymbols, "symbol"))
+      Relationships("symbol"))
     val (dim, dimCounts) = keyed(dimSymbols, dimChecks, "symbol", "d", "f")
     val (fct, fctCounts) = keyed(fctPrices, fctChecks, "symbol", "f", "d")
     // `===` never matches a null key: a null symbol is an orphan on its
@@ -149,7 +109,7 @@ object DataTests {
       case (NotNull(`key`), _) => total(when(col(s"${p}key").isNull, n))
       case (NotNull(_) | AcceptedValues(_, _), i) => total(col(s"$p$i"))
       case (Unique(`key`), _) => count(when(n > 1, 1))
-      case (Relationships(`key`, _, _), _) =>
+      case (Relationships(`key`), _) =>
         total(when(col(s"${other}n").isNull, n))
       case (c, _) => throw new IllegalArgumentException(
         s"${c.name}(${c.column}) is not keyed on $key")

@@ -218,21 +218,4 @@ class RetrievalSpec extends SparkSpec {
       s"the models' 4 reference rows were evaluated ${evaluated.value} times")
     assert(imp == Seq(true, false, false))
   }
-
-  test("applyFeedNgramModel: folded feeds equal a rebuilt model") {
-    val v0 = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val model0 = Retrieval.ngramModel(v0, "text")
-    // update doc 1 (retract old grams, add new), delete doc 2
-    val feed = Seq(
-      (1L, "a b c", -1L), (1L, "x y", 1L),
-      (2L, "a b d", -1L))
-      .toDF("doc_id", "text", "__sign")
-    val folded = Retrieval.applyFeedNgramModel(model0, feed, "text")
-      .as[(String, Long)].collect().toMap
-    val rebuilt = Retrieval.ngramModel(
-        Seq((1L, "x y")).toDF("doc_id", "text"), "text")
-      .as[(String, Long)].collect().toMap
-    assert(folded == rebuilt) // "a b","b c","b d" all reach zero and vanish
-    assert(folded == Map("x y" -> 1L))
-  }
 }

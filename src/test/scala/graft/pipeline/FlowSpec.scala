@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.LocalDate
 
@@ -134,6 +134,48 @@ class FlowSpec extends SparkSpec {
     assert(dim.count() == 4) // BRK-B, AAPL, EURUSD, USDCHF
     val results = Flow.runDataTests(spark, dw)
     assert(results.forall(_.passed), results.filterNot(_.passed).mkString("; "))
+  }
+
+  test("promotion pushes its date filter down to the lake's parquet scan") {
+    val (lake, dw) = roots()
+    Seq("2024-01-01", "2024-01-02", "2024-01-03")
+      .map(d => (java.sql.Date.valueOf(d), "EURUSD", 1.0))
+      .toDF("date_stamp", "symbol", "close")
+      .write.parquet(Extract.lakePath(lake, "price_history", "fx"))
+    val day = LocalDate.parse("2024-01-02")
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val run = try rec.record(Flow.promote(spark, lake, "price_history", "fx",
+        s"$dw/price_history_fx", Some(Seq("date_stamp", "symbol")),
+        dateRange = Some((day, day))))._2
+      finally rec.close()
+    val pushed = run.executions.flatMap(_.plan.linesIterator)
+      .filter(_.contains("PushedFilters"))
+    assert(pushed.exists(l => l.contains("GreaterThanOrEqual(date_stamp") &&
+      l.contains("LessThanOrEqual(date_stamp")), pushed)
+    assert(spark.read.parquet(s"$dw/price_history_fx").count() == 1)
+    // a lake table that was never written promotes nothing
+    Flow.promote(spark, lake, "symbols", "fx", s"$dw/symbols_fx", None)
+    assert(!Files.exists(Paths.get(s"$dw/symbols_fx")))
+  }
+
+  test("one fixture day runs in at most 78 Spark jobs") {
+    val (lake, dw) = roots()
+    val src = new FixtureSource()
+    def day(s: String, e: String): Unit = {
+      Seq("sp_stocks", "fx").foreach(cat => Flow.etlFlow(spark, src, lake, dw, cat,
+        start = Some(LocalDate.parse(s)), end = Some(LocalDate.parse(e)),
+        today = LocalDate.parse("2024-06-01")))
+      Flow.runModels(spark, dw)
+      Flow.runDataTests(spark, dw)
+    }
+    day("2024-01-01", "2024-01-05") // history
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val run = try rec.record(day("2024-01-06", "2024-01-06"))._2 finally rec.close()
+    // per flow: the symbol gate and merge, the price transform, gate and
+    // merge, two promotions; then the model rebuild and the one-action DQ
+    // suite (78 jobs on local[4])
+    assert(run.jobs.length <= 78,
+      s"${run.jobs.length} jobs:\n" + run.jobs.map(_.desc).mkString("\n"))
   }
 
   test("resolveDates reproduces the reference's defaulting rules") {

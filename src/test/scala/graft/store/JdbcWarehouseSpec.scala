@@ -92,7 +92,8 @@ class JdbcWarehouseSpec extends SparkSpec {
 
   test("promoteJdbc date-filters the lake scan and merges into the DB") {
     val (url, props) = derby()
-    val lake = Files.createTempDirectory("graft_lake_").toString + "/t"
+    val lakeRoot = Files.createTempDirectory("graft_lake_").toString
+    val lake = graft.pipeline.Extract.lakePath(lakeRoot, "price_history", "t")
     val df = Seq(
       (java.sql.Date.valueOf("2024-01-01"), "AAPL", 1.0),
       (java.sql.Date.valueOf("2024-02-01"), "AAPL", 2.0),
@@ -103,8 +104,8 @@ class JdbcWarehouseSpec extends SparkSpec {
     p2.putAll(props)
     p2.setProperty("createTableColumnTypes",
       "date_stamp DATE, symbol VARCHAR(32), close DOUBLE")
-    graft.pipeline.Flow.promoteJdbc(spark, lake, url, "dw_prices",
-      Some(Seq("date_stamp", "symbol")), p2,
+    graft.pipeline.Flow.promoteJdbc(spark, lakeRoot, "price_history", "t",
+      url, "dw_prices", Some(Seq("date_stamp", "symbol")), p2,
       dateRange = Some((java.time.LocalDate.parse("2024-01-15"),
         java.time.LocalDate.parse("2024-02-15"))))
     val got = JdbcWarehouse.read(spark, url, "dw_prices", p2)

@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -131,22 +131,28 @@ class UpsertWriterSpec extends SparkSpec {
     assert(spark.read.parquet(p).count() == 1)
   }
 
-  test("schema evolution: a delta with a NEW column widens the table") {
+  test("schema drift: a delta with a NEW column fails loudly") {
     val path = tmp()
     UpsertWriter.upsert(spark, path,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
-    // strict default fails loudly on drift
     intercept[Exception] {
       UpsertWriter.upsert(spark, path,
         Seq((3L, "c", 9.9)).toDF("id", "v", "extra"), Seq("id"))
     }
-    // evolving merge widens: survivors get a typed null for `extra`
-    UpsertWriter.upsert(spark, path,
-      Seq((2L, "B", 9.9)).toDF("id", "v", "extra"), Seq("id"),
-      allowNewColumns = true)
-    val got = spark.read.parquet(path)
-      .orderBy("id").as[(Long, String, Option[Double])].collect().toSeq
-    assert(got == Seq((1L, "a", None), (2L, "B", Some(9.9))))
+    val got = spark.read.parquet(path).orderBy("id").as[(Long, String)].collect().toSeq
+    assert(got == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("a crash between the swap's two renames loses no history") {
+    val p = tmp()
+    UpsertWriter.upsert(spark, p, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
+    // the state a crash after `<path>` -> `<path>__old`, before
+    // `<path>__tmp` -> `<path>`, leaves behind
+    Files.move(Paths.get(p), Paths.get(p + "__old"))
+    UpsertWriter.upsert(spark, p, Seq((2L, "B"), (3L, "c")).toDF("id", "v"), Seq("id"))
+    val got = spark.read.parquet(p).orderBy("id").as[(Long, String)].collect().toSeq
+    assert(got == Seq((1L, "a"), (2L, "B"), (3L, "c")))
+    assert(!Files.exists(Paths.get(p + "__old")))
   }
 
   test("delete removes every row for the given keys, others survive") {

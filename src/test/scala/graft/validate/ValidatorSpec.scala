@@ -1,11 +1,9 @@
 package graft.validate
 
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.model.Schemas
-import graft.model.Schemas.ColumnPattern
 
 /** Pandera-parity validation semantics (reference: py_pipeline/validate.py):
   * presence, dtype, coercion, nullability, and LAZY accumulation of all
@@ -61,14 +59,12 @@ class ValidatorSpec extends SparkSpec {
     val df = Seq(("2024-01-01 00:00:00", 1.0f, 5, "junk"))
       .toDF("ts", "Open_AAPL", "Volume_AAPL", "bogus")
       .selectExpr("cast(ts as timestamp) as Date", "Open_AAPL", "Volume_AAPL", "bogus")
-    // default (pandera strict=False): unmatched columns pass through
-    assert(Validator.validateWide(df, Schemas.rawPricePatterns,
-      Schemas.rawPriceIndex).isRight)
-    // strict mode flags them
+    // pandera strict=False: an unmatched column is no violation and
+    // passes through untouched
     val out = Validator.validateWide(df, Schemas.rawPricePatterns,
-      Schemas.rawPriceIndex, strict = true)
-    assert(out.isLeft)
-    assert(out.left.toOption.get.exists(_.column == "bogus"))
+      Schemas.rawPriceIndex)
+    assert(out.isRight)
+    assert(out.toOption.get.schema("bogus").dataType == StringType)
 
     val ok = Validator.validateWide(df.drop("bogus"),
       Schemas.rawPricePatterns, Schemas.rawPriceIndex)
@@ -76,29 +72,6 @@ class ValidatorSpec extends SparkSpec {
     val sch = ok.toOption.get.schema
     assert(sch("Open_AAPL").dataType == DoubleType)  // float -> double coerced
     assert(sch("Volume_AAPL").dataType == LongType)  // int -> long coerced
-  }
-
-  test("quarantine splits null-violating rows instead of failing the batch") {
-    val df = Seq((Some(1L), "a"), (None, "b"), (Some(3L), null))
-      .toDF("id", "name")
-    val out = Validator.quarantine(df, StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("name", StringType, nullable = false))))
-    assert(out.isRight)
-    val (valid, invalid) = out.toOption.get
-    assert(valid.count() == 1)
-    assert(invalid.count() == 2)
-    val viol = invalid.orderBy(col("name").asc_nulls_last)
-      .select("__violations").collect().map(_.getSeq[String](0))
-    assert(viol(0) == Seq("id"))    // row ("b"): null id
-    assert(viol(1) == Seq("name"))  // row (3): null name sorts last
-  }
-
-  test("quarantine still fails fast on structural violations") {
-    val df = Seq((1L, "a")).toDF("id", "name")
-    val out = Validator.quarantine(df, StructType(Seq(
-      StructField("ghost", StringType, nullable = false))))
-    assert(out.isLeft)
   }
 
   test("validateWide flags a wrong-typed Date index") {

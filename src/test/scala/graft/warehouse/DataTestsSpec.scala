@@ -1,50 +1,27 @@
 package graft.warehouse
 
 import java.sql.Date
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
 class DataTestsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("run evaluates a whole table suite correctly in a single action") {
-    val df = Seq((1L, "a", "X"), (2L, null, "Stock"), (2L, "c", "FX"))
-      .toDF("id", "name", "kind")
-    val parent = Seq("a", "c").toDF("pname")
-    val executions = new AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = { executions.incrementAndGet(); () }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val res = DataTests.run("t", df, Seq(
-        DataTests.NotNull("name"),
-        DataTests.Unique("id"),
-        DataTests.AcceptedValues("kind", Seq("Stock", "FX")),
-        DataTests.Relationships("name", parent, "pname")))
-      assert(res.map(r => (r.check, r.column, r.violations)) == Seq(
-        ("not_null", "name", 1L),
-        ("unique", "id", 1L),
-        ("accepted_values", "kind", 1L),
-        ("relationships", "name", 1L)))
-      // the listener bus is async: wait for it to drain, then the whole
-      // 4-check suite must have been ONE action (dbt-style one statement
-      // per test would show 4)
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (executions.get() < 1 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      Thread.sleep(500) // allow any extra (unexpected) executions to land
-      assert(executions.get() == 1,
-        s"expected the suite to run as one action, saw ${executions.get()}")
-    } finally spark.listenerManager.unregister(listener)
+  test("coreModelSuite evaluates the whole suite in a single action") {
+    val dim = Seq(("A", "Stock", true, false, false), ("B", "FX", false, false, false))
+      .toDF("symbol", "asset_type", "in_sp400", "in_sp500", "in_sp600")
+    val fct = Seq((Date.valueOf("2024-01-02"), "A"), (Date.valueOf("2024-01-02"), "Z"))
+      .toDF("date_stamp", "symbol")
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val (res, run) = try rec.record(DataTests.coreModelSuite(dim, fct))
+      finally rec.close()
+    // dbt-style one statement per check would show ten
+    assert(run.executions.length == 1,
+      s"expected one action, saw ${run.executions.map(_.description)}")
+    assert(res.map(r => (r.table, r.check, r.violations)).filter(_._3 > 0) ==
+      Seq(("dim_symbols", "relationships", 1L), ("fct_prices", "relationships", 1L)))
   }
 
   test("coreModelSuite counts equal each reference check run on its own") {
@@ -96,13 +73,5 @@ class DataTestsSpec extends SparkSpec {
       ("dim_symbols", "relationships", "symbol"),
       ("fct_prices", "not_null", "date_stamp"), ("fct_prices", "not_null", "symbol"),
       ("fct_prices", "relationships", "symbol")))
-  }
-
-  test("empty table: counts are zero, not null") {
-    val df = Seq.empty[(Long, String)].toDF("id", "name")
-    val res = DataTests.run("t", df,
-      Seq(DataTests.NotNull("name"), DataTests.Unique("id")))
-    assert(res.forall(_.violations == 0L))
-    assert(res.forall(_.passed))
   }
 }
