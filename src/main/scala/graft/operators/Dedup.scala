@@ -48,10 +48,10 @@ object Dedup {
     * whose every line lost comes back as the EMPTY string — removed
     * content, not a removed row — while a null-text doc stays null.
     *
-    * Shape: explode to (line, doc, pos) with the occurrence rank
-    * PACKED into one long (39 bits of doc id above 24 bits of line
-    * position — lexicographic (id, pos) order IS numeric order on the
-    * pack); ONE combine-enabled shuffle on the line computes each
+    * Shape: the [[explodeLines]] rows with the occurrence rank PACKED
+    * into one long ([[occurrenceKey]]: 39 bits of doc id above 24 bits
+    * of line position — lexicographic (id, pos) order IS numeric order
+    * on the pack); ONE combine-enabled shuffle on the line computes each
     * line's global minimum occurrence as a plain codegen'd `min` over
     * that long (a `min(struct(id, pos))` falls back to SortAggregate —
     * BOTH aggregate phases then sort every line row by the string key
@@ -61,35 +61,59 @@ object Dedup {
     * so the line string is redundant in the join and the build side
     * carries 8 bytes per distinct line instead of the line text (the
     * string-keyed form shipped a corpus-of-lines-sized relation
-    * through the join); one shuffle on the doc reassembles. No
+    * through the join); one shuffle on the doc reassembles
+    * ([[reassembleLines]]). No
     * per-group state is ever corpus-sized: a line group folds to one
     * long, a doc group is doc-sized. Ids outside [0, 2^39) or
     * positions >= 2^24 (a 16M-line document) fail loudly rather than
     * mis-rank.
     */
   def dedupLinesKeepFirst(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", sep: String = "\n"): DataFrame = {
-    val lines = docs.where(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
-      .withColumn("__k", {
-        val id = col(idCol).cast("long")
-        when(id.isNull || id < 0 || id >= lit(1L << 39) ||
-            col("pos") >= lit(1 << 24),
-          raise_error(lit("dedupLinesKeepFirst: occurrence outside the " +
-            "packable range (numeric doc id in [0, 2^39), line pos < " +
-            "2^24)")).cast("long"))
-          .otherwise(shiftleft(id, 24) + col("pos"))
-      })
+      textCol: String = "text"): DataFrame = {
+    val lines = explodeLines(docs, idCol, textCol)
+      .withColumn("__k", occurrenceKey(idCol, "dedupLinesKeepFirst"))
     val winners = lines.groupBy("line")
       .agg(min(col("__k")).as("__k"))
       .select("__k")
-    val rebuilt = lines.join(winners, Seq("__k"), "left_semi")
-      .groupBy(idCol)
+    reassembleLines(docs, lines.join(winners, Seq("__k"), "left_semi"),
+      idCol, textCol)
+  }
+
+  /** The line family's (doc id, `pos`, `line`) rows: every non-null doc
+    * split on "\n", `pos` 0-based. */
+  private def explodeLines(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.where(col(textCol).isNotNull)
+      .select(col(idCol),
+        posexplode(split(col(textCol),
+          java.util.regex.Pattern.quote("\n"))).as(Seq("pos", "line")))
+
+  /** An [[explodeLines]] row's occurrence rank packed into one long: 39
+    * bits of doc id above 24 bits of line position, so lexicographic
+    * (id, pos) order is numeric order and every occurrence's pack is
+    * unique. An id outside [0, 2^39) or a position >= 2^24 fails the
+    * job with an error naming `op` rather than mis-ranking.
+    */
+  private def occurrenceKey(idCol: String, op: String): Column = {
+    val id = col(idCol).cast("long")
+    when(id.isNull || id < 0 || id >= lit(1L << 39) ||
+        col("pos") >= lit(1 << 24),
+      raise_error(lit(s"$op: occurrence outside the packable range " +
+        "(numeric doc id in [0, 2^39), line pos < 2^24)")).cast("long"))
+      .otherwise(shiftleft(id, 24) + col("pos"))
+  }
+
+  /** `docs` rebuilt from the `kept` [[explodeLines]] rows: one shuffle
+    * on the doc joins each doc's kept lines in `pos` order, then a doc
+    * with null text stays null and a doc that kept no line becomes the
+    * EMPTY string (removed content, not a removed row).
+    */
+  private def reassembleLines(docs: DataFrame, kept: DataFrame,
+      idCol: String, textCol: String): DataFrame = {
+    val rebuilt = kept.groupBy(idCol)
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("pos"), col("line")))),
-        x => x.getField("line")), sep).as("__clean"))
+        x => x.getField("line")), "\n").as("__clean"))
     docs.select(col(idCol), col(textCol).isNotNull.as("__had"))
       .join(rebuilt, Seq(idCol), "left")
       .select(col(idCol),
@@ -126,10 +150,9 @@ object Dedup {
     */
   def lineIndexAddBatch(index: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
-      sep: String = "\n", hashLines: Boolean = false)
-      : (DataFrame, DataFrame) = {
+      hashLines: Boolean = false): (DataFrame, DataFrame) = {
     val (cleaned, freshLines) =
-      lineIndexAddBatchParts(index, batch, idCol, textCol, sep, hashLines)
+      lineIndexAddBatchParts(index, batch, idCol, textCol, hashLines)
     (cleaned,
       markLineRepr(index.select("line").unionByName(freshLines), hashLines))
   }
@@ -192,8 +215,7 @@ object Dedup {
     */
   private[graft] def lineIndexAddBatchParts(index: DataFrame,
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      sep: String = "\n", hashLines: Boolean = false)
-      : (DataFrame, DataFrame) = {
+      hashLines: Boolean = false): (DataFrame, DataFrame) = {
     requireLineRepr(index, hashLines, "lineIndexAddBatch")
     // the probe key: the line itself, or its 60-bit fingerprint — the
     // within-batch keep-first groups on the SAME key, so hashed mode's
@@ -201,20 +223,9 @@ object Dedup {
     // canonical copy, never a kept duplicate)
     val keyOf: Column => Column =
       if (hashLines) lineHash(_) else identity
-    val lines = batch.where(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
+    val lines = explodeLines(batch, idCol, textCol)
       .withColumn("__lk", keyOf(col("line")))
-      .withColumn("__k", {
-        val id = col(idCol).cast("long")
-        when(id.isNull || id < 0 || id >= lit(1L << 39) ||
-            col("pos") >= lit(1 << 24),
-          raise_error(lit("lineIndexAddBatch: occurrence outside the " +
-            "packable range (numeric doc id in [0, 2^39), line pos < " +
-            "2^24)")).cast("long"))
-          .otherwise(shiftleft(id, 24) + col("pos"))
-      })
+      .withColumn("__k", occurrenceKey(idCol, "lineIndexAddBatch"))
     // seen lines drop wholesale; the anti-join build side is the index,
     // which a deployment partitions/buckets on the line key
     val fresh = lines.join(index.select(col("line").as("__lk")),
@@ -222,18 +233,8 @@ object Dedup {
       .localCheckpoint()
     val winners = fresh.groupBy("__lk").agg(min(col("__k")).as("__k"))
       .select("__k")
-    val rebuilt = fresh.join(winners, Seq("__k"), "left_semi")
-      .groupBy(idCol)
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("pos"), col("line")))),
-        x => x.getField("line")), sep).as("__clean"))
-    val cleaned = batch
-      .select(col(idCol), col(textCol).isNotNull.as("__had"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__had"), coalesce(col("__clean"), lit("")))
-          .otherwise(lit(null).cast("string")).as(textCol))
-    (cleaned,
+    (reassembleLines(batch, fresh.join(winners, Seq("__k"), "left_semi"),
+        idCol, textCol),
       markLineRepr(fresh.select(col("__lk").as("line")).distinct(),
         hashLines))
   }
@@ -261,14 +262,11 @@ object Dedup {
     * count index, never a corpus rescan.
     */
   def lineCountAddBatch(counts: DataFrame, batch: DataFrame, minDocs: Long,
-      idCol: String = "doc_id", textCol: String = "text",
-      sep: String = "\n"): (DataFrame, DataFrame) = {
+      idCol: String = "doc_id", textCol: String = "text")
+      : (DataFrame, DataFrame) = {
     require(minDocs >= 2, "lineCountAddBatch needs minDocs >= 2 — " +
       "at 1 it would empty the corpus")
-    val lines = batch.where(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
+    val lines = explodeLines(batch, idCol, textCol)
     // the batch's own distinct-doc count per line — both the state
     // delta and one side of the threshold test; materialized once
     val delta = lines.groupBy("line")
@@ -283,51 +281,30 @@ object Dedup {
         Seq("line"), "left")
       .where(coalesce(col("__old"), lit(0L)) + col("n_docs") >= minDocs)
       .select("line")
-    val rebuilt = lines.join(frequent, Seq("line"), "left_anti")
-      .groupBy(idCol)
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("pos"), col("line")))),
-        x => x.getField("line")), sep).as("__clean"))
-    val cleaned = batch
-      .select(col(idCol), col(textCol).isNotNull.as("__had"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__had"), coalesce(col("__clean"), lit("")))
-          .otherwise(lit(null).cast("string")).as(textCol))
-    (cleaned, delta)
+    (reassembleLines(batch, lines.join(frequent, Seq("line"), "left_anti"),
+      idCol, textCol), delta)
   }
 
   /** The companion boilerplate STRIP: remove every copy of any line
     * that appears in at least `minDocs` distinct documents (CCNet's
     * dedup mode for shared chrome — when a line is on three pages it
     * is navigation, not content, and the first page doesn't get to
-    * keep it either). Same explode/aggregate/semi-join/reassemble
-    * shape as [[dedupLinesKeepFirst]]; the line aggregate folds to one
-    * approximate-free distinct-doc count per line.
+    * keep it either). The line rows and the reassembly are
+    * [[dedupLinesKeepFirst]]'s ([[explodeLines]], [[reassembleLines]]);
+    * the line aggregate folds to one approximate-free distinct-doc count
+    * per line, and the frequent set is anti-joined out.
     */
   def stripFrequentLines(docs: DataFrame, minDocs: Long,
-      idCol: String = "doc_id", textCol: String = "text",
-      sep: String = "\n"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(minDocs >= 2, "stripFrequentLines needs minDocs >= 2 — " +
       "at 1 it would empty the corpus")
-    val lines = docs.where(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
+    val lines = explodeLines(docs, idCol, textCol)
     val frequent = lines.groupBy("line")
       .agg(countDistinct(col(idCol)).as("__nd"))
       .where(col("__nd") >= minDocs)
       .select(col("line"))
-    val rebuilt = lines.join(frequent, Seq("line"), "left_anti")
-      .groupBy(idCol)
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("pos"), col("line")))),
-        x => x.getField("line")), sep).as("__clean"))
-    docs.select(col(idCol), col(textCol).isNotNull.as("__had"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__had"), coalesce(col("__clean"), lit("")))
-          .otherwise(lit(null).cast("string")).as(textCol))
+    reassembleLines(docs, lines.join(frequent, Seq("line"), "left_anti"),
+      idCol, textCol)
   }
 
   /** Deterministic affine minhash family over the portable 32-bit hash:
@@ -558,8 +535,7 @@ object Dedup {
     * index: |A∩B| counted directly from the shingle self-join, |A|,|B|
     * from per-doc sizes. One shuffle on shingle, one aggregation on the
     * pair. Quadratic only inside a shingle's posting list — on corpora
-    * with "hub" shingles prefer capping via [[ngramJaccardPairsPrefix]]
-    * or switching to [[minhashLshPairs]].
+    * with "hub" shingles switch to [[minhashLshPairs]].
     */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double, shingleN: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -579,57 +555,6 @@ object Dedup {
     inter
       .join(Sizing.broadcastIfFits(sizes.toDF("id_a", "sz_a"), bc), "id_a")
       .join(Sizing.broadcastIfFits(sizes.toDF("id_b", "sz_b"), bc), "id_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Same result set via AllPairs-style prefix filtering (Bayardo et al.,
-    * WWW'07 "Scaling Up All Pairs Similarity Search" — public literature):
-    *
-    *  1. per doc: sorted distinct shingle array + size (narrow map);
-    *  2. PREFIX index: a pair with jaccard ≥ t must share a shingle within
-    *     the first `|d| - ceil(t·|d|) + 1` shingles of any canonical
-    *     ordering — only the prefix is exploded into the inverted index;
-    *  3. LENGTH filter on candidates: jaccard ≥ t forces
-    *     t·|A| ≤ |B| (for |A| ≤ |B|);
-    *  4. exact verify per candidate via `array_intersect` on the two
-    *     shingle arrays (codegen'd, no second shuffle over shingles).
-    *
-    * Wins when the prefix index is selective (high thresholds, diverse
-    * vocabulary); the plain inverted-index form wins when hub shingles
-    * dominate anyway and counting beats distinct+verify.
-    */
-  def ngramJaccardPairsPrefix(docs: DataFrame, threshold: Double, shingleN: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol).as("id"),
-      array_sort(array_distinct(
-        graft.functions.TextExpressions.shingles(col(textCol), shingleN))).as("sh"))
-      .withColumn("sz", size(col("sh")))
-    val prefixLen = (col("sz") - ceil(col("sz") * threshold) + 1).cast("int")
-    val prefix = base.select(col("id"), col("sz"),
-      explode(slice(col("sh"), lit(1), prefixLen)).as("s"))
-    val cand = prefix.select(col("s"), col("id").as("id_a"), col("sz").as("sz_a"))
-      .join(prefix.select(col("s"), col("id").as("id_b"), col("sz").as("sz_b")), Seq("s"))
-      .where(col("id_a") < col("id_b") &&
-        // length filter: t*max(szA,szB) <= min(szA,szB) is necessary for j>=t
-        least(col("sz_a"), col("sz_b")) >=
-          ceil(greatest(col("sz_a"), col("sz_b")) * threshold))
-      .select("id_a", "id_b").distinct()
-    // broadcast the per-doc arrays to the candidate stream when the corpus
-    // is provably small: candidates outnumber docs, so shipping the (heavy,
-    // array-carrying) doc table to candidates beats shuffling candidates.
-    // Beyond broadcast size both sides hash-partition by id instead — the
-    // shuffle is linear in candidates and never materializes the corpus on
-    // one node.
-    val bc = Sizing.fitsBroadcast(base)
-    cand
-      .join(Sizing.broadcastIfFits(base.select(col("id").as("id_a"),
-        col("sh").as("sh_a"), col("sz").as("sz_a")), bc), "id_a")
-      .join(Sizing.broadcastIfFits(base.select(col("id").as("id_b"),
-        col("sh").as("sh_b"), col("sz").as("sz_b")), bc), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .where(col("jaccard") >= threshold)
@@ -885,19 +810,17 @@ object Dedup {
       maxEvalWindows: Long = 10000000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenNgrams needs a positive n")
-    def windows(df: DataFrame) =
-      if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
-      else tokenWindows(df, idCol, idsCol, n)
     // materialize the (benchmark-sized) eval windows ONCE: the guard
     // and the join would otherwise each execute the whole eval branch —
     // including its tokenize passes — from scratch
     val (evalW, nEval, evalBytes) = Sizing.materializeSized(
-      windows(eval).select("gram").distinct())
+      tokenWindowsAt(eval, idCol, idsCol, n, hashWindows)
+        .select("gram").distinct())
     require(nEval <= maxEvalWindows,
       s"decontaminateTokenNgrams: eval set has $nEval distinct windows — " +
         s"the broadcast side is capped at $maxEvalWindows; shard the eval " +
         "set or raise n (windows per doc shrink as n grows)")
-    markRepr(windows(train)
+    markRepr(tokenWindowsAt(train, idCol, idsCol, n, hashWindows)
       // right side distinct: no fanout
       .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
       .groupBy(col(idCol))
@@ -1028,6 +951,14 @@ object Dedup {
       .toDF(idCol, "gram")
   }
 
+  /** The family's representation switch: the (id, gram) windows of `df`
+    * as int64 fingerprints ([[tokenWindowHashes]]) when `hashWindows`,
+    * else as space-joined id strings ([[tokenWindows]]). */
+  private def tokenWindowsAt(df: DataFrame, idCol: String, idsCol: String,
+      n: Int, hashWindows: Boolean): DataFrame =
+    if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
+    else tokenWindows(df, idCol, idsCol, n)
+
   /** Driver-collected SORTED int64 fingerprints of an eval set's
     * distinct token windows — the decontamination list an ingest
     * pipeline carries into a stream's stateless prepare stage
@@ -1124,8 +1055,8 @@ object Dedup {
     val s = train.sparkSession
     import s.implicits._
     val (evalW, nEval, evalBytes) = Sizing.materializeSized(
-      (if (hashWindows) tokenWindowHashes(eval, idCol, idsCol, n)
-        else tokenWindows(eval, idCol, idsCol, n)).select("gram").distinct())
+      tokenWindowsAt(eval, idCol, idsCol, n, hashWindows)
+        .select("gram").distinct())
     if (nEval == 0) // nothing to leak against — no contaminated docs
       // same schema (incl. nullability) as the normal path, so a caller
       // sharding the eval set can unionByName empty and non-empty shards
@@ -1188,11 +1119,9 @@ object Dedup {
       maxEvalWindows: Long = 10000000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenCoverage needs a positive n")
-    def evalWindows(df: DataFrame) =
-      if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
-      else tokenWindows(df, idCol, idsCol, n)
     val (evalW, nEval, evalBytes) = Sizing.materializeSized(
-      evalWindows(eval).select("gram").distinct())
+      tokenWindowsAt(eval, idCol, idsCol, n, hashWindows)
+        .select("gram").distinct())
     require(nEval <= maxEvalWindows,
       s"decontaminateTokenCoverage: eval set has $nEval distinct windows " +
         s"— the broadcast side is capped at $maxEvalWindows; shard the " +
@@ -1267,15 +1196,13 @@ object Dedup {
       maxEvalWindows: Long = 10000000L,
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "contaminationByEvalDoc needs a positive n")
-    def windows(df: DataFrame) =
-      if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
-      else tokenWindows(df, idCol, idsCol, n)
-    val (evalW, nEval, evalBytes) = Sizing.materializeSized(windows(eval)
-      .select(col(idCol).as("eval_doc_id"), col("gram")))
+    val (evalW, nEval, evalBytes) = Sizing.materializeSized(
+      tokenWindowsAt(eval, idCol, idsCol, n, hashWindows)
+        .select(col(idCol).as("eval_doc_id"), col("gram")))
     require(nEval <= maxEvalWindows,
       s"contaminationByEvalDoc: eval set has $nEval windows — the " +
         s"build side is capped at $maxEvalWindows; shard the eval set")
-    windows(train)
+    tokenWindowsAt(train, idCol, idsCol, n, hashWindows)
       .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
       .groupBy(col("eval_doc_id"))
       .agg(countDistinct(col(idCol)).as("n_train_docs"),
@@ -1355,12 +1282,11 @@ object Dedup {
       hashWindows: Boolean = false): DataFrame = {
     require(n >= 1, "decontaminateTokenNgramsDelta needs a positive n")
     requireRepr(oldHits, hashWindows, "decontaminateTokenNgramsDelta")
-    def windows(df: DataFrame) =
-      if (hashWindows) tokenWindowHashes(df, idCol, idsCol, n)
-      else tokenWindows(df, idCol, idsCol, n)
-    val oldW = windows(evalOld).select("gram").distinct()
+    val oldW = tokenWindowsAt(evalOld, idCol, idsCol, n, hashWindows)
+      .select("gram").distinct()
     val (deltaW, nDelta, deltaBytes) = Sizing.materializeSized(
-      windows(evalNew).select("gram").distinct()
+      tokenWindowsAt(evalNew, idCol, idsCol, n, hashWindows)
+        .select("gram").distinct()
         .join(oldW, Seq("gram"), "left_anti"))
     // the docstring's common case — a new benchmark with zero novel
     // windows — must not pay the corpus traversal against an empty
@@ -1371,7 +1297,7 @@ object Dedup {
     require(nDelta <= maxEvalWindows,
       s"decontaminateTokenNgramsDelta: new eval windows number $nDelta — " +
         s"the build side is capped at $maxEvalWindows; shard the delta")
-    val deltaHits = windows(train)
+    val deltaHits = tokenWindowsAt(train, idCol, idsCol, n, hashWindows)
       .join(Sizing.broadcastIfFits(deltaW, nDelta, deltaBytes), Seq("gram"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"))

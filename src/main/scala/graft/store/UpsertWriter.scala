@@ -44,9 +44,16 @@ import graft.operators.Sizing
   */
 object UpsertWriter {
 
-  /** Overwrite-all (dlt "replace", load.py:52-53,104-105). */
-  def replace(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+  /** Overwrite-all (dlt "replace", load.py:52-53,104-105), through the
+    * same [[writeAtomic]] swap as a merge: the live table is never
+    * overwritten in place, so a failed or killed replace leaves the
+    * previous version readable.
+    */
+  def replace(df: DataFrame, path: String): Unit = {
+    val target = Paths.get(path)
+    recover(target)
+    writeAtomic(df, target)
+  }
 
   /** A merge's update set or a delete's key set, deduplicated on
     * `keyCols` (an arbitrary-but-deterministic row per key, like dlt's
@@ -269,15 +276,19 @@ object UpsertWriter {
     * (not one atomic op) — acceptable under the single-writer assumption,
     * and crash-recoverable: `<path>__old` retains the previous version,
     * and [[recover]] puts it back when a crash fell between the renames.
+    * `<path>__tmp` is removed in a `finally`, so a failed write never
+    * strands a partial copy.
     */
   private[store] def writeAtomic(df: DataFrame, target: Path): Unit = {
     val tmp = Paths.get(target.toString + "__tmp")
     val old = Paths.get(target.toString + "__old")
     deleteRecursively(tmp); deleteRecursively(old)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (Files.exists(target))
-      Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    try {
+      df.write.mode("overwrite").parquet(tmp.toString)
+      if (Files.exists(target))
+        Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally deleteRecursively(tmp)
     deleteRecursively(old)
   }
 

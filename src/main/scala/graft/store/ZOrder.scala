@@ -18,19 +18,14 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Morton interleave of the low `bits` bits of two non-negative integer
-    * columns: bit i of `x` lands at position 2i, bit i of `y` at 2i+1.
-    * Built from shiftright / bitwise-and / multiply-by-2^k only, so the
-    * expression stays in whole-stage codegen and has an exact ANSI-SQL
-    * twin (`zValueSql`).
-    */
-  def zValue(x: Column, y: Column, bits: Int = 16): Column =
-    zValueN(Seq(x, y), bits)
-
-  /** N-column round-robin interleave: bit i of column j lands at position
+  /** Morton interleave of the low `bits` bits of n ≥ 2 non-negative
+    * integer columns, round-robin: bit i of column j lands at position
     * i·n + j, so every layout column contributes equally to every z-value
-    * prefix (the OPTIMIZE ZORDER BY (a, b, c) generalization). Total bits
-    * (`bits × n`) must fit a signed long.
+    * prefix (OPTIMIZE ZORDER BY (a, b, c); with two columns bit i of the
+    * first lands at 2i, of the second at 2i+1). Built from shiftright /
+    * bitwise-and / multiply-by-2^k only, so the expression stays in
+    * whole-stage codegen and has an exact ANSI-SQL twin
+    * ([[zValueNSql]]). Total bits (`bits × n`) must fit a signed long.
     */
   def zValueN(cols: Seq[Column], bits: Int = 16): Column = {
     val n = cols.size
@@ -45,12 +40,8 @@ object ZOrder {
   }
 
   /** The identical computation as an ANSI-SQL fragment (DuckDB-compatible:
-    * `>>`, `&`, integer multiply/add) — the oracle twin of [[zValue]].
+    * `>>`, `&`, integer multiply/add) — the oracle twin of [[zValueN]].
     */
-  def zValueSql(x: String, y: String, bits: Int = 16): String =
-    zValueNSql(Seq(x, y), bits)
-
-  /** SQL twin of [[zValueN]]. */
   def zValueNSql(cols: Seq[String], bits: Int = 16): String = {
     val n = cols.size
     (for {
@@ -60,17 +51,13 @@ object ZOrder {
       .mkString("(", " + ", ")")
   }
 
-  /** Write `df` z-ordered on `(xCol, yCol)` into `numFiles` files: range-
-    * partition on the z-value (one shuffle, same cost as a global sort),
-    * sort within each partition, drop the helper column. Each output file
-    * then covers a compact Morton rectangle — min/max stats on BOTH
-    * columns become selective.
+  /** Write `df` z-ordered on `cols` into `numFiles` files
+    * (`OPTIMIZE ZORDER BY (c1, …, cn)` shape): range-partition on the
+    * z-value (one shuffle, same cost as a global sort), sort within each
+    * partition, drop the helper column. Each output file then covers a
+    * compact Morton box — min/max stats on EVERY layout column become
+    * selective.
     */
-  def layout(df: DataFrame, xCol: String, yCol: String, path: String,
-      numFiles: Int, bits: Int = 16): Unit =
-    layoutN(df, Seq(xCol, yCol), path, numFiles, bits)
-
-  /** N-column z-order layout (`OPTIMIZE ZORDER BY (c1, …, cn)` shape). */
   def layoutN(df: DataFrame, cols: Seq[String], path: String,
       numFiles: Int, bits: Int = 16): Unit = {
     df.withColumn("__z", zValueN(cols.map(col), bits))

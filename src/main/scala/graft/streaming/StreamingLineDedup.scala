@@ -71,7 +71,6 @@ object StreamingLineDedup {
       maxFilesPerTrigger: Int = 1,
       idCol: String = "doc_id",
       textCol: String = "text",
-      sep: String = "\n",
       hashLines: Boolean = false,
   ): Unit =
     state(idCol, textCol, hashLines).runAvailableNow(spark, sourceDir,
@@ -80,6 +79,6 @@ object StreamingLineDedup {
       // both writes read the ONE materialization lineIndexAddBatchParts
       // made of the probed batch
       Dedup.lineIndexAddBatchParts(lines, unseen(batch), idCol, textCol,
-        sep, hashLines)
+        hashLines)
     }
 }

@@ -69,12 +69,11 @@ object StreamingLineStrip {
       maxFilesPerTrigger: Int = 1,
       idCol: String = "doc_id",
       textCol: String = "text",
-      sep: String = "\n",
   ): Unit =
     state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
         stateRoot, checkpointDir, maxFilesPerTrigger,
         _.select(col(idCol), col(textCol))) { (counts, batch, unseen) =>
       Dedup.lineCountAddBatch(counts, unseen(batch), minDocs, idCol,
-        textCol, sep)
+        textCol)
     }
 }

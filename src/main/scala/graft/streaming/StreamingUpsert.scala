@@ -207,8 +207,8 @@ object StreamingUpsert {
   /** Run the windowed aggregation over a parquet backlog with
     * the AvailableNow trigger, materializing the COMPLETE final state to
     * `targetPath` (foreachBatch overwrite — every micro-batch rewrites the
-    * aggregate, the last one wins, so the backlog result equals the batch
-    * query). The event-time column is normalized from whatever physical
+    * aggregate through [[UpsertWriter.replace]]'s swap, the last one
+    * wins, so the backlog result equals the batch query). The event-time column is normalized from whatever physical
     * shape the parquet carries (see [[eventTime]]) inside the stream.
     */
   def runWindowedAvailableNow(
@@ -229,7 +229,7 @@ object StreamingUpsert {
         unix_timestamp(col("window.start")).as("win_start"),
         col(keyCol), col("n"), col("sum_value"))
     Backlog.eachBatch(agg, checkpointDir, "complete") {
-      batch => batch.write.mode("overwrite").parquet(targetPath)
+      batch => UpsertWriter.replace(batch, targetPath)
     }
   }
 }

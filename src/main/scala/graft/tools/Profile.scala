@@ -30,7 +30,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *   runMain graft.tools.Profile PLANS.md [reps]
   * }}}
   * With a `tag`, each query's plans also go to
-  * `$SPARK_GRAFT_PLANS_DIR/<query>_<tag>.txt` (default `plans/`). A
+  * `$SPARK_GRAFT_PLANS_DIR/<query>_<tag>.txt` (default `plans/`),
+  * masked by [[planKey]], without execution ids and sorted (micro-batch
+  * order may vary), so two runs of the same plans write the same file:
+  * `diff` of two tags' files is the plan-identity check across
+  * commits. A
   * markdown file as the first argument refreshes it in place: its
   * `## <query> — <label>` headings are the query list, and only the
   * fenced plan blocks under each heading are replaced.
@@ -58,15 +62,24 @@ object Profile {
     def plans: Seq[Execution] = distinctPlans(executions)
   }
 
-  /** Expression, plan and RDD ids, file paths and size statistics differ
+  /** Expression, plan, RDD, query-stage and codegen-stage ids, file
+    * paths, size statistics, call-site line numbers, stream and
+    * observation UUIDs, lambda names and numbered lambda variables differ
     * between otherwise identical plans (every micro-batch re-plans over
-    * its own files); mask them before comparing. */
+    * its own files, and AQE numbers stages in the order they
+    * materialize); mask them before comparing. */
   def planKey(plan: String): String = plan
     .replaceAll("#\\d+", "#")
     .replaceAll("plan_id=\\d+", "plan_id=")
     .replaceAll("RDD\\[\\d+\\]", "RDD[]")
     .replaceAll("(file:)?/[\\w.=%:/-]+", "<path>")
     .replaceAll("Statistics\\([^)]*\\)", "Statistics()")
+    .replaceAll("\\.scala:\\d+", ".scala:")
+    .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
+    .replaceAll("\\$Lambda[^@\\s,]*@[0-9a-f]+", "\\$Lambda")
+    .replaceAll("(lambda \\w+)_\\d+", "$1_")
+    .replaceAll("codegen id : \\d+", "codegen id : ")
+    .replaceAll("(QueryStage\\n(Output [^\\n]*\\n)?Arguments: )\\d+", "$1")
 
   /** An execution whose AQE plan never reported its final form to the
     * status store (q135's pure-streaming file-sink micro-batches). */
@@ -286,7 +299,9 @@ object Profile {
           val dir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans"))
           Files.createDirectories(dir)
           val p = dir.resolve(s"${name}_$tag.txt")
-          Files.writeString(p, blocks(plans).mkString("", "\n\n", "\n"))
+          Files.writeString(p, plans.map(e =>
+              planKey(s"-- ${e.description}\n${e.plan}")).sorted
+            .mkString("", "\n\n", "\n"))
           println(s"[profile] wrote $p (${plans.length} plans)")
         }
       }

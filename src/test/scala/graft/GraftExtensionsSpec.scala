@@ -89,7 +89,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       "SELECT zvalue(x, y, 4) AS z2, zvalue(x, y, w, 4) AS z3 FROM t3")
       .collect()(0)
     val viaApi = Seq((5L, 3L, 1L)).toDF("x", "y", "w").select(
-      graft.store.ZOrder.zValue($"x", $"y", 4).as("z2"),
+      graft.store.ZOrder.zValueN(Seq($"x", $"y"), 4).as("z2"),
       graft.store.ZOrder.zValueN(Seq($"x", $"y", $"w"), 4).as("z3"))
       .collect()(0)
     assert(viaSql.getLong(0) == viaApi.getLong(0))

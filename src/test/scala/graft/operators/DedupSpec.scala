@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, size, udf, when, xxhash64}
 
 import graft.SparkSpec
@@ -38,18 +38,6 @@ class DedupSpec extends SparkSpec {
     assert(m((1L, 3L)) == 1.0)
     assert(m.contains((1L, 5L)) && m((1L, 5L)) < 1.0)
     assert(!m.keys.exists { case (a, b) => a == 4L || b == 4L })
-  }
-
-  test("prefix-filtered Jaccard equals the inverted-index form at several thresholds") {
-    for (t <- Seq(0.2, 0.5, 0.8)) {
-      val plain = Dedup.ngramJaccardPairs(docs, t)
-        .select("id_a", "id_b", "jaccard")
-        .as[(Long, Long, Double)].collect().toSet
-      val prefix = Dedup.ngramJaccardPairsPrefix(docs, t)
-        .select("id_a", "id_b", "jaccard")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(prefix == plain, s"threshold $t")
-    }
   }
 
   test("simhash: identical docs share a signature; disjoint docs differ") {
@@ -867,5 +855,48 @@ class DedupSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       Dedup.stripFrequentLines(docs, minDocs = 1)
     }.getMessage.contains("minDocs"))
+  }
+
+  test("the four line operators share null, emptied-doc and order handling, " +
+      "the occurrence range error and their pinned Spark jobs") {
+    val docs = Seq(
+      (1L, "h\nx1\nf"),
+      (2L, "h\nx2\nf"),
+      (3L, null.asInstanceOf[String]), // null in, null out
+      (4L, "h\nf"),   // every line goes → EMPTY text, row kept
+      (5L, "z\ny\nx") // unique lines keep their order, not sorted
+    ).toDF("doc_id", "text")
+    val noLines = Seq.empty[String].toDF("line")
+    val noCounts = Seq.empty[(String, Long)].toDF("line", "n_docs")
+    // h and f first occur in doc 1 and sit in three docs
+    val keepFirst = Map(1L -> "h\nx1\nf", 2L -> "x2", 3L -> null, 4L -> "",
+      5L -> "z\ny\nx")
+    val stripped = Map(1L -> "x1", 2L -> "x2", 3L -> null, 4L -> "",
+      5L -> "z\ny\nx")
+    val ops = Seq[(String, DataFrame => DataFrame, Map[Long, String])](
+      ("dedupLinesKeepFirst", Dedup.dedupLinesKeepFirst(_), keepFirst),
+      ("lineIndexAddBatch", Dedup.lineIndexAddBatch(noLines, _)._1,
+        keepFirst),
+      ("lineCountAddBatch", Dedup.lineCountAddBatch(noCounts, _, 2L)._1,
+        stripped),
+      ("stripFrequentLines", Dedup.stripFrequentLines(_, 2L), stripped))
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val jobs = try ops.map { case (op, run, want) =>
+      val (got, r) = rec.record(
+        run(docs).select($"doc_id", $"text").as[(Long, String)].collect().toMap)
+      assert(got == want, op)
+      op -> r.jobs.length
+    }.toMap finally rec.close()
+    assert(jobs == Map("dedupLinesKeepFirst" -> 5, "lineIndexAddBatch" -> 6,
+      "lineCountAddBatch" -> 7, "stripFrequentLines" -> 6))
+    // the packed (id, pos) rank refuses an id it cannot hold, by name
+    val far = Seq((1L << 39, "a")).toDF("doc_id", "text")
+    for ((op, run, _) <- ops.take(2)) {
+      val e = intercept[Exception](run(far).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains(s"$op: occurrence outside the packable")),
+        s"$op: ${e.getMessage}")
+    }
   }
 }

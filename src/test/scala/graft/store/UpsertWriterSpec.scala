@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.{col, concat, lit, udf}
+import org.apache.spark.sql.functions.{col, concat, lit, raise_error, udf, when}
 
 import graft.SparkSpec
 
@@ -66,6 +66,20 @@ class UpsertWriterSpec extends SparkSpec {
     UpsertWriter.replace(Seq((9L, "z")).toDF("id", "v"), p)
     val got = spark.read.parquet(p).as[(Long, String)].collect().toSeq
     assert(got == Seq((9L, "z")))
+  }
+
+  test("a replace whose write fails keeps the old table and leaves no __tmp") {
+    val p = tmp()
+    UpsertWriter.replace(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), p)
+    // the error fires inside the write job, not while planning it
+    val failing = spark.range(1, 3).select(col("id"),
+      when(col("id") === 2L, raise_error(lit("replace write fails")))
+        .otherwise(lit("x")).as("v"))
+    intercept[Exception](UpsertWriter.replace(failing, p))
+    val got = spark.read.parquet(p).orderBy("id").as[(Long, String)]
+      .collect().toSeq
+    assert(got == Seq((1L, "a"), (2L, "b")))
+    assert(!Files.exists(Paths.get(p + "__tmp")))
   }
 
   test("update batch with internal PK dups is deduped before merge") {

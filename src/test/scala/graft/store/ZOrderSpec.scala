@@ -12,17 +12,17 @@ class ZOrderSpec extends SparkSpec {
   test("zValue interleaves bits (x even positions, y odd)") {
     // x=0b101 (5), y=0b011 (3): bits -> 1 + 2 + 0 + 8 + 16 + 0 = 27
     val got = Seq((5L, 3L)).toDF("x", "y")
-      .select(ZOrder.zValue(col("x"), col("y"), bits = 4).as("z"))
+      .select(ZOrder.zValueN(Seq(col("x"), col("y")), bits = 4).as("z"))
       .collect()(0).getLong(0)
     assert(got == 27L)
-    // zValue(x, 0) spreads x's bits to even positions
+    // a zero y spreads x's bits to even positions
     val gx = Seq((7L, 0L)).toDF("x", "y")
-      .select(ZOrder.zValue(col("x"), col("y"), bits = 4).as("z"))
+      .select(ZOrder.zValueN(Seq(col("x"), col("y")), bits = 4).as("z"))
       .collect()(0).getLong(0)
     assert(gx == (1L + 4L + 16L)) // 0b010101
     // monotone on the diagonal: z(i,i) strictly increases
     val diag = (0L until 16L).map(i => Seq((i, i)).toDF("x", "y")
-      .select(ZOrder.zValue(col("x"), col("y"), bits = 8)).collect()(0).getLong(0))
+      .select(ZOrder.zValueN(Seq(col("x"), col("y")), bits = 8)).collect()(0).getLong(0))
     assert(diag == diag.sorted && diag.distinct.size == 16)
   }
 
@@ -37,11 +37,6 @@ class ZOrderSpec extends SparkSpec {
       .select(ZOrder.zValueN(Seq(col("a"), col("b"), col("c")), bits = 4))
       .collect()(0).getLong(0)
     assert(z312 == 12L)
-    // 2-column zValueN equals zValue
-    val both = Seq((5L, 3L)).toDF("x", "y").select(
-      ZOrder.zValue(col("x"), col("y"), 4).as("z2"),
-      ZOrder.zValueN(Seq(col("x"), col("y")), 4).as("zn")).collect()(0)
-    assert(both.getLong(0) == both.getLong(1))
     // bit budget guard: 16 bits x 4 cols = 64 > 63 must be rejected
     intercept[IllegalArgumentException] {
       ZOrder.zValueN(Seq(col("a"), col("b"), col("c"), col("a")), bits = 16)
@@ -54,7 +49,7 @@ class ZOrderSpec extends SparkSpec {
     val df = grid.toDF("a", "b")
     val zPath = Files.createTempDirectory("graft_z_").toString + "/t"
     val linPath = Files.createTempDirectory("graft_z_").toString + "/t"
-    ZOrder.layout(df, "a", "b", zPath, numFiles = 16, bits = 8)
+    ZOrder.layoutN(df, Seq("a", "b"), zPath, numFiles = 16, bits = 8)
     df.repartitionByRange(16, col("a")).sortWithinPartitions("a")
       .write.parquet(linPath)
 
