@@ -500,7 +500,7 @@ object Bench {
     val only: Option[Seq[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // Bench-harness-only I/O setup: scratch and checkpoints on tmpfs
-    Harness.tmpfsScratch("graft_bench")
+    val tmpfs = Harness.tmpfsScratch("graft_bench")
     val spark = Harness.session(cpus)
     // same session surface as Verify: SQL kernels + the
     // size(bpe_encode)->count rewrite (ScaleSmoke deliberately does NOT
@@ -634,8 +634,7 @@ object Bench {
     // one line the driver parses (the sidecar is only the fallback)
     try {
       spark.stop()
-      if (sys.props.get("graft.scratch").contains("/dev/shm/graft_bench"))
-        deleteRecursively(java.nio.file.Paths.get("/dev/shm/graft_bench"))
+      tmpfs.foreach(deleteRecursively)
     } catch { case e: Exception =>
       System.err.println(s"[bench] post-run cleanup failed: ${e.getMessage}")
     }

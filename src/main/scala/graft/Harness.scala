@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
@@ -26,22 +26,29 @@ object Harness {
     spark
   }
 
-  /** Point scratch tables and streaming checkpoints at a freshly wiped
-    * `/dev/shm/<name>`, so per-micro-batch WAL and commit fsyncs measure
-    * memory writes, not disk latency (query semantics are untouched). A
-    * preset `-Dgraft.scratch` is respected. Either way the stale fixture
-    * trees of earlier runs are dropped once, before any query runs:
-    * memoFixture's cache is per-JVM, so a persistent scratch root would
-    * otherwise gain one tree per run.
+  /** Point scratch tables and streaming checkpoints at a fresh tmpfs
+    * `/dev/shm/<name>/<pid>` (WAL and commit fsyncs at memory speed) and
+    * return it. Concurrent runs of one main keep their own: a sibling is
+    * removed only once its pid is dead. A preset `-Dgraft.scratch` is
+    * respected (None). Either way stale fixture trees are dropped once:
+    * memoFixture's cache is per-JVM.
     */
-  def tmpfsScratch(name: String): Unit = {
-    if (sys.props.get("graft.scratch").isEmpty &&
-        new java.io.File("/dev/shm").isDirectory) {
-      // tmpfs is RAM: wipe leftovers of prior runs first
-      graft.store.UpsertWriter.deleteRecursively(Paths.get("/dev/shm", name))
-      System.setProperty("graft.scratch", s"/dev/shm/$name")
+  def tmpfsScratch(name: String): Option[Path] = {
+    val root = Paths.get("/dev/shm", name)
+    val self = ProcessHandle.current().pid()
+    val set = Option.when(sys.props.get("graft.scratch").isEmpty &&
+        Files.isDirectory(root.getParent)) {
+      val ls = Files.list(Files.createDirectories(root))
+      try ls.forEach { p =>
+        if (p.getFileName.toString.toLongOption.exists(pid =>
+            pid == self || !ProcessHandle.of(pid).filter(_.isAlive).isPresent))
+          graft.store.UpsertWriter.deleteRecursively(p)
+      } finally ls.close()
+      System.setProperty("graft.scratch", root.resolve(self.toString).toString)
+      root.resolve(self.toString)
     }
     SparkEntry.wipeStaleFixtures()
+    set
   }
 
   /** Per-query scratch wipe: each query's temp tables and checkpoints are

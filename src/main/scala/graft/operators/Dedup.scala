@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -1100,9 +1101,10 @@ object Dedup {
     *
     * Scale shape: the corpus pass is the same ONE typed sliding
     * traversal as the rest of the family (windows carry their start
-    * position — 8 extra bytes per CANDIDATE row only); the
-    * position-explode runs on the matched sliver (contaminated docs ×
-    * their matched windows × n), never the corpus. `hashWindows`
+    * position — 8 extra bytes per CANDIDATE row only); hits and the
+    * interval union come from ONE aggregate over the matched sliver
+    * (contaminated docs × their matched windows), never the corpus, and
+    * no join pairs two aggregates. `hashWindows`
     * collapses the join key to the int64 fingerprint as everywhere
     * else; the q166 oracle computes coverage over string windows, so
     * the gate asserts the hashed path's equality too.
@@ -1126,25 +1128,20 @@ object Dedup {
       s"decontaminateTokenCoverage: eval set has $nEval distinct windows " +
         s"— the broadcast side is capped at $maxEvalWindows; shard the " +
         "eval set or raise n")
-    val matched = tokenWindowsPos(train, idCol, idsCol, n, hashWindows)
+    // interval union of n-token windows: each adds the tokens before the
+    // next one starts, so one aggregate over the sliver gives both counts
+    val next = lead("pos", 1).over(Window.partitionBy(idCol).orderBy("pos"))
+    val counts = tokenWindowsPos(train, idCol, idsCol, n, hashWindows)
       .join(Sizing.broadcastIfFits(evalW, nEval, evalBytes), Seq("gram"))
-      .select(col(idCol), col("pos"))
-      .localCheckpoint() // the sliver: reused by BOTH aggregates below
-    val hits = matched.groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_hits"))
-    // interval union as a distinct-position count: the sliver explode
-    // is matched-windows × n rows, never corpus-sized
-    val covered = matched
-      .select(col(idCol), explode(sequence(col("pos"),
-        col("pos") + lit(n - 1))).as("__p"))
+      .select(col(idCol),
+        least(lit(n.toLong), coalesce(next - col("pos"), lit(n.toLong))).as("__add"))
       .groupBy(col(idCol))
-      .agg(countDistinct(col("__p")).as("covered"))
+      .agg(count(lit(1)).as("n_hits"), sum(col("__add")).as("covered"))
     val lens = train.select(col(idCol).cast("long"),
       size(col(idsCol)).cast("long").as("n_tokens"))
     // stamped like every hit-table producer in the family ([[reprKey]]):
     // a coverage table's n_hits is a valid delta-merge input
-    markRepr(hits.join(covered, Seq(idCol))
-      .join(lens, Seq(idCol))
+    markRepr(counts.join(lens, Seq(idCol))
       .select(col(idCol), col("n_hits"), col("covered"), col("n_tokens")),
       hashWindows)
   }
@@ -1519,7 +1516,6 @@ object Dedup {
     */
   def duplicatedSpans(docs: DataFrame, shingleK: Int = 8,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(shingleK >= 1, "duplicatedSpans needs a positive shingle length")
     // documents shorter than k tokens cannot contain a k-token span
     val toks = docs
@@ -1584,7 +1580,6 @@ object Dedup {
   def maximalMatchedSpans(docs: DataFrame, shingleK: Int = 8,
       maxShingleFreq: Int = 1000,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(shingleK >= 1, "maximalMatchedSpans needs a positive shingle length")
     require(maxShingleFreq >= 2, "maxShingleFreq < 2 would drop every match")
     val toks = docs

@@ -7,7 +7,6 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.Schemas
-import graft.operators.Sizing
 import graft.store.UpsertWriter
 import graft.transform.{PriceTransforms, SymbolTransforms}
 import graft.validate.Validator
@@ -97,10 +96,9 @@ object Flow {
     chunked(universe, chunkSize).foreach { chunk =>
       val (wide, errs) = source.fetchPrices(spark, chunk, s, e)
       failed ++= errs
-      // materialized once: the validator and the merge read its rows, and
-      // neither re-plans the wide stack
-      val (long, rows) = Sizing.materialize(
-        PriceTransforms.transformPrices(wide, assetCategory))
+      // two jobs before the merge: the unpivot and the gate each observe
+      // their counts in the job that materializes their rows
+      val (long, rows) = PriceTransforms.transformPrices(wide, assetCategory)
       if (rows > 0) {
         val gated = Validator.validateOrThrow(long, Schemas.transformedPrices)
         UpsertWriter.upsert(spark, pricesPath, gated, Seq("date_stamp", "symbol"))

@@ -721,7 +721,7 @@ private[graft] object ReferenceParityQueries {
             max(lit(null).cast(DoubleType)).as("Low_DEAD"),
             max(lit(null).cast(DoubleType)).as("Close_DEAD"),
             max(lit(null).cast(LongType)).as("Volume_DEAD"))
-        graft.transform.PriceTransforms.transformPrices(wide, "fx")
+        graft.transform.PriceTransforms.transformPrices(wide, "fx")._1
           .orderBy("symbol", "date_stamp")
       },
       """WITH wide AS (

@@ -2,7 +2,7 @@ package graft.transform
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, Row, functions => F}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -69,77 +69,78 @@ object PriceTransforms {
     *
     * Input: the wide frame flattened to columns `Date, Field_Ticker...`
     * (SURVEY.md §1.1 — Spark has no column MultiIndex).
-    * Steps: empty guard → validate (regex patterns + index) → drop
-    * all-null columns (failed tickers) → wide→long unpivot via a generated
-    * SQL `stack()` → lowercase/rename → timestamp→date → optional FX
-    * symbol normalization.
+    * Steps: validate (regex patterns + index) → wide→long unpivot via a
+    * generated SQL `stack()` → drop failed tickers and all-null fields →
+    * lowercase/rename → timestamp→date → optional FX symbol
+    * normalization. Returns the long frame and its row count.
     *
     * The unpivot keeps all-null rows (pandas `future_stack=True`,
     * transform.py:80) — absent days survive as null OHLCV and are
     * forward-filled later in staging.
     *
-    * Scale: stack() is a narrow per-row expansion (no shuffle); the
-    * emptiness guard and the all-null-column scan share ONE aggregate pass
-    * (the single unavoidable action — the projection is data-dependent,
-    * SURVEY.md §2.3 P16).
+    * Scale: ONE job, the local checkpoint of every ticker's stacked rows.
+    * Its [[Observation]] gives the row count (the empty-input guard,
+    * transform.py:73-74; a frame the validator rejects probes emptiness
+    * first), the tickers with a non-null field and each field's non-null
+    * count: the all-null drop (P16) is a narrow filter and projection.
     */
-  def transformPrices(df: DataFrame, assetCategory: String): DataFrame = {
-    // P16: drop columns that are entirely null (failed tickers). count()
-    // ignores nulls, so one agg row gives the row count and every column's
-    // non-null count. It reads the raw frame: validation only widens
-    // numerics to the patterns' double/bigint, which never nulls a value.
-    val dataCols = df.columns.filter(_ != "Date")
-    val counts = df.agg(F.count(lit(1)),
-      dataCols.map(c => F.count(col(c)).as(c)).toSeq: _*).head()
-    // empty-input guard (transform.py:73-74), ahead of any validation
-    if (counts.getLong(0) == 0L) return df
-
+  def transformPrices(df: DataFrame, assetCategory: String): (DataFrame, Long) = {
     val validated = Validator
-      .validateWide(df, Schemas.rawPricePatterns, Schemas.rawPriceIndex)
-      .fold(vs => throw Validator.SchemaValidationException(vs), identity)
-
-    val dead = dataCols.zipWithIndex
-      .filter { case (_, i) => counts.getLong(i + 1) == 0L }.map(_._1).toSet
-    val live = validated.drop(dead.toSeq: _*)
+      .validateWide(df, Schemas.rawPricePatterns, Schemas.rawPriceIndex) match {
+        case Right(v) => v
+        case Left(_) if df.isEmpty => return (df, 0L)
+        case Left(vs) => throw Validator.SchemaValidationException(vs)
+      }
     // every ticker all-null: transform.py stacks what is left to an empty
     // frame, and a stack() of no tickers is not valid SQL
-    if (live.columns.forall(_ == "Date"))
-      return df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.emptyRDD[Row], Schemas.transformedPrices)
+    def noTickers = (df.sparkSession.createDataFrame(
+      df.sparkSession.sparkContext.emptyRDD[Row], Schemas.transformedPrices), 0L)
+    val dataCols = validated.columns.filter(_ != "Date")
+    if (dataCols.isEmpty) return if (df.isEmpty) (df, 0L) else noTickers
 
     // R1: wide→long. Tickers = union of suffixes across field columns;
     // fields = union of prefixes — extra fields beyond OHLCV (e.g.
     // "Adj Close") survive the stack exactly like pandas df.stack does
     // (pandera strict=False lets them through validation).
-    val liveCols = live.columns.filter(_ != "Date")
-    val tickers = liveCols.map(_.split("_", 2)(1)).distinct.sorted
-    val present = liveCols.map(_.split("_", 2)(0)).distinct
-    val orderedFields =
-      fields.filter(present.contains) ++
-        present.filterNot(fields.contains).sorted
+    val tickers = dataCols.map(_.split("_", 2)(1)).distinct.sorted
+    val present = dataCols.map(_.split("_", 2)(0)).distinct
+    val orderedFields = fields.filter(present.contains) ++
+      present.filterNot(fields.contains).sorted
+    val colSet = dataCols.toSet
     def cellExpr(field: String, t: String): String =
-      if (live.columns.contains(s"${field}_$t"))
+      if (colSet(s"${field}_$t"))
         s"cast(`${field}_$t` as ${if (field == "Volume") "bigint" else "double"})"
       else if (field == "Volume") "cast(null as bigint)"
       else "cast(null as double)"
     val outNames = orderedFields.map(f => s"`${f.toLowerCase}`")
+    val outCols = outNames.map(col)
     val stackArgs = tickers.map { t =>
       (s"'$t'" +: orderedFields.map(f => cellExpr(f, t))).mkString(", ")
     }.mkString(", ")
-    val stacked = live.select(
-      col("Date"),
+    val obs = Observation()
+    val stacked = validated.select(
+      to_date(col("Date")).as("date_stamp"),
       expr(s"stack(${tickers.length}, $stackArgs) as " +
         s"(symbol, ${outNames.mkString(", ")})"))
+      .observe(obs, count(lit(1)).as("n"), collect_set(
+        when(outCols.map(_.isNotNull).reduce(_ || _), col("symbol"))).as("live") +:
+        outCols.zipWithIndex.map { case (c, i) => count(c).as(s"f$i") }: _*)
+      .localCheckpoint()
+    val m = obs.get
+    val live = m("live").asInstanceOf[Seq[String]]
+    if (m("n") == 0L) return (df, 0L)
+    if (live.isEmpty) return noTickers
 
-    val longDf = stacked
-      .withColumn("date_stamp", to_date(col("Date")))
-      .drop("Date")
-      .select(col("date_stamp") +: col("symbol") +:
-        orderedFields.map(f => col(s"`${f.toLowerCase}`")): _*)
-
-    if (assetCategory == "fx")
-      longDf.withColumn("symbol", normalizeFxSymbol(col("symbol")))
-    else longDf
+    // the drop reads raw tickers, ahead of the FX remap (which may map a
+    // failed ticker onto a live one's name)
+    val longDf = (if (live.size == tickers.length) stacked
+        else stacked.where(col("symbol").isin(live: _*)))
+      .select(col("date_stamp") +: col("symbol") +: outCols.zipWithIndex.collect {
+        case (c, i) if m(s"f$i") != 0L => c }: _*)
+    // each ticker stacks one long row per wide row
+    val rows = m("n").asInstanceOf[Long] / tickers.length * live.size
+    (if (assetCategory != "fx") longDf
+      else longDf.withColumn("symbol", normalizeFxSymbol(col("symbol"))), rows)
   }
 
   /** Per-group winsorization: clip `valueCol` to its group's exact

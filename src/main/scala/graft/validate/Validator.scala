@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Schemas.ColumnPattern
@@ -18,9 +18,9 @@ import graft.model.Schemas.ColumnPattern
   *  - LAZY validation: ALL violations are accumulated, then thrown once
   *    (pandera `lazy=True`).
   *
-  * Scale note: the only action is ONE aggregate over the non-nullable
-  * columns (a single pass, map-side combinable); everything else inspects
-  * `df.schema` on the driver.
+  * Scale note: ONE job, the local checkpoint of the (coerced) rows a gate
+  * returns, with the null counts observed in it ([[Observation]]); the
+  * rest inspects `df.schema` on the driver.
   */
 object Validator {
 
@@ -57,22 +57,20 @@ object Validator {
     val (dtypeErrs, coerced) = conform(df,
       expected.fields.collect { case f if present(f.name) => f.name -> f.dataType })
 
-    // nullability: single aggregate pass over all non-nullable present columns
+    // nullability: observed in the one job that materializes the rows
     val nonNullable = expected.fields
-      .filter(f => !f.nullable && present(f.name)).map(_.name)
-    val nullErrs = if (nonNullable.isEmpty) Nil else {
-      val aggs: Seq[Column] =
-        nonNullable.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(c)).toSeq
-      val row = coerced.agg(aggs.head, aggs.tail: _*).head()
-      nonNullable.toSeq.zipWithIndex.flatMap { case (c, i) =>
-        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-        if (n > 0) Some(SchemaViolation(c, "not_nullable", s"$n null value(s)"))
-        else None
-      }
+      .filter(f => !f.nullable && present(f.name)).map(_.name).toSeq
+    val (nullErrs, gated) = if (nonNullable.isEmpty) (Nil, coerced) else {
+      val obs = Observation()
+      val nulls = nonNullable.map(c => count(when(col(c).isNull, 1)).as(c))
+      val done = coerced.observe(obs, nulls.head, nulls.tail: _*).localCheckpoint()
+      (nonNullable.map(c => c -> obs.get(c).asInstanceOf[Long]).collect {
+        case (c, n) if n > 0 => SchemaViolation(c, "not_nullable", s"$n null value(s)")
+      }, done)
     }
 
     val all = missing.toSeq ++ dtypeErrs ++ nullErrs
-    if (all.nonEmpty) Left(all) else Right(coerced)
+    if (all.nonEmpty) Left(all) else Right(gated)
   }
 
   /** Throwing variant — used at the pre-write gate (load.py:55-63). */

@@ -41,7 +41,7 @@ class WideCsvSpec extends SparkSpec {
 
   test("feeds transformPrices end-to-end: dead ticker dropped, fx remap, adj close kept") {
     val long = PriceTransforms.transformPrices(
-      WideCsv.read(spark, writeFixture()), "fx")
+      WideCsv.read(spark, writeFixture()), "fx")._1
     val rows = long.orderBy("date_stamp").collect()
     // BAD=X was all-null -> dropped; JPY=X -> USDJPY
     assert(rows.map(_.getAs[String]("symbol")).distinct.toSeq == Seq("USDJPY"))

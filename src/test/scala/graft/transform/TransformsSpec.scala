@@ -41,7 +41,7 @@ class TransformsSpec extends SparkSpec {
       .toDF("Date",
         "Open_AAPL", "High_AAPL", "Low_AAPL", "Close_AAPL", "Volume_AAPL",
         "Open_DEAD", "High_DEAD", "Low_DEAD", "Close_DEAD", "Volume_DEAD")
-    val out = PriceTransforms.transformPrices(wide, "sp_stocks")
+    val out = PriceTransforms.transformPrices(wide, "sp_stocks")._1
     val rows = out.orderBy("date_stamp").collect()
     // DEAD ticker (all-null columns) dropped entirely: only AAPL rows remain
     assert(rows.map(_.getString(1)).distinct.toSeq == Seq("AAPL"))
@@ -59,7 +59,7 @@ class TransformsSpec extends SparkSpec {
         "Open_EURUSD=X", "High_EURUSD=X", "Low_EURUSD=X", "Close_EURUSD=X",
         "Volume_EURUSD=X",
         "Open_CHF=X", "High_CHF=X", "Low_CHF=X", "Close_CHF=X", "Volume_CHF=X")
-    val out = PriceTransforms.transformPrices(wide, "fx")
+    val out = PriceTransforms.transformPrices(wide, "fx")._1
       .select("symbol").distinct().orderBy("symbol")
       .as[String].collect().toSeq
     assert(out == Seq("EURUSD", "USDCHF")) // suffix strip + whole-value remap
@@ -67,7 +67,7 @@ class TransformsSpec extends SparkSpec {
 
   test("transformPrices: empty input returns unchanged (guard)") {
     val empty = Seq.empty[(Timestamp, Option[Double])].toDF("Date", "Open_A")
-    assert(PriceTransforms.transformPrices(empty, "fx").count() == 0)
+    assert(PriceTransforms.transformPrices(empty, "fx")._1.count() == 0)
   }
 
   test("transformPrices: every ticker all-null gives an empty long frame") {
@@ -75,7 +75,7 @@ class TransformsSpec extends SparkSpec {
       (Timestamp.valueOf("2024-01-01 00:00:00"),
         Option.empty[Double], Option.empty[Long]))
       .toDF("Date", "Open_DEAD", "Volume_DEAD")
-    val out = PriceTransforms.transformPrices(wide, "sp_stocks")
+    val out = PriceTransforms.transformPrices(wide, "sp_stocks")._1
     assert(out.schema == graft.model.Schemas.transformedPrices)
     assert(out.isEmpty)
   }
@@ -84,7 +84,7 @@ class TransformsSpec extends SparkSpec {
     // the guard precedes validation (transform.py:73-74): an empty fetch
     // with a wrong-typed matched column is not a schema failure
     val empty = Seq.empty[(Timestamp, Boolean)].toDF("Date", "Open_AAPL")
-    val out = PriceTransforms.transformPrices(empty, "sp_stocks")
+    val out = PriceTransforms.transformPrices(empty, "sp_stocks")._1
     assert(out eq empty)
   }
 
@@ -105,11 +105,68 @@ class TransformsSpec extends SparkSpec {
         Some(1.0), Some(2.0), Some(0.5), Some(1.5), Some(1.4), Some(10L)))
       .toDF("Date", "Open_AAPL", "High_AAPL", "Low_AAPL", "Close_AAPL",
         "Adj Close_AAPL", "Volume_AAPL")
-    val out = PriceTransforms.transformPrices(wide, "sp_stocks")
+    val out = PriceTransforms.transformPrices(wide, "sp_stocks")._1
     assert(out.columns.toSeq ==
       Seq("date_stamp", "symbol", "open", "high", "low", "close", "volume",
         "adj close"))
     assert(out.collect()(0).getAs[Double]("adj close") == 1.4)
+  }
+
+  test("a price chunk runs at most 2 Spark jobs from the wide frame to the gated rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_chunk_").toString
+    Seq(
+      (Timestamp.valueOf("2024-01-01 00:00:00"),
+        Some(1.0), Some(2.0), Some(0.5), Some(1.5), Some(10L),
+        Option.empty[Double], Option.empty[Long]),
+      (Timestamp.valueOf("2024-01-02 00:00:00"),
+        Option.empty[Double], Option.empty[Double], Option.empty[Double],
+        Option.empty[Double], Option.empty[Long],
+        Option.empty[Double], Option.empty[Long]))
+      .toDF("Date", "Open_AAPL", "High_AAPL", "Low_AAPL", "Close_AAPL",
+        "Volume_AAPL", "Open_DEAD", "Volume_DEAD")
+      .write.mode("overwrite").parquet(dir)
+    val wide = spark.read.parquet(dir)
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val ((gated, rows), run) = try rec.record {
+      val (long, rows) = PriceTransforms.transformPrices(wide, "sp_stocks")
+      (Validator.validateOrThrow(long, graft.model.Schemas.transformedPrices), rows)
+    } finally rec.close()
+    // a wide pre-pass, a separate materialize and a two-stage gate
+    // aggregate would be 5
+    assert(run.jobs.length <= 2,
+      s"${run.jobs.length} jobs:\n" + run.jobs.map(_.desc).mkString("\n"))
+    assert(rows == 2L)
+    assert(gated.select("symbol").as[String].collect().toSeq == Seq("AAPL", "AAPL"))
+  }
+
+  test("a field all-null in every ticker is dropped: Volume fails the gate, Adj Close goes") {
+    val wide = Seq(
+      (Timestamp.valueOf("2024-01-01 00:00:00"), Some(1.0), Option.empty[Long],
+        Option.empty[Double], Some(2.0), Option.empty[Long], Option.empty[Double]))
+      .toDF("Date", "Open_A", "Volume_A", "Adj Close_A",
+        "Open_B", "Volume_B", "Adj Close_B")
+    val (long, rows) = PriceTransforms.transformPrices(wide, "sp_stocks")
+    assert(long.columns.toSeq == Seq("date_stamp", "symbol", "open"))
+    assert(rows == 2L)
+    val e = intercept[Validator.SchemaValidationException] {
+      Validator.validateOrThrow(long, graft.model.Schemas.transformedPrices)
+    }
+    assert(e.violations.filter(_.column == "volume").map(_.check) ==
+      Seq("column_in_dataframe"))
+  }
+
+  test("a dead CHF=X beside a live USDCHF=X leaves only the live rows") {
+    val wide = Seq(
+      (Timestamp.valueOf("2024-01-01 00:00:00"), Some(1.0), Option.empty[Double]),
+      (Timestamp.valueOf("2024-01-02 00:00:00"), Some(2.0), Option.empty[Double]))
+      .toDF("Date", "Close_USDCHF=X", "Close_CHF=X")
+    val (long, rows) = PriceTransforms.transformPrices(wide, "fx")
+    val got = long.orderBy("date_stamp").select("symbol", "close")
+      .as[(String, Double)].collect().toSeq
+    // the dead ticker is dropped by its raw name, before the remap would
+    // give it the live one's
+    assert(got == Seq(("USDCHF", 1.0), ("USDCHF", 2.0)))
+    assert(rows == 2L)
   }
 
   test("winsorize clips to exact per-group quantiles; nulls pass through") {

@@ -55,6 +55,23 @@ class ValidatorSpec extends SparkSpec {
     assert(e.violations.size == 2) // missing ghost + null id, in one throw
   }
 
+  test("a gate counts its nulls in the one job that materializes its rows") {
+    import org.apache.spark.sql.functions._
+    // every evaluation of the input's lineage adds its row count
+    val evaluated = spark.sparkContext.longAccumulator("gate_rows")
+    val tick = udf { (id: Long) => evaluated.add(1L); id }.asNondeterministic()
+    val df = spark.range(0, 50)
+      .select(tick(col("id")).as("id"), col("id").cast("string").as("name"))
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val (gated, run) = try rec.record(Validator.validateOrThrow(df, schema))
+      finally rec.close()
+    assert(run.jobs.length == 1,
+      s"${run.jobs.length} jobs:\n" + run.jobs.map(_.desc).mkString("\n"))
+    assert(gated.count() == 50L && gated.where(col("id") < 10).count() == 10L)
+    assert(evaluated.value == 50L,
+      s"the input's 50 rows were evaluated ${evaluated.value} times")
+  }
+
   test("validateWide: pattern match + coercion + unmatched column violation") {
     val df = Seq(("2024-01-01 00:00:00", 1.0f, 5, "junk"))
       .toDF("ts", "Open_AAPL", "Volume_AAPL", "bogus")
