@@ -37,7 +37,4 @@ object VectorFunctions {
     val n = na * nb
     when(n === 0.0, lit(null).cast("double")).otherwise(d / n)
   }
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(VectorExpressions.l2sq(a, b))
 }

@@ -178,7 +178,7 @@ private[graft] object AnnQueries {
       withShufflePartitions(s, 2) {
         graft.streaming.StreamingUpsert.runVersionedWithAnnIndex(
           s, src, fileB.schema, s"$base/tbl", s"$base/ckpt", Seq("vec_id"),
-          s"$base/idx", cents, cb, maxFilesPerTrigger = 1)
+          s"$base/idx", cents, cb)
       }
       Similarity.writeClusteredPQ(
         graft.store.VersionedTable.read(s, s"$base/tbl"), cents, cb,

@@ -194,8 +194,7 @@ private[graft] object RelationalQueries {
         withShufflePartitions(s, 2) {
           graft.streaming.StatefulSessionize.runAvailableNow(
             s, s"$dir/events.parquet", schema,
-            s"$out/table", s"$out/ckpt", gapSeconds = 1800L,
-            maxFilesPerTrigger = 1000)
+            s"$out/table", s"$out/ckpt", gapSeconds = 1800L)
         }
         s.read.parquet(s"$out/table").orderBy("user_id", "ts_us", "session_id")
       },
@@ -921,8 +920,7 @@ private[graft] object RelationalQueries {
         val tmp = scratch("graft_q104_")
         val root = s"$tmp/tbl"
         graft.streaming.StreamingUpsert.runVersionedAvailableNow(
-          s, srcDir, orders.schema, root, s"$tmp/ckpt", Seq("o_orderkey"),
-          maxFilesPerTrigger = 1)
+          s, srcDir, orders.schema, root, s"$tmp/ckpt", Seq("o_orderkey"))
         import graft.store.{IncrementalView, VersionedTable}
         val vs = VersionedTable.versions(root).sorted
         var st = IncrementalView.state(

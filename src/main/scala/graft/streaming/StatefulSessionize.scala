@@ -52,10 +52,10 @@ object StatefulSessionize {
       }
   }
 
-  /** Replay a parquet backlog through the stateful sessionizer with
-    * AvailableNow, appending sessionized events to `targetPath` through
-    * the parquet file sink (a replayed batch writes nothing). With
-    * `maxFilesPerTrigger=1` each file is its own micro-batch, so sessions
+  /** Replay a parquet backlog of (`user_id`, `ts`) events through the
+    * stateful sessionizer with AvailableNow, appending sessionized events
+    * to `targetPath` through the parquet file sink (a replayed batch
+    * writes nothing). Each file is its own micro-batch, so sessions
     * provably span batch boundaries via the state store.
     */
   def runAvailableNow(
@@ -65,21 +65,18 @@ object StatefulSessionize {
       targetPath: String,
       checkpointDir: String,
       gapSeconds: Long,
-      timeCol: String = "ts",
-      keyCol: String = "user_id",
-      maxFilesPerTrigger: Int = 1,
   ): Unit = {
     import spark.implicits._
-    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
+    val raw = Backlog.read(spark, sourceDir, schema, Some(1))
     // epoch-µs from whatever physical shape the parquet carries: raw
     // INT64 nanos divide straight down; timestamp variants normalize via
     // the shared session-TZ rule first (see StreamingUpsert.eventTime)
-    val tsUs = schema(timeCol).dataType match {
-      case org.apache.spark.sql.types.LongType => expr(s"$timeCol div 1000")
-      case _ => unix_micros(StreamingUpsert.eventTime(schema, timeCol))
+    val tsUs = schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
+      case _ => unix_micros(StreamingUpsert.eventTime(schema, "ts"))
     }
     val typed = raw.select(
-      col(keyCol).cast("long").as("user_id"),
+      col("user_id").cast("long").as("user_id"),
       tsUs.as("ts_us")).as[Ev]
     Backlog.toFiles(sessionizeTyped(typed, gapSeconds), targetPath,
       checkpointDir)

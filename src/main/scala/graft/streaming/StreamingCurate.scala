@@ -23,9 +23,10 @@ import graft.operators.{Classify, Scrub}
   */
 object StreamingCurate {
 
-  /** Scrub + score each arriving doc; append curated records to
-    * `targetPath`. `model` must be a [[Classify.centroidModel]]-shaped
-    * 1-row frame (static side of the stream-static join).
+  /** Scrub + score each arriving doc's `text`, one file per
+    * micro-batch; append curated records to `targetPath`. `model` must
+    * be a [[Classify.centroidModel]]-shaped 1-row frame (static side of
+    * the stream-static join).
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -34,22 +35,20 @@ object StreamingCurate {
       model: DataFrame,
       targetPath: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Int = 1,
-      textCol: String = "text",
   ): Unit = {
-    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
+    val raw = Backlog.read(spark, sourceDir, schema, Some(1))
     // stream-static BROADCAST CROSS JOIN with the 1-row static model
     // (Classify.scoreByModel issues docs.crossJoin(broadcast(model)) —
     // stream-static cross joins are supported, and against a broadcast
     // 1-row side the "product" is a constant-append); the scrubbed text
     // is what gets scored — score the corpus the trainer will see
-    val scrubbed = Scrub.redactPii(raw, textCol)
+    val scrubbed = Scrub.redactPii(raw, "text")
     val scored = Classify.scoreByModel(
-      scrubbed.drop(textCol).withColumnRenamed("redacted", textCol),
-      model, textCol)
+      scrubbed.drop("text").withColumnRenamed("redacted", "text"),
+      model, "text")
     val curated = scored.select(col("doc_id"),
       col("n_email"), col("n_ip"), col("n_phone"),
-      md5(col(textCol)).as("redacted_md5"),
+      md5(col("text")).as("redacted_md5"),
       col("margin").cast("long").as("margin"),
       col("quality_pred"))
     Backlog.toFiles(curated, targetPath, checkpointDir)

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.StructType
   * streaming analogue of `Dedup.exact` and the first stage of any
   * continuously-ingesting training-data pipeline.
   *
-  * Without a watermark the key state grows unboundedly (correct for
-  * bounded backlog replay, as here); a live deployment passes
-  * `withWatermarkCol`/`delay` so state for old event-times is evicted —
-  * Spark then guarantees dedup only within the watermark horizon.
+  * The backlog replays one file per micro-batch with no watermark, so
+  * the key state grows with the distinct keys seen: exact for a bounded
+  * backlog. A live deployment would add a watermark to evict old
+  * event-times, and Spark then dedups only within its horizon.
   *
   * Output goes through the parquet file sink ([[Backlog.toFiles]]): its
   * `_spark_metadata` log commits each batch's files under the batch id,
@@ -27,12 +27,8 @@ object StreamingDedup {
       targetPath: String,
       checkpointDir: String,
       keys: Seq[String],
-      maxFilesPerTrigger: Int = 1,
-      withWatermarkCol: Option[String] = None,
-      delay: String = "1 hour",
-  ): Unit = {
-    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
-    val withWm = withWatermarkCol.fold(raw)(c => raw.withWatermark(c, delay))
-    Backlog.toFiles(withWm.dropDuplicates(keys), targetPath, checkpointDir)
-  }
+  ): Unit =
+    Backlog.toFiles(
+      Backlog.read(spark, sourceDir, schema, Some(1)).dropDuplicates(keys),
+      targetPath, checkpointDir)
 }

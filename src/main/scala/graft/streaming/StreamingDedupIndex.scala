@@ -23,58 +23,34 @@ import graft.operators.{Dedup, Sizing}
   */
 object StreamingDedupIndex {
 
-  private def state(idCol: String, textCol: String) =
-    VersionedStateRunner(
-      "accepted" -> StructType(Seq(StructField(idCol, LongType),
-        StructField(textCol, StringType), StructField("batch", LongType))),
-      "keys" -> StructType(Seq(StructField(idCol, LongType),
-        StructField("band", IntegerType), StructField("key", StringType),
-        StructField("hashes", ArrayType(LongType)))),
-      idCol)
+  private val state = VersionedStateRunner(
+    "accepted" -> StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("batch", LongType))),
+    "keys" -> StructType(Seq(StructField("doc_id", LongType),
+      StructField("band", IntegerType), StructField("key", StringType),
+      StructField("hashes", ArrayType(LongType)))),
+    "doc_id")
 
   /** The live accepted/keys state and its committed version (see
     * [[VersionedStateRunner.read]]); empty frames before the first batch.
     */
-  def readState(spark: SparkSession, stateRoot: String,
-      idCol: String = "doc_id", textCol: String = "text")
+  def readState(spark: SparkSession, stateRoot: String)
       : (DataFrame, DataFrame, Long) =
-    state(idCol, textCol).read(spark, stateRoot)
+    state.read(spark, stateRoot)
 
   /** Fold the committed log into one snapshot so `readState` stops
     * unioning an ever-growing delta list; [[vacuum]] then deletes what
     * the snapshot covers (see [[VersionedStateRunner.compact]]).
     */
-  def compact(spark: SparkSession, stateRoot: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    state(idCol, textCol).compact(spark, stateRoot)
+  def compact(spark: SparkSession, stateRoot: String): Unit =
+    state.compact(spark, stateRoot)
 
   def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
-  /** One micro-batch's state delta, LAZY — factored out of
-    * [[runAvailableNow]] so its executed plan can be audited (the
-    * read-schema pin that accepted TEXT is never re-read: the only scan
-    * of the accepted state is the id-column replay guard; the near-dup
-    * verify runs on the keys state's persisted `hashes` sets). Returns
-    * the accepted subset of `batch` judged against the committed state,
-    * their [[graft.operators.Dedup.dedupIndexKeys]]-shaped key rows (the
-    * keys delta) and the state version it read. Both frames project one
-    * verdict, which [[runAvailableNow]] materializes before writing
-    * them.
-    */
-  def batchAccepted(spark: SparkSession, stateRoot: String, batch: DataFrame,
-      threshold: Double = 0.3, idCol: String = "doc_id",
-      textCol: String = "text"): (DataFrame, DataFrame, Long) = {
-    val ((acc, keys), v) = state(idCol, textCol).judge(spark,
-      stateRoot, batch.select(col(idCol), col(textCol))) { (k, b, unseen) =>
-      Dedup.dedupIndexParts(unseen(Dedup.dedupIndexVerdict(k, b, threshold,
-        idCol = idCol, textCol = textCol)), idCol, textCol)
-    }
-    (acc, keys, v)
-  }
-
-  /** Replay a parquet backlog with AvailableNow, one file per micro-batch
-    * by default. After the run, `readState` yields the accepted corpus
-    * with each doc's acceptance batch number.
+  /** Replay a parquet backlog (`doc_id`, `text`, …) with AvailableNow,
+    * at most `maxFilesPerTrigger` files per micro-batch. After the run,
+    * `readState` yields the accepted corpus with each doc's acceptance
+    * batch number.
     *
     * `prepare` runs on each micro-batch BEFORE the dedup judgment — the
     * curation hook (scrub → score → gate, all stateless narrow/broadcast
@@ -93,17 +69,18 @@ object StreamingDedupIndex {
       checkpointDir: String,
       threshold: Double = 0.3,
       maxFilesPerTrigger: Int = 1,
-      idCol: String = "doc_id",
-      textCol: String = "text",
       prepare: DataFrame => DataFrame = identity,
   ): Unit =
-    state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
-        stateRoot, checkpointDir, maxFilesPerTrigger,
-        b => prepare(b).select(col(idCol), col(textCol))) { (k, b, unseen) =>
-      // both parts are narrow projections of ONE materialized verdict:
-      // no read-back of the accepted delta, no second pass over the batch
-      val (judged, _) = Sizing.materialize(unseen(Dedup.dedupIndexVerdict(k,
-        b, threshold, idCol = idCol, textCol = textCol)))
-      Dedup.dedupIndexParts(judged, idCol, textCol)
+    state.runAvailableNow(spark, sourceDir, schema, stateRoot,
+        checkpointDir, maxFilesPerTrigger,
+        b => prepare(b).select(col("doc_id"), col("text"))) {
+      (k, b, unseen) =>
+        // both parts are narrow projections of ONE materialized verdict:
+        // no read-back of the accepted delta, no second pass over the
+        // batch; the replay guard prunes the accepted state to its ids,
+        // so accepted TEXT is never read after its admission batch
+        val (judged, _) = Sizing.materialize(unseen(
+          Dedup.dedupIndexVerdict(k, b, threshold)))
+        Dedup.dedupIndexParts(judged, "doc_id", "text")
     }
 }

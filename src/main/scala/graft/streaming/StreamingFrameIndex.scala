@@ -57,7 +57,7 @@ object StreamingFrameIndex {
   def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
   /** Replay a parquet backlog of documents-shaped rows (doc_id, text,
-    * source) with AvailableNow, one file per micro-batch by default;
+    * source) with AvailableNow, one file per micro-batch;
     * each batch renders to binary assets via [[Multimodal.fromDocuments]]
     * and ingests against the digest index. After the run, [[readState]]
     * yields per-asset storage stats with each asset's ingest batch:
@@ -74,10 +74,9 @@ object StreamingFrameIndex {
       stateRoot: String,
       checkpointDir: String,
       frameBytes: Int,
-      maxFilesPerTrigger: Int = 1,
   ): Unit =
     state.runAvailableNow(spark, sourceDir, schema, stateRoot,
-        checkpointDir, maxFilesPerTrigger, Multimodal.fromDocuments) {
+        checkpointDir, 1, Multimodal.fromDocuments) {
       (digests, batch, unseen) =>
         Multimodal.frameIndexAddBatch(digests, unseen(batch), frameBytes)
     }

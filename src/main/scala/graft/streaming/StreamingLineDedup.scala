@@ -23,38 +23,31 @@ import graft.operators.Dedup
   */
 object StreamingLineDedup {
 
-  private def state(idCol: String = "doc_id", textCol: String = "text",
-      hashLines: Boolean = false) = VersionedStateRunner(
-    "cleaned" -> StructType(Seq(StructField(idCol, LongType),
-      StructField(textCol, StringType), StructField("batch", LongType))),
-    "lines" -> StructType(Seq(StructField("line",
-      if (hashLines) LongType else StringType))),
-    idCol)
+  private val state = VersionedStateRunner(
+    "cleaned" -> StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("batch", LongType))),
+    "lines" -> StructType(Seq(StructField("line", StringType))),
+    "doc_id")
 
   /** Read the live cleaned/line-index state and its committed version
-    * (see [[VersionedStateRunner.read]]). `hashLines` picks the index
-    * representation (see [[Dedup.lineIndexAddBatch]]) and pins the scan
-    * schema; a PERSISTED index whose parquet representation contradicts
-    * the declared one fails loudly at scan time (the long/string
-    * physical types are not convertible).
+    * (see [[VersionedStateRunner.read]]). The index holds the exact line
+    * strings, [[Dedup.lineIndexAddBatch]]'s string representation.
     */
-  def readState(spark: SparkSession, stateRoot: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashLines: Boolean = false)
+  def readState(spark: SparkSession, stateRoot: String)
       : (DataFrame, DataFrame, Long) =
-    state(idCol, textCol, hashLines).read(spark, stateRoot)
+    state.read(spark, stateRoot)
 
   /** Fold the committed log into one snapshot so [[readState]] stops
     * unioning an ever-growing delta list; [[vacuum]] deletes what the
     * snapshot covers. Run between batches, like any lakehouse OPTIMIZE.
     */
   def compact(spark: SparkSession, stateRoot: String): Unit =
-    state().compact(spark, stateRoot)
+    state.compact(spark, stateRoot)
 
   def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
-  /** Replay a parquet backlog with AvailableNow, one file per
-    * micro-batch by default. After the run, [[readState]] yields the
+  /** Replay a parquet backlog (`doc_id`, `text`, …) with AvailableNow,
+    * one file per micro-batch. After the run, [[readState]] yields the
     * line-deduplicated corpus with each doc's acceptance batch: under
     * the backlog's mtime arrival order the composition equals the
     * batch-by-batch [[Dedup.lineIndexAddBatch]] chain doc-for-doc —
@@ -68,17 +61,12 @@ object StreamingLineDedup {
       schema: StructType,
       stateRoot: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Int = 1,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      hashLines: Boolean = false,
   ): Unit =
-    state(idCol, textCol, hashLines).runAvailableNow(spark, sourceDir,
-        schema, stateRoot, checkpointDir, maxFilesPerTrigger,
-        _.select(col(idCol), col(textCol))) { (lines, batch, unseen) =>
-      // both writes read the ONE materialization lineIndexAddBatchParts
-      // made of the probed batch
-      Dedup.lineIndexAddBatchParts(lines, unseen(batch), idCol, textCol,
-        hashLines)
+    state.runAvailableNow(spark, sourceDir, schema, stateRoot,
+        checkpointDir, 1, _.select(col("doc_id"), col("text"))) {
+      (lines, batch, unseen) =>
+        // both writes read the ONE materialization lineIndexAddBatchParts
+        // made of the probed batch
+        Dedup.lineIndexAddBatchParts(lines, unseen(batch))
     }
 }

@@ -29,21 +29,19 @@ object StreamingLineStrip {
   private val sumCounts: DataFrame => DataFrame =
     _.groupBy("line").agg(sum(col("n_docs")).as("n_docs"))
 
-  private def state(idCol: String = "doc_id", textCol: String = "text") =
-    VersionedStateRunner(
-      "cleaned" -> StructType(Seq(StructField(idCol, LongType),
-        StructField(textCol, StringType), StructField("batch", LongType))),
-      "counts" -> StructType(Seq(StructField("line", StringType),
-        StructField("n_docs", LongType))),
-      idCol, fold = sumCounts)
+  private val state = VersionedStateRunner(
+    "cleaned" -> StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("batch", LongType))),
+    "counts" -> StructType(Seq(StructField("line", StringType),
+      StructField("n_docs", LongType))),
+    "doc_id", fold = sumCounts)
 
   /** Read the live cleaned/count state — counts summed per line — and
     * its committed version (see [[VersionedStateRunner.read]]).
     */
-  def readState(spark: SparkSession, stateRoot: String,
-      idCol: String = "doc_id", textCol: String = "text")
+  def readState(spark: SparkSession, stateRoot: String)
       : (DataFrame, DataFrame, Long) =
-    state(idCol, textCol).read(spark, stateRoot)
+    state.read(spark, stateRoot)
 
   /** Fold the committed log into one snapshot — the count sub-state
     * compacts to its per-line sums, so the snapshot is index-sized
@@ -51,12 +49,12 @@ object StreamingLineStrip {
     * Run between batches, like any lakehouse OPTIMIZE.
     */
   def compact(spark: SparkSession, stateRoot: String): Unit =
-    state().compact(spark, stateRoot)
+    state.compact(spark, stateRoot)
 
   def vacuum(stateRoot: String): Unit = VersionedStateRunner.vacuum(stateRoot)
 
-  /** Replay a parquet backlog with AvailableNow, one file per
-    * micro-batch by default. After the run, [[readState]] yields the
+  /** Replay a parquet backlog (`doc_id`, `text`, …) with AvailableNow,
+    * one file per micro-batch. After the run, [[readState]] yields the
     * stripped corpus with each doc's processing batch.
     */
   def runAvailableNow(
@@ -66,14 +64,10 @@ object StreamingLineStrip {
       stateRoot: String,
       checkpointDir: String,
       minDocs: Long,
-      maxFilesPerTrigger: Int = 1,
-      idCol: String = "doc_id",
-      textCol: String = "text",
   ): Unit =
-    state(idCol, textCol).runAvailableNow(spark, sourceDir, schema,
-        stateRoot, checkpointDir, maxFilesPerTrigger,
-        _.select(col(idCol), col(textCol))) { (counts, batch, unseen) =>
-      Dedup.lineCountAddBatch(counts, unseen(batch), minDocs, idCol,
-        textCol)
+    state.runAvailableNow(spark, sourceDir, schema, stateRoot,
+        checkpointDir, 1, _.select(col("doc_id"), col("text"))) {
+      (counts, batch, unseen) =>
+        Dedup.lineCountAddBatch(counts, unseen(batch), minDocs)
     }
 }

@@ -50,21 +50,18 @@ object StreamingNearDup {
       schema: StructType,
       stateRoot: String,
       checkpointDir: String,
-      bands: Int = 4,
-      rowsPerBand: Int = 2,
-      shingleN: Int = 3,
-      maxFilesPerTrigger: Int = 1,
   ): Unit =
     state(schema).runAvailableNow(spark, sourceDir, schema, stateRoot,
-        checkpointDir, maxFilesPerTrigger, identity) { (hist, batch, _) =>
+        checkpointDir, 1, identity) { (hist, batch, _) =>
       // the replay guard runs on the HISTORY's ids, a superset of the
       // accepted ones (every judged doc's keys land there): a replayed
       // batch then re-adds no keys for the docs it rejected, either
       val docs = UpsertWriter.antiJoin(batch, hist.select("doc_id"),
         Seq("doc_id"))
       // the keys feed both probes and the index part: banded once
-      val (banded, _) = Sizing.materialize(Dedup.bandedKeys(docs, bands,
-        rowsPerBand, shingleN, "doc_id", "text", "doc_id"))
+      val (banded, _) = Sizing.materialize(Dedup.bandedKeys(docs,
+        bands = 4, rowsPerBand = 2, shingleN = 3, idCol = "doc_id",
+        textCol = "text", outIdCol = "doc_id"))
       val rejectHist = banded
         .join(hist.select("band", "key"), Seq("band", "key"), "left_semi")
         .select("doc_id")

@@ -31,8 +31,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Skew note: one shard's micro-batch slice lands on one state-store
   * task, so a single giant micro-batch on a single shard serializes
-  * there; the trigger bounds the slice (files/rows per trigger), which
-  * is the knob a real deployment sizes — the state itself never grows.
+  * there; the trigger bounds the slice (the runners read one file per
+  * trigger) — the state itself never grows.
   */
 object StreamingPack {
 
@@ -179,7 +179,7 @@ object StreamingPack {
         "runner's contract)"))).as(name)
 
   /** Replay a parquet backlog through the streaming packer with
-    * AvailableNow, one file per micro-batch by default, appending
+    * AvailableNow, one file per micro-batch, appending
     * per-doc pack assignments to `targetPath`. `prepare` is the
     * stateless per-row front half (tokenize/project — the q135 stage
     * contract: deterministic, slicing-invariant, no cross-batch state)
@@ -193,11 +193,10 @@ object StreamingPack {
       targetPath: String,
       checkpointDir: String,
       tokenBudget: Long,
-      maxFilesPerTrigger: Int = 1,
       prepare: DataFrame => DataFrame = identity,
   ): Unit = {
     import spark.implicits._
-    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
+    val raw = Backlog.read(spark, sourceDir, schema, Some(1))
     val typed = prepare(raw)
       .select(guarded("shard", "string"), guarded("doc_id", "long"),
         guarded("n_tokens", "long"))
@@ -205,11 +204,12 @@ object StreamingPack {
     Backlog.toFiles(packTyped(typed, tokenBudget), targetPath, checkpointDir)
   }
 
-  /** [[materializeTyped]]'s backlog runner: `prepare` must yield
-    * (`shard` string, `doc_id` long, `ids` array&lt;int&gt;, non-null —
-    * null-ids docs are dropped docs per the batch materializer's
-    * contract and must be filtered in `prepare`). Appends CLOSED packs
-    * to `targetPath`; each shard's final open pack stays in state.
+  /** [[materializeTyped]]'s backlog runner, one file per micro-batch:
+    * `prepare` must yield (`shard` string, `doc_id` long, `ids`
+    * array&lt;int&gt;, non-null — null-ids docs are dropped docs per the
+    * batch materializer's contract and must be filtered in `prepare`).
+    * Appends CLOSED packs to `targetPath`; each shard's final open pack
+    * stays in state.
     */
   def runMaterializeAvailableNow(
       spark: SparkSession,
@@ -218,11 +218,10 @@ object StreamingPack {
       targetPath: String,
       checkpointDir: String,
       tokenBudget: Long,
-      maxFilesPerTrigger: Int = 1,
       prepare: DataFrame => DataFrame = identity,
   ): Unit = {
     import spark.implicits._
-    val raw = Backlog.read(spark, sourceDir, schema, Some(maxFilesPerTrigger))
+    val raw = Backlog.read(spark, sourceDir, schema, Some(1))
     val typed = prepare(raw)
       .select(guarded("shard", "string"), guarded("doc_id", "long"),
         guarded("ids", "array<int>"))

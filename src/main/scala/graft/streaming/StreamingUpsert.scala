@@ -18,10 +18,11 @@ import graft.store.{Marker, UpsertWriter}
 object StreamingUpsert {
 
   /** Stream every file under `sourceDir` into a PK-merged parquet table at
-    * `targetPath`. AvailableNow processes the current backlog then stops —
-    * the streaming equivalent of one scheduled incremental run; a live
-    * deployment drops the trigger and gets continuous micro-batch merges
-    * with checkpointed exactly-once progress.
+    * `targetPath`, up to 1000 files per micro-batch. AvailableNow
+    * processes the current backlog then stops — the streaming equivalent
+    * of one scheduled incremental run; a live deployment drops the
+    * trigger and gets continuous micro-batch merges with checkpointed
+    * exactly-once progress.
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -30,23 +31,23 @@ object StreamingUpsert {
       targetPath: String,
       checkpointDir: String,
       pk: Seq[String],
-      maxFilesPerTrigger: Int = 1000,
   ): Unit =
-    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
-        Some(maxFilesPerTrigger)), checkpointDir) {
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema, Some(1000)),
+        checkpointDir) {
       batch => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
     }
 
-  /** Stream the backlog into a [[graft.store.VersionedTable]]: every
-    * micro-batch PK-merges and COMMITS A VERSION, so the stream leaves a
-    * full time-travel/CDC history behind instead of a bare parquet table —
-    * the streaming-lakehouse shape. Downstream incremental views
-    * ([[graft.store.IncrementalView]]) then fold the per-batch change
-    * feeds without ever rescanning the table, whatever batch boundaries
-    * the trigger chose. Exactly-once per batch on one checkpoint: a
-    * crash between the version commit and the stream's checkpoint commit
-    * replays the batch, and [[Backlog.eachBatch]]'s batch id marker skips
-    * it, so the version history equals a clean run's. Only a crash
+  /** Stream the backlog into a [[graft.store.VersionedTable]], one file
+    * per micro-batch: every micro-batch PK-merges and COMMITS A VERSION,
+    * so the stream leaves a full time-travel/CDC history behind instead
+    * of a bare parquet table — the streaming-lakehouse shape. Downstream
+    * incremental views ([[graft.store.IncrementalView]]) then fold the
+    * per-batch change feeds without ever rescanning the table, whatever
+    * batch boundaries the trigger chose. Exactly-once per batch on one
+    * checkpoint: a crash between the version commit and the stream's
+    * checkpoint commit replays the batch, and [[Backlog.eachBatch]]'s
+    * batch id marker skips it, so the version history equals a clean
+    * run's. Only a crash
     * between the version commit and that marker (or a fresh checkpoint
     * over an existing table) replays the merge; the PK merge keeps the
     * CONTENT identical, and the content-identical extra version it commits
@@ -60,10 +61,9 @@ object StreamingUpsert {
       tableRoot: String,
       checkpointDir: String,
       pk: Seq[String],
-      maxFilesPerTrigger: Int = 1,
   ): Unit =
-    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
-        Some(maxFilesPerTrigger)), checkpointDir) {
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema, Some(1)),
+        checkpointDir) {
       batch => graft.store.VersionedTable.upsert(
         batch.sparkSession, tableRoot, batch, pk): Unit
     }
@@ -75,7 +75,8 @@ object StreamingUpsert {
     * partitions only). The index never rebuilds: after the backlog
     * drains it is row-identical to `writeClusteredPQ` over the final
     * snapshot, whatever batch boundaries the trigger chose (q118's
-    * gate). `pk` must be the single vector-id column. Same batch id
+    * gate). `pk` must be the single vector-id column; vectors are the
+    * `embedding` column, PQ-coded without residuals. Same batch id
     * replay skip as [[runVersionedAvailableNow]] for the VERSION
     * HISTORY; the index itself is crash-exact: an
     * `_indexed_version` marker in the index directory (atomic rename,
@@ -99,14 +100,11 @@ object StreamingUpsert {
       indexPath: String,
       centroids: DataFrame,
       codebooks: DataFrame,
-      vecCol: String = "embedding",
-      maxFilesPerTrigger: Int = 1,
-      residual: Boolean = false,
   ): Unit = {
     require(pk.length == 1,
       "runVersionedWithAnnIndex: pk must be the single vector-id column")
-    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
-        Some(maxFilesPerTrigger)), checkpointDir) {
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema, Some(1)),
+        checkpointDir) {
       batch =>
         val s = batch.sparkSession
         val before = graft.store.VersionedTable.latestVersion(tableRoot)
@@ -142,8 +140,7 @@ object StreamingUpsert {
             }.reduce(_ unionByName _)
             graft.operators.Similarity.repairClusteredPQCells(s, indexPath,
               graft.store.VersionedTable.read(s, tableRoot),
-              centroids, codebooks, gapFeed,
-              pk.head, vecCol, residual)
+              centroids, codebooks, gapFeed, pk.head)
           } else {
             // the marker's version was vacuumed away — the gap's
             // per-step feeds no longer exist, so a touched-cell repair
@@ -158,7 +155,7 @@ object StreamingUpsert {
             Marker.commit(indexPath, "_indexed_version", -1L)
             graft.operators.Similarity.rebuildClusteredPQ(s, indexPath,
               graft.store.VersionedTable.read(s, tableRoot),
-              centroids, codebooks, pk.head, vecCol, residual)
+              centroids, codebooks, pk.head)
           }
           Marker.commit(indexPath, "_indexed_version", before)
         }
@@ -168,8 +165,7 @@ object StreamingUpsert {
           graft.operators.Similarity.maintainClusteredPQ(s, indexPath,
             centroids, codebooks,
             graft.store.VersionedTable.changeFeed(s, tableRoot, before,
-              after, pk),
-            pk.head, vecCol, residual)
+              after, pk), pk.head)
           Marker.commit(indexPath, "_indexed_version", after)
         }
     }
@@ -190,17 +186,17 @@ object StreamingUpsert {
     }
 
   /** Windowed streaming aggregation with a watermark — the standard
-    * late-data-bounded shape (10-minute windows, `lateness` allowed).
-    * Returns the streaming DataFrame for the caller to sink.
+    * late-data-bounded shape: 10-minute windows, 10 minutes of lateness
+    * allowed. Returns the streaming DataFrame for the caller to sink.
     *
     * sum accumulates in decimal so the result is order-independent and
     * exact — a double sum would vary with micro-batch boundaries.
     */
-  def windowedCounts(events: DataFrame, timeCol: String, keyCol: String,
-      windowDuration: String, lateness: String): DataFrame =
+  private def windowedCounts(events: DataFrame, timeCol: String,
+      keyCol: String): DataFrame =
     events
-      .withWatermark(timeCol, lateness)
-      .groupBy(window(col(timeCol), windowDuration), col(keyCol))
+      .withWatermark(timeCol, "10 minutes")
+      .groupBy(window(col(timeCol), "10 minutes"), col(keyCol))
       .agg(count("*").as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
 
@@ -219,12 +215,10 @@ object StreamingUpsert {
       checkpointDir: String,
       timeCol: String,
       keyCol: String,
-      windowDuration: String = "10 minutes",
-      lateness: String = "10 minutes",
   ): Unit = {
     val raw = Backlog.read(spark, sourceGlob, schema, None)
     val withTs = raw.withColumn(timeCol, eventTime(schema, timeCol))
-    val agg = windowedCounts(withTs, timeCol, keyCol, windowDuration, lateness)
+    val agg = windowedCounts(withTs, timeCol, keyCol)
       .select(
         unix_timestamp(col("window.start")).as("win_start"),
         col(keyCol), col("n"), col("sum_value"))

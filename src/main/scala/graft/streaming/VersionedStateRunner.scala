@@ -78,25 +78,16 @@ private[streaming] final case class VersionedStateRunner(
         (empty(output), empty(index), 0L)
     }
 
-  /** `step` over the live index, `batch` and the replay guard (drops the
-    * rows of an id-keyed frame whose id the output state holds), LAZY,
-    * with the version read.
-    */
-  def judge[A](spark: SparkSession, stateRoot: String, batch: DataFrame)
-      (step: (DataFrame, DataFrame, DataFrame => DataFrame) => A)
-      : (A, Long) = {
-    val (out, idx, v) = read(spark, stateRoot)
-    val seen = out.select(col(idCol))
-    (step(idx, batch, _.join(seen, Seq(idCol), "left_anti")), v)
-  }
-
   /** Replay a parquet backlog with AvailableNow: per micro-batch,
-    * `prepare` → [[judge]] → the output part (batch-stamped) → the index
+    * `prepare` → `step` → the output part (batch-stamped) → the index
     * part → `_current`, under [[Backlog.eachBatch]]'s batch id marker
-    * (see the crash note). `step` returns the batch's output rows and its
-    * index delta; a family that derives both from one judgment
-    * materializes it inside `step`, so each write reads it once. Each of
-    * the three steps runs under its own job description.
+    * (see the crash note). `step` gets the live index, the prepared
+    * batch and the replay guard (drops the rows of an id-keyed frame
+    * whose id the output state holds), and returns the batch's output
+    * rows and its index delta; a family that derives both from one
+    * judgment materializes it inside `step`, so each write reads it
+    * once. The judgment and the two writes each run under their own
+    * job description.
     */
   def runAvailableNow(spark: SparkSession, sourceDir: String,
       schema: StructType, stateRoot: String, checkpointDir: String,
@@ -107,8 +98,12 @@ private[streaming] final case class VersionedStateRunner(
     Backlog.eachBatch(Backlog.read(spark, sourceDir, schema,
         Some(maxFilesPerTrigger)), checkpointDir) { batch =>
       val sc = batch.sparkSession.sparkContext
-      val ((rows, indexDelta), v) = described(sc, "judge")(
-        judge(batch.sparkSession, stateRoot, prepare(batch))(step))
+      val ((rows, indexDelta), v) = described(sc, "judge") {
+        val prepared = prepare(batch)
+        val (out, idx, version) = read(batch.sparkSession, stateRoot)
+        val seen = out.select(col(idCol))
+        (step(idx, prepared, _.join(seen, Seq(idCol), "left_anti")), version)
+      }
       val next = v + 1
       described(sc, s"output part ${output._1}")(
         rows.withColumn("batch", lit(next)).write.mode("overwrite")
@@ -123,10 +118,10 @@ private[streaming] final case class VersionedStateRunner(
     * `fold`, so a count log's snapshot is index-sized, not log-sized —
     * then commit `_compacted = v` LAST: a crash mid-compaction leaves an
     * orphan snapshot readers never see. Each part is read with its
-    * footer schema, so the snapshot keeps exactly the representation on
-    * disk (e.g. hashed or string lines). No-op when already compacted at
-    * the head version (re-running would overwrite the snapshot being
-    * read). Run between batches, like any lakehouse OPTIMIZE.
+    * footer schema, so the snapshot keeps exactly the schema on disk.
+    * No-op when already compacted at the head version (re-running would
+    * overwrite the snapshot being read). Run between batches, like any
+    * lakehouse OPTIMIZE.
     */
   def compact(spark: SparkSession, stateRoot: String): Unit = {
     val v = Marker.read(stateRoot, "_current").getOrElse(0L)

@@ -64,8 +64,9 @@ object Profile {
 
   /** Expression, plan, RDD, query-stage and codegen-stage ids, file
     * paths, size statistics, call-site line numbers, stream and
-    * observation UUIDs, lambda names and numbered lambda variables differ
-    * between otherwise identical plans (every micro-batch re-plans over
+    * observation UUIDs, lambda names, numbered lambda variables and the
+    * identity hashes of array literals (`[J@1f2e3d4c`) differ between
+    * otherwise identical plans (every micro-batch re-plans over
     * its own files, and AQE numbers stages in the order they
     * materialize); mask them before comparing. */
   def planKey(plan: String): String = plan
@@ -77,6 +78,7 @@ object Profile {
     .replaceAll("\\.scala:\\d+", ".scala:")
     .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
     .replaceAll("\\$Lambda[^@\\s,]*@[0-9a-f]+", "\\$Lambda")
+    .replaceAll("(\\[+([ZBCSIJFD]|L[\\w.$]+;))@[0-9a-f]+", "$1@")
     .replaceAll("(lambda \\w+)_\\d+", "$1_")
     .replaceAll("codegen id : \\d+", "codegen id : ")
     .replaceAll("(QueryStage\\n(Output [^\\n]*\\n)?Arguments: )\\d+", "$1")

@@ -38,9 +38,7 @@ object DataTests {
       Seq(childKey), "left_anti")
 
   final case class CheckResult(table: String, check: String, column: String,
-      violations: Long) {
-    def passed: Boolean = violations == 0L
-  }
+      violations: Long)
 
   sealed trait Check { def name: String; def column: String }
   final case class NotNull(column: String) extends Check { val name = "not_null" }

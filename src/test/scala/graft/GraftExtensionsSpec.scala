@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
+  // a child session of the shared one: the optimizer rule and the SQL
+  // functions stay out of the shared session other specs plan against
   private lazy val spark: SparkSession = {
-    val s = SparkSpec.session
+    val s = SparkSpec.session.newSession()
     GraftExtensions.install(s)
     s
   }

@@ -486,43 +486,41 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dedup index: accepted TEXT is never read after the admission batch") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val root = java.nio.file.Files
       .createTempDirectory("graft_didx_pin_").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
-    val b1 = docs.where(col("doc_id") % 2 === 0)
-    val (a1, _) = graft.operators.Dedup.dedupIndexAddBatch(
-      graft.operators.Dedup.dedupIndexKeys(b1.limit(0)), b1)
-    a1.withColumn("batch", lit(1L))
-      .write.parquet(s"$root/delta/d1/accepted")
-    graft.operators.Dedup.dedupIndexKeys(a1)
-      .write.parquet(s"$root/delta/d1/keys")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/_current"), "1".getBytes("UTF-8"))
-    // AQE off so the scan nodes are collectible from the plan tree; the
-    // column-pruning behavior under audit is AQE-independent
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (acc2, _, v) = graft.streaming.StreamingDedupIndex.batchAccepted(
-        spark, root, docs.where(col("doc_id") % 2 === 1))
-      assert(v == 1L)
-      val scans = acc2.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f }
-      val acceptedScans = scans.filter(_.relation.location.rootPaths
-        .exists(_.toString.contains("/accepted")))
-      // the replay guard reads the accepted state — but only its id
-      // column; the near-dup verify must run on the keys state's
-      // persisted `hashes` witness sets, never on accepted text
-      assert(acceptedScans.nonEmpty, "expected an accepted-state scan " +
-        "(the id replay guard)")
-      acceptedScans.foreach { f =>
-        assert(f.requiredSchema.fieldNames.toSeq == Seq("doc_id"),
-          s"accepted state must be pruned to the id column, " +
-            s"got ${f.requiredSchema.catalogString}") }
-      assert(acc2.count() > 0)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    // batch 1 commits an accepted state; the recorded run is one batch
+    // on a fresh checkpoint that judges the odd docs against it
+    val (first, schema) = SparkEntry.slicedBacklog(spark, s"$root/a",
+      Seq(docs.where(col("doc_id") % 2 === 0)))
+    graft.streaming.StreamingDedupIndex.runAvailableNow(spark, first,
+      schema, s"$root/state", s"$root/ckpt1")
+    val (second, _) = SparkEntry.slicedBacklog(spark, s"$root/b",
+      Seq(docs.where(col("doc_id") % 2 === 1)))
+    val rec = new graft.tools.Profile.Recorder(spark)
+    val run = try rec.record(graft.streaming.StreamingDedupIndex
+      .runAvailableNow(spark, second, schema, s"$root/state",
+        s"$root/ckpt2"))._2 finally rec.close()
+    assert(run.streams.flatMap(_.jobsPerBatch).size == 1, run.jobs)
+    assert(graft.streaming.StreamingDedupIndex
+      .readState(spark, s"$root/state")._3 == 2L)
+    // the scan nodes of the recorded (formatted) plans that read the
+    // accepted state
+    val acceptedScans = run.executions.flatMap(_.plan.split("\n\n"))
+      .map(_.trim).filter { b =>
+        b.matches("(?s)\\(\\d+\\) Scan parquet.*") &&
+          b.linesIterator.exists(l =>
+            l.startsWith("Location:") && l.contains("/accepted"))
+      }
+    // the replay guard reads the accepted state — but only its id
+    // column; the near-dup verify must run on the keys state's
+    // persisted `hashes` witness sets, never on accepted text
+    assert(acceptedScans.nonEmpty, "expected an accepted-state scan " +
+      "(the id replay guard)")
+    acceptedScans.foreach { b =>
+      assert(b.linesIterator.contains("ReadSchema: struct<doc_id:bigint>"),
+        s"accepted state must be pruned to the id column, got:\n$b") }
   }
 
   test("selectToTokenBudget plans no Window: no single-task global sort") {

@@ -46,11 +46,11 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(pre == inline)
   }
 
-  test("l2Distance computes sqrt of the squared-diff sum") {
+  test("l2sq computes the squared-diff sum") {
     val df = Seq((Array(1.0f, 2.0f), Array(4.0f, 6.0f))).toDF("a", "b")
-    val got = df.select(VectorFunctions.l2Distance(col("a"), col("b")))
+    val got = df.select(VectorExpressions.l2sq(col("a"), col("b")))
       .collect()(0).getDouble(0)
-    assert(got == 5.0)
+    assert(got == 25.0)
   }
 
   test("null vector propagates null") {

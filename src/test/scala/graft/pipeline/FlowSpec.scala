@@ -133,7 +133,8 @@ class FlowSpec extends SparkSpec {
     val dim = spark.read.parquet(s"$dw/dim_symbols")
     assert(dim.count() == 4) // BRK-B, AAPL, EURUSD, USDCHF
     val results = Flow.runDataTests(spark, dw)
-    assert(results.forall(_.passed), results.filterNot(_.passed).mkString("; "))
+    assert(results.forall(_.violations == 0L),
+      results.filterNot(_.violations == 0L).mkString("; "))
   }
 
   test("promotion pushes its date filter down to the lake's parquet scan") {

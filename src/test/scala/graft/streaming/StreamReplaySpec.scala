@@ -132,7 +132,7 @@ class StreamReplaySpec extends SparkSpec {
   test("StreamingUpsert: a replayed batch re-merges to the same table") {
     assertReplaySafe(pkSlices) { (src, schema, root) =>
       StreamingUpsert.runAvailableNow(spark, src, schema, s"$root/out",
-        s"$root/ckpt", Seq("id"), maxFilesPerTrigger = 1)
+        s"$root/ckpt", Seq("id"))
     }(root => Seq(spark.read.parquet(s"$root/out")))
   }
 

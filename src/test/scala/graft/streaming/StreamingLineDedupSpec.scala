@@ -74,44 +74,6 @@ class StreamingLineDedupSpec extends SparkSpec {
       "alpha one", "beta two", "gamma three", "delta four"))
   }
 
-  test("hashed index mode: same cleaned output, long state, guarded replay") {
-    val root = Files.createTempDirectory("graft_sld5_").toString
-    val src = writeBacklog(root)
-    val schema = spark.read.parquet(src).schema
-    StreamingLineDedup.runAvailableNow(spark, src, schema,
-      s"$root/state", s"$root/ckpt", hashLines = true)
-    // the cleaned corpus is identical to string mode's (no 60-bit
-    // collisions on a hand corpus); the index state is fingerprints
-    assert(cleaned(s"$root/state") == Map(
-      10L -> (("alpha one\nbeta two", 1L)),
-      20L -> (("gamma three", 1L)),
-      5L -> (("delta four", 2L)),
-      40L -> (("", 2L))))
-    val (_, lines, v) = StreamingLineDedup.readState(spark,
-      s"$root/state", hashLines = true)
-    assert(v == 2L)
-    assert(lines.schema("line").dataType ==
-      org.apache.spark.sql.types.LongType)
-    assert(lines.as[Long].collect().toSet ==
-      Seq("alpha one", "beta two", "gamma three", "delta four")
-        .toDF("l").select(graft.operators.Dedup.lineHash($"l"))
-        .as[Long].collect().toSet)
-    // a string-mode replay against the hashed state fails loudly at the
-    // state SCAN: readState pins the declared (string) schema, and the
-    // persisted long fingerprints are not convertible to it (pre-pin,
-    // footer inference deferred the failure to lineIndexAddBatch's
-    // representation check — same loud outcome, earlier site)
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingLineDedup.runAvailableNow(spark, src, schema,
-        s"$root/state", s"$root/ckpt_mismatch")
-    }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
-    assert(chain(ex).exists(c => String.valueOf(c.getMessage)
-        .contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH")),
-      s"expected a loud scan-time type mismatch, got: $ex")
-  }
-
   test("readState trusts the marker: an orphan delta is invisible") {
     val root = Files.createTempDirectory("graft_sld3_").toString
     val src = writeBacklog(root)

@@ -58,7 +58,7 @@ class StreamingUpsertSpec extends SparkSpec {
     writeFile(Seq((2L, 25.0), (3L, 30.0)).toDF("id", "x"), s"$src/f2.parquet")
     val schema = spark.read.parquet(src).schema
     StreamingUpsert.runVersionedAvailableNow(spark, src, schema,
-      s"$root/tbl", s"$root/ckpt", Seq("id"), maxFilesPerTrigger = 1)
+      s"$root/tbl", s"$root/ckpt", Seq("id"))
     import graft.store.VersionedTable
     val vs = VersionedTable.versions(s"$root/tbl").sorted
     assert(vs.size >= 2, s"expected one version per micro-batch, got $vs")
