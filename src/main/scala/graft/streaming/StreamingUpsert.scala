@@ -18,11 +18,11 @@ import graft.store.{Marker, UpsertWriter}
 object StreamingUpsert {
 
   /** Stream every file under `sourceDir` into a PK-merged parquet table at
-    * `targetPath`, up to 1000 files per micro-batch. AvailableNow
-    * processes the current backlog then stops — the streaming equivalent
-    * of one scheduled incremental run; a live deployment drops the
-    * trigger and gets continuous micro-batch merges with checkpointed
-    * exactly-once progress.
+    * `targetPath`, one file per micro-batch. AvailableNow processes the
+    * current backlog then stops — the streaming equivalent of one
+    * scheduled incremental run; a live deployment drops the trigger and
+    * gets continuous micro-batch merges with checkpointed exactly-once
+    * progress.
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -32,7 +32,7 @@ object StreamingUpsert {
       checkpointDir: String,
       pk: Seq[String],
   ): Unit =
-    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema, Some(1000)),
+    Backlog.eachBatch(Backlog.read(spark, sourceDir, schema, Some(1)),
         checkpointDir) {
       batch => UpsertWriter.upsert(batch.sparkSession, targetPath, batch, pk)
     }
